@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.FsIo
+import graft.sources.{FsIo, Ledger}
 
 /** INCREMENTALLY-maintained IVF (inverted-file) ANN index — the
   * similarity-search twin of [[graft.sources.ZOrderLake]]: a one-shot
@@ -26,9 +26,8 @@ import graft.sources.FsIo
   *     and `partitionBy("list")` so every (segment, list) posting list
   *     is its own directory. Existing segments are never touched:
   *     per-batch cost is O(batch) however large the corpus grows.
-  *   - a manifest file per version lists the live segment dirs;
-  *     `_current` (atomic rename swap) carries `version lastBatch` —
-  *     the batchId gate makes replays no-ops (appends are not
+  *   - a [[Ledger]] manifest per version lists the live segment dirs;
+  *     the ledger's batchId gate makes replays no-ops (appends are not
   *     idempotent), the same exactly-once contract as the z-order and
   *     versioned lakes. Crash between write and swap leaves an orphan
   *     segment the next GC sweeps.
@@ -51,42 +50,16 @@ import graft.sources.FsIo
   * LLM-pipeline tier's embedding index (SURVEY §2 pipeline ops), the
   * public IVF design (Jégou et al., PAMI 2011) re-expressed as Spark
   * segments. */
-object IvfIndex {
+object IvfIndex extends Ledger.Manifests {
 
-  /** `gen` is the CENTROID GENERATION: 0 at [[init]], bumped by every
-    * [[rebuild]] (re-centering re-pins `_centroids` / `_codebook` /
-    * `_health_baseline` under generation-suffixed paths, and the
-    * pointer swap is the one atomic commit that flips segments AND
-    * metadata together — a crash mid-rebuild leaves the old generation
-    * fully intact). Pre-r17 pointer files carry two fields → gen 0. */
-  final case class Pointer(version: Int, lastBatch: Long, gen: Int = 0)
+  protected def kind = "IVF index"
 
-  // ---- metadata (all through FsIo: file://, hdfs://, s3a:// roots) ----
-
-  def readPointer(root: String,
-                  conf: Configuration = new Configuration()): Option[Pointer] = {
-    val p = s"$root/_current"
-    if (!FsIo.exists(conf, p)) None
-    else {
-      val parts = new String(FsIo.readBytes(conf, p),
-        StandardCharsets.UTF_8).trim.split("\\s+")
-      require(parts.length == 2 || parts.length == 3,
-        s"corrupt pointer file $p")
-      Some(Pointer(parts(0).toInt, parts(1).toLong,
-        if (parts.length == 3) parts(2).toInt else 0))
-    }
-  }
-
-  private def writePointer(root: String, p: Pointer,
-                           conf: Configuration): Unit = {
-    val tmp = s"$root/_current_${ProcessHandle.current().pid()}.tmp"
-    FsIo.writeBytes(conf, tmp,
-      s"${p.version} ${p.lastBatch} ${p.gen}".getBytes(StandardCharsets.UTF_8))
-    FsIo.atomicReplace(conf, tmp, s"$root/_current")
-  }
-
-  private def manifestPath(root: String, version: Int) =
-    f"$root/_manifests/v$version%05d"
+  // The pointer's `gen` is the CENTROID GENERATION: 0 at [[init]],
+  // bumped by every [[rebuild]] (re-centering re-pins `_centroids` /
+  // `_codebook` / `_health_baseline` under generation-suffixed paths,
+  // and the pointer swap is the one atomic commit that flips segments
+  // AND metadata together — a crash mid-rebuild leaves the old
+  // generation fully intact).
 
   /** One live segment: `dir`, the version it was committed at (the LSM
     * sequence number — a tombstone kills only postings committed
@@ -99,27 +72,18 @@ object IvfIndex {
   final case class Seg(dir: String, version: Int, tombstone: Boolean,
                        sumD2u: Long = -1L, n: Long = -1L)
 
-  private def writeManifest(root: String, version: Int, segs: Seq[Seg],
-                            conf: Configuration): Unit =
-    FsIo.writeBytes(conf, manifestPath(root, version),
-      segs.map(e => s"${if (e.tombstone) "T" else "P"}\t${e.version}\t${e.dir}" +
-          s"\t${e.sumD2u}\t${e.n}")
-        .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+  /** Manifests list live segments, oldest first. */
+  type Entry = Seg
 
-  /** Live segments of `version`, oldest first. */
-  def readManifest(root: String, version: Int,
-                   conf: Configuration = new Configuration()): Seq[Seg] = {
-    val p = manifestPath(root, version)
-    require(FsIo.exists(conf, p), s"missing manifest v$version under $root")
-    new String(FsIo.readBytes(conf, p), StandardCharsets.UTF_8)
-      .split("\n").filter(_.nonEmpty).toSeq.map { line =>
-        val f = line.split("\t")
-        // 3-field lines predate the health stats → unknown (-1)
-        Seg(f(2), f(1).toInt, f(0) == "T",
-          if (f.length >= 5) f(3).toLong else -1L,
-          if (f.length >= 5) f(4).toLong else -1L)
-      }
-  }
+  protected def encode(e: Seg): String =
+    s"${if (e.tombstone) "T" else "P"}\t${e.version}\t${e.dir}" +
+      s"\t${e.sumD2u}\t${e.n}"
+
+  // 3-field lines predate the health stats → unknown (-1)
+  protected def decode(f: Array[String]): Seg =
+    Seg(f(2), f(1).toInt, f(0) == "T",
+      if (f.length >= 5) f(3).toLong else -1L,
+      if (f.length >= 5) f(4).toLong else -1L)
 
   /** Generation-suffixed metadata paths: gen 0 keeps the legacy names
     * (pre-r17 indexes read unchanged); gen g > 0 appends `_g<g>` so a
@@ -713,7 +677,7 @@ object IvfIndex {
     FsIo.mkdirs(conf, root)
     // re-init semantics: a stale pointer (possibly at gen > 0) must not
     // resolve metadata while generation-0 files are being rewritten
-    FsIo.delete(conf, s"$root/_current")
+    Ledger.dropPointer(root, conf)
     invalidateQuantizers(root)
     val cent = centroids
       .select(col("list").cast("int").as("list"), col("cvec"))
@@ -750,9 +714,8 @@ object IvfIndex {
       segDir(root, 0))
     FsIo.writeBytes(conf, baselinePath(root, 0),
       s"$s0 $n0".getBytes(StandardCharsets.UTF_8))
-    writeManifest(root, 0,
-      Seq(Seg(segDir(root, 0), 0, tombstone = false, s0, n0)), conf)
-    writePointer(root, Pointer(0, -1L, 0), conf)
+    commit(root, Pointer(0, -1L),
+      Seq(Seg(segDir(root, 0), 0, tombstone = false, s0, n0)), 0, conf)
   }
 
   /** Append one batch as a new segment; existing segments carry by
@@ -763,12 +726,16 @@ object IvfIndex {
     * double), so a drifted batch would poison every later reader with
     * mixed precisions across segments — fail HERE, at the commit. */
   def applyBatch(batch: DataFrame, idCol: String, vecCol: String,
-                 root: String, batchId: Long, retain: Int = 2): Unit = {
+                 root: String, batchId: Long, retain: Int = 2): Unit =
+    applyOnce(root, batchId, batch.sparkSession.sparkContext.hadoopConfiguration)(
+      appendBatch(batch, idCol, vecCol, root, _, batchId, retain))
+
+  /** [[applyBatch]] behind the replay gate; false for an empty batch. */
+  private def appendBatch(batch: DataFrame, idCol: String, vecCol: String,
+                          root: String, p: Pointer, batchId: Long,
+                          retain: Int): Boolean = {
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
-    if (batchId <= p.lastBatch) return // at-least-once replay: applied
     // empty batches still commit pointer-only (no segment, no version) —
     // but emptiness is discovered from the segment write's OBSERVED row
     // count below instead of a dedicated `batch.isEmpty` pre-scan: that
@@ -811,13 +778,11 @@ object IvfIndex {
       // is residue (a crash here leaves it for GC, as crash-before-swap
       // always has)
       FsIo.delete(conf, dir)
-      writePointer(root, p.copy(lastBatch = batchId), conf)
-      return
+      return false
     }
-    writeManifest(root, next,
-      manifest :+ Seg(dir, next, tombstone = false, s, n), conf)
-    writePointer(root, Pointer(next, batchId, p.gen), conf)
-    gc(root, next, retain, conf)
+    sweep(root, commit(root, Pointer(next, batchId, p.gen),
+      manifest :+ Seg(dir, next, tombstone = false, s, n), retain, conf), conf)
+    true
   }
 
   /** Index-health snapshot — the clamp-fraction lesson applied to the
@@ -836,8 +801,7 @@ object IvfIndex {
 
   def health(root: String,
              conf: Configuration = new Configuration()): Health = {
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     val segs = readManifest(root, p.version, conf)
     val (tomb, post) = segs.partition(_.tombstone)
     val bp = baselinePath(root, p.gen)
@@ -864,23 +828,20 @@ object IvfIndex {
     * and drops them. Same batchId exactly-once gate as inserts. */
   def applyDeleteBatch(ids: DataFrame, idCol: String, root: String,
                        batchId: Long, retain: Int = 2): Unit = {
-    val spark = ids.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
-    if (batchId <= p.lastBatch) return // at-least-once replay: applied
-    if (ids.isEmpty) {
-      writePointer(root, p.copy(lastBatch = batchId), conf); return
+    val conf = ids.sparkSession.sparkContext.hadoopConfiguration
+    applyOnce(root, batchId, conf) { p =>
+      if (ids.isEmpty) false
+      else {
+        val next = p.version + 1
+        val dir = delDir(root, next)
+        ids.select(col(idCol).cast("long").as("vec_id")).distinct()
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
+        sweep(root, commit(root, Pointer(next, batchId, p.gen),
+          readManifest(root, p.version, conf) :+
+            Seg(dir, next, tombstone = true), retain, conf), conf)
+        true
+      }
     }
-    val next = p.version + 1
-    val dir = delDir(root, next)
-    ids.select(col(idCol).cast("long").as("vec_id")).distinct()
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
-    writeManifest(root, next,
-      readManifest(root, p.version, conf) :+ Seg(dir, next, tombstone = true),
-      conf)
-    writePointer(root, Pointer(next, batchId, p.gen), conf)
-    gc(root, next, retain, conf)
   }
 
   /** All live tombstones as (vec_id, _del_v), or None when the index
@@ -944,8 +905,7 @@ object IvfIndex {
     * partition column. */
   def currentAll(spark: SparkSession, root: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     val segs = readManifest(root, p.version, conf)
     // supplied (cached) schema: skips one footer-inference listing per
     // segment relation — the layout is pinned, see segSchemas (r17)
@@ -1046,8 +1006,7 @@ object IvfIndex {
   def probeTopK(spark: SparkSession, root: String, queryVec0: DataFrame,
                 k: Int, nprobe: Int): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     requireRerankable(spark, root, p, conf, "probeTopK")
     val (probed, queryVec) =
       probedAndQuery(spark, root, p.gen, queryVec0, nprobe)
@@ -1160,8 +1119,7 @@ object IvfIndex {
     require(rerank == 0 || rerank >= k,
       s"rerank=$rerank must be >= k=$k, or 0 for ADC-only serving")
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     val cb = readCodebook(spark, root, conf).getOrElse(
       throw new IllegalStateException(
         s"IVF index at $root stores raw postings only — init with pqM > 0"))
@@ -1312,8 +1270,7 @@ object IvfIndex {
   def probeTopKBatch(spark: SparkSession, root: String, queries: DataFrame,
                      k: Int, nprobe: Int): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     requireRerankable(spark, root, p, conf, "probeTopKBatch")
     val qLists = probeLists(queries, readCentroids(spark, root), nprobe)
     val needed = qLists.select(explode(col("probe_lists")).as("list"))
@@ -1377,8 +1334,7 @@ object IvfIndex {
     require(rerank == 0 || rerank >= k,
       s"rerank=$rerank must be >= k=$k, or 0 for ADC-only serving")
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     val cb = readCodebook(spark, root, conf).getOrElse(
       throw new IllegalStateException(
         s"IVF index at $root stores raw postings only — init with pqM > 0"))
@@ -1478,8 +1434,7 @@ object IvfIndex {
     * row count. */
   def compact(spark: SparkSession, root: String, retain: Int = 2): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     val segs = readManifest(root, p.version, conf)
     if (segs.size <= 1) return segs.size
     val stats = segs.filter(e => !e.tombstone && e.sumD2u >= 0 && e.n > 0)
@@ -1492,14 +1447,13 @@ object IvfIndex {
     val (hs, hn) =
       if (stats.isEmpty) (-1L, n)
       else (stats.map(_.sumD2u).sum, stats.map(_.n).sum)
-    writeManifest(root, next,
-      Seq(Seg(dir, next, tombstone = false, hs, hn)), conf)
-    writePointer(root, Pointer(next, p.lastBatch, p.gen), conf)
+    val retained = commit(root, Pointer(next, p.lastBatch, p.gen),
+      Seq(Seg(dir, next, tombstone = false, hs, hn)), retain, conf)
     // compaction preserves the column set, but the drift guard should
     // re-infer from the segment it will actually read, not trust a
     // comment-level invariant across the rewrite (advisor find, r18)
     segSchemaCache.remove(s"$root/#segschema")
-    gc(root, next, retain, conf)
+    sweep(root, retained, conf)
     1
   }
 
@@ -1542,8 +1496,7 @@ object IvfIndex {
   def rebuild(spark: SparkSession, root: String, centroids: DataFrame,
               pqTrainIters: Int = 0, retain: Int = 2): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     requireRerankable(spark, root, p, conf, "rebuild (re-assignment)")
     val liveAll = currentAll(spark, root)
     val sq8 = liveAll.columns.contains("sq_code")
@@ -1585,15 +1538,14 @@ object IvfIndex {
     val (s0, n0) = writeSegment(assigned, dir)
     FsIo.writeBytes(conf, baselinePath(root, g),
       s"$s0 $n0".getBytes(StandardCharsets.UTF_8))
-    writeManifest(root, next,
-      Seq(Seg(dir, next, tombstone = false, s0, n0)), conf)
-    writePointer(root, Pointer(next, p.lastBatch, g), conf)
+    val retained = commit(root, Pointer(next, p.lastBatch, g),
+      Seq(Seg(dir, next, tombstone = false, s0, n0)), retain, conf)
     // the old generation's cached metadata is dead weight now; the
     // segment schema entry must re-infer from the rewritten segment
     // rather than be trusted across the rewrite (advisor find, r18)
     evictGenCaches(root, p.gen)
     segSchemaCache.remove(s"$root/#segschema")
-    gc(root, next, retain, conf)
+    sweep(root, retained, conf)
     gcGenFiles(root, g, conf)
   }
 
@@ -1605,8 +1557,7 @@ object IvfIndex {
   def rebuildKmeans(spark: SparkSession, root: String, kmeansIters: Int,
                     pqTrainIters: Int = 0, retain: Int = 2): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"IVF index at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     requireRerankable(spark, root, p, conf, "rebuild (re-clustering)")
     // duplicate vec_ids (re-insert without delete) count ONCE toward
     // the clustering — rebuild() itself still re-assigns every posting.
@@ -1648,22 +1599,18 @@ object IvfIndex {
     }
   }
 
-  /** Drop aged-out manifests; delete segment dirs no retained manifest
-    * references (segments carry by reference across versions, so
-    * liveness is the union over the retention window). Orphans from a
-    * crash-before-swap fall out here too. */
-  private def gc(root: String, current: Int, retain: Int,
-                 conf: Configuration): Unit = {
-    val floor = current - retain
-    (0 until floor).foreach(v => FsIo.delete(conf, manifestPath(root, v)))
-    val live = (math.max(0, floor) to current)
-      .filter(v => FsIo.exists(conf, manifestPath(root, v)))
-      .flatMap(v => readManifest(root, v, conf).map(_.dir)).toSet
-    Seq("seg", "del").foreach { kind =>
-      if (FsIo.exists(conf, s"$root/$kind"))
-        FsIo.listDirNames(conf, s"$root/$kind").foreach { d =>
-          if (!live.exists(_.endsWith(s"/$kind/$d")))
-            FsIo.delete(conf, s"$root/$kind/$d")
+  /** Delete segment dirs no `retained` entry references (what
+    * [[Ledger.Manifests.commit]] returns: segments carry by reference
+    * across versions, so liveness is the union over the retention
+    * window). Orphans from a crash-before-swap fall out here too. */
+  private def sweep(root: String, retained: Seq[Seg],
+                    conf: Configuration): Unit = {
+    val live = retained.map(_.dir).toSet
+    Seq("seg", "del").foreach { area =>
+      if (FsIo.exists(conf, s"$root/$area"))
+        FsIo.listDirNames(conf, s"$root/$area").foreach { d =>
+          if (!live.exists(_.endsWith(s"/$area/$d")))
+            FsIo.delete(conf, s"$root/$area/$d")
         }
     }
   }

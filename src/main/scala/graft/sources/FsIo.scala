@@ -222,17 +222,22 @@ object FsIo {
     if (f.exists(p)) f.delete(p, true)
   }
 
-  /** Atomic replace of `dst` by `src` — the pointer-swap primitive.
-    * `FileContext.rename(OVERWRITE)` is atomic on POSIX and HDFS; on an
-    * object store it is copy+delete and deployments must swap through a
-    * conditional PUT / transaction-log append instead (the same caveat
-    * `lake-info` surfaces for the versioned lake). */
-  def atomicReplace(conf: Configuration, src: String, dst: String): Unit = {
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(dst).toUri, conf)
-    fc.rename(new Path(src), new Path(dst),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  /** Atomic replace of `dst` by `src` — the [[Ledger]]'s swap
+    * primitive. A local filesystem renames with POSIX `rename(2)`:
+    * Hadoop's local `rename(OVERWRITE)` deletes `dst` first, so a reader
+    * could find no file and a concurrent swap could fail. Elsewhere
+    * `FileContext.rename(OVERWRITE)`, atomic on HDFS. */
+  def atomicReplace(conf: Configuration, src: String, dst: String): Unit =
+    fs(conf, dst) match {
+      case local: org.apache.hadoop.fs.RawLocalFileSystem =>
+        java.nio.file.Files.move(local.pathToFile(new Path(src)).toPath,
+          local.pathToFile(new Path(dst)).toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      case _ =>
+        org.apache.hadoop.fs.FileContext.getFileContext(new Path(dst).toUri, conf)
+          .rename(new Path(src), new Path(dst),
+            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
 
   /** Loud guard for seek-write formats (NetCDF classic): random-access
     * writes exist only on POSIX filesystems — HDFS is append-only and

@@ -1,8 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned-snapshot lake — the PRODUCTION form of the streaming MERGE
@@ -21,9 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     (+ retention), peak memory is just the merge join.
   *   - Readers pin a version: one pointer read at plan time, then the
   *     whole query runs against an immutable directory — writers never
-  *     race readers (the swap is a rename; on an object store it would
-  *     be a conditional PUT / a transaction-log append, exactly Delta's
-  *     `_delta_log` discipline).
+  *     race readers (the swap is the [[Ledger]]'s atomic pointer
+  *     write).
   *   - Exactly-once under foreachBatch's at-least-once replay comes from
   *     recording the last applied `batchId` IN the pointer: a replayed
   *     batch compares ≤ and is skipped wholesale. This is the
@@ -39,45 +35,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Snapshots are bucketed managed tables ([[Lake.writeBucketed]]) named
   * `<table>_vNNNNN`, so the snapshot side of every MERGE join stays
-  * shuffle-free; the pointer file lives under `root` and holds
-  * `<version> <lastBatchId>`.
+  * shuffle-free; only the [[Ledger]] pointer lives under `root`.
   */
-object VersionedLake {
+object VersionedLake extends Ledger {
 
-  final case class Pointer(version: Int, lastBatch: Long)
+  protected def kind = "versioned lake"
 
   def tableName(table: String, version: Int): String = f"${table}_v$version%05d"
-
-  /** Read the pointer; None when the lake is uninitialized. Goes
-    * through the Hadoop FileSystem ([[FsIo]]) so `root` can be a
-    * file://, hdfs:// or s3a:// location like the snapshots'
-    * warehouse; defaults to a fresh Configuration (deployment
-    * core-site.xml) for pure-metadata callers. */
-  def readPointer(root: String,
-                  conf: Configuration = new Configuration()): Option[Pointer] = {
-    val p = s"$root/_current"
-    if (!FsIo.exists(conf, p)) None
-    else {
-      val parts = new String(FsIo.readBytes(conf, p),
-        StandardCharsets.UTF_8).trim.split("\\s+")
-      require(parts.length == 2, s"corrupt pointer file $p: '${parts.mkString(" ")}'")
-      Some(Pointer(parts(0).toInt, parts(1).toLong))
-    }
-  }
-
-  /** Swap the pointer atomically: write a temp file, then an atomic
-    * rename over `_current` ([[FsIo.atomicReplace]] —
-    * FileContext.rename(OVERWRITE), atomic on POSIX and HDFS) — readers
-    * see either the old or the new pointer, never a torn write.
-    * (Object-store deployments replace this with a conditional PUT or a
-    * transaction-log append; `lake-info` surfaces the caveat.) */
-  private def writePointer(root: String, p: Pointer,
-                           conf: Configuration): Unit = {
-    val tmp = s"$root/_current_${ProcessHandle.current().pid()}.tmp"
-    FsIo.writeBytes(conf, tmp,
-      s"${p.version} ${p.lastBatch}".getBytes(StandardCharsets.UTF_8))
-    FsIo.atomicReplace(conf, tmp, s"$root/_current")
-  }
 
   /** Initialize the lake: snapshot v0 + pointer. */
   def init(initial: DataFrame, root: String, table: String, keyCol: String,
@@ -85,16 +49,14 @@ object VersionedLake {
     val conf = initial.sparkSession.sparkContext.hadoopConfiguration
     FsIo.mkdirs(conf, root)
     Lake.writeBucketed(initial, tableName(table, 0), keyCol, buckets, Seq(keyCol))
-    writePointer(root, Pointer(0, -1L), conf)
+    Ledger.writePointer(root, Pointer(0, -1L), conf)
   }
 
   /** The current snapshot, pinned at read time (one pointer read; the
     * returned frame scans an immutable versioned table). */
-  def current(spark: SparkSession, root: String, table: String): DataFrame = {
-    val p = readPointer(root).getOrElse(throw new IllegalStateException(
-      s"versioned lake at $root not initialized — call init first"))
-    spark.table(tableName(table, p.version))
-  }
+  def current(spark: SparkSession, root: String, table: String): DataFrame =
+    spark.table(tableName(table,
+      pointer(root, spark.sparkContext.hadoopConfiguration).version))
 
   /** TIME TRAVEL: read snapshot v(`version`) if it is still within the
     * retention window. Versions are immutable once written, so an
@@ -103,15 +65,9 @@ object VersionedLake {
     * loudly with the live range. */
   def asOf(spark: SparkSession, root: String, table: String,
            version: Int): DataFrame = {
-    val p = readPointer(root).getOrElse(throw new IllegalStateException(
-      s"versioned lake at $root not initialized — call init first"))
-    require(version >= 0 && version <= p.version,
-      s"version $version out of range [0, ${p.version}]")
     val name = tableName(table, version)
-    if (!spark.catalog.tableExists(name))
-      throw new IllegalStateException(
-        s"snapshot v$version aged out of retention (current v${p.version}; " +
-          "raise `retain` on the write path to keep deeper history)")
+    pointerAsOf(root, version, spark.sparkContext.hadoopConfiguration,
+      "snapshot")(spark.catalog.tableExists(name))
     spark.table(name)
   }
 
@@ -122,21 +78,9 @@ object VersionedLake {
     * advance only the pointer (no snapshot write). */
   def applyBatch(changes: DataFrame, root: String, table: String,
                  keyCol: String, buckets: Int, batchId: Long,
-                 retain: Int = 2): Unit = {
-    val spark = changes.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"versioned lake at $root not initialized — call init first"))
-    if (batchId <= p.lastBatch) return // at-least-once replay: already applied
-    if (changes.isEmpty) {
-      writePointer(root, p.copy(lastBatch = batchId), conf); return
-    }
-    val next = p.version + 1
-    val merged = Lake.merge(spark.table(tableName(table, p.version)), changes, keyCol)
-    Lake.writeBucketed(merged, tableName(table, next), keyCol, buckets, Seq(keyCol))
-    writePointer(root, Pointer(next, batchId), conf)
-    dropSnapshot(spark, table, next - 1 - retain)
-  }
+                 retain: Int = 2): Unit =
+    applyWith(changes, root, table, Seq(keyCol), buckets, batchId, retain)(
+      Lake.merge(_, changes, keyCol))
 
   /** [[applyBatch]] for ADDITIVE counter tables (sketches: DDSketch /
     * CMS buckets, word counts): the batch's counters ADD into the
@@ -151,11 +95,9 @@ object VersionedLake {
   def applyAdditiveBatch(batch: DataFrame, root: String, table: String,
                          keyCols: Seq[String], cntCol: String,
                          buckets: Int, batchId: Long,
-                         retain: Int = 2): Unit = {
-    import org.apache.spark.sql.functions.sum
-    applyCombineBatch(batch, root, table, keyCols, cntCol, sum,
-      buckets, batchId, retain)
-  }
+                         retain: Int = 2): Unit =
+    applyCombineBatch(batch, root, table, keyCols, cntCol,
+      org.apache.spark.sql.functions.sum, buckets, batchId, retain)
 
   /** [[applyAdditiveBatch]] with bitwise-OR combine — the Bloom word
     * table's merge. OR is IDEMPOTENT, so unlike the additive form a
@@ -186,15 +128,6 @@ object VersionedLake {
                         retain: Int = 2): Unit = {
     import org.apache.spark.sql.functions.{col, row_number}
     require(grpCols.nonEmpty && k >= 1, s"bottom-k needs groups and k>=1: $k")
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"versioned lake at $root not initialized — call init first"))
-    if (batchId <= p.lastBatch) return // replay: harmless either way
-    if (batch.isEmpty) {
-      writePointer(root, p.copy(lastBatch = batchId), conf); return
-    }
-    val next = p.version + 1
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(grpCols.map(col): _*).orderBy(col(rankCol))
     // bottom-k is idempotent over a SET, not a bag: a replayed row that
@@ -202,15 +135,11 @@ object VersionedLake {
     // silently crowd a distinct member out — dedup the union first (the
     // distinct is map-side-combinable and the union is only k·groups +
     // batch rows). WindowGroupLimit then bounds per-group state at k.
-    val merged = spark.table(tableName(table, p.version))
-      .unionByName(batch)
-      .distinct()
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k).drop("_rk")
-    Lake.writeBucketed(merged, tableName(table, next), grpCols.head,
-      buckets, grpCols :+ rankCol)
-    writePointer(root, Pointer(next, batchId), conf)
-    dropSnapshot(spark, table, next - 1 - retain)
+    applyWith(batch, root, table, grpCols :+ rankCol, buckets, batchId,
+      retain)(_.unionByName(batch)
+        .distinct()
+        .withColumn("_rk", row_number().over(w))
+        .filter(col("_rk") <= k).drop("_rk"))
   }
 
   private def applyCombineBatch(batch: DataFrame, root: String,
@@ -222,23 +151,32 @@ object VersionedLake {
                                 retain: Int): Unit = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "combine batch needs key columns")
+    applyWith(batch, root, table, keyCols, buckets, batchId, retain)(
+      _.unionByName(batch)
+        .groupBy(keyCols.map(col): _*)
+        .agg(combine(col(valCol)).as(valCol)))
+  }
+
+  /** The apply template of every merge contract: behind the replay gate,
+    * write `merge(v(n))` as bucketed v(n+1) (bucketed on `sortCols.head`,
+    * sorted by `sortCols`), swap the pointer, drop the snapshot that
+    * fell out of retention. An empty batch moves only the pointer. */
+  private def applyWith(batch: DataFrame, root: String, table: String,
+                        sortCols: Seq[String], buckets: Int, batchId: Long,
+                        retain: Int)(merge: DataFrame => DataFrame): Unit = {
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"versioned lake at $root not initialized — call init first"))
-    if (batchId <= p.lastBatch) return // at-least-once replay: already applied
-    if (batch.isEmpty) {
-      writePointer(root, p.copy(lastBatch = batchId), conf); return
+    applyOnce(root, batchId, conf) { p =>
+      if (batch.isEmpty) false
+      else {
+        val next = p.version + 1
+        Lake.writeBucketed(merge(spark.table(tableName(table, p.version))),
+          tableName(table, next), sortCols.head, buckets, sortCols)
+        Ledger.writePointer(root, Pointer(next, batchId), conf)
+        dropSnapshot(spark, table, next - 1 - retain)
+        true
+      }
     }
-    val next = p.version + 1
-    val merged = spark.table(tableName(table, p.version))
-      .unionByName(batch)
-      .groupBy(keyCols.map(col): _*)
-      .agg(combine(col(valCol)).as(valCol))
-    Lake.writeBucketed(merged, tableName(table, next), keyCols.head,
-      buckets, keyCols)
-    writePointer(root, Pointer(next, batchId), conf)
-    dropSnapshot(spark, table, next - 1 - retain)
   }
 
   /** Drop one versioned snapshot (table + warehouse location); no-op for
@@ -259,6 +197,6 @@ object VersionedLake {
     readPointer(root, conf).foreach { p =>
       (0 to p.version).foreach(dropSnapshot(spark, table, _))
     }
-    FsIo.delete(conf, s"$root/_current")
+    Ledger.dropPointer(root, conf)
   }
 }

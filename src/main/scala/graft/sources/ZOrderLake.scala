@@ -18,12 +18,10 @@ import org.apache.spark.sql.functions._
   * Layout: immutable parquet slab files under `root/data/vNNNNN/`
   * (each covering a narrow zval range), a per-version MANIFEST listing
   * `(file, minZ, maxZ, rows)` — files carry over between versions by
-  * REFERENCE, untouched files are never rewritten — and a tiny
-  * `_current` pointer (`version lastBatch`), swapped atomically after
-  * the batch's slabs and manifest are durable. Crash between write and
-  * swap leaves orphans the next GC sweeps; the replayed batch re-derives
-  * the same version (the same crash contract as [[VersionedLake]], whose
-  * rename-vs-conditional-PUT caveat applies to the pointer here too).
+  * REFERENCE, untouched files are never rewritten — committed through
+  * the [[Ledger]]: the pointer swaps after the batch's slabs and manifest
+  * are durable. Crash between write and swap leaves orphans the next GC
+  * sweeps; the replayed batch re-derives the same version.
   *
   * The clustering dimensions are pinned at init; their grid bounds are
   * pinned PER EPOCH (stored in `_bounds` as `name lo hi` blocks
@@ -56,9 +54,10 @@ import org.apache.spark.sql.functions._
   * pointer's batchId gate is load-bearing, as in
   * [[VersionedLake.applyAdditiveBatch]].
   */
-object ZOrderLake {
+object ZOrderLake extends Ledger.Manifests {
 
-  final case class Pointer(version: Int, lastBatch: Long)
+  protected def kind = "z-order lake"
+
   final case class DimBound(name: String, lo: Long, hi: Long)
   /** One manifest row; `epoch` names the `_bounds` block whose grid the
     * slab's zvals live on (z-intervals are only comparable within an
@@ -86,60 +85,20 @@ object ZOrderLake {
     * group lookup both stay driver-array-sized. */
   private def cellShift(nDims: Int): Int = keyBits(nDims) - 12
 
-  // ---- metadata plumbing: all through the Hadoop FileSystem (FsIo),
-  // so a lake root can be file://, hdfs:// or s3a:// — the pointer swap
-  // is FileContext.rename(OVERWRITE), atomic on POSIX and HDFS (object
-  // stores swap via conditional PUT instead; see FsIo.atomicReplace).
-  // The pure-metadata readers default to `new Configuration()` — which
-  // loads the deployment's core-site.xml, so plain local paths and
-  // cluster defaults both resolve; Spark-session entry points pass the
-  // session's Hadoop conf explicitly.
+  protected def encode(e: Entry): String =
+    s"${e.path}\t${e.minZ}\t${e.maxZ}\t${e.rows}\t${e.epoch}"
 
-  def readPointer(root: String,
-                  conf: Configuration = new Configuration()): Option[Pointer] = {
-    val p = s"$root/_current"
-    if (!FsIo.exists(conf, p)) None
-    else {
-      val parts = new String(FsIo.readBytes(conf, p),
-        StandardCharsets.UTF_8).trim.split("\\s+")
-      require(parts.length == 2, s"corrupt pointer file $p")
-      Some(Pointer(parts(0).toInt, parts(1).toLong))
-    }
-  }
+  // 4-field lines predate grid epochs → epoch 0
+  protected def decode(f: Array[String]): Entry =
+    Entry(f(0), f(1).toLong, f(2).toLong, f(3).toLong,
+      if (f.length >= 5) f(4).toInt else 0)
 
-  private def writePointer(root: String, p: Pointer,
-                           conf: Configuration): Unit = {
-    val tmp = s"$root/_current_${ProcessHandle.current().pid()}.tmp"
-    FsIo.writeBytes(conf, tmp,
-      s"${p.version} ${p.lastBatch}".getBytes(StandardCharsets.UTF_8))
-    FsIo.atomicReplace(conf, tmp, s"$root/_current")
-  }
-
-  private def manifestPath(root: String, version: Int) =
-    f"$root/_manifests/v$version%05d"
-
-  private def writeManifest(root: String, version: Int,
-                            entries: Seq[Entry],
-                            conf: Configuration): Unit = {
-    val body = entries.sortBy(e => (e.epoch, e.minZ))
-      .map(e => s"${e.path}\t${e.minZ}\t${e.maxZ}\t${e.rows}\t${e.epoch}")
-      .mkString("", "\n", "\n")
-    FsIo.writeBytes(conf, manifestPath(root, version),
-      body.getBytes(StandardCharsets.UTF_8))
-  }
-
-  def readManifest(root: String, version: Int,
-                   conf: Configuration = new Configuration()): Seq[Entry] = {
-    val p = manifestPath(root, version)
-    require(FsIo.exists(conf, p), s"missing manifest v$version under $root")
-    new String(FsIo.readBytes(conf, p), StandardCharsets.UTF_8)
-      .split("\n").filter(_.nonEmpty).toSeq.map { line =>
-        val f = line.split("\t")
-        // 4-field lines predate grid epochs → epoch 0
-        Entry(f(0), f(1).toLong, f(2).toLong, f(3).toLong,
-          if (f.length >= 5) f(4).toInt else 0)
-      }
-  }
+  /** Manifests list slabs in (epoch, minZ) order. */
+  override protected def commit(root: String, next: Pointer,
+                                entries: Seq[Entry], retain: Int,
+                                conf: Configuration): Seq[Entry] =
+    super.commit(root, next, entries.sortBy(e => (e.epoch, e.minZ)),
+      retain, conf)
 
   /** Every grid epoch's bounds, oldest first (`_bounds` blocks split on
     * `#epoch N` markers; a marker-less file is the single epoch 0). */
@@ -177,8 +136,8 @@ object ZOrderLake {
   private def boundsBody(dims: Seq[DimBound]): String =
     dims.map(d => s"${d.name} ${d.lo} ${d.hi}").mkString("", "\n", "\n")
 
-  /** Serialise the full epoch-block sequence to `_bounds` through a
-    * temp + atomic rename (a torn write would corrupt every epoch) —
+  /** Serialise the full epoch-block sequence to `_bounds` through the
+    * ledger's atomic write (a torn write would corrupt every epoch) —
     * the ONE serialization site: epoch-open, residue replacement and
     * the gc trim all go through here, so the block format cannot
     * drift between writers. Blocks WITH slabs are immutable content —
@@ -189,9 +148,7 @@ object ZOrderLake {
     val body = blocks.zipWithIndex.map { case (d, e) =>
       (if (e == 0) "" else s"#epoch $e\n") + boundsBody(d)
     }.mkString
-    val tmp = s"$root/_bounds_${ProcessHandle.current().pid()}.tmp"
-    FsIo.writeBytes(conf, tmp, body.getBytes(StandardCharsets.UTF_8))
-    FsIo.atomicReplace(conf, tmp, s"$root/_bounds")
+    Ledger.atomicWrite(conf, s"$root/_bounds", body)
   }
 
   /** Open the grid-epoch slot for `fresh` bounds and return the epoch
@@ -354,8 +311,7 @@ object ZOrderLake {
     writeEpochs(root, Seq(dims), conf)
     val entries = writeSlabs(df.withColumn("zval", zvalCol(dims)),
       s"$root/data/v00000", targetRows, totalRows)
-    writeManifest(root, 0, entries, conf)
-    writePointer(root, Pointer(0, -1L), conf)
+    commit(root, Pointer(0, -1L), entries, 0, conf)
   }
 
   /** 2-D convenience form. */
@@ -367,8 +323,7 @@ object ZOrderLake {
     * `zval` column (callers drop it; rewrites reuse it). */
   def current(spark: SparkSession, root: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"z-order lake at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     val entries = readManifest(root, p.version, conf)
     spark.read.parquet(entries.map(_.path): _*)
   }
@@ -394,8 +349,7 @@ object ZOrderLake {
   def readBox(spark: SparkSession, root: String, los: Seq[Long],
               his: Seq[Long], maxRanges: Int = 64): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"z-order lake at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     val epochs = readEpochs(root, conf)
     val nd = epochs.head.size
     require(los.size == nd && his.size == nd,
@@ -443,14 +397,8 @@ object ZOrderLake {
     * loudly with the live range, mirroring [[VersionedLake.asOf]]. */
   def asOf(spark: SparkSession, root: String, version: Int): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"z-order lake at $root not initialized — call init first"))
-    require(version >= 0 && version <= p.version,
-      s"version $version out of range [0, ${p.version}]")
-    if (!FsIo.exists(conf, manifestPath(root, version)))
-      throw new IllegalStateException(
-        s"manifest v$version aged out of retention (current v${p.version}; " +
-          "raise `retain` on the write path to keep deeper history)")
+    pointerAsOf(root, version, conf, "manifest")(
+      hasManifest(root, version, conf))
     spark.read.parquet(readManifest(root, version, conf).map(_.path): _*)
   }
 
@@ -485,16 +433,19 @@ object ZOrderLake {
     * recompute. */
   def applyBatch(batch: DataFrame, root: String, targetRows: Long,
                  batchId: Long, retain: Int = 2,
-                 epochThreshold: Double = DefaultEpochThreshold): Unit = {
+                 epochThreshold: Double = DefaultEpochThreshold): Unit =
+    applyOnce(root, batchId, batch.sparkSession.sparkContext.hadoopConfiguration)(
+      appendBatch(batch, root, _, targetRows, batchId, retain, epochThreshold))
+
+  /** [[applyBatch]] behind the replay gate; false for an empty batch. */
+  private def appendBatch(batch: DataFrame, root: String, p: Pointer,
+                          targetRows: Long, batchId: Long, retain: Int,
+                          epochThreshold: Double): Boolean = {
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"z-order lake at $root not initialized — call init first"))
-    if (batchId <= p.lastBatch) return // at-least-once replay: applied
     val epochs = readEpochs(root, conf)
     val curDims = epochs.last
     val manifest = readManifest(root, p.version, conf)
-    val next = p.version + 1
     // one 1-row aggregate over the batch: per-dim min/max, row count,
     // out-of-box count — it also subsumes the isEmpty probe, so the
     // per-batch job count stays at (agg, cell probe, rewrite)
@@ -506,9 +457,7 @@ object ZOrderLake {
       Seq(count(lit(1)), sum(when(oobPred, 1L).otherwise(0L)))
     val r = batch.agg(aggs.head, aggs.tail: _*).head()
     val batchRows = r.getLong(2 * curDims.size)
-    if (batchRows == 0L) {
-      writePointer(root, p.copy(lastBatch = batchId), conf); return
-    }
+    if (batchRows == 0L) return false
     val oobRows = r.getLong(2 * curDims.size + 1)
     val (epoch, dims) =
       if (oobRows.toDouble / batchRows > epochThreshold) {
@@ -569,8 +518,9 @@ object ZOrderLake {
       if (rewrite.isEmpty) batchZ
       else spark.read.parquet(rewrite.map(_.path): _*).unionByName(batchZ)
     commitRewrite(spark, root, keep, rewriteRows,
-      rewrite.map(_.rows).sum + batchRows, next,
-      Pointer(next, batchId), targetRows, retain, shift, epoch)
+      rewrite.map(_.rows).sum + batchRows,
+      Pointer(p.version + 1, batchId), targetRows, retain, shift, epoch)
+    true
   }
 
   /** 2-D convenience form (validates the dim names). */
@@ -587,7 +537,7 @@ object ZOrderLake {
     applyBatch(batch, root, xCol, yCol, targetRows, batchId, 2)
 
   /** Rewrite `rows` into fresh slabs respecting `keep`'s intervals,
-    * commit manifest v`next`, swap the pointer, GC.
+    * commit them as `next`, sweep.
     *
     * Slab cuts must not SPAN a kept file's z-interval: a rewrite slab
     * sliced purely by row rank could cover the gap a kept file sits in
@@ -603,8 +553,8 @@ object ZOrderLake {
     * z-spaces and place no constraint on the cuts. */
   private def commitRewrite(spark: SparkSession, root: String,
                             keep: Seq[Entry], rows: DataFrame,
-                            totalRows: Long, next: Int,
-                            newPointer: Pointer, targetRows: Long,
+                            totalRows: Long, next: Pointer,
+                            targetRows: Long,
                             retain: Int, shift: Int, epoch: Int): Unit = {
     val keptMaxCells = keep.filter(_.epoch == epoch)
       .map(_.maxZ >> shift).sorted
@@ -622,12 +572,10 @@ object ZOrderLake {
     val grouped = rows.withColumn("_grp", element_at(
       typedLit(groupOfCell.toSeq),
       (shiftright(col("zval"), shift) + 1).cast("int")))
-    val fresh = writeSlabGroups(grouped, f"$root/data/v$next%05d",
+    val fresh = writeSlabGroups(grouped, f"$root/data/v${next.version}%05d",
       targetRows, totalRows).map(_.copy(epoch = epoch))
     val conf = spark.sparkContext.hadoopConfiguration
-    writeManifest(root, next, keep ++ fresh, conf)
-    writePointer(root, newPointer, conf)
-    gc(root, next, retain, conf)
+    sweep(root, commit(root, next, keep ++ fresh, retain, conf), conf)
   }
 
   /** Slab compaction — the fragmentation half of maintenance: batches
@@ -650,8 +598,7 @@ object ZOrderLake {
   def compact(spark: SparkSession, root: String, targetRows: Long,
               retain: Int = 2, epoch: Int = -1): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"z-order lake at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     val epochs = readEpochs(root, conf)
     val e = if (epoch < 0) epochs.size - 1 else epoch
     require(e < epochs.size, s"epoch $e out of range [0, ${epochs.size})")
@@ -690,12 +637,11 @@ object ZOrderLake {
     val (rewrite, keep) = sorted.zipWithIndex.partition {
       case (_, idx) => rewriteIdx.contains(idx)
     }
-    val next = p.version + 1
+    val next = Pointer(p.version + 1, p.lastBatch)
     commitRewrite(spark, root, keep.map(_._1) ++ other,
       spark.read.parquet(rewrite.map(_._1.path): _*),
-      rewrite.map(_._1.rows).sum, next,
-      Pointer(next, p.lastBatch), targetRows, retain, shift, e)
-    readManifest(root, next, conf).size
+      rewrite.map(_._1.rows).sum, next, targetRows, retain, shift, e)
+    readManifest(root, next.version, conf).size
   }
 
   /** CROSS-EPOCH REBUILD — the maintenance half grid epochs need at
@@ -716,8 +662,7 @@ object ZOrderLake {
   def rebuild(spark: SparkSession, root: String, targetRows: Long,
               retain: Int = 2): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = readPointer(root, conf).getOrElse(throw new IllegalStateException(
-      s"z-order lake at $root not initialized — call init first"))
+    val p = pointer(root, conf)
     val epochs = readEpochs(root, conf)
     val curDims = epochs.last
     val manifest = readManifest(root, p.version, conf)
@@ -737,15 +682,14 @@ object ZOrderLake {
     val entries = writeSlabs(df.withColumn("zval", zvalCol(dims)),
         f"$root/data/v$next%05d", targetRows, totalRows)
       .map(_.copy(epoch = epoch))
-    writeManifest(root, next, entries, conf)
-    writePointer(root, Pointer(next, p.lastBatch), conf)
-    gc(root, next, retain, conf)
+    sweep(root, commit(root, Pointer(next, p.lastBatch), entries, retain, conf),
+      conf)
     epoch
   }
 
-  /** Drop manifests older than the retention window and delete data no
-    * retained manifest references. Driver-side, bounded by the file
-    * count — the same cardinality a catalog listing holds. A version
+  /** Delete data no `retained` entry references (what
+    * [[Ledger.Manifests.commit]] returns). Driver-side, bounded by the
+    * file count — the same cardinality a catalog listing holds. A version
     * directory with ZERO live slabs is deleted RECURSIVELY — per-file
     * deletion of only `.parquet` names would strand `_SUCCESS` markers,
     * `.crc` sidecars and emptied `_grp=K/` subdirectories forever on a
@@ -760,16 +704,11 @@ object ZOrderLake {
     * taxing every later readBox/compact forever. Only trailing blocks
     * are droppable (epoch ids are positional); interior epochs with no
     * live slabs stay, preserving every referenced id. */
-  private def gc(root: String, current: Int, retain: Int,
-                 conf: Configuration): Unit = {
-    val floor = current - retain
-    (0 until floor).foreach(v => FsIo.delete(conf, manifestPath(root, v)))
-    val retained = (math.max(0, floor) to current)
-      .filter(v => FsIo.exists(conf, manifestPath(root, v)))
-      .map(v => readManifest(root, v, conf))
-    val live = retained.flatMap(_.map(_.path)).toSet
+  private def sweep(root: String, retained: Seq[Entry],
+                    conf: Configuration): Unit = {
+    val live = retained.map(_.path).toSet
     val epochs = readEpochs(root, conf)
-    val maxRef = retained.flatten.map(_.epoch).foldLeft(0)(math.max)
+    val maxRef = retained.map(_.epoch).foldLeft(0)(math.max)
     if (epochs.size > maxRef + 1)
       writeEpochs(root, epochs.take(maxRef + 1), conf)
     FsIo.listDirNames(conf, s"$root/data").foreach { d =>

@@ -238,6 +238,34 @@ class FsIoSpec extends AnyFunSuite {
     assert(!rootDir.exists())
   }
 
+  test("versioned lake pointer resolves through the session's Hadoop conf") {
+    import spark.implicits._
+    import graft.sources.VersionedLake
+    // a scheme only this session's Hadoop conf knows, under both the
+    // FileSystem and the AbstractFileSystem (FileContext) keys; uncached,
+    // so a stock Configuration cannot borrow the session's instance
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.sessionfs.impl", classOf[FsIoSpec.SessionFs].getName)
+    hc.setBoolean("fs.sessionfs.impl.disable.cache", true)
+    hc.set("fs.AbstractFileSystem.sessionfs.impl",
+      classOf[FsIoSpec.SessionAfs].getName)
+    val root = s"sessionfs://${tmp("vlake")}/vl"
+    val table = s"vlake_sessionfs_${System.nanoTime()}"
+    val initial = (1L to 20L).map(k => (k, s"s$k", k * 1.0)).toDF("k", "s", "v")
+    VersionedLake.init(initial, root, table, "k", 4)
+    VersionedLake.applyBatch(
+      Seq((21L, "insert", "n21", 21.0)).toDF("k", "op", "s", "v"),
+      root, table, "k", 4, batchId = 0L)
+    assert(VersionedLake.readPointer(root, hc).get == VersionedLake.Pointer(1, 0L))
+    assert(VersionedLake.current(spark, root, table).count() == 21)
+    assert(VersionedLake.asOf(spark, root, table, 0).count() == 20)
+    // a stock Configuration cannot resolve the root: the reads above
+    // went through the session's conf
+    intercept[java.io.IOException](VersionedLake.readPointer(root))
+    VersionedLake.destroy(spark, root, table)
+    assert(VersionedLake.readPointer(root, hc).isEmpty)
+  }
+
   test("ConfSnapshot rebuilds a usable Configuration after serialization") {
     val snap = graft.sources.FsIo.snapshot(spark)
     val bos = new java.io.ByteArrayOutputStream()
@@ -250,4 +278,17 @@ class FsIoSpec extends AnyFunSuite {
     graft.sources.FsIo.writeBytes(back.value, p, Array[Byte](1, 2, 3))
     assert(graft.sources.FsIo.readBytes(back.value, p).toSeq == Seq[Byte](1, 2, 3))
   }
+}
+
+object FsIoSpec {
+  /** The local filesystem under the `sessionfs` scheme. */
+  class SessionFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("sessionfs:///")
+    override def getScheme: String = "sessionfs"
+  }
+
+  /** [[SessionFs]] for FileContext. */
+  class SessionAfs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+      extends org.apache.hadoop.fs.DelegateToFileSystem(
+        uri, new SessionFs, conf, "sessionfs", false)
 }
