@@ -13,6 +13,20 @@ import org.apache.spark.sql.SparkSession
   *   graft.Main convert-netcdf <file.nc> <outDir>   (classic CDF-1/2 → long-format lake)
   */
 object Main {
+  /** The local session every command runs in: `SPARK_GRAFT_CPUS` cores
+    * (default 4) and as many shuffle partitions, UI off, WARN logs. */
+  private def localSpark(utc: Boolean = false): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+    val spark = (if (utc) b.config("spark.sql.session.timeZone", "UTC") else b)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     Registry.registerBuiltins()
     VirtualModules.loadBundled("icclim")
@@ -49,13 +63,7 @@ object Main {
       case "run" :: name :: in :: out :: rest =>
         val freq = rest.headOption.getOrElse("MS")
         rest.drop(1).foreach(VirtualModules.loadYamlFile)
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark(utc = true)
         val df = spark.read.parquet(in)
         val result = Registry(name)(df, freq)
         result.write.mode("overwrite").parquet(out)
@@ -67,12 +75,7 @@ object Main {
         val decodeTimes = rest0.contains("--decode-times")
         val args2 = rest0.filterNot(_ == "--decode-times")
         val (nc, outDir) = (args2(0), args2(1))
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         // route on the magic number: classic CDF vs HDF5-backed NetCDF-4
         val magic = {
           val in = new java.io.FileInputStream(nc)
@@ -87,12 +90,7 @@ object Main {
       case "convert-netcdf" :: "--reverse" :: lakeDir :: nc :: rest =>
         // lake -> classic NetCDF: the reference CLI's NetCDF->NetCDF round
         // trip (cli.py:76-88) with the parquet lake as the middle step
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val version = rest.headOption.map(_.toInt).getOrElse(1)
         val h = graft.sources.NetCDF.fromParquetLake(spark, lakeDir, nc, version = version)
         println(s"$lakeDir -> $nc (CDF-$version, ${h.vars.map(_.name).mkString(", ")}, " +
@@ -106,12 +104,7 @@ object Main {
         val (store, outDir) = (args2(0), args2(1))
         // Zarr v2 directory store → long-format lake (the cloud-native
         // half of the reference's xr.open_dataset surface, cli.py:54-88)
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val vars = graft.sources.Zarr.toParquetLake(spark, store, outDir, decodeTimes)
         println(s"$store -> $outDir (${vars.mkString(", ")})")
         spark.stop()
@@ -124,12 +117,7 @@ object Main {
         val v3 = rest0.contains("--v3")
         val args2 = rest0.filterNot(_ == "--v3")
         val (lakeDir, store) = (args2(0), args2(1))
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val vars = graft.sources.Zarr.fromParquetLake(spark, lakeDir, store,
           zarrFormat = if (v3) 3 else 2)
         println(s"$lakeDir -> $store (${vars.mkString(", ")})")
@@ -154,12 +142,7 @@ object Main {
         // layout maintenance: z-order-cluster a parquet directory on two
         // integer dims (one range shuffle; per-file min/max stats then
         // prune 2-D box predicates — Lake.zOrderWrite)
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         graft.sources.Lake.zOrderWrite(
           spark.read.parquet(in), xCol, yCol, out, files.toInt)
         println(s"$in -> $out (z-ordered on ($xCol, $yCol), ${files.toInt} files)")
@@ -169,12 +152,7 @@ object Main {
         // output (Lake.compact); optional sort column keeps per-file
         // ranges disjoint. Writes to a NEW directory — swap-in is the
         // operator's transaction.
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val n = graft.sources.Lake.compact(spark, in, out, target.toLong,
           rest.headOption)
         println(s"$in -> $out ($n files, target ${target.toLong} bytes" +
@@ -183,12 +161,7 @@ object Main {
       case "analyze" :: in :: cols =>
         // one-scan per-column stats (Lake.analyzeColumns)
         require(cols.nonEmpty, "analyze needs at least one column")
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         graft.sources.Lake.analyzeColumns(spark.read.parquet(in), cols)
           .collect().foreach(r => println(r.mkString("\t")))
         spark.stop()
@@ -196,12 +169,7 @@ object Main {
         // incremental z-order lake bootstrap (ZOrderLake.init): dims +
         // grid bounds pin here; subsequent appends rewrite only touched
         // slabs
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         graft.sources.ZOrderLake.init(
           spark.read.parquet(in), root, dims, target.toLong)
         println(s"$in -> z-order lake $root (dims ${dims.mkString(",")}, " +
@@ -211,12 +179,7 @@ object Main {
       case "zolake" :: "append" :: in :: root :: target :: batchId :: Nil =>
         // one incremental batch through the manifest + pointer swap;
         // batchId carries the exactly-once gate (replays are no-ops)
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         graft.sources.ZOrderLake.applyBatch(
           spark.read.parquet(in), root, target.toLong, batchId.toLong)
         val p = graft.sources.ZOrderLake.readPointer(root).get
@@ -224,12 +187,7 @@ object Main {
           s"${graft.sources.ZOrderLake.readManifest(root, p.version).size} slabs)")
         spark.stop()
       case "zolake" :: "compact" :: root :: target :: Nil =>
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val n = graft.sources.ZOrderLake.compact(spark, root, target.toLong)
         println(s"$root compacted to $n slabs (target ${target.toLong} rows)")
         spark.stop()
@@ -238,12 +196,7 @@ object Main {
         // covering the full current domain (maintenance version —
         // lastBatch unchanged, contents identical). O(corpus), run it
         // like OPTIMIZE once epoch count taxes reads.
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val e = graft.sources.ZOrderLake.rebuild(spark, root, target.toLong)
         val p = graft.sources.ZOrderLake.readPointer(root).get
         println(s"$root rebuilt onto epoch $e " +
@@ -264,12 +217,7 @@ object Main {
           (if (l.isEmpty) Long.MinValue else l.toLong,
             if (h.isEmpty) Long.MaxValue else h.toLong)
         }
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val box = graft.sources.ZOrderLake.readBox(spark, root,
           parsed.map(_._1), parsed.map(_._2))
         box.write.mode("overwrite").parquet(out)
@@ -303,12 +251,7 @@ object Main {
         // final `codeonly` drops the raw column (ADC-only serving,
         // ~storage/32 at 768-dim float64); `sq8` replaces it with 8-bit
         // scalar-quantized codes (~storage/8, approximate re-rank)
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val storeRaw = !rest.contains("codeonly")
         val sq8 = rest.contains("sq8")
         val (pqM, pqK, pqIters) =
@@ -333,12 +276,7 @@ object Main {
         // re-pins caller-supplied centroids; `ivf rebuild <root> kmeans
         // <iters> [pqTrainIters]` re-clusters the live corpus. A
         // maintenance version: lastBatch unchanged, drift resets to ~1.
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         rest match {
           case "kmeans" :: iters :: more if more.size <= 1 =>
             graft.pipeline.IvfIndex.rebuildKmeans(spark, root, iters.toInt,
@@ -361,29 +299,19 @@ object Main {
       case "ivf" :: "probe-adc" :: root :: out :: qid :: k :: nprobe :: rerank :: Nil =>
         // PQ serving probe: ADC over the code column only, exact
         // integer-grid-cosine re-rank of the top-`rerank` survivors
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         import org.apache.spark.sql.functions.col
         val q = graft.pipeline.IvfIndex.currentAll(spark, root)
           .filter(col("vec_id") === qid.toLong)
           .select(col("embedding").as("qvec"))
-        val top = graft.pipeline.IvfIndex.probeTopKAdc(spark, root, q,
-          k.toInt, nprobe.toInt, rerank.toInt)
+        val top = graft.pipeline.IvfIndex.probeTopK(spark, root, q,
+          k.toInt, nprobe.toInt, graft.pipeline.IvfIndex.Adc(rerank.toInt))
         top.write.mode("overwrite").parquet(out)
         println(s"$root ADC probe vec_id=$qid top-$k (nprobe=$nprobe, " +
           s"rerank=$rerank) -> $out")
         spark.stop()
       case "ivf" :: "append" :: in :: root :: batchId :: Nil =>
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         graft.pipeline.IvfIndex.applyBatch(spark.read.parquet(in),
           "vec_id", "embedding", root, batchId.toLong)
         val p = graft.pipeline.IvfIndex.readPointer(root).get
@@ -391,12 +319,7 @@ object Main {
         spark.stop()
       case "ivf" :: "delete" :: in :: root :: batchId :: Nil =>
         // tombstone delete: `in` is a parquet with a vec_id column
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         graft.pipeline.IvfIndex.applyDeleteBatch(spark.read.parquet(in),
           "vec_id", root, batchId.toLong)
         val p = graft.pipeline.IvfIndex.readPointer(root).get
@@ -405,12 +328,7 @@ object Main {
       case "ivf" :: "probe" :: root :: out :: qid :: k :: nprobe :: Nil =>
         // top-k by integer-grid cosine for the indexed vector `qid`
         // (self-query form; arbitrary query vectors go through the API)
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         import org.apache.spark.sql.functions.col
         val q = graft.pipeline.IvfIndex.currentAll(spark, root)
           .filter(col("vec_id") === qid.toLong)
@@ -425,20 +343,16 @@ object Main {
           if rest.size <= 1 =>
         // batched serving probes for comma-separated indexed vec_ids;
         // with a trailing `rerank` arg the PQ ADC path serves instead
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         import org.apache.spark.sql.functions.col
         val ids = qids.split(",").map(_.trim.toLong)
         val queries = graft.pipeline.IvfIndex.currentAll(spark, root)
           .filter(col("vec_id").isin(ids.map(x => x: Any): _*))
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
         val top = rest match {
-          case rerank :: Nil => graft.pipeline.IvfIndex.probeTopKBatchAdc(
-            spark, root, queries, k.toInt, nprobe.toInt, rerank.toInt)
+          case rerank :: Nil => graft.pipeline.IvfIndex.probeTopKBatch(
+            spark, root, queries, k.toInt, nprobe.toInt,
+            graft.pipeline.IvfIndex.Adc(rerank.toInt))
           case _ => graft.pipeline.IvfIndex.probeTopKBatch(
             spark, root, queries, k.toInt, nprobe.toInt)
         }
@@ -448,12 +362,7 @@ object Main {
           s") -> $out")
         spark.stop()
       case "ivf" :: "compact" :: root :: Nil =>
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val n = graft.pipeline.IvfIndex.compact(spark, root)
         println(s"$root compacted to $n segment(s), tombstones applied")
         spark.stop()
@@ -511,12 +420,7 @@ object Main {
           (p(0), v(p(1), Double.NegativeInfinity),
             v(p(2), Double.PositiveInfinity))
         }
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark()
         val stats = graft.sources.Lake.fileStats(spark, in, parsed.map(_._1))
         val total = stats.count()
         val pruned = graft.sources.Lake.readPrunedMulti(spark, in, stats, parsed)
@@ -528,13 +432,7 @@ object Main {
         // QC battery command (cli.py:231): every applicable flag for the
         // CF variable columns present, per-entity counts + ecad verdict;
         // --raise-flags exits 1 when any entity fails (the CLI contract)
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = localSpark(utc = true)
         val flagged = graft.indicator.DataFlags.ecadCompliant(spark.read.parquet(in))
         flagged.write.mode("overwrite").parquet(out)
         val bad = flagged.filter(org.apache.spark.sql.functions.not(

@@ -1601,7 +1601,7 @@ object SparkEntry {
       val p = graft.pipeline.IvfIndex.readPointer(root).get
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
       val probe = graft.pipeline.IvfIndex
-        .probeTopKAdc(s, root, q, k = 5, nprobe = 3, rerank = 20)
+        .probeTopK(s, root, q, k = 5, nprobe = 3, graft.pipeline.IvfIndex.Adc(20))
         .agg(count(lit(1)).as("probe_n"), sum(col("vec_id")).as("probe_ids"),
           max(col("cosine")).as("probe_max"), sum(col("adc_u")).as("probe_adc"))
       val out = fin.groupBy(col("list"))
@@ -1646,7 +1646,7 @@ object SparkEntry {
       val p = graft.pipeline.IvfIndex.readPointer(root).get
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
       val probe = graft.pipeline.IvfIndex
-        .probeTopKAdc(s, root, q, k = 5, nprobe = 3, rerank = 20)
+        .probeTopK(s, root, q, k = 5, nprobe = 3, graft.pipeline.IvfIndex.Adc(20))
         .agg(count(lit(1)).as("probe_n"), sum(col("vec_id")).as("probe_ids"),
           max(col("cosine")).as("probe_max"), sum(col("adc_u")).as("probe_adc"))
       val out = fin.groupBy(col("list"))
@@ -1684,8 +1684,8 @@ object SparkEntry {
       IvfIndex.init(e, "vec_id", "embedding", cent, root, pqM = 8, pqK = 16)
       val queries = e.filter(col("vec_id").isin(0, 7, 13))
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val out = IvfIndex.probeTopKBatchAdc(s, root, queries,
-          k = 5, nprobe = 3, rerank = 20)
+      val out = IvfIndex.probeTopKBatch(s, root, queries,
+          k = 5, nprobe = 3, IvfIndex.Adc(20))
         .localCheckpoint(true) // 15 rows, eager: the index can go
       IvfIndex.destroy(root)
       out
@@ -1809,7 +1809,7 @@ object SparkEntry {
       val p = graft.pipeline.IvfIndex.readPointer(root).get
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
       val probe = graft.pipeline.IvfIndex
-        .probeTopKAdc(s, root, q, k = 5, nprobe = 3, rerank = 0)
+        .probeTopK(s, root, q, k = 5, nprobe = 3, graft.pipeline.IvfIndex.Adc(0))
         .agg(count(lit(1)).as("probe_n"), sum(col("vec_id")).as("probe_ids"),
           min(col("adc_u")).as("probe_adc_min"),
           sum(col("adc_u")).as("probe_adc"))
@@ -1861,7 +1861,7 @@ object SparkEntry {
       val p = graft.pipeline.IvfIndex.readPointer(root).get
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
       val probe = graft.pipeline.IvfIndex
-        .probeTopKAdc(s, root, q, k = 5, nprobe = 3, rerank = 20)
+        .probeTopK(s, root, q, k = 5, nprobe = 3, graft.pipeline.IvfIndex.Adc(20))
         .agg(count(lit(1)).as("probe_n"), sum(col("vec_id")).as("probe_ids"),
           max(col("cosine")).as("probe_max"), sum(col("adc_u")).as("probe_adc"))
       val out = fin.groupBy(col("list"))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * over a packed centroid array; per-subspace `aggregate(zip_with(...))`
   * candidates for PQ codes) are semantically exact but run INTERPRETED:
   * at assignment volume (rows × nlists × dim) that is the throughput
-  * ceiling — ScaleRehearsalR16b measured ~280 µs/row at nlists = 256,
+  * ceiling — PLANS.md item 104 records ~280 µs/row at nlists = 256,
   * dim = 64 on the HOF path, which at 10^10 vectors is ~10^6 core-hours
   * of pure expression-tree dispatch. These kernels run the same
   * arithmetic as one JIT-compiled loop and slot into whole-stage

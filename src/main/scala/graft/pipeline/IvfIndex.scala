@@ -3,8 +3,10 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
 
 import graft.sources.{FsIo, Ledger}
 
@@ -406,9 +408,12 @@ object IvfIndex extends Ledger.Manifests {
     * would accumulate until the context cleaner got around to them,
     * besides re-collecting the table each time. Centroids are pinned
     * (never move), so caching by their generation path is sound;
-    * [[init]]/[[rebuild]]/[[destroy]] invalidate their root's entries. */
-  private val quantCache =
-    scala.collection.concurrent.TrieMap.empty[String, Quantizer]
+    * [[init]]/[[rebuild]]/[[destroy]] invalidate their root's entries.
+    * Each entry keeps the context that owns its broadcast: after a
+    * session restart in the same JVM that broadcast is dead, so
+    * [[pinnedQuantizer]] rebuilds and replaces it. */
+  private val quantCache = scala.collection.concurrent.TrieMap
+    .empty[String, (org.apache.spark.SparkContext, Quantizer)]
 
   /** r17 optimization — pinned-metadata caches, same soundness argument
     * as [[quantCache]]: everything here is keyed on a generation-
@@ -462,8 +467,13 @@ object IvfIndex extends Ledger.Manifests {
   private def pinnedQuantizer(spark: SparkSession, root: String,
                               gen: Int): Quantizer = {
     val path = centroidsPath(root, gen)
-    quantCache.getOrElseUpdate(path,
-      buildQuantizer(spark, spark.read.parquet(path)))
+    quantCache.get(path) match {
+      case Some((sc, q)) if sc eq spark.sparkContext => q
+      case _ =>
+        val q = buildQuantizer(spark, spark.read.parquet(path))
+        quantCache.update(path, (spark.sparkContext, q))
+        q
+    }
   }
 
   /** Drop (and destroy) every cached quantizer — and every pinned-
@@ -474,7 +484,7 @@ object IvfIndex extends Ledger.Manifests {
   private def invalidateQuantizers(root: String): Unit = {
     val pre = s"$root/"
     quantCache.keys.filter(_.startsWith(pre)).foreach { k =>
-      quantCache.remove(k).foreach(_._2.destroy())
+      quantCache.remove(k).foreach(_._2._2.destroy())
     }
     Seq(codebookCache, sqBoundsCache, centroidsDfCache, segSchemaCache)
       .foreach(c => c.keys.filter(_.startsWith(pre)).foreach(c.remove))
@@ -488,7 +498,7 @@ object IvfIndex extends Ledger.Manifests {
     * `#segschema` entry is root-keyed, not generation-keyed; rebuild
     * and compact drop it explicitly beside the segment they rewrite. */
   private def evictGenCaches(root: String, gen: Int): Unit = {
-    quantCache.remove(centroidsPath(root, gen)).foreach(_._2.destroy())
+    quantCache.remove(centroidsPath(root, gen)).foreach(_._2._2.destroy())
     codebookCache.remove(codebookPath(root, gen))
     sqBoundsCache.remove(sqBoundsPath(root, gen))
     centroidsDfCache.remove(centroidsPath(root, gen))
@@ -515,7 +525,7 @@ object IvfIndex extends Ledger.Manifests {
     * ([[graft.functions.IvfKernels.CentroidArgMin]]) inside whole-stage
     * codegen — a pure projection at ANY nlists, no packed row, no
     * shuffle. The interpreted HOF formulation it replaces cost
-    * ~280 µs/row at nlists 256 × dim 64 (ScaleRehearsalR16b) — the
+    * ~280 µs/row at nlists 256 × dim 64 (PLANS.md item 104) — the
     * difference between a scan-speed ingest and a 10^6-core-hour one
     * at 10^10 vectors. Matrix memory bound = nlists × dim × 8 B per
     * executor (the coarse quantizer FAISS would hold in RAM anyway),
@@ -642,15 +652,15 @@ object IvfIndex extends Ledger.Manifests {
     * the FAISS trained-codebook mode, worth its one-encode-per-round
     * cost when the sampled seeds sit far off the data) and every
     * segment then stores
-    * `pq_code: ARRAY<INT>` alongside the raw vector: [[probeTopKAdc]]
-    * scans ONLY the code column (parquet column pruning) and touches
-    * raw vectors for just the re-rank survivors — at 10^10 × 768-dim
+    * `pq_code: ARRAY<INT>` alongside the raw vector: an [[Adc]] probe
+    * scans ONLY the code column (parquet column pruning) and reads
+    * raw vectors only in its re-rank pass — at 10^10 × 768-dim
     * float64 postings that is the ~32× probe-I/O cut that makes the
     * FAISS IVFADC layout the 100-TB shape. Keeping the raw column
     * costs storage but buys exact re-rank; `storeRaw = false` drops it
     * — the CODE-ONLY tier (requires `pqM > 0`): segments hold only
     * (vec_id, list, pq_code), ~storage/32 at 768-dim float64, served
-    * ADC-only ([[probeTopKAdc]]/[[probeTopKBatchAdc]] with
+    * ADC-only (the [[Adc]] scorer with
     * `rerank = 0`; exact on the codes' L2 order only — no refine pass
     * exists, and [[rebuild]] needs the source corpus again).
     *
@@ -747,11 +757,7 @@ object IvfIndex extends Ledger.Manifests {
     // commit pointer-only unvalidated) — failing fast on a drifted
     // producer is the safer contract even when the batch carries no rows
     val manifest = readManifest(root, p.version, conf)
-    // segment schema is pinned at init (appends are checked against it;
-    // compaction/rebuild preserve the column set) — cache the footer
-    // read instead of re-listing a segment per append (r17)
-    val segFields = segSchemaCache.getOrElseUpdate(s"$root/#segschema",
-      spark.read.parquet(manifest.filterNot(_.tombstone).head.dir).schema)
+    val segFields = segSchemas(spark, root, manifest)._1
     val assigned0 = withSqCode(withPqCode(
       assignWithDist(batch, idCol, vecCol, readCentroids(spark, root),
         quant = Some(pinnedQuantizer(spark, root, p.gen))),
@@ -862,13 +868,10 @@ object IvfIndex extends Ledger.Manifests {
     * pass re-inferred it from parquet footers per (segment × list)
     * directory — pure driver latency on immutable metadata (r17). */
   private def segSchemas(spark: SparkSession, root: String,
-                         segs: Seq[Seg])
-      : (org.apache.spark.sql.types.StructType,
-         org.apache.spark.sql.types.StructType) = {
+                         segs: => Seq[Seg]): (StructType, StructType) = {
     val full = segSchemaCache.getOrElseUpdate(s"$root/#segschema",
       spark.read.parquet(segs.filterNot(_.tombstone).head.dir).schema)
-    (full, org.apache.spark.sql.types.StructType(
-      full.filterNot(_.name == "list")))
+    (full, StructType(full.filterNot(_.name == "list")))
   }
 
   /** The (dir, list, version) triples the probe opens: ONE directory
@@ -923,23 +926,10 @@ object IvfIndex extends Ledger.Manifests {
     applyTombstones(postings, tombstones(spark, segs)).drop("_seg_v")
   }
 
-  /** The distributed probe-list selection — one tiny Spark job over the
-    * pinned centroid table (works at ANY nlists; the probe never needs
-    * the matrix in driver memory). */
-  private def probedListsDistributed(spark: SparkSession, root: String,
-                                     queryVec: DataFrame,
-                                     nprobe: Int): Seq[Int] =
-    readCentroids(spark, root)
-      .crossJoin(broadcast(queryVec))
-      .withColumn("qd2", dist2(col("cvec"), col("qvec")))
-      .orderBy(col("qd2"), col("list"))
-      .limit(nprobe)
-      .select(col("list")).collect().map(_.getInt(0)).toSeq // nprobe ints
-
-  /** Driver-side twin of [[probedListsDistributed]] over the CACHED
+  /** Driver-side twin of [[probeLists]] for one query over the CACHED
     * quantizer matrix — bit-identical arithmetic (same left-to-right
     * IEEE fold as [[dist2]], exact float→double widening, same
-    * (qd2 asc, list asc) tie order via java.lang.Double.compare =
+    * (d2 asc, list asc) tie order via java.lang.Double.compare =
     * Spark's double sort) with zero Spark jobs. Only taken when this
     * JVM already holds the pinned matrix (ingest built it) — a
     * probe-only process never pays the matrix collect, and nlists past
@@ -958,93 +948,92 @@ object IvfIndex extends Ledger.Manifests {
     }.take(nprobe).map(_._2).toSeq
   }
 
-  /** One collected query row rebuilt as a LOCAL single-row relation: the
-    * scoring pass broadcasts the query, and broadcasting the caller's
-    * frame re-executes its plan (a scan + filter in the common serve
-    * path) once more per probe. Values ride unchanged, so every
-    * downstream comparison is bit-identical. */
-  private def localQueryDf(spark: SparkSession,
-                           rows: Array[org.apache.spark.sql.Row],
-                           schema: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
+  /** Collected rows rebuilt as a LOCAL relation: the scoring pass
+    * broadcasts the queries, and broadcasting the caller's frame
+    * re-executes its plan (a scan + filter in the common serve path)
+    * once more per probe. Values ride unchanged, so every downstream
+    * comparison is bit-identical. */
+  private def localQueryDf(spark: SparkSession, rows: Seq[Row],
+                           schema: StructType): DataFrame = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.toSeq.asJava, schema)
+    spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** (probe lists, query frame for the scoring broadcast): driver-side
-    * off the cached quantizer when possible, distributed otherwise —
-    * see [[probedListsLocal]] for the equivalence argument. */
-  private def probedAndQuery(spark: SparkSession, root: String, gen: Int,
-                             queryVec: DataFrame, nprobe: Int)
-      : (Seq[Int], DataFrame) =
-    quantCache.get(centroidsPath(root, gen)) match {
-      case Some(qt) =>
-        val proj = queryVec.select(col("qvec"))
-        // bounded driver collect: 2 rows suffice to decide single-row-ness
-        // (the driver-side path only serves one-row query frames; more
-        // rows fall back to the distributed form untouched)
-        val rows = proj.limit(2).collect()
-        val dim = qt._2.value.headOption.map(_.length).getOrElse(-1)
-        if (rows.length == 1 && !rows(0).isNullAt(0) &&
-            rows(0).getSeq[Any](0).length == dim) {
-          val q = rows(0).getSeq[Any](0)
-            .map { case n: Number => n.doubleValue() }.toArray
-          (probedListsLocal(qt, q, nprobe),
-            localQueryDf(spark, rows, proj.schema))
-        } else
-          (probedListsDistributed(spark, root, queryVec, nprobe), queryVec)
-      case None =>
-        (probedListsDistributed(spark, root, queryVec, nprobe), queryVec)
-    }
+  /** Per-query probe lists over the PINNED centroids: per-(query ×
+    * chunk) top-nprobe struct arrays (sorted slice, (d2, list) tie
+    * order) merge per qid by flatten + re-sort + slice. With one chunk
+    * (the common case) the merge is a trivial ≤nprobe-row groupBy over
+    * the serving-sized query frame; with many it is what bounds the
+    * broadcast row (see [[ChunkLists]]). Returns (qid, qvec,
+    * probe_lists), checkpointed — every caller consumes it twice (list
+    * union + candidate join). */
+  private def probeLists(queries: DataFrame, centroids: DataFrame,
+                         nprobe: Int): DataFrame = {
+    val (packed, _) = packedChunks(centroids)
+    queries.select(col("qid"), col("qvec"))
+      .crossJoin(broadcast(packed))
+      .withColumn("_chunk_top",
+        slice(array_sort(transform(col("cents"),
+          c => struct(dist2(col("qvec"), c.getField("cvec")).as("d2"),
+            c.getField("list").as("list")))), 1, nprobe))
+      .groupBy(col("qid"))
+      .agg(first(col("qvec")).as("qvec"),
+        transform(slice(array_sort(flatten(collect_list(col("_chunk_top")))),
+          1, nprobe), s => s.getField("list")).as("probe_lists"))
+      .localCheckpoint(false)
+  }
 
-  /** Top-k by integer-grid cosine over the nprobe nearest lists: one
-    * tiny driver read picks the lists (nprobe ints — bounded), then ONLY
-    * the matching `seg/sNNNNN/list=K` directories open. The candidate
-    * scan is (nprobe/nlists) of the corpus; ranking is
-    * TakeOrderedAndProject (partition-local heaps + driver merge of k),
-    * never a single-partition window over the candidates. */
-  def probeTopK(spark: SparkSession, root: String, queryVec0: DataFrame,
-                k: Int, nprobe: Int): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = pointer(root, conf)
-    requireRerankable(spark, root, p, conf, "probeTopK")
-    val (probed, queryVec) =
-      probedAndQuery(spark, root, p.gen, queryVec0, nprobe)
-    val segs = readManifest(root, p.version, conf)
-    val dirs = probedDirs(conf, segs, probed)
-    val emb = embedded(spark, root, conf)
-    val fileSchema = segSchemas(spark, root, segs)._2
-    val cand0 =
+  /** List selection: (qid, qvec, probe_lists) per query, the union of
+    * the probed lists, and whether the frame is one row that took the
+    * driver-side path. A one-row frame picks its lists driver-side
+    * when this JVM holds the pinned quantizer ([[probedListsLocal]]; a
+    * 2-row bounded collect decides single-row-ness, and the collected
+    * row becomes a local relation). Everything else takes
+    * [[probeLists]] and one collect of the list union (bounded by
+    * nlists, not by query count). */
+  private def selectLists(spark: SparkSession, root: String, gen: Int,
+                          queries: DataFrame, nprobe: Int)
+      : (DataFrame, Seq[Int], Boolean) = {
+    val local = quantCache.get(centroidsPath(root, gen)).flatMap { _ =>
+      val quant = pinnedQuantizer(spark, root, gen)
+      val rows = queries.limit(2).collect()
+      val dim = quant._2.value.headOption.map(_.length).getOrElse(-1)
+      if (rows.length != 1 || rows(0).isNullAt(1) ||
+          rows(0).getSeq[Any](1).length != dim) None
+      else {
+        val q = rows(0).getSeq[Any](1)
+          .map { case n: Number => n.doubleValue() }.toArray
+        val lists = probedListsLocal(quant, q, nprobe)
+        Some((localQueryDf(spark, Seq(Row.fromSeq(rows(0).toSeq :+ lists)),
+          queries.schema.add("probe_lists", ArrayType(IntegerType))),
+          lists.sorted, true))
+      }
+    }
+    local.getOrElse {
+      val qLists = probeLists(queries, readCentroids(spark, root), nprobe)
+      (qLists, qLists.select(explode(col("probe_lists")).as("list"))
+        .distinct().collect().map(_.getInt(0)).toSeq.sorted, false)
+    }
+  }
+
+  /** The candidate scan: every posting of the probed `list=K`
+    * directories as (file columns, list, _seg_v), tombstones applied.
+    * Scorers select what they read, so parquet column pruning keeps an
+    * ADC pass off the raw vectors. No probed directory gives a typed
+    * empty local relation: every scorer's plan then runs unchanged and
+    * returns zero rows with exactly its non-empty columns and types. */
+  private def candidates(spark: SparkSession, segs: Seq[Seg],
+                         dirs: Seq[(String, Int, Int)],
+                         fileSchema: StructType): DataFrame = {
+    val scans =
       if (dirs.isEmpty)
-        // built only on the empty path — currentAll opens every live
-        // segment relation just to donate a schema (r17: was eager)
-        emb(currentAll(spark, root).filter(lit(false)))
-          .select(col("vec_id"), col("list"), col("embedding"))
-          .withColumn("_seg_v", lit(0))
+        Seq(localQueryDf(spark, Nil, fileSchema.add("list", IntegerType)
+          .add("_seg_v", IntegerType)))
       else dirs.map { case (d, l, v) =>
-        emb(spark.read.schema(fileSchema).parquet(d))
-          .withColumn("list", lit(l))
-          .withColumn("_seg_v", lit(v))
-          .select(col("vec_id"), col("list"), col("embedding"), col("_seg_v"))
-      }.reduce(_ unionByName _)
-    // _seg_v rides as the FINAL tie-break: an id live in two segments
-    // (re-insert without delete) has identical (cosine, vec_id) twice,
-    // and which posting survives the limit boundary must be
-    // deterministic for the replays-bit-for-bit contract
-    val cand = applyTombstones(cand0, tombstones(spark, segs))
-    // both operands normalize to double: SQ8 decodes to ARRAY<DOUBLE>
-    // while queries may arrive float, and the quantized dot requires
-    // matching element types (float→double is exact — grid unchanged)
-    val topk = cand.crossJoin(broadcast(queryVec))
-      .withColumn("cosine",
-        Similarity.cosineQuantized(col("embedding").cast("array<double>"),
-          col("qvec").cast("array<double>")))
-      .orderBy(col("cosine").desc, col("vec_id"), col("_seg_v"))
-      .limit(k)
-    import org.apache.spark.sql.expressions.Window
-    topk.withColumn("rank", row_number().over(
-        Window.orderBy(col("cosine").desc, col("vec_id"), col("_seg_v"))))
-      .select(col("rank"), col("vec_id"), col("list"), col("cosine"))
+        spark.read.schema(fileSchema).parquet(d)
+          .withColumn("list", lit(l)).withColumn("_seg_v", lit(v))
+      }
+    applyTombstones(scans.reduce(_ unionByName _), tombstones(spark, segs))
   }
 
   /** Loud reject for operations that need (a reconstruction of) the
@@ -1052,18 +1041,12 @@ object IvfIndex extends Ledger.Manifests {
     * (SQ8 serves the decoded int64-grid reconstruction); PQ codes alone
     * do not — there is nothing to re-rank or re-assign against. */
   private def requireRerankable(spark: SparkSession, root: String,
-                                p: Pointer, conf: Configuration,
-                                op: String): Unit = {
-    val fields = segSchemaCache.getOrElseUpdate(s"$root/#segschema", {
-      val head = readManifest(root, p.version, conf)
-        .filterNot(_.tombstone).head.dir
-      spark.read.parquet(head).schema
-    }).fieldNames
+                                segs: => Seq[Seg], op: String): Unit = {
+    val fields = segSchemas(spark, root, segs)._1.fieldNames
     require(fields.contains("embedding") || fields.contains("sq_code"),
       s"IVF index at $root is code-only (no raw or SQ8 vectors stored) — " +
-        s"$op needs them; serve with probeTopKAdc/probeTopKBatchAdc" +
-        "(rerank = 0) (ADC-only), or re-init from the source corpus with " +
-        "storeRaw = true or sq8 = true")
+        s"$op needs them; serve with the scorer Adc(0) (ADC-only), or " +
+        "re-init from the source corpus with storeRaw = true or sq8 = true")
   }
 
   /** df → df with an `embedding` column: the raw one when stored, else
@@ -1082,24 +1065,69 @@ object IvfIndex extends Ledger.Manifests {
       }
   }
 
-  /** ADC probe over PQ codes with exact top-`rerank` re-rank — the
-    * IVFADC + refine serving shape (Jégou et al. PAMI 2011; the
-    * layout FAISS ships as IndexIVFPQ + refine): PASS 1 scans ONLY
-    * (vec_id, pq_code) of the probed `list=K` directories — parquet
-    * column pruning keeps raw embeddings out of the ADC I/O, the ~32×
-    * posting-read cut that makes PQ the 100-TB layout — and ranks by
-    * the exact int64 micro-unit ADC table (driver-computed from the
-    * single query vector: m·k longs, one lookup-sum per candidate, no
-    * per-row float math). The top `rerank` (adc_u asc, vec_id asc)
-    * candidates collect driver-side (bounded by `rerank`); PASS 2
-    * re-opens the probed directories for JUST those postings' raw
-    * vectors (id IN-filter → footer/rowgroup pruning; matched on
-    * (vec_id, segment) so an id re-inserted across segments re-ranks
-    * the posting ADC chose) and ranks the final top-k by integer-grid
-    * cosine. Deterministic end to end — codes, table, both rankings
-    * are exact integer arithmetic, so an external engine replays the
-    * whole probe bit-for-bit; `rerank` bounds the recall/IO trade
-    * like FAISS's k_factor.
+  /** How a probe ranks its candidates. */
+  sealed trait Scorer
+  /** Integer-grid cosine ([[Similarity.cosineQuantized]]) over the raw
+    * vectors, or the SQ8 reconstruction on an SQ8 index. */
+  case object Cosine extends Scorer
+  /** IVFADC over the PQ codes; the top `rerank` per query re-rank by
+    * integer-grid cosine, and `rerank = 0` serves ADC-only. */
+  final case class Adc(rerank: Int) extends Scorer
+
+  /** Per-qid top-`n` by `score`, then (vec_id, _seg_v): `_seg_v` is the
+    * final tie-break, because an id live in two segments (re-insert
+    * without delete) ties on (score, vec_id), and which posting
+    * survives the cut must be deterministic for the replays-bit-for-bit
+    * contract. Spark plans the `rank <= n` filter as a partial
+    * WindowGroupLimit, so only ≤n rows per query and partition shuffle.
+    * A one-row frame (`one`) ranks with `orderBy.limit` instead:
+    * TakeOrderedAndProject keeps its shuffle inside one job, where the
+    * window's hash exchange costs adaptive execution a job of its own
+    * (3 jobs per single probe against 2). */
+  private def ranked(scored: DataFrame, n: Int, score: Column,
+                     one: Boolean): DataFrame = {
+    val order = Seq(score, col("vec_id"), col("_seg_v"))
+    if (one)
+      scored.orderBy(order: _*).limit(n)
+        .withColumn("rank", row_number().over(Window.orderBy(order: _*)))
+    else
+      scored.withColumn("rank",
+          row_number().over(Window.partitionBy(col("qid")).orderBy(order: _*)))
+        .filter(col("rank") <= n)
+  }
+
+  private def withCosine(df: DataFrame): DataFrame =
+    // both operands normalize to double: SQ8 decodes to ARRAY<DOUBLE>
+    // while queries may arrive float (float→double is exact)
+    df.withColumn("cosine",
+      Similarity.cosineQuantized(col("embedding").cast("array<double>"),
+        col("qvec").cast("array<double>")))
+
+  /** Per-query top-k for a (qid, qvec) query frame over the nprobe
+    * nearest lists — the one probe; [[probeTopK]] is a batch of one.
+    * Only the union of the probed `seg/sNNNNN/list=K` directories opens,
+    * so the candidate scan is ~(nprobe/nlists) of the corpus; candidates
+    * join the broadcast queries on list membership and rank per qid.
+    * Queries are broadcast, so the batch should be serving-sized
+    * (≲10^5); corpus-scale "queries" are a self-join, not a probe.
+    *
+    * Output (qid, rank, vec_id, list, then per scorer):
+    *   - [[Cosine]]: `cosine`;
+    *   - `Adc(0)`: `adc_u`, the exact int64 micro-unit² ADC distance;
+    *   - `Adc(rerank)`: `adc_u, cosine`.
+    *
+    * [[Adc]] is the IVFADC + refine serving shape (Jégou et al. PAMI
+    * 2011; FAISS ships it as IndexIVFPQ + refine). Its first pass scans
+    * ONLY (vec_id, pq_code) of the probed directories, the ~32×
+    * posting-read cut that makes PQ the 100-TB layout. Each query's
+    * m × k ADC table computes columnar once, so a candidate costs m
+    * table lookups. The top `rerank` per query (adc_u asc) then join
+    * one raw (or SQ8-decoded) read of the probed directories on
+    * (vec_id, _seg_v) — an id re-inserted across segments re-ranks the
+    * posting ADC chose — and rank by integer-grid cosine. Codes, tables
+    * and both rankings are exact integer arithmetic, so an external
+    * engine replays the probe bit-for-bit; `rerank` bounds the
+    * recall/IO trade like FAISS's k_factor.
     *
     * Metric note: the ADC pool is L2-ranked (codes quantize raw
     * coordinates) while the refine pass ranks by cosine — the standard
@@ -1107,316 +1135,74 @@ object IvfIndex extends Ledger.Manifests {
     * `rerank` grows and is a faithful shortcut when vectors are
     * near-constant-norm (normalized embeddings, the common case; L2
     * order ≡ cosine order there). For wildly varying norms, size
-    * `rerank` generously or probe raw ([[probeTopK]]) —
-    * ScaleRehearsalR16b measures the recall-vs-rerank curve.
-    *
-    * `rerank = 0` serves ADC-ONLY — no refine pass, output
-    * (rank, vec_id, list, adc_u) ranked by the exact code-table L2
-    * order — the serving mode of a CODE-ONLY index (storeRaw = false),
-    * and valid on a raw index too when refine I/O isn't worth it. */
-  def probeTopKAdc(spark: SparkSession, root: String, queryVec0: DataFrame,
-                   k: Int, nprobe: Int, rerank: Int): DataFrame = {
-    require(rerank == 0 || rerank >= k,
-      s"rerank=$rerank must be >= k=$k, or 0 for ADC-only serving")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = pointer(root, conf)
-    val cb = readCodebook(spark, root, conf).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index at $root stores raw postings only — init with pqM > 0"))
-    val m = cb.length; val kCw = cb(0).length; val sub = cb(0)(0).length
-    val qProj = queryVec0.select(col("qvec"))
-    val qRows = qProj.collect()
-    require(qRows.length == 1, s"queryVec must be exactly one row")
-    // the collected row doubles as the re-rank pass's broadcast side —
-    // a LOCAL single-row relation instead of re-executing the caller's
-    // query plan once more (r17; values ride unchanged)
-    val queryVec = localQueryDf(spark, qRows, qProj.schema)
-    val qd = qRows(0).getSeq[Any](0).map {
-      case n: Number => n.doubleValue()
-    }.toArray
-    val vq = qd.map(x => math.floor(x * 1e6 + 0.5).toLong)
-    require(vq.length == m * sub,
-      s"query dim ${vq.length} != codebook dim ${m * sub}")
-    // exact micro-unit² ADC table: table(s)(j) = ||q_s - c_{j,s}||²
-    val table: Seq[Seq[Long]] = (0 until m).map { s =>
-      (0 until kCw).map { j =>
-        var d = 0L; var i = 0
-        while (i < sub) {
-          val diff = vq(s * sub + i) - cb(s)(j)(i); d += diff * diff; i += 1
-        }
-        d
-      }
-    }
-    // probe lists off the cached quantizer when this JVM holds it (the
-    // query row is ALREADY collected here, so the driver-side form costs
-    // zero extra jobs); distributed otherwise — see probedListsLocal
-    val probed = quantCache.get(centroidsPath(root, p.gen)) match {
-      case Some(qt)
-          if qt._2.value.headOption.exists(_.length == qd.length) =>
-        probedListsLocal(qt, qd, nprobe)
-      case _ => probedListsDistributed(spark, root, queryVec, nprobe)
-    }
-    val segs = readManifest(root, p.version, conf)
-    val dirs = probedDirs(conf, segs, probed)
-    import spark.implicits._
-    if (dirs.isEmpty) {
-      if (rerank == 0)
-        return Seq.empty[(Int, Long, Int, Long)]
-          .toDF("rank", "vec_id", "list", "adc_u")
-      return Seq.empty[(Int, Long, Int, Long, Long)]
-        .toDF("rank", "vec_id", "list", "adc_u", "cosine")
-        .select(col("rank"), col("vec_id"), col("list"), col("adc_u"),
-          col("cosine").cast("double"))
-    }
-    if (rerank > 0) requireRerankable(spark, root, p, conf,
-      s"the exact re-rank pass (rerank=$rerank)")
-    // PASS 1: codes only — the scan never touches the embedding column.
-    // _seg_v is the final tie-break everywhere a (adc_u, vec_id) tie
-    // could cross the rerank/k boundary (an id live in two segments).
-    val fileSchema = segSchemas(spark, root, segs)._2
-    val codeCand0 = dirs.map { case (d, l, v) =>
-      spark.read.schema(fileSchema).parquet(d)
-        .select(col("vec_id"), lit(l).as("list"), col("pq_code"),
-          lit(v).as("_seg_v"))
-    }.reduce(_ unionByName _)
-    val codeCand = applyTombstones(codeCand0, tombstones(spark, segs))
-    val scored = codeCand
-      .withColumn("adc_u", aggregate(
-        zip_with(typedLit(table), col("pq_code"),
-          (row, c) => element_at(row, c + 1)),
-        lit(0L), (acc, v) => acc + v))
-    if (rerank == 0) {
-      // ADC-only: rank the code order directly, no raw I/O at all
-      import org.apache.spark.sql.expressions.Window
-      return scored
-        .orderBy(col("adc_u"), col("vec_id"), col("_seg_v"))
-        .limit(k)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("adc_u"), col("vec_id"), col("_seg_v"))))
-        .select(col("rank"), col("vec_id"), col("list"), col("adc_u"))
-    }
-    val topR = scored
-      .orderBy(col("adc_u"), col("vec_id"), col("_seg_v"))
-      .limit(rerank)
-      .select(col("vec_id"), col("list"), col("_seg_v"), col("adc_u"))
-      .collect() // bounded by `rerank` — the refine candidate set
-    val picked = topR.toSeq
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-      .toDF("vec_id", "list", "_seg_v", "adc_u")
-    val ids = topR.map(_.getLong(0)).distinct.toSeq
-    // PASS 2: raw (or SQ8-decoded) vectors of just the survivors
-    val emb = embedded(spark, root, conf)
-    val raw0 = dirs.map { case (d, _, v) =>
-      emb(spark.read.schema(fileSchema).parquet(d))
-        .select(col("vec_id"), col("embedding"), lit(v).as("_seg_v"))
-    }.reduce(_ unionByName _)
-    // a literal IN list pushes to the scan (footer/rowgroup pruning) —
-    // but only while it is list-sized; past that the predicate itself
-    // bloats the plan, and the broadcast join already confines the work
-    val raw = (if (ids.size <= 1024)
-                 raw0.filter(col("vec_id").isin(ids: _*))
-               else raw0)
-      .join(broadcast(picked), Seq("vec_id", "_seg_v"))
-    import org.apache.spark.sql.expressions.Window
-    val topk = raw.crossJoin(broadcast(queryVec))
-      .withColumn("cosine",
-        Similarity.cosineQuantized(col("embedding").cast("array<double>"),
-          col("qvec").cast("array<double>")))
-      .orderBy(col("cosine").desc, col("vec_id"), col("_seg_v"))
-      .limit(k)
-    topk.withColumn("rank", row_number().over(
-        Window.orderBy(col("cosine").desc, col("vec_id"), col("_seg_v"))))
-      .select(col("rank"), col("vec_id"), col("list"), col("adc_u"),
-        col("cosine"))
-  }
-
-  /** Per-query probe lists over the PINNED centroids — the ONE
-    * implementation both batch probes (raw and ADC) share, so their
-    * oracle-pinned tie and merge semantics cannot drift apart:
-    * per-(query × chunk) top-nprobe struct arrays (sorted slice — the
-    * same (d2, list) tie order as [[probeTopK]]) merge per qid by
-    * flatten + re-sort + slice. With one chunk (the common case) the
-    * merge is a trivial ≤nprobe-row groupBy over the serving-sized
-    * query frame; with many it is what bounds the broadcast row (see
-    * [[ChunkLists]]). Returns (qid, qvec, probe_lists), checkpointed —
-    * every caller consumes it twice (list union + candidate join). */
-  private def probeLists(queries: DataFrame, centroids: DataFrame,
-                         nprobe: Int): DataFrame = {
-    val (packed, _) = packedChunks(centroids)
-    queries.select(col("qid"), col("qvec"))
-      .crossJoin(broadcast(packed))
-      .withColumn("_chunk_top",
-        slice(array_sort(transform(col("cents"),
-          c => struct(dist2(col("qvec"), c.getField("cvec")).as("d2"),
-            c.getField("list").as("list")))), 1, nprobe))
-      .groupBy(col("qid"))
-      .agg(first(col("qvec")).as("qvec"),
-        transform(slice(array_sort(flatten(collect_list(col("_chunk_top")))),
-          1, nprobe), s => s.getField("list")).as("probe_lists"))
-      .localCheckpoint(false)
-  }
-
-  /** BATCHED probes — the serving shape: per-query top-k for a whole
-    * query frame (qid, qvec) in ONE pass, never a per-query driver
-    * loop. Each query's nprobe nearest lists compute COLUMNAR (sort the
-    * (d2, list) struct array, slice nprobe — same tie order as
-    * [[probeTopK]]); only the UNION of needed list directories opens
-    * (one driver collect bounded by nlists, not by query count);
-    * candidates join the broadcast queries on list membership and rank
-    * per qid through a PARTITIONED window — executor state is one
-    * query's candidate stream, however many queries ride the batch.
-    * Queries are broadcast, so the batch should be serving-sized
-    * (≲10^5); corpus-scale "queries" are a self-join, not a probe. */
+    * `rerank` generously or probe with [[Cosine]]; PLANS.md item 102
+    * records the recall-vs-rerank curve. */
   def probeTopKBatch(spark: SparkSession, root: String, queries: DataFrame,
-                     k: Int, nprobe: Int): DataFrame = {
+                     k: Int, nprobe: Int, scorer: Scorer = Cosine): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = pointer(root, conf)
-    requireRerankable(spark, root, p, conf, "probeTopKBatch")
-    val qLists = probeLists(queries, readCentroids(spark, root), nprobe)
-    val needed = qLists.select(explode(col("probe_lists")).as("list"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted // bounded by nlists
     val segs = readManifest(root, p.version, conf)
-    val dirs = probedDirs(conf, segs, needed)
+    val codebook = scorer match {
+      case Adc(rerank) =>
+        require(rerank == 0 || rerank >= k,
+          s"rerank=$rerank must be >= k=$k, or 0 for ADC-only serving")
+        Some(readCodebook(spark, root, conf).getOrElse(
+          throw new IllegalStateException(
+            s"IVF index at $root stores raw postings only — init with pqM > 0")))
+      case Cosine => None
+    }
+    if (scorer != Adc(0)) requireRerankable(spark, root, segs, s"the $scorer probe")
+    val (qLists, probed, one) = selectLists(spark, root, p.gen,
+      queries.select(col("qid"), col("qvec")), nprobe)
+    val cand = candidates(spark, segs, probedDirs(conf, segs, probed),
+      segSchemas(spark, root, segs)._2)
     val emb = embedded(spark, root, conf)
-    val cand0 =
-      if (dirs.isEmpty)
-        // built only on the empty path — currentAll opens every live
-        // segment relation just to donate a schema (r17: was eager)
-        emb(currentAll(spark, root).filter(lit(false)))
-          .withColumn("_seg_v", lit(0))
-      else {
-        val fileSchema = segSchemas(spark, root, segs)._2
-        dirs.map { case (d, l, v) =>
-          emb(spark.read.schema(fileSchema).parquet(d))
-            .withColumn("list", lit(l))
-            .withColumn("_seg_v", lit(v))
-            .select(col("vec_id"), col("list"), col("embedding"),
-              col("_seg_v"))
-        }.reduce(_ unionByName _)
-      }
-    val cand = applyTombstones(cand0, tombstones(spark, segs))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("vec_id"), col("_seg_v"))
-    cand.join(broadcast(qLists),
-        array_contains(qLists("probe_lists"), cand("list")))
-      .withColumn("cosine",
-        Similarity.cosineQuantized(col("embedding").cast("array<double>"),
-          col("qvec").cast("array<double>")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"), col("list"),
-        col("cosine"))
+    def joined(c: DataFrame, q: DataFrame) =
+      c.join(broadcast(q), array_contains(col("probe_lists"), col("list")))
+    val out = Seq(col("qid"), col("rank"), col("vec_id"), col("list"))
+    scorer match {
+      case Adc(rerank) =>
+        val cb = codebook.get
+        val m = cb.length; val kCw = cb(0).length; val sub = cb(0)(0).length
+        val cbLit = typedLit(cb.map(_.map(_.toSeq).toSeq).toSeq)
+        // table(s)(j) = ||q_s - c_{j,s}||² on the micro-unit grid
+        val tables = qLists
+          .withColumn("_vq", transform(col("qvec"),
+            x => floor(x.cast("double") * 1e6 + lit(0.5))))
+          .withColumn("adc_tab",
+            transform(sequence(lit(0), lit(m - 1)), s =>
+              transform(sequence(lit(0), lit(kCw - 1)), j =>
+                aggregate(zip_with(
+                  slice(col("_vq"), s * sub + 1, lit(sub)),
+                  element_at(element_at(cbLit, s + 1), j + 1),
+                  (a, b) => (a - b) * (a - b)), lit(0L), (acc, v) => acc + v))))
+          .drop("_vq")
+        val adc = joined(cand.select("vec_id", "list", "pq_code", "_seg_v"), tables)
+          .withColumn("adc_u", aggregate(
+            zip_with(col("adc_tab"), col("pq_code"),
+              (row, c) => element_at(row, c + 1)),
+            lit(0L), (acc, v) => acc + v))
+        if (rerank == 0)
+          ranked(adc, k, col("adc_u"), one).select(out :+ col("adc_u"): _*)
+        else {
+          val survivors = ranked(adc, rerank, col("adc_u"), one)
+            .select("qid", "qvec", "vec_id", "list", "_seg_v", "adc_u")
+          val refined = emb(cand).select("vec_id", "embedding", "_seg_v")
+            .join(survivors, Seq("vec_id", "_seg_v"))
+          ranked(withCosine(refined), k, col("cosine").desc, one)
+            .select(out :+ col("adc_u") :+ col("cosine"): _*)
+        }
+      case Cosine =>
+        ranked(withCosine(joined(emb(cand), qLists)), k, col("cosine").desc, one)
+          .select(out :+ col("cosine"): _*)
+    }
   }
 
-  /** BATCHED ADC probes — [[probeTopKBatch]]'s PQ twin and the serving
-    * shape at PQ scale: per-query ADC lookup TABLES compute COLUMNAR
-    * over the broadcast query frame (O(nq·m·k·sub) integer work ONCE,
-    * against the codebook literal — never per candidate), the
-    * code-only candidate scan joins the broadcast queries on
-    * probe-list membership and scores each (candidate, query) pair
-    * with m table lookups (no per-pair O(dim) float math), per-qid
-    * top-`rerank` ADC survivors select through a PARTITIONED window,
-    * and ONE raw-vector pass over the probed directories re-ranks
-    * every query's survivors exactly (equi-join on (vec_id, _seg_v) —
-    * no driver collect, so the refine set scales with nq × rerank
-    * where the single-query form's id IN-filter would not). The raw
-    * pass reads (vec_id, embedding) of the probed dirs once —
-    * ~nprobe/nlists of the corpus — amortized across the whole query
-    * batch; a single query wanting footer-level id pruning should use
-    * [[probeTopKAdc]]. Same exact integer arithmetic end to end.
-    * `rerank = 0` serves ADC-ONLY (no refine pass, no raw I/O; output
-    * (qid, rank, vec_id, list, adc_u)) — the code-only index's batch
-    * serving mode. */
-  def probeTopKBatchAdc(spark: SparkSession, root: String,
-                        queries: DataFrame, k: Int, nprobe: Int,
-                        rerank: Int): DataFrame = {
-    require(rerank == 0 || rerank >= k,
-      s"rerank=$rerank must be >= k=$k, or 0 for ADC-only serving")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = pointer(root, conf)
-    val cb = readCodebook(spark, root, conf).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index at $root stores raw postings only — init with pqM > 0"))
-    val m = cb.length; val kCw = cb(0).length; val sub = cb(0)(0).length
-    val cbLit = typedLit(cb.map(_.map(_.toSeq).toSeq).toSeq)
-    // adc_tab stacks on the shared checkpointed probe-list frame: the
-    // list-union consumer prunes it away; the candidate join computes
-    // it once per qid (nq × m × k ints)
-    val qLists = probeLists(queries, readCentroids(spark, root), nprobe)
-      .withColumn("_vq", transform(col("qvec"),
-        x => floor(x.cast("double") * 1e6 + lit(0.5))))
-      .withColumn("adc_tab",
-        transform(sequence(lit(0), lit(m - 1)), s =>
-          transform(sequence(lit(0), lit(kCw - 1)), j =>
-            aggregate(zip_with(
-              slice(col("_vq"), s * sub + 1, lit(sub)),
-              element_at(element_at(cbLit, s + 1), j + 1),
-              (a, b) => (a - b) * (a - b)), lit(0L), (acc, v) => acc + v))))
-      .drop("_vq")
-    val needed = qLists.select(explode(col("probe_lists")).as("list"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted // bounded by nlists
-    val segs = readManifest(root, p.version, conf)
-    val dirs = probedDirs(conf, segs, needed)
-    import spark.implicits._
-    if (dirs.isEmpty) {
-      if (rerank == 0)
-        return Seq.empty[(Long, Int, Long, Int, Long)]
-          .toDF("qid", "rank", "vec_id", "list", "adc_u")
-      return Seq.empty[(Long, Int, Long, Int, Long, Long)]
-        .toDF("qid", "rank", "vec_id", "list", "adc_u", "cosine")
-        .select(col("qid"), col("rank"), col("vec_id"), col("list"),
-          col("adc_u"), col("cosine").cast("double"))
-    }
-    if (rerank > 0) requireRerankable(spark, root, p, conf,
-      s"the exact re-rank pass (rerank=$rerank)")
-    val tombs = tombstones(spark, segs)
-    val fileSchema = segSchemas(spark, root, segs)._2
-    // PASS 1: codes only (_seg_v final tie-break — see probeTopKAdc)
-    val codeCand = applyTombstones(
-      dirs.map { case (d, l, v) =>
-        spark.read.schema(fileSchema).parquet(d)
-          .select(col("vec_id"), lit(l).as("list"), col("pq_code"),
-            lit(v).as("_seg_v"))
-      }.reduce(_ unionByName _), tombs)
-    import org.apache.spark.sql.expressions.Window
-    val wAdc = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_u"), col("vec_id"), col("_seg_v"))
-    val adcScored = codeCand
-      .join(broadcast(qLists),
-        array_contains(qLists("probe_lists"), codeCand("list")))
-      .withColumn("adc_u", aggregate(
-        zip_with(col("adc_tab"), col("pq_code"),
-          (row, c) => element_at(row, c + 1)),
-        lit(0L), (acc, v) => acc + v))
-      .withColumn("_r", row_number().over(wAdc))
-    if (rerank == 0)
-      // ADC-only: the window rank IS the final rank, no raw pass
-      return adcScored.filter(col("_r") <= k)
-        .select(col("qid"), col("_r").as("rank"), col("vec_id"),
-          col("list"), col("adc_u"))
-    val surv = adcScored
-      .filter(col("_r") <= rerank)
-      .select(col("qid"), col("qvec"), col("vec_id"), col("list"),
-        col("_seg_v"), col("adc_u"))
-    // PASS 2: one raw (or SQ8-decoded) read of the probed dirs,
-    // survivors re-rank against the stored tier's best reconstruction
-    val emb = embedded(spark, root, conf)
-    val raw = dirs.map { case (d, _, v) =>
-      emb(spark.read.schema(fileSchema).parquet(d))
-        .select(col("vec_id"), col("embedding"), lit(v).as("_seg_v"))
-    }.reduce(_ unionByName _)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("vec_id"), col("_seg_v"))
-    raw.join(surv, Seq("vec_id", "_seg_v"))
-      .withColumn("cosine",
-        Similarity.cosineQuantized(col("embedding").cast("array<double>"),
-          col("qvec").cast("array<double>")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"), col("list"),
-        col("adc_u"), col("cosine"))
-  }
+  /** [[probeTopKBatch]] for a one-row `qvec` frame, without the qid. */
+  def probeTopK(spark: SparkSession, root: String, queryVec: DataFrame,
+                k: Int, nprobe: Int, scorer: Scorer = Cosine): DataFrame =
+    probeTopKBatch(spark, root, queryVec.select(lit(0L).as("qid"), col("qvec")),
+      k, nprobe, scorer).drop("qid")
 
   /** Merge every live segment into ONE (probe cost is linear in segment
     * count; this amortizes it) — a maintenance version: lastBatch
@@ -1497,7 +1283,8 @@ object IvfIndex extends Ledger.Manifests {
               pqTrainIters: Int = 0, retain: Int = 2): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = pointer(root, conf)
-    requireRerankable(spark, root, p, conf, "rebuild (re-assignment)")
+    requireRerankable(spark, root, readManifest(root, p.version, conf),
+      "rebuild (re-assignment)")
     val liveAll = currentAll(spark, root)
     val sq8 = liveAll.columns.contains("sq_code")
     require(!sq8 || pqTrainIters == 0,
@@ -1558,7 +1345,8 @@ object IvfIndex extends Ledger.Manifests {
                     pqTrainIters: Int = 0, retain: Int = 2): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = pointer(root, conf)
-    requireRerankable(spark, root, p, conf, "rebuild (re-clustering)")
+    requireRerankable(spark, root, readManifest(root, p.version, conf),
+      "rebuild (re-clustering)")
     // duplicate vec_ids (re-insert without delete) count ONCE toward
     // the clustering — rebuild() itself still re-assigns every posting.
     // On an SQ8 index the clustering runs over the decoded
@@ -1634,8 +1422,8 @@ object IvfIndex extends Ledger.Manifests {
 
   /** Test hook: drop every cached artifact under `root` WITHOUT touching
     * files — simulates a fresh (probe-only) JVM, so specs can pin the
-    * cold distributed probe path bit-identical to the warm driver-side
-    * one (see [[probedListsLocal]]). */
+    * cold distributed list selection bit-identical to the warm
+    * driver-side one (see [[probedListsLocal]]). */
   private[graft] def dropCachesForTest(root: String): Unit =
     invalidateQuantizers(root)
 

@@ -1142,8 +1142,8 @@ class StreamingSpec extends AnyFunSuite {
     // ADC + exact re-rank == brute-force cosine top-k over the probed
     // list (rerank covers the whole list here, so refine is exact)
     val q = Seq(Tuple1(vec(0))).toDF("qvec")
-    val top = IvfIndex.probeTopKAdc(spark, root, q, k = 5, nprobe = 1,
-      rerank = 200)
+    val top = IvfIndex.probeTopK(spark, root, q, k = 5, nprobe = 1,
+      IvfIndex.Adc(200))
     val brute = IvfIndex.currentAll(spark, root)
       .filter(col("list") === 0).crossJoin(q)
       .withColumn("cosine",
@@ -1161,11 +1161,11 @@ class StreamingSpec extends AnyFunSuite {
     // batched ADC probes == single ADC probes per qid (columnar tables,
     // one raw re-rank pass)
     val qB = Seq((0L, vec(0)), (1L, vec(1))).toDF("qid", "qvec")
-    val batchedAdc = IvfIndex.probeTopKBatchAdc(spark, root, qB,
-      k = 5, nprobe = 1, rerank = 200)
+    val batchedAdc = IvfIndex.probeTopKBatch(spark, root, qB,
+      k = 5, nprobe = 1, IvfIndex.Adc(200))
     for ((qid, qv) <- Seq((0L, vec(0)), (1L, vec(1)))) {
-      val single = IvfIndex.probeTopKAdc(spark, root,
-          Seq(Tuple1(qv)).toDF("qvec"), k = 5, nprobe = 1, rerank = 200)
+      val single = IvfIndex.probeTopK(spark, root,
+          Seq(Tuple1(qv)).toDF("qvec"), k = 5, nprobe = 1, IvfIndex.Adc(200))
         .orderBy("rank").select("vec_id", "adc_u").as[(Long, Long)]
         .collect().toSeq
       val b = batchedAdc.filter(col("qid") === qid).orderBy("rank")
@@ -1177,14 +1177,14 @@ class StreamingSpec extends AnyFunSuite {
     val top1 = top.orderBy("rank").select("vec_id").as[Long].head()
     IvfIndex.applyDeleteBatch(Seq(top1).toDF("vec_id"), "vec_id", root,
       1L, retain = 10)
-    val afterDel = IvfIndex.probeTopKAdc(spark, root, q, k = 5,
-        nprobe = 1, rerank = 200)
+    val afterDel = IvfIndex.probeTopK(spark, root, q, k = 5,
+        nprobe = 1, IvfIndex.Adc(200))
       .select("vec_id").as[Long].collect().toSeq
     assert(!afterDel.contains(top1), s"tombstoned $top1 still probed")
     IvfIndex.applyBatch(frame(Seq(top1.toInt)), "vec_id", "embedding",
       root, 2L, retain = 10)
-    val afterRe = IvfIndex.probeTopKAdc(spark, root, q, k = 5,
-        nprobe = 1, rerank = 200)
+    val afterRe = IvfIndex.probeTopK(spark, root, q, k = 5,
+        nprobe = 1, IvfIndex.Adc(200))
       .select("vec_id").as[Long].collect().toSeq
     assert(afterRe.contains(top1), "re-inserted id absent from ADC probe")
     // compaction carries codes through (schema guard keeps accepting)
@@ -1454,16 +1454,16 @@ class StreamingSpec extends AnyFunSuite {
     // ADC-only serving == the raw twin's ADC pass (same codes, same
     // table, same (adc_u, vec_id) order)
     val q = frame(Seq(0)).select(col("embedding").as("qvec"))
-    val adcCo = IvfIndex.probeTopKAdc(spark, co, q, k = 5, nprobe = 2,
-      rerank = 0).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(3)))
-    val adcRaw = IvfIndex.probeTopKAdc(spark, raw, q, k = 5, nprobe = 2,
-      rerank = 0).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(3)))
+    val adcCo = IvfIndex.probeTopK(spark, co, q, k = 5, nprobe = 2,
+      IvfIndex.Adc(0)).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(3)))
+    val adcRaw = IvfIndex.probeTopK(spark, raw, q, k = 5, nprobe = 2,
+      IvfIndex.Adc(0)).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(3)))
     assert(adcCo.toSeq == adcRaw.toSeq)
     assert(adcCo.length == 5)
     val qs = frame(Seq(0, 7)).select(col("vec_id").as("qid"),
       col("embedding").as("qvec"))
-    val b = IvfIndex.probeTopKBatchAdc(spark, co, qs, k = 3, nprobe = 2,
-      rerank = 0)
+    val b = IvfIndex.probeTopKBatch(spark, co, qs, k = 3, nprobe = 2,
+      IvfIndex.Adc(0))
     assert(b.columns.toSeq == Seq("qid", "rank", "vec_id", "list", "adc_u"))
     assert(b.count() == 6)
     // every raw-needing op rejects loudly, naming the remedy
@@ -1473,9 +1473,9 @@ class StreamingSpec extends AnyFunSuite {
     }
     loud(IvfIndex.probeTopK(spark, co, q, k = 5, nprobe = 2))
     loud(IvfIndex.probeTopKBatch(spark, co, qs, k = 5, nprobe = 2))
-    loud(IvfIndex.probeTopKAdc(spark, co, q, k = 5, nprobe = 2, rerank = 10))
-    loud(IvfIndex.probeTopKBatchAdc(spark, co, qs, k = 3, nprobe = 2,
-      rerank = 10))
+    loud(IvfIndex.probeTopK(spark, co, q, k = 5, nprobe = 2, IvfIndex.Adc(10)))
+    loud(IvfIndex.probeTopKBatch(spark, co, qs, k = 3, nprobe = 2,
+      IvfIndex.Adc(10)))
     loud(IvfIndex.rebuild(spark, co, centroids))
     // compaction works on code-only segments (schema-driven merge)
     assert(IvfIndex.compact(spark, co, retain = 10) == 1)
@@ -1603,14 +1603,14 @@ class StreamingSpec extends AnyFunSuite {
     // ADC pass identical to the raw twin (PQ codes encode from RAW at
     // ingest on both tiers)
     val q = frame(Seq(0)).select(col("embedding").as("qvec"))
-    val a1 = IvfIndex.probeTopKAdc(spark, sq, q, k = 5, nprobe = 2,
-      rerank = 0).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(3)))
-    val a2 = IvfIndex.probeTopKAdc(spark, raw, q, k = 5, nprobe = 2,
-      rerank = 0).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(3)))
+    val a1 = IvfIndex.probeTopK(spark, sq, q, k = 5, nprobe = 2,
+      IvfIndex.Adc(0)).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(3)))
+    val a2 = IvfIndex.probeTopK(spark, raw, q, k = 5, nprobe = 2,
+      IvfIndex.Adc(0)).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(3)))
     assert(a1.toSeq == a2.toSeq, "SQ8 ADC pass diverged from raw twin")
     // decoded re-rank == a manual decode + integer-grid cosine top-5
-    val got = IvfIndex.probeTopKAdc(spark, sq, q, k = 5, nprobe = 2,
-      rerank = 50).collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    val got = IvfIndex.probeTopK(spark, sq, q, k = 5, nprobe = 2,
+      IvfIndex.Adc(50)).collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
     val pr = IvfIndex.probeTopK(spark, sq, q, k = 5, nprobe = 2)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
     val manual = IvfIndex.currentAll(spark, sq)
@@ -1684,7 +1684,7 @@ class StreamingSpec extends AnyFunSuite {
     def runAll(): (Seq[String], Seq[String], Seq[String]) = (
       IvfIndex.probeTopK(spark, root, q, k = 5, nprobe = 2)
         .collect().map(_.toString).toSeq,
-      IvfIndex.probeTopKAdc(spark, root, q, k = 5, nprobe = 2, rerank = 10)
+      IvfIndex.probeTopK(spark, root, q, k = 5, nprobe = 2, IvfIndex.Adc(10))
         .collect().map(_.toString).toSeq,
       IvfIndex.probeTopKBatch(spark, root,
           frame(Seq(7, 11)).select(col("vec_id").as("qid"),
@@ -1716,10 +1716,10 @@ class StreamingSpec extends AnyFunSuite {
       pqM = 4, pqK = 8)
     IvfIndex.applyBatch(frame(60 until 120), "vec_id", "embedding", twin, 0L,
       retain = 10)
-    val pr = IvfIndex.probeTopKAdc(spark, root, q, k = 5, nprobe = 2,
-      rerank = 10).collect().map(_.toString).toSeq
-    val pt = IvfIndex.probeTopKAdc(spark, twin, q, k = 5, nprobe = 2,
-      rerank = 10).collect().map(_.toString).toSeq
+    val pr = IvfIndex.probeTopK(spark, root, q, k = 5, nprobe = 2,
+      IvfIndex.Adc(10)).collect().map(_.toString).toSeq
+    val pt = IvfIndex.probeTopK(spark, twin, q, k = 5, nprobe = 2,
+      IvfIndex.Adc(10)).collect().map(_.toString).toSeq
     assert(pr == pt, "re-init'd index diverged from a fresh-root twin")
     // empty batch: pointer-only bump, NO new manifest version — the r17
     // removal of the per-commit isEmpty pre-scan (emptiness now detected
