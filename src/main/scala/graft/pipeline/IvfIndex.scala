@@ -476,6 +476,14 @@ object IvfIndex extends Ledger.Manifests {
     }
   }
 
+  /** Destroy a dropped entry's broadcast only while its context is
+    * live. A stopped context's broadcast is gone already, and
+    * `destroy()` removes blocks by broadcast id through the live
+    * `SparkEnv`: ids restart at 0 in a new context, so it would
+    * unpersist an unrelated live broadcast. */
+  private def release(e: (org.apache.spark.SparkContext, Quantizer)): Unit =
+    if (!e._1.isStopped) e._2._2.destroy()
+
   /** Drop (and destroy) every cached quantizer — and every pinned-
     * metadata cache entry — under `root`; called on re-[[init]] and
     * [[destroy]] ([[rebuild]] instead evicts just the superseded
@@ -484,7 +492,7 @@ object IvfIndex extends Ledger.Manifests {
   private def invalidateQuantizers(root: String): Unit = {
     val pre = s"$root/"
     quantCache.keys.filter(_.startsWith(pre)).foreach { k =>
-      quantCache.remove(k).foreach(_._2._2.destroy())
+      quantCache.remove(k).foreach(release)
     }
     Seq(codebookCache, sqBoundsCache, centroidsDfCache, segSchemaCache)
       .foreach(c => c.keys.filter(_.startsWith(pre)).foreach(c.remove))
@@ -498,7 +506,7 @@ object IvfIndex extends Ledger.Manifests {
     * `#segschema` entry is root-keyed, not generation-keyed; rebuild
     * and compact drop it explicitly beside the segment they rewrite. */
   private def evictGenCaches(root: String, gen: Int): Unit = {
-    quantCache.remove(centroidsPath(root, gen)).foreach(_._2._2.destroy())
+    quantCache.remove(centroidsPath(root, gen)).foreach(release)
     codebookCache.remove(codebookPath(root, gen))
     sqBoundsCache.remove(sqBoundsPath(root, gen))
     centroidsDfCache.remove(centroidsPath(root, gen))
@@ -851,15 +859,35 @@ object IvfIndex extends Ledger.Manifests {
   }
 
   /** All live tombstones as (vec_id, _del_v), or None when the index
-    * carries none (the common case skips the anti-join entirely). */
+    * carries none (the common case skips the anti-join entirely). One
+    * file scan over every tombstone dir; `_del_v` parses from the file
+    * path (see [[versioned]]). */
   private def tombstones(spark: SparkSession,
                          segs: Seq[Seg]): Option[DataFrame] = {
     val t = segs.filter(_.tombstone)
     if (t.isEmpty) None
-    else Some(t.map(e => spark.read.schema("vec_id BIGINT").parquet(e.dir)
-        .select(col("vec_id"), lit(e.version).as("_del_v")))
-      .reduce(_ unionByName _))
+    else Some(spark.read.schema("vec_id BIGINT").parquet(t.map(versioned): _*)
+      .select(col("vec_id"), fromPath(DelVersionOfPath).as("_del_v")))
   }
+
+  /** Segment and tombstone dirs end in their version (`seg/sNNNNN`,
+    * `del/dNNNNN`), which is what lets one file scan over many dirs tag
+    * each row from its path; the dir is returned checked. */
+  private def versioned(e: Seg): String = {
+    val tail = if (e.tombstone) f"/del/d${e.version}%05d" else f"/seg/s${e.version}%05d"
+    require(e.dir.endsWith(tail), s"segment dir ${e.dir} is not named for version ${e.version}")
+    e.dir
+  }
+
+  /** An int parsed from each row's file path by the first group of
+    * `re`. The patterns are constants, so a scan tagged this way
+    * compiles the same classes whichever dirs it reads; a `lit` per dir
+    * inlines its int and compiles a new class per dir. */
+  private def fromPath(re: String): Column =
+    regexp_extract(col("_metadata.file_path"), re, 1).cast("int")
+  private val ListOfPath = "/list=(-?\\d+)/[^/]*$"
+  private val SegVersionOfPath = "/seg/s(\\d+)/list=-?\\d+/[^/]*$"
+  private val DelVersionOfPath = "/del/d(\\d+)/[^/]*$"
 
   /** Cached segment read schemas (`full` = with the `list` partition
     * column, `file` = the leaf files under a `list=K` dir, without it):
@@ -874,20 +902,19 @@ object IvfIndex extends Ledger.Manifests {
     (full, StructType(full.filterNot(_.name == "list")))
   }
 
-  /** The (dir, list, version) triples the probe opens: ONE directory
-    * listing per live posting segment (a list can be empty in a
-    * segment), never a per-(segment × list) existence probe — on an
-    * object store each `exists` is a round-trip HEAD, and S segments ×
-    * nprobe lists of them would serialize before any work starts. */
-  private def probedDirs(conf: Configuration, segs: Seq[Seg],
-                         probed: Seq[Int]): Seq[(String, Int, Int)] =
+  /** The `list=K` dirs of the live posting segments whose list is
+    * `wanted`: ONE directory listing per segment (a list can be empty
+    * in a segment), never a per-(segment × list) existence probe — on
+    * an object store each `exists` is a round-trip HEAD, and S segments
+    * × nprobe lists of them would serialize before any work starts. A
+    * zero-row segment has no `list=K` dir, so it adds none. */
+  private def postingDirs(conf: Configuration, segs: Seq[Seg],
+                          wanted: Int => Boolean): Seq[String] =
     for {
       seg <- segs if !seg.tombstone
-      present = FsIo.listDirNames(conf, seg.dir)
-        .filter(_.startsWith("list="))
-        .map(_.stripPrefix("list=").toInt).toSet
-      l <- probed if present.contains(l)
-    } yield (s"${seg.dir}/list=$l", l, seg.version)
+      l <- FsIo.listDirNames(conf, seg.dir).filter(_.startsWith("list="))
+        .map(_.stripPrefix("list=").toInt).sorted if wanted(l)
+    } yield s"${versioned(seg)}/list=$l"
 
   /** LSM visibility: drop postings whose segment version precedes a
     * matching tombstone. Equi-join on vec_id with the version
@@ -904,32 +931,22 @@ object IvfIndex extends Ledger.Manifests {
 
   /** Every posting across the live segments: (vec_id, list
     * [, embedding unless code-only/SQ8][, sq_code for an SQ8 index]
-    * [, pq_code for a PQ index]). Per-segment reads recover the `list`
-    * partition column. */
+    * [, pq_code for a PQ index]) — the [[candidates]] scan over every
+    * `list=K` dir. */
   def currentAll(spark: SparkSession, root: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = pointer(root, conf)
     val segs = readManifest(root, p.version, conf)
-    // supplied (cached) schema: skips one footer-inference listing per
-    // segment relation — the layout is pinned, see segSchemas (r17)
-    val fullSchema = segSchemas(spark, root, segs)._1
-    val raw = segs.filterNot(_.tombstone)
-      .map(e => spark.read.schema(fullSchema).parquet(e.dir)
-        .withColumn("_seg_v", lit(e.version)))
-      .reduce(_ unionByName _)
-    val cols = Seq(col("vec_id"), col("list").cast("int").as("list")) ++
-      (if (raw.columns.contains("embedding")) Seq(col("embedding")) else Nil) ++
-      (if (raw.columns.contains("sq_code")) Seq(col("sq_code")) else Nil) ++
-      (if (raw.columns.contains("pq_code")) Seq(col("pq_code")) else Nil) :+
-      col("_seg_v")
-    val postings = raw.select(cols: _*)
-    applyTombstones(postings, tombstones(spark, segs)).drop("_seg_v")
+    val all = candidates(spark, segs, postingDirs(conf, segs, _ => true),
+      segSchemas(spark, root, segs)._2)
+    all.select((Seq("vec_id", "list") ++ Seq("embedding", "sq_code", "pq_code")
+      .filter(all.columns.contains)).map(col): _*)
   }
 
-  /** Driver-side twin of [[probeLists]] for one query over the CACHED
-    * quantizer matrix — bit-identical arithmetic (same left-to-right
-    * IEEE fold as [[dist2]], exact float→double widening, same
-    * (d2 asc, list asc) tie order via java.lang.Double.compare =
+  /** Driver-side twin of [[probeLists]] for one query vector over the
+    * CACHED quantizer matrix — bit-identical arithmetic (same
+    * left-to-right IEEE fold as [[dist2]], exact float→double widening,
+    * same (d2 asc, list asc) tie order via java.lang.Double.compare =
     * Spark's double sort) with zero Spark jobs. Only taken when this
     * JVM already holds the pinned matrix (ingest built it) — a
     * probe-only process never pays the matrix collect, and nlists past
@@ -985,28 +1002,28 @@ object IvfIndex extends Ledger.Manifests {
 
   /** List selection: (qid, qvec, probe_lists) per query, the union of
     * the probed lists, and whether the frame is one row that took the
-    * driver-side path. A one-row frame picks its lists driver-side
-    * when this JVM holds the pinned quantizer ([[probedListsLocal]]; a
-    * 2-row bounded collect decides single-row-ness, and the collected
-    * row becomes a local relation). Everything else takes
-    * [[probeLists]] and one collect of the list union (bounded by
-    * nlists, not by query count). */
+    * driver-side path. When this JVM holds the pinned quantizer, the
+    * frame is collected and every query picks its lists driver-side
+    * ([[probedListsLocal]]); the rows come back as a local relation.
+    * The scorer broadcasts the frame anyway, so the collect adds no new
+    * memory bound. A process without the quantizer, or a frame with a
+    * null or wrong-length vector, takes [[probeLists]] and one collect
+    * of the list union (bounded by nlists, not by query count). */
   private def selectLists(spark: SparkSession, root: String, gen: Int,
                           queries: DataFrame, nprobe: Int)
       : (DataFrame, Seq[Int], Boolean) = {
     val local = quantCache.get(centroidsPath(root, gen)).flatMap { _ =>
       val quant = pinnedQuantizer(spark, root, gen)
-      val rows = queries.limit(2).collect()
+      val rows = queries.collect()
       val dim = quant._2.value.headOption.map(_.length).getOrElse(-1)
-      if (rows.length != 1 || rows(0).isNullAt(1) ||
-          rows(0).getSeq[Any](1).length != dim) None
+      if (rows.exists(r => r.isNullAt(1) || r.getSeq[Any](1).length != dim)) None
       else {
-        val q = rows(0).getSeq[Any](1)
-          .map { case n: Number => n.doubleValue() }.toArray
-        val lists = probedListsLocal(quant, q, nprobe)
-        Some((localQueryDf(spark, Seq(Row.fromSeq(rows(0).toSeq :+ lists)),
-          queries.schema.add("probe_lists", ArrayType(IntegerType))),
-          lists.sorted, true))
+        val lists = rows.map(r => probedListsLocal(quant,
+          r.getSeq[Any](1).map { case n: Number => n.doubleValue() }.toArray, nprobe))
+        Some((localQueryDf(spark,
+            rows.zip(lists).map { case (r, l) => Row.fromSeq(r.toSeq :+ l) }.toSeq,
+            queries.schema.add("probe_lists", ArrayType(IntegerType))),
+          lists.flatten.distinct.sorted.toSeq, rows.length == 1))
       }
     }
     local.getOrElse {
@@ -1018,22 +1035,26 @@ object IvfIndex extends Ledger.Manifests {
 
   /** The candidate scan: every posting of the probed `list=K`
     * directories as (file columns, list, _seg_v), tombstones applied.
-    * Scorers select what they read, so parquet column pruning keeps an
-    * ADC pass off the raw vectors. No probed directory gives a typed
-    * empty local relation: every scorer's plan then runs unchanged and
-    * returns zero rows with exactly its non-empty columns and types. */
+    * ONE file scan over all the directories, with `list` and `_seg_v`
+    * parsed from each row's file path, so a probe compiles the same
+    * classes whichever segments and lists it opens. Scorers select what
+    * they read, so parquet column pruning keeps an ADC pass off the raw
+    * vectors. No probed directory gives a typed empty local relation:
+    * every scorer's plan then runs unchanged and returns zero rows with
+    * exactly its non-empty columns and types. */
   private def candidates(spark: SparkSession, segs: Seq[Seg],
-                         dirs: Seq[(String, Int, Int)],
+                         dirs: Seq[String],
                          fileSchema: StructType): DataFrame = {
-    val scans =
+    val scan =
       if (dirs.isEmpty)
-        Seq(localQueryDf(spark, Nil, fileSchema.add("list", IntegerType)
-          .add("_seg_v", IntegerType)))
-      else dirs.map { case (d, l, v) =>
-        spark.read.schema(fileSchema).parquet(d)
-          .withColumn("list", lit(l)).withColumn("_seg_v", lit(v))
-      }
-    applyTombstones(scans.reduce(_ unionByName _), tombstones(spark, segs))
+        localQueryDf(spark, Nil, fileSchema.add("list", IntegerType)
+          .add("_seg_v", IntegerType))
+      else
+        spark.read.schema(fileSchema).parquet(dirs: _*)
+          .select(fileSchema.fieldNames.toSeq.map(col) ++ Seq(
+            fromPath(ListOfPath).as("list"),
+            fromPath(SegVersionOfPath).as("_seg_v")): _*)
+    applyTombstones(scan, tombstones(spark, segs))
   }
 
   /** Loud reject for operations that need (a reconstruction of) the
@@ -1080,7 +1101,8 @@ object IvfIndex extends Ledger.Manifests {
     * survives the cut must be deterministic for the replays-bit-for-bit
     * contract. Spark plans the `rank <= n` filter as a partial
     * WindowGroupLimit, so only ≤n rows per query and partition shuffle.
-    * A one-row frame (`one`) ranks with `orderBy.limit` instead:
+    * A one-row frame whose lists were picked driver-side (`one`) ranks
+    * with `orderBy.limit` instead:
     * TakeOrderedAndProject keeps its shuffle inside one job, where the
     * window's hash exchange costs adaptive execution a job of its own
     * (3 jobs per single probe against 2). */
@@ -1105,9 +1127,11 @@ object IvfIndex extends Ledger.Manifests {
 
   /** Per-query top-k for a (qid, qvec) query frame over the nprobe
     * nearest lists — the one probe; [[probeTopK]] is a batch of one.
-    * Only the union of the probed `seg/sNNNNN/list=K` directories opens,
-    * so the candidate scan is ~(nprobe/nlists) of the corpus; candidates
-    * join the broadcast queries on list membership and rank per qid.
+    * Lists are picked per query on the driver when this JVM holds the
+    * pinned quantizer ([[selectLists]]). Only the union of the probed
+    * `seg/sNNNNN/list=K` directories opens, in one file scan, so the
+    * candidate scan is ~(nprobe/nlists) of the corpus; candidates join
+    * the broadcast queries on list membership and rank per qid.
     * Queries are broadcast, so the batch should be serving-sized
     * (≲10^5); corpus-scale "queries" are a self-join, not a probe.
     *
@@ -1154,7 +1178,7 @@ object IvfIndex extends Ledger.Manifests {
     if (scorer != Adc(0)) requireRerankable(spark, root, segs, s"the $scorer probe")
     val (qLists, probed, one) = selectLists(spark, root, p.gen,
       queries.select(col("qid"), col("qvec")), nprobe)
-    val cand = candidates(spark, segs, probedDirs(conf, segs, probed),
+    val cand = candidates(spark, segs, postingDirs(conf, segs, probed.toSet),
       segSchemas(spark, root, segs)._2)
     val emb = embedded(spark, root, conf)
     def joined(c: DataFrame, q: DataFrame) =

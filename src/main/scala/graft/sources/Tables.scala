@@ -29,12 +29,16 @@ object Tables {
     * for the lake's fixed table layout. The entry holds the RELATION
     * (file index + schema) only: no data is persisted, every execution
     * still scans the parquet inputs. Keyed on the session object so a
-    * restarted session can never be served a dead relation. */
-  private val relationCache = scala.collection.concurrent.TrieMap
+    * restarted session can never be served a dead relation; entries of
+    * sessions whose context has stopped are dropped on lookup, so a
+    * stopped session is not pinned for the life of the JVM. */
+  private[graft] val relationCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), DataFrame]
 
   def table(s: SparkSession, dir: String, name: String): DataFrame = {
     val p = s"$dir/$name.parquet"
+    relationCache.keys.filter(_._1.sparkContext.isStopped)
+      .foreach(relationCache.remove)
     relationCache.getOrElseUpdate((s, p), s.read.parquet(p))
   }
 

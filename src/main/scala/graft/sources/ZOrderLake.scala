@@ -43,11 +43,13 @@ import org.apache.spark.sql.functions._
   * (and thus any pruning) remain exact. [[readBox]] decomposes the box
   * per epoch and unions the matching file sets.
   *
-  * Scale shape per batch: one scan of the batch (zval is a few integer
-  * ops), a cell-grid equi-join against the manifest to find touched
-  * files (never a nested loop; a z-sorted file covers ~1 of the 4096
-  * cells), one read of the touched files, one range shuffle of
-  * (touched rows ∪ batch) and a write of O(touched + batch) rows.
+  * Scale shape per batch: a single one-row aggregate over the batch that
+  * also collects its cells (zval is a few integer ops; at most 4096
+  * cell ids), a driver-side pick of the touched files from the
+  * manifest's zval ranges (never a nested loop; a z-sorted file covers
+  * ~1 of the 4096 cells), one read of the touched files, one range
+  * shuffle of (touched rows ∪ batch) and a write of O(touched + batch)
+  * rows.
   * Untouched files — the overwhelming majority under any ingest with
   * locality — cost nothing. Exactly-once: slab rewrite is NOT
   * idempotent (a replayed batch would duplicate its rows), so the
@@ -81,7 +83,7 @@ object ZOrderLake extends Ledger.Manifests {
   private def keyBits(nDims: Int): Int = nDims * 16
 
   /** Cells = zval >> cellShift — always 4096 cells, whatever the
-    * dimensionality: the touched-file join key and the kept-boundary
+    * dimensionality: the batch's touched-cell set and the kept-boundary
     * group lookup both stay driver-array-sized. */
   private def cellShift(nDims: Int): Int = keyBits(nDims) - 12
 
@@ -266,8 +268,7 @@ object ZOrderLake extends Ledger.Manifests {
     // input (lazily: the sampling job is what materializes it) so both
     // passes read the same blocks; the sampled bounds now also derive
     // from exactly the rows being written. Blocks are freed by the
-    // context cleaner when the checkpoint RDD goes out of scope — the
-    // same lifecycle as applyBatch's checkpointed batch frame.
+    // context cleaner when the checkpoint RDD goes out of scope.
     val mat = df.localCheckpoint(false)
     mat.repartitionByRange(n, col("zval")).sortWithinPartitions("zval")
       .write.mode(SaveMode.Overwrite).parquet(dir)
@@ -446,20 +447,23 @@ object ZOrderLake extends Ledger.Manifests {
     val epochs = readEpochs(root, conf)
     val curDims = epochs.last
     val manifest = readManifest(root, p.version, conf)
+    val shift = cellShift(curDims.size)
     // one 1-row aggregate over the batch: per-dim min/max, row count,
-    // out-of-box count — it also subsumes the isEmpty probe, so the
-    // per-batch job count stays at (agg, cell probe, rewrite)
+    // out-of-box count and the batch's cells under the current grid (at
+    // most 4096 ids) — it also subsumes the isEmpty probe, so the
+    // per-batch jobs are this aggregate and the rewrite
     val oobPred = curDims.map(d =>
       col(d.name).cast("long") < d.lo || col(d.name).cast("long") > d.hi)
       .reduce(_ || _)
     val aggs = curDims.flatMap(d =>
       Seq(min(col(d.name)).cast("long"), max(col(d.name)).cast("long"))) ++
-      Seq(count(lit(1)), sum(when(oobPred, 1L).otherwise(0L)))
+      Seq(count(lit(1)), sum(when(oobPred, 1L).otherwise(0L)),
+        collect_set(shiftright(zvalCol(curDims), shift)))
     val r = batch.agg(aggs.head, aggs.tail: _*).head()
     val batchRows = r.getLong(2 * curDims.size)
     if (batchRows == 0L) return false
     val oobRows = r.getLong(2 * curDims.size + 1)
-    val (epoch, dims) =
+    val (epoch, dims, cells) =
       if (oobRows.toDouble / batchRows > epochThreshold) {
         val fresh = curDims.zipWithIndex.map { case (d, i) =>
           // an all-NULL dim column has no min/max — NULL values are
@@ -480,28 +484,21 @@ object ZOrderLake extends Ledger.Manifests {
           }
           }
         }
-        (openEpoch(root, manifest, epochs, fresh, conf), fresh)
-      } else (epochs.size - 1, curDims)
-    val shift = cellShift(dims.size)
-    // checkpoint WITH zval (the epoch decision is already made), so the
-    // cell probe and the rewrite both reuse the stored key; the probe's
-    // first action materializes it
+        // a new epoch's slabs share no z-space with any existing slab,
+        // so the batch touches nothing
+        (openEpoch(root, manifest, epochs, fresh, conf), fresh, Seq.empty[Long])
+      } else (epochs.size - 1, curDims, r.getSeq[Long](2 * curDims.size + 2))
     val batchZ = batch.withColumn("zval", zvalCol(dims))
-      .localCheckpoint(false)
-    // touched files via the cell grid — an EQUI-join, never a per-file
-    // range probe; entries explode to the (few) cells they cover. Only
-    // SAME-epoch slabs are comparable (and thus touchable); a new epoch
-    // touches nothing by construction.
-    import spark.implicits._
-    val fileCells = manifest.filter(_.epoch == epoch).toDF()
-      .select(col("path"), explode(sequence(
-        shiftright(col("minZ"), shift),
-        shiftright(col("maxZ"), shift))).as("cell"))
-    val batchCells = batchZ
-      .select(shiftright(col("zval"), shift).as("cell")).distinct()
-    val touched = fileCells.join(broadcast(batchCells), "cell")
-      .select("path").distinct()
-      .collect().map(_.getString(0)).toSet // bounded by file count
+    // touched files on the driver: a same-epoch slab is touched when a
+    // batch cell lies in its [minZ, maxZ] cell span (cell-granular, so a
+    // batch row in a slab's boundary cell touches it). Only SAME-epoch
+    // slabs are comparable; the bitmap lookup is O(files).
+    val hit = new java.util.BitSet(1 << 12)
+    cells.foreach(c => hit.set(c.toInt))
+    def touched(e: Entry): Boolean = e.epoch == epoch && {
+      val next = hit.nextSetBit((e.minZ >> shift).toInt)
+      next >= 0 && next <= (e.maxZ >> shift)
+    }
     // batch schema must match the lake's slab schema exactly (names AND
     // types): unionByName silently widens (long ∪ double → double), so a
     // drifted batch would poison every later reader of the mixed layout
@@ -513,7 +510,7 @@ object ZOrderLake extends Ledger.Manifests {
       .map(f => (f.name, f.dataType.simpleString)).sortBy(_._1)
     require(lakeSchema == batchSchema,
       s"batch schema $batchSchema does not match lake schema $lakeSchema")
-    val (rewrite, keep) = manifest.partition(e => touched.contains(e.path))
+    val (rewrite, keep) = manifest.partition(touched)
     val rewriteRows =
       if (rewrite.isEmpty) batchZ
       else spark.read.parquet(rewrite.map(_.path): _*).unionByName(batchZ)
@@ -589,7 +586,7 @@ object ZOrderLake extends Ledger.Manifests {
     * current one — where ingest fragments; frozen epochs compact by
     * explicit `epoch`). Returns the new slab count.
     *
-    * Unlike [[applyBatch]]'s cell-granular touch join, a size-chosen
+    * Unlike [[applyBatch]]'s cell-granular touch test, a size-chosen
     * rewrite set CAN share a boundary cell with a kept slab — which
     * would break the kept-interval grouping invariant (a new slab could
     * silently span the kept slab's z-interval, eroding manifest

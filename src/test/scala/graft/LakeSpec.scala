@@ -868,4 +868,50 @@ class LakeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("does not match lake schema"), e.getMessage)
     ZOrderLake.destroy(root)
   }
+
+  test("z-order touch: a batch in a kept slab's boundary cell rewrites it; a new epoch rewrites none") {
+    import graft.sources.ZOrderLake
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_zotouch_").toString
+    val root = s"$base/zo"
+    // bounds pinned at [0, 65535] on both dims, so the grid is the value
+    // and zval = Morton2(x, y); 2 dims → cell = zval >> 20
+    val rnd = new scala.util.Random(7)
+    val init = ((0L, 0L) +: (65535L, 65535L) +:
+      Seq.fill(398)((rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong)))
+      .zipWithIndex.map { case ((x, y), i) => (x, y, i.toLong) }.toDF("x", "y", "pay")
+    ZOrderLake.init(init, root, "x", "y", targetRows = 50)
+    // one batch first, so the counted one below runs in steady state
+    ZOrderLake.applyBatch(Seq((100L, 100L, 500L)).toDF("x", "y", "pay"),
+      root, 50L, 0L, 10)
+    val slabs = ZOrderLake.readManifest(root, 1).sortBy(_.minZ)
+    def cell(z: Long) = z >> 20
+    // a slab whose last cell it alone holds, with room past its maxZ
+    val (e, _) = slabs.zip(slabs.tail).find { case (a, b) =>
+      cell(a.maxZ) < cell(b.minZ) && cell(a.maxZ + 1) == cell(a.maxZ) &&
+        cell(a.minZ) < cell(a.maxZ)
+    }.getOrElse(fail(s"no slab fits the fixture: $slabs"))
+    val z = e.maxZ + 1 // outside the slab's zval range, inside its last cell
+    def bits(off: Int) = (0 until 16).map(i => ((z >> (2 * i + off)) & 1L) << i).sum
+    val (x, y) = (bits(0), bits(1))
+    assert(graft.functions.Morton2.compute(x, y) == z)
+    // parquet-backed, as ingest sees a batch
+    val batchDir = s"$base/batch"
+    Seq((x, y, 9999L)).toDF("x", "y", "pay").write.parquet(batchDir)
+    val batch = spark.read.parquet(batchDir)
+    val (_, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext)(
+      ZOrderLake.applyBatch(batch, root, 50L, 1L, 10))
+    assert(jobs <= 6, s"z-order applyBatch ran $jobs Spark jobs")
+    val removed = ZOrderLake.changedSlabs(root, 1, 2).filter(_._1 == "removed").map(_._2)
+    assert(removed.map(_.path) == Seq(e.path), s"rewrote $removed, expected ${e.path}")
+    assert(ZOrderLake.current(spark, root).count() == 402)
+    // every row out of box: a new epoch opens and no slab is rewritten
+    val far = (0 until 20).map(i => (200000L + i, (i * 100).toLong, i.toLong))
+      .toDF("x", "y", "pay")
+    ZOrderLake.applyBatch(far, root, 50L, 2L, 10)
+    assert(ZOrderLake.readEpochs(root).size == 2)
+    assert(!ZOrderLake.changedSlabs(root, 2, 3).exists(_._1 == "removed"))
+    assert(ZOrderLake.current(spark, root).count() == 422)
+    ZOrderLake.destroy(root)
+  }
 }
