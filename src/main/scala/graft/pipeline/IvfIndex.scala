@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
 
+import graft.core.SessionState
 import graft.sources.{FsIo, Ledger}
 
 /** INCREMENTALLY-maintained IVF (inverted-file) ANN index — the
@@ -105,25 +106,16 @@ object IvfIndex extends Ledger.Manifests {
   /** The pinned centroid table (list INT, cvec ARRAY<DOUBLE>) of the
     * CURRENT generation (the pointer resolves which — a rebuild re-pins
     * it atomically with its re-assigned segments). The DataFrame (with
-    * its already-listed file index) is cached per pinned path — the
-    * table never changes under a generation, so re-listing it per
-    * ingest batch / probe is pure driver latency (r17 optimization:
-    * guide §1.2 "don't compute things you throw away"). */
+    * its already-listed file index) is held per (pinned path, session)
+    * in [[SessionState]] — the table never changes under a generation,
+    * so re-listing it per ingest batch / probe is pure driver latency
+    * (r17 optimization: guide §1.2 "don't compute things you throw
+    * away"); it is bound to its session, so a restarted session never
+    * reads through a dead one's relation. */
   def readCentroids(spark: SparkSession, root: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = centroidsPath(root, currentGen(root, conf))
-    // a cached DataFrame is bound to the session that created it — if
-    // that session was stopped and a new one started in this JVM, the
-    // cached relation would fail every read until process restart
-    // (advisor find, r18): reuse only same-session entries, rebuild and
-    // replace otherwise
-    centroidsDfCache.get(p) match {
-      case Some(df) if df.sparkSession eq spark => df
-      case _ =>
-        val df = spark.read.parquet(p)
-        centroidsDfCache.update(p, df)
-        df
-    }
+    SessionState(p, Some(spark))(spark.read.parquet(p))
   }
 
   // ---- product-quantized postings (the FAISS IVFADC layout) ----
@@ -137,11 +129,11 @@ object IvfIndex extends Ledger.Manifests {
   def readCodebook(spark: SparkSession, root: String,
                    conf: Configuration): Option[Array[Array[Array[Long]]]] = {
     val p = codebookPath(root, currentGen(root, conf))
-    // codebooks are PINNED per generation — cache the collected m × k
+    // codebooks are PINNED per generation — hold the collected m × k
     // rows (bounded) instead of re-running a collect job per ingest
     // batch / ADC probe (r17: was one Spark job per applyBatch + one
     // per probe, pure re-read of immutable metadata)
-    codebookCache.getOrElseUpdate(p,
+    SessionState(p)(
       if (!FsIo.exists(conf, p)) None
       else {
         val rows = spark.read.parquet(p)
@@ -165,8 +157,8 @@ object IvfIndex extends Ledger.Manifests {
   def readSqBounds(spark: SparkSession, root: String,
                    conf: Configuration): Option[(Array[Long], Array[Long])] = {
     val p = sqBoundsPath(root, currentGen(root, conf))
-    // pinned per generation — cached like the codebook (r17)
-    sqBoundsCache.getOrElseUpdate(p,
+    // pinned per generation — held like the codebook (r17)
+    SessionState(p)(
       if (!FsIo.exists(conf, p)) None
       else {
         val rows = spark.read.parquet(p)
@@ -402,38 +394,30 @@ object IvfIndex extends Ledger.Manifests {
   private type Quantizer =
     (Array[Int], org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])
 
-  /** ONE quantizer broadcast per pinned centroid table — NOT one per
+  /** r17 optimization — the index's pinned metadata is held in
+    * [[SessionState]]: the centroid table, quantizer, codebook and SQ8
+    * bounds are keyed on a generation-suffixed path whose CONTENT NEVER
+    * CHANGES once written ([[init]] / [[rebuild]] stage a fresh
+    * generation; re-init and [[destroy]] evict the root, [[rebuild]] the
+    * superseded generation's paths).
+    * Re-reading it per ingest batch / probe was one or two Spark jobs
+    * each of pure immutable-metadata latency (guide §1.2: fix the
+    * algorithm's wasted passes before per-task work).
+    *
+    * ONE quantizer broadcast per pinned centroid table — NOT one per
     * call: the streaming sink assigns every micro-batch, and a fresh
     * nlists × dim × 8 B broadcast per trigger (~600 MB at 10^5 × 768)
     * would accumulate until the context cleaner got around to them,
-    * besides re-collecting the table each time. Centroids are pinned
-    * (never move), so caching by their generation path is sound;
-    * [[init]]/[[rebuild]]/[[destroy]] invalidate their root's entries.
-    * Each entry keeps the context that owns its broadcast: after a
-    * session restart in the same JVM that broadcast is dead, so
-    * [[pinnedQuantizer]] rebuilds and replaces it. */
-  private val quantCache = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.SparkContext, Quantizer)]
-
-  /** r17 optimization — pinned-metadata caches, same soundness argument
-    * as [[quantCache]]: everything here is keyed on a generation-
-    * suffixed path whose CONTENT NEVER CHANGES once written ([[init]] /
-    * [[rebuild]] stage a fresh generation and [[invalidateQuantizers]]
-    * clears the root's entries on re-init/destroy). Re-reading them per
-    * ingest batch / probe was one or two Spark jobs each of pure
-    * immutable-metadata latency (guide §1.2: fix the algorithm's wasted
-    * passes before per-task work). */
-  private val codebookCache = scala.collection.concurrent.TrieMap
-    .empty[String, Option[Array[Array[Array[Long]]]]]
-  private val sqBoundsCache = scala.collection.concurrent.TrieMap
-    .empty[String, Option[(Array[Long], Array[Long])]]
-  private val centroidsDfCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  /** Segment schema per root (`root/#segschema`): pinned at [[init]] —
-    * appends schema-check against it, compaction/rebuild preserve the
-    * column set — so the per-append footer read is redundant. */
-  private val segSchemaCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
+    * besides re-collecting the table each time. It is bound to the
+    * context that owns its broadcast: after a session restart in the
+    * same JVM that broadcast is dead, and the next caller builds its
+    * own; an evicted live one is destroyed. */
+  private def quantizerKey(root: String, gen: Int) =
+    s"${centroidsPath(root, gen)}/#quantizer"
+  /** Segment schema per root: pinned at [[init]] — appends
+    * schema-check against it, compaction/rebuild preserve the column
+    * set — so the per-append footer read is redundant. */
+  private def segSchemaKey(root: String) = s"$root/#segschema"
 
   /** Collect + broadcast the centroid matrix, guarding the kernel's
     * memory contract LOUDLY at build time: the matrix lives whole on
@@ -465,52 +449,10 @@ object IvfIndex extends Ledger.Manifests {
   }
 
   private def pinnedQuantizer(spark: SparkSession, root: String,
-                              gen: Int): Quantizer = {
-    val path = centroidsPath(root, gen)
-    quantCache.get(path) match {
-      case Some((sc, q)) if sc eq spark.sparkContext => q
-      case _ =>
-        val q = buildQuantizer(spark, spark.read.parquet(path))
-        quantCache.update(path, (spark.sparkContext, q))
-        q
-    }
-  }
-
-  /** Destroy a dropped entry's broadcast only while its context is
-    * live. A stopped context's broadcast is gone already, and
-    * `destroy()` removes blocks by broadcast id through the live
-    * `SparkEnv`: ids restart at 0 in a new context, so it would
-    * unpersist an unrelated live broadcast. */
-  private def release(e: (org.apache.spark.SparkContext, Quantizer)): Unit =
-    if (!e._1.isStopped) e._2._2.destroy()
-
-  /** Drop (and destroy) every cached quantizer — and every pinned-
-    * metadata cache entry — under `root`; called on re-[[init]] and
-    * [[destroy]] ([[rebuild]] instead evicts just the superseded
-    * generation's entries via [[evictGenCaches]] — the new generation's
-    * caches are already warm and stay valid). */
-  private def invalidateQuantizers(root: String): Unit = {
-    val pre = s"$root/"
-    quantCache.keys.filter(_.startsWith(pre)).foreach { k =>
-      quantCache.remove(k).foreach(release)
-    }
-    Seq(codebookCache, sqBoundsCache, centroidsDfCache, segSchemaCache)
-      .foreach(c => c.keys.filter(_.startsWith(pre)).foreach(c.remove))
-  }
-
-  /** Evict ONE superseded generation's cache entries after a
-    * [[rebuild]]'s pointer swap (r18, advisor find: only the quantizer
-    * broadcast was evicted before, so a service rebuilding periodically
-    * leaked one codebook/bounds/centroid-DF entry set per generation —
-    * entries whose files [[gcGenFiles]] eventually deletes). The
-    * `#segschema` entry is root-keyed, not generation-keyed; rebuild
-    * and compact drop it explicitly beside the segment they rewrite. */
-  private def evictGenCaches(root: String, gen: Int): Unit = {
-    quantCache.remove(centroidsPath(root, gen)).foreach(release)
-    codebookCache.remove(codebookPath(root, gen))
-    sqBoundsCache.remove(sqBoundsPath(root, gen))
-    centroidsDfCache.remove(centroidsPath(root, gen))
-  }
+                              gen: Int): Quantizer =
+    SessionState(quantizerKey(root, gen), Some(spark.sparkContext))(
+      buildQuantizer(spark, spark.read.parquet(centroidsPath(root, gen))),
+      (q: Quantizer) => q._2.destroy())
 
   /** The JIT arg-min struct(d2, list) column over a built quantizer —
     * the kernel projection both [[assignWithDist]] and the SQ8 rebuild
@@ -527,9 +469,9 @@ object IvfIndex extends Ledger.Manifests {
     *
     * DEFAULT (kernel) path: the centroid matrix collects driver-side
     * once (sorted by list), broadcasts as a Spark variable (or arrives
-    * pre-built via `quant` — the per-root cache, so streaming ingest
-    * reuses ONE broadcast across micro-batches), and every
-    * row runs ONE JIT-compiled arg-min loop
+    * pre-built via `quant` — the one [[SessionState]] holds per
+    * generation, so streaming ingest reuses ONE broadcast across
+    * micro-batches), and every row runs ONE JIT-compiled arg-min loop
     * ([[graft.functions.IvfKernels.CentroidArgMin]]) inside whole-stage
     * codegen — a pure projection at ANY nlists, no packed row, no
     * shuffle. The interpreted HOF formulation it replaces cost
@@ -696,7 +638,7 @@ object IvfIndex extends Ledger.Manifests {
     // re-init semantics: a stale pointer (possibly at gen > 0) must not
     // resolve metadata while generation-0 files are being rewritten
     Ledger.dropPointer(root, conf)
-    invalidateQuantizers(root)
+    SessionState.evict(root)
     val cent = centroids
       .select(col("list").cast("int").as("list"), col("cvec"))
     cent.coalesce(1).write.mode(SaveMode.Overwrite)
@@ -889,15 +831,16 @@ object IvfIndex extends Ledger.Manifests {
   private val SegVersionOfPath = "/seg/s(\\d+)/list=-?\\d+/[^/]*$"
   private val DelVersionOfPath = "/del/d(\\d+)/[^/]*$"
 
-  /** Cached segment read schemas (`full` = with the `list` partition
-    * column, `file` = the leaf files under a `list=K` dir, without it):
-    * segment layout is pinned at [[init]] (commits schema-check against
-    * it; compaction/rebuild preserve the column set), yet every probe
-    * pass re-inferred it from parquet footers per (segment × list)
-    * directory — pure driver latency on immutable metadata (r17). */
+  /** Segment read schemas, held in [[SessionState]] (`full` = with the
+    * `list` partition column, `file` = the leaf files under a `list=K`
+    * dir, without it): segment layout is pinned at [[init]] (commits
+    * schema-check against it; compaction/rebuild preserve the column
+    * set), yet every probe pass re-inferred it from parquet footers per
+    * (segment × list) directory — pure driver latency on immutable
+    * metadata (r17). */
   private def segSchemas(spark: SparkSession, root: String,
                          segs: => Seq[Seg]): (StructType, StructType) = {
-    val full = segSchemaCache.getOrElseUpdate(s"$root/#segschema",
+    val full = SessionState(segSchemaKey(root))(
       spark.read.parquet(segs.filterNot(_.tombstone).head.dir).schema)
     (full, StructType(full.filterNot(_.name == "list")))
   }
@@ -1012,8 +955,8 @@ object IvfIndex extends Ledger.Manifests {
   private def selectLists(spark: SparkSession, root: String, gen: Int,
                           queries: DataFrame, nprobe: Int)
       : (DataFrame, Seq[Int], Boolean) = {
-    val local = quantCache.get(centroidsPath(root, gen)).flatMap { _ =>
-      val quant = pinnedQuantizer(spark, root, gen)
+    val local = SessionState.get[Quantizer](quantizerKey(root, gen),
+        spark.sparkContext).flatMap { quant =>
       val rows = queries.collect()
       val dim = quant._2.value.headOption.map(_.length).getOrElse(-1)
       if (rows.exists(r => r.isNullAt(1) || r.getSeq[Any](1).length != dim)) None
@@ -1262,7 +1205,7 @@ object IvfIndex extends Ledger.Manifests {
     // compaction preserves the column set, but the drift guard should
     // re-infer from the segment it will actually read, not trust a
     // comment-level invariant across the rewrite (advisor find, r18)
-    segSchemaCache.remove(s"$root/#segschema")
+    SessionState.evict(segSchemaKey(root))
     sweep(root, retained, conf)
     1
   }
@@ -1351,11 +1294,13 @@ object IvfIndex extends Ledger.Manifests {
       s"$s0 $n0".getBytes(StandardCharsets.UTF_8))
     val retained = commit(root, Pointer(next, p.lastBatch, g),
       Seq(Seg(dir, next, tombstone = false, s0, n0)), retain, conf)
-    // the old generation's cached metadata is dead weight now; the
-    // segment schema entry must re-infer from the rewritten segment
-    // rather than be trusted across the rewrite (advisor find, r18)
-    evictGenCaches(root, p.gen)
-    segSchemaCache.remove(s"$root/#segschema")
+    // the old generation's held metadata is dead weight now (r18,
+    // advisor find: a service rebuilding periodically leaked one entry
+    // set per generation, for files [[gcGenFiles]] deletes); the segment
+    // schema entry must re-infer from the rewritten segment rather than
+    // be trusted across the rewrite
+    Seq(centroidsPath(root, p.gen), codebookPath(root, p.gen),
+      sqBoundsPath(root, p.gen), segSchemaKey(root)).foreach(SessionState.evict)
     sweep(root, retained, conf)
     gcGenFiles(root, g, conf)
   }
@@ -1444,17 +1389,10 @@ object IvfIndex extends Ledger.Manifests {
     }
   }
 
-  /** Test hook: drop every cached artifact under `root` WITHOUT touching
-    * files — simulates a fresh (probe-only) JVM, so specs can pin the
-    * cold distributed list selection bit-identical to the warm
-    * driver-side one (see [[probedListsLocal]]). */
-  private[graft] def dropCachesForTest(root: String): Unit =
-    invalidateQuantizers(root)
-
   /** Test cleanup. */
   def destroy(root: String,
               conf: Configuration = new Configuration()): Unit = {
-    invalidateQuantizers(root)
+    SessionState.evict(root)
     FsIo.delete(conf, root)
   }
 }

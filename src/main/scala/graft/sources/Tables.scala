@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.core.SessionState
+
 /** Parquet table readers for the engine's lake layout: one directory per
   * scale factor, one parquet file/dir per table.
   *
@@ -19,27 +21,22 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
-  /** Base-table relations memoized per (session, path) — r18: a bare
-    * `spark.read.parquet` re-lists the directory and re-reads a footer
-    * for schema inference on EVERY call, pure driver latency paid once
-    * or twice by every query (and by every bench pass) for metadata that
-    * never changes under a scale-factor directory. Catalog tables get a
-    * session file-index cache (`filesourcePartitionFileCacheSize`,
-    * optimization-guide §6); bare-path reads do not — this is that cache
-    * for the lake's fixed table layout. The entry holds the RELATION
-    * (file index + schema) only: no data is persisted, every execution
-    * still scans the parquet inputs. Keyed on the session object so a
-    * restarted session can never be served a dead relation; entries of
-    * sessions whose context has stopped are dropped on lookup, so a
-    * stopped session is not pinned for the life of the JVM. */
-  private[graft] val relationCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
+  /** Base-table relations, held per (session, path) in
+    * [[graft.core.SessionState]] — r18: a bare `spark.read.parquet`
+    * re-lists the directory and re-reads a footer for schema inference
+    * on EVERY call, pure driver latency paid once or twice by every
+    * query (and by every bench pass) for metadata that never changes
+    * under a scale-factor directory. Catalog tables get a session
+    * file-index cache (`filesourcePartitionFileCacheSize`,
+    * optimization-guide §6); bare-path reads do not — this is that
+    * cache for the lake's fixed table layout. The entry holds the
+    * RELATION (file index + schema) only: no data is persisted, every
+    * execution still scans the parquet inputs. It is bound to its
+    * session, so a restarted session is never served a dead relation
+    * and a stopped one is dropped on the next lookup. */
   def table(s: SparkSession, dir: String, name: String): DataFrame = {
     val p = s"$dir/$name.parquet"
-    relationCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(relationCache.remove)
-    relationCache.getOrElseUpdate((s, p), s.read.parquet(p))
+    SessionState(p, Some(s))(s.read.parquet(p))
   }
 
   /** Spark 4 refuses TIMESTAMP(NANOS) parquet at schema inference unless

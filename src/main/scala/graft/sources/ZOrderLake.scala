@@ -6,6 +6,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionState
+
 /** Incrementally-maintained z-ordered parquet lake — OPTIMIZE ZORDER
   * that survives continuous ingest, in two or three dimensions (the
   * 3-D form is the (time, lat, lon) clustering a climate lake wants).
@@ -74,10 +76,10 @@ object ZOrderLake extends Ledger.Manifests {
   /** r17 optimization: the slab schema per lake root is PINNED at
     * [[init]] (every append schema-checks against it; rewrites carry
     * the same columns), so the per-batch footer-inference read of
-    * `manifest.head.path` is redundant driver latency — cache it.
-    * [[init]] and [[destroy]] invalidate. */
-  private val slabSchemaCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
+    * `manifest.head.path` is redundant driver latency — it is held in
+    * [[graft.core.SessionState]] under this path, and [[init]] and
+    * [[destroy]] evict the root. */
+  private def slabSchemaKey(root: String) = s"$root/#slabschema"
 
   /** Morton key width: 2×16 or 3×16 interleaved bits. */
   private def keyBits(nDims: Int): Int = nDims * 16
@@ -298,7 +300,7 @@ object ZOrderLake extends Ledger.Manifests {
     require(dimCols.size == 2 || dimCols.size == 3,
       s"z-order lake supports 2 or 3 dims, got $dimCols")
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    slabSchemaCache.remove(root) // re-init may change the column set
+    SessionState.evict(root) // re-init may change the column set
     FsIo.mkdirs(conf, root)
     val aggs = dimCols.flatMap(c =>
       Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))) :+
@@ -503,7 +505,7 @@ object ZOrderLake extends Ledger.Manifests {
     // types): unionByName silently widens (long ∪ double → double), so a
     // drifted batch would poison every later reader of the mixed layout
     // with a type-mismatch — fail HERE, at the commit, with both schemas
-    val lakeSchema = slabSchemaCache.getOrElseUpdate(root,
+    val lakeSchema = SessionState(slabSchemaKey(root))(
         spark.read.parquet(manifest.head.path).schema)
       .map(f => (f.name, f.dataType.simpleString)).sortBy(_._1)
     val batchSchema = batchZ.schema
@@ -724,7 +726,7 @@ object ZOrderLake extends Ledger.Manifests {
   /** Test cleanup. */
   def destroy(root: String,
               conf: Configuration = new Configuration()): Unit = {
-    slabSchemaCache.remove(root)
+    SessionState.evict(root)
     FsIo.delete(conf, root)
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.SessionState
 import graft.pipeline.{IvfIndex, Similarity}
 
 /** The one IVF probe path: every query shape and scorer keeps its
@@ -95,7 +96,7 @@ class IvfProbeSpec extends AnyFunSuite {
     }
     val cases = for (s <- scorers; n <- Seq(1, 2)) yield (s, n)
     val warm = cases.map { case (s, n) => run(s, n) }
-    IvfIndex.dropCachesForTest(root)
+    SessionState.evict(root)
     val cold = cases.map { case (s, n) => run(s, n) }
     cases.zip(warm.zip(cold)).foreach { case ((s, n), ((wLocal, w), (cLocal, c))) =>
       assert(wLocal && !cLocal, s"$s nprobe $n: paths not as forced")

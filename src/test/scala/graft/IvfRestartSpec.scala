@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.SessionState
 import graft.pipeline.{IvfIndex, Similarity}
 import graft.sources.Tables
 
@@ -57,8 +58,8 @@ class IvfRestartSpec extends AnyFunSuite {
     val b = session()
     assert(!(b.sparkContext eq a.sparkContext), "getOrCreate reused the stopped context")
     Tables.table(b, dir, "batch_0")
-    assert(!Tables.relationCache.keys.exists(_._1 eq a), "stopped session still cached")
-    assert(Tables.relationCache.keys.exists(_._1 eq b))
+    assert(!SessionState.keys.exists(_._2.exists(_ eq a)), "stopped session still cached")
+    assert(SessionState.keys.exists(_._2.exists(_ eq b)))
     IvfIndex.applyBatch(batch(b, dir, 80 until 120), "vec_id", "embedding", root, 1L)
     val all = IvfIndex.currentAll(b, root)
     assert(all.count() == 120)

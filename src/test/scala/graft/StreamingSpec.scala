@@ -1691,7 +1691,7 @@ class StreamingSpec extends AnyFunSuite {
             col("embedding").as("qvec")), k = 3, nprobe = 2)
         .collect().map(_.toString).sorted.toSeq)
     val warm = runAll() // quantizer + codebook + schemas resident (ingest built them)
-    IvfIndex.dropCachesForTest(root) // a fresh serving JVM
+    graft.core.SessionState.evict(root) // a fresh serving JVM
     val cold = runAll()
     assert(warm == cold, s"cold probe path diverged from warm:\n$warm\n$cold")
     // re-init with SHIFTED centroids on the SAME root: caches must not
