@@ -58,7 +58,7 @@ object Bench {
     // JIT/janino noise. The canonical per-query number is the MIN of two
     // warm passes (each re-executes end to end through the noop sink, and
     // data is re-read and re-shuffled — except the four shared views that
-    // SparkEntry persists once per session, `dailyTotals`, `climateDaily`,
+    // queries.Shared persists once per session, `dailyTotals`, `climateDaily`,
     // `docComponents` and `winnowFps`: the queries that read them scan the
     // cached view in warm passes, and the view's build is paid in the cold
     // pass only; scheduling noise is one-sided additive, so min-of-k

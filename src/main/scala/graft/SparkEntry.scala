@@ -1,24 +1,22 @@
 package graft
 
-import graft.core.{Runs, SessionState, Stats, Time}
-import graft.indices.Generic
-import graft.pipeline.{BpeTrain, Dedup, Similarity, TextStats}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.queries.{DailySeries, Events, Formats, Lakes, Query, Relational, TextPipeline, Vectors}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — maps the engine's operator inventory (SURVEY.md §2)
   * onto the driver's testdata so every operator has a DuckDB-checkable
   * oracle. Time-series operators (resample / runs / rolling / percentile)
   * run over `events` (user_id = entity key, ts = time); relational operators
   * over the TPC-H-ish star schema; LLM-pipeline operators over
-  * `documents` / `embeddings`.
+  * `documents` / `embeddings`. Each query is declared once, plan beside
+  * oracle, as a [[graft.queries.Query]] in the object of its family under
+  * `graft.queries`.
   *
   * Numeric-output discipline (r9): float sums quantize to exact int64
   * micro-units BEFORE aggregation (order-free), and final float columns
   * are either (exact long)/10^k or pure-IEEE functions of exact inputs —
   * never `round(x, d>0)`, whose tie algorithm is engine-dependent. See
-  * [[q6]]/[[qln]].
+  * [[graft.queries.Shared.q6]]/[[graft.queries.Shared.qln]].
   *
   * ORACLE OUTPUT TYPES (r10, the ACTUAL r8/r9 hash-fail mechanism): in
   * DuckDB, `sum(BIGINT)` — plain or windowed — returns HUGEINT (int128),
@@ -33,12654 +31,19 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") graft.sources.Tables.events(s, dir)
-    else graft.sources.Tables.table(s, dir, name)
-
-  /** A shared view: `plan` persisted once per (session, dir), held in
-    * [[graft.core.SessionState]] under `dir/#name` and bound to the
-    * session, so a stopped session's view is dropped on the next
-    * lookup. */
-  private def view(s: SparkSession, dir: String, name: String)(
-      plan: => DataFrame): DataFrame =
-    SessionState(s"$dir/#$name", Some(s))(plan.persist())
-
-  /** Per-user daily totals — the engine's canonical "daily climate series"
-    * shape derived from the raw event stream. A [[view]], persisted once
-    * per session: ~25 queries share this exact subplan, so the scan and
-    * shuffle are paid once per run (the materialized-view pattern a lake
-    * would use at scale). */
-  private def dailyTotals(s: SparkSession, dir: String): DataFrame =
-    view(s, dir, "dailyTotals")(
-      t(s, dir, "events")
-        .groupBy(col("user_id"), date_trunc("DAY", col("ts")).cast("date").as("d"))
-        .agg(sum(col("value")).as("total"), count(lit(1)).as("n_events")))
-
-  private val dailySql =
-    """select user_id, cast(date_trunc('day', ts) as date) d,
-      | sum(value) total, count(*) n_events from events group by 1, 2""".stripMargin
-
-  /** Engine-exact 6-decimal quantization: floor(x·1e6 + 0.5)/1e6 uses only
-    * IEEE-exact operations (multiply, add, floor, long→double cast, divide
-    * by a power of ten), so every engine and library version computes
-    * identical bits from identical input bits — unlike `round(x, 6)`,
-    * which flipped five r8 queries on the driver's DuckDB build while
-    * passing locally. `round(x)` to an INTEGER remains portable (HALF_UP
-    * and half-away-from-zero agree on every representable tie) and stays
-    * in use for intermediate micro-unit casts. Ties round toward +∞ for
-    * negatives — consistently in both engines, which is what matters.
-    * VALID RANGE |x| < 9.2e12: Spark's floor(double) returns LongType and
-    * saturates at ±2^63 where DuckDB's floor stays in double, so the two
-    * engines diverge beyond x·1e6 ≈ 2^63 (and the +0.5 is already
-    * meaningless past 2^53). Every current q6 call site is a p-value,
-    * z-score, variance or ratio far inside the range; check before
-    * quantizing anything n³-shaped at larger n. */
-  private def q6(c: Column): Column =
-    floor(c * lit(1e6) + lit(0.5)).cast("double") / lit(1e6)
-
-  /** [[q6]] at scale k — `round(x, k)` made engine-portable: the floor
-    * grid floor(x·10^k + 0.5)/10^k, ties toward +∞ in both engines (the
-    * oracle spells the identical expression inline). The r11 GateSpec
-    * shrink migrates legacy raw-float `round(,k)` finals here. */
-  private def qk(c: Column, k: Int): Column = {
-    val s = math.pow(10.0, k.toDouble)
-    floor(c * lit(s) + lit(0.5)).cast("double") / lit(s)
-  }
-
-  /** Micro-unit quantization to exact int64: `floor(x·s + 0.5)` — same
-    * grid as `round(x·s).cast(long)` but ~2× faster on the hot path
-    * (measured r10: Spark's Round over DoubleType allocates a
-    * java.math.BigDecimal PER ROW inside codegen; floor is a bare
-    * Math.floor). For x ≥ 0 it equals the oracle's half-away-from-zero
-    * `round(x*s)` bit-for-bit, so positive money/count sites keep their
-    * round() oracle SQL; sign-indefinite inputs must spell
-    * floor(...+0.5) on BOTH sides (ties round toward +∞). */
-  private def uq(c: Column, s: Double): Column = floor(c * lit(s) + lit(0.5))
-
-  /** libm ln/exp/pow are not correctly rounded and differ across builds
-    * (JVM vs whatever libm the driver's DuckDB links); quantizing the
-    * transcendental's OUTPUT onto the 1e-6 grid before any further
-    * arithmetic makes everything downstream engine-exact (flip risk
-    * ulp/quantum ≈ 1e-9 per call, vs certain failure at version-dependent
-    * round() boundaries). Costs 6 decimals of precision — document at the
-    * call site when the output is a sum of many quantized terms. The
-    * oracle SQL spells the same grid inline as floor(ln(x)*1e6+0.5)/1e6
-    * (plain string literals; keep the two spellings in sync). */
-  private def qln(c: Column): Column = q6(log(c))
-
-  /** Build a fixture STORE directory once, ATOMICALLY: the Zarr writers
-    * emit metadata before chunk data, so a bare existence probe can see
-    * a half-written store from a concurrent bench/verify JVM. The build
-    * runs in a pid-suffixed staging dir renamed into place when complete
-    * (same-directory rename = atomic on POSIX); a concurrent loser just
-    * deletes its staging copy. `probe` is the file whose presence marks
-    * a finished store. */
-  private def buildStoreOnce(dir: java.io.File, probe: String)
-                            (build: java.io.File => Unit): Unit = {
-    if (new java.io.File(dir, probe).isFile) return
-    val staging = new java.io.File(dir.getParentFile,
-      dir.getName + "_build_" + ProcessHandle.current().pid())
-    build(staging)
-    if (!staging.renameTo(dir)) { // another process won the race
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(staging)
-    }
-  }
-
-  /** DuckDB twin of [[graft.pipeline.Similarity.dotQuantized]] over
-    * 64-dim lists: per-element products on the 1e-12 floor grid summed
-    * as integers (fold-order-free), cast to double (exact below 2^53). */
-  private def dotQSql(a: String, b: String): String =
-    s"cast(list_sum(list_transform(range(1,65), i -> " +
-      s"cast(floor(cast($a[i] as double) * cast($b[i] as double) * 1e12 + 0.5) " +
-      s"as bigint))) as double)"
-
-  /** DuckDB twin of `Similarity.cosineQuantized` — every op after the
-    * integer dots is a single IEEE correctly-rounded double op, so the
-    * result is bit-identical to Spark's. */
-  private def cosQSql(a: String, b: String): String =
-    s"(${dotQSql(a, b)} / sqrt(${dotQSql(a, a)} * ${dotQSql(b, b)}))"
-
-  /** Near-dup components over `documents` — a [[view]] persisted once
-    * per session like [[dailyTotals]]: the LSH + verify +
-    * iterative-propagation pipeline is shared by the clustering and
-    * keep-step queries, so the candidate generation and component rounds
-    * are paid once per run. */
-  private def docComponents(s: SparkSession, dir: String): DataFrame =
-    view(s, dir, "docComponents")(
-      // exact-collapse composition: LSH runs over distinct contents only;
-      // provably identical output to components over the raw pair list
-      // (Dedup.nearDupComponents doc) — the duplicate-heavy-corpus path
-      Dedup.nearDupComponents(t(s, dir, "documents"), "doc_id", "text",
-        ngram = 3, threshold = 0.7, numHashes = 16, bands = 16))
-
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_agg_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  // ------------------------------------------------------------------
-  // Query registry: one entry per implemented operator (SURVEY.md §2).
-  // ------------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    queries1 ++ queries2 ++ queries3 ++ queries4 ++ queries5 ++ queries6 ++ queries7 ++ queries8 ++ queries9 ++ queries10 ++ queries11 ++ queries12 ++ queries13 ++ queries14 ++ queries15 ++ queries16 ++ queries17 ++ queries18 ++ queries19 ++ queries20 ++ queries21 ++ queries22 ++ queries23 ++ queries24 ++ queries25 ++ queries26 ++ queries27 ++ queries28 ++ queries29 ++ queries30 ++ queries31 ++ queries32 ++ queries33 ++ queries34 ++ queries35 ++ queries36 ++ queries37 ++ queries38 ++ queries39 ++ queries40 ++ queries41 ++ queries42 ++ queries43 ++ queries44 ++ queries45
-
-  private def queries1: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- relational core -------------------------------------------------
-    "q_agg_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        // quantities are integral and prices exactly 2-decimal in this
-        // schema: integral-double sums stay exact below 2^53, cent/1e-4
-        // sums are exact int64 (order-free), and each final is one IEEE
-        // division — engine-exact with no round()
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          (sum(uq(col("l_extendedprice"), 100))
-            .cast("double") / lit(100.0)).as("sum_base_price"),
-          (sum(round(col("l_extendedprice") * (lit(1) - col("l_discount"))
-            * 1e4).cast("long")).cast("double") / lit(1e4)).as("sum_disc_price"),
-          (sum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-          (sum(uq(col("l_extendedprice"), 100)).cast("double")
-            / count(lit(1)) / lit(100.0)).as("avg_price"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    "q_join_revenue_by_nation" -> ((s, dir) => {
-      // star join: fact lineitem -> orders -> customer, broadcast dims
-      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer"); val n = t(s, dir, "nation"); val r = t(s, dir, "region")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        // revenue terms are exactly 4-decimal (2-dec price × 2-dec disc):
-        // quantize each row to an exact int64 BEFORE the sum (order-free)
-        // and divide once — engine-exact, no round()
-        .agg((sum(round(col("l_extendedprice") * (lit(1) - col("l_discount"))
-            * 1e4).cast("long")).cast("double") / lit(1e4)).as("revenue"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    "q_topk_orders_per_segment" -> ((s, dir) => {
-      val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
-      val w = Window.partitionBy(col("c_mktsegment"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      o.join(c, o("o_custkey") === c("c_custkey"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        // o_totalprice is a raw DATA value — identical parquet bits in
-        // both engines, no round needed
-        .select(col("c_mktsegment"), col("rk"), col("o_orderkey"),
-          col("o_totalprice"))
-    }),
-
-    "q_anti_join_customers_no_orders" -> ((s, dir) => {
-      // customers with no URGENT order (non-empty on this data, unlike the
-      // no-orders-at-all variant which is vacuously 0 rows)
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o.filter(col("o_orderpriority") === "1-URGENT"),
-          c("c_custkey") === o("o_custkey"), "left_anti")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_customers"))
-    }),
-
-    "q_distinct_custs_per_priority" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(countDistinct(col("o_custkey")).as("n_custs"),
-          count(lit(1)).as("n_orders"))
-    }),
-
-    // ---- resample (core.Time anchored frequencies) -----------------------
-    "q_resample_daily_by_type" -> ((s, dir) => {
-      Generic.resampleOp(t(s, dir, "events"), Seq("event_type"), col("ts"), "D",
-        Seq(count(lit(1)).as("n"), qk(sum(col("value")), 6).as("total")))
-    }),
-
-    "q_resample_ys_jul_lineitem" -> ((s, dir) => {
-      // quantities integral → the double sum is exact; raw, no round
-      Generic.resampleOp(t(s, dir, "lineitem"), Seq("l_returnflag"), col("l_shipdate"), "YS-JUL",
-        Seq(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n_lines")))
-    }),
-
-    "q_resample_qs_dec_orders" -> ((s, dir) => {
-      // cent-exact int64 sum + one division — order-free, engine-exact
-      Generic.resampleOp(t(s, dir, "orders"), Seq.empty, col("o_orderdate"), "QS-DEC",
-        Seq((sum(uq(col("o_totalprice"), 100)).cast("double")
-          / lit(100.0)).as("sum_price"), count(lit(1)).as("n_orders")))
-    }),
-
-    "q_resample_7d_events" -> ((s, dir) => {
-      Generic.resampleOp(t(s, dir, "events"), Seq.empty, col("ts"), "7D",
-        Seq(count(lit(1)).as("n"),
-          (sum(uq(col("value"), 100)).cast("double")
-            / count(lit(1)) / lit(100.0)).as("avg_value")))
-    }),
-
-    // ---- rolling window --------------------------------------------------
-    "q_rolling_mean_7" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-      t(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        // full 7-row windows only (rn >= 7): cent-exact int64 window sum,
-        // /7/100 in a fixed order — engine-exact, no round
-        .withColumn("rmean",
-          sum(uq(col("value"), 100))
-            .over(w.rowsBetween(-6, 0)).cast("double") / lit(7.0) / lit(100.0))
-        .filter(col("rn") >= 7)
-        .select(col("user_id"), col("event_id"), col("rmean"))
-    }),
-
-    // ---- threshold / degree-day indices ----------------------------------
-    "q_threshold_wet_days" -> ((s, dir) => {
-      dailyTotals(s, dir)
-        .groupBy(col("user_id"))
-        .agg(coalesce(sum(when(col("total") > 100, 1L)), lit(0L)).as("wet_days"))
-    }),
-
-    "q_degree_days" -> ((s, dir) => {
-      dailyTotals(s, dir)
-        .groupBy(col("user_id"))
-        .agg(qk(sum(greatest(col("total") - 100, lit(0.0))), 6).as("dd"))
-    }),
-
-    "q_first_occurrence_over_300" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(min(when(col("value") > 300, col("ts"))).as("first_ts"))
-    }),
-
-    // ---- run-length / spells (core.Runs islands) -------------------------
-    "q_longest_run_days" -> ((s, dir) => {
-      // longest streak of consecutive calendar days with daily total > 50
-      val daily = dailyTotals(s, dir)
-        .withColumn("dnum", datediff(col("d"), to_date(lit("1970-01-01"))))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      daily.filter(col("total") > 50)
-        .withColumn("grp", col("dnum") - row_number().over(w))
-        .groupBy(col("user_id"), col("grp"))
-        .agg(count(lit(1)).as("len"))
-        .groupBy(col("user_id"))
-        .agg(max(col("len")).as("longest_run"))
-    }),
-
-    "q_run_events_3d" -> ((s, dir) => {
-      // number of runs of >= 3 consecutive qualifying days (windowed_run_events)
-      val daily = dailyTotals(s, dir)
-        .withColumn("dnum", datediff(col("d"), to_date(lit("1970-01-01"))))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      daily.filter(col("total") > 50)
-        .withColumn("grp", col("dnum") - row_number().over(w))
-        .groupBy(col("user_id"), col("grp"))
-        .agg(count(lit(1)).as("len"))
-        .filter(col("len") >= 3)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_runs"), sum(col("len")).as("days_in_runs"))
-    }),
-
-    "q_suspicious_repeats" -> ((s, dir) => {
-      // QA flag: >= 4 consecutive events of the same type per user
-      Runs.suspiciousRuns(t(s, dir, "events"), Seq("user_id"), col("ts"),
-          col("event_type"), 4)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_suspicious"), max(col("repeat_len")).as("max_repeat"))
-    }),
-
-    // ---- statistics ------------------------------------------------------
-    "q_percentile_by_type" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(qk(percentile(col("value"), lit(0.9)), 6).as("p90"),
-          qk(percentile(col("value"), lit(0.5)), 6).as("p50"))
-    }),
-
-    "q_ensemble_daily_stats" -> ((s, dir) => {
-      // users as ensemble members: per-day cross-member stats
-      dailyTotals(s, dir)
-        .groupBy(col("d"))
-        .agg(qk(avg(col("total")), 6).as("ens_mean"),
-          qk(stddev_samp(col("total")), 6).as("ens_std"),
-          qk(min(col("total")), 6).as("ens_min"),
-          qk(max(col("total")), 6).as("ens_max"),
-          count(lit(1)).as("n_members"))
-    }),
-
-    // ---- text / dedup / similarity (pipeline.*) --------------------------
-    "q_doc_stats" -> ((s, dir) => {
-      // raw chars/tokens ratio (r10): exact-int division, engine-exact
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextStats.tokenCount(col("text")).as("n_tokens"),
-        TextStats.meanTokenLength(col("text")).as("mean_tok_len"),
-        TextStats.fingerprint(col("text")).as("fp"))
-    }),
-
-    "q_dedup_bag" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy(Dedup.bagKey(col("text")).as("bag_key"))
-        .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_members"))
-    }),
-
-    "q_cosine_to_query" -> ((s, dir) => {
-      // r13: integer-grid cosine (Similarity.cosineQuantized) — the
-      // per-element products land on the 1e-12 floor grid and sum as
-      // int64, so the double that reaches the filter and the output is
-      // bit-identical in any engine replaying the grid expression; the
-      // legacy round(,4) safety net is gone
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("qvec"))
-      e.crossJoin(broadcast(q))
-        .withColumn("cosine", Similarity.cosineQuantized(col("embedding"), col("qvec")))
-        .filter(col("cosine") > 0.2)
-        .select(col("vec_id"), col("cosine"))
-    })
-  )
-
-  // ---- batch 2: doy climatology, seasons, recursion, sessions, streaming --
-  private def queries2: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_doy_percentile_exceedance" -> ((s, dir) => {
-      // percentile_doy (same doy across years +-2d pool, p90, type 7)
-      // joined back onto the daily series (resample_doy); count exceedances
-      val daily = dailyTotals(s, dir)
-      val pct = graft.indices.Season.doyPercentile(daily, Seq("user_id"), "d", "total", 2, 0.9,
-        alpha = 1.0, beta = 1.0)
-      daily.withColumn("doy", dayofyear(col("d")))
-        .join(pct, Seq("user_id", "doy"))
-        .groupBy(col("user_id"))
-        .agg(coalesce(sum(when(col("total") > col("doy_pct"), 1L)), lit(0L)).as("n_days_over"))
-    }),
-
-    "q_season_bounds" -> ((s, dir) => {
-      // growing-season analog: open at first 3-day active run, close at first
-      // 3-day inactive run on/after Jan 15 (row-run semantics)
-      graft.indices.Season.seasonBounds(
-          dailyTotals(s, dir), Seq("user_id"), col("d"),
-          col("total") > 50, 3, to_date(lit("2024-01-15")))
-        .select(col("user_id"), col("season_start"), col("season_end"),
-          col("season_length"))
-    }),
-
-    "q_api_recursive" -> ((s, dir) => {
-      // antecedent_precipitation_index (_hydrology.py:673): sequential
-      // decay recursion (mapGroups). r16 floor-grid migration (§81
-      // playbook, the KBDI template): the gap decay is STEPWISE
-      // multiplication by the same parsed 0.9 (never pow(0.9, gap) —
-      // libm last-ulp territory), so the oracle replays every step
-      // bit-for-bit with a dense recursive CTE; the final lands on the
-      // qk 1e6 grid instead of a raw-float round.
-      val daily = dailyTotals(s, dir)
-        .select(col("user_id").as("key"),
-          datediff(col("d"), to_date(lit("1970-01-01"))).as("t"),
-          col("total").as("v"))
-      graft.plans.Recursive.decayAccumulateStepwise(daily, 0.9)
-        .select(col("key").as("user_id"), col("t"), qk(col("out"), 6).as("api"))
-    }),
-
-    "q_sessionize" -> ((s, dir) => {
-      // session = events separated by <= 30 min per user
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-      val wAll = w.rowsBetween(Window.unboundedPreceding, 0)
-      t(s, dir, "events")
-        .withColumn("gap", unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
-        .withColumn("new_sess", when(col("gap").isNull || col("gap") > 1800L * 1000000L, 1L).otherwise(0L))
-        .withColumn("sess_id", sum(col("new_sess")).over(wAll))
-        .groupBy(col("user_id"), col("sess_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_sessions"),
-          // exact int ratio — raw division, no round
-          (sum(col("n_events")).cast("double") / count(lit(1))).as("avg_events"),
-          max(col("n_events")).as("max_events"))
-    }),
-
-    "q_asof_last_error" -> ((s, dir) => {
-      // as-of self join: for each purchase, the user's latest strictly-prior error
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      t(s, dir, "events")
-        .withColumn("last_error_ts",
-          last(when(col("event_type") === "error", col("ts")), ignoreNulls = true).over(w))
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("last_error_ts"))
-    }),
-
-    "q_pivot_user_type" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      def cnt(tp: String) = coalesce(sum(when(col("event_type") === tp, 1L)), lit(0L))
-      e.groupBy(col("user_id")).agg(
-        cnt("view").as("n_view"), cnt("click").as("n_click"),
-        cnt("purchase").as("n_purchase"), cnt("signup").as("n_signup"),
-        cnt("error").as("n_error"))
-    }),
-
-    "q_running_monthly_revenue" -> ((s, dir) => {
-      // exact-cents discipline end to end: monthly totals are int64
-      // 1e-4-unit sums (order-free), the running total sums those exact
-      // ints in the window, and both emit one trailing division
-      val monthly = Generic.resampleOp(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        col("l_shipdate"), "MS",
-        Seq(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount"))
-          * 1e4).cast("long")).as("_ru")))
-      val w = Window.partitionBy(col("l_returnflag")).orderBy(col("period"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      monthly
-        .withColumn("cum_revenue", sum(col("_ru")).over(w).cast("double") / lit(1e4))
-        .select(col("l_returnflag"), col("period"),
-          (col("_ru").cast("double") / lit(1e4)).as("revenue"), col("cum_revenue"))
-    }),
-
-    "q_time_bnds" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .select(Time.resamplePeriod(col("o_orderdate"), "MS").as("period"))
-        .distinct()
-        .withColumn("period_end", Time.periodEnd(col("period"), "MS"))
-        .withColumn("n_days", Time.expectedDays(col("period"), "MS"))
-    }),
-
-    "q_zones_totalprice" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(Generic.zones(col("o_totalprice"), 50000.0).as("bin"))
-        // min/max are DATA values — raw, no round needed
-        .agg(count(lit(1)).as("n"),
-          min(col("o_totalprice")).as("min_price"),
-          max(col("o_totalprice")).as("max_price"))
-    }),
-
-    "q_missing_days" -> ((s, dir) => {
-      // expected_count-style missing mask: 31 calendar days in Jan 2024
-      dailyTotals(s, dir)
-        .groupBy(col("user_id"))
-        .agg(countDistinct(col("d")).as("n_present"))
-        .withColumn("n_missing", lit(31L) - col("n_present"))
-        .withColumn("missing_any", col("n_missing") > 0)
-    }),
-
-    "q_dry_spell_rolling" -> ((s, dir) => {
-      // dry_spell_total_length analog: days covered by any 3-row window with sum < 40
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      val daily = dailyTotals(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .withColumn("wsum", sum(col("total")).over(w.rowsBetween(-2, 0)))
-        .withColumn("qual", when(col("rn") >= 3 && col("wsum") < 40, 1).otherwise(0))
-        .withColumn("covered", max(col("qual")).over(w.rowsBetween(0, 2)))
-      daily.groupBy(col("user_id"))
-        .agg(coalesce(sum(when(col("covered") === 1, 1L)), lit(0L)).as("days_in_dry_spells"))
-    }),
-
-    "q_max_3day_total" -> ((s, dir) => {
-      // the rolling sum runs over exact integer cents, so every 3-day sum
-      // and the monthly max are exact; one trailing division
-      Generic.rollingThenResample(dailyTotals(s, dir)
-            .withColumn("t", col("d").cast("timestamp"))
-            .withColumn("cu", round(col("total") * 100)),
-          Seq("user_id"), col("t"), "MS", col("cu"), 3, "sum", "max", "mx")
-        .select(col("user_id"), col("period"),
-          (col("mx") / lit(100.0)).as("max_3d_total"))
-    }),
-
-    "q_dtr_variability" -> ((s, dir) => {
-      // interday variability: mean |delta| of daily totals per user
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      dailyTotals(s, dir)
-        // deltas quantize to exact cents per row; the mean is an exact
-        // int64 sum + two fixed-order divisions — engine-exact
-        .withColumn("dlt",
-          abs(uq(col("total"), 100)
-            - uq(lag(col("total"), 1).over(w), 100)))
-        .groupBy(col("user_id"))
-        .agg((sum(col("dlt")).cast("double") / count(col("dlt")) / lit(100.0))
-          .as("dtr_var"))
-    }),
-
-    "q_cum_exceedance_date" -> ((s, dir) => {
-      // degree_days_exceedance_date analog: first day cumulative total >= 2000
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      dailyTotals(s, dir)
-        .withColumn("cum", sum(col("total")).over(w))
-        .filter(col("cum") >= 2000)
-        .groupBy(col("user_id"))
-        .agg(min(col("d")).as("exceedance_date"))
-    }),
-
-    "q_token_freq" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(explode(split(lower(trim(col("text"))), "\\s+")).as("token"))
-        .groupBy(col("token"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    "q_heavy_hitters" -> ((s, dir) => {
-      // sketch-pruned EXACT heavy hitters: one Misra-Gries aggregate
-      // (native TypedImperativeAggregate, k=127 counters, mergeable
-      // partials) nominates candidates, a broadcast re-count verifies —
-      // output equals the plain group-by/HAVING the oracle runs, but at
-      // corpus scale the full-vocabulary shuffle never happens. The
-      // lossless-prune condition minFrac > 1/(k+1) holds (0.02 > 1/128).
-      TextStats.heavyHitters(
-          t(s, dir, "documents")
-            .select(explode(split(lower(trim(col("text"))), "\\s+")).as("token")),
-          "token", minFrac = 0.02, k = 127)
-        .select(col("item").as("token"), col("cnt"))
-    }),
-
-    "q_langid_heuristic" -> ((s, dir) => {
-      // raw count ratio (r10): one IEEE division of two exact ints is
-      // bit-identical in both engines — no round needed
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextStats.stopwordRatio(col("text")).as("stop_ratio"))
-        .withColumn("pred", when(col("stop_ratio") >= 0.02, "en").otherwise("other"))
-    }),
-
-    "q_ngram_jaccard_pairs" -> ((s, dir) => {
-      // blocked token-set jaccard with size-ratio pruning (tiny-vocab corpus;
-      // Zipfian corpora use Dedup.jaccardPairsByIndex's prefix filter instead)
-      Dedup.jaccardPairsBlocked(t(s, dir, "documents"),
-        "doc_id", "text", Seq("lang", "source"), 1, 0.85)
-    }),
-
-    "q_knn_top3" -> ((s, dir) => {
-      // r13 exactGrid: ranks AND scores ride the integer-grid cosine,
-      // so row_number ties resolve identically in both engines and the
-      // emitted double needs no round
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      Similarity.bruteForceTopK(e, "vec_id", "embedding", q, "query_id", "qvec", 3,
-          exactGrid = true)
-        .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
-    }),
-
-    "q_centroid_dims" -> ((s, dir) => {
-      // micro-quantized mean (r10): order-free int64 sum + fixed-order
-      // divisions instead of round(avg(float), 6)
-      t(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "e")))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(uq(col("e").cast("double"), 1e6)).cast("double")
-          / count(lit(1)) / lit(1e6)).as("dim_avg"))
-    }),
-
-    "q_stream_tumbling" -> ((s, dir) => {
-      graft.streaming.Streams.tumblingAgg(s, dir, "6 hours",
-        s"stream_tumbling_${System.nanoTime()}")
-    }),
-
-    "q_simhash_buckets" -> ((s, dir) => {
-      // portable md5-nibble SimHash (Dedup.simhashPortable): doc-level
-      // fingerprint + coarse bucket, integer-exact vs the oracle. The
-      // xxhash64 native expression (functions/SimHash64) is the fast path
-      // and is unit-tested against this semantics.
-      Dedup.simhashPortable(t(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc_id"), col("fp"),
-          shiftrightunsigned(col("fp"), 28).as("bucket"))
-    })
-  )
-
-  // ------------------------------------------------------------------
-  // DuckDB oracles (column names/types must match the Spark results).
-  // ------------------------------------------------------------------
-  def oracleSql: Map[String, String] = oracle1 ++ oracle2 ++ oracle3 ++ oracle4 ++ oracle5 ++ oracle6 ++ oracle7 ++ oracle8 ++ oracle9 ++ oracle10 ++ oracle11 ++ oracle12 ++ oracle13 ++ oracle14 ++ oracle15 ++ oracle17 ++ oracle18 ++ oracle19 ++ oracle20 ++ oracle21 ++ oracle22 ++ oracle23 ++ oracle24 ++ oracle25 ++ oracle26 ++ oracle27 ++ oracle28 ++ oracle29 ++ oracle30 ++ oracle31 ++ oracle32 ++ oracle33 ++ oracle34 ++ oracle35 ++ oracle36 ++ oracle37 ++ oracle38 ++ oracle39 ++ oracle40 ++ oracle41 ++ oracle42 ++ oracle43 ++ oracle44 ++ oracle45
-
-  private def oracle1: Map[String, String] = Map(
-    "q_agg_pricing_summary" ->
-      """select l_returnflag, l_linestatus,
-        | sum(l_quantity) sum_qty,
-        | cast(sum(cast(round(l_extendedprice*100) as bigint)) as double)
-        |   / 100.0 sum_base_price,
-        | cast(sum(cast(round(l_extendedprice*(1-l_discount)*1e4) as bigint))
-        |   as double) / 1e4 sum_disc_price,
-        | sum(l_quantity) / count(*) avg_qty,
-        | cast(sum(cast(round(l_extendedprice*100) as bigint)) as double)
-        |   / count(*) / 100.0 avg_price,
-        | count(*) count_order
-        |from lineitem where l_shipdate <= timestamp '1998-09-02'
-        |group by 1,2""".stripMargin,
-
-    "q_join_revenue_by_nation" ->
-      """select r_name, n_name,
-        | cast(sum(cast(round(l_extendedprice*(1-l_discount)*1e4) as bigint))
-        |   as double) / 1e4 revenue, count(*) n_lines
-        |from lineitem
-        | join orders on l_orderkey = o_orderkey
-        | join customer on o_custkey = c_custkey
-        | join nation on c_nationkey = n_nationkey
-        | join region on n_regionkey = r_regionkey
-        |group by 1,2""".stripMargin,
-
-    "q_topk_orders_per_segment" ->
-      """select c_mktsegment, rk, o_orderkey, o_totalprice
-        |from (select c_mktsegment, o_orderkey, o_totalprice,
-        |  row_number() over (partition by c_mktsegment
-        |    order by o_totalprice desc, o_orderkey) rk
-        | from orders join customer on o_custkey = c_custkey) t
-        |where rk <= 3""".stripMargin,
-
-    "q_anti_join_customers_no_orders" ->
-      """select c_mktsegment, count(*) n_customers from customer
-        |where not exists (select 1 from orders
-        |  where o_custkey = c_custkey and o_orderpriority = '1-URGENT')
-        |group by 1""".stripMargin,
-
-    "q_distinct_custs_per_priority" ->
-      """select o_orderpriority, count(distinct o_custkey) n_custs,
-        | count(*) n_orders from orders group by 1""".stripMargin,
-
-    "q_resample_daily_by_type" ->
-      """select event_type, cast(date_trunc('day', ts) as timestamp) period,
-        | count(*) n, floor((sum(value))*1e6 + 0.5)/1e6 total from events group by 1,2""".stripMargin,
-
-    "q_resample_ys_jul_lineitem" ->
-      """select l_returnflag,
-        | cast(make_timestamp(case when month(l_shipdate) >= 7 then year(l_shipdate)
-        |   else year(l_shipdate)-1 end, 7, 1, 0, 0, 0.0) as timestamp) period,
-        | sum(l_quantity) sum_qty, count(*) n_lines
-        |from lineitem group by 1,2""".stripMargin,
-
-    "q_resample_qs_dec_orders" ->
-      """with b as (select o_totalprice,
-        |  year(o_orderdate)*12 + (month(o_orderdate)-1) - 11 rel from orders)
-        |select cast(make_timestamp(((cast(floor(rel/3.0)*3 as int) + 11) // 12),
-        |  ((cast(floor(rel/3.0)*3 as int) + 11) % 12) + 1, 1, 0, 0, 0.0) as timestamp) period,
-        | cast(sum(cast(round(o_totalprice*100) as bigint)) as double)
-        |   / 100.0 sum_price, count(*) n_orders
-        |from b group by 1""".stripMargin,
-
-    "q_resample_7d_events" ->
-      """select cast(date '1970-01-01' + to_days(cast(floor(
-        |  date_diff('day', date '1970-01-01', ts)/7.0)*7 as int)) as timestamp) period,
-        | count(*) n, cast(sum(cast(round(value*100) as bigint)) as double)
-        |   / count(*) / 100.0 avg_value
-        |from events group by 1""".stripMargin,
-
-    "q_rolling_mean_7" ->
-      """select user_id, event_id, rmean from (
-        | select user_id, event_id,
-        |  row_number() over (partition by user_id order by ts) rn,
-        |  cast(sum(cast(round(value*100) as bigint)) over (
-        |    partition by user_id order by ts
-        |    rows between 6 preceding and current row) as double)
-        |    / 7.0 / 100.0 rmean
-        | from events) t where rn >= 7""".stripMargin,
-
-    "q_threshold_wet_days" ->
-      s"""with daily as ($dailySql)
-         |select user_id,
-         | cast(coalesce(sum(case when total > 100 then 1 end), 0) as bigint) wet_days
-         |from daily group by 1""".stripMargin,
-
-    "q_degree_days" ->
-      s"""with daily as ($dailySql)
-         |select user_id, floor((sum(greatest(total - 100, 0)))*1e6 + 0.5)/1e6 dd
-         |from daily group by 1""".stripMargin,
-
-    "q_first_occurrence_over_300" ->
-      """select user_id, min(case when value > 300 then ts end) first_ts
-        |from events group by 1""".stripMargin,
-
-    "q_longest_run_days" ->
-      s"""with daily as ($dailySql),
-         |qual as (select user_id, d,
-         |  date_diff('day', date '1970-01-01', d)
-         |    - row_number() over (partition by user_id order by d) grp
-         | from daily where total > 50),
-         |runs as (select user_id, grp, count(*) len from qual group by 1,2)
-         |select user_id, max(len) longest_run from runs group by 1""".stripMargin,
-
-    "q_run_events_3d" ->
-      s"""with daily as ($dailySql),
-         |qual as (select user_id, d,
-         |  date_diff('day', date '1970-01-01', d)
-         |    - row_number() over (partition by user_id order by d) grp
-         | from daily where total > 50),
-         |runs as (select user_id, grp, count(*) len from qual group by 1,2)
-         |select user_id, count(*) n_runs, cast(sum(len) as bigint) days_in_runs
-         |from runs where len >= 3 group by 1""".stripMargin,
-
-    "q_suspicious_repeats" ->
-      """with lagged as (select user_id, ts, event_type,
-        |  (event_type = lag(event_type) over (partition by user_id order by ts)) same
-        | from events),
-        |flagged as (select user_id, ts,
-        |  case when coalesce(same, false) then 1 else 0 end c from lagged),
-        |runs as (select user_id, grp, count(*) + 1 repeat_len from (
-        |  select user_id, ts, c,
-        |   sum(1 - c) over (partition by user_id order by ts
-        |     rows between unbounded preceding and current row) grp
-        |  from flagged) t where c = 1 group by 1,2)
-        |select user_id, count(*) n_suspicious, max(repeat_len) max_repeat
-        |from runs where repeat_len >= 4 group by 1""".stripMargin,
-
-    "q_percentile_by_type" ->
-      """select event_type, floor((quantile_cont(value, 0.9))*1e6 + 0.5)/1e6 p90,
-        | floor((quantile_cont(value, 0.5))*1e6 + 0.5)/1e6 p50 from events group by 1""".stripMargin,
-
-    "q_ensemble_daily_stats" ->
-      s"""with daily as ($dailySql)
-         |select d, floor((avg(total))*1e6 + 0.5)/1e6 ens_mean, floor((stddev_samp(total))*1e6 + 0.5)/1e6 ens_std,
-         | floor((min(total))*1e6 + 0.5)/1e6 ens_min, floor((max(total))*1e6 + 0.5)/1e6 ens_max,
-         | count(*) n_members
-         |from daily group by 1""".stripMargin,
-
-    "q_doc_stats" ->
-      """select doc_id,
-        | case when length(trim(text)) = 0 then 0
-        |   else len(string_split_regex(trim(text), '\s+')) end n_tokens,
-        | cast(length(regexp_replace(text, '\s+', '', 'g')) as double)
-        |   / len(string_split_regex(trim(text), '\s+')) mean_tok_len,
-        | substr(md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')), 1, 16) fp
-        |from documents""".stripMargin,
-
-    "q_dedup_bag" ->
-      """select md5(array_to_string(list_sort(
-        |   string_split_regex(lower(trim(text)), '\s+')), ' ')) bag_key,
-        | min(doc_id) keeper_id, count(*) n_members
-        |from documents group by 1""".stripMargin,
-
-    "q_cosine_to_query" ->
-      s"""with q as (select embedding qvec from embeddings where vec_id = 0)
-         |select vec_id, cosine from (
-         | select e.vec_id, ${cosQSql("e.embedding", "q.qvec")} cosine
-         | from embeddings e, q) t
-         |where cosine > 0.2""".stripMargin
-  )
-
-  private def oracle2: Map[String, String] = Map(
-    "q_doy_percentile_exceedance" ->
-      s"""with daily as ($dailySql),
-         |pool as (select d1.user_id, d1.d, quantile_cont(d2.total, 0.9) p90
-         | from daily d1 join daily d2 on d1.user_id = d2.user_id
-         |  and d2.d between d1.d - 2 and d1.d + 2
-         | group by 1,2)
-         |select d.user_id,
-         | cast(coalesce(sum(case when d.total > p.p90 then 1 end),0) as bigint) n_days_over
-         |from daily d join pool p on d.user_id = p.user_id and d.d = p.d
-         |group by 1""".stripMargin,
-
-    "q_season_bounds" ->
-      s"""with daily as ($dailySql),
-         |base as (select user_id, d, (total > 50) q,
-         |  row_number() over (partition by user_id order by d) rn from daily),
-         |op as (select user_id, d,
-         |  rn - row_number() over (partition by user_id order by d) grp
-         | from base where q),
-         |openruns as (select user_id, grp, min(d) rs, count(*) len from op group by 1,2),
-         |starts as (select user_id, min(rs) season_start from openruns where len >= 3 group by 1),
-         |clbase as (select user_id, d, q,
-         |  row_number() over (partition by user_id order by d) rn2
-         | from base where d >= date '2024-01-15'),
-         |cl as (select user_id, d,
-         |  rn2 - row_number() over (partition by user_id order by d) grp
-         | from clbase where not q),
-         |closeruns as (select user_id, grp, min(d) re, count(*) len from cl group by 1,2),
-         |ends as (select user_id, min(re) season_end from closeruns where len >= 3 group by 1),
-         |lastd as (select user_id, max(d) ld from daily group by 1)
-         |select s.user_id, s.season_start, e.season_end,
-         | cast(case when e.season_end is not null
-         |   then date_diff('day', s.season_start, e.season_end)
-         |   else date_diff('day', s.season_start, l.ld) + 1 end as int) season_length
-         |from starts s left join ends e using (user_id) join lastd l using (user_id)""".stripMargin,
-
-    // step-identical dense replay of the stepwise decay: one row per
-    // day from each user's first to last observation (v = 0 on missing
-    // days), state_d = state_{d-1} * 0.9 + v_d — only IEEE multiply and
-    // add with the same parsed constant, so the recursion is
-    // bit-identical to the Spark kernel; rows emit at observation days
-    "q_api_recursive" ->
-      s"""with recursive daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t, total from daily),
-         |bounds as (select user_id, min(t) t0, max(t) t1 from dd group by 1),
-         |r as (
-         |  select b.user_id, b.t0 as t, b.t1,
-         |    coalesce(d.total, 0) * 1.0 as api
-         |  from bounds b left join dd d on d.user_id = b.user_id and d.t = b.t0
-         |  union all
-         |  select r.user_id, r.t + 1, r.t1,
-         |    r.api * cast(0.9 as double) + coalesce(d.total, 0)
-         |  from r left join dd d on d.user_id = r.user_id and d.t = r.t + 1
-         |  where r.t < r.t1)
-         |select r.user_id, cast(r.t as int) t,
-         | floor(r.api*1e6 + 0.5)/1e6 api
-         |from r join dd on dd.user_id = r.user_id and dd.t = r.t""".stripMargin,
-
-    "q_sessionize" ->
-      """with e as (select user_id, ts,
-        |  epoch_us(ts) - lag(epoch_us(ts)) over (partition by user_id order by ts) gap
-        | from events),
-        |s1 as (select user_id, ts,
-        |  case when gap is null or gap > 1800000000 then 1 else 0 end ns from e),
-        |s2 as (select user_id, sum(ns) over (partition by user_id order by ts
-        |  rows between unbounded preceding and current row) sess_id from s1),
-        |sess as (select user_id, sess_id, count(*) n_events from s2 group by 1,2)
-        |select user_id, count(*) n_sessions,
-        | cast(sum(n_events) as double) / count(*) avg_events,
-        | cast(max(n_events) as bigint) max_events
-        |from sess group by 1""".stripMargin,
-
-    "q_asof_last_error" ->
-      """select user_id, event_id, last_error_ts from (
-        | select user_id, event_id, event_type,
-        |  last_value(case when event_type='error' then ts end ignore nulls) over
-        |   (partition by user_id order by ts
-        |    rows between unbounded preceding and 1 preceding) last_error_ts
-        | from events) t where event_type = 'purchase'""".stripMargin,
-
-    "q_pivot_user_type" ->
-      """select user_id,
-        | cast(coalesce(sum(case when event_type='view' then 1 end),0) as bigint) n_view,
-        | cast(coalesce(sum(case when event_type='click' then 1 end),0) as bigint) n_click,
-        | cast(coalesce(sum(case when event_type='purchase' then 1 end),0) as bigint) n_purchase,
-        | cast(coalesce(sum(case when event_type='signup' then 1 end),0) as bigint) n_signup,
-        | cast(coalesce(sum(case when event_type='error' then 1 end),0) as bigint) n_error
-        |from events group by 1""".stripMargin,
-
-    "q_running_monthly_revenue" ->
-      """with monthly as (select l_returnflag,
-        |  cast(date_trunc('month', l_shipdate) as timestamp) period,
-        |  cast(sum(cast(round(l_extendedprice*(1-l_discount)*1e4) as bigint))
-        |    as bigint) ru
-        | from lineitem group by 1,2)
-        |select l_returnflag, period, cast(ru as double) / 1e4 revenue,
-        | cast(sum(ru) over (partition by l_returnflag order by period
-        |   rows between unbounded preceding and current row) as double)
-        |   / 1e4 cum_revenue
-        |from monthly""".stripMargin,
-
-    "q_time_bnds" ->
-      """select distinct cast(date_trunc('month', o_orderdate) as timestamp) period,
-        | cast(date_trunc('month', o_orderdate) + interval 1 month as timestamp) period_end,
-        | cast(date_diff('day', cast(date_trunc('month', o_orderdate) as date),
-        |   cast(date_trunc('month', o_orderdate) + interval 1 month as date)) as int) n_days
-        |from orders""".stripMargin,
-
-    "q_zones_totalprice" ->
-      """select cast(floor(o_totalprice/50000) as int) bin, count(*) n,
-        | min(o_totalprice) min_price, max(o_totalprice) max_price
-        |from orders group by 1""".stripMargin,
-
-    "q_missing_days" ->
-      s"""with daily as ($dailySql)
-         |select user_id, count(distinct d) n_present,
-         | 31 - count(distinct d) n_missing,
-         | (31 - count(distinct d)) > 0 missing_any
-         |from daily group by 1""".stripMargin,
-
-    "q_dry_spell_rolling" ->
-      s"""with daily as ($dailySql),
-         |w1 as (select user_id, d, row_number() over (partition by user_id order by d) rn,
-         |  sum(total) over (partition by user_id order by d
-         |    rows between 2 preceding and current row) wsum from daily),
-         |w2 as (select user_id, d, case when rn >= 3 and wsum < 40 then 1 else 0 end qual from w1),
-         |w3 as (select user_id, max(qual) over (partition by user_id order by d
-         |  rows between current row and 2 following) covered from w2)
-         |select user_id,
-         | cast(coalesce(sum(case when covered = 1 then 1 end),0) as bigint) days_in_dry_spells
-         |from w3 group by 1""".stripMargin,
-
-    "q_max_3day_total" ->
-      s"""with daily as ($dailySql),
-         |r as (select user_id, d, row_number() over (partition by user_id order by d) rn,
-         |  sum(round(total*100)) over (partition by user_id order by d
-         |    rows between 2 preceding and current row) w3 from daily)
-         |select user_id, cast(date_trunc('month', d) as timestamp) period,
-         | max(case when rn >= 3 then w3 end) / 100.0 max_3d_total
-         |from r group by 1,2""".stripMargin,
-
-    "q_dtr_variability" ->
-      s"""with daily as ($dailySql),
-         |l as (select user_id,
-         |  abs(cast(round(total*100) as bigint)
-         |    - cast(round(lag(total) over (partition by user_id order by d)
-         |        * 100) as bigint)) dlt
-         | from daily)
-         |select user_id,
-         | cast(sum(dlt) as double) / count(dlt) / 100.0 dtr_var
-         |from l group by 1""".stripMargin,
-
-    "q_cum_exceedance_date" ->
-      s"""with daily as ($dailySql),
-         |c as (select user_id, d, sum(total) over (partition by user_id order by d
-         |  rows between unbounded preceding and current row) cum from daily)
-         |select user_id, min(d) exceedance_date from c where cum >= 2000 group by 1""".stripMargin,
-
-    "q_token_freq" ->
-      """select token, count(*) n from (
-        | select unnest(string_split_regex(lower(trim(text)), '\s+')) token
-        | from documents) t group by 1""".stripMargin,
-
-    "q_heavy_hitters" ->
-      """with toks as (
-        | select unnest(string_split_regex(lower(trim(text)), '\s+')) token
-        | from documents),
-        |tot as (select count(*) n from toks)
-        |select token, cast(count(*) as bigint) cnt
-        |from toks, tot group by token, n
-        |having count(*) >= ceil(0.02 * n)""".stripMargin,
-
-    "q_langid_heuristic" ->
-      """select doc_id, stop_ratio,
-        | case when stop_ratio >= 0.02 then 'en' else 'other' end pred
-        |from (select doc_id, cast(len(list_filter(
-        |   string_split_regex(lower(trim(text)), '\s+'),
-        |   x -> x in ('the','a','of','to','and','in','is','that'))) as double)
-        |  / len(string_split_regex(lower(trim(text)), '\s+')) stop_ratio
-        | from documents) t""".stripMargin,
-
-    "q_ngram_jaccard_pairs" ->
-      """with g as (select doc_id, lang, source,
-        |  list_distinct(string_split_regex(lower(trim(text)), '\s+')) grams
-        | from documents)
-        |select id_a, id_b, jaccard from (
-        | select a.doc_id id_a, b.doc_id id_b,
-        |  cast(len(list_intersect(a.grams, b.grams)) as double)
-        |    / len(list_distinct(list_concat(a.grams, b.grams))) jaccard
-        | from g a join g b on a.lang = b.lang and a.source = b.source
-        |  and a.doc_id < b.doc_id) t
-        |where jaccard >= 0.85""".stripMargin,
-
-    "q_knn_top3" ->
-      s"""with q as (select vec_id query_id, embedding qvec from embeddings where vec_id < 5),
-         |sims as (select q.query_id, e.vec_id,
-         |  ${cosQSql("e.embedding", "q.qvec")} cosine
-         | from embeddings e, q),
-         |ranked as (select query_id, vec_id, cosine,
-         |  row_number() over (partition by query_id order by cosine desc, vec_id) rank
-         | from sims)
-         |select query_id, cast(rank as int) rank, vec_id, cosine
-         |from ranked where rank <= 3""".stripMargin,
-
-    "q_centroid_dims" ->
-      """select label, cast(i as int) pos,
-        | cast(sum(cast(floor(cast(embedding[i+1] as double) * 1e6 + 0.5) as bigint))
-        |   as double) / count(*) / 1e6 dim_avg
-        |from embeddings, (select unnest(range(0,64)) i) t group by 1,2""".stripMargin,
-
-    "q_stream_tumbling" ->
-      """select make_timestamp(cast(floor(epoch_us(ts)/(21600*1000000.0))
-        |   *21600*1000000 as bigint)) w_start,
-        | event_type, count(*) n, cast(cast(sum(value) as decimal(38,6)) as double) total
-        |from events group by 1,2""".stripMargin
-  )
-
-  // ---- batch 3: converters, fits, robustness, analogs, QA flags ----------
-  private def queries3: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_converters_bioclim" -> ((s, dir) => {
-      // physics converters on synthesised inputs: tas degC, dewpoint, wind km/h
-      import graft.indices.Converters._
-      val e = t(s, dir, "events")
-        .withColumn("tas", col("value") / 10.0 - 10.0)
-        .withColumn("tdps", col("value") / 10.0 - 15.0)
-        .withColumn("wind", col("value") / 10.0 + 5.0)
-      e.select(col("event_id"),
-        qk(humidex(col("tas"), col("tdps")), 6).as("humidex"),
-        qk(relativeHumidity(col("tas"), col("tdps")), 6).as("hurs"),
-        qk(windChill(col("tas"), col("wind")), 6).as("wind_chill"),
-        qk(dayLength(col("user_id") - lit(60.0), dayofyear(col("ts"))), 6).as("day_len"))
-    }),
-
-    "q_heat_index" -> ((s, dir) => {
-      import graft.indices.Converters._
-      val e = t(s, dir, "events")
-        .withColumn("tas", col("value") / 12.0 + 26.0)
-        .withColumn("hurs", pmod(col("value"), lit(60.0)) + 40.0)
-      e.select(col("event_id"), qk(heatIndex(col("tas"), col("hurs")), 6).as("heat_index"))
-    }),
-
-    "q_fit_gamma_mm" -> ((s, dir) => {
-      // stats.fit, method-of-moments gamma: alpha = mean^2/var, scale = var/mean
-      t(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          qk(pow(avg(col("value")), 2) / var_pop(col("value")), 6).as("alpha"),
-          qk(var_pop(col("value")) / avg(col("value")), 6).as("scale"))
-    }),
-
-    "q_parametric_quantile_normal" -> ((s, dir) => {
-      // parametric_quantile: normal ppf at p=0.9 from fitted (mean, std)
-      t(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(qk(avg(col("value")) + lit(1.2815515655446004) * stddev_samp(col("value")), 6)
-          .as("q90_normal"))
-    }),
-
-    "q_lmoments" -> ((s, dir) => {
-      // L-moment sample statistics (PWM basis of stats.fit)
-      val sorted = t(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(sort_array(collect_list(col("value"))).as("arr"))
-      val (l1, l2, t3) = Stats.lMoments(col("arr"))
-      sorted.select(col("event_type"), qk(l1, 6).as("l1"),
-        qk(l2, 6).as("l2"), qk(t3, 6).as("t3"))
-    }),
-
-    "q_robustness_fractions" -> ((s, dir) => {
-      // ensembles.robustness_fractions: users = members, Jan 1-15 ref vs 16-31 fut
-      val e = t(s, dir, "events")
-        .withColumn("fut", col("ts").cast("date") >= lit("2024-01-16"))
-      val per = e.groupBy(col("event_type"), col("user_id")).agg(
-        avg(when(!col("fut"), col("value"))).as("m1"),
-        var_samp(when(!col("fut"), col("value"))).as("v1"),
-        count(when(!col("fut"), 1)).as("n1"),
-        avg(when(col("fut"), col("value"))).as("m2"),
-        var_samp(when(col("fut"), col("value"))).as("v2"),
-        count(when(col("fut"), 1)).as("n2"))
-      val tstat = Stats.welchT(col("m2"), col("v2"), col("n2"), col("m1"), col("v1"), col("n1"))
-      per.withColumn("tv", tstat)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_members"),
-          qk(avg(when(col("m2") > col("m1"), 1.0).otherwise(0.0)), 6).as("frac_pos"),
-          qk(avg(when(abs(col("tv")) > 1.96, 1.0).otherwise(0.0)), 6).as("frac_sig"))
-    }),
-
-    "q_ks_analog" -> ((s, dir) => {
-      // spatial_analogs with kolmogorov_smirnov metric: each type vs 'view'
-      val e = t(s, dir, "events")
-      graft.analog.Analog.ksStatistic(
-          e.select(col("event_type"), col("value")), "event_type", "value",
-          e.filter(col("event_type") === "view").select(col("value")))
-        .select(col("event_type"), qk(col("ks"), 6).as("ks"))
-    }),
-
-    "q_data_flags" -> ((s, dir) => {
-      // dataflags battery: negative values, > mean+3sigma, < p01 per type
-      val e = t(s, dir, "events")
-      val stats = e.groupBy(col("event_type").as("et")).agg(
-        (avg(col("value")) + lit(3.0) * stddev_samp(col("value"))).as("hi"),
-        percentile(col("value"), lit(0.01)).as("lo"))
-      e.join(broadcast(stats), col("event_type") === col("et"))
-        .groupBy(col("event_type"))
-        .agg(coalesce(sum(when(col("value") <= 0, 1L)), lit(0L)).as("n_neg"),
-          coalesce(sum(when(col("value") > col("hi"), 1L)), lit(0L)).as("n_hi"),
-          coalesce(sum(when(col("value") < col("lo"), 1L)), lit(0L)).as("n_lo"))
-    })
-  )
-
-  private def oracle3: Map[String, String] = Map(
-    "q_converters_bioclim" ->
-      """with e as (select event_id, user_id, ts,
-        |  value/10.0 - 10.0 tas, value/10.0 - 15.0 tdps, value/10.0 + 5.0 wind
-        | from events),
-        |f as (select event_id,
-        |  tas + (5.0/9.0) * (6.112 * exp(17.62 * tdps / (243.12 + tdps)) - 10.0) humidex,
-        |  100.0 * (6.112 * exp(17.62 * tdps / (243.12 + tdps)))
-        |       / (6.112 * exp(17.62 * tas / (243.12 + tas))) hurs,
-        |  13.12 + 0.6215 * tas - 11.37 * pow(wind, 0.16)
-        |       + 0.3965 * tas * pow(wind, 0.16) wind_chill,
-        |  (24.0/pi()) * acos(greatest(-1.0, least(1.0,
-        |    -tan(radians(user_id - 60.0)) *
-        |     tan(0.409 * sin(2.0*pi()/365.0 * dayofyear(ts) - 1.39))))) day_len
-        | from e)
-        |select event_id,
-        | floor((humidex)*1e6 + 0.5)/1e6 humidex,
-        | floor((hurs)*1e6 + 0.5)/1e6 hurs,
-        | floor((wind_chill)*1e6 + 0.5)/1e6 wind_chill,
-        | floor((day_len)*1e6 + 0.5)/1e6 day_len
-        |from f""".stripMargin,
-
-    "q_heat_index" ->
-      """with e as (select event_id, value/12.0 + 26.0 tas, (value % 60.0) + 40.0 hurs
-        | from events),
-        |f as (select event_id, tas * 1.8 + 32.0 tf, hurs from e),
-        |g as (select event_id,
-        |  -42.379 + 2.04901523*tf + 10.14333127*hurs - 0.22475541*tf*hurs
-        |  - 6.83783e-3*tf*tf - 5.481717e-2*hurs*hurs + 1.22874e-3*tf*tf*hurs
-        |  + 8.5282e-4*tf*hurs*hurs - 1.99e-6*tf*tf*hurs*hurs hif
-        | from f)
-        |select event_id, floor(((hif - 32.0) / 1.8)*1e6 + 0.5)/1e6 heat_index
-        |from g""".stripMargin,
-
-    "q_fit_gamma_mm" ->
-      """select event_type, count(*) n,
-        | floor((pow(avg(value), 2) / var_pop(value))*1e6 + 0.5)/1e6 alpha,
-        | floor((var_pop(value) / avg(value))*1e6 + 0.5)/1e6 scale
-        |from events group by 1""".stripMargin,
-
-    "q_parametric_quantile_normal" ->
-      """select event_type,
-        | floor((avg(value) + 1.2815515655446004 * stddev_samp(value)
-        |)*1e6 + 0.5)/1e6 q90_normal
-        |from events group by 1""".stripMargin,
-
-    "q_lmoments" ->
-      """with r as (select event_type, value v,
-        |  row_number() over (partition by event_type order by value) rk,
-        |  count(*) over (partition by event_type) n from events),
-        |b as (select event_type,
-        |  avg(v) b0,
-        |  sum(v * (rk - 1.0) / (n - 1.0)) / any_value(n) b1,
-        |  sum(v * (rk - 1.0) * (rk - 2.0) / ((n - 1.0) * (n - 2.0))) / any_value(n) b2
-        | from r group by 1)
-        |select event_type,
-        | floor((b0)*1e6 + 0.5)/1e6 l1,
-        | floor((2*b1 - b0)*1e6 + 0.5)/1e6 l2,
-        | floor(((6*b2 - 6*b1 + b0) / (2*b1 - b0))*1e6 + 0.5)/1e6 t3
-        |from b""".stripMargin,
-
-    "q_robustness_fractions" ->
-      """with per as (select event_type, user_id,
-        |  avg(case when cast(ts as date) < date '2024-01-16' then value end) m1,
-        |  var_samp(case when cast(ts as date) < date '2024-01-16' then value end) v1,
-        |  count(case when cast(ts as date) < date '2024-01-16' then 1 end) n1,
-        |  avg(case when cast(ts as date) >= date '2024-01-16' then value end) m2,
-        |  var_samp(case when cast(ts as date) >= date '2024-01-16' then value end) v2,
-        |  count(case when cast(ts as date) >= date '2024-01-16' then 1 end) n2
-        | from events group by 1,2),
-        |w as (select event_type, m1, m2,
-        |  (m2 - m1) / sqrt(v2/n2 + v1/n1) tv from per)
-        |select event_type, count(*) n_members,
-        | floor((avg(case when m2 > m1 then 1.0 else 0.0 end))*1e6 + 0.5)/1e6 frac_pos,
-        | floor((avg(case when abs(tv) > 1.96 then 1.0 else 0.0 end))*1e6 + 0.5)/1e6 frac_sig
-        |from w group by 1""".stripMargin,
-
-    "q_ks_analog" ->
-      """with g as (select distinct event_type from events),
-        |u as (select event_type, value v, 1 a, 0 b from events
-        |      union all
-        |      select g.event_type, e.value v, 0 a, 1 b
-        |      from events e cross join g where e.event_type = 'view'),
-        |c as (select event_type, v,
-        |  sum(a) over (partition by event_type order by v
-        |    range between unbounded preceding and current row) ca,
-        |  sum(b) over (partition by event_type order by v
-        |    range between unbounded preceding and current row) cb,
-        |  sum(a) over (partition by event_type) na,
-        |  sum(b) over (partition by event_type) nb
-        | from u)
-        |select event_type,
-        | floor((max(abs(cast(ca as double)/na - cast(cb as double)/nb))
-        |)*1e6 + 0.5)/1e6 ks
-        |from c group by 1""".stripMargin,
-
-    "q_data_flags" ->
-      """with st as (select event_type et,
-        |  avg(value) + 3.0 * stddev_samp(value) hi,
-        |  quantile_cont(value, 0.01) lo
-        | from events group by 1)
-        |select event_type,
-        | cast(coalesce(sum(case when value <= 0 then 1 end),0) as bigint) n_neg,
-        | cast(coalesce(sum(case when value > hi then 1 end),0) as bigint) n_hi,
-        | cast(coalesce(sum(case when value < lo then 1 end),0) as bigint) n_lo
-        |from events join st on event_type = et group by 1""".stripMargin
-  )
-
-  // ---- batch 4: sequential drought kernel, ensemble percentiles ----------
-  private def queries4: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_kbdi_recursive" -> ((s, dir) => {
-      // Real Keetch-Byram drought index (fire/_ffdi.py:44, Finkele 2006
-      // s2.1.1): runoff-aware two-state recursion with the published ET
-      // term, capped at 203.2 mm; oracle is a step-identical recursive CTE.
-      val wx = weatherDaily(s, dir)
-      // pa: quantize the (order-dependent) float sum FIRST — rain sums are
-      // exactly 4-decimal so the round can't tie — then scale by a constant.
-      val in = wx.select(col("user_id").as("key"), col("t"), col("rain"),
-          (col("airt") + 5.0).as("tmax"),
-          ((sum(floor(col("rain") * 1e4 + 0.5).cast("long"))
-            .over(Window.partitionBy("user_id")).cast("double") / 1e4)
-            * 12.175).as("pa"))
-      graft.indices.Fire.keetchByramDroughtIndex(in)
-        .select(col("key").as("user_id"), col("t"), qk(col("kbdi"), 4).as("kbdi"))
-    }),
-
-    "q_ensemble_percentiles" -> ((s, dir) => {
-      graft.ensembles.Ensembles.percentiles(
-          dailyTotals(s, dir), Seq("d"), col("total"), Seq(0.1, 0.5, 0.9))
-        .select(col("d"), qk(col("p10"), 6).as("p10"),
-          qk(col("p50"), 6).as("p50"), qk(col("p90"), 6).as("p90"))
-    })
-  )
-
-  private def oracle4: Map[String, String] = Map(
-    "q_kbdi_recursive" ->
-      s"""with recursive $wxSql, $kbSql
-         |select user_id, t,
-         | floor(kbdi*1e4 + 0.5)/1e4 kbdi
-         |from kb where rn > 0""".stripMargin,
-
-    "q_ensemble_percentiles" ->
-      s"""with daily as ($dailySql)
-         |select d,
-         | floor((quantile_cont(total, 0.1))*1e6 + 0.5)/1e6 p10,
-         | floor((quantile_cont(total, 0.5))*1e6 + 0.5)/1e6 p50,
-         | floor((quantile_cont(total, 0.9))*1e6 + 0.5)/1e6 p90
-         |from daily group by 1""".stripMargin
-  )
-
-  // ---- batch 5: Sen slope, bivariate spells, overlapping periods ---------
-  private def queries5: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_sen_slope" -> ((s, dir) => {
-      // Theil-Sen slope (hydrology.sen_slope, _hydrology.py:894): median of
-      // pairwise slopes per entity; exact type-7 median over the pair cloud
-      val daily = dailyTotals(s, dir)
-        .select(col("user_id"), datediff(col("d"), to_date(lit("1970-01-01"))).as("t"),
-          col("total"))
-      val a = daily.alias("a"); val b = daily.alias("b")
-      val slopes = a
-        .join(b, col("a.user_id") === col("b.user_id") && col("a.t") < col("b.t"))
-        .select(col("a.user_id").as("user_id"),
-          ((col("b.total") - col("a.total")) / (col("b.t") - col("a.t"))).as("slope"))
-      // lower median as a discrete order statistic (interpolated medians
-      // differ between engines in the last ulp exactly at .5 boundaries),
-      // selected with a spill-able window sort over the distributed pair
-      // cloud — no collect_list, so executor memory stays bounded by the
-      // sort spill buffer however large n^2 grows per entity
-      val wOrd = Window.partitionBy(col("user_id")).orderBy(col("slope"))
-      val wAll = Window.partitionBy(col("user_id"))
-      slopes
-        .withColumn("_rn", row_number().over(wOrd))
-        .withColumn("n_pairs", count(lit(1)).over(wAll))
-        .filter(col("_rn") === ceil(col("n_pairs") / 2.0).cast("int"))
-        .select(col("user_id"), col("slope").as("sen_slope"), col("n_pairs"))
-    }),
-
-    "q_bivariate_spell" -> ((s, dir) => {
-      // bivariate_spell_length_statistics (generic.py:690): calendar-
-      // consecutive runs where BOTH daily conditions hold
-      val daily = dailyTotals(s, dir)
-        .withColumn("dnum", datediff(col("d"), to_date(lit("1970-01-01"))))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      daily.filter(col("total") > 50 && col("n_events") >= 2)
-        .withColumn("grp", col("dnum") - row_number().over(w))
-        .groupBy(col("user_id"), col("grp"))
-        .agg(count(lit(1)).as("len"))
-        .filter(col("len") >= 2)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_spells"), max(col("len")).as("max_spell"))
-    }),
-
-    "q_stack_periods" -> ((s, dir) => {
-      // stack_periods (calendar.py:1396): overlapping 7-day windows, stride 3,
-      // origin 2024-01-01 (dnum 19723) - row explosion, same layout as the
-      // reference's stacked period dim
-      val daily = dailyTotals(s, dir)
-        .withColumn("dnum", datediff(col("d"), to_date(lit("1970-01-01"))))
-      daily
-        .withColumn("pstart", explode(sequence(lit(19723), lit(19753), lit(3))))
-        .filter(col("pstart") <= col("dnum") && col("dnum") < col("pstart") + 7)
-        .groupBy(col("user_id"), col("pstart"))
-        .agg(count(lit(1)).as("n_days"), qk(avg(col("total")), 6).as("avg_total"))
-    })
-  )
-
-  private def oracle5: Map[String, String] = Map(
-    "q_sen_slope" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t, total from daily),
-         |pairs as (select a.user_id,
-         |   (b.total - a.total) / (b.t - a.t) slope
-         | from dd a join dd b on a.user_id = b.user_id and a.t < b.t),
-         |arrs as (select user_id, list_sort(list(slope)) a, count(*) n
-         | from pairs group by 1)
-         |select user_id, a[cast(ceil(n/2.0) as int)] sen_slope, n n_pairs
-         |from arrs""".stripMargin,
-
-    "q_bivariate_spell" ->
-      s"""with daily as ($dailySql),
-         |q as (select user_id, d, date_diff('day', date '1970-01-01', d)
-         |    - row_number() over (partition by user_id order by d) grp
-         |  from daily where total > 50 and n_events >= 2),
-         |runs as (select user_id, grp, count(*) len from q group by 1,2)
-         |select user_id, count(*) n_spells, max(len) max_spell
-         |from runs where len >= 2 group by 1""".stripMargin,
-
-    "q_stack_periods" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) dnum, total from daily),
-         |st as (select unnest(range(19723, 19754, 3)) pstart)
-         |select user_id, cast(pstart as int) pstart, count(*) n_days,
-         | floor((avg(total))*1e6 + 0.5)/1e6 avg_total
-         |from dd join st on pstart <= dnum and dnum < pstart + 7
-         |group by 1,2""".stripMargin
-  )
-
-  // ---- batch 6: IVF ANN, standardized index ------------------------------
-  private def queries6: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_ivf_topk" -> ((s, dir) => {
-      // IVF-partitioned ANN: label-mean centroids, probe 3 cells, top-5.
-      // r13 exactGrid: the scoring cosine rides the integer grid (exact
-      // ranks + unrounded scores); centroid assignment keeps its float
-      // arithmetic — the oracle replays it and the fixed corpus sits far
-      // off assignment boundaries
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      Similarity.ivfTopK(e, "vec_id", "embedding", "label", q, k = 5, nprobe = 3,
-          exactGrid = true)
-        .select(col("rank"), col("vec_id"), col("label"), col("cosine"))
-    }),
-
-    "q_ivf_incremental" -> ((s, dir) => {
-      // r15: INCREMENTAL IVF index maintenance (pipeline.IvfIndex + the
-      // streaming sink) — the ANN twin of q_zorder_incremental, the
-      // FAISS/Milvus LSM-segment design on Spark. Centroids PIN on the
-      // ≡3 (mod 4) quarter of embeddings (per-label dimension means,
-      // ivfTopK's clustering); segment 0 holds that quarter's
-      // assignments; three streamed batches (the other quarters) each
-      // land as one new immutable segment assigned against the PINNED
-      // centroids — existing segments never rewrite, so per-batch cost
-      // is O(batch). The oracle recomputes assignments and the probe
-      // from scratch: per-list posting stats prove no loss, no
-      // duplication and assignment identity through the segment rolls;
-      // the probe block proves the directory-pruned top-k (only
-      // seg/*/list=K dirs open) equals the full-candidate ranking on
-      // the integer-grid cosine.
-      val e = t(s, dir, "embeddings")
-      val m = pmod(col("vec_id"), lit(4))
-      val init = e.filter(m === 3)
-      val batches = Seq(0, 1, 2).map(i => e.filter(m === i))
-      val cent = init
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivf_q_").toString + "/ivf"
-      val fin = graft.streaming.Streams.ivfReplayVersioned(
-        s, init, batches, root, "vec_id", "embedding", cent)
-      val p = graft.pipeline.IvfIndex.readPointer(root).get
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      val probe = graft.pipeline.IvfIndex.probeTopK(s, root, q, k = 5, nprobe = 3)
-        .agg(count(lit(1)).as("probe_n"), max(col("cosine")).as("probe_max"),
-          min(col("cosine")).as("probe_min"),
-          sum(col("vec_id")).as("probe_ids"))
-      val out = fin.groupBy(col("list"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum"),
-          min(col("vec_id")).as("min_id"), max(col("vec_id")).as("max_id"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .crossJoin(probe)
-        .localCheckpoint(true) // ≤ nlists rows, eager: the index can go
-      graft.pipeline.IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_delete" -> ((s, dir) => {
-      // r15: IVF tombstone deletes + LSM re-insert visibility. Same
-      // pinned centroids as q_ivf_incremental; inserts land the ≡0 and
-      // ≡1 quarters, a tombstone batch deletes every vec_id ≡0 (mod 8)
-      // WITHOUT touching any posting segment, then the ≡2 quarter plus
-      // a RE-INSERT of the ≡0 (mod 16) ids lands after it — sequence
-      // order makes exactly those live again. The oracle computes the
-      // closed-form live set (everything except ≡0 mod 8 ids that were
-      // not re-inserted) and the post-delete probe from scratch.
-      val e = t(s, dir, "embeddings")
-      val m = pmod(col("vec_id"), lit(4))
-      val init = e.filter(m === 3)
-      val cent = init
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfdel_q_").toString + "/ivf"
-      import graft.pipeline.IvfIndex
-      IvfIndex.init(init, "vec_id", "embedding", cent, root)
-      IvfIndex.applyBatch(e.filter(m === 0), "vec_id", "embedding", root, 0L)
-      IvfIndex.applyBatch(e.filter(m === 1), "vec_id", "embedding", root, 1L)
-      IvfIndex.applyDeleteBatch(
-        e.filter(pmod(col("vec_id"), lit(8)) === 0).select(col("vec_id")),
-        "vec_id", root, 2L)
-      IvfIndex.applyBatch(
-        e.filter(m === 2).unionByName(
-          e.filter(pmod(col("vec_id"), lit(16)) === 0)),
-        "vec_id", "embedding", root, 3L)
-      val p = IvfIndex.readPointer(root).get
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      val probe = IvfIndex.probeTopK(s, root, q, k = 5, nprobe = 3)
-        .agg(count(lit(1)).as("probe_n"), max(col("cosine")).as("probe_max"),
-          sum(col("vec_id")).as("probe_ids"))
-      val out = IvfIndex.currentAll(s, root).groupBy(col("list"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .crossJoin(probe)
-        .localCheckpoint(true) // ≤ nlists rows, eager: the index can go
-      IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_batch_probe" -> ((s, dir) => {
-      // r15: the IVF SERVING shape — per-query top-k for a whole query
-      // batch in one pass (probeTopKBatch): each query's nprobe lists
-      // compute columnar, only the UNION of needed list directories
-      // opens, candidates join the broadcast queries on list
-      // membership, and ranking is a per-qid window. The oracle replays
-      // the full fan-out per query from scratch.
-      val e = t(s, dir, "embeddings")
-      val cent = e
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfb_q_").toString + "/ivf"
-      import graft.pipeline.IvfIndex
-      IvfIndex.init(e, "vec_id", "embedding", cent, root)
-      val queries = e.filter(col("vec_id").isin(0, 7, 13))
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val out = IvfIndex.probeTopKBatch(s, root, queries, k = 5, nprobe = 3)
-        .localCheckpoint(true) // 15 rows, eager: the index can go
-      IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_autocompact" -> ((s, dir) => {
-      // r16: the AUTO-COMPACTING streaming sink — probe cost is linear
-      // in live segments and a streaming cadence piles them up (1-min
-      // triggers = 1,440/day), so ivfSinkVersioned compacts once the
-      // live count reaches the threshold. Threshold 3 over init + 3
-      // streamed quarters fires exactly once (after batch 1: 3 segs →
-      // 1), so the pointer lands closed-form at v4/lastBatch 2 with 2
-      // live segments — while contents and the probe must stay
-      // IDENTICAL to the never-compacted q_ivf_incremental oracle
-      // (compaction is a maintenance rewrite, not a semantic change).
-      val e = t(s, dir, "embeddings")
-      val m = pmod(col("vec_id"), lit(4))
-      val init = e.filter(m === 3)
-      val batches = Seq(0, 1, 2).map(i => e.filter(m === i))
-      val cent = init
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfac_q_").toString + "/ivf"
-      val fin = graft.streaming.Streams.ivfReplayVersioned(
-        s, init, batches, root, "vec_id", "embedding", cent,
-        autoCompactSegments = 3)
-      import graft.pipeline.IvfIndex
-      val p = IvfIndex.readPointer(root).get
-      val nSegs = IvfIndex.readManifest(root, p.version).count(!_.tombstone)
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      val probe = IvfIndex.probeTopK(s, root, q, k = 5, nprobe = 3)
-        .agg(count(lit(1)).as("probe_n"), max(col("cosine")).as("probe_max"),
-          sum(col("vec_id")).as("probe_ids"))
-      val out = fin.groupBy(col("list"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .withColumn("live_segs", lit(nSegs))
-        .crossJoin(probe)
-        .localCheckpoint(true) // ≤ nlists rows, eager: the index can go
-      IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_health" -> ((s, dir) => {
-      // r16: the ANN index-health ledger, oracle-exact. Pinned
-      // centroids have one silent failure mode — the data distribution
-      // walking away from them (recall decays while every probe still
-      // "works") — so each ingest segment's commit records
-      // Σ floor(assignment-d2 · 1e6 + 0.5) and its row count as
-      // observed metrics riding the write job, and health() exposes
-      // (last batch mean / init baseline mean). This fixture makes
-      // every ledger number INTEGER-exact (embeddings rounded to the
-      // integer grid, centroids = rounded per-label means → d2 sums
-      // are order-free int64 arithmetic), so the oracle replays the
-      // manifest's exact health counters and the drift ratio.
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"),
-          transform(col("embedding"),
-            x => round(x.cast("double") * 10).cast("double")).as("emb"))
-      val m = pmod(col("vec_id"), lit(4))
-      val init = e.filter(m === 3)
-      val batches = Seq(0, 1, 2).map(i => e.filter(m === i))
-      val cent = init
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("emb")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(round(avg(col("x"))).cast("double").as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfhl_q_").toString + "/ivf"
-      graft.streaming.Streams.ivfReplayVersioned(
-        s, init, batches, root, "vec_id", "emb", cent)
-      import graft.pipeline.IvfIndex
-      val p = IvfIndex.readPointer(root).get
-      val segs = IvfIndex.readManifest(root, p.version)
-      val h = IvfIndex.health(root)
-      require(h.drift.nonEmpty, "health ledger recorded no drift ratio")
-      import s.implicits._
-      val out = segs.map(sg => (sg.version, sg.sumD2u, sg.n))
-        .toDF("seg_version", "sum_d2u", "n_vecs")
-        .withColumn("drift", lit(h.drift.get))
-      IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_pq_incremental" -> ((s, dir) => {
-      // r16: PQ-COMPRESSED postings in the incremental IVF index — the
-      // FAISS IVFADC layout (Jégou et al. PAMI 2011). The codebook PINS
-      // at init (the 16 lowest-id init vectors' micro-unit subvectors,
-      // m=8 subspaces over dim 64 — pqEncodeAdc's deterministic sampled
-      // rule), every streamed segment stores pq_code alongside the raw
-      // vector, and the ADC probe scans ONLY the code column before an
-      // exact integer-grid-cosine re-rank of the top-20 survivors. The
-      // oracle recomputes codes, per-list posting/code stats and the
-      // ADC-then-rerank probe from scratch — streamed == from-scratch
-      // through the segment rolls, down to every stored code.
-      val e = t(s, dir, "embeddings")
-      val m = pmod(col("vec_id"), lit(4))
-      val init = e.filter(m === 3)
-      val batches = Seq(0, 1, 2).map(i => e.filter(m === i))
-      val cent = init
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_q_").toString + "/ivf"
-      val fin = graft.streaming.Streams.ivfReplayVersioned(
-        s, init, batches, root, "vec_id", "embedding", cent,
-        pqM = 8, pqK = 16)
-      val p = graft.pipeline.IvfIndex.readPointer(root).get
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      val probe = graft.pipeline.IvfIndex
-        .probeTopK(s, root, q, k = 5, nprobe = 3, graft.pipeline.IvfIndex.Adc(20))
-        .agg(count(lit(1)).as("probe_n"), sum(col("vec_id")).as("probe_ids"),
-          max(col("cosine")).as("probe_max"), sum(col("adc_u")).as("probe_adc"))
-      val out = fin.groupBy(col("list"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum"),
-          sum(aggregate(col("pq_code"), lit(0L),
-            (acc, v) => acc + v)).as("code_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .crossJoin(probe)
-        .localCheckpoint(true) // ≤ nlists rows, eager: the index can go
-      graft.pipeline.IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_pq_trained" -> ((s, dir) => {
-      // r16: TRAINED PQ codebooks — FAISS's trained-IVFADC mode. Same
-      // streamed layout as q_ivf_pq_incremental, but the codebook
-      // Lloyd-refines for 2 per-subspace integer-grid rounds on the
-      // init quarter before pinning (encode with the codegen kernel,
-      // update = exact int64 ties-away-from-zero rounding of the
-      // assigned subvectors' means, empty codewords RETAIN their
-      // previous value). The oracle unrolls both training rounds, then
-      // replays codes, per-list stats and the ADC-then-rerank probe
-      // against the trained codebook — bit-for-bit.
-      val e = t(s, dir, "embeddings")
-      val m = pmod(col("vec_id"), lit(4))
-      val init = e.filter(m === 3)
-      val batches = Seq(0, 1, 2).map(i => e.filter(m === i))
-      val cent = init
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfpqt_q_").toString + "/ivf"
-      val fin = graft.streaming.Streams.ivfReplayVersioned(
-        s, init, batches, root, "vec_id", "embedding", cent,
-        pqM = 8, pqK = 16, pqTrainIters = 2)
-      val p = graft.pipeline.IvfIndex.readPointer(root).get
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      val probe = graft.pipeline.IvfIndex
-        .probeTopK(s, root, q, k = 5, nprobe = 3, graft.pipeline.IvfIndex.Adc(20))
-        .agg(count(lit(1)).as("probe_n"), sum(col("vec_id")).as("probe_ids"),
-          max(col("cosine")).as("probe_max"), sum(col("adc_u")).as("probe_adc"))
-      val out = fin.groupBy(col("list"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum"),
-          sum(aggregate(col("pq_code"), lit(0L),
-            (acc, v) => acc + v)).as("code_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .crossJoin(probe)
-        .localCheckpoint(true) // ≤ nlists rows, eager: the index can go
-      graft.pipeline.IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_pq_batch_probe" -> ((s, dir) => {
-      // r16: the PQ SERVING shape — batched ADC probes. Per-query ADC
-      // lookup tables compute COLUMNAR against the pinned-codebook
-      // literal (O(nq·m·k·sub) once, never per candidate), the
-      // code-only scan joins broadcast queries on probe-list
-      // membership, per-qid ADC top-20 survivors re-rank exactly in
-      // ONE raw pass over the probed dirs. Oracle replays codes,
-      // per-qid tables, ADC ranking and the cosine re-rank per query.
-      val e = t(s, dir, "embeddings")
-      val cent = e
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfpqb_q_").toString + "/ivf"
-      import graft.pipeline.IvfIndex
-      IvfIndex.init(e, "vec_id", "embedding", cent, root, pqM = 8, pqK = 16)
-      val queries = e.filter(col("vec_id").isin(0, 7, 13))
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val out = IvfIndex.probeTopKBatch(s, root, queries,
-          k = 5, nprobe = 3, IvfIndex.Adc(20))
-        .localCheckpoint(true) // 15 rows, eager: the index can go
-      IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_rebuild" -> ((s, dir) => {
-      // r17: the drift-detect → REMEDY loop closed. Integer-grid
-      // fixture (q_ivf_health's trick — every ledger number exact
-      // int64): init pins the ≡3 quarter's rounded label-mean
-      // centroids; the ≡0 quarter ingests on-distribution, the ≡1
-      // quarter ingests SHIFTED +15 along its own label's dimension
-      // (the data walks away per cluster — the ledger crosses the 2×
-      // warning, required below, without collapsing the noise-driven
-      // list balance a uniform shift would); rebuild()
-      // re-pins centroids to the LIVE corpus's rounded label means
-      // through ONE maintenance version (lastBatch unchanged, centroid
-      // generation 1) — proven equal to an init-from-scratch twin on
-      // the same contents — and the ≡2 quarter then ingests against
-      // the new generation. The oracle recomputes the rebuilt
-      // centroids, every assignment, both health means, the drift
-      // ratio and the probe from scratch.
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"),
-          transform(col("embedding"),
-            x => round(x.cast("double") * 10).cast("double")).as("emb"))
-      val m = pmod(col("vec_id"), lit(4))
-      def cents(src: DataFrame) = src
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("emb")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(round(avg(col("x"))).cast("double").as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val init = e.filter(m === 3)
-      val shifted = e.filter(m === 1)
-        .withColumn("emb", transform(col("emb"), (x, i) =>
-          x + when(i === col("label").cast("int"), lit(15.0))
-            .otherwise(lit(0.0))))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfrb_q_").toString + "/ivf"
-      import graft.pipeline.IvfIndex
-      IvfIndex.init(init, "vec_id", "emb", cents(init), root)
-      IvfIndex.applyBatch(e.filter(m === 0), "vec_id", "emb", root, 0L)
-      IvfIndex.applyBatch(shifted, "vec_id", "emb", root, 1L)
-      val driftBefore = IvfIndex.health(root).drift.get
-      require(driftBefore > 2.0,
-        s"fixture must cross the drift warning, got $driftBefore")
-      // r18: the live union feeds THREE separate actions (the rebuilt
-      // centroid aggregate, then the twin init's assignment + segment
-      // write) — cross-action reuse, so checkpoint it once instead of
-      // re-running the scan+transform+union per action (the house
-      // pattern; AQE stage reuse only covers intra-action subtrees)
-      val live = init.unionByName(e.filter(m === 0)).unionByName(shifted)
-        .localCheckpoint(true)
-      val centFull = cents(live).localCheckpoint(true)
-      IvfIndex.rebuild(s, root, centFull)
-      // rebuild == init-from-scratch twin on the same live contents
-      val twin = java.nio.file.Files
-        .createTempDirectory("graft_ivfrb_tw_").toString + "/ivf"
-      IvfIndex.init(live, "vec_id", "emb", centFull, twin)
-      // each side is consumed by BOTH exceptAll actions: checkpoint so
-      // the second require pass replays blocks, not segment scans (r18)
-      val got = IvfIndex.currentAll(s, root).select("vec_id", "list")
-        .localCheckpoint(true)
-      val want = IvfIndex.currentAll(s, twin).select("vec_id", "list")
-        .localCheckpoint(true)
-      require(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-        "rebuild diverged from the init-from-scratch twin")
-      IvfIndex.destroy(twin)
-      IvfIndex.applyBatch(e.filter(m === 2), "vec_id", "emb", root, 2L)
-      val p = IvfIndex.readPointer(root).get
-      val h = IvfIndex.health(root)
-      val q = e.filter(col("vec_id") === 0).select(col("emb").as("qvec"))
-      val probe = IvfIndex.probeTopK(s, root, q, k = 5, nprobe = 3)
-        .agg(count(lit(1)).as("probe_n"), max(col("cosine")).as("probe_max"),
-          sum(col("vec_id")).as("probe_ids"))
-      val out = IvfIndex.currentAll(s, root).groupBy(col("list"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .withColumn("cent_gen", lit(p.gen))
-        .withColumn("baseline_mean", lit(h.baselineMeanD2.get))
-        .withColumn("last_mean", lit(h.lastBatchMeanD2.get))
-        .withColumn("drift", lit(h.drift.get))
-        .crossJoin(probe)
-        .localCheckpoint(true) // ≤ nlists rows, eager: the index can go
-      IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_pq_codeonly" -> ((s, dir) => {
-      // r17: the CODE-ONLY storage tier — the FAISS layout when exact
-      // re-rank isn't worth 32× the bytes: init(storeRaw = false)
-      // drops the raw embedding column entirely (segments hold only
-      // (vec_id, list, pq_code)) and serving is ADC-ONLY
-      // (rerank = 0 — ranked by the exact int64 code-table L2 order;
-      // no refine pass exists). Same streamed layout as
-      // q_ivf_pq_incremental; the oracle replays codes, per-list
-      // code stats and the ADC-only top-5 from scratch. The absence
-      // of the raw column is asserted in-query.
-      val e = t(s, dir, "embeddings")
-      val m = pmod(col("vec_id"), lit(4))
-      val init = e.filter(m === 3)
-      val batches = Seq(0, 1, 2).map(i => e.filter(m === i))
-      val cent = init
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfpqc_q_").toString + "/ivf"
-      val fin = graft.streaming.Streams.ivfReplayVersioned(
-        s, init, batches, root, "vec_id", "embedding", cent,
-        pqM = 8, pqK = 16, storeRaw = false)
-      require(!fin.columns.contains("embedding"),
-        s"code-only index stored raw vectors: ${fin.columns.mkString(",")}")
-      val p = graft.pipeline.IvfIndex.readPointer(root).get
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      val probe = graft.pipeline.IvfIndex
-        .probeTopK(s, root, q, k = 5, nprobe = 3, graft.pipeline.IvfIndex.Adc(0))
-        .agg(count(lit(1)).as("probe_n"), sum(col("vec_id")).as("probe_ids"),
-          min(col("adc_u")).as("probe_adc_min"),
-          sum(col("adc_u")).as("probe_adc"))
-      val out = fin.groupBy(col("list"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum"),
-          sum(aggregate(col("pq_code"), lit(0L),
-            (acc, v) => acc + v)).as("code_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .crossJoin(probe)
-        .localCheckpoint(true) // ≤ nlists rows, eager: the index can go
-      graft.pipeline.IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_ivf_sq8" -> ((s, dir) => {
-      // r17: the SQ8 MIDDLE storage tier (FAISS ScalarQuantizer
-      // QT_8bit) — between raw (32× bytes, exact re-rank) and
-      // code-only (no re-rank): per-dimension 8-bit codes replace the
-      // raw column against bounds PINNED at init from the ≡3 quarter's
-      // per-dim min/max, later quarters CLAMP where they fall outside
-      // (the pinned-quantizer contract), and the ADC probe's refine
-      // pass re-ranks the DECODED int64-grid reconstruction
-      // (error ≤ span/510/dim — approximate by design, deterministic
-      // end to end). The oracle replays bounds, every sq code incl.
-      // the clamps, the PQ codes/ADC table, and the decoded-cosine
-      // re-rank from scratch. The absence of the raw column is
-      // asserted in-query.
-      val e = t(s, dir, "embeddings")
-      val m = pmod(col("vec_id"), lit(4))
-      val init = e.filter(m === 3)
-      val batches = Seq(0, 1, 2).map(i => e.filter(m === i))
-      val cent = init
-        .select(col("label").cast("int").as("list"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("list"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mm"))
-        .groupBy(col("list"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mm")))),
-          st => st.getField("mm")).as("cvec"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivfsq_q_").toString + "/ivf"
-      val fin = graft.streaming.Streams.ivfReplayVersioned(
-        s, init, batches, root, "vec_id", "embedding", cent,
-        pqM = 8, pqK = 16, sq8 = true)
-      require(!fin.columns.contains("embedding") &&
-          fin.columns.contains("sq_code"),
-        s"SQ8 index stored the wrong layout: ${fin.columns.mkString(",")}")
-      val p = graft.pipeline.IvfIndex.readPointer(root).get
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      val probe = graft.pipeline.IvfIndex
-        .probeTopK(s, root, q, k = 5, nprobe = 3, graft.pipeline.IvfIndex.Adc(20))
-        .agg(count(lit(1)).as("probe_n"), sum(col("vec_id")).as("probe_ids"),
-          max(col("cosine")).as("probe_max"), sum(col("adc_u")).as("probe_adc"))
-      val out = fin.groupBy(col("list"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum"),
-          sum(aggregate(col("sq_code"), lit(0L),
-            (acc, v) => acc + v)).as("sq_sum"),
-          sum(aggregate(col("pq_code"), lit(0L),
-            (acc, v) => acc + v)).as("code_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .crossJoin(probe)
-        .localCheckpoint(true) // ≤ nlists rows, eager: the index can go
-      graft.pipeline.IvfIndex.destroy(root)
-      out
-    }),
-
-    "q_standardized_index" -> ((s, dir) => {
-      // standardized_index / `standardize` machinery (stats.py:770-1035), z-score form:
-      // 3-day rolling totals standardized against the entity's own
-      // climatology (the SPI pipeline shape with a normal backbone)
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      val wu = Window.partitionBy(col("user_id"))
-      dailyTotals(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .withColumn("w3", sum(col("total")).over(w.rowsBetween(-2, 0)))
-        .filter(col("rn") >= 3)
-        .withColumn("z", (col("w3") - avg(col("w3")).over(wu)) /
-          stddev_samp(col("w3")).over(wu))
-        .select(col("user_id"), col("d"),
-          qk(greatest(least(col("z"), lit(8.21)), lit(-8.21)), 6).as("spi3"))
-    })
-  )
-
-  private def oracle6: Map[String, String] = Map(
-    // from-scratch twin of the incremental IVF index: centroids off the
-    // ≡3 quarter (pinned), assignment replayed (argmin by d2 then list —
-    // off-boundary float like q_ivf_topk's), per-list posting stats over
-    // all four quarters, probe = 3 nearest lists → integer-grid-cosine
-    // top-5; pointer closed-form (3 non-empty batches → v3, lastBatch 2)
-    "q_ivf_incremental" ->
-      (s"""with cent as (
-         |  select label list, i, avg(cast(embedding[i+1] as double)) m
-         |  from embeddings, (select unnest(range(0,64)) i) t
-         |  where vec_id % 4 = 3 group by 1, 2),
-         |ad as (select e.vec_id, c.list,
-         |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-         |  from embeddings e, cent c group by 1, 2),
-         |assign as (select vec_id, list from (
-         |  select vec_id, list, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |q as (select embedding qv from embeddings where vec_id = 0),
-         |qd as (select c.list, sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-         |  from cent c, q group by c.list),
-         |probe as (select list from qd order by d2, list limit 3),
-         |cand as (select a.vec_id, e.embedding
-         |  from assign a join probe using (list)
-         |  join embeddings e using (vec_id)),
-         |scored as (select vec_id, ${cosQSql("embedding", "q.qv")} cosine
-         |  from cand, q),
-         |top5 as (select * from (select *, row_number()
-         |  over (order by cosine desc, vec_id) rk from scored) z where rk <= 5),
-         |pb as (select cast(count(*) as bigint) probe_n, max(cosine) probe_max,
-         |   min(cosine) probe_min, cast(sum(vec_id) as bigint) probe_ids
-         |  from top5)
-         |select a.list, cast(count(*) as bigint) n_vecs,
-         |  cast(sum(a.vec_id) as bigint) id_sum,
-         |  min(a.vec_id) min_id, max(a.vec_id) max_id,
-         |  cast(3 as int) snap_version, cast(2 as bigint) last_batch,
-         |  probe_n, probe_max, probe_min, probe_ids
-         |from assign a cross join pb
-         |group by 1, probe_n, probe_max, probe_min, probe_ids""").stripMargin,
-
-    // tombstone-delete twin: the live set is closed-form — every vector
-    // except the ≡0 (mod 8) ids that were NOT re-inserted (≡0 mod 16
-    // landed again AFTER the tombstone, so sequence order revives them);
-    // pointer v4 (2 inserts + 1 delete + 1 insert), lastBatch 3
-    "q_ivf_delete" ->
-      (s"""with cent as (
-         |  select label list, i, avg(cast(embedding[i+1] as double)) m
-         |  from embeddings, (select unnest(range(0,64)) i) t
-         |  where vec_id % 4 = 3 group by 1, 2),
-         |ad as (select e.vec_id, c.list,
-         |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-         |  from embeddings e, cent c group by 1, 2),
-         |assign as (select vec_id, list from (
-         |  select vec_id, list, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |live as (select * from assign
-         |  where not (vec_id % 8 = 0 and vec_id % 16 <> 0)),
-         |q as (select embedding qv from embeddings where vec_id = 0),
-         |qd as (select c.list, sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-         |  from cent c, q group by c.list),
-         |probe as (select list from qd order by d2, list limit 3),
-         |cand as (select a.vec_id, e.embedding
-         |  from live a join probe using (list)
-         |  join embeddings e using (vec_id)),
-         |scored as (select vec_id, ${cosQSql("embedding", "q.qv")} cosine
-         |  from cand, q),
-         |top5 as (select * from (select *, row_number()
-         |  over (order by cosine desc, vec_id) rk from scored) z where rk <= 5),
-         |pb as (select cast(count(*) as bigint) probe_n, max(cosine) probe_max,
-         |   cast(sum(vec_id) as bigint) probe_ids from top5)
-         |select a.list, cast(count(*) as bigint) n_vecs,
-         |  cast(sum(a.vec_id) as bigint) id_sum,
-         |  cast(4 as int) snap_version, cast(3 as bigint) last_batch,
-         |  probe_n, probe_max, probe_ids
-         |from live a cross join pb
-         |group by 1, probe_n, probe_max, probe_ids""").stripMargin,
-
-    // trained-codebook twin: the sampled seeds Lloyd-refine for two
-    // unrolled rounds (assign by int64 subspace d2 ties-low-j; update =
-    // exact ties-away-from-zero integer rounding of assigned means,
-    // retained on empty), then codes/stats/ADC probe replay against the
-    // trained codebook
-    "q_ivf_pq_trained" ->
-      (s"""with vqe as (select vec_id, t.i, (t.i // 8) s, (t.i % 8) p,
-         |   floor(cast(embedding[t.i+1] as double)*1e6 + 0.5) q
-         |  from embeddings, (select unnest(range(0,64)) i) t),
-         |cbseed as (select vec_id cbid, row_number() over (order by vec_id) - 1 j
-         |  from (select vec_id from embeddings where vec_id % 4 = 3
-         |        order by vec_id limit 16)),
-         |cb0 as (select v.s, c.j, v.p, v.q w
-         |  from cbseed c join vqe v on v.vec_id = c.cbid),
-         |d1 as (select v.vec_id, c.s, c.j, sum((v.q - c.w)*(v.q - c.w)) d2
-         |  from vqe v join cb0 c on c.s = v.s and c.p = v.p
-         |  where v.vec_id % 4 = 3 group by 1, 2, 3),
-         |a1 as (select vec_id, s, j from (select vec_id, s, j,
-         |  row_number() over (partition by vec_id, s order by d2, j) rn
-         |  from d1) x where rn = 1),
-         |u1 as (select v.s, a.j, v.p, cast(sum(v.q) as bigint) sq, count(*) n
-         |  from vqe v join a1 a on a.vec_id = v.vec_id and a.s = v.s
-         |  group by 1, 2, 3),
-         |cb1 as (select c.s, c.j, c.p,
-         |  coalesce(case when u.sq >= 0 then (2*u.sq + u.n) // (2*u.n)
-         |                else -((-2*u.sq + u.n) // (2*u.n)) end * 1.0, c.w) w
-         |  from cb0 c left join u1 u on u.s = c.s and u.j = c.j and u.p = c.p),
-         |d2r as (select v.vec_id, c.s, c.j, sum((v.q - c.w)*(v.q - c.w)) d2
-         |  from vqe v join cb1 c on c.s = v.s and c.p = v.p
-         |  where v.vec_id % 4 = 3 group by 1, 2, 3),
-         |a2 as (select vec_id, s, j from (select vec_id, s, j,
-         |  row_number() over (partition by vec_id, s order by d2, j) rn
-         |  from d2r) x where rn = 1),
-         |u2 as (select v.s, a.j, v.p, cast(sum(v.q) as bigint) sq, count(*) n
-         |  from vqe v join a2 a on a.vec_id = v.vec_id and a.s = v.s
-         |  group by 1, 2, 3),
-         |cb2 as (select c.s, c.j, c.p,
-         |  coalesce(case when u.sq >= 0 then (2*u.sq + u.n) // (2*u.n)
-         |                else -((-2*u.sq + u.n) // (2*u.n)) end * 1.0, c.w) w
-         |  from cb1 c left join u2 u on u.s = c.s and u.j = c.j and u.p = c.p),
-         |df as (select v.vec_id, c.s, c.j, sum((v.q - c.w)*(v.q - c.w)) d2
-         |  from vqe v join cb2 c on c.s = v.s and c.p = v.p group by 1, 2, 3),
-         |codes as (select vec_id, s, j code from (select vec_id, s, j,
-         |  row_number() over (partition by vec_id, s order by d2, j) rn
-         |  from df) x where rn = 1),
-         |codesum as (select vec_id, cast(sum(code) as bigint) csum
-         |  from codes group by 1),
-         |cent as (select label list, i, avg(cast(embedding[i+1] as double)) m
-         |  from embeddings, (select unnest(range(0,64)) i) t
-         |  where vec_id % 4 = 3 group by 1, 2),
-         |ad as (select e.vec_id, c.list,
-         |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-         |  from embeddings e, cent c group by 1, 2),
-         |assign as (select vec_id, list from (
-         |  select vec_id, list, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |q as (select embedding qv from embeddings where vec_id = 0),
-         |qd as (select c.list, sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-         |  from cent c, q group by c.list),
-         |probe as (select list from qd order by d2, list limit 3),
-         |qtab as (select s, j, d2 from df where vec_id = 0),
-         |cand as (select a.vec_id from assign a join probe using (list)),
-         |adc as (select c.vec_id, cast(sum(qt.d2) as bigint) adc_u
-         |  from codes c join qtab qt on qt.s = c.s and qt.j = c.code
-         |  where c.vec_id in (select vec_id from cand)
-         |  group by 1),
-         |topr as (select vec_id, adc_u from adc
-         |  order by adc_u, vec_id limit 20),
-         |rr as (select t2.vec_id, t2.adc_u,
-         |   ${cosQSql("e.embedding", "q.qv")} cosine
-         |  from topr t2 join embeddings e using (vec_id), q),
-         |top5 as (select * from (select *, row_number()
-         |  over (order by cosine desc, vec_id) rk from rr) z where rk <= 5),
-         |pb as (select cast(count(*) as bigint) probe_n,
-         |   cast(sum(vec_id) as bigint) probe_ids, max(cosine) probe_max,
-         |   cast(sum(adc_u) as bigint) probe_adc from top5)
-         |select a.list, cast(count(*) as bigint) n_vecs,
-         |  cast(sum(a.vec_id) as bigint) id_sum,
-         |  cast(sum(cs.csum) as bigint) code_sum,
-         |  cast(3 as int) snap_version, cast(2 as bigint) last_batch,
-         |  probe_n, probe_ids, probe_max, probe_adc
-         |from assign a join codesum cs using (vec_id) cross join pb
-         |group by 1, probe_n, probe_ids, probe_max, probe_adc""").stripMargin,
-
-    // batched PQ twin: whole-table codebook (16 lowest ids), per-qid
-    // ADC tables = the query vectors' own subspace-d2 rows, ADC top-20
-    // per qid over the probed lists' candidates, cosine re-rank top-5
-    "q_ivf_pq_batch_probe" ->
-      (s"""with cent as (
-         |  select label list, i, avg(cast(embedding[i+1] as double)) m
-         |  from embeddings, (select unnest(range(0,64)) i) t group by 1, 2),
-         |ad as (select e.vec_id, c.list,
-         |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-         |  from embeddings e, cent c group by 1, 2),
-         |assign as (select vec_id, list from (
-         |  select vec_id, list, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |cb as (select vec_id cbid, row_number() over (order by vec_id) - 1 j
-         |  from (select vec_id from embeddings order by vec_id limit 16)),
-         |cwe as (select cb.j, t.i,
-         |   floor(cast(e.embedding[t.i+1] as double)*1e6 + 0.5) w
-         |  from cb join embeddings e on e.vec_id = cb.cbid,
-         |       (select unnest(range(0,64)) i) t),
-         |vqe as (select vec_id, t.i,
-         |   floor(cast(embedding[t.i+1] as double)*1e6 + 0.5) vqv
-         |  from embeddings, (select unnest(range(0,64)) i) t),
-         |subd as (select v.vec_id, c.j, (v.i // 8) s,
-         |   sum((v.vqv - c.w) * (v.vqv - c.w)) d2
-         |  from vqe v join cwe c on c.i = v.i group by 1, 2, 3),
-         |codes as (select vec_id, s, j code from (
-         |  select vec_id, s, j, row_number() over (partition by vec_id, s
-         |    order by d2, j) rn from subd) x where rn = 1),
-         |qs as (select vec_id qid, embedding qv from embeddings
-         |  where vec_id in (0, 7, 13)),
-         |qd as (select q.qid, c.list,
-         |   sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-         |  from cent c, qs q group by 1, 2),
-         |probe as (select qid, list from (select qid, list,
-         |  row_number() over (partition by qid order by d2, list) rn
-         |  from qd) x where rn <= 3),
-         |cand as (select p.qid, a.vec_id, a.list
-         |  from assign a join probe p using (list)),
-         |adc as (select cd.qid, cd.vec_id, cd.list,
-         |   cast(sum(qt.d2) as bigint) adc_u
-         |  from cand cd
-         |  join codes c on c.vec_id = cd.vec_id
-         |  join subd qt on qt.vec_id = cd.qid and qt.s = c.s and qt.j = c.code
-         |  group by 1, 2, 3),
-         |topr as (select * from (select *, row_number() over
-         |  (partition by qid order by adc_u, vec_id) rn from adc) x
-         |  where rn <= 20),
-         |rr as (select t2.qid, t2.vec_id, t2.list, t2.adc_u,
-         |   ${cosQSql("e.embedding", "q.qv")} cosine
-         |  from topr t2 join embeddings e using (vec_id)
-         |  join qs q using (qid))
-         |select qid, cast(rank as int) rank, vec_id, list, adc_u, cosine
-         |from (select *, row_number() over (partition by qid
-         |  order by cosine desc, vec_id) rank from rr) z
-         |where rank <= 5""").stripMargin,
-
-    // rebuild twin: the re-pinned centroids are the LIVE corpus's
-    // (≡3 + ≡0 + shifted ≡1) rounded label means; every assignment —
-    // including the post-rebuild ≡2 ingest — replays against them;
-    // baseline = the rebuild's own Σ floor(d2·1e6+0.5)/n over the live
-    // three quarters, last = the ≡2 batch, drift with health()'s exact
-    // division order; probe replays over all four quarters; pointer
-    // closed-form (init + 2 batches + rebuild + 1 batch → v4,
-    // lastBatch 2, generation 1)
-    "q_ivf_rebuild" ->
-      (s"""with e as (select vec_id, label,
-         |   list_transform(range(0, 64), i ->
-         |     cast(round(cast(embedding[i+1] as double)*10) as double) +
-         |     (case when vec_id % 4 = 1 and i = label
-         |      then 15.0 else 0.0 end)) emb
-         | from embeddings),
-         |cent as (select label list, i, cast(round(avg(e.emb[i+1])) as double) m
-         |  from e, (select unnest(range(0,64)) i) t
-         |  where vec_id % 4 <> 2 group by 1, 2),
-         |ad as (select v.vec_id, c.list,
-         |   sum((v.emb[c.i+1] - c.m) * (v.emb[c.i+1] - c.m)) d2
-         |  from e v, cent c group by 1, 2),
-         |assign as (select vec_id, list, d2 from (
-         |  select vec_id, list, d2, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |base as (select cast(sum(cast(floor(d2*1e6 + 0.5) as bigint))
-         |     as bigint) sb,
-         |   cast(count(*) as bigint) nb from assign where vec_id % 4 <> 2),
-         |lastb as (select cast(sum(cast(floor(d2*1e6 + 0.5) as bigint))
-         |     as bigint) sl,
-         |   cast(count(*) as bigint) nl from assign where vec_id % 4 = 2),
-         |q as (select emb qv from e where vec_id = 0),
-         |qd as (select c.list,
-         |   sum((q.qv[c.i+1] - c.m) * (q.qv[c.i+1] - c.m)) d2
-         |  from cent c, q group by c.list),
-         |probe as (select list from qd order by d2, list limit 3),
-         |cand as (select a.vec_id, v.emb
-         |  from assign a join probe using (list)
-         |  join e v using (vec_id)),
-         |scored as (select vec_id, ${cosQSql("emb", "q.qv")} cosine
-         |  from cand, q),
-         |top5 as (select * from (select *, row_number()
-         |  over (order by cosine desc, vec_id) rk from scored) z where rk <= 5),
-         |pb as (select cast(count(*) as bigint) probe_n, max(cosine) probe_max,
-         |   cast(sum(vec_id) as bigint) probe_ids from top5)
-         |select a.list, cast(count(*) as bigint) n_vecs,
-         |  cast(sum(a.vec_id) as bigint) id_sum,
-         |  cast(4 as int) snap_version, cast(2 as bigint) last_batch,
-         |  cast(1 as int) cent_gen,
-         |  (sb / nb / 1e6) baseline_mean, (sl / nl / 1e6) last_mean,
-         |  ((sl / nl / 1e6) / (sb / nb / 1e6)) drift,
-         |  probe_n, probe_max, probe_ids
-         |from assign a cross join base cross join lastb cross join pb
-         |group by 1, sb, nb, sl, nl, probe_n, probe_max, probe_ids""")
-        .stripMargin,
-
-    // code-only twin: same codebook/code replay as q_ivf_pq_incremental
-    // (the stored layout differs — no raw column — but codes are
-    // storage-independent), ADC-ONLY probe: top-5 by (adc_u, vec_id)
-    // over the probed lists' candidates, no refine pass
-    "q_ivf_pq_codeonly" ->
-      ("""with cent as (
-         |  select label list, i, avg(cast(embedding[i+1] as double)) m
-         |  from embeddings, (select unnest(range(0,64)) i) t
-         |  where vec_id % 4 = 3 group by 1, 2),
-         |ad as (select e.vec_id, c.list,
-         |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-         |  from embeddings e, cent c group by 1, 2),
-         |assign as (select vec_id, list from (
-         |  select vec_id, list, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |cb as (select vec_id cbid, row_number() over (order by vec_id) - 1 j
-         |  from (select vec_id from embeddings where vec_id % 4 = 3
-         |        order by vec_id limit 16)),
-         |cwe as (select cb.j, t.i,
-         |   floor(cast(e.embedding[t.i+1] as double)*1e6 + 0.5) w
-         |  from cb join embeddings e on e.vec_id = cb.cbid,
-         |       (select unnest(range(0,64)) i) t),
-         |vqe as (select vec_id, t.i,
-         |   floor(cast(embedding[t.i+1] as double)*1e6 + 0.5) vqv
-         |  from embeddings, (select unnest(range(0,64)) i) t),
-         |subd as (select v.vec_id, c.j, (v.i // 8) s,
-         |   sum((v.vqv - c.w) * (v.vqv - c.w)) d2
-         |  from vqe v join cwe c on c.i = v.i group by 1, 2, 3),
-         |codes as (select vec_id, s, j code from (
-         |  select vec_id, s, j, row_number() over (partition by vec_id, s
-         |    order by d2, j) rn from subd) x where rn = 1),
-         |codesum as (select vec_id, cast(sum(code) as bigint) csum
-         |  from codes group by 1),
-         |q as (select embedding qv from embeddings where vec_id = 0),
-         |qd as (select c.list, sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-         |  from cent c, q group by c.list),
-         |probe as (select list from qd order by d2, list limit 3),
-         |qtab as (select s, j, d2 from subd where vec_id = 0),
-         |cand as (select a.vec_id from assign a join probe using (list)),
-         |adc as (select c.vec_id, cast(sum(qt.d2) as bigint) adc_u
-         |  from codes c join qtab qt on qt.s = c.s and qt.j = c.code
-         |  where c.vec_id in (select vec_id from cand)
-         |  group by 1),
-         |top5 as (select vec_id, adc_u from adc
-         |  order by adc_u, vec_id limit 5),
-         |pb as (select cast(count(*) as bigint) probe_n,
-         |   cast(sum(vec_id) as bigint) probe_ids,
-         |   cast(min(adc_u) as bigint) probe_adc_min,
-         |   cast(sum(adc_u) as bigint) probe_adc from top5)
-         |select a.list, cast(count(*) as bigint) n_vecs,
-         |  cast(sum(a.vec_id) as bigint) id_sum,
-         |  cast(sum(cs.csum) as bigint) code_sum,
-         |  cast(3 as int) snap_version, cast(2 as bigint) last_batch,
-         |  probe_n, probe_ids, probe_adc_min, probe_adc
-         |from assign a join codesum cs using (vec_id) cross join pb
-         |group by 1, probe_n, probe_ids, probe_adc_min, probe_adc""")
-        .stripMargin,
-
-    // SQ8 twin: bounds = the ≡3 quarter's per-dim micro-unit min/max;
-    // sq codes via the exact roundDiv-with-clamp (ties away from zero,
-    // negative branch for below-bounds later quarters); decode = the
-    // int64-grid reconstruction; ADC top-20 over the probed lists, then
-    // the decoded-cosine top-5 — every integer replayed from scratch
-    "q_ivf_sq8" ->
-      (s"""with cent as (
-         |  select label list, i, avg(cast(embedding[i+1] as double)) m
-         |  from embeddings, (select unnest(range(0,64)) i) t
-         |  where vec_id % 4 = 3 group by 1, 2),
-         |ad as (select e.vec_id, c.list,
-         |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-         |  from embeddings e, cent c group by 1, 2),
-         |assign as (select vec_id, list from (
-         |  select vec_id, list, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |cb as (select vec_id cbid, row_number() over (order by vec_id) - 1 j
-         |  from (select vec_id from embeddings where vec_id % 4 = 3
-         |        order by vec_id limit 16)),
-         |cwe as (select cb.j, t.i,
-         |   floor(cast(e.embedding[t.i+1] as double)*1e6 + 0.5) w
-         |  from cb join embeddings e on e.vec_id = cb.cbid,
-         |       (select unnest(range(0,64)) i) t),
-         |vqe as (select vec_id, t.i,
-         |   cast(floor(cast(embedding[t.i+1] as double)*1e6 + 0.5) as bigint)
-         |     vqv
-         |  from embeddings, (select unnest(range(0,64)) i) t),
-         |subd as (select v.vec_id, c.j, (v.i // 8) s,
-         |   sum((v.vqv - c.w) * (v.vqv - c.w)) d2
-         |  from vqe v join cwe c on c.i = v.i group by 1, 2, 3),
-         |codes as (select vec_id, s, j code from (
-         |  select vec_id, s, j, row_number() over (partition by vec_id, s
-         |    order by d2, j) rn from subd) x where rn = 1),
-         |codesum as (select vec_id, cast(sum(code) as bigint) csum
-         |  from codes group by 1),
-         |bounds as (select i, min(vqv) lo, max(vqv) hi
-         |  from vqe where vec_id % 4 = 3 group by 1),
-         |sqc as (select v.vec_id, v.i,
-         |  case when b.hi = b.lo then cast(0 as bigint) else
-         |    least(greatest(case when v.vqv >= b.lo
-         |      then (2*(v.vqv - b.lo)*255 + (b.hi - b.lo))
-         |             // (2*(b.hi - b.lo))
-         |      else -((2*(b.lo - v.vqv)*255 + (b.hi - b.lo))
-         |             // (2*(b.hi - b.lo))) end,
-         |      cast(0 as bigint)), cast(255 as bigint)) end code
-         |  from vqe v join bounds b using (i)),
-         |sqsum as (select vec_id, cast(sum(code) as bigint) ssum
-         |  from sqc group by 1),
-         |dec as (select s.vec_id,
-         |   list(cast(b.lo + ((2*s.code*(b.hi - b.lo) + 255) // 510)
-         |     as double)/1e6 order by s.i) demb
-         |  from sqc s join bounds b using (i) group by 1),
-         |q as (select embedding qv from embeddings where vec_id = 0),
-         |qd as (select c.list, sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-         |  from cent c, q group by c.list),
-         |probe as (select list from qd order by d2, list limit 3),
-         |qtab as (select s, j, d2 from subd where vec_id = 0),
-         |cand as (select a.vec_id from assign a join probe using (list)),
-         |adc as (select c.vec_id, cast(sum(qt.d2) as bigint) adc_u
-         |  from codes c join qtab qt on qt.s = c.s and qt.j = c.code
-         |  where c.vec_id in (select vec_id from cand)
-         |  group by 1),
-         |topr as (select vec_id, adc_u from adc
-         |  order by adc_u, vec_id limit 20),
-         |rr as (select t2.vec_id, t2.adc_u,
-         |   ${cosQSql("d.demb", "q.qv")} cosine
-         |  from topr t2 join dec d on d.vec_id = t2.vec_id, q),
-         |top5 as (select * from (select *, row_number()
-         |  over (order by cosine desc, vec_id) rk from rr) z where rk <= 5),
-         |pb as (select cast(count(*) as bigint) probe_n,
-         |   cast(sum(vec_id) as bigint) probe_ids, max(cosine) probe_max,
-         |   cast(sum(adc_u) as bigint) probe_adc from top5)
-         |select a.list, cast(count(*) as bigint) n_vecs,
-         |  cast(sum(a.vec_id) as bigint) id_sum,
-         |  cast(sum(sq.ssum) as bigint) sq_sum,
-         |  cast(sum(cs.csum) as bigint) code_sum,
-         |  cast(3 as int) snap_version, cast(2 as bigint) last_batch,
-         |  probe_n, probe_ids, probe_max, probe_adc
-         |from assign a join codesum cs using (vec_id)
-         |  join sqsum sq using (vec_id) cross join pb
-         |group by 1, probe_n, probe_ids, probe_max, probe_adc""")
-        .stripMargin,
-
-    // batched-probe twin: the same centroid/assignment replay fanned out
-    // per query — probe lists per qid (top-3 by centroid d2), candidates
-    // from the probed lists, integer-grid-cosine top-5 per qid
-    "q_ivf_batch_probe" ->
-      (s"""with cent as (
-         |  select label list, i, avg(cast(embedding[i+1] as double)) m
-         |  from embeddings, (select unnest(range(0,64)) i) t group by 1, 2),
-         |ad as (select e.vec_id, c.list,
-         |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-         |  from embeddings e, cent c group by 1, 2),
-         |assign as (select vec_id, list from (
-         |  select vec_id, list, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |qs as (select vec_id qid, embedding qv from embeddings
-         |  where vec_id in (0, 7, 13)),
-         |qd as (select q.qid, c.list,
-         |   sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-         |  from cent c, qs q group by 1, 2),
-         |probe as (select qid, list from (select qid, list,
-         |  row_number() over (partition by qid order by d2, list) rn
-         |  from qd) x where rn <= 3),
-         |cand as (select p.qid, a.vec_id, a.list, e.embedding
-         |  from assign a join probe p using (list)
-         |  join embeddings e using (vec_id)),
-         |scored as (select c.qid, c.vec_id, c.list,
-         |  ${cosQSql("c.embedding", "q.qv")} cosine
-         |  from cand c join qs q using (qid)),
-         |ranked as (select *, row_number() over (partition by qid
-         |  order by cosine desc, vec_id) rank from scored)
-         |select qid, cast(rank as int) rank, vec_id, list, cosine
-         |from ranked where rank <= 5""").stripMargin,
-
-    // auto-compact twin: contents/probe identical to the
-    // never-compacted replay (compaction is a maintenance rewrite);
-    // pointer closed-form — threshold 3 fires once after batch 1
-    // (3 segs -> 1), so init + 3 batches + 1 compaction = v4 at
-    // lastBatch 2 with 2 live segments
-    "q_ivf_autocompact" ->
-      (s"""with cent as (
-         |  select label list, i, avg(cast(embedding[i+1] as double)) m
-         |  from embeddings, (select unnest(range(0,64)) i) t
-         |  where vec_id % 4 = 3 group by 1, 2),
-         |ad as (select e.vec_id, c.list,
-         |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-         |  from embeddings e, cent c group by 1, 2),
-         |assign as (select vec_id, list from (
-         |  select vec_id, list, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |q as (select embedding qv from embeddings where vec_id = 0),
-         |qd as (select c.list, sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-         |  from cent c, q group by c.list),
-         |probe as (select list from qd order by d2, list limit 3),
-         |cand as (select a.vec_id, e.embedding
-         |  from assign a join probe using (list)
-         |  join embeddings e using (vec_id)),
-         |scored as (select vec_id, ${cosQSql("embedding", "q.qv")} cosine
-         |  from cand, q),
-         |top5 as (select * from (select *, row_number()
-         |  over (order by cosine desc, vec_id) rk from scored) z where rk <= 5),
-         |pb as (select cast(count(*) as bigint) probe_n, max(cosine) probe_max,
-         |   cast(sum(vec_id) as bigint) probe_ids from top5)
-         |select a.list, cast(count(*) as bigint) n_vecs,
-         |  cast(sum(a.vec_id) as bigint) id_sum,
-         |  cast(4 as int) snap_version, cast(2 as bigint) last_batch,
-         |  cast(2 as int) live_segs,
-         |  probe_n, probe_max, probe_ids
-         |from assign a cross join pb
-         |group by 1, probe_n, probe_max, probe_ids""").stripMargin,
-
-    // health-ledger twin: every counter is exact int64 (integer-grid
-    // embeddings, rounded-mean centroids), so the oracle recomputes the
-    // per-segment Σ floor(min-d2 · 1e6 + 0.5) / counts from scratch and
-    // the drift ratio with the same division order health() uses
-    "q_ivf_health" ->
-      ("""with e as (select vec_id,
-         |   list_transform(embedding,
-         |     x -> cast(round(cast(x as double) * 10) as double)) emb
-         | from embeddings),
-         |cent as (select label list, i,
-         |   cast(round(avg(e.emb[i+1])) as double) m
-         | from e join embeddings using (vec_id),
-         |      (select unnest(range(0,64)) i) t
-         | where vec_id % 4 = 3 group by 1, 2),
-         |ad as (select v.vec_id, c.list,
-         |   sum((v.emb[c.i+1] - c.m) * (v.emb[c.i+1] - c.m)) d2
-         | from e v, cent c group by 1, 2),
-         |mind as (select vec_id, min(d2) d2 from ad group by 1),
-         |seg as (select case vec_id % 4 when 3 then 0 when 0 then 1
-         |    when 1 then 2 else 3 end sv,
-         |  cast(sum(floor(d2*1e6 + 0.5)) as bigint) sum_d2u,
-         |  cast(count(*) as bigint) n_vecs
-         | from mind group by 1),
-         |base as (select sum_d2u sb, n_vecs nb from seg where sv = 0),
-         |lastb as (select sum_d2u sl, n_vecs nl from seg where sv = 3)
-         |select sv seg_version, sum_d2u, n_vecs,
-         |  ((sl / nl / 1e6) / (sb / nb / 1e6)) drift
-         |from seg cross join base cross join lastb""").stripMargin,
-
-    // PQ-postings twin: codebook = the 16 lowest-id init (≡3) vectors'
-    // micro-unit subvectors; codes = per-(vector, subspace) arg-min
-    // int64 d2, ties to the lowest codeword; ADC table for the query =
-    // the query's own subspace d2 rows; probe = ADC top-20 over the 3
-    // probed lists' candidates, then exact integer-grid-cosine top-5
-    "q_ivf_pq_incremental" ->
-      (s"""with cent as (
-         |  select label list, i, avg(cast(embedding[i+1] as double)) m
-         |  from embeddings, (select unnest(range(0,64)) i) t
-         |  where vec_id % 4 = 3 group by 1, 2),
-         |ad as (select e.vec_id, c.list,
-         |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-         |  from embeddings e, cent c group by 1, 2),
-         |assign as (select vec_id, list from (
-         |  select vec_id, list, row_number() over (partition by vec_id
-         |    order by d2, list) rn from ad) x where rn = 1),
-         |cb as (select vec_id cbid, row_number() over (order by vec_id) - 1 j
-         |  from (select vec_id from embeddings where vec_id % 4 = 3
-         |        order by vec_id limit 16)),
-         |cwe as (select cb.j, t.i,
-         |   floor(cast(e.embedding[t.i+1] as double)*1e6 + 0.5) w
-         |  from cb join embeddings e on e.vec_id = cb.cbid,
-         |       (select unnest(range(0,64)) i) t),
-         |vqe as (select vec_id, t.i,
-         |   floor(cast(embedding[t.i+1] as double)*1e6 + 0.5) vqv
-         |  from embeddings, (select unnest(range(0,64)) i) t),
-         |subd as (select v.vec_id, c.j, (v.i // 8) s,
-         |   sum((v.vqv - c.w) * (v.vqv - c.w)) d2
-         |  from vqe v join cwe c on c.i = v.i group by 1, 2, 3),
-         |codes as (select vec_id, s, j code from (
-         |  select vec_id, s, j, row_number() over (partition by vec_id, s
-         |    order by d2, j) rn from subd) x where rn = 1),
-         |codesum as (select vec_id, cast(sum(code) as bigint) csum
-         |  from codes group by 1),
-         |q as (select embedding qv from embeddings where vec_id = 0),
-         |qd as (select c.list, sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-         |  from cent c, q group by c.list),
-         |probe as (select list from qd order by d2, list limit 3),
-         |qtab as (select s, j, d2 from subd where vec_id = 0),
-         |cand as (select a.vec_id from assign a join probe using (list)),
-         |adc as (select c.vec_id, cast(sum(qt.d2) as bigint) adc_u
-         |  from codes c join qtab qt on qt.s = c.s and qt.j = c.code
-         |  where c.vec_id in (select vec_id from cand)
-         |  group by 1),
-         |topr as (select vec_id, adc_u from adc
-         |  order by adc_u, vec_id limit 20),
-         |rr as (select t2.vec_id, t2.adc_u,
-         |   ${cosQSql("e.embedding", "q.qv")} cosine
-         |  from topr t2 join embeddings e using (vec_id), q),
-         |top5 as (select * from (select *, row_number()
-         |  over (order by cosine desc, vec_id) rk from rr) z where rk <= 5),
-         |pb as (select cast(count(*) as bigint) probe_n,
-         |   cast(sum(vec_id) as bigint) probe_ids, max(cosine) probe_max,
-         |   cast(sum(adc_u) as bigint) probe_adc from top5)
-         |select a.list, cast(count(*) as bigint) n_vecs,
-         |  cast(sum(a.vec_id) as bigint) id_sum,
-         |  cast(sum(cs.csum) as bigint) code_sum,
-         |  cast(3 as int) snap_version, cast(2 as bigint) last_batch,
-         |  probe_n, probe_ids, probe_max, probe_adc
-         |from assign a join codesum cs using (vec_id) cross join pb
-         |group by 1, probe_n, probe_ids, probe_max, probe_adc""").stripMargin,
-
-    "q_ivf_topk" ->
-      s"""with cent as (
-        |  select label, i, avg(cast(embedding[i+1] as double)) m
-        |  from embeddings, (select unnest(range(0,64)) i) t group by 1,2),
-        |q as (select embedding qv from embeddings where vec_id = 0),
-        |qd as (select c.label, sum(pow(cast(q.qv[c.i+1] as double) - c.m, 2)) d2
-        |  from cent c, q group by c.label),
-        |probe as (select label from qd order by d2, label limit 3),
-        |ad as (select e.vec_id, c.label,
-        |   sum(pow(cast(e.embedding[c.i+1] as double) - c.m, 2)) d2
-        |  from embeddings e, cent c group by 1, 2),
-        |assign as (select vec_id, label from (
-        |  select vec_id, label, row_number() over (partition by vec_id
-        |    order by d2, label) rn from ad) x where rn = 1),
-        |cand as (select a.vec_id, a.label, e.embedding
-        |  from assign a join probe using (label)
-        |  join embeddings e on e.vec_id = a.vec_id),
-        |scored as (select vec_id, label,
-        |  ${cosQSql("embedding", "q.qv")} cosine
-        | from cand, q),
-        |ranked as (select *, row_number() over (order by cosine desc, vec_id) rank
-        | from scored)
-        |select cast(rank as int) rank, vec_id, label, cosine
-        |from ranked where rank <= 5""".stripMargin,
-
-    "q_standardized_index" ->
-      s"""with daily as ($dailySql),
-         |r as (select user_id, d, row_number() over (partition by user_id order by d) rn,
-         |  sum(total) over (partition by user_id order by d
-         |    rows between 2 preceding and current row) w3 from daily),
-         |f as (select user_id, d, w3 from r where rn >= 3),
-         |z as (select user_id, d,
-         |  (w3 - avg(w3) over (partition by user_id))
-         |    / stddev_samp(w3) over (partition by user_id) z from f)
-         |select user_id, d,
-         | floor((greatest(least(z, 8.21), -8.21))*1e6 + 0.5)/1e6 spi3
-         |from z""".stripMargin
-  )
-
-  // ---- batch 7: rollup, correlated agg, FIR smoothing, JSON --------------
-  private def queries7: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_rollup_revenue" -> ((s, dir) => {
-      // hierarchical subtotals (grouping-sets family)
-      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer"); val n = t(s, dir, "nation"); val r = t(s, dir, "region")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .rollup(col("r_name"), col("n_name"))
-        // same exact-cents discipline as q_join_revenue_by_nation
-        .agg((sum(round(col("l_extendedprice") * (lit(1) - col("l_discount"))
-          * 1e4).cast("long")).cast("double") / lit(1e4)).as("revenue"))
-    }),
-
-    "q_small_quantity_revenue" -> ((s, dir) => {
-      // TPC-H Q17 shape: correlated per-part average via self-agg join
-      val li = t(s, dir, "lineitem")
-      val avgs = li.groupBy(col("l_partkey").as("pk"))
-        .agg(avg(col("l_quantity")).as("avg_qty"))
-      li.join(avgs, col("l_partkey") === col("pk"))
-        .filter(col("l_quantity") < col("avg_qty") * 0.5)
-        // prices are exactly 2-decimal: cent-quantized int64 sum, one
-        // division by 700 (= ·1/7 ÷ 100) — engine-exact
-        .agg((sum(uq(col("l_extendedprice"), 100))
-            .cast("double") / lit(700.0)).as("avg_yearly"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    "q_weighted_rolling" -> ((s, dir) => {
-      // qian_weighted_mean_average (_agro.py:1245): centred FIR smoothing
-      // [0.1,0.2,0.4,0.2,0.1] as a lag/lead dot product (the jetstream
-      // Lanczos-filter pattern, _synoptic.py)
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      val sm = lag(col("total"), 2).over(w) * 0.1 + lag(col("total"), 1).over(w) * 0.2 +
-        col("total") * 0.4 + lead(col("total"), 1).over(w) * 0.2 +
-        lead(col("total"), 2).over(w) * 0.1
-      dailyTotals(s, dir)
-        .withColumn("smoothed", qk(sm, 6))
-        .filter(col("smoothed").isNotNull)
-        .select(col("user_id"), col("d"), col("smoothed"))
-    }),
-
-    "q_json_props" -> ((s, dir) => {
-      // semi-structured sidecar column: extract props.k per event
-      t(s, dir, "events")
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy(col("event_type"))
-        .agg(coalesce(sum(col("k")), lit(0L)).as("k_sum"),
-          countDistinct(col("k")).as("k_distinct"),
-          // exact int64 sum / exact count: ONE correctly-rounded IEEE
-          // division — engine-exact without any rounding step
-          (sum(col("k")).cast("double") / count(col("k"))).as("k_avg"))
-    })
-  )
-
-  private def oracle7: Map[String, String] = Map(
-    "q_rollup_revenue" ->
-      """select r_name, n_name,
-        | cast(sum(cast(round(l_extendedprice*(1-l_discount)*1e4) as bigint))
-        |   as double) / 1e4 revenue
-        |from lineitem
-        | join orders on l_orderkey = o_orderkey
-        | join customer on o_custkey = c_custkey
-        | join nation on c_nationkey = n_nationkey
-        | join region on n_regionkey = r_regionkey
-        |group by rollup(r_name, n_name)""".stripMargin,
-
-    "q_small_quantity_revenue" ->
-      """with avgs as (select l_partkey pk, avg(l_quantity) avg_qty
-        | from lineitem group by 1)
-        |select cast(sum(cast(round(l_extendedprice*100) as bigint)) as double)
-        |   / 700.0 avg_yearly,
-        | count(*) n_lines
-        |from lineitem join avgs on l_partkey = pk
-        |where l_quantity < avg_qty * 0.5""".stripMargin,
-
-    "q_weighted_rolling" ->
-      s"""with daily as ($dailySql),
-         |sm as (select user_id, d,
-         |  lag(total, 2) over w * 0.1 + lag(total, 1) over w * 0.2
-         |  + total * 0.4 + lead(total, 1) over w * 0.2 + lead(total, 2) over w * 0.1 v
-         | from daily window w as (partition by user_id order by d))
-         |select user_id, d, floor((v)*1e6 + 0.5)/1e6 smoothed
-         |from sm where v is not null""".stripMargin,
-
-    "q_json_props" ->
-      """select event_type,
-        | cast(coalesce(sum(cast(json_extract_string(props, '$.k') as bigint)), 0) as bigint) k_sum,
-        | count(distinct cast(json_extract_string(props, '$.k') as bigint)) k_distinct,
-        | cast(sum(cast(json_extract_string(props, '$.k') as bigint)) as double)
-        |   / count(cast(json_extract_string(props, '$.k') as bigint)) k_avg
-        |from events group by 1""".stripMargin
-  )
-
-  // ---- batch 8: exact dedup, argmax-day ----------------------------------
-  private def queries8: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exactGroups(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    "q_doy_of_max" -> ((s, dir) => {
-      // doymax (generic.py:177): date of each user's max daily total,
-      // deterministic earliest-date tie-break
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("total").desc, col("d"))
-      dailyTotals(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("d").as("max_day"),
-          (uq(col("total"), 100).cast("double") / lit(100.0))
-            .as("max_total"))
-    })
-  )
-
-  private def oracle8: Map[String, String] = Map(
-    "q_dedup_exact" ->
-      """select md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) content_key,
-        | min(doc_id) keeper_id, count(*) n_members
-        |from documents group by 1""".stripMargin,
-
-    "q_doy_of_max" ->
-      s"""with daily as ($dailySql),
-         |r as (select user_id, d, total,
-         |  row_number() over (partition by user_id order by total desc, d) rn
-         | from daily)
-         |select user_id, d max_day,
-         | cast(cast(round(total*100) as bigint) as double) / 100.0 max_total
-         |from r where rn = 1""".stripMargin
-  )
-
-  // ---- batch 9: hydrology + bioclim breadth ------------------------------
-  private def queries9: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_base_flow_index" -> ((s, dir) => {
-      // base_flow_index (_hydrology.py:50): min 7-day rolling mean / mean
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      val wu = Window.partitionBy(col("user_id"))
-      dailyTotals(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .withColumn("r7", avg(col("total")).over(w.rowsBetween(-6, 0)))
-        .withColumn("bfi7", when(col("rn") >= 7, col("r7")))
-        .groupBy(col("user_id"))
-        .agg(qk(min(col("bfi7")) / avg(col("total")), 6).as("bfi"))
-    }),
-
-    "q_rb_flashiness" -> ((s, dir) => {
-      // rb_flashiness_index — Richards-Baker flashiness (_hydrology.py:94):
-      // sum|dQ| / sumQ
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      dailyTotals(s, dir)
-        .withColumn("dq", abs(col("total") - lag(col("total"), 1).over(w)))
-        .groupBy(col("user_id"))
-        .agg(qk(sum(col("dq")) / sum(col("total")), 6).as("rbi"))
-    }),
-
-    "q_flow_frequency" -> ((s, dir) => {
-      // high_flow_frequency / low_flow_frequency (_hydrology.py:607,:640)
-      // with mean-scaled
-      // thresholds (self-join of per-entity climatology)
-      val wu = Window.partitionBy(col("user_id"))
-      dailyTotals(s, dir)
-        .withColumn("m", avg(col("total")).over(wu))
-        .groupBy(col("user_id"))
-        .agg(coalesce(sum(when(col("total") > col("m") * 2.0, 1L)), lit(0L)).as("high_days"),
-          coalesce(sum(when(col("total") < col("m") * 0.2, 1L)), lit(0L)).as("low_days"))
-    }),
-
-    "q_cv_seasonality" -> ((s, dir) => {
-      // precip_seasonality (_anuclim.py:158): 100 * population CV
-      dailyTotals(s, dir)
-        .groupBy(col("user_id"))
-        .agg(qk(stddev_pop(col("total")) / avg(col("total")) * 100.0, 6).as("cv"))
-    }),
-
-    "q_between_dates" -> ((s, dir) => {
-      // aggregate_between_dates (generic.py:1417): doy-window reduction
-      dailyTotals(s, dir)
-        .filter(dayofmonth(col("d")).between(10, 20))
-        .groupBy(col("user_id"))
-        // cent-exact int64 sum (totals are near-2-decimal; the integer
-        // round is portable) + one division — engine-exact, no round()
-        .agg((sum(uq(col("total"), 100)).cast("double")
-          / lit(100.0)).as("total_10_20"), count(lit(1)).as("n_days"))
-    }),
-
-    "q_level_crossings" -> ((s, dir) => {
-      // count_level_crossings (generic.py:914): days whose min crosses below
-      // and max crosses above the level
-      t(s, dir, "events")
-        .groupBy(col("user_id"), date_trunc("DAY", col("ts")).cast("date").as("d"))
-        .agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
-        .groupBy(col("user_id"))
-        .agg(coalesce(sum(when(col("lo") < 50.0 && col("hi") >= 50.0, 1L)), lit(0L))
-          .as("crossing_days"))
-    })
-  )
-
-  private def oracle9: Map[String, String] = Map(
-    "q_base_flow_index" ->
-      s"""with daily as ($dailySql),
-         |r as (select user_id, total,
-         |  row_number() over (partition by user_id order by d) rn,
-         |  avg(total) over (partition by user_id order by d
-         |    rows between 6 preceding and current row) r7 from daily)
-         |select user_id,
-         | floor((min(case when rn >= 7 then r7 end) / avg(total)
-         |)*1e6 + 0.5)/1e6 bfi
-         |from r group by 1""".stripMargin,
-
-    "q_rb_flashiness" ->
-      s"""with daily as ($dailySql),
-         |l as (select user_id, total,
-         |  abs(total - lag(total) over (partition by user_id order by d)) dq
-         | from daily)
-         |select user_id,
-         | floor((sum(dq) / sum(total))*1e6 + 0.5)/1e6 rbi
-         |from l group by 1""".stripMargin,
-
-    "q_flow_frequency" ->
-      s"""with daily as ($dailySql),
-         |m as (select user_id, total, avg(total) over (partition by user_id) m
-         | from daily)
-         |select user_id,
-         | cast(coalesce(sum(case when total > m * 2.0 then 1 end), 0) as bigint) high_days,
-         | cast(coalesce(sum(case when total < m * 0.2 then 1 end), 0) as bigint) low_days
-         |from m group by 1""".stripMargin,
-
-    "q_cv_seasonality" ->
-      s"""with daily as ($dailySql)
-         |select user_id,
-         | floor((stddev_pop(total) / avg(total) * 100.0)*1e6 + 0.5)/1e6 cv
-         |from daily group by 1""".stripMargin,
-
-    "q_between_dates" ->
-      s"""with daily as ($dailySql)
-         |select user_id,
-         | cast(sum(cast(round(total*100) as bigint)) as double) / 100.0 total_10_20,
-         | count(*) n_days
-         |from daily where day(d) between 10 and 20 group by 1""".stripMargin,
-
-    "q_level_crossings" ->
-      """with daily as (select user_id, cast(date_trunc('day', ts) as date) d,
-        |  min(value) lo, max(value) hi from events group by 1, 2)
-        |select user_id,
-        | cast(coalesce(sum(case when lo < 50.0 and hi >= 50.0 then 1 end), 0)
-        |   as bigint) crossing_days
-        |from daily group by 1""".stripMargin
-  )
-
-  // ---- batch 10: ANUCLIM quarter selection -------------------------------
-  private def queries10: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_warmest_window_events" -> ((s, dir) => {
-      // prcptot_warmcold_quarter pattern (_anuclim.py:389 _from_other_arg):
-      // the value of one rolling series at the argmax of another
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      val pick = Window.partitionBy(col("user_id"))
-        .orderBy(col("wavg").desc, col("d"))
-      dailyTotals(s, dir)
-        .withColumn("rn", row_number().over(w))
-        // exact cent window sums make BOTH the argmax ordering and the
-        // emitted mean engine-exact (a raw float avg could flip argmax
-        // ties by summation order)
-        .withColumn("wsum", sum(uq(col("total"), 100))
-          .over(w.rowsBetween(-6, 0)))
-        .withColumn("wavg", col("wsum").cast("double") / lit(7.0) / lit(100.0))
-        .withColumn("wevents", sum(col("n_events")).over(w.rowsBetween(-6, 0)))
-        .filter(col("rn") >= 7)
-        .withColumn("rk", row_number().over(pick))
-        .filter(col("rk") === 1)
-        .select(col("user_id"), col("d").as("window_end"),
-          col("wavg").as("warmest_avg"), col("wevents").as("events_in_window"))
-    })
-  )
-
-  private def oracle10: Map[String, String] = Map(
-    "q_warmest_window_events" ->
-      s"""with daily as ($dailySql),
-         |r as (select user_id, d,
-         |  row_number() over (partition by user_id order by d) rn,
-         |  sum(cast(round(total*100) as bigint)) over (
-         |    partition by user_id order by d
-         |    rows between 6 preceding and current row) wsum,
-         |  sum(n_events) over (partition by user_id order by d
-         |    rows between 6 preceding and current row) wevents
-         | from daily),
-         |f as (select user_id, d, wsum, wevents,
-         |  row_number() over (partition by user_id order by wsum desc, d) rk
-         | from r where rn >= 7)
-         |select user_id, d window_end,
-         | cast(wsum as double) / 7.0 / 100.0 warmest_avg,
-         | cast(wevents as bigint) events_in_window
-         |from f where rk = 1""".stripMargin
-  )
-
-  // ---- batch 11: detrend/regression, ratios, constrained runs ------------
-  private def queries11: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_detrend" -> ((s, dir) => {
-      // detrend deg-1 (generic.py:1711): per-entity OLS fit + residual std
-      val daily = dailyTotals(s, dir)
-        .withColumn("t", datediff(col("d"), to_date(lit("2024-01-01"))).cast("double"))
-      val fits = daily.groupBy(col("user_id"))
-        .agg(regr_slope(col("total"), col("t")).as("slope"),
-          regr_intercept(col("total"), col("t")).as("intercept"))
-      daily.join(fits, "user_id")
-        .withColumn("resid", col("total") - (col("intercept") + col("slope") * col("t")))
-        .groupBy(col("user_id"))
-        .agg(qk(first(col("slope")), 6).as("slope"),
-          qk(first(col("intercept")), 6).as("intercept"),
-          qk(stddev_samp(col("resid")), 6).as("resid_std"))
-    }),
-
-    "q_type_ratio" -> ((s, dir) => {
-      // liquid_precip_ratio family (_multivariate.py:871): phase-partitioned
-      // share of the total, per entity
-      // r10 allowlist shrink: values micro-quantize to exact int64 BEFORE
-      // the sums (order-free on any partitioning), so the ratio is one
-      // IEEE division of exact ints — bit-identical in both engines
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg((sum(when(col("event_type") === "purchase",
-            uq(col("value"), 1e6)).otherwise(0L)).cast("double")
-          / sum(uq(col("value"), 1e6)).cast("double"))
-          .as("purchase_ratio"))
-    }),
-
-    "q_first_run_after_date" -> ((s, dir) => {
-      // first_run_after_date (run_length.py:1148): first 3-day qualifying
-      // streak starting on/after Jan 10
-      val daily = dailyTotals(s, dir)
-        .filter(col("d") >= lit("2024-01-10"))
-        .withColumn("dnum", datediff(col("d"), to_date(lit("1970-01-01"))))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      daily.filter(col("total") > 50)
-        .withColumn("grp", col("dnum") - row_number().over(w))
-        .groupBy(col("user_id"), col("grp"))
-        .agg(min(col("d")).as("run_start"), count(lit(1)).as("len"))
-        .filter(col("len") >= 3)
-        .groupBy(col("user_id"))
-        .agg(min(col("run_start")).as("first_run_start"))
-    })
-  )
-
-  private def oracle11: Map[String, String] = Map(
-    "q_detrend" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, total,
-         |  cast(date_diff('day', date '2024-01-01', d) as double) t from daily),
-         |fits as (select user_id, regr_slope(total, t) slope,
-         |  regr_intercept(total, t) intercept from dd group by 1),
-         |r as (select dd.user_id, slope, intercept,
-         |  total - (intercept + slope * t) resid
-         | from dd join fits using (user_id))
-         |select user_id,
-         | floor((any_value(slope))*1e6 + 0.5)/1e6 slope,
-         | floor((any_value(intercept))*1e6 + 0.5)/1e6 intercept,
-         | floor((stddev_samp(resid))*1e6 + 0.5)/1e6 resid_std
-         |from r group by 1""".stripMargin,
-
-    "q_type_ratio" ->
-      """select user_id,
-        | cast(sum(case when event_type = 'purchase'
-        |     then cast(round(value * 1e6) as bigint) else 0 end) as double)
-        |   / cast(sum(cast(round(value * 1e6) as bigint)) as double)
-        |   purchase_ratio
-        |from events group by 1""".stripMargin,
-
-    "q_first_run_after_date" ->
-      s"""with daily as ($dailySql),
-         |f as (select user_id, d,
-         |  date_diff('day', date '1970-01-01', d) dnum
-         | from daily where d >= date '2024-01-10' and total > 50),
-         |q as (select user_id, d,
-         |  dnum - row_number() over (partition by user_id order by d) grp from f),
-         |runs as (select user_id, grp, min(d) run_start, count(*) len
-         | from q group by 1,2)
-         |select user_id, min(run_start) first_run_start
-         |from runs where len >= 3 group by 1""".stripMargin
-  )
-
-  // ---- batch 12: max run sum, rank family --------------------------------
-  private def queries12: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_max_run_sum" -> ((s, dir) => {
-      // windowed_max_run_sum (run_length.py:491): max over qualifying runs
-      // of the within-run value sum
-      val daily = dailyTotals(s, dir)
-        .withColumn("dnum", datediff(col("d"), to_date(lit("1970-01-01"))))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      daily.filter(col("total") > 50)
-        .withColumn("grp", col("dnum") - row_number().over(w))
-        .groupBy(col("user_id"), col("grp"))
-        // micro-quantized run sums (r10): exact int64 within each run, so
-        // max + final /1e6 are engine-exact with no round()
-        .agg(sum(uq(col("total"), 1e6)).as("run_sum_u"),
-          count(lit(1)).as("len"))
-        .filter(col("len") >= 2)
-        .groupBy(col("user_id"))
-        .agg((max(col("run_sum_u")).cast("double") / lit(1e6)).as("max_run_sum"))
-    }),
-
-    "q_ntile_deciles" -> ((s, dir) => {
-      // rank-family ops (basis of Mann-Whitney robustness tests): decile
-      // assignment with deterministic tie-break, per event type
-      val w = Window.partitionBy(col("event_type")).orderBy(col("value"), col("event_id"))
-      t(s, dir, "events")
-        .withColumn("decile", ntile(10).over(w))
-        .groupBy(col("event_type"), col("decile"))
-        // micro-quantized mean (r10): exact int64 sum, two IEEE divisions
-        // in a fixed order — order-free and engine-exact, unlike the old
-        // round(avg(value), 6) whose sum order decided boundary ties
-        .agg(count(lit(1)).as("n"),
-          (sum(uq(col("value"), 1e6)).cast("double")
-            / count(lit(1)) / lit(1e6)).as("decile_mean"))
-    })
-  )
-
-  private def oracle12: Map[String, String] = Map(
-    "q_max_run_sum" ->
-      s"""with daily as ($dailySql),
-         |f as (select user_id, d, total,
-         |  date_diff('day', date '1970-01-01', d) dnum
-         | from daily where total > 50),
-         |q as (select user_id, total,
-         |  dnum - row_number() over (partition by user_id order by d) grp from f),
-         |runs as (select user_id, grp,
-         |  sum(cast(round(total * 1e6) as bigint)) run_sum_u, count(*) len
-         | from q group by 1,2)
-         |select user_id,
-         | cast(max(run_sum_u) as double) / 1e6 max_run_sum
-         |from runs where len >= 2 group by 1""".stripMargin,
-
-    "q_ntile_deciles" ->
-      """with r as (select event_type, event_id, value,
-        |  ntile(10) over (partition by event_type
-        |    order by value, event_id) decile
-        | from events)
-        |select event_type, cast(decile as int) decile, count(*) n,
-        | cast(sum(cast(round(value * 1e6) as bigint)) as double)
-        |   / count(*) / 1e6 decile_mean
-        |from r group by 1,2""".stripMargin
-  )
-
-  // ---- batch 13: uncertainty partitioning --------------------------------
-  private def queries13: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_uncertainty_partition" -> ((s, dir) => {
-      // hawkins_sutton (_partitioning.py:57): event_type plays the model
-      // dim; per-day variance split via the law of total variance
-      graft.ensembles.Partitioning.hawkinsSutton(
-          t(s, dir, "events")
-            .withColumn("d", date_trunc("DAY", col("ts")).cast("date")),
-          "d", "event_type", "value")
-        .select(col("d"),
-          qk(col("model_uncertainty"), 6).as("model_uncertainty"),
-          qk(col("internal_uncertainty"), 6).as("internal_uncertainty"),
-          qk(col("total_uncertainty"), 6).as("total_uncertainty"))
-    })
-  )
-
-  private def oracle13: Map[String, String] = Map(
-    "q_uncertainty_partition" ->
-      """with pm as (select cast(date_trunc('day', ts) as date) d, event_type,
-        |  avg(value) m, var_pop(value) v from events group by 1,2),
-        |agg as (select d, var_pop(m) mu, avg(v) iu from pm group by 1)
-        |select d,
-        | floor((mu)*1e6 + 0.5)/1e6 model_uncertainty,
-        | floor((iu)*1e6 + 0.5)/1e6 internal_uncertainty,
-        | floor((mu + iu)*1e6 + 0.5)/1e6 total_uncertainty
-        |from agg""".stripMargin
-  )
-
-  // ---- batch 14: rank-sum test, robustness categories --------------------
-  private def queries14: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_mannwhitney_u" -> ((s, dir) => {
-      // Mann-Whitney U (robustness test "mannwhitney-utest",
-      // _robustness.py:585): pooled ranking per type, U for the fut half;
-      // deterministic tie-break on event_id (values are continuous)
-      val w = Window.partitionBy(col("event_type")).orderBy(col("value"), col("event_id"))
-      t(s, dir, "events")
-        .withColumn("fut", col("ts").cast("date") >= lit("2024-01-16"))
-        .withColumn("rk", row_number().over(w))
-        .groupBy(col("event_type"))
-        .agg((sum(when(col("fut"), col("rk").cast("long")))
-            - (sum(when(col("fut"), 1L)) * (sum(when(col("fut"), 1L)) + 1L)) / 2L)
-          .cast("long").as("u_stat"),
-          sum(when(col("fut"), 1L)).as("n_fut"),
-          sum(when(!col("fut"), 1L)).as("n_ref"))
-    }),
-
-    "q_robustness_categories" -> ((s, dir) => {
-      // robustness_categories (_robustness.py:336): IPCC-style advice labels
-      // from the (significance, agreement) fractions
-      val e = t(s, dir, "events")
-        .withColumn("fut", col("ts").cast("date") >= lit("2024-01-16"))
-      val per = e.groupBy(col("event_type"), col("user_id")).agg(
-        avg(when(!col("fut"), col("value"))).as("m1"),
-        var_samp(when(!col("fut"), col("value"))).as("v1"),
-        count(when(!col("fut"), 1)).as("n1"),
-        avg(when(col("fut"), col("value"))).as("m2"),
-        var_samp(when(col("fut"), col("value"))).as("v2"),
-        count(when(col("fut"), 1)).as("n2"))
-      val tstat = (col("m2") - col("m1")) / sqrt(col("v2") / col("n2") + col("v1") / col("n1"))
-      per.withColumn("tv", tstat)
-        .groupBy(col("event_type"))
-        .agg(qk(avg(when(abs(col("tv")) > 1.96, 1.0).otherwise(0.0)), 6).as("frac_sig"),
-          qk(avg(when(col("m2") > col("m1"), 1.0).otherwise(0.0)), 6).as("frac_pos"))
-        .withColumn("category",
-          when(col("frac_sig") < 0.66, "low agreement on significance")
-            .when(col("frac_pos") >= 0.8 || col("frac_pos") <= 0.2, "robust signal")
-            .otherwise("conflicting signal"))
-    })
-  )
-
-  private def oracle14: Map[String, String] = Map(
-    "q_mannwhitney_u" ->
-      """with r as (select event_type,
-        |  cast(ts as date) >= date '2024-01-16' fut,
-        |  row_number() over (partition by event_type order by value, event_id) rk
-        | from events)
-        |select event_type,
-        | cast(sum(case when fut then rk end)
-        |   - (sum(case when fut then 1 end) * (sum(case when fut then 1 end) + 1)) // 2
-        |   as bigint) u_stat,
-        | cast(sum(case when fut then 1 end) as bigint) n_fut,
-        | cast(sum(case when not fut then 1 end) as bigint) n_ref
-        |from r group by 1""".stripMargin,
-
-    "q_robustness_categories" ->
-      """with per as (select event_type, user_id,
-        |  avg(case when cast(ts as date) < date '2024-01-16' then value end) m1,
-        |  var_samp(case when cast(ts as date) < date '2024-01-16' then value end) v1,
-        |  count(case when cast(ts as date) < date '2024-01-16' then 1 end) n1,
-        |  avg(case when cast(ts as date) >= date '2024-01-16' then value end) m2,
-        |  var_samp(case when cast(ts as date) >= date '2024-01-16' then value end) v2,
-        |  count(case when cast(ts as date) >= date '2024-01-16' then 1 end) n2
-        | from events group by 1,2),
-        |w as (select event_type, m1, m2,
-        |  (m2 - m1) / sqrt(v2/n2 + v1/n1) tv from per),
-        |f as (select event_type,
-        |  floor((avg(case when abs(tv) > 1.96 then 1.0 else 0.0 end)
-        |)*1e6 + 0.5)/1e6 frac_sig,
-        |  floor((avg(case when m2 > m1 then 1.0 else 0.0 end)
-        |)*1e6 + 0.5)/1e6 frac_pos
-        | from w group by 1)
-        |select event_type, frac_sig, frac_pos,
-        | case when frac_sig < 0.66 then 'low agreement on significance'
-        |      when frac_pos >= 0.8 or frac_pos <= 0.2 then 'robust signal'
-        |      else 'conflicting signal' end category
-        |from f""".stripMargin
-  )
-
-  // ---- batch 15: percentile bootstrap over the oracle gate ---------------
-  private def queries15: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_bootstrap_percentile" -> ((s, dir) => {
-      // Zhang-2005 percentile bootstrap (core.Bootstrap): p90 of l_quantity
-      // per returnflag, recomputed under each in-base year replacement
-      // (1995-1997) as ONE unioned plan, then replica-averaged
-      val base = t(s, dir, "lineitem")
-        .filter(year(col("l_shipdate")).between(1995, 1997))
-        .select(col("l_returnflag"), col("l_quantity"),
-          year(col("l_shipdate")).as("yr"))
-      val reps = graft.core.Bootstrap.replicas(base, col("yr"), Seq(1995, 1996, 1997))
-      val perReplica = reps.groupBy(col("l_returnflag"), col("bootstrap_id"))
-        .agg(percentile(col("l_quantity"), lit(0.9)).as("p90"))
-      perReplica.groupBy(col("l_returnflag"))
-        .agg(qk(avg(col("p90")), 6).as("p90_bootstrap"),
-          count(lit(1)).as("n_replicas"))
-    })
-  )
-
-  private def oracle15: Map[String, String] = Map(
-    "q_bootstrap_percentile" ->
-      """with base as (select l_returnflag, l_quantity, year(l_shipdate) yr
-        | from lineitem where year(l_shipdate) between 1995 and 1997),
-        |pairs as (select a.y y_out, b.y y_in
-        | from (values (1995),(1996),(1997)) a(y), (values (1995),(1996),(1997)) b(y)
-        | where a.y <> b.y),
-        |reps as (
-        | select l_returnflag, l_quantity,
-        |  cast(y_out as varchar) || '<-' || cast(y_in as varchar) bootstrap_id
-        | from base join pairs on yr <> y_out
-        | union all
-        | select l_returnflag, l_quantity,
-        |  cast(y_out as varchar) || '<-' || cast(y_in as varchar) bootstrap_id
-        | from base join pairs on yr = y_in),
-        |per as (select l_returnflag, bootstrap_id,
-        |  quantile_cont(l_quantity, 0.9) p90 from reps group by 1,2)
-        |select l_returnflag,
-        | floor((avg(p90))*1e6 + 0.5)/1e6 p90_bootstrap,
-        | count(*) n_replicas
-        |from per group by 1""".stripMargin
-  )
-
-  // ---- batch 16: non-SQL-expressible operator demos (rows-only checks) ---
-  private def queries16: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_energy_analog" -> ((s, dir) => {
-      // Szekely-Rizzo energy distance per candidate event type vs the
-      // 'view' distribution (analog.sampleMetrics mapGroups kernel);
-      // 1-D feature = value/100, deterministic subsample (event_id mod 7)
-      // bounds the O(n^2) kernel; oracle = double self-join pair means.
-      // (NN purity + Friedman-Rafsky stay kernel-only: unit-tested.)
-      val e = t(s, dir, "events").filter(pmod(col("event_id"), lit(7)) === 0)
-      val target = e.filter(col("event_type") === "view")
-        .select((col("value") / 100.0).as("f"))
-        .collect().map(r => Array(r.getDouble(0)))
-      graft.analog.Analog.sampleMetrics(
-          e.select(col("event_type"), array(col("value") / 100.0).as("features")),
-          "event_type", "features", target,
-          maxPerGroup = 4000, withGraphStats = false)
-        .select(col("event_type"), qk(col("energy_distance"), 6).as("energy_distance"))
-    }),
-
-    "q_hf8_percentile" -> ((s, dir) => {
-      // Hyndman-Fan type-8 percentile (the reference's percentile_doy
-      // default; alpha=beta=1/3) — on the AT-SCALE exact plan: whole-column
-      // groups (a handful of event types over the full table) are exactly
-      // the unbounded-group regime where collect_list state grows with the
-      // data, so this query routes through Stats.hfQuantilesScale (range
-      // sort + two-pass rank selection, O(1) task memory) and still
-      // hash-matches the exact list-based H&F-8 oracle bit for bit.
-      Stats.hfQuantilesScale(t(s, dir, "events"), Seq("event_type"), "value",
-          Seq("p90_hf8" -> 0.9, "p10_hf8" -> 0.1))
-        .select(col("event_type"), qk(col("p90_hf8"), 6).as("p90_hf8"),
-          qk(col("p10_hf8"), 6).as("p10_hf8"))
-    }),
-
-    "q_percentile_doy" -> ((s, dir) => {
-      // true percentile_doy (calendar.py:396-494): same day-of-year pooled
-      // ACROSS YEARS +-2 days with wraparound, H&F type-8 — lineitem spans
-      // 7 years so this exercises the multi-year semantics
-      graft.indices.Season.doyPercentile(
-          t(s, dir, "lineitem"), Seq("l_returnflag"), "l_shipdate", "l_quantity",
-          halfWindow = 2, p = 0.9)
-        .select(col("l_returnflag"), col("doy"),
-          qk(col("doy_pct"), 6).as("p90"))
-    }),
-
-    "q_tx90p" -> ((s, dir) => {
-      // tx90p shape (_multivariate.py:1300): occurrences above the doy-p90
-      // climatology per year — multi-year percentile join + resample count
-      graft.indices.PercentileIndicators.doyExceedance(
-          t(s, dir, "lineitem"), Seq("l_returnflag"), "l_shipdate", "l_quantity",
-          p = 0.9, op = ">", halfWindow = 2, freq = "YS")
-        .select(col("l_returnflag"), col("period"), col("value").as("n_over"))
-    }),
-
-    "q_doy_spell_duration" -> ((s, dir) => {
-      // WSDI/CSDI shape (_multivariate.py:69): days inside runs of >= 3
-      // consecutive calendar days above the doy-p25 climatology
-      graft.indices.PercentileIndicators.doySpellDuration(
-          dailyTotals(s, dir), Seq("user_id"), "d", "total",
-          p = 0.25, op = ">", halfWindow = 2, window = 3, freq = "MS")
-        .select(col("user_id"), col("period"), col("value").as("days_in_spells"))
-    })
-  )
-
-  /** DuckDB H&F quantile over a sorted list column `a` with count `n`
-    * (type 8 at alpha=beta=1/3) — expression mirror of
-    * `Stats.hfQuantileOfSorted`. */
-  private def hfSql(p: Double): String = {
-    val h = s"greatest(1.0, least((n - 1.0/3.0 - 1.0/3.0 + 1.0)*$p + 1.0/3.0, n))"
-    s"""case when n < 1 then null else
-       |  a[cast(floor($h) as int)]
-       |  + ($h - floor($h))
-       |    * (a[least(cast(floor($h) as int) + 1, cast(n as int))]
-       |       - a[cast(floor($h) as int)]) end""".stripMargin
-  }
-
-  // ---- batch 17: the Canadian FWI system + McArthur Mark 5 ---------------
-
-  /** Synthetic daily fire-weather frame derived deterministically from the
-    * per-user daily event totals (noon temperature degC, 24 h rain mm, wind
-    * km/h, RH %, plus month/latitude for the day-length tables). The daily
-    * total is quantized to 2 decimals first so Spark's and the oracle's
-    * float summation order cannot diverge the branchy FWI recursion. */
-  private def weatherDaily(s: SparkSession, dir: String): DataFrame = {
-    val tot2 = qk(col("total"), 2)
-    dailyTotals(s, dir).select(
-      col("user_id"),
-      datediff(col("d"), to_date(lit("1970-01-01"))).cast("int").as("t"),
-      month(col("d")).as("mth"),
-      (col("user_id") % 140 - 70).cast("double").as("lat"),
-      least(lit(35.0), greatest(lit(-5.0), tot2 / 10.0 - 5.0)).as("airt"),
-      when(col("n_events") >= 4, tot2 / 20.0).otherwise(0.0).as("rain"),
-      least(lit(40.0), col("n_events").cast("double") * 7.0).as("wind"),
-      least(lit(95.0), greatest(lit(20.0), lit(100.0) - tot2 / 6.0)).as("hum"))
-  }
-
-  /** Oracle twin of [[weatherDaily]] + day-length lookups (CTE body). */
-  private val wxSql =
-    s"""daily as ($dailySql),
-       |wx as (
-       |  select user_id, d,
-       |    cast(date_diff('day', date '1970-01-01', d) as int) t,
-       |    cast(month(d) as int) mth,
-       |    cast(user_id % 140 - 70 as double) lat,
-       |    least(35.0, greatest(-5.0, tot2/10.0 - 5.0)) airt,
-       |    case when n_events >= 4 then tot2/20.0 else 0.0 end rain,
-       |    least(40.0, cast(n_events as double)*7.0) wind,
-       |    least(95.0, greatest(20.0, 100.0 - tot2/6.0)) hum,
-       |    row_number() over (partition by user_id order by d) rn
-       |  from (select user_id, d, floor(total*1e2 + 0.5)/1e2 tot2,
-       |        n_events from daily)
-       |),
-       |wx2 as (
-       |  select *,
-       |    case when lat < -30.0 then cast([11.5,10.5,9.2,7.9,6.8,6.2,6.5,7.4,8.7,10.0,11.2,11.8][mth] as double)
-       |         when lat < -15.0 then cast([10.1,9.6,9.1,8.5,8.1,7.8,7.9,8.3,8.9,9.4,9.9,10.2][mth] as double)
-       |         when lat < 15.0 then 9.0
-       |         when lat < 30.0 then cast([7.9,8.4,8.9,9.5,9.9,10.2,10.1,9.7,9.1,8.6,8.1,7.8][mth] as double)
-       |         else cast([6.5,7.5,9.0,12.8,13.9,13.9,12.4,10.9,9.4,8.0,7.0,6.0][mth] as double) end dl,
-       |    case when lat < -15.0 then cast([6.4,5.0,2.4,0.4,-1.6,-1.6,-1.6,-1.6,-1.6,0.9,3.8,5.8][mth] as double)
-       |         when lat < 15.0 then 1.39
-       |         else cast([-1.6,-1.6,-1.6,0.9,3.8,5.8,6.4,5.0,2.4,0.4,-1.6,-1.6][mth] as double) end flf
-       |  from wx
-       |)""".stripMargin
-
-  /** Step-identical recursive-CTE twin of `Fire.keetchByramDroughtIndex`
-    * (two-component state: kbdi + remaining runoff; per-step HALF_UP
-    * quantization at 8 decimals on both sides). */
-  private val kbSql =
-    """wxk as (
-      |  select user_id, t, rn, rain, airt + 5.0 tmax,
-      |    cast(sum(cast(floor(rain*1e4 + 0.5) as bigint))
-      |      over (partition by user_id) as double) / 1e4 * 12.175 pa
-      |  from wx
-      |),
-      |kb as (
-      |  select user_id, cast(null as int) t, 0 rn,
-      |    cast(0.0 as double) kbdi, cast(5.0 as double) rr
-      |  from (select distinct user_id from wxk)
-      |  union all
-      |  select user_id, t, rn,
-      |    cast(cast(least(greatest(kbdi0 + et - peff, 0.0), 203.2)
-      |      as decimal(38,8)) as double) kbdi,
-      |    rr_new rr
-      |  from (
-      |    select *, rain - r peff,
-      |      1e-3*(203.2 - kbdi0)*(0.968*exp(0.0875*tmax + 1.5552) - 8.3)
-      |        /(1.0 + 10.88*exp(-0.00173*pa)) et
-      |    from (
-      |      select n.user_id, n.t, n.rn, n.rain, n.tmax, n.pa, p.kbdi kbdi0,
-      |        case when n.rain <= 0.0 then n.rain else least(n.rain, p.rr) end r,
-      |        case when n.rain <= 0.0 then 5.0 else p.rr - least(n.rain, p.rr) end rr_new
-      |      from kb p join wxk n on n.user_id = p.user_id and n.rn = p.rn + 1
-      |    ) s1
-      |  ) s2
-      |)""".stripMargin
-
-  /** Step-identical recursive-CTE twin of `Fire.cffwisCodes` (per-step
-    * HALF_UP quantization at 8 decimals on both sides). */
-  private val fwiRecSql =
-    s"""$wxSql,
-       |rec as (
-       |  select user_id, cast(null as int) t, 0 rn,
-       |    cast(85.0 as double) ffmc, cast(6.0 as double) dmc, cast(15.0 as double) dc
-       |  from (select distinct user_id from wx2)
-       |  union all
-       |  select user_id, t, rn,
-       |    cast(cast(greatest(0.0, least(101.0, 59.5*(250.0-m)/(147.2+m))) as decimal(38,8)) as double) ffmc,
-       |    cast(cast(greatest(0.0, greatest(prr, 0.0) + rk) as decimal(38,8)) as double) dmc,
-       |    cast(cast(case when rain > 2.8 then (case when dr > 0.0 then dr + pe else pe end)
-       |              else dc0 + pe end as decimal(38,8)) as double) dc
-       |  from (
-       |    select *,
-       |      case when mo < ed then (case when mo < ew then ew - (ew-mo)/pow(10.0, kw_wet) else mo end)
-       |           when mo = ed then mo
-       |           else ed + (mo-ed)/pow(10.0, kw_dry) end m,
-       |      case when rain > 1.5 then 43.43*(5.6348 - ln(wmi + 1000.0*rw_dmc/(48.77 + b*rw_dmc) - 20.0))
-       |           else dmc0 end prr,
-       |      dc0 - 400.0*ln(1.0 + 3.937*rw_dc/smi) dr
-       |    from (
-       |      select *,
-       |        case when rain > 0.5 then least(250.0,
-       |          case when mo0 > 150.0
-       |            then mo0 + 42.5*rf*exp(-100.0/(251.0-mo0))*(1.0-exp(-6.93/rf)) + 0.0015*(mo0-150.0)*(mo0-150.0)*sqrt(rf)
-       |            else mo0 + 42.5*rf*exp(-100.0/(251.0-mo0))*(1.0-exp(-6.93/rf)) end)
-       |        else mo0 end mo
-       |      from (
-       |        select n.user_id, n.t, n.rn, n.airt, n.rain, n.wind, n.hum, n.dl, n.flf,
-       |          p.ffmc ffmc0, p.dmc dmc0, p.dc dc0,
-       |          147.2*(101.0-p.ffmc)/(59.5+p.ffmc) mo0,
-       |          n.rain - 0.5 rf,
-       |          0.942*pow(n.hum, 0.679) + 11.0*exp((n.hum-100.0)/10.0) + 0.18*(21.1-n.airt)*(1.0-1.0/exp(0.115*n.hum)) ed,
-       |          0.618*pow(n.hum, 0.753) + 10.0*exp((n.hum-100.0)/10.0) + 0.18*(21.1-n.airt)*(1.0-1.0/exp(0.115*n.hum)) ew,
-       |          (0.424*(1.0-pow((100.0-n.hum)/100.0, 1.7)) + 0.0694*sqrt(n.wind)*(1.0-pow((100.0-n.hum)/100.0, 8.0))) * 0.581*exp(0.0365*n.airt) kw_wet,
-       |          (0.424*(1.0-pow(n.hum/100.0, 1.7)) + 0.0694*sqrt(n.wind)*(1.0-pow(n.hum/100.0, 8.0))) * 0.581*exp(0.0365*n.airt) kw_dry,
-       |          case when n.airt < -1.1 then 0.0 else 1.894*(n.airt+1.1)*(100.0-n.hum)*n.dl*0.0001 end rk,
-       |          20.0 + 280.0/exp(0.023*p.dmc) wmi,
-       |          case when p.dmc <= 33.0 then 100.0/(0.5+0.3*p.dmc)
-       |               when p.dmc <= 65.0 then 14.0-1.3*ln(p.dmc)
-       |               else 6.2*ln(p.dmc)-17.2 end b,
-       |          0.92*n.rain - 1.27 rw_dmc,
-       |          greatest((0.36*(greatest(n.airt,-2.8)+2.8)+n.flf)/2.0, 0.0) pe,
-       |          0.83*n.rain - 1.27 rw_dc,
-       |          800.0*exp(-p.dc/400.0) smi
-       |        from rec p join wx2 n on n.user_id = p.user_id and n.rn = p.rn + 1
-       |      ) s1
-       |    ) s2
-       |  ) s3
-       |)""".stripMargin
-
-  private def queries17: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_fwi_codes" -> ((s, dir) => {
-      // Canadian FWI system (fire/_cffwis.py:246-530): the three moisture-
-      // code recursions in one per-entity kernel pass, derived ISI/BUI/FWI
-      // as codegen'd Column expressions over the codes.
-      import graft.indices.Fire
-      val wx = weatherDaily(s, dir)
-      val codes = Fire.cffwisCodes(
-        wx.select(col("user_id").as("key"), col("t"), col("airt").as("temp"),
-          col("rain"), col("wind"), col("hum"), col("mth"), col("lat")))
-      val wind = wx.select(col("user_id").as("wk"), col("t").as("wt"), col("wind"))
-      codes.join(wind, codes("key") === wind("wk") && codes("t") === wind("wt"))
-        .withColumn("isi", Fire.initialSpreadIndex(col("wind"), col("ffmc")))
-        .withColumn("bui", Fire.buildUpIndex(col("dmc"), col("dc")))
-        .withColumn("fwi", Fire.fireWeatherIndex(col("isi"), col("bui")))
-        .select(col("key").as("user_id"), col("t"),
-          round(col("ffmc"), 4).as("ffmc"), round(col("dmc"), 4).as("dmc"),
-          round(col("dc"), 4).as("dc"), round(col("isi"), 4).as("isi"),
-          round(col("bui"), 4).as("bui"), round(col("fwi"), 4).as("fwi"))
-    }),
-
-    "q_fire_season" -> ((s, dir) => {
-      // WF93 fire-season mask (fire/_cffwis.py:570): pure window algebra,
-      // no kernel — flip signal + last-flip-wins carry.
-      val wx = weatherDaily(s, dir)
-        .select(col("user_id").as("key"), col("t"), col("airt").as("temp"))
-      graft.indices.Fire.fireSeasonWF93(wx)
-        .select(col("key").as("user_id"), col("t"), col("fire_season"))
-    }),
-
-    "q_griffiths_ffdi" -> ((s, dir) => {
-      // McArthur Mark 5 chain (fire/_ffdi.py): real KBDI -> Griffiths
-      // drought factor (20-day rainfall-event window) -> FFDI. The two
-      // kernels share the per-entity partitioning; FFDI is a codegen'd
-      // scalar over the drought factor. r17: off the GateSpec legacy
-      // list — event rain sums ride the exact 1e-4 grid, every
-      // transcendental (pow(n,1.3), the smd exponential, FFDI's
-      // pow/exp) quantizes q6 before further arithmetic, KBDI state
-      // was already exact (r15), so df (8-dec HALF_UP state) and ffdi
-      // (one IEEE multiply of grid doubles) emit UNROUNDED.
-      import graft.indices.Fire
-      val wx = weatherDaily(s, dir)
-      val kin = wx.select(col("user_id").as("key"), col("t"), col("rain"),
-        (col("airt") + 5.0).as("tmax"),
-        ((sum(floor(col("rain") * 1e4 + 0.5).cast("long"))
-            .over(Window.partitionBy("user_id")).cast("double") / 1e4)
-            * 12.175).as("pa"))
-      val kbdi = graft.indices.Fire.keetchByramDroughtIndex(kin)
-      val rain = wx.select(col("user_id").as("rk"), col("t").as("rt"), col("rain"))
-      val gin = kbdi.join(rain, kbdi("key") === rain("rk") && kbdi("t") === rain("rt"))
-        .select(col("key"), col("t"), col("rain"), col("kbdi").as("smd"))
-      val df = Fire.griffithsDroughtFactor(gin)
-      val met = wx.select(col("user_id").as("mk"), col("t").as("mt"),
-        (col("airt") + 5.0).as("tmax"), col("hum"), col("wind"))
-      df.join(met, df("key") === met("mk") && df("t") === met("mt"))
-        .select(col("key").as("user_id"), col("t"), col("df"),
-          Fire.mcarthurFfdi(col("df"), col("tmax"), col("hum"), col("wind"))
-            .as("ffdi"))
-    }),
-
-    "q_overwintering_dc" -> ((s, dir) => {
-      // Overwintered drought code (fire/_cffwis.py:529): fall DC = last DC
-      // of each entity's series, winter precipitation = 0.35 x total rain.
-      import graft.indices.Fire
-      val wx = weatherDaily(s, dir)
-      val codes = Fire.cffwisCodes(
-        wx.select(col("user_id").as("key"), col("t"), col("airt").as("temp"),
-          col("rain"), col("wind"), col("hum"), col("mth"), col("lat")))
-      val dcf = codes.groupBy(col("key").as("user_id"))
-        .agg(max_by(col("dc"), col("t")).as("dcf"))
-      val wpr = wx.groupBy("user_id")
-        .agg((round(sum(col("rain")), 4) * 0.35).as("wpr"))
-      dcf.join(wpr, "user_id")
-        .select(col("user_id"),
-          round(Fire.overwinteringDroughtCode(col("dcf"), col("wpr")), 4).as("dc_spring"))
-    })
-  )
-
-  private def oracle17: Map[String, String] = Map(
-    "q_fwi_codes" ->
-      s"""with recursive $fwiRecSql,
-         |codes as (
-         |  select r.user_id, r.t, r.ffmc, r.dmc, r.dc, w.wind
-         |  from rec r join wx2 w on w.user_id = r.user_id and w.rn = r.rn
-         |  where r.rn > 0
-         |),
-         |derived as (
-         |  select *,
-         |    19.1152*exp(mo * -0.1386)*(1.0 + pow(mo, 5.31)/49300000.0) * exp(0.05039*wind) isi,
-         |    greatest(case when dmc = 0.0 and dc = 0.0 then 0.0
-         |      when dmc <= 0.4*dc then 0.8*dc*dmc/(dmc + 0.4*dc)
-         |      else dmc - (1.0 - 0.8*dc/(dmc + 0.4*dc))*(0.92 + pow(0.0114*dmc, 1.7)) end, 0.0) bui
-         |  from (select *, 147.2*(101.0-ffmc)/(59.5+ffmc) mo from codes)
-         |),
-         |fwi0 as (
-         |  select *,
-         |    case when bui <= 80.0 then 0.1*isi*(0.626*pow(bui, 0.809) + 2.0)
-         |         else 0.1*isi*(1000.0/(25.0 + 108.64/exp(0.023*bui))) end f
-         |  from derived
-         |)
-         |select user_id, t,
-         |  cast(cast(ffmc as decimal(38,4)) as double) ffmc,
-         |  cast(cast(dmc as decimal(38,4)) as double) dmc,
-         |  cast(cast(dc as decimal(38,4)) as double) dc,
-         |  cast(cast(isi as decimal(38,4)) as double) isi,
-         |  cast(cast(bui as decimal(38,4)) as double) bui,
-         |  cast(cast(case when f > 1.0 then exp(2.72*pow(0.434*ln(f), 0.647)) else f end as decimal(38,4)) as double) fwi
-         |from fwi0""".stripMargin,
-
-    "q_hf8_percentile" ->
-      s"""with s as (select event_type, list_sort(list(value)) a,
-         |           cast(count(value) as double) n from events group by 1)
-         |select event_type,
-         |  floor((${hfSql(0.9)})*1e6 + 0.5)/1e6 p90_hf8,
-         |  floor((${hfSql(0.1)})*1e6 + 0.5)/1e6 p10_hf8
-         |from s""".stripMargin,
-
-    "q_percentile_doy" ->
-      s"""with base as (
-         |  select l_returnflag k, cast(dayofyear(l_shipdate) as int) doy, l_quantity v
-         |  from lineitem
-         |),
-         |contrib as (
-         |  select k, ((doy - 1 + off + 365) % 365) + 1 doy2, v
-         |  from base, unnest(generate_series(-2, 2)) as u(off)
-         |),
-         |s as (select k, doy2 doy, list_sort(list(v)) a, cast(count(v) as double) n
-         |      from contrib group by 1, 2)
-         |select k l_returnflag, doy,
-         |  floor((${hfSql(0.9)})*1e6 + 0.5)/1e6 p90
-         |from s""".stripMargin,
-
-    "q_energy_analog" ->
-      """with e as (select event_type, value/100.0 f from events where event_id % 7 = 0),
-        |tgt as (select f from e where event_type = 'view'),
-        |dxy as (select c.event_type, sum(abs(c.f - t.f))/count(*) m
-        |        from e c cross join tgt t group by 1),
-        |wx as (select a.event_type, sum(abs(a.f - b.f))/count(*) m
-        |       from e a join e b on a.event_type = b.event_type group by 1),
-        |wy as (select sum(abs(a.f - b.f))/count(*) m from tgt a cross join tgt b)
-        |select d.event_type,
-        |  floor((2.0*d.m - x.m - y.m)*1e6 + 0.5)/1e6 energy_distance
-        |from dxy d join wx x on x.event_type = d.event_type cross join wy y""".stripMargin,
-
-    "q_simhash_buckets" ->
-      """with toks as (
-        |  select doc_id, md5(tok) h
-        |  from (select doc_id, unnest(string_split(text, ' ')) tok from documents)
-        |  where length(tok) > 0
-        |),
-        |bits as (
-        |  select doc_id, b,
-        |    sum(case when substr(h, b, 1) >= '8' then 1 else -1 end) s
-        |  from toks, unnest(generate_series(1, 32)) as u(b)
-        |  group by 1, 2
-        |)
-        |select doc_id,
-        |  cast(sum(case when s > 0 then 1::bigint << (32 - b) else 0 end) as bigint) fp,
-        |  cast(sum(case when s > 0 then 1::bigint << (32 - b) else 0 end) as bigint) >> 28 bucket
-        |from bits group by 1""".stripMargin,
-
-    "q_tx90p" ->
-      s"""with base as (
-         |  select l_returnflag k, cast(dayofyear(l_shipdate) as int) doy,
-         |    l_quantity v, l_shipdate
-         |  from lineitem
-         |),
-         |contrib as (
-         |  select k, ((doy - 1 + off + 365) % 365) + 1 doy2, v
-         |  from base, unnest(generate_series(-2, 2)) as u(off)
-         |),
-         |s as (select k, doy2 doy, list_sort(list(v)) a, cast(count(v) as double) n
-         |      from contrib group by 1, 2),
-         |pctl as (select k, doy, ${hfSql(0.9)} pct from s)
-         |select b.k l_returnflag,
-         |  cast(make_timestamp(year(b.l_shipdate), 1, 1, 0, 0, 0.0) as timestamp) period,
-         |  cast(coalesce(sum(case when b.v > p.pct then 1 end), 0) as bigint) n_over
-         |from base b join pctl p on p.k = b.k and p.doy = ((b.doy - 1) % 365) + 1
-         |group by 1, 2""".stripMargin,
-
-    "q_doy_spell_duration" ->
-      s"""with daily as ($dailySql),
-         |pool as (select user_id, cast(dayofyear(d) as int) doy, total from daily),
-         |contrib as (
-         |  select user_id, ((doy - 1 + off + 365) % 365) + 1 doy2, total v
-         |  from pool, unnest(generate_series(-2, 2)) as u(off)
-         |),
-         |s as (select user_id, doy2 doy, list_sort(list(v)) a, cast(count(v) as double) n
-         |      from contrib group by 1, 2),
-         |pctl as (select user_id, doy, ${hfSql(0.25)} pct from s),
-         |qual as (
-         |  select d.user_id, d.d,
-         |    date_diff('day', date '1970-01-01', d.d)
-         |      - row_number() over (partition by d.user_id order by d.d) grp
-         |  from (select user_id, d, total, ((cast(dayofyear(d) as int) - 1) % 365) + 1 doy
-         |        from daily) d
-         |  join pctl p on p.user_id = d.user_id and p.doy = d.doy
-         |  where d.total > p.pct
-         |),
-         |runs as (select user_id, grp, min(d) run_start, count(*) len
-         |         from qual group by 1, 2)
-         |select user_id,
-         |  cast(make_timestamp(year(run_start), month(run_start), 1, 0, 0, 0.0) as timestamp) period,
-         |  cast(sum(len) as bigint) days_in_spells
-         |from runs where len >= 3 group by 1, 2""".stripMargin,
-
-    "q_fire_season" ->
-      s"""with $wxSql
-         |select user_id, t,
-         |  coalesce(last_value(sig ignore nulls) over (
-         |    partition by user_id order by rn
-         |    rows between unbounded preceding and current row), 0) = 1 fire_season
-         |from (
-         |  select user_id, t, rn,
-         |    case when rn >= 5 and max(airt) over w3 < 5.0 then 0
-         |         when rn >= 5 and min(airt) over w3 > 12.0 then 1
-         |         end sig
-         |  from wx
-         |  window w3 as (partition by user_id order by rn rows between 3 preceding and 1 preceding)
-         |) flips""".stripMargin,
-
-    "q_griffiths_ffdi" ->
-      s"""with recursive $wxSql, $kbSql,
-         |win as (
-         |  select d.user_id, d.rn drn, w.rn - (d.rn - 20) iw1, w.rain
-         |  from wx d join wx w on w.user_id = d.user_id and w.rn between d.rn - 19 and d.rn
-         |  where d.rn >= 20
-         |),
-         |ev as (
-         |  select user_id, drn, iw1, rain,
-         |    iw1 - row_number() over (partition by user_id, drn order by iw1) grp
-         |  from win where rain > 2.0
-         |),
-         |evg as (
-         |  select user_id, drn, grp,
-         |    cast(sum(cast(floor(rain*1e4 + 0.5) as bigint)) as double)/1e4
-         |      psum,
-         |    max(rain) pmax
-         |  from ev group by 1,2,3
-         |),
-         |evn as (
-         |  select g.user_id, g.drn, g.grp, g.psum, 21 - max(e.iw1) nn
-         |  from evg g join ev e on e.user_id = g.user_id and e.drn = g.drn
-         |    and e.grp = g.grp and e.rain = g.pmax
-         |  group by 1,2,3,4
-         |),
-         |xev as (
-         |  select user_id, drn,
-         |    min(floor(pow(nn, 1.3)*1e6 + 0.5)/1e6
-         |      /(floor(pow(nn, 1.3)*1e6 + 0.5)/1e6 + psum - 2.0)) xraw
-         |  from evn group by 1,2
-         |),
-         |dfd as (
-         |  select k.user_id, k.t, k.rn, k.kbdi smd,
-         |    least(coalesce(x.xraw, 1.0), 1.0) x0
-         |  from kb k left join xev x on x.user_id = k.user_id and x.drn = k.rn
-         |  where k.rn >= 20
-         |),
-         |dfx as (
-         |  select user_id, t, rn, smd,
-         |    least(x0, case when smd < 20.0 then 1.0/(1.0 + 0.1135*smd)
-         |                   else 75.0/(270.525 - 1.267*smd) end) x
-         |  from dfd
-         |),
-         |dfr as (
-         |  select user_id, t, rn,
-         |    cast(cast(least(10.5*(1.0 - floor(exp(-(smd + 30.0)/40.0)*1e6 + 0.5)/1e6)
-         |      *(41.0*x*x + x)/(40.0*x*x + x + 1.0), 10.0) as decimal(38,8)) as double) df
-         |  from dfx
-         |)
-         |select f.user_id, f.t, f.df df,
-         |  (floor(pow(f.df, 0.987)*1e6 + 0.5)/1e6)
-         |    * (floor(exp(0.0338*(w.airt+5.0) - 0.0345*w.hum + 0.0234*w.wind + 0.243147)*1e6 + 0.5)/1e6)
-         |    ffdi
-         |from dfr f join wx w on w.user_id = f.user_id and w.rn = f.rn""".stripMargin,
-
-    "q_overwintering_dc" ->
-      s"""with recursive $fwiRecSql,
-         |dcf as (select user_id, max_by(dc, rn) dcf from rec where rn > 0 group by 1),
-         |wpr as (select user_id, cast(cast(sum(rain) as decimal(38,4)) as double)*0.35 wpr
-         |        from wx group by 1)
-         |select d.user_id,
-         |  cast(cast(greatest(400.0*ln(800.0/(0.75*(800.0*exp(-d.dcf/400.0)) + 0.75*(3.94*w.wpr))), 15.0)
-         |    as decimal(38,4)) as double) dc_spring
-         |from dcf d join wpr w on d.user_id = w.user_id""".stripMargin
-  )
-
-  // ---- batch 18: potential evapotranspiration + SPEI ----------------------
-
-  /** Multi-year daily climate series derived deterministically from
-    * lineitem (7 years of l_shipdate, 3 entities = l_returnflag): daily
-    * precipitation [mm], mean temperature [degC] and a per-entity latitude.
-    * Aggregates are quantized to 2 decimals BEFORE the nonlinear solar/PET
-    * chains so Spark and the oracle cannot diverge on summation order.
-    *
-    * A [[view]] persisted once per session like [[dailyTotals]]: ~25
-    * queries share this exact scan+agg subplan, its output is O(entities
-    * × days) ≈ 7.5k rows at ANY scale factor, and un-shared it
-    * re-attributed the lineitem scan cost to whichever consumer ran first
-    * in a bench pass (the r5 `q_winter_rain_ratio` ×2.95 "regression" —
-    * PLANS §36). */
-  private def climateDaily(s: SparkSession, dir: String): DataFrame =
-    view(s, dir, "climateDaily")(climateDailyPlan(s, dir))
-
-  private def climateDailyPlan(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag").as("k"), col("l_shipdate").cast("date").as("d"))
-      // prices summed as exact integer cents (l_extendedprice has 2
-      // decimals; a float avg lands exactly ON .005 rounding boundaries,
-      // where engine summation order flips the rounded value — integer
-      // summation is order-free), quantities are integer-valued -> exact
-      .agg(sum(uq(col("l_extendedprice"), 100)).as("epc"),
-        count(lit(1)).as("nli"),
-        sum(col("l_quantity")).as("prsum"))
-      .select(col("k"), col("d"),
-        (ascii(col("k")) - 70).cast("double").as("lat"),
-        (col("prsum") / 25.0).as("pr"),
-        (col("epc").cast("double") / col("nli") / 200000.0 - 10.0).as("tas"))
-
-  /** Oracle twin of [[climateDaily]] (CTE body). */
-  private val climSql =
-    """clim as (
-      |  select l_returnflag k, cast(l_shipdate as date) d,
-      |    cast(ascii(l_returnflag) - 70 as double) lat,
-      |    cast(sum(l_quantity) as double)/25.0 pr,
-      |    cast(cast(sum(cast(round(l_extendedprice*100) as bigint)) as bigint) as double)
-      |      /count(*)/200000.0 - 10.0 tas
-      |  from lineitem group by 1, 2
-      |)""".stripMargin
-
-  /** Spencer solar-geometry CTE chain over a source CTE exposing (d, lat):
-    * day angle, declination, eccentricity, sunset hour angle, and daily
-    * extraterrestrial radiation `ra` [J m-2 d-1] at the 1361 W/m2 solar
-    * constant (helpers.py:119/:195/:400 twins). */
-  private def solarSql(src: String): String =
-    s"""sol as (
-       |  select *,
-       |    2.0*pi()*(cast(dayofyear(d) as double) - 1.0)
-       |      /cast(dayofyear(make_date(year(d), 12, 31)) as double) da,
-       |    radians(lat) latr
-       |  from $src
-       |),
-       |dec_ as (
-       |  select *,
-       |    0.006918 - 0.399912*cos(da) + 0.070257*sin(da) - 0.006758*cos(2*da)
-       |      + 0.000907*sin(2*da) - 0.002697*cos(3*da) + 0.001480*sin(3*da) decl,
-       |    1.0001100 + 0.034221*cos(da) + 0.001280*sin(da) + 0.000719*cos(2*da)
-       |      + 0.000077*sin(2*da) ecc
-       |  from sol
-       |),
-       |hs_ as (
-       |  select *, acos(greatest(-1.0, least(1.0, -tan(latr)*tan(decl)))) hss
-       |  from dec_
-       |),
-       |ra_ as (
-       |  select *,
-       |    1361.0*86400.0/pi()*ecc*(hss*sin(latr)*sin(decl)
-       |      + cos(latr)*cos(decl)*sin(hss)) ra
-       |  from hs_
-       |)""".stripMargin
-
-  /** Acklam inverse-normal-CDF rational approximation as a SQL CASE over a
-    * probability-valued column expression (mirrors `SpecialMath.probit`). */
-  private def probitSql(p: String): String = {
-    def horner(cs: Seq[Double], x: String): String =
-      cs.tail.foldLeft(cs.head.toString)((acc, ci) => s"($acc*$x + $ci)")
-    val a = Seq(-3.969683028665376e+01, 2.209460984245205e+02, -2.759285104469687e+02,
-      1.383577518672690e+02, -3.066479806614716e+01, 2.506628277459239e+00)
-    val b = Seq(-5.447609879822406e+01, 1.615858368580409e+02, -1.556989798598866e+02,
-      6.680131188771972e+01, -1.328068155288572e+01)
-    val c = Seq(-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e+00,
-      -2.549732539343734e+00, 4.374664141464968e+00, 2.938163982698783e+00)
-    val d = Seq(7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e+00,
-      3.754408661907416e+00)
-    val qLo = s"sqrt(-2.0*ln($p))"
-    val qHi = s"sqrt(-2.0*ln(1.0 - $p))"
-    def tailExpr(q: String): String =
-      s"(${horner(c, q)}) / ((${horner(d, q)})*$q + 1.0)"
-    val centerQ = s"($p - 0.5)"
-    val centerR = s"($centerQ*$centerQ)"
-    s"""case when $p < 0.02425 then ${tailExpr(qLo)}
-       | when $p <= 0.97575 then
-       |   (${horner(a, centerR)})*$centerQ / ((${horner(b, centerR)})*$centerR + 1.0)
-       | else -${tailExpr(qHi)} end""".stripMargin
-  }
-
-  private def queries18: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_pet_daily" -> ((s, dir) => {
-      // potential_evapotranspiration (converters.py:1890), the four daily
-      // methods side by side — pure codegen'd projections over the synthetic
-      // fire-weather frame (solar geometry recomputed per row; no shuffle
-      // beyond the shared daily rollup).
-      import graft.indices.Evapotranspiration
-      val wx = weatherDaily(s, dir)
-        .withColumn("d", date_add(to_date(lit("1970-01-01")), col("t")))
-        .withColumn("tasmin", col("airt") - 5.0)
-        .withColumn("tasmax", col("airt") + 5.0)
-      val rnMj = Evapotranspiration.extraterrestrialRadiation(col("lat"), col("d")) / 1e6 * 0.75
-      wx.select(col("user_id"), col("t"),
-        qk(Evapotranspiration.petBaierRobertson65(
-          col("tasmin"), col("tasmax"), col("lat"), col("d")), 4).as("pet_br65"),
-        qk(Evapotranspiration.petHargreaves85(
-          col("tasmin"), col("tasmax"), col("lat"), col("d")), 4).as("pet_hg85"),
-        qk(Evapotranspiration.petMcGuinnessBordne05(
-          col("airt"), col("lat"), col("d")), 4).as("pet_mb05"),
-        qk(Evapotranspiration.petFaoAllen98(
-          col("tasmin"), col("tasmax"), col("hum") / 100.0, rnMj,
-          Evapotranspiration.windSpeed2m(col("wind") / 3.6)), 4).as("pet_fao98"))
-    }),
-
-    "q_pet_thornthwaite" -> ((s, dir) => {
-      // Thornthwaite 1948 monthly PET (converters.py:2082): monthly rollup
-      // -> yearly heat-index broadcast join -> projection. r17: off the
-      // GateSpec legacy list — quantize=6 already grids every interior
-      // transcendental and mean, so pet_mm = 16·dl_m·powq is two IEEE
-      // multiplies of grid doubles (bit-identical across engines) and
-      // the final lands on the qk floor grid instead of round(,4).
-      graft.indices.Evapotranspiration
-        .petThornthwaite48(climateDaily(s, dir), Seq("k"), "d", "tas", "lat", quantize = 6)
-        .select(col("k").as("l_returnflag"), col("m").as("period"),
-          qk(col("pet_mm"), 4).as("pet_mm"))
-    }),
-
-    "q_spei" -> ((s, dir) => {
-      // SPEI (_agro.py:1148): wb = pr - PET(HG85), monthly means, 3-month
-      // rolling, month-of-year pools, fisk APP fit (stats.py:653) + probit.
-      import graft.indices.Evapotranspiration
-      val clim = climateDaily(s, dir)
-      val wb = clim.withColumn("wb", col("pr") -
-        Evapotranspiration.petHargreaves85(
-          col("tas") - 5.0, col("tas") + 5.0, col("lat"), col("d")))
-      Evapotranspiration.spei(wb, Seq("k"), "d", "wb",
-          window = 3, floc = -50.0, quantize = 6)
-        .select(col("k").as("l_returnflag"), col("m").as("period"),
-          qk(col("wb"), 4).as("wb3"), qk(col("spei"), 4).as("spei"))
-    })
-  )
-
-  // ---- batch 20: agro composites ------------------------------------------
-
-  private def queries20: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_rain_season" -> ((s, dir) => {
-      // rain_season (_agro.py:796): wet-start trigger + no-dry-hole state
-      // machine (runs_with_holes), first qualifying event >= 33 days from
-      // May on; season end = first 4-day dry run after the start from Sep
-      // on. The acid test for the Runs.runsWithHoles window plan.
-      graft.indices.Agro.rainSeason(climateDaily(s, dir), Seq("k"), "d", "pr",
-          threshWetStart = 6.0, windowWetStart = 3, windowNotDryStart = 30,
-          threshDryStart = 1.0, windowDryStart = 7,
-          threshDryEnd = 1.0, windowDryEnd = 4,
-          startMonth = 5, endMonth = 9)
-        .select(col("k").as("l_returnflag"), col("y"),
-          col("rain_season_start"), col("rain_season_end"), col("rain_season_length"))
-    }),
-
-    "q_minhash_candidates" -> ((s, dir) => {
-      // MinHash-LSH near-dup end to end (Dedup.nearDuplicates): banded
-      // signatures over word-3-gram shingles -> bucket-local candidate
-      // pairs -> exact-Jaccard verify. bands=16/rows=1 pins recall at ~1
-      // for J>=0.7 (miss prob (1-J)^16 <= 4e-9) so the LSH output EQUALS
-      // the oracle's exhaustive all-pairs truth; 3-gram shingling keeps
-      // buckets discriminative (unigram sets on a small vocabulary would
-      // collapse every document into one bucket). The O(n^2) comparison
-      // never materialises — only bucket-local pairs are generated.
-      Dedup.nearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-          ngram = 3, threshold = 0.7, numHashes = 16, bands = 16)
-        // raw exact-int ratio (r10): bit-identical in both engines
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-    })
-  )
-
-  private def oracle20: Map[String, String] = Map(
-
-    "q_rain_season" ->
-      s"""with $climSql,
-         |cy as (select k, d, pr, year(d) y from clim),
-         |sl as (
-         |  select *, row_number() over (partition by k, y order by d) rn,
-         |    sum(pr) over (partition by k, y order by d
-         |      rows between 2 preceding and current row) w3
-         |  from cy where month(d) >= 5
-         |),
-         |m as (
-         |  select *, case
-         |    when rn >= 7 and max(case when pr <= 1.0 then 0 else 1 end)
-         |      over (partition by k, y order by d
-         |            rows between 6 preceding and current row) = 0 then 0
-         |    when w3 >= 6.0 and rn >= 3 then 1 end marker
-         |  from sl
-         |),
-         |st as (
-         |  select *, coalesce(last_value(marker ignore nulls)
-         |    over (partition by k, y order by d
-         |          rows between unbounded preceding and current row), 0) in_event
-         |  from m
-         |),
-         |runid as (select *, sum(case when in_event = 1 then 0 else 1 end)
-         |  over (partition by k, y order by d) rid from st),
-         |runs as (select k, y, rid, min(d) run_start, count(*) run_len
-         |  from runid where in_event = 1 group by 1, 2, 3),
-         |starts as (select k, y, min(run_start) start_d
-         |  from runs where run_len >= 33 group by 1, 2),
-         |wy as (select cy.k, cy.y, cy.d, cy.pr, s.start_d
-         |  from cy join starts s on s.k = cy.k and s.y = cy.y),
-         |did as (select *, case when pr <= 1.0 and d > start_d then 1 else 0 end dry from wy),
-         |did2 as (select *, sum(1 - dry) over (partition by k, y order by d) rid from did),
-         |druns as (select k, y, rid, min(d) run_start, count(*) run_len
-         |  from did2 where dry = 1 group by 1, 2, 3),
-         |ends as (select k, y, min(run_start) end_d
-         |  from druns where run_len >= 4 and month(run_start) >= 9 group by 1, 2),
-         |lastobs as (select k, y, max(d) last_d from cy group by 1, 2)
-         |select s.k l_returnflag, s.y, dayofyear(s.start_d) rain_season_start,
-         |  dayofyear(e.end_d) rain_season_end,
-         |  coalesce(date_diff('day', s.start_d, e.end_d),
-         |    date_diff('day', s.start_d, l.last_d) + 1) rain_season_length
-         |from starts s
-         |left join ends e on e.k = s.k and e.y = s.y
-         |join lastobs l on l.k = s.k and l.y = s.y""".stripMargin,
-
-    "q_minhash_candidates" ->
-      """with toks as (select doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') t from documents),
-        |g as (select doc_id, list_distinct(list_transform(
-        |    range(1, greatest(len(t) - 1, 1)),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) grams
-        | from toks),
-        |pairs as (
-        | select a.doc_id id_a, b.doc_id id_b,
-        |  cast(len(list_intersect(a.grams, b.grams)) as double)
-        |    / len(list_distinct(list_concat(a.grams, b.grams))) jaccard
-        | from g a join g b on a.doc_id < b.doc_id)
-        |select id_a, id_b, jaccard from pairs where jaccard >= 0.7""".stripMargin
-  )
-
-  // ---- batch 22: breadth-catalogue base shapes + sea ice ------------------
-
-  /** climateDaily mapped onto the indicator frame contract
-    * (location_id, time, value[, value2]). */
-  private def climInd(s: SparkSession, dir: String): DataFrame =
-    climateDaily(s, dir).select(col("k").as("location_id"),
-      col("d").cast("timestamp").as("time"),
-      col("tas").as("value"), col("pr").as("value2"))
-
-  private val climIndSql =
-    """ind as (select k location_id, cast(d as timestamp) time_, tas value_, pr value2_
-      |  from clim)""".stripMargin
-
-  private def queries22: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_sdii" -> ((s, dir) => {
-      // sdii (_threshold.py:680) through the registry's thresholded_stat
-      // base: mean precip over wet days per year.
-      graft.indicator.Registry.computeBases("thresholded_stat")(
-          climInd(s, dir).withColumn("value", col("value2")), "YS",
-          Map("op" -> ">=", "thresh" -> "1.0", "reducer" -> "mean"))
-        .select(col("location_id"), col("period"), qk(col("value"), 6).as("sdii"))
-    }),
-
-    "q_storm_days" -> ((s, dir) => {
-      // snd_storm_days shape (_threshold.py:600): days whose day-over-day
-      // increase >= 2 per month (lag crosses month bounds, like the
-      // reference's un-resampled diff).
-      graft.indicator.Registry.computeBases("lag_diff_count")(
-          climInd(s, dir).withColumn("value", col("value2")), "MS",
-          Map("op" -> ">=", "thresh" -> "2.0"))
-        .select(col("location_id"), col("period"), col("value").as("storm_days"))
-    }),
-
-    "q_days_with_snow" -> ((s, dir) => {
-      // days_with_snow (_threshold.py:1817): domain_count low < v <= high.
-      graft.indicator.Registry.computeBases("domain_count")(
-          climInd(s, dir).withColumn("value", col("value2")), "YS",
-          Map("low" -> "0.5", "high" -> "3.0"))
-        .select(col("location_id"), col("period"), col("value").as("n_days"))
-    }),
-
-    "q_growing_season_length" -> ((s, dir) => {
-      // growing_season_length (_threshold.py:1096): first 6-day run with
-      // tas >= thresh to first 6-day failing run after Jul 1, per year.
-      graft.indicator.Registry.computeBases("season_bound")(
-          climInd(s, dir), "YS",
-          Map("op" -> ">=", "thresh" -> "10.0", "window" -> "6",
-            "mid_month" -> "7", "bound" -> "length"))
-        .select(col("location_id"), col("period").as("y"), col("value").as("gsl"))
-    }),
-
-    "q_cold_dry_quadrant" -> ((s, dir) => {
-      // cold_and_dry_days (_multivariate.py:252): both-variable day count.
-      graft.indicator.Registry.computeBases("bivariate_count")(
-          climInd(s, dir), "MS",
-          Map("op" -> "<", "thresh" -> "10.0", "op2" -> "<", "thresh2" -> "1.0"))
-        .select(col("location_id"), col("period"), col("value").as("cd_days"))
-    }),
-
-    "q_isothermality" -> ((s, dir) => {
-      // isothermality BIO3 (_anuclim.py:51): mean diurnal range over
-      // extreme range x100.
-      graft.indicator.Registry.computeBases("isothermality")(
-          climInd(s, dir)
-            .withColumn("valuemin", col("value") - col("value2"))
-            .withColumn("valuemax", col("value") + 3.0 + col("value2")), "YS",
-          Map.empty)
-        .select(col("location_id"), col("period"), qk(col("value"), 6).as("bio3"))
-    }),
-
-    "q_embedding_neardup" -> ((s, dir) => {
-      // embedding-cosine near-dup (the 5th dedup modality), exercised on
-      // the BUCKETED scale path: the corpus gets planted near-duplicates
-      // (every 10th vector + a deterministically perturbed copy — coord i
-      // scaled by 1 + 0.002*(((i + id) % 7) - 3), reproducible in any SQL
-      // engine), and pairs are mined with the EXACT staggered-grid
-      // epsilon-join (Similarity.gridNearDuplicates): cell-local joins
-      // only, no all-pairs product, recall 1 by the projection bound — so
-      // the output hash-matches the oracle's exhaustive twin.
-      val base = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      // orig_id rename: Spark 4 lateral-alias resolution binds a lambda's
-      // col("vec_id") to the NEW alias (+1000000) while DuckDB lambdas see
-      // the ORIGINAL — the r12 round(4) masked that phase mismatch; with
-      // distinct names both engines perturb with the original id
-      val copies = base.filter(col("vec_id") % 10 === 0)
-        .select(col("vec_id").as("orig_id"), col("v"))
-        .select((col("orig_id") + 1000000L).as("vec_id"),
-          transform(col("v"), (x, i) =>
-            x * (lit(1.0) + lit(0.002) *
-              (((i.cast("long") + col("orig_id")) % 7) - 3).cast("double"))).as("v"))
-      // r13 exactGrid: the pair cosine rides the integer grid, so the
-      // emitted double is bit-identical across engines without a round;
-      // the 0.99-vs-~0.9999/0.51 planted margin dwarfs the grid's 1e-12
-      // membership tolerance
-      Similarity.gridNearDuplicates(base.unionByName(copies), "vec_id", "v",
-          threshold = 0.99, dim = 64, exactGrid = true)
-        .select(col("id_a"), col("id_b"), col("cosine"))
-    }),
-
-    "q_semantic_dedup" -> ((s, dir) => {
-      // SemDeDup-style semantic dedup: same deterministic near-identical
-      // planting as q_embedding_neardup (every 10th vector + a perturbed
-      // copy, cosine ≈ 0.9999 vs ≤ 0.48 for genuine pairs — wide
-      // cross-engine margin), clusters = the stored label column (the
-      // precomputed-assignment form the scale pipeline uses). Pairs are
-      // cluster-local; a doc survives iff no lower-id in-cluster
-      // neighbor has cosine ≥ 0.99. The oracle replays the rule with an
-      // exhaustive within-label join.
-      val base = t(s, dir, "embeddings").select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      // orig_id rename: same lateral-alias hazard as q_embedding_neardup —
-      // both engines must perturb with the ORIGINAL id
-      val copies = base.filter(col("vec_id") % 10 === 0)
-        .select(col("vec_id").as("orig_id"), col("label"), col("v"))
-        .select((col("orig_id") + 1000000L).as("vec_id"), col("label"),
-          transform(col("v"), (x, i) =>
-            x * (lit(1.0) + lit(0.002) *
-              (((i.cast("long") + col("orig_id")) % 7) - 3).cast("double"))).as("v"))
-      Similarity.semanticDedup(base.unionByName(copies), "vec_id", "v",
-          "label", threshold = 0.99)
-        .orderBy("vec_id")
-    }),
-
-    "q_wettest_quarter_temp" -> ((s, dir) => {
-      // ANUCLIM P8 (quarter_select base): mean temperature of the wettest
-      // 3-month window per year — monthly rollup + rolling windows +
-      // per-period argmax selection.
-      graft.indicator.Registry.computeBases("quarter_select")(
-          climInd(s, dir), "YS",
-          Map("sel_var" -> "value2", "sel_agg" -> "sum", "sel_op" -> "max",
-            "out_var" -> "value", "out_agg" -> "mean"))
-        .select(col("location_id"), col("period"),
-          qk(col("value"), 4).as("wettest_quarter_tas"))
-    }),
-
-    "q_sea_ice" -> ((s, dir) => {
-      // sea_ice_area/extent (_threshold.py:3058,:3097): weighted spatial
-      // aggregation, cells = users, concentration/area synthesized.
-      val e = t(s, dir, "events").select(
-        date_trunc("DAY", col("ts")).cast("date").as("d"),
-        ((col("value") % 100.0) / 100.0).as("siconc"),
-        ((col("user_id") % 50) + 1).cast("double").as("cell_area"))
-      graft.indices.SeaIce.seaIce(e, Seq("d"), col("siconc"), col("cell_area"))
-        .select(col("d"), qk(col("sea_ice_area"), 6).as("sea_ice_area"),
-          qk(col("sea_ice_extent"), 6).as("sea_ice_extent"))
-    })
-  )
-
-  private def oracle22: Map[String, String] = Map(
-
-    "q_sdii" ->
-      s"""with $climSql
-         |select k location_id, cast(date_trunc('year', d) as timestamp) period,
-         |  floor((avg(case when pr >= 1.0 then pr end))*1e6 + 0.5)/1e6 sdii
-         |from clim group by 1, 2""".stripMargin,
-
-    "q_storm_days" ->
-      s"""with $climSql,
-         |l as (select k, d, pr - lag(pr) over (partition by k order by d) dd
-         |  from clim)
-         |select k location_id, cast(date_trunc('month', d) as timestamp) period,
-         |  cast(coalesce(sum(case when dd >= 2.0 then 1 end), 0) as bigint) storm_days
-         |from l group by 1, 2""".stripMargin,
-
-    "q_days_with_snow" ->
-      s"""with $climSql
-         |select k location_id, cast(date_trunc('year', d) as timestamp) period,
-         |  cast(coalesce(sum(case when pr > 0.5 and pr <= 3.0 then 1 end), 0) as bigint) n_days
-         |from clim group by 1, 2""".stripMargin,
-
-    "q_growing_season_length" ->
-      s"""with $climSql,
-         |cy as (select k, d, tas, year(d) y from clim),
-         |q as (select *, case when tas >= 10.0 then 1 else 0 end ok from cy),
-         |rid as (select *, sum(1 - ok) over (partition by k, y order by d) r1,
-         |  sum(ok) over (partition by k, y order by d) r0 from q),
-         |runs as (select k, y, r1, min(d) run_start, count(*) run_len
-         |  from rid where ok = 1 group by 1, 2, 3),
-         |starts as (select k, y, min(run_start) start_d from runs
-         |  where run_len >= 6 group by 1, 2),
-         |aft as (select * from rid where d >= make_date(y, 7, 1)),
-         |rid2 as (select *, sum(ok) over (partition by k, y order by d) r2 from aft),
-         |eruns as (select k, y, r2, min(d) run_start, count(*) run_len
-         |  from rid2 where ok = 0 group by 1, 2, 3),
-         |ends as (select k, y, min(run_start) end_d from eruns
-         |  where run_len >= 6 group by 1, 2),
-         |lastd as (select k, y, max(d) last_d from cy group by 1, 2)
-         |select s.k location_id, s.y,
-         |  coalesce(date_diff('day', s.start_d, e.end_d),
-         |    date_diff('day', s.start_d, l.last_d) + 1) gsl
-         |from starts s
-         |left join ends e on e.k = s.k and e.y = s.y
-         |join lastd l on l.k = s.k and l.y = s.y""".stripMargin,
-
-    "q_cold_dry_quadrant" ->
-      s"""with $climSql
-         |select k location_id, cast(date_trunc('month', d) as timestamp) period,
-         |  cast(coalesce(sum(case when tas < 10.0 and pr < 1.0 then 1 end), 0) as bigint) cd_days
-         |from clim group by 1, 2""".stripMargin,
-
-    "q_isothermality" ->
-      s"""with $climSql
-         |select k location_id, cast(date_trunc('year', d) as timestamp) period,
-         |  floor((avg((tas + 3.0 + pr) - (tas - pr))
-         |    / (max(tas + 3.0 + pr) - min(tas - pr)) * 100.0
-         |)*1e6 + 0.5)/1e6 bio3
-         |from clim group by 1, 2""".stripMargin,
-
-    "q_embedding_neardup" ->
-      s"""with base as (select vec_id,
-         |  list_transform(embedding, x -> cast(x as double)) v from embeddings),
-         |cop as (select b.vec_id + 1000000 vec_id,
-         |  list_transform(v, (x, i) -> x * (cast(1.0 as double)
-         |    + cast(0.002 as double)
-         |      * cast(((i - 1 + b.vec_id) % 7) - 3 as double))) v
-         | from base b where b.vec_id % 10 = 0),
-         |corpus as (select * from base union all select * from cop)
-         |select id_a, id_b, cosine from (
-         | select a.vec_id id_a, b.vec_id id_b,
-         |   ${cosQSql("a.v", "b.v")} cosine
-         | from corpus a join corpus b on a.vec_id < b.vec_id) t
-         |where cosine >= 0.99""".stripMargin,
-
-    "q_semantic_dedup" ->
-      """with base as (select vec_id, label,
-        |  list_transform(embedding, x -> cast(x as double)) v from embeddings),
-        |cop as (select b.vec_id + 1000000 vec_id, label,
-        |  list_transform(v, (x, i) -> x * (cast(1.0 as double)
-        |    + cast(0.002 as double)
-        |      * cast(((i - 1 + b.vec_id) % 7) - 3 as double))) v
-        | from base b where b.vec_id % 10 = 0),
-        |corpus as (select * from base union all select * from cop),
-        |n as (select vec_id, label, v,
-        |  sqrt(list_sum(list_transform(v, x -> x*x))) nrm from corpus),
-        |near as (select b.vec_id, cast(count(*) as bigint) n_near
-        |  from n a join n b on a.label = b.label and a.vec_id < b.vec_id
-        |  where list_sum(list_transform(range(1, len(a.v) + 1),
-        |    i -> a.v[i]*b.v[i]))/(a.nrm*b.nrm) >= 0.99
-        |  group by 1)
-        |select c.vec_id, c.label as "cluster", coalesce(nn.n_near, 0) n_near,
-        |  case when nn.vec_id is null then 1 else 0 end kept
-        |from corpus c left join near nn using (vec_id)
-        |order by c.vec_id""".stripMargin,
-
-    "q_wettest_quarter_temp" ->
-      s"""with $climSql,
-         |mon as (select k location_id, cast(date_trunc('month', d) as timestamp) m,
-         |  sum(pr) selv, avg(tas) outv from clim group by 1, 2),
-         |win as (select *, row_number() over (partition by location_id order by m) rn,
-         |  sum(selv) over (partition by location_id order by m
-         |    rows between 2 preceding and current row) sel3,
-         |  avg(outv) over (partition by location_id order by m
-         |    rows between 2 preceding and current row) out3
-         | from mon)
-         |select location_id, cast(date_trunc('year', m) as timestamp) period,
-         |  floor((max_by(out3, sel3))*1e4 + 0.5)/1e4 wettest_quarter_tas
-         |from win where rn >= 3 group by 1, 2""".stripMargin,
-
-    "q_sea_ice" ->
-      """with e as (select cast(date_trunc('day', ts) as date) d,
-        |  (value % 100.0)/100.0 siconc,
-        |  cast((user_id % 50) + 1 as double) cell_area from events)
-        |select d,
-        | floor((coalesce(sum(case when siconc >= 0.15 then siconc*cell_area end), 0.0)
-        |)*1e6 + 0.5)/1e6 sea_ice_area,
-        | floor((coalesce(sum(case when siconc >= 0.15 then cell_area end), 0.0)
-        |)*1e6 + 0.5)/1e6 sea_ice_extent
-        |from e group by 1""".stripMargin
-  )
-
-  // ---- batch 34: bootstrapped percentile indicator ------------------------
-
-  // ---- batch 38: keep_longest_run + find_events oracles -------------------
-
-  private def queries38: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_corpus_pipeline" -> ((s, dir) => {
-      // End-to-end training-corpus cleaning in ONE declarative plan:
-      // quality gate (Gopher/C4-style score) -> near-dup removal (LSH ->
-      // components -> keep component minimum) -> per-language corpus
-      // stats. The quality/token scalars ride the scan (no shuffle); the
-      // drop list broadcasts; one final hash-agg.
-      val docs = t(s, dir, "documents")
-      val drop = docComponents(s, dir)
-        .filter(col("id") =!= col("component")).select(col("id").as("doc_id"))
-      docs
-        .withColumn("quality", TextStats.qualityScore(col("text")))
-        .withColumn("tokens", TextStats.tokenCount(col("text")))
-        .filter(col("quality") >= 0.5)
-        .join(broadcast(drop), Seq("doc_id"), "left_anti")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("tokens")).as("total_tokens"),
-          qk(avg(col("quality")), 6).as("avg_quality"))
-    }),
-
-    "q_keep_longest_run" -> ((s, dir) => {
-      // keep_longest_run (run_length.py:805): mask all but each
-      // (entity, year)'s longest qualifying run (ties -> earliest); here
-      // reduced to the kept-day count per group.
-      val clim = climateDaily(s, dir).withColumn("_y", year(col("d")))
-      graft.core.Runs.keepLongestRun(clim, Seq("k", "_y"), col("d"),
-          col("pr") >= 10.0)
-        .filter(col("in_longest_run"))
-        .groupBy(col("k"), col("_y"))
-        .agg(count(lit(1)).as("days_in_longest"), min(col("d")).as("run_start"))
-        .select(col("k").as("l_returnflag"), col("_y").as("y"),
-          col("days_in_longest"), col("run_start"))
-    }),
-
-    "q_find_events" -> ((s, dir) => {
-      // find_events / thresholded_events (run_length.py:1760,
-      // generic.py:1740): runs_with_holes state machine (enter after 2 wet
-      // days, leave after 3 dry days) -> one record per event with length,
-      // effective length, bounds and in-event precip sum. Long event table
-      // (better than the reference's padded event dimension).
-      val clim = climateDaily(s, dir)
-      graft.core.Runs.findEvents(clim, Seq("k"), col("d"),
-          col("pr") >= 15.0, 2, col("pr") < 15.0, 3,
-          round(col("pr") * 25.0, 0))
-        .select(col("k").as("l_returnflag"), col("event_start"),
-          col("event_length"), col("event_effective_length"),
-          // event_sum is an exact int64 (sum of 0.04-quantized pr);
-          // one division by 25.0 is correctly rounded in any engine
-          (col("event_sum") / 25.0).as("event_sum"))
-    })
-  )
-
-  private def oracle38: Map[String, String] = Map(
-
-    "q_corpus_pipeline" ->
-      """with recursive toks as (select doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') t from documents),
-        |g as (select doc_id, list_distinct(list_transform(
-        |    range(1, greatest(len(t) - 1, 1)),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) grams
-        | from toks),
-        |pairs as (
-        | select a.doc_id id_a, b.doc_id id_b
-        | from g a join g b on a.doc_id < b.doc_id
-        | where cast(len(list_intersect(a.grams, b.grams)) as double)
-        |    / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.7),
-        |e as (select id_a u, id_b v from pairs
-        |      union select id_b, id_a from pairs),
-        |reach as (
-        |  select u, u r from (select distinct u from e)
-        |  union
-        |  select e.u, reach.r from e join reach on reach.u = e.v
-        |),
-        |dropids as (select u from (select u, min(r) c from reach group by u)
-        |            where u <> c),
-        |q as (select doc_id, lang,
-        |  case when length(trim(text)) = 0 then 0
-        |       else len(string_split_regex(trim(text), '\s+')) end n_tok,
-        |  length(regexp_replace(text, '\s', '', 'g')) nonspace,
-        |  length(regexp_replace(text, '\s', '', 'g'))
-        |    - length(regexp_replace(text, '[^\p{L}\p{N}\s]', '', 'g')) punct,
-        |  length(text) ln,
-        |  length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) digits
-        | from documents),
-        |scored as (select doc_id, lang, n_tok,
-        |  floor((
-        |    least(cast(n_tok as double)/50.0, 1.0)*0.4
-        |    + (1.0 - least((case when nonspace = 0 then 0.0
-        |        else cast(punct as double)/nonspace end)*5.0, 1.0))*0.3
-        |    + (1.0 - least((case when ln = 0 then 0.0
-        |        else cast(digits as double)/ln end)*5.0, 1.0))*0.3
-        |)*1e6 + 0.5)/1e6 quality
-        | from q)
-        |select lang, count(*) n_docs,
-        |  cast(sum(n_tok) as bigint) total_tokens,
-        |  floor((avg(quality))*1e6 + 0.5)/1e6 avg_quality
-        |from scored
-        |where quality >= 0.5 and doc_id not in (select u from dropids)
-        |group by 1""".stripMargin,
-
-    "q_keep_longest_run" ->
-      s"""with $climSql,
-         |q as (select k, year(d) y, d,
-         |    date_diff('day', date '1970-01-01', d)
-         |      - row_number() over (partition by k, year(d) order by d) grp
-         |  from clim where pr >= 10.0),
-         |runs as (select k, y, grp, count(*) len, min(d) start_d
-         |  from q group by 1, 2, 3),
-         |best as (select k, y, len, start_d,
-         |  row_number() over (partition by k, y order by len desc, start_d) rk
-         | from runs)
-         |select k l_returnflag, y, len days_in_longest, start_d run_start
-         |from best where rk = 1""".stripMargin,
-
-    "q_find_events" ->
-      s"""with $climSql,
-         |sl as (select k, d, pr,
-         |    row_number() over (partition by k order by d) rn,
-         |    min(case when pr >= 15.0 then 1 else 0 end)
-         |      over (partition by k order by d rows between 1 preceding and current row) qs,
-         |    min(case when pr < 15.0 then 1 else 0 end)
-         |      over (partition by k order by d rows between 2 preceding and current row) qp
-         |  from clim),
-         |m as (select *, case when qp = 1 and rn >= 3 then 0
-         |                     when qs = 1 and rn >= 2 then 1 end marker from sl),
-         |st as (select *, coalesce(last_value(marker ignore nulls)
-         |    over (partition by k order by d
-         |          rows between unbounded preceding and current row), 0) in_event
-         |  from m),
-         |runid as (select *, sum(case when in_event = 1 then 0 else 1 end)
-         |  over (partition by k order by d) rid from st),
-         |ev as (select k, rid, min(d) event_start, count(*) event_length,
-         |    cast(sum(case when pr >= 15.0 then 1 else 0 end) as bigint) event_effective_length,
-         |    sum(round(pr*25.0)) su
-         |  from runid where in_event = 1 group by 1, 2)
-         |select k l_returnflag, event_start, event_length,
-         |  event_effective_length, su/25.0 event_sum
-         |from ev""".stripMargin
-  )
-
-  // ---- batch 37: deterministic sampling, TF-IDF, dedup apply -------------
-
-  private def queries37: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_hash_sample" -> ((s, dir) => {
-      // RNG-free Bernoulli sample (pipeline.Sampling.hashSample): keep
-      // rows whose salted-md5 fraction < 0.2 — membership is a pure
-      // function of (doc_id, salt), reproducible across runs, retries and
-      // partitionings (df.sample is not). No shuffle.
-      graft.pipeline.Sampling.hashSample(
-          t(s, dir, "documents"), col("doc_id"), p = 0.2)
-        .select(col("doc_id"), col("lang"))
-    }),
-
-    "q_stratified_sample" -> ((s, dir) => {
-      // Deterministic stratified sample: exactly 5 rows per l_returnflag
-      // stratum by hash rank (window sort spills -> stratum size never
-      // bounds executor memory).
-      graft.pipeline.Sampling.stratifiedSample(
-          t(s, dir, "lineitem")
-            .withColumn("sid", col("l_orderkey") * 10 + col("l_linenumber")),
-          Seq("l_returnflag"), col("sid"), k = 5)
-        .select(col("l_returnflag"), col("sid"))
-    }),
-
-    "q_tfidf_top_terms" -> ((s, dir) => {
-      // TF-IDF (smoothed idf) + top-3 terms per document; vocabulary joins
-      // on the term key (never broadcast — corpus-scale vocabularies).
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 50)
-      val scored = TextStats.tfidf(docs, "doc_id", "text", nDocs = 50L)
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("tfidf").desc, col("term"))
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-        .select(col("doc_id"), col("rk"), col("term"),
-          qk(col("tfidf"), 6).as("tfidf"))
-    }),
-
-    "q_dedup_apply" -> ((s, dir) => {
-      // The dedup KEEP step: near-dup components -> drop every member
-      // except the component's min id -> corpus counts. Composes
-      // nearDuplicates + connectedComponents + an anti-join back onto the
-      // corpus (the documents table never re-shuffles: the drop list
-      // broadcasts).
-      val docs = t(s, dir, "documents")
-      val comp = docComponents(s, dir)
-      val drop = comp.filter(col("id") =!= col("component"))
-        .select(col("id").as("doc_id"), lit(1).as("_dropped"))
-      // r10: before/after/langs from ONE broadcast-marked scan — the r9
-      // form ran docs.count() on the driver at plan time, a second full
-      // corpus scan (pointless 2× read at lake scale)
-      docs.join(broadcast(drop), Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n_before"),
-          sum(when(col("_dropped").isNull, 1L).otherwise(0L)).as("n_after"),
-          countDistinct(when(col("_dropped").isNull, col("lang"))).as("n_langs"))
-        .select(col("n_before"), col("n_after"), col("n_langs"))
-    })
-  )
-
-  private def oracle37: Map[String, String] = Map(
-
-    "q_hash_sample" ->
-      """select doc_id, lang from documents
-        |where cast(cast(concat('0x', substr(md5(concat(cast(doc_id as varchar), 'graft')), 1, 13))
-        |  as ubigint) as double)/4503599627370496.0 < 0.2""".stripMargin,
-
-    "q_stratified_sample" ->
-      """with li as (select l_returnflag, l_orderkey*10 + l_linenumber sid from lineitem),
-        |h as (select l_returnflag, sid,
-        |  cast(cast(concat('0x', substr(md5(concat(cast(sid as varchar), 'graft')), 1, 13))
-        |    as ubigint) as double)/4503599627370496.0 f
-        | from li),
-        |r as (select l_returnflag, sid,
-        |  row_number() over (partition by l_returnflag order by f, sid) rk from h)
-        |select l_returnflag, sid from r where rk <= 5""".stripMargin,
-
-    "q_tfidf_top_terms" ->
-      """with docs as (select * from documents where doc_id < 50),
-        |toks as (select doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) term
-        | from docs),
-        |tf as (select doc_id, term, count(*) tf from toks
-        | where len(term) > 0 group by 1, 2),
-        |dft as (select term, count(*) df_t from tf group by 1),
-        |scored as (select tf.doc_id, tf.term, tf.tf,
-        |  tf.tf * (ln((50 + 1.0)/(df_t + 1.0)) + 1.0) tfidf
-        | from tf join dft on dft.term = tf.term),
-        |r as (select doc_id, term, tfidf,
-        |  row_number() over (partition by doc_id order by tfidf desc, term) rk
-        | from scored)
-        |select doc_id, rk, term,
-        |  floor((tfidf)*1e6 + 0.5)/1e6 tfidf
-        |from r where rk <= 3""".stripMargin,
-
-    "q_dedup_apply" ->
-      """with recursive toks as (select doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') t from documents),
-        |g as (select doc_id, list_distinct(list_transform(
-        |    range(1, greatest(len(t) - 1, 1)),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) grams
-        | from toks),
-        |pairs as (
-        | select a.doc_id id_a, b.doc_id id_b
-        | from g a join g b on a.doc_id < b.doc_id
-        | where cast(len(list_intersect(a.grams, b.grams)) as double)
-        |    / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.7),
-        |e as (select id_a u, id_b v from pairs
-        |      union select id_b, id_a from pairs),
-        |reach as (
-        |  select u, u r from (select distinct u from e)
-        |  union
-        |  select e.u, reach.r from e join reach on reach.u = e.v
-        |),
-        |comp as (select u, min(r) c from reach group by u),
-        |dropids as (select u from comp where u <> c),
-        |kept as (select * from documents where doc_id not in (select u from dropids))
-        |select (select count(*) from documents) n_before,
-        |  count(*) n_after, count(distinct lang) n_langs
-        |from kept""".stripMargin
-  )
-
-  // ---- batch 36: quadratic detrend + per-entity date-window aggregation --
-
-  private def queries36: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_quadratic_detrend" -> ((s, dir) => {
-      // detrend deg-2 (generic.py:1711 polyfit degree 2): closed-form
-      // quadratic LSQ from EXACT integer moment sums (x centred to small
-      // ints, y in cents) — bit-stable under aggregation order, so the
-      // Cramer solve is hash-identical to the SQL twin. One hash-agg.
-      val daily = dailyTotals(s, dir)
-        .filter(col("user_id") % 7 === 0)
-        .select(col("user_id"), datediff(col("d"), to_date(lit("1970-01-01"))).as("t"),
-          col("total"))
-      val wu = Window.partitionBy(col("user_id"))
-      val centred = daily
-        .withColumn("x", col("t") - min(col("t")).over(wu))
-        .withColumn("y", uq(col("total"), 100))
-      Generic.quadraticFit(centred, Seq("user_id"), col("x"), col("y"))
-        .select(col("user_id"), qk(col("a") / 100.0, 6).as("a"),
-          qk(col("b") / 100.0, 6).as("b"), qk(col("c") / 100.0, 6).as("c"))
-    }),
-
-    "q_salted_hot_key" -> ((s, dir) => {
-      // Two-phase salted aggregation (core.Skew.saltedAgg) over the
-      // genuinely hot event_type key (5 values x 100k+ rows): phase 1
-      // spreads each hot key over 16 salt reducers, phase 2 combines the
-      // algebraic partials — result identical to the direct groupBy the
-      // oracle runs. Value sums stay in integer cents so the two-phase
-      // summation order cannot differ from the oracle's.
-      graft.core.Skew.saltedAgg(
-          t(s, dir, "events")
-            .withColumn("cents", uq(col("value"), 100)),
-          Seq("event_type"), salt = 16,
-          Map("n" -> ("count", lit(1)), "total_cents" -> ("sum", col("cents")),
-            "max_cents" -> ("max", col("cents"))))
-        .select(col("event_type"), col("n"),
-          (col("total_cents").cast("double") / 100.0).as("total"),
-          (col("max_cents").cast("double") / 100.0).as("max_value"))
-    }),
-
-    "q_between_dates_per_entity" -> ((s, dir) => {
-      // aggregate_between_dates (generic.py:1417) with PER-ENTITY bounds
-      // (the reference's DataArray-valued start/end): each entity's window
-      // opens at its first >= 20-unit precip doy and runs 120 days;
-      // precip totals per (entity, year) inside that window.
-      val clim = climateDaily(s, dir)
-      val bounds = clim.filter(col("pr") >= 20.0)
-        .groupBy(col("k")).agg(min(dayofyear(col("d"))).as("start_doy"))
-        .withColumn("end_doy", col("start_doy") + 120)
-      Generic.aggregateBetweenDates(
-          clim.withColumn("y", year(col("d"))), bounds,
-          joinKeys = Seq("k"), groupKeys = Seq("k", "y"), col("d"),
-          round(col("pr") * 25.0, 0), "sum", "pr_window_units")
-        .select(col("k").as("l_returnflag"), col("y"),
-          // pr_window_units sums integral doubles (exact); /25.0 is one
-          // IEEE division — raw emit, no round
-          (col("pr_window_units") / 25.0).as("pr_in_window"))
-    })
-  )
-
-  private def oracle36: Map[String, String] = Map(
-
-    "q_quadratic_detrend" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t, total
-         | from daily where user_id % 7 = 0),
-         |cx as (select user_id, t - min(t) over (partition by user_id) x,
-         |   cast(round(total*100) as bigint) y from dd),
-         |m as (select user_id, cast(count(*) as double) s0,
-         |  cast(sum(x) as double) s1, cast(sum(x*x) as double) s2,
-         |  cast(sum(x*x*x) as double) s3, cast(sum(x*x*x*x) as double) s4,
-         |  cast(sum(y) as double) t0, cast(sum(x*y) as double) t1,
-         |  cast(sum(x*x*y) as double) t2
-         | from cx group by 1),
-         |sol as (select user_id,
-         |  s0*(s2*s4 - s3*s3) - s1*(s1*s4 - s3*s2) + s2*(s1*s3 - s2*s2) det,
-         |  t0*(s2*s4 - s3*s3) - s1*(t1*s4 - s3*t2) + s2*(t1*s3 - s2*t2) na,
-         |  s0*(t1*s4 - s3*t2) - t0*(s1*s4 - s3*s2) + s2*(s1*t2 - t1*s2) nb,
-         |  s0*(s2*t2 - t1*s3) - s1*(s1*t2 - t1*s2) + t0*(s1*s3 - s2*s2) nc
-         | from m)
-         |select user_id,
-         |  floor((na/det/100.0)*1e6 + 0.5)/1e6 a,
-         |  floor((nb/det/100.0)*1e6 + 0.5)/1e6 b,
-         |  floor((nc/det/100.0)*1e6 + 0.5)/1e6 c
-         |from sol""".stripMargin,
-
-    "q_salted_hot_key" ->
-      """select event_type, count(*) n,
-        | cast(sum(cast(round(value*100) as bigint)) as double)/100.0 total,
-        | cast(max(cast(round(value*100) as bigint)) as double)/100.0 max_value
-        |from events group by 1""".stripMargin,
-
-    "q_between_dates_per_entity" ->
-      s"""with $climSql,
-         |bounds as (select k, min(dayofyear(d)) start_doy,
-         |   min(dayofyear(d)) + 120 end_doy
-         | from clim where pr >= 20.0 group by 1)
-         |select c.k l_returnflag, year(c.d) y,
-         |  sum(case when dayofyear(c.d) between b.start_doy and b.end_doy
-         |    then round(c.pr*25.0) end)/25.0 pr_in_window
-         |from clim c join bounds b on b.k = c.k
-         |group by 1, 2""".stripMargin
-  )
-
-  // ---- batch 35: round-3 catalogue tail ----------------------------------
-  // hot-spell magnitude, Spinoni degree-day approximations, freeze-thaw
-  // swing, holiday snow, windowed first-day, VPD + wind components, the
-  // real Dynamic-Model chill portions, Sen-slope ratio, ANUCLIM P13/P14.
-
-  private def queries35: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_hot_spell_magnitude" -> ((s, dir) => {
-      // hot_spell_max_magnitude (_threshold.py:2019, Russo 2014): per year,
-      // the max over >=3-day exceedance spells of the spell's summed excess.
-      // Excess kept in integer quantity units (prsum - 750) so run sums are
-      // order-free; scaled back to the pr scale (/25) at the end.
-      val daily = climateDaily(s, dir)
-        .select(col("k"), col("d"), (col("pr") * 25.0).as("prsum"))
-        .withColumn("period", year(col("d")))
-      graft.core.Runs.windowedMaxRunSum(daily, Seq("k", "period"), col("d"),
-          col("prsum") > 250.0, round(col("prsum") - 250.0, 0), window = 3)
-        .select(col("k").as("l_returnflag"), col("period").as("y"),
-          qk(col("max_run_sum") / 25.0, 4).as("max_magnitude"))
-    }),
-
-    "q_dd_approximation" -> ((s, dir) => {
-      // cooling/heating_degree_days_approximation (_threshold.py:844,:2070,
-      // Spinoni 2018): piecewise daily-cycle formulas from (tas, tas+5,
-      // tas-5), summed per year. Daily contributions quantized to 4
-      // decimals in both engines before the order-dependent sum.
-      // both approximations from ONE pass: shared piecewise projection,
-      // single hash-agg (vs two scan+agg pipelines + join)
-      import graft.indicator.Registry.ddApproxDaily
-      val base = climateDaily(s, dir).select(col("k"), col("d"),
-        qk(col("tas"), 4).as("tas4"))
-      val (tas, tx, tn, thr) =
-        (col("tas4"), col("tas4") + 5.0, col("tas4") - 5.0, lit(2.0))
-      base.groupBy(col("k"), year(col("d")).as("y"))
-        .agg(qk(sum(ddApproxDaily(tas, tx, tn, thr, "cooling")), 2).as("cdd_approx"),
-          qk(sum(ddApproxDaily(tas, tx, tn, thr, "heating")), 2).as("hdd_approx"))
-        .select(col("k").as("l_returnflag"), col("y"),
-          col("cdd_approx"), col("hdd_approx"))
-    }),
-
-    "q_multiday_swing" -> ((s, dir) => {
-      // multiday_temperature_swing (_multivariate.py:426): freeze-thaw days
-      // (tasmax > 0 and tasmin <= 0 under the +-5 daily cycle), mean and
-      // count of event lengths per year (op="mean" default + "count").
-      val daily = climateDaily(s, dir)
-        .withColumn("period", year(col("d")))
-      val cond = (col("tas") + 5.0 > 0.0) && (col("tas") - 5.0 <= 0.0)
-      graft.core.Runs.rleStatistics(daily, Seq("k", "period"), None, col("d"),
-          cond, "mean", window = 1)
-        .join(graft.core.Runs.rleStatistics(daily, Seq("k", "period"), None,
-          col("d"), cond, "count", window = 1), Seq("k", "period"))
-        .select(col("k").as("l_returnflag"), col("period").as("y"),
-          qk(col("run_mean"), 4).as("mean_spell"),
-          col("run_count").as("n_spells"))
-    }),
-
-    "q_holiday_snow" -> ((s, dir) => {
-      // holiday_snow_days (_threshold.py:3743): days inside the fixed
-      // holiday date window (Dec 20-31) with snow cover above threshold,
-      // per year (calendar predicate + count — partition-prunable).
-      val c = graft.indicator.Registry.computeBases("holiday_count")
-      c(climateDaily(s, dir).select(col("k").as("location_id"),
-          col("d").cast("timestamp").as("time"), (col("pr") / 100.0).as("value")),
-        "YS", Map("op" -> ">=", "thresh" -> "0.08",
-          "date_start" -> "12-20", "date_end" -> "12-31"))
-        .select(col("location_id").as("l_returnflag"),
-          year(col("period")).as("y"), col("value").as("holiday_days"))
-    }),
-
-    "q_first_day_reached" -> ((s, dir) => {
-      // first_day_threshold_reached (generic.py:1556): doy of the first
-      // >=3-day wet run starting at/after doy 180, per year.
-      val c = graft.indicator.Registry.computeBases("first_day_reached")
-      c(climateDaily(s, dir).select(col("k").as("location_id"),
-          col("d").cast("timestamp").as("time"), col("pr").as("value")),
-        "YS", Map("op" -> ">=", "thresh" -> "8.0",
-          "window" -> "3", "after_doy" -> "180"))
-        .select(col("location_id").as("l_returnflag"),
-          year(col("period")).as("y"), col("value").as("first_doy"))
-    }),
-
-    "q_converters_round3" -> ((s, dir) => {
-      // vapor_pressure_deficit (converters.py:642) + sfcwind_to_uas_vas
-      // (:337) + round-trip back through uas_vas_to_sfcwind — pure
-      // projections, no shuffle beyond the daily rollup.
-      import graft.indices.Converters
-      val d = climateDaily(s, dir).select(col("k"), col("d"),
-        (col("tas") + 288.15).as("tasK"),
-        least(lit(95.0), greatest(lit(5.0), col("pr"))).as("hurs"),
-        (col("pr") / 5.0).as("wind"),
-        (round(col("pr") * 25.0, 0) * 7.0 % 360.0).as("dir"))
-      val uas = Converters.uasFromWindDir(col("wind"), col("dir"))
-      val vas = Converters.vasFromWindDir(col("wind"), col("dir"))
-      d.select(col("k").as("l_returnflag"), col("d"),
-          qk(Converters.vaporPressureDeficit(col("tasK"), col("hurs")), 4).as("vpd"),
-          qk(uas, 6).as("uas"), qk(vas, 6).as("vas"),
-          qk(Converters.windSpeedFromUV(uas, vas), 6).as("wind_rt"))
-        .filter(col("d") < lit("1995-06-01").cast("date"))
-    }),
-
-    "q_chill_portions" -> ((s, dir) => {
-      // chill_portions (_agro.py:1483, Fishman/Luedeling Dynamic Model):
-      // two-compartment sequential recursion per entity over the ordered
-      // temperature series; running chill-portion total per step. Oracle is
-      // a step-identical recursive CTE (per-step HALF_UP quantization at 8
-      // decimals on both sides, the FWI/KBDI pattern).
-      val ser = climateDaily(s, dir)
-        .filter(col("d") < lit("1997-01-01").cast("date"))
-        .select((ascii(col("k")) - 65).cast("long").as("key"),
-          datediff(col("d"), to_date(lit("1970-01-01"))).cast("int").as("t"),
-          least(lit(285.0), greatest(lit(268.0),
-            round(col("tas"), 4) + 276.0)).as("v"))
-      graft.indices.Agro.chillPortionsDynamic(ser)
-        .select(col("key"), col("t"),
-          round(col("chill_portions"), 4).as("chill_portions"))
-    }),
-
-    "q_sen_slope_ratio" -> ((s, dir) => {
-      // sen_slope_ratio (_hydrology.py:949, Sauquet 2025): Theil-Sen slope
-      // of observed vs simulated series and their ratio; both medians
-      // selected from one distributed pair cloud (metric column), no
-      // collect_list.
-      val daily = dailyTotals(s, dir)
-        .filter(col("user_id") % 10 === 0)
-        .select(col("user_id"), datediff(col("d"), to_date(lit("1970-01-01"))).as("t"),
-          col("total"), (sqrt(col("total") + 1.0) * 5.0).as("sim"))
-      val a = daily.alias("a"); val b = daily.alias("b")
-      val pairs = a.join(b, col("a.user_id") === col("b.user_id") && col("a.t") < col("b.t"))
-      val slopes = pairs.select(col("a.user_id").as("user_id"), lit("obs").as("m"),
-          ((col("b.total") - col("a.total")) / (col("b.t") - col("a.t"))).as("slope"))
-        .unionByName(pairs.select(col("a.user_id").as("user_id"), lit("sim").as("m"),
-          ((col("b.sim") - col("a.sim")) / (col("b.t") - col("a.t"))).as("slope")))
-      val wOrd = Window.partitionBy(col("user_id"), col("m")).orderBy(col("slope"))
-      val wAll = Window.partitionBy(col("user_id"), col("m"))
-      val med = slopes
-        .withColumn("_rn", row_number().over(wOrd))
-        .withColumn("_n", count(lit(1)).over(wAll))
-        .filter(col("_rn") === ceil(col("_n") / 2.0).cast("int"))
-        .groupBy(col("user_id"))
-        .agg(max(when(col("m") === "obs", col("slope"))).as("sen_slope"),
-          max(when(col("m") === "sim", col("slope"))).as("sen_slope_sim"))
-      med.select(col("user_id"), qk(col("sen_slope"), 6).as("sen_slope"),
-        qk(col("sen_slope_sim"), 6).as("sen_slope_sim"),
-        qk(col("sen_slope") / col("sen_slope_sim"), 4).as("slope_ratio"))
-    }),
-
-    "q_dedup_clusters" -> ((s, dir) => {
-      // Near-dup CLUSTER assignment: MinHash-LSH candidate pairs ->
-      // connected components (min-label propagation, one label-table
-      // shuffle per round) -> (doc, component, cluster_size); the
-      // component min-id is the canonical survivor. Oracle: recursive-CTE
-      // transitive closure over the same exhaustive pair truth.
-      val comp = docComponents(s, dir)
-      val w = Window.partitionBy(col("component"))
-      comp.withColumn("cluster_size", count(lit(1)).over(w))
-        .select(col("id").as("doc_id"), col("component"), col("cluster_size"))
-    }),
-
-    "q_prcptot_wetdry_period" -> ((s, dir) => {
-      // prcptot_wetdry_period (_anuclim.py:474, P13/P14): monthly precip
-      // amounts, then the wettest and driest month's total per year.
-      // Monthly totals stay in integer quantity units until the final /25.
-      val monthly = climateDaily(s, dir)
-        .groupBy(col("k"), Time.resamplePeriod(col("d").cast("timestamp"), "MS").as("m"))
-        .agg(sum(round(col("pr") * 25.0, 0)).as("pru"))
-      monthly.groupBy(col("k"), Time.resamplePeriod(col("m"), "YS").as("period"))
-        .agg(qk(max(col("pru")) / 25.0, 4).as("wettest"),
-          qk(min(col("pru")) / 25.0, 4).as("driest"))
-        .select(col("k").as("l_returnflag"), year(col("period")).as("y"),
-          col("wettest"), col("driest"))
-    })
-  )
-
-  private def oracle35: Map[String, String] = Map(
-
-    "q_hot_spell_magnitude" ->
-      s"""with $climSql,
-         |q as (select k, year(d) y, cast(pr*25.0 as double) prsum, d,
-         |    date_diff('day', date '1970-01-01', d)
-         |      - row_number() over (partition by k, year(d) order by d) grp
-         |  from clim where pr*25.0 > 250.0),
-         |runs as (select k, y, grp, count(*) len,
-         |    sum(round(prsum - 250.0, 0)) mag
-         |  from q group by 1, 2, 3)
-         |select k l_returnflag, y,
-         |  floor((max(mag)/25.0)*1e4 + 0.5)/1e4 max_magnitude
-         |from runs where len >= 3 group by 1, 2""".stripMargin,
-
-    "q_dd_approximation" ->
-      s"""with $climSql,
-         |base as (select k, d, floor((tas)*1e4 + 0.5)/1e4 tas4
-         |  from clim),
-         |daily as (select k, year(d) y,
-         |  case when tas4 + 5.0 < 2.0 then 0.0
-         |       when tas4 - 5.0 < 2.0 then
-         |         case when tas4 <= 2.0 then (tas4 + 5.0 - 2.0)/4.0
-         |              else (tas4 + 5.0 - 2.0)/2.0 - (2.0 - (tas4 - 5.0))/4.0 end
-         |       else tas4 - 2.0 end cdd,
-         |  case when tas4 + 5.0 <= 2.0 then 2.0 - tas4
-         |       when tas4 <= 2.0 then (2.0 - (tas4 - 5.0))/2.0 - (tas4 + 5.0 - 2.0)/4.0
-         |       when tas4 - 5.0 <= 2.0 then (2.0 - (tas4 - 5.0))/4.0
-         |       else 0.0 end hdd
-         | from base)
-         |select k l_returnflag, y,
-         |  floor((sum(cdd))*1e2 + 0.5)/1e2 cdd_approx,
-         |  floor((sum(hdd))*1e2 + 0.5)/1e2 hdd_approx
-         |from daily group by 1, 2""".stripMargin,
-
-    "q_multiday_swing" ->
-      s"""with $climSql,
-         |q as (select k, year(d) y, d,
-         |    date_diff('day', date '1970-01-01', d)
-         |      - row_number() over (partition by k, year(d) order by d) grp
-         |  from clim where tas + 5.0 > 0.0 and tas - 5.0 <= 0.0),
-         |runs as (select k, y, grp, count(*) len from q group by 1, 2, 3)
-         |select k l_returnflag, y,
-         |  floor((avg(len))*1e4 + 0.5)/1e4 mean_spell,
-         |  count(*) n_spells
-         |from runs group by 1, 2""".stripMargin,
-
-    "q_holiday_snow" ->
-      s"""with $climSql
-         |select k l_returnflag, year(d) y,
-         |  cast(coalesce(sum(case when month(d)*100 + day(d) between 1220 and 1231
-         |    and pr/100.0 >= 0.08 then 1 end), 0) as bigint) holiday_days
-         |from clim group by 1, 2""".stripMargin,
-
-    "q_first_day_reached" ->
-      s"""with $climSql,
-         |q as (select k, year(d) y, d,
-         |    date_diff('day', date '1970-01-01', d)
-         |      - row_number() over (partition by k, year(d) order by d) grp
-         |  from clim where dayofyear(d) >= 180 and pr >= 8.0),
-         |runs as (select k, y, grp, min(d) run_start, count(*) len
-         |  from q group by 1, 2, 3)
-         |select k l_returnflag, y,
-         |  cast(dayofyear(min(run_start)) as int) first_doy
-         |from runs where len >= 3 group by 1, 2""".stripMargin,
-
-    "q_converters_round3" ->
-      s"""with $climSql,
-         |base as (select k, d, tas + 288.15 task,
-         |    least(95.0, greatest(5.0, pr)) hurs, pr/5.0 wind,
-         |    round(pr*25.0, 0)*7.0 % 360.0 dir
-         |  from clim where d < date '1995-06-01'),
-         |c as (select k, d,
-         |  611.2*exp(17.62*(task - 273.16)/(task - 30.04))*(1.0 - hurs/100.0) vpd,
-         |  wind*cos(radians((270.0 - dir) % 360.0)) uas,
-         |  wind*sin(radians((270.0 - dir) % 360.0)) vas
-         | from base)
-         |select k l_returnflag, d,
-         |  floor((vpd)*1e4 + 0.5)/1e4 vpd,
-         |  floor((uas)*1e6 + 0.5)/1e6 uas,
-         |  floor((vas)*1e6 + 0.5)/1e6 vas,
-         |  floor((sqrt(uas*uas + vas*vas))*1e6 + 0.5)/1e6 wind_rt
-         |from c""".stripMargin,
-
-    "q_chill_portions" -> {
-      // step-identical Dynamic-Model recursion; q8() = HALF_UP at 8
-      // decimals via decimal cast (same as the Scala kernel's BigDecimal)
-      def q8(e: String) = s"cast(cast($e as decimal(38,8)) as double)"
-      val xi = q8("exp(1.6*277.0*(s.v - 277.0)/s.v)/(1.0 + exp(1.6*277.0*(s.v - 277.0)/s.v))")
-      val xs = "(139500.0/2.567e18)*exp((12888.8 - 4153.5)/s.v)"
-      val ak1 = "2.567e18*exp(-12888.8/s.v)"
-      val sPrev = "case when c.intere < 1.0 then c.intere else c.intere - c.intere*c.xi end"
-      val interE = q8(s"$xs - ($xs - ($sPrev))*exp(-($ak1))")
-      s"""with recursive $climSql,
-         |ser as (select cast(ascii(k) - 65 as bigint) "key",
-         |    cast(date_diff('day', date '1970-01-01', d) as int) t,
-         |    least(285.0, greatest(268.0,
-         |      cast(cast(tas as decimal(38,4)) as double) + 276.0)) v,
-         |    row_number() over (partition by k order by d) rn
-         |  from clim where d < date '1997-01-01'),
-         |ch as (
-         |  select "key", 0 rn, cast(null as int) t,
-         |    cast(0.0 as double) intere, cast(0.0 as double) xi,
-         |    cast(0.0 as double) total
-         |  from (select distinct "key" from ser)
-         |  union all
-         |  select s."key", s.rn, s.t,
-         |    case when c.rn = 0 then cast(0.0 as double) else $interE end,
-         |    $xi,
-         |    case when c.rn = 0 then cast(0.0 as double)
-         |         else ${q8(s"c.total + (case when $interE >= 1.0 then ($interE)*($xi) else 0.0 end)")} end
-         |  from ch c join ser s on s."key" = c."key" and s.rn = c.rn + 1
-         |)
-         |select "key", t,
-         |  cast(cast(total as decimal(38,4)) as double) chill_portions
-         |from ch where rn > 0""".stripMargin
-    },
-
-    "q_sen_slope_ratio" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t,
-         |   total, sqrt(total + 1.0)*5.0 sim
-         | from daily where user_id % 10 = 0),
-         |pairs as (select a.user_id,
-         |   (b.total - a.total)/(b.t - a.t) s_obs,
-         |   (b.sim - a.sim)/(b.t - a.t) s_sim
-         | from dd a join dd b on a.user_id = b.user_id and a.t < b.t),
-         |arrs as (select user_id, list_sort(list(s_obs)) ao,
-         |   list_sort(list(s_sim)) asim, count(*) n
-         | from pairs group by 1),
-         |med as (select user_id, ao[cast(ceil(n/2.0) as int)] mo,
-         |   asim[cast(ceil(n/2.0) as int)] ms from arrs)
-         |select user_id,
-         |  floor((mo)*1e6 + 0.5)/1e6 sen_slope,
-         |  floor((ms)*1e6 + 0.5)/1e6 sen_slope_sim,
-         |  floor((mo/ms)*1e4 + 0.5)/1e4 slope_ratio
-         |from med""".stripMargin,
-
-    "q_dedup_clusters" ->
-      """with recursive toks as (select doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') t from documents),
-        |g as (select doc_id, list_distinct(list_transform(
-        |    range(1, greatest(len(t) - 1, 1)),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) grams
-        | from toks),
-        |pairs as (
-        | select a.doc_id id_a, b.doc_id id_b
-        | from g a join g b on a.doc_id < b.doc_id
-        | where cast(len(list_intersect(a.grams, b.grams)) as double)
-        |    / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.7),
-        |e as (select id_a u, id_b v from pairs
-        |      union select id_b, id_a from pairs),
-        |reach as (
-        |  select u, u r from (select distinct u from e)
-        |  union
-        |  select e.u, reach.r from e join reach on reach.u = e.v
-        |)
-        |select u doc_id, min(r) component,
-        |  count(*) over (partition by min(r)) cluster_size
-        |from reach group by u""".stripMargin,
-
-    "q_prcptot_wetdry_period" ->
-      s"""with $climSql,
-         |mon as (select k, date_trunc('month', d) m,
-         |   sum(round(pr*25.0, 0)) pru
-         | from clim group by 1, 2)
-         |select k l_returnflag, year(m) y,
-         |  floor((max(pru)/25.0)*1e4 + 0.5)/1e4 wettest,
-         |  floor((min(pru)/25.0)*1e4 + 0.5)/1e4 driest
-         |from mon group by 1, 2""".stripMargin
-  )
-
-  private def queries34: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_tx90p_bootstrap" -> ((s, dir) => {
-      // tx90p with @percentile_bootstrap (Zhang 2005): in-base years
-      // 1995-1997, each year scored against its 2 replica climatologies
-      // (H&F-8 doy pools +-2) and averaged.
-      graft.indices.PercentileIndicators.doyExceedanceBootstrap(
-          t(s, dir, "lineitem").select(col("l_returnflag"),
-            col("l_shipdate").as("d"), col("l_quantity").cast("double").as("v")),
-          Seq("l_returnflag"), "d", "v", p = 0.9, op = ">", halfWindow = 2,
-          baseYears = Seq(1995, 1996, 1997))
-        .select(col("l_returnflag"), col("y"),
-          // exact-integer evidence: value = avg over replicas of integer
-          // exceedance counts, so value·n_replicas is the total count —
-          // scale-0 round only absorbs a possible 1-ulp division residue
-          round(col("value") * col("n_replicas")).cast("long")
-            .as("n_over_sum"),
-          col("n_replicas"))
-    })
-  )
-
-  private def oracle34: Map[String, String] = Map(
-
-    "q_tx90p_bootstrap" ->
-      s"""with base as (
-         |  select l_returnflag k, l_shipdate d, cast(l_quantity as double) v,
-         |    year(l_shipdate) y, cast(dayofyear(l_shipdate) as int) doy
-         |  from lineitem where year(l_shipdate) between 1995 and 1997
-         |),
-         |pairs as (
-         |  select a.y y_out, b.y y_in
-         |  from (select distinct y from base) a
-         |  join (select distinct y from base) b on b.y <> a.y
-         |),
-         |reps as (
-         |  select p.y_out, p.y_in, b.* from pairs p join base b on b.y <> p.y_out
-         |  union all
-         |  select p.y_out, p.y_in, b.* from pairs p join base b on b.y = p.y_in
-         |),
-         |contrib as (
-         |  select k, y_out, y_in, ((doy - 1 + off + 365) % 365) + 1 doy2, v
-         |  from reps, unnest(generate_series(-2, 2)) as u(off)
-         |),
-         |s as (select k, y_out, y_in, doy2, list_sort(list(v)) a,
-         |  cast(count(v) as double) n from contrib group by 1, 2, 3, 4),
-         |pctl as (select k, y_out, y_in, doy2, ${hfSql(0.9)} pct from s),
-         |cnt as (
-         |  select b.k, b.y, p.y_in,
-         |    coalesce(sum(case when b.v > p.pct then 1 end), 0) c
-         |  from base b join pctl p
-         |    on p.k = b.k and p.y_out = b.y and p.doy2 = ((b.doy - 1) % 365) + 1
-         |  group by 1, 2, 3
-         |)
-         |select k l_returnflag, y,
-         |  cast(sum(c) as bigint) n_over_sum,
-         |  count(*) n_replicas
-         |from cnt group by 1, 2""".stripMargin
-  )
-
-  // ---- batch 33: standardized streamflow index ----------------------------
-
-  private def queries33: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_ssi" -> ((s, dir) => {
-      // standardized_streamflow_index (_hydrology.py:136): monthly mean
-      // flow, calendar-month pools, GEV fit (Hosking L-moments), CDF ->
-      // probit, clipped +-8.21. The SPI pipeline with the GEV backbone.
-      import graft.indices.Distributions
-      import graft.functions.SpecialFunctions
-      val monthly = climateDaily(s, dir)
-        .withColumn("q", col("pr") * 3.0 + 1.0)
-        .groupBy(col("k"), Time.resamplePeriod(col("d").cast("timestamp"), "MS").as("m"))
-        .agg(qk(avg(col("q")), 6).as("qm"))
-        .withColumn("pool", month(col("m")))
-      val sorted = monthly.groupBy(col("k"), col("pool"))
-        .agg(sort_array(collect_list(col("qm"))).as("_arr"))
-      val (l1, l2, t3) = Stats.lMoments(col("_arr"))
-      val lm = sorted.select(col("k").as("_k"), col("pool").as("_p"),
-        qk(l1, 6).as("l1"), qk(l2, 6).as("l2"), qk(t3, 6).as("t3"))
-      val (kk, alpha, xi) = Distributions.gevLmom(col("l1"), col("l2"), col("t3"), quantize = 6)
-      val fit = lm.select(col("_k"), col("_p"),
-        kk.as("shape"), alpha.as("scale"), xi.as("loc"))
-      monthly.join(broadcast(fit), col("k") === col("_k") && col("pool") === col("_p"))
-        .withColumn("cdf", greatest(least(
-          Distributions.gevCdf(col("qm"), col("shape"), col("scale"), col("loc")),
-          lit(1.0 - 1e-12)), lit(1e-12))) // open interval: probit tails stay finite
-        .withColumn("ssi", greatest(least(
-          SpecialFunctions.probit(col("cdf")), lit(8.21)), lit(-8.21)))
-        .select(col("k").as("l_returnflag"), col("m").as("period"),
-          qk(col("qm"), 6).as("qm"), qk(col("ssi"), 4).as("ssi"))
-    })
-  )
-
-  private def oracle33: Map[String, String] = Map(
-
-    "q_ssi" ->
-      s"""with $climSql,
-         |mon as (select k, cast(date_trunc('month', d) as timestamp) m,
-         |  floor((avg(pr*3.0 + 1.0))*1e6 + 0.5)/1e6 qm
-         | from clim group by 1, 2),
-         |pooled as (select *, month(m) pool from mon),
-         |r as (select k, pool, qm x, row_number() over (partition by k, pool order by qm) rk,
-         |  count(*) over (partition by k, pool) n from pooled),
-         |lm as (select k, pool, any_value(n) n, avg(x) b0,
-         |  sum(x*(rk-1.0)/(n-1.0))/any_value(n) b1,
-         |  sum(x*(rk-1.0)*(rk-2.0)/((n-1.0)*(n-2.0)))/any_value(n) b2
-         | from r group by 1, 2),
-         |lmom as (select k, pool,
-         |  floor((b0)*1e6 + 0.5)/1e6 l1,
-         |  floor((2*b1 - b0)*1e6 + 0.5)/1e6 l2,
-         |  floor(((6*b2 - 6*b1 + b0)/(2*b1 - b0))*1e6 + 0.5)/1e6 t3
-         | from lm),
-         |par as (select k, pool, l1, l2,
-         |  floor((7.8590*z + 2.9554*z*z)*1e6 + 0.5)/1e6 kk
-         | from (select *, 2.0/(3.0 + t3) - 0.6309297535714574 z from lmom)),
-         |par2 as (select k, pool, kk,
-         |  l2*kk/(gk*(1.0 - pow(2.0, -kk))) alpha,
-         |  l1 - l2*kk/(gk*(1.0 - pow(2.0, -kk)))*(1.0 - gk)/kk xi
-         | from (select *, floor((gamma(1.0 + kk))*1e8 + 0.5)/1e8 gk
-         |       from par)),
-         |j as (select p.k, p.m, p.qm,
-         |  1.0 - f.kk*(p.qm - f.xi)/f.alpha tt, f.kk
-         | from pooled p join par2 f on f.k = p.k and f.pool = p.pool),
-         |cdf_ as (select k, m, qm,
-         |  greatest(least(case when tt > 0.0 then exp(-pow(tt, 1.0/kk))
-         |       when kk > 0.0 then 1.0 else 0.0 end, 1.0 - 1e-12), 1e-12) cdf
-         | from j)
-         |select k l_returnflag, m period, qm,
-         |  floor((greatest(least(${probitSql("cdf")}, 8.21), -8.21)
-         |   )*1e4 + 0.5)/1e4 ssi
-         |from cdf_""".stripMargin
-  )
-
-  // ---- batch 32: effective GDD + hardiness zones --------------------------
-
-  private def queries32: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_effective_gdd" -> ((s, dir) => {
-      // effective_growing_degree_days (_agro.py:1292, method="bootsma"):
-      // season = (first day tas > thresh) + 10 .. day before the first
-      // sub-zero tasmin after Jul 1; degree-day integral between the dates
-      // (thresholds tuned to this substrate's range).
-      val c = climateDaily(s, dir).withColumn("y", year(col("d")))
-        .withColumn("tasmin", col("tas") - 5.0)
-      val fda = c.filter(col("tas") > 12.0)
-        .groupBy(col("k"), col("y"))
-        .agg(date_add(min(col("d")), 10).as("start_d"))
-      val fdb = c.filter(month(col("d")) >= 7 && col("tasmin") < 2.5)
-        .groupBy(col("k").as("_k2"), col("y").as("_y2"))
-        .agg(date_add(min(col("d")), -1).as("end_d"))
-      val lastd = c.groupBy(col("k").as("_k3"), col("y").as("_y3"))
-        .agg(max(col("d")).as("last_d"))
-      c.join(broadcast(fda), Seq("k", "y"))
-        .join(broadcast(fdb), col("k") === col("_k2") && col("y") === col("_y2"), "left")
-        .join(broadcast(lastd), col("k") === col("_k3") && col("y") === col("_y3"))
-        .filter(col("d") >= col("start_d") &&
-          col("d") <= coalesce(col("end_d"), col("last_d")))
-        .groupBy(col("k"), col("y"))
-        .agg(qk(sum(greatest(col("tas") - 12.0, lit(0.0))), 4).as("egdd"))
-        .withColumnRenamed("k", "l_returnflag")
-    }),
-
-    "q_hardiness_zone" -> ((s, dir) => {
-      // hardiness_zones (_agro.py:1407, USDA): mean over years of the
-      // annual tasmin minimum, banded in 5degF steps from -60degF.
-      climateDaily(s, dir).withColumn("tasmin", col("tas") - 5.0)
-        .groupBy(col("k"), year(col("d")).as("y"))
-        .agg(min(col("tasmin")).as("_tnn"))
-        .groupBy(col("k"))
-        .agg(avg(col("_tnn")).as("_mean_tnn"))
-        .select(col("k").as("l_returnflag"),
-          qk(col("_mean_tnn"), 6).as("mean_annual_min"),
-          floor((col("_mean_tnn") * 1.8 + 32.0 + 60.0) / 5.0).cast("int").as("usda_zone"))
-    })
-  )
-
-  private def oracle32: Map[String, String] = Map(
-
-    "q_effective_gdd" ->
-      s"""with $climSql,
-         |cy as (select k, d, year(d) y, tas, tas - 5.0 tasmin from clim),
-         |fda as (select k, y, min(d) + interval 10 day start_d
-         |  from cy where tas > 12.0 group by 1, 2),
-         |fdb as (select k, y, min(d) - interval 1 day end_d
-         |  from cy where month(d) >= 7 and tasmin < 2.5 group by 1, 2),
-         |lastd as (select k, y, max(d) last_d from cy group by 1, 2)
-         |select c.k l_returnflag, c.y,
-         |  floor((sum(greatest(c.tas - 12.0, 0.0)))*1e4 + 0.5)/1e4 egdd
-         |from cy c
-         |join fda a on a.k = c.k and a.y = c.y
-         |left join fdb b on b.k = c.k and b.y = c.y
-         |join lastd l on l.k = c.k and l.y = c.y
-         |where c.d >= a.start_d and c.d <= coalesce(b.end_d, l.last_d)
-         |group by 1, 2""".stripMargin,
-
-    "q_hardiness_zone" ->
-      s"""with $climSql,
-         |ann as (select k, year(d) y, min(tas - 5.0) tnn from clim group by 1, 2),
-         |m as (select k, avg(tnn) mt from ann group by 1)
-         |select k l_returnflag,
-         |  floor(mt*1e6 + 0.5)/1e6 mean_annual_min,
-         |  cast(floor((mt*1.8 + 32.0 + 60.0)/5.0) as int) usda_zone
-         |from m""".stripMargin
-  )
-
-  // ---- batch 31: synoptic jetstream ---------------------------------------
-
-  private def queries31: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_jetstream" -> ((s, dir) => {
-      // jetstream_metric_woollings (_synoptic.py:33): 21-point Lanczos
-      // low-pass (cutoff 0.1/day) of the wind proxy per latitude band, then
-      // the daily latitude/strength of the filtered maximum.
-      import graft.indices.Synoptic
-      val weights = Synoptic.lanczosWeights(21, 0.1)
-      val filtered = Synoptic.lanczosLowPass(
-        climateDaily(s, dir), Seq("k"), col("d"), col("tas"), weights, "ua_f")
-      Synoptic.jetLatitudeStrength(filtered, "d", "lat", "ua_f")
-        .select(col("d"), col("jet_lat"),
-          qk(col("jet_strength"), 4).as("jet_strength"))
-    })
-  )
-
-  private def oracle31: Map[String, String] = {
-    val weights = graft.indices.Synoptic.lanczosWeights(21, 0.1)
-    val n = 10
-    val fir = weights.zipWithIndex.map { case (wk, i) =>
-      val k = i - n
-      val shifted =
-        if (k < 0) s"lag(tas, ${-k}) over w" else if (k > 0) s"lead(tas, $k) over w" else "tas"
-      f"$wk%.17e*($shifted)"
-    }.mkString(" + ")
-    Map(
-      "q_jetstream" ->
-        s"""with $climSql,
-           |f as (select k, d, lat,
-           |  row_number() over w rn, count(*) over (partition by k) cnt,
-           |  $fir ua_f
-           | from clim window w as (partition by k order by d)),
-           |g as (select * from f where rn > $n and rn <= cnt - $n)
-           |select d, max_by(lat, ua_f) jet_lat,
-           |  floor((max(ua_f))*1e4 + 0.5)/1e4 jet_strength
-           |from g group by 1""".stripMargin)
-  }
-
-  // ---- batch 30: viticulture + water-cycle multivariates ------------------
-
-  private def queries30: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_dryness_index" -> ((s, dir) => {
-      // dryness_index (_agro.py:532): monthly water balance with the vine
-      // radiative-absorption coefficients, Apr-Sep, Wo = 200 mm.
-      import graft.indices.Evapotranspiration
-      val monthly = climateDaily(s, dir)
-        .withColumn("pet", Evapotranspiration.petHargreaves85(
-          col("tas") - 5.0, col("tas") + 5.0, col("lat"), col("d")))
-        .groupBy(col("k"), Time.resamplePeriod(col("d").cast("timestamp"), "MS")
-          .cast("date").as("m"))
-        .agg(qk(sum(col("pr")), 6).as("pr_mm"), qk(sum(col("pet")), 6).as("etp_mm"))
-      graft.indices.Agro.drynessIndex(monthly, Seq("k"), "m", "pr_mm", "etp_mm")
-        .select(col("k").as("l_returnflag"), col("y"),
-          qk(col("dryness_index"), 4).as("dryness_index"))
-    }),
-
-    "q_annual_climate_misc" -> ((s, dir) => {
-      // cool_night_index (_agro.py:447), water_cycle_intensity
-      // (_multivariate.py:1888) and precip_average (:994) on one grain.
-      import graft.indices.Evapotranspiration
-      val c = climateDaily(s, dir)
-        .withColumn("pet", Evapotranspiration.petHargreaves85(
-          col("tas") - 5.0, col("tas") + 5.0, col("lat"), col("d")))
-      val cni = graft.indices.Agro.coolNightIndex(c, Seq("k"), "d", "tas")
-      c.groupBy(col("k"), year(col("d")).as("y"))
-        .agg(qk(sum(col("pr") + col("pet")), 4).as("water_cycle_intensity"),
-          qk(avg(col("pr")), 6).as("precip_average"))
-        .join(cni, Seq("k", "y"))
-        .select(col("k").as("l_returnflag"), col("y"),
-          col("water_cycle_intensity"), col("precip_average"),
-          qk(col("cool_night_index"), 6).as("cool_night_index"))
-    }),
-
-    "q_winter_rain_ratio" -> ((s, dir) => {
-      // winter_rain_ratio (_multivariate.py:1797): liquid_precip_ratio per
-      // QS-DEC quarter, December-anchored periods only.
-      import graft.indices.Converters
-      val c = climateDaily(s, dir)
-        .withColumn("rain", Converters.rainApproximation(col("pr"), col("tas"), 8.0))
-        .withColumn("p", Time.resamplePeriod(col("d").cast("timestamp"), "QS-DEC"))
-      c.filter(month(col("p")) === 12)
-        .groupBy(col("k"), col("p"))
-        .agg(qk(sum(col("rain")) / sum(col("pr")), 6).as("winter_rain_ratio"))
-        .select(col("k").as("l_returnflag"), col("p").as("period"),
-          col("winter_rain_ratio"))
-    })
-  )
-
-  private def oracle30: Map[String, String] = {
-    val petMonthly =
-      s"""${solarSql("clim")},
-         |petd as (select k, d, pr,
-         |  greatest(0.0, 0.0023*(ra/1e6*0.408)*(tas + 17.8)
-         |    *sqrt(greatest((tas + 5.0) - (tas - 5.0), 0.0))) pet
-         | from ra_)""".stripMargin
-    Map(
-
-      "q_dryness_index" ->
-        s"""with $climSql,
-           |$petMonthly,
-           |mon as (select k, cast(date_trunc('month', d) as date) m,
-           |  floor((sum(pr))*1e6 + 0.5)/1e6 pr_mm,
-           |  floor((sum(pet))*1e6 + 0.5)/1e6 etp_mm
-           | from petd group by 1, 2),
-           |w as (select k, m, year(m) y,
-           |  case when month(m) = 4 then 0.1 when month(m) = 5 then 0.3
-           |       when month(m) between 6 and 9 then 0.5 else 0.0 end kk,
-           |  cast(dayofmonth(last_day(m)) as double) n, pr_mm, etp_mm
-           | from mon),
-           |t as (select k, y,
-           |  (case when kk > 0 then pr_mm else 0.0 end)
-           |    - etp_mm*kk
-           |    - etp_mm/n*(1.0 - kk)*least((case when kk > 0 then pr_mm else 0.0 end)/5.0, n) w
-           | from w)
-           |select k l_returnflag, y,
-           |  floor((200.0 + sum(w))*1e4 + 0.5)/1e4 dryness_index
-           |from t group by 1, 2""".stripMargin,
-
-      "q_annual_climate_misc" ->
-        s"""with $climSql,
-           |$petMonthly,
-           |ann as (select k, year(d) y,
-           |  floor((sum(pr + pet))*1e4 + 0.5)/1e4 water_cycle_intensity,
-           |  floor((avg(pr))*1e6 + 0.5)/1e6 precip_average
-           | from petd group by 1, 2),
-           |cni as (select k, year(d) y,
-           |  floor((avg(tas))*1e6 + 0.5)/1e6 cool_night_index
-           | from clim where month(d) = 9 group by 1, 2)
-           |select a.k l_returnflag, a.y, a.water_cycle_intensity, a.precip_average,
-           |  c.cool_night_index
-           |from ann a join cni c on c.k = a.k and c.y = a.y""".stripMargin,
-
-      "q_winter_rain_ratio" ->
-        s"""with $climSql,
-           |q as (select k, d, pr, tas,
-           |  cast(date_trunc('quarter', d + interval 1 month) - interval 1 month
-           |    as timestamp) p
-           | from clim)
-           |select k l_returnflag, p period,
-           |  floor((sum(case when tas >= 8.0 then pr else 0.0 end)/sum(pr)
-           |)*1e6 + 0.5)/1e6 winter_rain_ratio
-           |from q where month(p) = 12 group by 1, 2""".stripMargin
-    )
-  }
-
-  // ---- batch 29: hydrology seasonal + snowfall methods --------------------
-
-  private def queries29: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_snowfall_methods" -> ((s, dir) => {
-      // snowfall_approximation (converters.py:1097): ALL five published
-      // phase-partition methods side by side — binary / brown / auer step
-      // or polynomial ramps plus the Dai (2008) tanh forms dai_annual and
-      // dai_seasonal (converters.py:1197, land coefficients; seasonal picks
-      // DJF/MAM/JJA/SON by month), the clip_temp rescale variant, and the
-      // dai rain-side twin (rain_approximation, converters.py:1320).
-      import graft.indices.Converters
-      val e = t(s, dir, "events").select(col("event_id"), month(col("ts")).as("m"),
-        (col("value") / 40.0 - 8.0).as("tas"), (col("value") / 25.0).as("pr"))
-      e.select(col("event_id"),
-        qk(Converters.snowfallApproximation(col("pr"), col("tas"), "binary"), 6).as("prsn_binary"),
-        qk(Converters.snowfallApproximation(col("pr"), col("tas"), "brown"), 6).as("prsn_brown"),
-        qk(Converters.snowfallApproximation(col("pr"), col("tas"), "auer"), 6).as("prsn_auer"),
-        qk(col("pr") * Converters.snowfallFractionDai(col("tas"), "dai_annual"), 6)
-          .as("prsn_dai_annual"),
-        qk(col("pr") * Converters.snowfallFractionDai(col("tas"), "dai_seasonal",
-          monthCol = col("m")), 6).as("prsn_dai_seasonal"),
-        qk(col("pr") * Converters.snowfallFractionDai(col("tas"), "dai_annual",
-          clipTempC = Some(2.0)), 6).as("prsn_dai_clip"),
-        qk(col("pr") * Converters.rainFractionDai(col("tas"), "dai_annual"), 6)
-          .as("prra_dai_annual"))
-    }),
-
-    "q_bfi_seasonal" -> ((s, dir) => {
-      // base_flow_index_seasonal_ratio (_hydrology.py:997): per
-      // (entity, season-year) min 7-day-average flow / mean flow, then the
-      // winter/summer (DJF/JJA) ratio per year.
-      val c = climateDaily(s, dir).withColumn("q", col("pr") * 3.0 + 1.0)
-      val w = Window.partitionBy(col("k"), col("p")).orderBy(col("d"))
-      val seasoned = c
-        .withColumn("p", Time.resamplePeriod(col("d").cast("timestamp"), "QS-DEC"))
-        .withColumn("_rn", row_number().over(w))
-        .withColumn("q7", when(col("_rn") >= 7,
-          avg(col("q")).over(w.rowsBetween(-6, 0))))
-      val bfi = seasoned.groupBy(col("k"), col("p"))
-        .agg((min(col("q7")) / avg(col("q"))).as("bfi"))
-        .withColumn("season", when(month(col("p")) === 12, "DJF")
-          .when(month(col("p")) === 3, "MAM")
-          .when(month(col("p")) === 6, "JJA").otherwise("SON"))
-        .withColumn("sy", when(month(col("p")) === 12, year(col("p")) + 1)
-          .otherwise(year(col("p"))))
-      // conditional-aggregation pivot: one pass, no self-join (a join would
-      // recompute the whole upstream lineage for each side)
-      bfi.groupBy(col("k"), col("sy"))
-        .agg(max(when(col("season") === "DJF", col("bfi"))).as("_djf"),
-          max(when(col("season") === "JJA", col("bfi"))).as("_jja"))
-        .filter(col("_djf").isNotNull && col("_jja").isNotNull)
-        .select(col("k").as("l_returnflag"), col("sy"),
-          qk(col("_djf"), 6).as("bfi_djf"),
-          qk(col("_jja"), 6).as("bfi_jja"),
-          qk(when(col("_jja") > 0, col("_djf") / col("_jja")), 6).as("bfi_ratio"))
-    }),
-
-    "q_snowpack_flow_lag" -> ((s, dir) => {
-      // lag_snowpack_flow_peaks (_hydrology.py:826): days between the
-      // annual max snowpack date and the mean date of >= p90 flows.
-      val wx = weatherDaily(s, dir).withColumn("q", col("rain") + 0.1)
-      val perY = wx.groupBy(col("user_id"))
-        // tie-break encoded numerically (hum has 2 decimals -> *1e6 exact;
-        // earlier day wins on equal snowpack)
-        .agg(max_by(col("t"), col("hum") * 1e6 - col("t")).as("t_snwmax"),
-          percentile(col("q"), lit(0.9)).as("_q90"))
-      // r13: no round — every avg input is an exact-integer double (day
-      // numbers < 2^53), so any summation order gives the same exact sum
-      // and the final divide/subtract are single IEEE ops, bit-identical
-      // across engines; the quantile_cont threshold remains the (a)-class
-      // builtin comparison round(6) never protected anyway
-      wx.join(broadcast(perY), "user_id")
-        .groupBy(col("user_id"))
-        .agg((avg(when(col("q") >= col("_q90"), col("t").cast("double"))) -
-          max(col("t_snwmax"))).as("lag_days"))
-    })
-  )
-
-  private def oracle29: Map[String, String] = Map(
-
-    "q_snowfall_methods" ->
-      """with e as (select event_id, month(ts) m, value/40.0 - 8.0 tas, value/25.0 pr
-        |  from events),
-        |sc as (select *,
-        |  case when m in (12,1,2) then -48.2372 when m between 3 and 5 then -48.2493
-        |       when m between 6 and 8 then -46.4000 else -48.3251 end sa,
-        |  case when m in (12,1,2) then 0.7449 when m between 3 and 5 then 0.6634
-        |       when m between 6 and 8 then 0.7013 else 0.7798 end sb,
-        |  case when m in (12,1,2) then 1.0919 when m between 3 and 5 then 1.3388
-        |       when m between 6 and 8 then 0.8362 else 1.1502 end sc_,
-        |  case when m in (12,1,2) then 1.0209 when m between 3 and 5 then 1.0270
-        |       when m between 6 and 8 then 1.0217 else 1.0180 end sd
-        | from e),
-        |f as (select *,
-        |  -48.2292*((1.0 - 2.0/(exp(2.0*(0.7205*(tas - 1.1662))) + 1.0)) - 1.0223)/100.0 f_ann,
-        |  -48.2292*((1.0 - 2.0/(exp(2.0*(0.7205*(2.0 - 1.1662))) + 1.0)) - 1.0223)/100.0 f_clip_lo,
-        |  -48.2292*((1.0 - 2.0/(exp(2.0*(0.7205*(-2.0 - 1.1662))) + 1.0)) - 1.0223)/100.0 f_clip_hi,
-        |  sa*((1.0 - 2.0/(exp(2.0*(sb*(tas - sc_))) + 1.0)) - sd)/100.0 f_sea,
-        |  -47.8337*((1.0 - 2.0/(exp(2.0*(-0.6866*(tas - 1.4913))) + 1.0)) - 1.0420)/100.0 f_rain
-        | from sc)
-        |select event_id,
-        | floor((case when tas < 0.0 then pr else 0.0 end)*1e6 + 0.5)/1e6 prsn_binary,
-        | floor((pr*greatest(0.0, least(1.0, 1.0 - tas/2.0)))*1e6 + 0.5)/1e6 prsn_brown,
-        | floor((pr*(case when tas < 0.0 then 1.0 when tas >= 6.0 then 0.0
-        |   else greatest(0.0, least(100.0, 100.0 + 4.6664*tas - 15.038*tas*tas
-        |     - 1.5089*tas*tas*tas + 2.0399*tas*tas*tas*tas
-        |     - 0.366*tas*tas*tas*tas*tas + 0.0202*tas*tas*tas*tas*tas*tas))/100.0 end)
-        |)*1e6 + 0.5)/1e6 prsn_auer,
-        | floor((pr*greatest(0.0, least(1.0, f_ann)))*1e6 + 0.5)/1e6 prsn_dai_annual,
-        | floor((pr*greatest(0.0, least(1.0, f_sea)))*1e6 + 0.5)/1e6 prsn_dai_seasonal,
-        | floor((pr*greatest(0.0, least(1.0,
-        |   (f_ann - f_clip_lo)/(f_clip_hi - f_clip_lo))))*1e6 + 0.5)/1e6 prsn_dai_clip,
-        | floor((pr*greatest(0.0, least(1.0, f_rain)))*1e6 + 0.5)/1e6 prra_dai_annual
-        |from f""".stripMargin,
-
-    "q_bfi_seasonal" ->
-      s"""with $climSql,
-         |c as (select k, d, pr*3.0 + 1.0 q,
-         |  cast(date_trunc('quarter', d + interval 1 month) - interval 1 month as timestamp) p
-         | from clim),
-         |r as (select *, row_number() over (partition by k, p order by d) rn from c),
-         |q7 as (select *, case when rn >= 7 then avg(q) over (partition by k, p order by d
-         |  rows between 6 preceding and current row) end q7 from r),
-         |bfi as (select k, p, min(q7)/avg(q) bfi from q7 group by 1, 2),
-         |lab as (select k, p, bfi,
-         |  case when month(p) = 12 then 'DJF' when month(p) = 3 then 'MAM'
-         |       when month(p) = 6 then 'JJA' else 'SON' end season,
-         |  case when month(p) = 12 then year(p) + 1 else year(p) end sy
-         | from bfi)
-         |select j.k l_returnflag, j.sy,
-         |  floor((d.bfi)*1e6 + 0.5)/1e6 bfi_djf,
-         |  floor((j.bfi)*1e6 + 0.5)/1e6 bfi_jja,
-         |  floor((case when j.bfi > 0 then d.bfi/j.bfi end)*1e6 + 0.5)/1e6 bfi_ratio
-         |from lab j join lab d on d.k = j.k and d.sy = j.sy and d.season = 'DJF'
-         |where j.season = 'JJA'""".stripMargin,
-
-    "q_snowpack_flow_lag" ->
-      s"""with $wxSql,
-         |wq as (select user_id, t, hum, rain + 0.1 q from wx),
-         |py as (select user_id, max_by(t, hum*1e6 - t) t_snwmax,
-         |  quantile_cont(q, 0.9) q90 from wq group by 1)
-         |select w.user_id,
-         |  avg(case when w.q >= p.q90 then cast(w.t as double) end)
-         |    - max(p.t_snwmax) lag_days
-         |from wq w join py p on p.user_id = w.user_id group by 1""".stripMargin
-  )
-
-  // ---- batch 28: e_sat method family + parametric CDFs --------------------
-
-  private def queries28: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_esat_methods" -> ((s, dir) => {
-      // saturation_vapor_pressure (converters.py:340): all 7 published
-      // formulations + the ice-phase interp dispatch, one projection.
-      import graft.indices.Converters.{saturationVaporPressureMethod, relativeHumidityBohren98}
-      val e = t(s, dir, "events")
-        .select(col("event_id"), (col("value") / 8.0 + 230.0).as("tk"),
-          (col("value") / 8.0 + 230.0 - pmod(col("value"), lit(12.0))).as("td"))
-      def m(name: String) = qk(saturationVaporPressureMethod(col("tk"), name), 4)
-      e.select(col("event_id"),
-        m("tetens30").as("esat_tetens30"), m("wmo08").as("esat_wmo08"),
-        m("buck81").as("esat_buck81"), m("aerk96").as("esat_aerk96"),
-        m("sonntag90").as("esat_sonntag90"), m("goffgratch46").as("esat_goffgratch46"),
-        m("its90").as("esat_its90"),
-        qk(saturationVaporPressureMethod(col("tk"), "wmo08",
-          iceThreshK = Some(273.16), interpPower = Some(2)), 4).as("esat_mixed"),
-        // relative_humidity method "bohren98" (converters.py:810): the one
-        // RH path that bypasses e_sat entirely
-        qk(relativeHumidityBohren98(col("tk"), col("td")), 4).as("hurs_bohren98"))
-    }),
-
-    "q_dist_cdfs" -> ((s, dir) => {
-      // dist_method / parametric_cdf (stats.py:221,:506) for the round-2
-      // distributions: Gumbel, GEV and fisk CDFs at fixed fitted params.
-      import graft.indices.Distributions
-      val e = t(s, dir, "events").select(col("event_id"), (col("value") / 50.0).as("x"))
-      e.select(col("event_id"),
-        qk(Distributions.distMethod("cdf", "gumbel_r", col("x"),
-          Map("scale" -> lit(2.0), "loc" -> lit(3.0))), 6).as("cdf_gumbel"),
-        qk(Distributions.distMethod("cdf", "genextreme", col("x"),
-          Map("shape" -> lit(0.1), "scale" -> lit(2.0), "loc" -> lit(3.0))), 6).as("cdf_gev"),
-        qk(Distributions.distMethod("cdf", "fisk", col("x") + 0.1,
-          Map("c" -> lit(3.0), "scale" -> lit(4.0))), 6).as("cdf_fisk"))
-    })
-  )
-
-  private def oracle28: Map[String, String] = Map(
-
-    "q_esat_methods" ->
-      """with e as (select event_id, value/8.0 + 230.0 tk,
-        |  value/8.0 + 230.0 - mod(value, 12.0) td from events),
-        |f as (select event_id, tk, td,
-        |  610.78*exp(17.269388*(tk - 273.16)/(tk - 35.86)) tet,
-        |  611.2*exp(17.62*(tk - 273.16)/(tk - 30.04)) wmo,
-        |  611.21*exp(17.502*(tk - 273.16)/(tk - 32.19)) buck,
-        |  610.94*exp(17.625*(tk - 273.16)/(tk - 30.12)) aerk,
-        |  100.0*exp(-6096.9385/tk + 16.635794 - 2.711193e-2*tk
-        |    + 1.673952e-5*tk*tk + 2.433502*ln(tk)) son,
-        |  101325.0*pow(10.0, -7.90298*(373.16/tk - 1.0) + 5.02808*log10(373.16/tk)
-        |    - 1.3817e-7*(pow(10.0, 11.344*(1.0 - tk/373.16)) - 1.0)
-        |    + 8.1328e-3*(pow(10.0, -3.49149*(373.16/tk - 1.0)) - 1.0)) gg,
-        |  exp(-2836.5744/(tk*tk) - 6028.076559/tk + 19.54263612
-        |    - 2.737830188e-2*tk + 1.6261698e-5*tk*tk + 7.0229056e-10*tk*tk*tk
-        |    - 1.8680009e-13*tk*tk*tk*tk + 2.7150305*ln(tk)) its,
-        |  611.2*exp(22.46*(tk - 273.16)/(tk - 0.54)) wmo_ice,
-        |  pow(greatest(0.0, least((tk - (273.16 - 23.15))/23.15, 1.0)), 2) frac
-        | from e)
-        |select event_id,
-        | floor((tet)*1e4 + 0.5)/1e4 esat_tetens30,
-        | floor((wmo)*1e4 + 0.5)/1e4 esat_wmo08,
-        | floor((buck)*1e4 + 0.5)/1e4 esat_buck81,
-        | floor((aerk)*1e4 + 0.5)/1e4 esat_aerk96,
-        | floor((son)*1e4 + 0.5)/1e4 esat_sonntag90,
-        | floor((gg)*1e4 + 0.5)/1e4 esat_goffgratch46,
-        | floor((its)*1e4 + 0.5)/1e4 esat_its90,
-        | floor((frac*wmo + (1.0 - frac)*wmo_ice)*1e4 + 0.5)/1e4 esat_mixed,
-        | floor((greatest(0.0, least(100.0,
-        |   100.0*exp(-2.501e6*(tk - td)/(461.5*tk*td)))))*1e4 + 0.5)/1e4 hurs_bohren98
-        |from f""".stripMargin,
-
-    "q_dist_cdfs" ->
-      """with e as (select event_id, value/50.0 x from events)
-        |select event_id,
-        | floor((exp(-exp(-(x - 3.0)/2.0)))*1e6 + 0.5)/1e6 cdf_gumbel,
-        | floor((case when 1.0 - 0.1*(x - 3.0)/2.0 > 0.0
-        |   then exp(-pow(1.0 - 0.1*(x - 3.0)/2.0, 1.0/0.1)) else 1.0 end
-        |  )*1e6 + 0.5)/1e6 cdf_gev,
-        | floor((1.0/(1.0 + pow((x + 0.1)/4.0, -3.0)))*1e6 + 0.5)/1e6 cdf_fisk
-        |from e""".stripMargin
-  )
-
-  // ---- batch 27: hydrology leftovers + huglin -----------------------------
-
-  private def queries27: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_huglin" -> ((s, dir) => {
-      // huglin_index (_agro.py:151): Apr-Sep heat summation with the
-      // stepwise day-length latitude coefficient (helpers.py:528).
-      graft.indices.Agro.huglinIndex(
-          climateDaily(s, dir)
-            .withColumn("tasmax", col("tas") + 5.0)
-            .withColumn("lat6", col("lat") * 6.0),
-          Seq("k"), "d", "tas", "tasmax", "lat6")
-        .select(col("k").as("l_returnflag"), col("y"),
-          qk(col("huglin_index"), 4).as("huglin_index"))
-    }),
-
-    "q_hydro_ratios" -> ((s, dir) => {
-      // flow_index (_hydrology.py:577: p95/median over the series),
-      // runoff_ratio (:711: mean(q/area)/mean(pr) per period collapsed),
-      // aridity_index (:772: mean pr / mean PET).
-      import graft.indices.Evapotranspiration
-      val c = climateDaily(s, dir)
-        .withColumn("q_flow", col("pr") * 3.0 + 1.0)
-        .withColumn("pet", Evapotranspiration.petHargreaves85(
-          col("tas") - 5.0, col("tas") + 5.0, col("lat"), col("d")))
-      c.groupBy(col("k"))
-        .agg(
-          qk(percentile(col("q_flow"), lit(0.95)) /
-            percentile(col("q_flow"), lit(0.5)), 6).as("flow_index"),
-          qk(avg(col("q_flow") / 1000.0) / avg(col("pr")), 6).as("runoff_ratio"),
-          qk(avg(col("pr")) / avg(col("pet")), 6).as("aridity_index"))
-        .withColumnRenamed("k", "l_returnflag")
-    }),
-
-    "q_snowmelt" -> ((s, dir) => {
-      // snow_melt_we_max (_hydrology.py:371) + melt_and_precip_max (:404):
-      // rolling-3 sums of the negative SWE diff (+ precip), period max.
-      val wx = weatherDaily(s, dir)
-      val w = Window.partitionBy(col("user_id")).orderBy(col("t"))
-      val w3 = w.rowsBetween(-2, 0)
-      val melted = wx
-        .withColumn("melt", (lag(col("hum"), 1).over(w) - col("hum")))
-        .withColumn("mp", col("melt") + col("rain"))
-        .withColumn("_rn", row_number().over(w))
-        .withColumn("melt3", when(col("_rn") >= 4, sum(col("melt")).over(w3)))
-        .withColumn("mp3", when(col("_rn") >= 4, sum(col("mp")).over(w3)))
-      melted.groupBy(col("user_id"))
-        .agg(qk(max(col("melt3")), 4).as("snow_melt_we_max"),
-          qk(max(col("mp3")), 4).as("melt_and_precip_max"))
-    })
-  )
-
-  private def oracle27: Map[String, String] = Map(
-
-    "q_huglin" ->
-      s"""with $climSql,
-         |h as (select k, d, year(d) y, tas, tas + 5.0 tasmax, lat*6.0 lat6 from clim),
-         |f as (select *, case when abs(lat6) <= 40.0 then 1.0
-         |    when abs(lat6) <= 42.0 then 1.02 when abs(lat6) <= 44.0 then 1.03
-         |    when abs(lat6) <= 46.0 then 1.04 when abs(lat6) <= 48.0 then 1.05
-         |    when abs(lat6) <= 50.0 then 1.06 else 1.0 end kk,
-         |  greatest(0.0, ((tas - 10.0) + (tasmax - 10.0))/2.0) dd
-         | from h)
-         |select k l_returnflag, y,
-         |  floor(sum(case when month(d) between 4 and 9 then kk*dd else 0.0 end)
-         |    *1e4 + 0.5)/1e4 huglin_index
-         |from f group by 1, 2""".stripMargin,
-
-    "q_hydro_ratios" ->
-      s"""with $climSql,
-         |${solarSql("clim")},
-         |c as (select k, pr*3.0 + 1.0 q_flow, pr,
-         |  greatest(0.0, 0.0023*(ra/1e6*0.408)*(tas + 17.8)
-         |    *sqrt(greatest((tas + 5.0) - (tas - 5.0), 0.0))) pet
-         | from ra_)
-         |select k l_returnflag,
-         |  floor((quantile_cont(q_flow, 0.95)/quantile_cont(q_flow, 0.5)
-         |)*1e6 + 0.5)/1e6 flow_index,
-         |  floor((avg(q_flow/1000.0)/avg(pr))*1e6 + 0.5)/1e6 runoff_ratio,
-         |  floor((avg(pr)/avg(pet))*1e6 + 0.5)/1e6 aridity_index
-         |from c group by 1""".stripMargin,
-
-    "q_snowmelt" ->
-      s"""with $wxSql,
-         |m as (select user_id, t, rain,
-         |  lag(hum) over (partition by user_id order by t) - hum melt,
-         |  row_number() over (partition by user_id order by t) rn2
-         | from wx),
-         |r as (select user_id, t, rn2,
-         |  case when rn2 >= 4 then sum(melt) over (partition by user_id order by t
-         |    rows between 2 preceding and current row) end melt3,
-         |  case when rn2 >= 4 then sum(melt + rain) over (partition by user_id order by t
-         |    rows between 2 preceding and current row) end mp3
-         | from m)
-         |select user_id,
-         |  floor((max(melt3))*1e4 + 0.5)/1e4 snow_melt_we_max,
-         |  floor((max(mp3))*1e4 + 0.5)/1e4 melt_and_precip_max
-         |from r group by 1""".stripMargin
-  )
-
-  // ---- batch 26: converters batch 2 + sea-ice companions ------------------
-
-  private def queries26: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_converters_extended" -> ((s, dir) => {
-      // specific_humidity (+from_dewpoint, +inverse), Clausius-Clapeyron
-      // scaling, wind_power_potential, prsn<->prsnd, rain_approximation
-      // (converters.py:847-2804) — one codegen'd projection.
-      import graft.indices.Converters
-      val e = t(s, dir, "events").select(col("event_id"), col("value"),
-        (col("value") / 10.0 - 10.0).as("tas"),
-        (((col("value") % 60.0) + 30.0) / 100.0).as("hurs"),
-        (lit(101325.0) - col("value") * 5.0).as("ps"),
-        (col("value") / 15.0).as("wind"),
-        (col("value") / 10.0 - 13.0).as("tdps"),
-        (lit(0.004) + col("value") / 1e5).as("huss"),
-        (col("value") / 25.0).as("pr"))
-      e.select(col("event_id"),
-        qk(Converters.specificHumidity(col("tas"), col("hurs"), col("ps")), 8).as("huss_wmo"),
-        qk(Converters.specificHumidityFromDewpoint(col("tdps"), col("ps")), 8).as("huss_td"),
-        qk(Converters.dewpointFromSpecificHumidity(col("huss"), col("ps")), 5).as("td_back"),
-        qk(Converters.clausiusClapeyronScaledPrecipitation(
-          col("pr"), pmod(col("value"), lit(10.0)) - 5.0), 5).as("pr_cc"),
-        qk(Converters.windPowerPotential(col("wind")), 6).as("wind_power"),
-        qk(Converters.prsnToPrsnd(col("pr") / 1000.0), 9).as("prsnd"),
-        qk(Converters.rainApproximation(col("pr"), col("tas")), 5).as("rain_liquid"))
-    })
-  )
-
-  private def oracle26: Map[String, String] = Map(
-
-    "q_converters_extended" ->
-      """with e as (select event_id, value,
-        |  value/10.0 - 10.0 tas, ((value % 60.0) + 30.0)/100.0 hurs,
-        |  101325.0 - value*5.0 ps, value/15.0 wind, value/10.0 - 13.0 tdps,
-        |  0.004 + value/1e5 huss, value/25.0 pr
-        | from events),
-        |f as (select *,
-        |  6.112*exp(17.62*tas/(243.12 + tas))*100.0 esat,
-        |  6.112*exp(17.62*tdps/(243.12 + tdps))*100.0 etd
-        | from e),
-        |g as (select *,
-        |  0.62198*esat/(ps - esat) wsat,
-        |  0.62198*etd/(ps - etd*(1.0 - 0.62198)) q_td,
-        |  huss*ps/(0.62198 + huss*(1.0 - 0.62198)) einv
-        | from f)
-        |select event_id,
-        | floor((wsat*hurs/(1.0 + wsat*hurs))*1e8 + 0.5)/1e8 huss_wmo,
-        | floor((q_td)*1e8 + 0.5)/1e8 huss_td,
-        | floor((243.12*ln(einv/611.2)/(17.62 - ln(einv/611.2)))*1e5 + 0.5)/1e5 td_back,
-        | floor((pr*pow(1.07, (value % 10.0) - 5.0))*1e5 + 0.5)/1e5 pr_cc,
-        | floor((case when wind < 3.5 then 0.0
-        |   when wind < 13.0 then (pow(wind, 3.0) - 42.875)/(2197.0 - 42.875)
-        |   when wind < 25.0 then 1.0 else 0.0 end)*1e6 + 0.5)/1e6 wind_power,
-        | floor((pr/1000.0/100.0)*1e9 + 0.5)/1e9 prsnd,
-        | floor((case when tas >= 0.0 then pr else 0.0 end)*1e5 + 0.5)/1e5 rain_liquid
-        |from g""".stripMargin
-  )
-
-  // ---- batch 25: partitioning + robustness --------------------------------
-
-  /** Annual ensemble frame for partitioning: (y, scenario, model,
-    * downscaling, v) from lineitem, member means quantized to 6 digits. */
-  private def ensembleAnnual(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(year(col("l_shipdate")).as("y"), col("l_returnflag").as("scenario"),
-        col("l_linestatus").as("model"), pmod(col("l_partkey"), lit(2)).as("downscaling"))
-      .agg(qk(avg(col("l_quantity")), 6).as("v"))
-
-  private val ensembleAnnualSql =
-    """ens as (
-      |  select year(l_shipdate) y, l_returnflag scenario, l_linestatus model,
-      |    l_partkey % 2 downscaling,
-      |    floor((avg(l_quantity))*1e6 + 0.5)/1e6 v
-      |  from lineitem group by 1, 2, 3, 4
-      |)""".stripMargin
-
-  private def queries25: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_lafferty_sriver" -> ((s, dir) => {
-      // lafferty_sriver (_partitioning.py:192): 4-component variance
-      // partition of the annual (scenario, model, downscaling) ensemble;
-      // rolling-3 smoother (the reference accepts any smoother).
-      graft.ensembles.Partitioning.laffertySriver(
-          ensembleAnnual(s, dir), "y", "scenario", "model", "downscaling", "v",
-          smoothWindow = 3)
-        .select(col("y"), col("uncertainty"), qk(col("variance"), 6).as("variance"))
-    }),
-
-    "q_brownforsythe" -> ((s, dir) => {
-      // Brown-Forsythe change test (_robustness.py:614): Levene W with
-      // median centering between the Jan 1-15 and Jan 16-31 samples.
-      val e = t(s, dir, "events")
-        .withColumn("fut", col("ts").cast("date") >= lit("2024-01-16"))
-      graft.ensembles.Ensembles.brownForsythe(e, Seq("event_type"), col("fut"),
-          col("value"))
-        .select(col("event_type"), qk(col("bf_w"), 6).as("bf_w"), col("changed"))
-    }),
-
-    "q_ipcc_ar6" -> ((s, dir) => {
-      // IPCC AR6 Atlas significance (_robustness.py:637): gamma from the
-      // linearly detrended annual reference series, delta vs gamma.
-      val annual = climateDaily(s, dir)
-        .groupBy(col("k"), year(col("d")).as("y"))
-        .agg(qk(avg(col("tas")), 6).as("v"))
-      val refm = annual.filter(col("y") <= 1998)
-        .groupBy(col("k").as("_k1")).agg(avg(col("v")).as("_rm"))
-      val futm = annual.filter(col("y") > 1998)
-        .groupBy(col("k").as("_k2")).agg(avg(col("v")).as("_fm"))
-      val ref = annual.filter(col("y") <= 1998)
-        .join(broadcast(refm), col("k") === col("_k1"))
-        .join(broadcast(futm), col("k") === col("_k2"))
-        .withColumn("delta_in", col("_fm") - col("_rm"))
-      graft.ensembles.Ensembles.ipccAr6C(ref, Seq("k"), col("y"), col("v"),
-          col("delta_in"))
-        .select(col("k").as("l_returnflag"), qk(col("gamma"), 6).as("gamma"),
-          qk(col("delta"), 6).as("delta"), col("changed"))
-    }),
-
-    "q_robustness_coeff" -> ((s, dir) => {
-      // robustness_coefficient (_robustness.py:430, Knutti-Sedlacek):
-      // R = 1 - A1/A2 from exact squared-area CDF integrals (window plan).
-      val e = t(s, dir, "events")
-        .withColumn("day", dayofmonth(col("ts")))
-        .withColumn("rz", pmod(col("user_id"), lit(5)))
-      val fut = e.filter(col("day") >= 16)
-        .groupBy(col("event_type"), col("rz"), col("day"))
-        .agg(qk(avg(col("value")), 6).as("v"))
-      val ref = e.filter(col("day") <= 15)
-        .groupBy(col("event_type"), col("day"))
-        .agg(qk(avg(col("value")), 6).as("v"))
-      graft.ensembles.Ensembles.robustnessCoefficient(
-          fut, Seq("event_type"), "rz", "day", "v", ref.drop("day"))
-        .select(col("event_type"), qk(col("robustness"), 6).as("robustness"))
-    })
-  )
-
-  private def oracle25: Map[String, String] = Map(
-
-    "q_lafferty_sriver" ->
-      s"""with $ensembleAnnualSql,
-         |sm as (select *, avg(v) over w sm from ens
-         |  window w as (partition by scenario, model, downscaling order by y
-         |    rows between 1 preceding and 1 following)),
-         |nvr as (select *, var_pop(v - sm) over w nv from sm
-         |  window w as (partition by scenario, model, downscaling order by y
-         |    rows between 1 preceding and 1 following)),
-         |c_var as (select y, avg(nv) variance from nvr group by 1),
-         |scen1 as (select y, scenario, avg(sm) m from sm group by 1, 2),
-         |c_scen as (select y, var_pop(m) variance from scen1 group by 1),
-         |mod1 as (select y, scenario, downscaling, var_pop(sm) vv, count(*) w
-         |  from sm group by 1, 2, 3),
-         |c_mod as (select y, sum(vv*w)/sum(w) variance from mod1 group by 1),
-         |dwn1 as (select y, scenario, model, var_pop(sm) vv, count(*) w
-         |  from sm group by 1, 2, 3),
-         |c_dwn as (select y, sum(vv*w)/sum(w) variance from dwn1 group by 1),
-         |lng as (
-         |  select y, 'variability' uncertainty, variance from c_var
-         |  union all select y, 'scenario', variance from c_scen
-         |  union all select y, 'model', variance from c_mod
-         |  union all select y, 'downscaling', variance from c_dwn
-         |  union all
-         |  select v.y, 'total', v.variance + s.variance + m.variance + d.variance
-         |  from c_var v join c_scen s on s.y = v.y join c_mod m on m.y = v.y
-         |   join c_dwn d on d.y = v.y
-         |)
-         |select y, uncertainty,
-         |  floor((variance)*1e6 + 0.5)/1e6 variance from lng""".stripMargin,
-
-    "q_brownforsythe" ->
-      """with e as (select event_type,
-        |  cast(ts as date) >= date '2024-01-16' fut, value from events),
-        |g as (select event_type, case when fut then 1 else 0 end g, value v from e),
-        |r as (select *, row_number() over (partition by event_type, g order by v) rn,
-        |  count(*) over (partition by event_type, g) n from g),
-        |med as (select event_type, g, min(case when rn = cast(ceil(n/2.0) as int)
-        |  then v end) md from r group by 1, 2),
-        |z as (select g.event_type, g.g, abs(g.v - m.md) z
-        |  from g join med m on m.event_type = g.event_type and m.g = g.g),
-        |per as (select event_type, g, avg(z) zm, count(*) n, sum(z*z) zss
-        |  from z group by 1, 2),
-        |agg as (select event_type, sum(n) nt,
-        |  sum(n*zm*zm) nzm2, sum(zss - n*zm*zm) ssw, sum(n*zm) nzm
-        | from per group by 1)
-        |select event_type,
-        |  floor(((nt - 2)*(nzm2 - nzm*nzm/nt)/ssw)*1e6 + 0.5)/1e6 bf_w,
-        |  (nt - 2)*(nzm2 - nzm*nzm/nt)/ssw > 3.84 changed
-        |from agg""".stripMargin,
-
-    "q_ipcc_ar6" ->
-      s"""with $climSql,
-         |annual as (select k, year(d) y,
-         |  floor((avg(tas))*1e6 + 0.5)/1e6 v
-         | from clim group by 1, 2),
-         |refm as (select k, avg(v) rm from annual where y <= 1998 group by 1),
-         |futm as (select k, avg(v) fm from annual where y > 1998 group by 1),
-         |agg as (select a.k,
-         |  avg(cast(a.y as double)) tm, avg(a.v) vm,
-         |  avg(cast(a.y as double)*a.v) tvm,
-         |  avg(cast(a.y as double)*cast(a.y as double)) t2m,
-         |  var_pop(a.v) vv, avg(f.fm - r.rm) delta
-         | from annual a join refm r on r.k = a.k join futm f on f.k = a.k
-         | where a.y <= 1998 group by 1),
-         |fin as (select k, delta,
-         |  sqrt(2.0/20.0)*1.645*sqrt(vv - pow((tvm - tm*vm)/(t2m - tm*tm), 2)
-         |    *(t2m - tm*tm)) gamma
-         | from agg)
-         |select k l_returnflag,
-         |  floor((gamma)*1e6 + 0.5)/1e6 gamma,
-         |  floor((delta)*1e6 + 0.5)/1e6 delta,
-         |  abs(delta) > gamma changed
-         |from fin""".stripMargin,
-
-    "q_robustness_coeff" ->
-      """with e as (select event_type, user_id % 5 rz, dayofmonth(ts) d_, value
-        | from events),
-        |fut as (select event_type, rz, d_,
-        |  floor((avg(value))*1e6 + 0.5)/1e6 v
-        | from e where d_ >= 16 group by 1, 2, 3),
-        |refs as (select event_type,
-        |  floor((avg(value))*1e6 + 0.5)/1e6 v
-        | from e where d_ <= 15 group by event_type, d_),
-        |mp as (select event_type, d_, avg(v) v from fut group by 1, 2),
-        |u1 as (
-        |  select event_type, rz, v, 1 a, 0 b from fut
-        |  union all
-        |  select m.event_type, r.rz, m.v, 0, 1
-        |  from mp m join (select distinct event_type, rz from fut) r
-        |    on r.event_type = m.event_type),
-        |w1 as (select *, sum(a) over w ca, sum(b) over w cb,
-        |  sum(a) over (partition by event_type, rz) na,
-        |  sum(b) over (partition by event_type, rz) nb,
-        |  lead(v) over w - v dx
-        | from u1 window w as (partition by event_type, rz order by v, a
-        |   rows between unbounded preceding and current row)),
-        |a1 as (select event_type, avg(sq) a1 from (
-        |  select event_type, rz, coalesce(sum(
-        |    (ca*1.0/na - cb*1.0/nb)*(ca*1.0/na - cb*1.0/nb)*dx), 0.0) sq
-        |  from w1 group by 1, 2) t group by 1),
-        |u2 as (
-        |  select event_type, v, 1 a, 0 b from refs
-        |  union all select event_type, v, 0, 1 from mp),
-        |w2 as (select *, sum(a) over w ca, sum(b) over w cb,
-        |  sum(a) over (partition by event_type) na,
-        |  sum(b) over (partition by event_type) nb,
-        |  lead(v) over w - v dx
-        | from u2 window w as (partition by event_type order by v, a
-        |   rows between unbounded preceding and current row)),
-        |a2 as (select event_type, coalesce(sum(
-        |    (ca*1.0/na - cb*1.0/nb)*(ca*1.0/na - cb*1.0/nb)*dx), 0.0) a2
-        |  from w2 group by 1)
-        |select a1.event_type,
-        |  floor((1.0 - a1.a1/a2.a2)*1e6 + 0.5)/1e6 robustness
-        |from a1 join a2 on a2.event_type = a1.event_type""".stripMargin
-  )
-
-  // ---- batch 24: remaining analog metrics ---------------------------------
-
-  private def queries24: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_analog_metrics" -> ((s, dir) => {
-      // zech_aslan (analog.py:255), kldiv k=1 (:499) and mahalanobis (:591)
-      // per candidate type vs the 'view' sample: 2-D features, id-jittered
-      // so kNN distances never hit the r=0 pole. Target-side NN/std/cov
-      // precomputed once; one mapGroups kernel per group (O(n m + n^2)
-      // bounded by the subsample, like the reference).
-      val e = t(s, dir, "events").filter(pmod(col("event_id"), lit(7)) === 0)
-        .select(col("event_id"), col("event_type"),
-          (col("value") / 100.0 + pmod(col("event_id"), lit(997)) / 1e7).as("f1"),
-          (pmod(col("value"), lit(50.0)) / 10.0 + pmod(col("event_id"), lit(991)) / 1e7).as("f2"))
-      val target = e.filter(col("event_type") === "view")
-        .select(col("f1"), col("f2")).collect()
-        .map(r => Array(r.getDouble(0), r.getDouble(1)))
-      graft.analog.Analog.extendedMetrics(
-          e.filter(col("event_type") =!= "view")
-            .select(col("event_type"), array(col("f1"), col("f2")).as("features")),
-          "event_type", "features", target, maxPerGroup = 4000)
-        .select(col("event_type"), qk(col("zech_aslan"), 5).as("zech_aslan"),
-          qk(col("kldiv"), 5).as("kldiv"),
-          qk(col("mahalanobis"), 5).as("mahalanobis"))
-    })
-  )
-
-  private def oracle24: Map[String, String] = Map(
-
-    "q_analog_metrics" ->
-      """with e as (select event_id, event_type,
-        |  value/100.0 + (event_id % 997)/1e7 f1,
-        |  (value % 50.0)/10.0 + (event_id % 991)/1e7 f2
-        | from events where event_id % 7 = 0),
-        |tgt as (select * from e where event_type = 'view'),
-        |cand as (select * from e where event_type <> 'view'),
-        |ts as (select stddev_samp(f1) s1, stddev_samp(f2) s2,
-        |  avg(f1) m1, avg(f2) m2, var_samp(f1) c11, covar_samp(f1, f2) c12,
-        |  var_samp(f2) c22, count(*) m from tgt),
-        |gs as (select event_type, stddev_samp(f1) s1, stddev_samp(f2) s2,
-        |  avg(f1) m1, avg(f2) m2, count(*) n from cand group by 1),
-        |vv as (select g.event_type, g.n, g.m1 gm1, g.m2 gm2,
-        |  g.s1*t.s1 v1, g.s2*t.s2 v2, t.m, t.m1 tm1, t.m2 tm2,
-        |  t.c11, t.c12, t.c22 from gs g cross join ts t),
-        |pxx as (select v.event_type,
-        |  sum(-ln(greatest(sqrt((a.f1-b.f1)*(a.f1-b.f1)/v.v1
-        |    + (a.f2-b.f2)*(a.f2-b.f2)/v.v2), 1e-12)))/v.n/v.n s
-        | from vv v join cand a on a.event_type = v.event_type
-        |  join cand b on b.event_type = v.event_type and a.event_id < b.event_id
-        | group by v.event_type, v.n),
-        |pyy as (select v.event_type,
-        |  sum(-ln(greatest(sqrt((a.f1-b.f1)*(a.f1-b.f1)/v.v1
-        |    + (a.f2-b.f2)*(a.f2-b.f2)/v.v2), 1e-12)))/v.m/v.m s
-        | from vv v cross join tgt a join tgt b on a.event_id < b.event_id
-        | group by v.event_type, v.m),
-        |pxy as (select v.event_type,
-        |  sum(-ln(greatest(sqrt((a.f1-b.f1)*(a.f1-b.f1)/v.v1
-        |    + (a.f2-b.f2)*(a.f2-b.f2)/v.v2), 1e-12)))/v.n/v.m s
-        | from vv v join cand a on a.event_type = v.event_type cross join tgt b
-        | where b.event_type = 'view'
-        | group by v.event_type, v.n, v.m),
-        |tnn as (select a.event_id,
-        |  min(sqrt((a.f1-b.f1)*(a.f1-b.f1) + (a.f2-b.f2)*(a.f2-b.f2))) r1
-        | from tgt a join tgt b on a.event_id <> b.event_id group by 1),
-        |snn as (select v.event_type, a.event_id,
-        |  min(sqrt((a.f1-b.f1)*(a.f1-b.f1) + (a.f2-b.f2)*(a.f2-b.f2))) s1
-        | from vv v cross join tgt a join cand b on b.event_type = v.event_type
-        | where a.event_type = 'view'
-        | group by 1, 2),
-        |kl as (select s.event_type,
-        |  2.0/any_value(v.m)*sum(ln(t.r1/s.s1))
-        |    + ln(any_value(v.n)*1.0/(any_value(v.m) - 1)) kldiv
-        | from snn s join tnn t on t.event_id = s.event_id
-        |  join vv v on v.event_type = s.event_type
-        | group by 1),
-        |mh as (select event_type,
-        |  sqrt(((gm1-tm1)*(gm1-tm1)*c22 - 2*(gm1-tm1)*(gm2-tm2)*c12
-        |    + (gm2-tm2)*(gm2-tm2)*c11)/(c11*c22 - c12*c12)) md
-        | from vv)
-        |select x.event_type,
-        | floor((x.s + y.s - z.s)*1e5 + 0.5)/1e5 zech_aslan,
-        | floor((k.kldiv)*1e5 + 0.5)/1e5 kldiv,
-        | floor((m.md)*1e5 + 0.5)/1e5 mahalanobis
-        |from pxx x join pyy y on y.event_type = x.event_type
-        | join pxy z on z.event_type = x.event_type
-        | join kl k on k.event_type = x.event_type
-        | join mh m on m.event_type = x.event_type""".stripMargin
-  )
-
-  // ---- batch 23: full data-flags battery ----------------------------------
-
-  private def queries23: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_data_flags_battery" -> ((s, dir) => {
-      // dataflags.py:127-554 battery + ecad_compliant (:749): 10 QC flags
-      // over the synthetic weather frame, counted per entity. Row-local
-      // flags are projections; repeats share one entity-window; the
-      // climatology flag joins a broadcast (entity, doy+-2) table.
-      import graft.indicator.DataFlags
-      val wx = weatherDaily(s, dir)
-        .withColumn("d", date_add(to_date(lit("1970-01-01")), col("t")))
-        .withColumn("tx", col("airt") + (col("rain") - 5.0) / 2.0)
-        .withColumn("tn", col("airt") - 2.0)
-        .withColumn("tmean", col("airt") + (col("wind") - 20.0) / 8.0)
-      val withClim = DataFlags.outsideClimatology(wx, Seq("user_id"), col("d"),
-        col("airt"), nSigma = 2.5, window = 5)
-      val flags = Map(
-        "tasmax_below_tasmin" -> DataFlags.tasmaxBelowTasmin(col("tx"), col("tn")),
-        "tas_exceeds_tasmax" -> DataFlags.tasExceedsTasmax(col("tmean"), col("tx")),
-        "tas_below_tasmin" -> DataFlags.tasBelowTasmin(col("tmean"), col("tn")),
-        "temperature_extremely_low" -> DataFlags.temperatureExtremelyLow(col("airt"), -4.9),
-        "temperature_extremely_high" -> DataFlags.temperatureExtremelyHigh(col("airt"), 34.5),
-        "negative_accumulation" -> DataFlags.negativeAccumulation(col("rain")),
-        "very_large_precipitation" -> DataFlags.veryLargePrecipitation(col("rain"), 25.0),
-        "wind_outside_bounds" -> DataFlags.windOutsideBounds(col("wind"), 0.0, 39.0),
-        "percentage_outside_bounds" -> DataFlags.percentageOutsideBounds(col("hum")),
-        "repeating_values" -> DataFlags.repeatingValues(Seq("user_id"), col("d"), col("rain"), 3),
-        "zero_repeating" -> DataFlags.threshRepeating(Seq("user_id"), col("d"), col("rain"), 0.0, 5),
-        "specific_discharge_extremely_high" ->
-          DataFlags.specificDischargeExtremelyHigh(col("rain") * 4.0, 100.0),
-        "outside_climatology" -> col("_clim_flag"))
-      DataFlags.battery(withClim, Seq("user_id"), flags)
-    })
-  )
-
-  private def oracle23: Map[String, String] = Map(
-
-    "q_data_flags_battery" ->
-      s"""with $wxSql,
-         |base as (select user_id, d, airt, rain, wind, hum,
-         |  airt + (rain - 5.0)/2.0 tx, airt - 2.0 tn,
-         |  airt + (wind - 20.0)/8.0 tmean from wx),
-         |rr as (select *, case when rain = lag(rain) over
-         |  (partition by user_id order by d) then 0 else 1 end nr from base),
-         |rid as (select *, sum(nr) over (partition by user_id order by d) rid from rr),
-         |rlen as (select *, count(*) over (partition by user_id, rid) rl from rid),
-         |contrib as (select user_id, airt v,
-         |  unnest(range(dayofyear(d) - 2, dayofyear(d) + 3)) tdoy from base),
-         |contribw as (select user_id, v,
-         |  case when tdoy < 1 then tdoy + 365
-         |       when tdoy > 365 then tdoy - 365 else tdoy end tdoy from contrib),
-         |clim as (select user_id, tdoy, avg(v) cm, stddev_pop(v) cs
-         |  from contribw group by 1, 2),
-         |j as (select r.*, c.cm, c.cs from rlen r left join clim c
-         |  on c.user_id = r.user_id and c.tdoy = least(dayofyear(r.d), 365)),
-         |f as (select user_id,
-         |  case when tx < tn then 1 end f_txtn,
-        |  case when tmean > tx then 1 end f_ttx,
-        |  case when tmean < tn then 1 end f_ttn,
-         |  case when airt < -4.9 then 1 end f_tlow,
-         |  case when airt > 34.5 then 1 end f_thigh,
-         |  case when rain < 0 then 1 end f_negacc,
-         |  case when rain > 25.0 then 1 end f_bigpr,
-         |  case when wind < 0 or wind > 39.0 then 1 end f_wind,
-         |  case when hum < 0 or hum > 100 then 1 end f_pct,
-         |  case when rl >= 3 then 1 end f_rep,
-         |  case when rl >= 5 and rain = 0.0 then 1 end f_zrep,
-         |  case when rain * 4.0 > 100.0 then 1 end f_q,
-         |  case when cast(floor(abs(airt - cm)*1e6 + 0.5) as bigint)
-         |     > cast(floor(2.5*cs*1e6 + 0.5) as bigint) then 1 end f_clim
-         | from j)
-         |select user_id,
-         |  cast(coalesce(sum(f_negacc), 0) as bigint) n_negative_accumulation,
-         |  cast(coalesce(sum(f_clim), 0) as bigint) n_outside_climatology,
-         |  cast(coalesce(sum(f_pct), 0) as bigint) n_percentage_outside_bounds,
-         |  cast(coalesce(sum(f_rep), 0) as bigint) n_repeating_values,
-         |  cast(coalesce(sum(f_q), 0) as bigint) n_specific_discharge_extremely_high,
-         |  cast(coalesce(sum(f_ttn), 0) as bigint) n_tas_below_tasmin,
-        |  cast(coalesce(sum(f_ttx), 0) as bigint) n_tas_exceeds_tasmax,
-        |  cast(coalesce(sum(f_txtn), 0) as bigint) n_tasmax_below_tasmin,
-         |  cast(coalesce(sum(f_thigh), 0) as bigint) n_temperature_extremely_high,
-         |  cast(coalesce(sum(f_tlow), 0) as bigint) n_temperature_extremely_low,
-         |  cast(coalesce(sum(f_bigpr), 0) as bigint) n_very_large_precipitation,
-         |  cast(coalesce(sum(f_wind), 0) as bigint) n_wind_outside_bounds,
-         |  cast(coalesce(sum(f_zrep), 0) as bigint) n_zero_repeating,
-         |  (coalesce(sum(f_ttx), 0) = 0 and coalesce(sum(f_ttn), 0) = 0
-        |   and coalesce(sum(f_negacc), 0) = 0 and coalesce(sum(f_clim), 0) = 0
-         |   and coalesce(sum(f_pct), 0) = 0 and coalesce(sum(f_rep), 0) = 0
-         |   and coalesce(sum(f_txtn), 0) = 0 and coalesce(sum(f_thigh), 0) = 0
-         |   and coalesce(sum(f_tlow), 0) = 0 and coalesce(sum(f_bigpr), 0) = 0
-         |   and coalesce(sum(f_wind), 0) = 0 and coalesce(sum(f_zrep), 0) = 0
-         |   and coalesce(sum(f_q), 0) = 0)
-         |    ecad_qc_flag
-         |from f group by 1""".stripMargin
-  )
-
-  // ---- batch 21: UTCI + mean radiant temperature --------------------------
-
-  private def queries21: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_utci" -> ((s, dir) => {
-      // universal_thermal_climate_index (converters.py:2389): the 210-term
-      // Broede polynomial over synthesized (tas, hurs, wind, mrt), with the
-      // reference's validity mask (null outside it). Pure projection.
-      import graft.indices.Utci
-      val e = t(s, dir, "events").select(col("event_id"),
-        (col("value") / 12.0 - 20.0).as("tas"),
-        ((col("value") % 60.0) + 30.0).as("hurs_pct"),
-        ((col("value") % 16.0) + 0.4).as("wind"),
-        (col("value") / 12.0 - 20.0 + (col("value") % 50.0) / 2.0 - 12.5).as("mrt"))
-      e.select(col("event_id"), qk(col("tas"), 6).as("tas"),
-        qk(Utci.utci(col("tas"), col("hurs_pct") / 100.0, col("wind"), col("mrt")), 4)
-          .as("utci"))
-    }),
-
-    "q_mrt" -> ((s, dir) => {
-      // mean_radiant_temperature (converters.py:2538): direct/diffuse split
-      // of shortwave via the fdir ratio, fp beam projection, SB inversion;
-      // csza = daily sunlit average from the Spencer solar chain.
-      import graft.indices.Utci
-      val e = t(s, dir, "events").select(col("event_id"),
-        col("ts").cast("date").as("d"),
-        (col("user_id") - 60.0).cast("double").as("lat"),
-        col("value").as("rsds"),
-        (col("value") * 0.15).as("rsus"),
-        (lit(300.0) + col("value") / 10.0).as("rlds"),
-        (lit(350.0) + col("value") / 8.0).as("rlus"))
-      Utci.withMeanRadiantTemperature(e, col("rsds"), col("rsus"), col("rlds"),
-          col("rlus"), col("lat"), col("d"), "_mrt")
-        .select(col("event_id"), qk(col("_mrt"), 4).as("mrt_k"))
-    })
-  )
-
-  private def oracle21: Map[String, String] = Map(
-
-    "q_utci" -> {
-      val poly = graft.indices.Utci.utciPolySql("tas", "wind", "dt", "pa")
-      val esat = graft.indices.Utci.satVpIts90Sql("(tas + 273.15)")
-      s"""with e as (
-         |  select event_id, value/12.0 - 20.0 tas,
-         |    (value % 60.0) + 30.0 hurs_pct,
-         |    (value % 16.0) + 0.4 wind,
-         |    value/12.0 - 20.0 + (value % 50.0)/2.0 - 12.5 mrt
-         |  from events
-         |),
-         |f as (
-         |  select event_id, tas, wind, mrt - tas dt,
-         |    $esat/1000.0*(hurs_pct/100.0) pa
-         |  from e
-         |)
-         |select event_id,
-         |  floor((tas)*1e6 + 0.5)/1e6 tas,
-         |  floor((case when tas > -50.0 and tas < 50.0 and dt > -30.0
-         |    and dt < 30.0 and wind >= 0.5 and wind < 17.0
-         |    then $poly end)*1e4 + 0.5)/1e4 utci
-         |from f""".stripMargin
-    },
-
-    "q_mrt" ->
-      s"""with e0 as (
-         |  select event_id, cast(ts as date) d,
-         |    cast(user_id - 60.0 as double) lat,
-         |    value rsds, value*0.15 rsus,
-         |    300.0 + value/10.0 rlds, 350.0 + value/8.0 rlus
-         |  from events
-         |),
-         |${solarSql("e0")},
-         |cz as (
-         |  select *, case when hss > 0.0
-         |    then (hss*sin(latr)*sin(decl) + cos(latr)*cos(decl)*sin(hss))/hss
-         |    else 0.0 end csza
-         |  from ra_
-         |),
-         |fd as (
-         |  select *, least(rsds/(1367.0*csza*ecc), 0.85) sstar from cz
-         |),
-         |fr as (
-         |  select *, case when least(exp(3.0 - 1.34*sstar - 1.65/sstar), 0.9) <= 0.0
-         |      or csza <= cos(89.5/180.0*pi()) or rsds <= 0.0 then 0.0
-         |    else least(exp(3.0 - 1.34*sstar - 1.65/sstar), 0.9) end fdir
-         |  from fd
-         |),
-         |mr as (
-         |  select event_id,
-         |    rsds - fdir*rsds rsds_diffuse, fdir*rsds rsds_direct,
-         |    asin(csza) gam, csza, rsus, rlds, rlus
-         |  from fr
-         |)
-         |select event_id,
-         |  floor(pow((1.0/5.67e-8)*(0.5*rlds + 0.5*rlus
-         |    + (0.7/0.97)*(0.5*rsds_diffuse + 0.5*rsus
-         |      + (0.308*cos(gam*0.988 - gam*gam/50000.0))
-         |        *(case when csza > 0.001 then rsds_direct/csza else 0.0 end))),
-         |    0.25)*1e4 + 0.5)/1e4 mrt_k
-         |from mr""".stripMargin
-  )
-
-  // ---- batch 19: distribution fits (PWM GEV/Gumbel, ML lognorm) ----------
-
-  private def queries19: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_return_level_gev" -> ((s, dir) => {
-      // fa(dist="genextreme", method="PWM") (stats.py:429): monthly-max
-      // blocks of the exact climate pr series, Hosking L-moment parameter
-      // map, T-year return levels. One bounded collect per entity.
-      graft.indices.FrequencyAnalysis.returnLevelLmom(
-          climateDaily(s, dir), Seq("k"), col("d").cast("timestamp"), col("pr"),
-          ts = Seq(10.0, 50.0), dist = "genextreme", freq = "MS", quantize = 6)
-        .select(col("k").as("l_returnflag"), col("n_blocks"),
-          qk(col("shape"), 6).as("shape"), qk(col("scale"), 4).as("scale"),
-          qk(col("loc"), 4).as("loc"), col("t_years"),
-          qk(col("return_level"), 4).as("return_level"))
-    }),
-
-    "q_return_level_gumbel" -> ((s, dir) => {
-      // fa(dist="gumbel_r", method="PWM"): same blocks, Gumbel map.
-      graft.indices.FrequencyAnalysis.returnLevelLmom(
-          climateDaily(s, dir), Seq("k"), col("d").cast("timestamp"), col("pr"),
-          ts = Seq(20.0), dist = "gumbel_r", freq = "MS", quantize = 6)
-        .select(col("k").as("l_returnflag"), col("n_blocks"),
-          qk(col("scale"), 4).as("scale"), qk(col("loc"), 4).as("loc"),
-          col("t_years"), qk(col("return_level"), 4).as("return_level"))
-    }),
-
-    "q_lognorm_quantiles" -> ((s, dir) => {
-      // fit(dist="lognorm", method="ML", floc=0) + parametric_quantile:
-      // closed-form mu/sigma of ln x — two partial-aggregable scalars, no
-      // collected sample at any scale.
-      import graft.indices.Distributions
-      val e = t(s, dir, "events").filter(col("value") > 0)
-      val (sig, mu) = Distributions.lognormMl(col("value"))
-      e.groupBy(col("event_type"))
-        .agg(qk(sig, 6).as("sigma"), qk(mu, 6).as("mu"))
-        .select(col("event_type"), col("sigma"), col("mu"),
-          qk(Distributions.lognormQuantile(lit(0.9), col("sigma"), col("mu")), 4)
-            .as("q90_lognorm"))
-    })
-  )
-
-  private def oracle19: Map[String, String] = {
-    // L-moment CTE over monthly maxima of the climate series (rank trick)
-    val blocksLmom =
-      s"""$climSql,
-         |blocks as (
-         |  select k, date_trunc('month', d) m, max(pr) x
-         |  from clim group by 1, 2
-         |),
-         |r as (select k, x, row_number() over (partition by k order by x) rk,
-         |  count(*) over (partition by k) n from blocks),
-         |lm as (
-         |  select k, any_value(n) n_blocks, avg(x) b0,
-         |    sum(x*(rk-1.0)/(n-1.0))/any_value(n) b1,
-         |    sum(x*(rk-1.0)*(rk-2.0)/((n-1.0)*(n-2.0)))/any_value(n) b2
-         |  from r group by k
-         |),
-         |lmom as (
-         |  select k, n_blocks,
-         |    floor((b0)*1e6 + 0.5)/1e6 l1,
-         |    floor((2*b1 - b0)*1e6 + 0.5)/1e6 l2,
-         |    floor(((6*b2 - 6*b1 + b0)/(2*b1 - b0))*1e6 + 0.5)/1e6 t3
-         |  from lm
-         |)""".stripMargin
-    Map(
-
-      "q_return_level_gev" ->
-        s"""with $blocksLmom,
-           |par as (
-           |  select k, n_blocks, l1, l2,
-           |    floor((7.8590*z + 2.9554*z*z)*1e6 + 0.5)/1e6 kk
-           |  from (select *, 2.0/(3.0 + t3) - 0.6309297535714574 z from lmom)
-           |),
-           |par2 as (
-           |  select k, n_blocks, kk,
-           |    l2*kk/(gk*(1.0 - pow(2.0, -kk))) alpha,
-           |    l1 - l2*kk/(gk*(1.0 - pow(2.0, -kk)))*(1.0 - gk)/kk xi
-           |  from (select *, floor((gamma(1.0 + kk))*1e8 + 0.5)/1e8 gk
-           |        from par)
-           |),
-           |ex as (
-           |  select par2.*, t_years from par2,
-           |    (select unnest([cast(10.0 as double), cast(50.0 as double)]) t_years)
-           |)
-           |select k l_returnflag, n_blocks,
-           |  floor((kk)*1e6 + 0.5)/1e6 shape,
-           |  floor((alpha)*1e4 + 0.5)/1e4 scale,
-           |  floor((xi)*1e4 + 0.5)/1e4 loc, t_years,
-           |  floor((xi + alpha/kk*(1.0 - pow(-ln(1.0 - 1.0/t_years), kk))
-           |   )*1e4 + 0.5)/1e4 return_level
-           |from ex""".stripMargin,
-
-      "q_return_level_gumbel" ->
-        s"""with $blocksLmom,
-           |par as (
-           |  select k, n_blocks, l2/0.6931471805599453 alpha,
-           |    l1 - 0.5772156649015329*(l2/0.6931471805599453) xi
-           |  from lmom
-           |)
-           |select k l_returnflag, n_blocks,
-           |  floor((alpha)*1e4 + 0.5)/1e4 scale,
-           |  floor((xi)*1e4 + 0.5)/1e4 loc,
-           |  cast(20.0 as double) t_years,
-           |  floor((xi - alpha*ln(-ln(1.0 - 1.0/20.0)))*1e4 + 0.5)/1e4 return_level
-           |from par""".stripMargin,
-
-      "q_lognorm_quantiles" ->
-        s"""with f as (
-           |  select event_type,
-           |    floor((stddev_pop(ln(value)))*1e6 + 0.5)/1e6 sigma,
-           |    floor((avg(ln(value)))*1e6 + 0.5)/1e6 mu
-           |  from events where value > 0 group by 1
-           |)
-           |select event_type, sigma, mu,
-           |  floor((exp(mu + sigma*(${probitSql("cast(0.9 as double)")})))*1e4 + 0.5)/1e4 q90_lognorm
-           |from f""".stripMargin
-    )
-  }
-
-  private def oracle18: Map[String, String] = Map(
-
-    "q_pet_daily" ->
-      s"""with $wxSql,
-         |${solarSql(
-           """(select user_id, d, t, lat, airt tas, airt - 5.0 tasmin,
-             |   airt + 5.0 tasmax, hum/100.0 hurs, wind/3.6 w10 from wx)""".stripMargin)},
-         |svp as (
-         |  select *,
-         |    (6.112*exp(17.62*tasmax/(243.12 + tasmax))
-         |     + 6.112*exp(17.62*tasmin/(243.12 + tasmin)))/2.0/10.0 es,
-         |    w10*4.87/ln(67.8*10.0 - 5.42) u2,
-         |    0.75*ra/1e6 rn
-         |  from ra_
-         |),
-         |pm as (
-         |  select *, es*hurs ea, 4098.0*es/((tas + 237.3)*(tas + 237.3)) delta,
-         |    0.665e-3*101.325 gam
-         |  from svp
-         |)
-         |select user_id, t,
-         |  floor((greatest(0.0, 0.094*(-87.03 + 0.928*(tasmax*1.8 + 32.0)
-         |    + 0.933*((tasmax*1.8 + 32.0) - (tasmin*1.8 + 32.0))
-         |    + 0.0486*ra/41840.0)))*1e4 + 0.5)/1e4 pet_br65,
-         |  floor((greatest(0.0, 0.0023*(ra/1e6*0.408)*(tas + 17.8)
-         |    *sqrt(greatest(tasmax - tasmin, 0.0))))*1e4 + 0.5)/1e4 pet_hg85,
-         |  floor(((ra*1367.0/1361.0)/(4185.5*(751.78 - 0.5655*(tas + 273.15)))
-         |    *(0.00516409319477*tas + 0.0874972822289))*1e4 + 0.5)/1e4 pet_mb05,
-         |  floor(((0.408*delta*rn + gam*900.0/(tas + 273.15)*u2*(es - ea))
-         |    /(delta + gam*(1.0 + 0.34*u2)))*1e4 + 0.5)/1e4 pet_fao98
-         |from pm""".stripMargin,
-
-    "q_pet_thornthwaite" ->
-      s"""with $climSql,
-         |${solarSql("clim")},
-         |mon as (
-         |  select k, cast(date_trunc('month', d) as timestamp) m,
-         |    floor((avg(greatest(tas, 0.0)))*1e6 + 0.5)/1e6 tas_m,
-         |    floor((avg((24.0/pi())*hss/12.0))*1e6 + 0.5)/1e6 dl_m
-         |  from ra_ group by 1, 2
-         |),
-         |yr as (
-         |  select k, year(m) y,
-         |    floor((sum(floor((pow(tas_m/5.0, 1.514))*1e8 + 0.5)/1e8))
-         |      *1e6 + 0.5)/1e6 hi
-         |  from mon group by 1, 2
-         |),
-         |ya as (
-         |  select *, 6.75e-7*hi*hi*hi - 7.71e-5*hi*hi + 0.01791*hi + 0.49239 a
-         |  from yr
-         |)
-         |select mon.k l_returnflag, mon.m period,
-         |  floor((case when ya.hi > 0
-         |    then 16.0*mon.dl_m*(floor((pow(10.0*mon.tas_m/ya.hi, ya.a))
-         |      *1e7 + 0.5)/1e7) else 0.0 end)*1e4 + 0.5)/1e4 pet_mm
-         |from mon join ya on ya.k = mon.k and ya.y = year(mon.m)""".stripMargin,
-
-    "q_spei" ->
-      s"""with $climSql,
-         |${solarSql("clim")},
-         |wbd as (
-         |  select k, d,
-         |    pr - greatest(0.0, 0.0023*(ra/1e6*0.408)*(tas + 17.8)
-         |      *sqrt(greatest((tas + 5.0) - (tas - 5.0), 0.0))) wb
-         |  from ra_
-         |),
-         |mon as (
-         |  select k, cast(date_trunc('month', d) as timestamp) m,
-         |    floor((avg(wb))*1e6 + 0.5)/1e6 wb
-         |  from wbd group by 1, 2
-         |),
-         |rolled as (
-         |  select k, m, rn, avg(wb) over (partition by k order by m
-         |    rows between 2 preceding and current row) wb
-         |  from (select *, row_number() over (partition by k order by m) rn from mon)
-         |  qualify rn >= 3
-         |),
-         |pooled as (select k, m, wb, month(m) pool, wb - (-50.0) x from rolled),
-         |fit as (
-         |  select k, pool,
-         |    floor((avg(x))*1e8 + 0.5)/1e8 m1,
-         |    floor((avg(x*x))*1e8 + 0.5)/1e8 m2
-         |  from pooled where x > 0 group by 1, 2
-         |),
-         |par as (
-         |  select k, pool, 2.0*pow(m1, 3)/(m2 + m1*m1) scale,
-         |    pi()*m1/(sqrt(3.0)*sqrt(m2 - m1*m1)) c
-         |  from fit
-         |),
-         |cdf_ as (
-         |  select p.k, p.m, p.wb,
-         |    1.0/(1.0 + pow(p.x/f.scale, -f.c)) cdf, p.x
-         |  from pooled p join par f on f.k = p.k and f.pool = p.pool
-         |)
-         |select k l_returnflag, m period,
-         |  floor((wb)*1e4 + 0.5)/1e4 wb3,
-         |  floor((case when x <= 0 then -8.21
-         |    else greatest(least(${probitSql("cdf")}, 8.21), -8.21) end
-         |   )*1e4 + 0.5)/1e4 spei
-         |from cdf_""".stripMargin
-  )
-
-  // ---- batch 39 (round 4): real image decode, non-standard calendars,
-  //      weighted ensemble percentiles -----------------------------------
-
-  private def queries39: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_image_decode_stats" -> ((s, dir) => {
-      // REAL image decode end-to-end: planted PNGs (pixel channel c of
-      // (x, y) = (id*7 + 3x + 5y + 11c) mod 256 — Multimodal.plantedPng)
-      // are PNG-encoded and DECODED executor-side by the JDK ImageIO
-      // decoder (pipeline/Multimodal.ImageIODecoder); decoded exact
-      // channel sums match the closed form the oracle computes over a
-      // generated pixel grid. Payload bytes never shuffle: generate,
-      // encode, decode and project all ride the scan partitioning.
-      val mk = udf((id: Long) => graft.pipeline.Multimodal.plantedPng(id, 16, 12))
-      val media = t(s, dir, "documents").filter(col("doc_id") % 25 === 0)
-        .select(col("doc_id").as("media_id"), lit("image").as("modality"),
-          mk(col("doc_id")).as("payload"))
-      graft.pipeline.Multimodal.extractFeatures(media)
-        .select(col("media_id"),
-          element_at(col("feature"), 1).cast("int").as("width"),
-          element_at(col("feature"), 2).cast("int").as("height"),
-          element_at(col("feature"), 3).cast("int").as("channels"),
-          // exact channel-sum ints / 192.0: single correctly-rounded
-          // division per channel — engine-exact unrounded
-          (element_at(col("feature"), 4).cast("double") / 192.0).as("mean_r"),
-          (element_at(col("feature"), 5).cast("double") / 192.0).as("mean_g"),
-          (element_at(col("feature"), 6).cast("double") / 192.0).as("mean_b"))
-    }),
-
-    "q_calendar_360day" -> ((s, dir) => {
-      // SURVEY §7 hard-part #1 demonstrated against an independent engine:
-      // a 360_day-calendar time axis carried as companion (year, doy)
-      // integer columns (core/Calendars.scala — Spark date functions are
-      // never touched), run through an anchored YS-JUL resample, 30-day
-      // month extraction and a doy conversion to the noleap calendar, all
-      // pure integer/Column math the oracle reproduces without date types.
-      import graft.core.Calendars
-      val e = t(s, dir, "events").select(col("event_id"), col("event_type"),
-        (col("value") / 40.0 - 8.0).as("tas"),
-        (lit(2001) + ((col("event_id") % 7200) / lit(360)).cast("int")).as("yr"),
-        (pmod(col("event_id"), lit(7200)) % 360 + 1).cast("int").as("doy"))
-      val cal = e
-        .withColumn("m360", Calendars.monthFromDoy(Calendars.Day360, col("doy"), col("yr")))
-        .withColumn("ys_jul", Calendars.anchoredYearNonStandard(
-          Calendars.Day360, col("yr"), col("doy"), anchorMonth = 7))
-        .withColumn("doy_noleap", Calendars.convertDoy(
-          col("doy"), col("yr"), Calendars.Day360, Calendars.NoLeap))
-      // mean over micro-quantized values: round(tas·1e6) is an exact long,
-      // so the group sum is order-independent and the oracle's differently-
-      // ordered summation cannot straddle a rounding boundary
-      cal.groupBy(col("event_type"), col("ys_jul"), col("m360"))
-        .agg(count(lit(1)).as("n_days"),
-          sum(uq(col("tas"), 1e6)).as("_sm"),
-          max(col("doy_noleap")).as("max_doy_noleap"),
-          min(col("doy_noleap")).as("min_doy_noleap"))
-        .select(col("event_type"), col("ys_jul"), col("m360"), col("n_days"),
-          (round(col("_sm").cast("double") / col("n_days")) / 1e6).as("mean_tas"),
-          col("max_doy_noleap"), col("min_doy_noleap"))
-    }),
-
-    "q_calendar_noleap_percentile" -> ((s, dir) => {
-      // noleap-calendar doy percentile across years — the non-standard twin
-      // of percentile_doy: every year contributes exactly one value per doy
-      // (no Feb-29 hole handling needed, that is the calendar's point), the
-      // per-doy p90 is taken across years, plus the doy mapped into the
-      // 360_day calendar (convert_doy, calendar.py:264).
-      import graft.core.Calendars
-      val e = t(s, dir, "events").select(
-        (col("value") / 40.0 - 8.0).as("tas"),
-        (lit(1991) + (pmod(col("event_id"), lit(3650)) / lit(365)).cast("int")).as("yr"),
-        (pmod(col("event_id"), lit(3650)) % 365 + 1).cast("int").as("doy"))
-      e.groupBy(col("doy"))
-        .agg(count(lit(1)).as("n_years"),
-          qk(percentile(col("tas"), lit(0.9)), 6).as("p90_tas"))
-        .withColumn("doy_360", Calendars.convertDoy(
-          col("doy"), lit(1991), Calendars.NoLeap, Calendars.Day360))
-        .select(col("doy"), col("n_years"), col("p90_tas"), col("doy_360"))
-    }),
-
-    "q_ensemble_percentiles_weighted" -> ((s, dir) => {
-      // ensemble_percentiles with member weights (ensembles/_base.py:214):
-      // per-day weighted quantiles over the member axis via the window-based
-      // cumulative-weight-grid interpolation (Ensembles.weightedPercentiles
-      // — one member-sort shuffle, unbounded member count; the array
-      // aggregate in Stats.weightedQuantile is O(n²) and would stall at
-      // thousands of members). Weights deterministic per member.
-      val daily = dailyTotals(s, dir)
-        .withColumn("w", (pmod(col("user_id"), lit(3)) + 1).cast("double"))
-      graft.ensembles.Ensembles.weightedPercentiles(
-          daily, Seq("d"), col("total"), col("w"), Seq(0.1, 0.5, 0.9))
-        .select(col("d"), qk(col("p10"), 6).as("p10"),
-          qk(col("p50"), 6).as("p50"), qk(col("p90"), 6).as("p90"))
-    }),
-
-    "q_kkz_selection" -> ((s, dir) => {
-      // KKZ greedy max-min ensemble reduction (_reduce.py:104): the
-      // distributed part builds the (members × criteria) matrix; the
-      // bounded driver-side greedy is hash-checked against a
-      // recursive-CTE replay of the same argmax chain. Integer-valued
-      // criteria make every distance comparison exact in both engines
-      // (sums of integers are order-independent); ties break by member
-      // id (collectCriteria sorts, the CTE orders by (dist, m)).
-      import graft.ensembles.Reduce
-      val crit = t(s, dir, "events")
-        .groupBy((col("user_id") % 40).cast("int").as("m"))
-        .agg(count(lit(1)).cast("double").as("c1"),
-          sum(floor(col("value") / 7.0)).cast("double").as("c2"))
-      val sel = Reduce.kkz(Reduce.collectCriteria(crit, "m", Seq("c1", "c2")), 4)
-      import s.implicits._
-      sel.zipWithIndex.map { case (m, i) => (i + 1, m) }.toDF("rank", "member")
-    }),
-
-    "q_kmeans_selection" -> ((s, dir) => {
-      // kmeans_reduce_ensemble (_reduce.py:177): Lloyd iterations from KKZ
-      // seeds (fully deterministic — same seeds, same tie-breaks), then the
-      // member nearest each final centroid. The oracle replays all 50
-      // update steps as a single-row recursive CTE whose new centroids are
-      // correlated aggregates over the criteria table; a converged fixed
-      // point is exact (rational centroids), so extra replay steps are
-      // no-ops and early Scala termination cannot diverge.
-      import graft.ensembles.Reduce
-      val crit = t(s, dir, "events")
-        .groupBy((col("user_id") % 40).cast("int").as("m"))
-        .agg(count(lit(1)).cast("double").as("c1"),
-          sum(floor(col("value") / 7.0)).cast("double").as("c2"))
-      val sel = Reduce.kmeansSelect(Reduce.collectCriteria(crit, "m", Seq("c1", "c2")), 3)
-      import s.implicits._
-      sel.zipWithIndex.map { case (m, i) => (i + 1, m) }.toDF("rank", "member")
-    })
-  )
-
-  private def oracle39: Map[String, String] = Map(
-
-    "q_image_decode_stats" ->
-      """select d.doc_id media_id, 16 width, 12 height, 3 channels,
-        |  cast(sum((d.doc_id*7 + x.i*3 + y.i*5) % 256) as double) / 192.0 mean_r,
-        |  cast(sum((d.doc_id*7 + x.i*3 + y.i*5 + 11) % 256) as double) / 192.0 mean_g,
-        |  cast(sum((d.doc_id*7 + x.i*3 + y.i*5 + 22) % 256) as double) / 192.0 mean_b
-        |from (select doc_id from documents where doc_id % 25 = 0) d
-        |cross join range(0, 16) x(i)
-        |cross join range(0, 12) y(i)
-        |group by 1""".stripMargin,
-
-    "q_calendar_360day" ->
-      """with e as (select event_id, event_type, value/40.0 - 8.0 tas,
-        |  cast(2001 + ((event_id % 7200) // 360) as int) yr,
-        |  cast(((event_id % 7200) % 360) + 1 as int) doy
-        | from events),
-        |cal as (select *, cast(((doy - 1) // 30) + 1 as int) m360 from e),
-        |cal2 as (select *,
-        |  cast(case when m360 >= 7 then yr else yr - 1 end as int) ys_jul,
-        |  cast(least(greatest(cast(round((doy - 0.5)/360.0*365.0 + 0.5) as int), 1), 365)
-        |    as int) doy_noleap
-        | from cal)
-        |select event_type, ys_jul, m360, count(*) n_days,
-        | round(cast(sum(cast(floor(tas*1e6 + 0.5) as bigint)) as double)/count(*))/1e6 mean_tas,
-        | max(doy_noleap) max_doy_noleap, min(doy_noleap) min_doy_noleap
-        |from cal2 group by 1, 2, 3""".stripMargin,
-
-    "q_calendar_noleap_percentile" ->
-      """with e as (select value/40.0 - 8.0 tas,
-        |  cast((event_id % 3650) % 365 + 1 as int) doy from events),
-        |g as (select doy, count(*) n_years,
-        |  floor((quantile_cont(tas, 0.9))*1e6 + 0.5)/1e6 p90_tas
-        | from e group by doy)
-        |select doy, n_years, p90_tas,
-        | cast(least(greatest(cast(round((doy - 0.5)/365.0*360.0 + 0.5) as int), 1), 360)
-        |   as int) doy_360
-        |from g""".stripMargin,
-
-    "q_ensemble_percentiles_weighted" ->
-      s"""with daily as ($dailySql),
-         |ww as (select d, total v, cast(user_id % 3 + 1 as double) w from daily),
-         |s as (select d, v, w,
-         |  sum(w) over (partition by d order by v, w
-         |    rows between unbounded preceding and current row) - w/2 cum,
-         |  sum(w) over (partition by d) tw,
-         |  row_number() over (partition by d order by v, w) rn
-         | from ww),
-         |g as (select d, v, rn, cum/tw grid from s),
-         |gg as (select *, lead(v) over (partition by d order by rn) nv,
-         |  lead(grid) over (partition by d order by rn) ng from g)
-         |select d,
-         | floor((coalesce(
-         |   max(case when grid <= 0.1 and (ng is null or ng > 0.1) then
-         |     case when ng is null then v else v + (0.1 - grid)/(ng - grid)*(nv - v) end end),
-         |   min(case when rn = 1 then v end)))*1e6 + 0.5)/1e6 p10,
-         | floor((coalesce(
-         |   max(case when grid <= 0.5 and (ng is null or ng > 0.5) then
-         |     case when ng is null then v else v + (0.5 - grid)/(ng - grid)*(nv - v) end end),
-         |   min(case when rn = 1 then v end)))*1e6 + 0.5)/1e6 p50,
-         | floor((coalesce(
-         |   max(case when grid <= 0.9 and (ng is null or ng > 0.9) then
-         |     case when ng is null then v else v + (0.9 - grid)/(ng - grid)*(nv - v) end end),
-         |   min(case when rn = 1 then v end)))*1e6 + 0.5)/1e6 p90
-         |from gg group by 1""".stripMargin,
-
-    "q_kkz_selection" ->
-      """with recursive crit as (
-        |  select cast(user_id % 40 as int) m,
-        |    cast(count(*) as double) c1, cast(sum(floor(value/7.0)) as double) c2
-        |  from events group by 1),
-        |cent as (select avg(c1) a1, avg(c2) a2 from crit),
-        |sel(n, ms) as (
-        |  select 1, [(select m from crit, cent
-        |              order by (c1-a1)*(c1-a1) + (c2-a2)*(c2-a2), m limit 1)]
-        |  union all
-        |  select n+1, list_append(ms, (
-        |    select c.m from crit c where not list_contains(ms, c.m)
-        |    order by (select min((c.c1-t.c1)*(c.c1-t.c1) + (c.c2-t.c2)*(c.c2-t.c2))
-        |              from crit t where list_contains(ms, t.m)) desc, c.m
-        |    limit 1))
-        |  from sel where n < 4)
-        |select cast(t.i as int) "rank", cast(ms[t.i] as int) member
-        |from (select ms from sel where n = 4), range(1, 5) t(i)""".stripMargin,
-
-    "q_kmeans_selection" -> {
-      // distances from a crit row c to current centroid i (correlated on
-      // the single-row recursive relation l)
-      def d(i: Int) = s"(c.c1-l.x$i)*(c.c1-l.x$i)+(c.c2-l.y$i)*(c.c2-l.y$i)"
-      // Lloyd assignment predicates with the Scala minBy tie-break
-      // (lowest centroid index wins ties)
-      val in1 = s"${d(1)} <= ${d(2)} and ${d(1)} <= ${d(3)}"
-      val in2 = s"not ($in1) and ${d(2)} <= ${d(3)}"
-      val in3 = s"not ($in1) and not (${d(2)} <= ${d(3)})"
-      def upd(pred: String, cCol: String, keep: String) =
-        s"coalesce((select avg(c.$cCol) from crit c where $pred), l.$keep)"
-      s"""with recursive crit as (
-         |  select cast(user_id % 40 as int) m,
-         |    cast(count(*) as double) c1, cast(sum(floor(value/7.0)) as double) c2
-         |  from events group by 1),
-         |cent as (select avg(c1) a1, avg(c2) a2 from crit),
-         |kkzsel(n, ms) as (
-         |  select 1, [(select m from crit, cent
-         |              order by (c1-a1)*(c1-a1) + (c2-a2)*(c2-a2), m limit 1)]
-         |  union all
-         |  select n+1, list_append(ms, (
-         |    select c.m from crit c where not list_contains(ms, c.m)
-         |    order by (select min((c.c1-t.c1)*(c.c1-t.c1) + (c.c2-t.c2)*(c.c2-t.c2))
-         |              from crit t where list_contains(ms, t.m)) desc, c.m
-         |    limit 1))
-         |  from kkzsel where n < 3),
-         |s0 as (select
-         |  (select c1 from crit where m = ms[1]) x1, (select c2 from crit where m = ms[1]) y1,
-         |  (select c1 from crit where m = ms[2]) x2, (select c2 from crit where m = ms[2]) y2,
-         |  (select c1 from crit where m = ms[3]) x3, (select c2 from crit where m = ms[3]) y3
-         | from (select ms from kkzsel where n = 3)),
-         |lloyd(it, x1, y1, x2, y2, x3, y3) as (
-         |  select 0, x1, y1, x2, y2, x3, y3 from s0
-         |  union all
-         |  select it + 1,
-         |    ${upd(in1, "c1", "x1")}, ${upd(in1, "c2", "y1")},
-         |    ${upd(in2, "c1", "x2")}, ${upd(in2, "c2", "y2")},
-         |    ${upd(in3, "c1", "x3")}, ${upd(in3, "c2", "y3")}
-         |  from lloyd l where it < 50),
-         |lf as (select * from lloyd where it = 50),
-         |picks as (
-         |  select 1 j, (select m from crit order by (c1-x1)*(c1-x1)+(c2-y1)*(c2-y1), m limit 1) mem from lf
-         |  union all
-         |  select 2, (select m from crit order by (c1-x2)*(c1-x2)+(c2-y2)*(c2-y2), m limit 1) from lf
-         |  union all
-         |  select 3, (select m from crit order by (c1-x3)*(c1-x3)+(c2-y3)*(c2-y3), m limit 1) from lf),
-         |ded as (select mem, min(j) mj from picks group by mem)
-         |select cast(row_number() over (order by mj) as int) "rank", cast(mem as int) member
-         |from ded""".stripMargin
-    }
-  )
-
-  private def queries40: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_audio_decode_stats" -> ((s, dir) => {
-      // REAL audio decode end-to-end: planted stereo PCM-16 WAVs (sample
-      // of frame i, channel ch = ((id*7 + 13i + 5ch) mod 201) - 100 —
-      // Multimodal.plantedWav) are RIFF-encoded and DECODED executor-side
-      // by the pure-JVM WAV byte parser (pipeline/Multimodal.WavDecoder).
-      // Decoded exact sums / peak / zero-crossing counts match the closed
-      // form the oracle computes over a generated sample grid. Payload
-      // bytes never shuffle: generate, decode and project ride the scan.
-      val mk = udf((id: Long) =>
-        graft.pipeline.Multimodal.plantedWav(id, (300 + (id % 7) * 20).toInt, 8000, 2))
-      val media = t(s, dir, "documents").filter(col("doc_id") % 25 === 0)
-        .select(col("doc_id").as("media_id"), lit("audio").as("modality"),
-          mk(col("doc_id")).as("payload"))
-      graft.pipeline.Multimodal.extractFeatures(media)
-        .select(col("media_id"),
-          element_at(col("feature"), 1).cast("int").as("sample_rate"),
-          element_at(col("feature"), 2).cast("int").as("channels"),
-          element_at(col("feature"), 3).cast("int").as("frames"),
-          element_at(col("feature"), 4).cast("long").as("sum_ch0"),
-          element_at(col("feature"), 5).cast("long").as("sum_abs_ch0"),
-          element_at(col("feature"), 6).cast("long").as("peak_abs"),
-          element_at(col("feature"), 7).cast("long").as("zero_crossings"),
-          element_at(col("feature"), 8).cast("double").as("duration_ms"))
-    }),
-
-    "q_audio_mp3_features" -> ((s, dir) => {
-      // mp3 energy-envelope features WITHOUT audio decode — the
-      // documented approximation for the one compressed audio format in
-      // scope (full Layer III synthesis = Huffman + IMDCT + filterbank,
-      // rejected as out of pure-JVM scope): per-frame VBR bitrates track
-      // where the encoder spent bits, so their envelope (sum/min/max and
-      // the minimum-bitrate frame count ≈ silence) is the filtering
-      // signal a training-data pipeline needs. Planted VBR payloads
-      // (bitrate index 1 + (id*3 + 5f) mod 14 — Multimodal
-      // .plantedMp3Vbr, ID3v2.4 footer + ID3v1 tail included) are walked
-      // executor-side by mp3FrameStats; payload bytes never shuffle.
-      val mk = udf((id: Long) =>
-        graft.pipeline.Multimodal.plantedMp3Vbr(id, (200 + (id % 5) * 40).toInt))
-      val st = udf((p: Array[Byte]) => graft.pipeline.Multimodal.mp3FrameStats(p))
-      t(s, dir, "documents").filter(col("doc_id") % 25 === 0)
-        .select(col("doc_id").as("media_id"), st(mk(col("doc_id"))).as("f"))
-        .select(col("media_id"),
-          element_at(col("f"), 1).cast("int").as("frames"),
-          element_at(col("f"), 2).cast("int").as("sample_rate"),
-          element_at(col("f"), 3).cast("long").as("sum_kbps"),
-          element_at(col("f"), 4).cast("int").as("min_kbps"),
-          element_at(col("f"), 5).cast("int").as("max_kbps"),
-          element_at(col("f"), 6).cast("long").as("silentish_frames"),
-          element_at(col("f"), 7).cast("long").as("duration_ms"))
-    }),
-
-    "q_video_frame_stats" -> ((s, dir) => {
-      // REAL video decode end-to-end: planted uncompressed AVIs (BI_RGB
-      // bottom-up DIB frames; channel c of pixel (x,y) in frame f =
-      // (id*7 + 3x + 5y + 17f + 11c) mod 256 — Multimodal.plantedAvi) are
-      // container-encoded and DECODED executor-side by the pure-JVM AVI
-      // parser (pipeline/Multimodal.AviDecoder): header walk (hdrl/strl),
-      // frame-chunk walk (movi), padded-row pixel reads. Cross-frame exact
-      // channel sums match the oracle's generated pixel grid.
-      val mk = udf((id: Long) => graft.pipeline.Multimodal.plantedAvi(id, 16, 12, 4, 25))
-      val media = t(s, dir, "documents").filter(col("doc_id") % 25 === 0)
-        .select(col("doc_id").as("media_id"), lit("video").as("modality"),
-          mk(col("doc_id")).as("payload"))
-      graft.pipeline.Multimodal.extractFeatures(media)
-        .select(col("media_id"),
-          element_at(col("feature"), 1).cast("int").as("width"),
-          element_at(col("feature"), 2).cast("int").as("height"),
-          element_at(col("feature"), 3).cast("int").as("frames"),
-          element_at(col("feature"), 4).cast("double").as("fps"),
-          element_at(col("feature"), 5).cast("long").as("sum_r"),
-          element_at(col("feature"), 6).cast("long").as("sum_g"),
-          element_at(col("feature"), 7).cast("long").as("sum_b"),
-          element_at(col("feature"), 8).cast("double").as("duration_ms"))
-    }),
-
-    "q_missing_wmo" -> ((s, dir) => {
-      // MissingWMO monthly diagnostics (missing.py:395) promoted from
-      // lib-only to oracle-checked: gaps planted into the daily climate
-      // substrate (months ≡ 0 mod 4 lose days 10-15 — a 6-day consecutive
-      // run ≥ nc; months ≡ 2 lose every 2nd day — ≥ 11 total missing ≥ nm;
-      // months ≡ 1 lose every 3rd day — ~10 missing, under BOTH limits;
-      // months ≡ 3 keep all days). Consecutive absences are derived from
-      // present-row date gaps + month-edge distances — no densify step.
-      val cd = climateDaily(s, dir)
-      val m4 = month(col("d")) % 4
-      val dom = dayofmonth(col("d"))
-      val planted = cd.filter(!((m4 === 0 && dom.between(10, 15)) ||
-        (m4 === 1 && dom % 3 === 0) || (m4 === 2 && dom % 2 === 0)))
-      graft.indicator.Missing.wmoMonthlyFlags(
-          planted, Seq("k"), col("d"), col("tas"))
-        .withColumn("max_miss_run", col("max_miss_run").cast("int"))
-    }),
-
-    "q_rate_amount_conversions" -> ((s, dir) => {
-      // The units.py converter-verb family (rate2amount :854, amount2rate
-      // :941, rate2flux :1109, amount2lwethickness :995) on a NON-UNIFORM
-      // time axis — the interesting path: each step's duration comes from
-      // the irregular event timestamps (lead diff, final step ffilled from
-      // the previous one). Both engines run the identical IEEE double
-      // sequence (rate = value/1000; x step_us/1e6), so no rounding is
-      // needed for hash parity.
-      import graft.core.Units
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val e = t(s, dir, "events").filter(col("user_id") % 50 === 0)
-        .withColumn("rate", col("value") / 1000.0)
-        .withColumn("step_s", Units.stepSeconds(unix_micros(col("ts")), w))
-        .filter(col("step_s").isNotNull && col("step_s") > 0)
-      e.select(col("user_id"), col("event_id"), col("step_s"),
-          Units.rate2amount(col("rate"), col("step_s")).as("amount"),
-          Units.rate2flux(col("rate"), 312.0).as("flux"),
-          Units.amount2lwethickness(
-            Units.rate2amount(col("rate"), col("step_s"))).as("lwe_mm"),
-          Units.amount2rate(
-            Units.rate2amount(col("rate"), col("step_s")), col("step_s")).as("rate_rt"))
-    }),
-
-    "q_fractional_uncertainty" -> ((s, dir) => {
-      // fractional_uncertainty (_partitioning.py:404) over the
-      // lafferty_sriver long frame: each component as % of total variance,
-      // total re-joined per time via a window (no extra shuffle).
-      val long = graft.ensembles.Partitioning.laffertySriver(
-        ensembleAnnual(s, dir), "y", "scenario", "model", "downscaling", "v",
-        smoothWindow = 3)
-      graft.ensembles.Partitioning.fractionalUncertainty(long, "y")
-        .select(col("y"), col("uncertainty"),
-          qk(col("variance"), 6).as("variance"),
-          qk(col("fraction_pct"), 4).as("fraction_pct"))
-    }),
-
-    "q_missing_indexed" -> ((s, dir) => {
-      // expected_count WITH a select_time indexer (missing.py:117-150) —
-      // the hard case: a WRAP-AROUND doy window (330..40) across leap
-      // years, so the per-year expected count is 76 or 77 by the calendar
-      // itself (generated day-sequence + filter, Time.expectedDaysSelected).
-      // Nulls planted on every 5th day-of-month; absent edge days (the
-      // substrate starts 1992-01-02, ends 1998-12-01) count as missing too.
-      import graft.core.Time
-      val planted = climateDaily(s, dir)
-        .withColumn("v", when(dayofmonth(col("d")) % 5 === 0, lit(null))
-          .otherwise(col("tas")))
-      graft.indicator.Missing.missingIndexed(
-          planted, Seq("k"), col("d"), col("v"), "YS",
-          d => Time.Select.doyBounds(d, 330, 40))
-        .select(col("k"), year(col("period")).as("y"), col("n_expected"),
-          col("n_valid"), col("n_missing"), col("missing_any"))
-    }),
-
-    "q_unit_conversions" -> ((s, dir) => {
-      // convert_units_to (units.py:334) promoted from lib-only to
-      // oracle-checked: the driver resolves each (from, to) pair to a
-      // (factor, offset) literal — offset temperatures, compound-symbol
-      // factors, and the hydro-context bridge (mm/d ↔ kg m-2 s-1 via
-      // water density) — applied as codegen'd scalar arithmetic. The
-      // oracle spells out the same literal expressions, so both engines
-      // run identical IEEE sequences (no rounding needed).
-      import graft.core.Units
-      t(s, dir, "events").select(col("event_id"),
-        Units.convert(col("value"), "degC", "K").as("t_k"),
-        Units.convert(col("value"), "degF", "degC").as("f_c"),
-        Units.convert(col("value"), "km/h", "m/s").as("wind_ms"),
-        Units.convert(col("value"), "mm/d", "kg m-2 s-1").as("pr_flux"),
-        Units.convert(col("value"), "hPa", "Pa").as("p_pa"))
-    }),
-
-    "q_missing_policies" -> ((s, dir) => {
-      // MissingPct + MissingAtLeastN side by side (missing.py:334/:366)
-      // over the same planted gap patterns as q_missing_wmo: per month,
-      // the pct policy flags when missing/expected > 10%, at_least_n when
-      // under 20 valid days — the two scalar policies that had only unit
-      // tests. Calendar expected counts from Time.expectedDays.
-      import graft.core.Time
-      val cd = climateDaily(s, dir)
-      val m4 = month(col("d")) % 4
-      val dom = dayofmonth(col("d"))
-      val planted = cd.filter(!((m4 === 0 && dom.between(10, 15)) ||
-        (m4 === 1 && dom % 3 === 0) || (m4 === 2 && dom % 2 === 0)))
-      planted
-        .groupBy(col("k"), Time.resamplePeriod(col("d"), "MS").as("period"))
-        .agg(count(lit(1)).as("n_valid"))
-        .withColumn("n_expected", Time.expectedDays(col("period"), "MS").cast("long"))
-        .select(col("k"), col("period").cast("date").as("m"),
-          col("n_expected"), col("n_valid"),
-          ((col("n_expected") - col("n_valid")).cast("double") / col("n_expected") > 0.1)
-            .as("missing_pct10"),
-          (col("n_valid") < 20).as("missing_atleast20"))
-    }),
-
-    "q_trigram_nll" -> ((s, dir) => {
-      // CCNet-style LM quality signal: char-trigram corpus LM -> per-doc
-      // mean negative log-likelihood (pipeline/TextStats.trigramNll).
-      // Micro-quantized per-trigram log-probs make the mean order-free,
-      // so the DuckDB twin (range-join trigram explode + the same join)
-      // hash-matches exactly.
-      graft.pipeline.TextStats.trigramNll(
-        t(s, dir, "documents").filter(col("doc_id") % 5 === 0), "doc_id", "text")
-    }),
-
-    "q_decontaminate" -> ((s, dir) => {
-      // Benchmark decontamination (pipeline/Dedup.decontaminate): corpus
-      // docs sharing any word 8-gram with the held-out "benchmark" slice
-      // (doc_id % 97 == 0) are flagged; every candidate appears with its
-      // collision count. Benchmark grams broadcast; corpus text never
-      // enters a shuffle.
-      val docs = t(s, dir, "documents")
-      graft.pipeline.Dedup.decontaminate(
-        docs.filter(col("doc_id") % 97 =!= 0), "doc_id", "text",
-        docs.filter(col("doc_id") % 97 === 0), n = 8)
-    }),
-
-    "q_repetition_signals" -> ((s, dir) => {
-      // Gopher repetition filters (TextStats.repetitionSignals): duplicate
-      // 3-gram fraction + top-3-gram mass per document — exact integer
-      // ratios, bit-identical across engines.
-      graft.pipeline.TextStats.repetitionSignals(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 0), "doc_id", "text")
-    }),
-
-    "q_season_groups" -> ((s, dir) => {
-      // split_time_to_season_year + add_season_coord (calendar.py): group
-      // by the season-anchored year (December → the FOLLOWING year's DJF)
-      // and the season label — season resampling as a plain groupBy, no
-      // date arithmetic downstream. Means micro-quantized (order-free).
-      import graft.core.Time
-      climateDaily(s, dir)
-        .groupBy(col("k"), Time.seasonYear(col("d")).as("sy"),
-          Time.seasonCoord(col("d")).as("season"))
-        .agg(count(lit(1)).as("n_days"),
-          sum(uq(col("tas"), 1e6)).as("_sm"))
-        .select(col("k"), col("sy"), col("season"), col("n_days"),
-          (round(col("_sm").cast("double") / col("n_days")) / 1e6).as("mean_tas"))
-    })
-  )
-
-  private def oracle40: Map[String, String] = Map(
-
-    "q_audio_decode_stats" ->
-      """with d as (select doc_id, cast(300 + (doc_id % 7) * 20 as int) frames
-        |  from documents where doc_id % 25 = 0),
-        |s as (select d.doc_id, d.frames, x.i,
-        |    ((d.doc_id*7 + x.i*13) % 201) - 100 s0,
-        |    ((d.doc_id*7 + x.i*13 + 5) % 201) - 100 s1
-        |  from d cross join range(0, 420) x(i)
-        |  where x.i < d.frames),
-        |z as (select *, lag(s0) over (partition by doc_id order by i) prev from s)
-        |select doc_id media_id, 8000 sample_rate, 2 channels, max(frames) frames,
-        |  cast(sum(s0) as bigint) sum_ch0,
-        |  cast(sum(abs(s0)) as bigint) sum_abs_ch0,
-        |  cast(max(greatest(abs(s0), abs(s1))) as bigint) peak_abs,
-        |  cast(sum(case when prev is not null and
-        |      (case when s0 >= 0 then 1 else 0 end) <> (case when prev >= 0 then 1 else 0 end)
-        |    then 1 else 0 end) as bigint) zero_crossings,
-        |  cast(max(frames) / 8.0 as double) duration_ms
-        |from z group by doc_id""".stripMargin,
-
-    "q_audio_mp3_features" ->
-      """with d as (select doc_id, cast(200 + (doc_id % 5) * 40 as int) frames
-        |  from documents where doc_id % 25 = 0),
-        |f as (select d.doc_id, d.frames,
-        |    list_extract([32,40,48,56,64,80,96,112,128,160,192,224,256,320],
-        |      cast(1 + ((d.doc_id*3 + x.i*5) % 14) as int)) kbps
-        |  from d cross join range(0, 400) x(i)
-        |  where x.i < d.frames),
-        |a as (select doc_id, max(frames) frames, sum(kbps) sum_kbps,
-        |    min(kbps) min_kbps, max(kbps) max_kbps
-        |  from f group by doc_id)
-        |select a.doc_id media_id, cast(a.frames as int) frames,
-        |  44100 sample_rate, cast(a.sum_kbps as bigint) sum_kbps,
-        |  cast(a.min_kbps as int) min_kbps, cast(a.max_kbps as int) max_kbps,
-        |  cast((select count(*) from f
-        |        where f.doc_id = a.doc_id and f.kbps = a.min_kbps) as bigint) silentish_frames,
-        |  cast(a.frames * 1152000 // 44100 as bigint) duration_ms
-        |from a""".stripMargin,
-
-    "q_video_frame_stats" ->
-      """select d.doc_id media_id, 16 width, 12 height, 4 frames,
-        |  cast(25 as double) fps,
-        |  cast(sum((d.doc_id*7 + x.i*3 + y.i*5 + f.i*17) % 256) as bigint) sum_r,
-        |  cast(sum((d.doc_id*7 + x.i*3 + y.i*5 + f.i*17 + 11) % 256) as bigint) sum_g,
-        |  cast(sum((d.doc_id*7 + x.i*3 + y.i*5 + f.i*17 + 22) % 256) as bigint) sum_b,
-        |  cast(160 as double) duration_ms
-        |from (select doc_id from documents where doc_id % 25 = 0) d
-        |cross join range(0, 16) x(i)
-        |cross join range(0, 12) y(i)
-        |cross join range(0, 4) f(i)
-        |group by 1""".stripMargin,
-
-    "q_missing_wmo" ->
-      s"""with $climSql,
-         |pres as (select k, d from clim
-         |  where not ((month(d) % 4 = 0 and dayofmonth(d) between 10 and 15)
-         |          or (month(d) % 4 = 1 and dayofmonth(d) % 3 = 0)
-         |          or (month(d) % 4 = 2 and dayofmonth(d) % 2 = 0))),
-         |g as (select k, cast(date_trunc('month', d) as date) m, d,
-         |        lag(d) over (partition by k, date_trunc('month', d) order by d) prev
-         |      from pres),
-         |mo as (select k, m, count(*) n_valid,
-         |         max(coalesce(date_diff('day', prev, d) - 1, 0)) midgap,
-         |         min(d) first_d, max(d) last_d
-         |       from g group by 1, 2),
-         |f as (select k, m, n_valid,
-         |        cast(dayofmonth(last_day(first_d)) as bigint) dim,
-         |        cast(greatest(midgap, dayofmonth(first_d) - 1,
-         |          dayofmonth(last_day(first_d)) - dayofmonth(last_d)) as int) maxmiss
-         |      from mo)
-         |select k, m "month", n_valid, dim - n_valid n_missing, maxmiss max_miss_run,
-         |  (dim - n_valid >= 11 or maxmiss >= 5) bad
-         |from f""".stripMargin,
-
-    "q_rate_amount_conversions" ->
-      """with e as (select user_id, event_id, value/1000.0 rate, epoch_us(ts) us
-        |  from events where user_id % 50 = 0),
-        |s as (select user_id, event_id, rate,
-        |    coalesce(lead(us) over w - us, us - lag(us) over w) step_us
-        |  from e window w as (partition by user_id order by us, event_id)),
-        |f as (select *, step_us/1e6 step_s from s
-        |      where step_us is not null and step_us > 0)
-        |select user_id, event_id, step_s,
-        |  rate*step_s amount, rate*312.0 flux, rate*step_s lwe_mm,
-        |  (rate*step_s)/step_s rate_rt
-        |from f""".stripMargin,
-
-    "q_fractional_uncertainty" ->
-      s"""with $ensembleAnnualSql,
-         |sm as (select *, avg(v) over w sm from ens
-         |  window w as (partition by scenario, model, downscaling order by y
-         |    rows between 1 preceding and 1 following)),
-         |nvr as (select *, var_pop(v - sm) over w nv from sm
-         |  window w as (partition by scenario, model, downscaling order by y
-         |    rows between 1 preceding and 1 following)),
-         |c_var as (select y, avg(nv) variance from nvr group by 1),
-         |scen1 as (select y, scenario, avg(sm) m from sm group by 1, 2),
-         |c_scen as (select y, var_pop(m) variance from scen1 group by 1),
-         |mod1 as (select y, scenario, downscaling, var_pop(sm) vv, count(*) w
-         |  from sm group by 1, 2, 3),
-         |c_mod as (select y, sum(vv*w)/sum(w) variance from mod1 group by 1),
-         |dwn1 as (select y, scenario, model, var_pop(sm) vv, count(*) w
-         |  from sm group by 1, 2, 3),
-         |c_dwn as (select y, sum(vv*w)/sum(w) variance from dwn1 group by 1),
-         |lng as (
-         |  select y, 'variability' uncertainty, variance from c_var
-         |  union all select y, 'scenario', variance from c_scen
-         |  union all select y, 'model', variance from c_mod
-         |  union all select y, 'downscaling', variance from c_dwn
-         |  union all
-         |  select v.y, 'total', v.variance + s.variance + m.variance + d.variance
-         |  from c_var v join c_scen s on s.y = v.y join c_mod m on m.y = v.y
-         |   join c_dwn d on d.y = v.y
-         |),
-         |tot as (select y, variance tv from lng where uncertainty = 'total')
-         |select l.y, l.uncertainty,
-         |  floor((l.variance)*1e6 + 0.5)/1e6 variance,
-         |  floor((l.variance / t.tv * 100)*1e4 + 0.5)/1e4 fraction_pct
-         |from lng l join tot t on t.y = l.y""".stripMargin,
-
-    "q_missing_indexed" ->
-      s"""with $climSql,
-         |p as (select k, year(d) y, dayofyear(d) doy,
-         |  case when dayofmonth(d) % 5 = 0 then null else tas end v from clim),
-         |sel as (select * from p where doy >= 330 or doy <= 40),
-         |agg as (select k, y, count(v) n_valid from sel group by 1, 2),
-         |ex as (select k, y, n_valid,
-         |  40 + (case when (y % 4 = 0 and y % 100 <> 0) or y % 400 = 0
-         |        then 366 else 365 end) - 330 + 1 n_expected
-         | from agg)
-         |select k, y, n_expected, n_valid, n_expected - n_valid n_missing,
-         |  (n_expected - n_valid) > 0 missing_any
-         |from ex""".stripMargin,
-
-    "q_unit_conversions" ->
-      """select event_id,
-        |  value + 273.15 t_k,
-        |  value * (5.0/9.0) + (cast(255.372222222222 as double)
-        |    - cast(273.15 as double)) f_c,
-        |  value * (1000.0/3600.0) wind_ms,
-        |  value * ((0.001/86400.0) * 1000.0) pr_flux,
-        |  value * 100.0 p_pa
-        |from events""".stripMargin,
-
-    "q_missing_policies" ->
-      s"""with $climSql,
-         |pres as (select k, d from clim
-         |  where not ((month(d) % 4 = 0 and dayofmonth(d) between 10 and 15)
-         |          or (month(d) % 4 = 1 and dayofmonth(d) % 3 = 0)
-         |          or (month(d) % 4 = 2 and dayofmonth(d) % 2 = 0))),
-         |mo as (select k, cast(date_trunc('month', d) as date) m,
-         |         count(*) n_valid from pres group by 1, 2)
-         |select k, m, cast(dayofmonth(last_day(m)) as bigint) n_expected, n_valid,
-         |  (cast(dayofmonth(last_day(m)) - n_valid as double)
-         |     / dayofmonth(last_day(m))) > 0.1 missing_pct10,
-         |  n_valid < 20 missing_atleast20
-         |from mo""".stripMargin,
-
-    "q_trigram_nll" ->
-      """with base as (select doc_id, lower(text) t from documents
-        |  where doc_id % 5 = 0 and length(text) >= 3),
-        |pos as (select doc_id, t, unnest(range(1, length(t) - 1)) i from base),
-        |tri as (select doc_id, substr(t, cast(i as int), 3) tg from pos),
-        |lm as (select tg, count(*) c from tri group by 1),
-        |tot as (select sum(c) n from lm),
-        |lp as (select doc_id,
-        |    cast(floor(ln(cast(c as double) / n) * 1e6 + 0.5) as bigint) lp
-        |  from tri join lm using (tg) cross join tot)
-        |select doc_id, count(*) n_trigrams,
-        |  -round(cast(sum(lp) as double) / count(*)) / 1e6 mean_nll
-        |from lp group by 1""".stripMargin,
-
-    "q_decontaminate" ->
-      """with toks as (select doc_id,
-        |    string_split_regex(lower(trim(text)), '\s+') tk from documents),
-        |cg as (select doc_id,
-        |    array_to_string(tk[cast(i as int):cast(i as int)+7], ' ') g
-        |  from (select doc_id, tk, unnest(range(1, len(tk) - 6)) i
-        |        from toks where doc_id % 97 <> 0)),
-        |bg as (select distinct
-        |    array_to_string(tk[cast(i as int):cast(i as int)+7], ' ') g
-        |  from (select tk, unnest(range(1, len(tk) - 6)) i
-        |        from toks where doc_id % 97 = 0)),
-        |hits as (select doc_id, count(*) n_collisions
-        |  from (select distinct doc_id, g from cg) c join bg using (g)
-        |  group by 1)
-        |select t.doc_id, coalesce(h.n_collisions, 0) n_collisions,
-        |  coalesce(h.n_collisions, 0) > 0 contaminated
-        |from (select distinct doc_id from toks where doc_id % 97 <> 0) t
-        |left join hits h using (doc_id)""".stripMargin,
-
-    "q_repetition_signals" ->
-      """with toks as (select doc_id,
-        |    string_split_regex(lower(trim(text)), '\s+') tk
-        |  from documents where doc_id % 3 = 0),
-        |grams as (select doc_id,
-        |    array_to_string(tk[cast(i as int):cast(i as int)+2], ' ') g
-        |  from (select doc_id, tk, unnest(range(1, len(tk) - 1)) i from toks)),
-        |cnt as (select doc_id, g, count(*) c from grams group by 1, 2)
-        |select doc_id, cast(sum(c) as bigint) n_ngrams,
-        |  1.0 - cast(count(*) as double) / sum(c) dup_ngram_frac,
-        |  cast(max(c) as double) / sum(c) top_ngram_frac
-        |from cnt group by 1""".stripMargin,
-
-    "q_season_groups" ->
-      s"""with $climSql,
-         |sg as (select k, tas,
-         |  cast(case when month(d) = 12 then year(d) + 1 else year(d) end as int) sy,
-         |  case when month(d) in (12, 1, 2) then 'DJF'
-         |       when month(d) in (3, 4, 5) then 'MAM'
-         |       when month(d) in (6, 7, 8) then 'JJA' else 'SON' end season
-         | from clim)
-         |select k, sy, season, count(*) n_days,
-         |  round(cast(sum(cast(floor(tas*1e6 + 0.5) as bigint)) as double)/count(*))/1e6 mean_tas
-         |from sg group by 1, 2, 3""".stripMargin
-  )
-
-  // ---- batch 41 (round 5): Zarr ingest ---------------------------------
-
-  private def queries41: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_zarr_strings" -> ((s, dir) => {
-      // Zarr v2 STRING ingest (sources/Zarr.readStrings) under the DuckDB
-      // gate: the planted store covers the three public string layouts —
-      // |O + numcodecs vlen-utf8 (zarr-python's text codec, multi-byte
-      // UTF-8), |S8 fixed bytes with edge chunks AND an absent chunk
-      // (→ NULL), >U5 big-endian UCS-4 — flattened to (src, idx, value)
-      // rows the oracle regenerates closed-form.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_strstore")
-      if (!new java.io.File(storeDir, "labels/.zarray").isFile)
-        graft.sources.Zarr.plantedStringStore(storeDir.getPath)
-      val store = storeDir.getPath
-      val labels = graft.sources.Zarr.readStrings(s, store, "labels")
-        .select(lit("labels").as("src"), col("doc").cast("long").as("idx"),
-          col("value"))
-      val tags = graft.sources.Zarr.readStrings(s, store, "tags")
-        .select(lit("tags").as("src"),
-          (col("i0").cast("long") * 3 + col("i1")).as("idx"), col("value"))
-      val names = graft.sources.Zarr.readStrings(s, store, "names")
-        .select(lit("names").as("src"), col("i0").cast("long").as("idx"),
-          col("value"))
-      labels.unionByName(tags).unionByName(names).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_bytes" -> ((s, dir) => {
-      // r11 codecs under the gate: |O + vlen-bytes BINARY payloads (zlib,
-      // one absent chunk → NULL, bytes deliberately not valid UTF-8 so a
-      // text-path misread cannot round-trip) evidenced as lowercase hex,
-      // and a Blosc chunk with the DELTA filter (flags 0x09: XOR against
-      // the first element, then byte-shuffle) carrying int64 counts. The
-      // oracle rebuilds hex strings and values from the closed forms.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_bytestore_v1")
-      if (!new java.io.File(storeDir, "payloads/.zarray").isFile)
-        graft.sources.Zarr.plantedBytesStore(storeDir.getPath)
-      val store = storeDir.getPath
-      val payloads = graft.sources.Zarr.readBinary(s, store, "payloads")
-        .select(lit("payloads").as("src"), col("doc").cast("long").as("idx"),
-          length(col("value")).cast("int").as("n_bytes"),
-          lower(hex(col("value"))).as("v"))
-      // the delta chunk was written by graft's own encoder, so the
-      // unverified-layout opt-in is sound here (and exercises the gate);
-      // capture happens at readVariable call time, so restoring the conf
-      // immediately after is safe
-      s.conf.set("spark.graft.blosc.allowUnverifiedDelta", "true")
-      val counts = try {
-        graft.sources.Zarr.readVariable(s, store, "counts")
-          .select(lit("counts").as("src"), col("i").cast("long").as("idx"),
-            lit(8).as("n_bytes"),
-            col("value").cast("long").cast("string").as("v"))
-      } finally s.conf.unset("spark.graft.blosc.allowUnverifiedDelta")
-      payloads.unionByName(counts).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_v3_strings" -> ((s, dir) => {
-      // r12: Zarr v3 string/bytes data types under the gate — plain
-      // vlen-utf8+gzip with an absent chunk, a SHARDED string array
-      // (inner vlen-utf8+zstd, crc32c'd index, one missing inner chunk),
-      // and a v3 `bytes` array (vlen-bytes+zstd+crc32c) evidenced as
-      // lowercase hex. The oracle rebuilds everything from closed forms.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_v3strstore_v1")
-      if (!new java.io.File(storeDir, "labels/zarr.json").isFile)
-        graft.sources.Zarr.plantedStringStoreV3(storeDir.getPath)
-      val store = storeDir.getPath
-      val labels = graft.sources.Zarr.readStrings(s, store, "labels")
-        .select(lit("labels").as("src"), col("doc").cast("long").as("idx"),
-          col("value").as("v"))
-      val tags = graft.sources.Zarr.readStrings(s, store, "tags")
-        .select(lit("tags").as("src"), col("doc").cast("long").as("idx"),
-          col("value").as("v"))
-      val blobs = graft.sources.Zarr.readBinary(s, store, "blobs")
-        .select(lit("blobs").as("src"), col("doc").cast("long").as("idx"),
-          lower(hex(col("value"))).as("v"))
-      labels.unionByName(tags).unionByName(blobs).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_msgpack" -> ((s, dir) => {
-      // r12: the other two numcodecs text-capable object codecs under the
-      // gate — msgpack2 (zlib, absent chunk → NULL, a python-None nil
-      // element) and json2 (gzip, escaped-quote + é escapes), plus
-      // msgpack bin8 BINARY payloads evidenced as lowercase hex. The
-      // decoder is additionally pinned to a hand-authored spec byte
-      // vector in ZarrSpec; the oracle rebuilds all values closed-form.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_msgpackstore_v1")
-      if (!new java.io.File(storeDir, "mlabels/.zarray").isFile)
-        graft.sources.Zarr.plantedMsgpackStore(storeDir.getPath)
-      val store = storeDir.getPath
-      val mlabels = graft.sources.Zarr.readStrings(s, store, "mlabels")
-        .select(lit("mlabels").as("src"), col("doc").cast("long").as("idx"),
-          col("value").as("v"))
-      val jlabels = graft.sources.Zarr.readStrings(s, store, "jlabels")
-        .select(lit("jlabels").as("src"), col("doc").cast("long").as("idx"),
-          col("value").as("v"))
-      val mblobs = graft.sources.Zarr.readBinary(s, store, "mblobs")
-        .select(lit("mblobs").as("src"), col("doc").cast("long").as("idx"),
-          lower(hex(col("value"))).as("v"))
-      mlabels.unionByName(jlabels).unionByName(mblobs).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_cf_write" -> ((s, dir) => {
-      // r14: the CF time-axis EXPORT under the gate (Zarr.writeCfTime —
-      // an <i8 array with units+calendar attrs, the form xr.decode_cf
-      // consumes): a standard axis encodes TIMESTAMPs as whole hours
-      // since 2000-01-01 (whole-steps discipline columnar), a julian
-      // axis writes pre-encoded companion offsets; both read back
-      // through readTimeCoordinate's decode. The oracle restates both
-      // closed forms — instants for the standard leg, (year, doy,
-      // us_of_day) via the julian cycle split for the other.
-      import s.implicits._
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_cfw_store_v1")
-      buildStoreOnce(storeDir, "tstd/.zarray") { d =>
-        val std = (0 until 6).map(i => (i, s"2000-01-01 0$i:00:00"))
-          .toDF("i", "ts")
-          .select(col("i"), to_timestamp(col("ts")).as("value"))
-        graft.sources.Zarr.writeCfTime(std, d.getPath, "tstd",
-          "hours since 2000-01-01", targetChunkElems = 4)
-        val jul = Seq((1900, 59, 0L), (1900, 60, 64800000000L),
-          (1904, 366, 0L), (2000, 1, 3600000000L)).zipWithIndex
-          .map { case ((y, doy, us), i) => (i, y, doy, us) }
-          .toDF("i", "y", "d", "u")
-          .select(col("i"), graft.sources.CfTime.encodeNonStandard(
-            col("y"), col("d"), col("u"),
-            "hours since 1900-01-01", "julian").as("value"))
-        graft.sources.Zarr.writeCfTime(jul, d.getPath, "tjul",
-          "hours since 1900-01-01", "julian", targetChunkElems = 4)
-      }
-      val std = graft.sources.Zarr
-        .readTimeCoordinate(s, storeDir.getPath, "tstd")
-        .select(lit("std").as("src"), col("i").cast("long").as("idx"),
-          year(col("time")).as("year"), dayofyear(col("time")).as("doy"),
-          (unix_micros(col("time")) % lit(86400000000L)).as("us_of_day"))
-      val jul = graft.sources.Zarr
-        .readTimeCoordinate(s, storeDir.getPath, "tjul")
-        .select(lit("jul").as("src"), col("i").cast("long").as("idx"),
-          col("year"), col("doy"), col("us_of_day"))
-      std.unionByName(jul).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_write_roundtrip" -> ((s, dir) => {
-      // r12: the corpus EXPORT path under the gate — writeStrings emits a
-      // |O + vlen-utf8 + zlib store from a closed-form frame (rows 12..15
-      // entirely absent → their chunk is never written → NULL on read;
-      // null inputs encode as "" per the numcodecs VLenUTF8 None
-      // convention), readStrings reads it back, the oracle restates the
-      // closed form.
-      import s.implicits._
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_wstr_store_v1")
-      if (!new java.io.File(storeDir, "labels/.zarray").isFile) {
-        val rows = (0 until 20).filter(t => t < 12 || t > 15).map { t =>
-          (t, if (t % 7 == 3) null else s"w${t}_µ")
-        }
-        graft.sources.Zarr.writeStrings(
-          rows.toDF("doc", "value"), storeDir.getPath, "labels",
-          targetChunkElems = 4)
-      }
-      graft.sources.Zarr.readStrings(s, storeDir.getPath, "labels")
-        .select(col("doc").cast("long").as("idx"), col("value").as("v"))
-        .orderBy("idx")
-    }),
-
-    "q_zarr_datetime" -> ((s, dir) => {
-      // r12: datetime64 ingest under the gate — <M8[ns] with a NaT and an
-      // absent chunk (both → NULL) plus >M8[s] zlib big-endian with a
-      // negative epoch value; exact Long micros conversion (the Double
-      // channel would round ns epochs past 2^53). The oracle states the
-      // instants literally.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_dt_store_v1")
-      if (!new java.io.File(storeDir, "t/.zarray").isFile)
-        graft.sources.Zarr.plantedDatetimeStore(storeDir.getPath)
-      val t = graft.sources.Zarr.readDatetimes(s, storeDir.getPath, "t")
-        .select(lit("t").as("src"), col("i").cast("long").as("idx"),
-          col("value").as("v"))
-      val ts = graft.sources.Zarr.readDatetimes(s, storeDir.getPath, "ts")
-        .select(lit("ts").as("src"), col("i").cast("long").as("idx"),
-          col("value").as("v"))
-      t.unionByName(ts).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_cf_pipeline" -> ((s, dir) => {
-      // r13: the full reference-user path end to end — open a store,
-      // decode its CF time axis (readTimeCoordinate), align it with a
-      // data variable BY POSITION (the xarray coordinate model), and
-      // aggregate per calendar year (a tx-days-above indicator shape +
-      // an exact-quarter annual sum). 2000 is a leap year, so the two
-      // years split 366/364 — the decode must get the calendar right
-      // for the group counts to match.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_cfpipe_store_v1")
-      buildStoreOnce(storeDir, "time/.zarray")(d =>
-        graft.sources.Zarr.plantedCfPipeStore(d.getPath))
-      val time = graft.sources.Zarr.readTimeCoordinate(s, storeDir.getPath, "time")
-      val tas = graft.sources.Zarr.readVariable(s, storeDir.getPath, "tas")
-      tas.join(time, "t")
-        .groupBy(year(col("time")).as("yr"))
-        .agg(coalesce(sum(when(col("value") > 2.5, 1L)), lit(0L)).as("n_hot"),
-          sum(col("value")).as("sum_tas"), count(lit(1)).as("n_days"))
-        .orderBy("yr")
-    }),
-
-    "q_cf_time_standard" -> ((s, dir) => {
-      // r13: CF-encoded time coordinates ("<step> since <epoch>" units —
-      // the encoding xarray writes for every time axis) under the gate,
-      // standard-calendar half: int days since 1850 (negative too) and
-      // fractional hours with an in-epoch time-of-day, both → TIMESTAMP
-      // via one deterministic floor-to-micros. The oracle restates the
-      // instants with the identical arithmetic.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_cftime_store_v2")
-      buildStoreOnce(storeDir, "tstd/.zarray")(d =>
-        graft.sources.Zarr.plantedCfTimeStore(d.getPath))
-      val tstd = graft.sources.Zarr.readTimeCoordinate(s, storeDir.getPath, "tstd")
-        .select(lit("tstd").as("src"), col("i").cast("long").as("idx"),
-          col("time").as("v"))
-      val thour = graft.sources.Zarr.readTimeCoordinate(s, storeDir.getPath, "thour")
-        .select(lit("thour").as("src"), col("i").cast("long").as("idx"),
-          col("time").as("v"))
-      tstd.unionByName(thour).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_cf_time_fixed" -> ((s, dir) => {
-      // r13: the fixed-length-calendar half — noleap and 360_day decode
-      // to the engine's (year, doy, us_of_day) companion columns (Spark
-      // date types can't carry these calendars); negative offsets carry
-      // into earlier years, the 360_day epoch sits mid-year at noon.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_cftime_store_v2")
-      buildStoreOnce(storeDir, "tstd/.zarray")(d =>
-        graft.sources.Zarr.plantedCfTimeStore(d.getPath))
-      val tnl = graft.sources.Zarr.readTimeCoordinate(s, storeDir.getPath, "tnl")
-        .select(lit("tnl").as("src"), col("i").cast("long").as("idx"),
-          col("year"), col("doy"), col("us_of_day"))
-      val t360 = graft.sources.Zarr.readTimeCoordinate(s, storeDir.getPath, "t360")
-        .select(lit("t360").as("src"), col("i").cast("long").as("idx"),
-          col("year"), col("doy"), col("us_of_day"))
-      tnl.unionByName(t360).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_cf_time_encode" -> ((s, dir) => {
-      // r14: the CF time ENCODE half (CfTime.encodeStandard /
-      // encodeNonStandard — what the export converters write): every
-      // l_shipdate encodes as exact integer days since 1992-01-01
-      // (whole-steps discipline enforced columnar), and a planted
-      // julian companion frame encodes as hours since 1900-01-01
-      // through the closed-form julian day count. Integer `div`
-      // (IntegralDivide) keeps the micros sums exact past 2^53. The
-      // oracle replays both closed forms.
-      import s.implicits._
-      val li = t(s, dir, "lineitem")
-      val std = li.select(graft.sources.CfTime.encodeStandard(
-          col("l_shipdate"), "days since 1992-01-01").as("v"))
-        .agg(count(lit(1)).as("n_rows"), min(col("v")).as("min_v"),
-          max(col("v")).as("max_v"), sum(col("v")).as("sum_v"))
-        .withColumn("src", lit("std"))
-      val planted = Seq((1900, 59, 0L), (1900, 60, 64800000000L),
-        (1904, 366, 0L), (2000, 1, 3600000000L)).toDF("y", "d", "u")
-      val jul = planted.select(graft.sources.CfTime.encodeNonStandard(
-          col("y"), col("d"), col("u"),
-          "hours since 1900-01-01", "julian").as("v"))
-        .agg(count(lit(1)).as("n_rows"), min(col("v")).as("min_v"),
-          max(col("v")).as("max_v"), sum(col("v")).as("sum_v"))
-        .withColumn("src", lit("jul"))
-      std.unionByName(jul)
-        .select(col("src"), col("n_rows"), col("min_v"), col("max_v"),
-          col("sum_v"))
-    }),
-
-    "q_netcdf_cf_write" -> ((s, dir) => {
-      // r15: the NetCDF leg of the CF time export half — the reverse
-      // converter writes a DECODABLE time axis (encodeStandard offsets
-      // + "days since" units + calendar attrs riding the classic
-      // header, NetCDF.cfTimeVar), mirroring what Zarr.writeCfTime does
-      // for Zarr. The oracle is the round trip itself: write a daily
-      // axis + per-day counts, read back through --decode-times
-      // (readTimeCoordinate → CfTime.decode), and the (timestamp,
-      // count) rows must equal the counts computed straight off the
-      // table — identity through encode → header → seek-write → decode.
-      import org.apache.spark.sql.expressions.Window
-      val li = t(s, dir, "lineitem")
-      val axis = li.select(col("l_shipdate").cast("timestamp").as("ts"))
-        .distinct()
-        .withColumn("idx", row_number().over(Window.orderBy(col("ts"))) - 1)
-      val counts = li.groupBy(col("l_shipdate").cast("timestamp").as("ts"))
-        .agg(count(lit(1)).cast("double").as("value"))
-        .join(axis, "ts")
-        .select(col("idx").as("time"), col("value"))
-      val n = axis.count().toInt
-      val tmp = java.nio.file.Files.createTempDirectory("graft_nccf_q_")
-      val nc = tmp.toString + "/t.nc"
-      graft.sources.NetCDF.writeClassic(s, nc, Seq(("time", n)),
-        Seq(graft.sources.NetCDF.cfTimeVar("time", axis, "idx", "ts",
-            "days since 1992-01-01"),
-          graft.sources.NetCDF.WriteVar("n_ship", Seq("time"), counts)))
-      val lake = tmp.toString + "/lake"
-      graft.sources.NetCDF.toParquetLake(s, nc, lake, decodeTimes = true)
-      val out = s.read.parquet(s"$lake/n_ship")
-        .select(col("time_coord_time").as("ship_ts"),
-          col("value").cast("long").as("n_ship"))
-        .localCheckpoint(true) // one row per ship date; the files can go
-      graft.sources.FsIo.delete(
-        s.sparkContext.hadoopConfiguration, tmp.toString)
-      out
-    }),
-
-    "q_cf_time_julian" -> ((s, dir) => {
-      // r14: the julian CF calendar (every 4th year leap, CENTURIES
-      // included — cftime's DatetimeJulian) decodes to the same
-      // (year, doy, us_of_day) companion form, closed-form over the
-      // fixed 1461-day 4-year cycle. The planted axis pins the century
-      // leap (1900-02-29 exists), midnight walk-back, and a 731-day
-      // carry across the 366-day 1900; the oracle replays the integer
-      // cycle split.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_cftime_store_v2")
-      buildStoreOnce(storeDir, "tstd/.zarray")(d =>
-        graft.sources.Zarr.plantedCfTimeStore(d.getPath))
-      graft.sources.Zarr.readTimeCoordinate(s, storeDir.getPath, "tjul")
-        .select(col("i").cast("long").as("idx"),
-          col("year"), col("doy"), col("us_of_day"))
-        .orderBy(col("idx"))
-    }),
-
-    "q_zarr_temporal_roundtrip" -> ((s, dir) => {
-      // r13: the temporal EXPORT twins under the gate — writeDatetimes
-      // (<M8[us]; null input → NaT at 3; rows 6..8 sit in a never-written
-      // chunk → NULL; row 9 absent within a written chunk → NaT) and
-      // writeTimedeltas (<m8[us], negative + null durations), both read
-      // back through the exact-Long readers. The oracle restates the
-      // closed forms; intervals are evidenced epoch-anchored.
-      import s.implicits._
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_wtmp_store_v1")
-      buildStoreOnce(storeDir, "ts/.zarray") { d =>
-        val base = java.time.Instant.parse("2010-06-01T00:00:00Z")
-        val tsRows = (0 until 12).filter(t => t < 6 || t > 9).map { t =>
-          (t, if (t == 3) null
-              else java.sql.Timestamp.from(
-                base.plusSeconds(t * 3661L).plusNanos(t * 1000L)))
-        }
-        graft.sources.Zarr.writeDatetimes(
-          tsRows.toDF("i", "value"), d.getPath, "ts", targetChunkElems = 3)
-        val tdRows = (0 until 6).map { t =>
-          (t, if (t == 2) null
-              else java.time.Duration.ofMillis((t - 3) * 90061123L))
-        }
-        graft.sources.Zarr.writeTimedeltas(
-          tdRows.toDF("i", "value"), d.getPath, "td", targetChunkElems = 6)
-      }
-      val epoch = to_timestamp(lit("1970-01-01 00:00:00"))
-      val ts = graft.sources.Zarr.readDatetimes(s, storeDir.getPath, "ts")
-        .select(lit("ts").as("src"), col("i").cast("long").as("idx"),
-          col("value").as("v"))
-      val td = graft.sources.Zarr.readTimedeltas(s, storeDir.getPath, "td")
-        .select(lit("td").as("src"), col("i").cast("long").as("idx"),
-          (epoch + col("value")).as("v"))
-      ts.unionByName(td).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_vectors_topk" -> ((s, dir) => {
-      // r13: the embedding-matrix round trip feeding the ANN tier — the
-      // embeddings table exports to a 2-D <f8 store (writeArray over the
-      // (vec_id, pos) long format), reads back as whole-vector rows
-      // (readVectors), and scores brute-force top-5 by the integer-grid
-      // cosine. The oracle replays straight off the parquet table, so
-      // export + vector read + similarity pin each other end to end.
-      // The store is PER-SF (its contents depend on the input dir).
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_zarr_vec_store_${safe}_v1")
-      buildStoreOnce(storeDir, "emb/.zarray") { d =>
-        val long = t(s, dir, "embeddings")
-          .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "value")))
-          .select(col("vec_id"), col("pos"), col("value").cast("double").as("value"))
-        graft.sources.Zarr.writeArray(long, d.getPath, "emb")
-      }
-      val vecs = graft.sources.Zarr.readVectors(s, storeDir.getPath, "emb")
-      val q = vecs.filter(col("vec_id") === 0).select(col("vec").as("qv"))
-      vecs.crossJoin(broadcast(q))
-        .withColumn("cosine", Similarity.cosineQuantized(col("vec"), col("qv")))
-        .orderBy(col("cosine").desc, col("vec_id")).limit(5)
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("cosine").desc, col("vec_id"))))
-        .select(col("rank"), col("vec_id").cast("long").as("vec_id"), col("cosine"))
-    }),
-
-    "q_zarr_datetime_filtered" -> ((s, dir) => {
-      // r13: the two temporal ingest paths the r12 reader loud-rejected —
-      // a Delta(i8)-filtered <M8[s] array (the canonical zarr-python
-      // recipe for monotonic time coordinates; NaT at 7 pins the wrap
-      // through the sentinel, chunk 2 absent → NULL) and a v3 SHARDED
-      // numpy.datetime64[us] array (missing inner chunk, NaT, edge
-      // clipping). The oracle states the instants closed-form.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_temporal_store_v1")
-      buildStoreOnce(storeDir, "tf/.zarray")(d =>
-        graft.sources.Zarr.plantedTemporalStore(d.getPath))
-      val tf = graft.sources.Zarr.readDatetimes(s, storeDir.getPath, "tf")
-        .select(lit("tf").as("src"), col("i").cast("long").as("idx"),
-          col("value").as("v"))
-      val tsh = graft.sources.Zarr.readDatetimes(s, storeDir.getPath, "tsh")
-        .select(lit("tsh").as("src"), col("i").cast("long").as("idx"),
-          col("value").as("v"))
-      tf.unionByName(tsh).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_timedelta" -> ((s, dir) => {
-      // r13: timedelta64 → DayTimeIntervalType (exact-Long micros; NaT
-      // and absent chunks → NULL). Intervals don't survive the parquet/
-      // DuckDB comparison channel, so the evidence column anchors each
-      // duration to the epoch — TIMESTAMP compares exactly and pins the
-      // interval's micros through an independent engine. The INTERVAL
-      // schema itself is asserted in ZarrSpec.
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_temporal_store_v1")
-      buildStoreOnce(storeDir, "tf/.zarray")(d =>
-        graft.sources.Zarr.plantedTemporalStore(d.getPath))
-      val epoch = to_timestamp(lit("1970-01-01 00:00:00"))
-      val td = graft.sources.Zarr.readTimedeltas(s, storeDir.getPath, "td")
-        .select(lit("td").as("src"), col("i").cast("long").as("idx"),
-          (epoch + col("value")).as("v"))
-      val tdm = graft.sources.Zarr.readTimedeltas(s, storeDir.getPath, "tdm")
-        .select(lit("tdm").as("src"), col("i").cast("long").as("idx"),
-          (epoch + col("value")).as("v"))
-      td.unionByName(tdm).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_write_v3" -> ((s, dir) => {
-      // r12: the Zarr V3 export twins under the gate — writeArrayV3
-      // (float64, [bytes le, gzip] codecs, c/<i> default keys, exact
-      // binary quarters so values compare exactly) and writeStringsV3
-      // (data_type string, [vlen-utf8, gzip]); both read back through
-      // the v3 reader. Rows 6..8 / 0..3 sit in never-written chunks →
-      // NULL; the t=5 null input round-trips as "".
-      import s.implicits._
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_w3_store_v1")
-      if (!new java.io.File(storeDir, "vals/zarr.json").isFile) {
-        val nums = (0 until 12).filter(t => t < 6 || t > 8)
-          .map(t => (t, (3.0 * t - 5.0) / 4.0))
-        graft.sources.Zarr.writeArrayV3(
-          nums.toDF("t", "value"), storeDir.getPath, "vals", targetChunkElems = 3)
-        val strs = (4 until 10).map(t =>
-          (t, if (t == 5) null else s"v3w_${t}_σ"))
-        graft.sources.Zarr.writeStringsV3(
-          strs.toDF("doc", "value"), storeDir.getPath, "labels", targetChunkElems = 4)
-      }
-      val vals = graft.sources.Zarr.readVariable(s, storeDir.getPath, "vals")
-        .select(lit("vals").as("src"), col("t").cast("long").as("idx"),
-          col("value").cast("string").as("v"))
-      val labels = graft.sources.Zarr.readStrings(s, storeDir.getPath, "labels")
-        .select(lit("labels").as("src"), col("doc").cast("long").as("idx"),
-          col("value").as("v"))
-      vals.unionByName(labels).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_zarr_ingest" -> ((s, dir) => {
-      // Zarr v2 ingest end-to-end against an independent engine: a planted
-      // closed-form store (sources/Zarr.plantedStore — zlib chunks, partial
-      // edge chunks, one ABSENT chunk = fill, CF scale/offset/fill unpack,
-      // _ARRAY_DIMENSIONS naming) is read chunk-parallel by the Zarr
-      // source and aggregated per time step; the oracle regenerates the
-      // same grid arithmetically. Values are exact binary halves (scale
-      // 0.5), so sums compare exactly without rounding.
-      // fixed tmp location, written once and reused (the bench runs this
-      // n× per round; a fresh createTempDirectory per call leaked stores)
-      val storeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_zarr_store")
-      if (!new java.io.File(storeDir, "pr/.zarray").isFile)
-        graft.sources.Zarr.plantedStore(storeDir.getPath)
-      val store = storeDir.getPath
-      val tas = graft.sources.Zarr.readVariable(s, store, "tas")
-        .groupBy(col("time"))
-        .agg(count(col("value")).as("n_valid"),
-          sum(col("value")).as("sum_tas"),
-          min(col("value")).as("min_tas"),
-          max(col("value")).as("max_tas"))
-      // pr is stored with the xarray-default Blosc/lz4/shuffle codec —
-      // this half of the join hash-checks the compressed-chunk decode
-      val pr = graft.sources.Zarr.readVariable(s, store, "pr")
-        .groupBy(col("time"))
-        .agg(sum(col("value")).as("sum_pr"))
-      tas.join(pr, Seq("time"))
-        .select(col("time"), col("n_valid"), col("sum_tas"),
-          col("min_tas"), col("max_tas"), col("sum_pr"))
-    }),
-
-    "q_hdf5_ingest" -> ((s, dir) => {
-      // HDF5 ("latest" format) ingest under the DuckDB gate: a planted
-      // closed-form file (sources/Hdf5Planted — implicit chunk index
-      // with edge padding the reader must clip, CF fill/scale/offset,
-      // fixed-string, compound and VLEN-sequence datasets) is read
-      // through all four typed paths and joined per time index; the
-      // oracle regenerates the grid arithmetically. Values are exact
-      // binary halves/quarters.
-      // Fixed tmp location, written once and reused across bench passes.
-      val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_planted_h5_v4.h5")
-      if (!f.isFile) graft.sources.Hdf5Planted.write(f.getPath)
-      val temp = graft.sources.Hdf5.readVariable(s, f.getPath, "temp")
-        .groupBy(col("i0"))
-        .agg(count(col("value")).as("n_valid"),
-          sum(col("value")).as("sum_temp"))
-      val label = graft.sources.Hdf5.readStrings(s, f.getPath, "label")
-        .select(col("i0"), col("value").as("label"))
-      val stn = graft.sources.Hdf5.readCompound(s, f.getPath, "station")
-        .select(col("i0"), col("id"), col("w"))
-      val samp = graft.sources.Hdf5.readVlen(s, f.getPath, "samples")
-        .select(col("i0"), size(col("value")).as("n_samp"),
-          aggregate(col("value"), lit(0.0), (a, x) => a + x).as("sum_samp"))
-      temp.join(label, Seq("i0")).join(stn, Seq("i0")).join(samp, Seq("i0"))
-        .select(col("i0"), col("n_valid"), col("sum_temp"), col("label"),
-          col("id"), col("w"), col("n_samp"), col("sum_samp"))
-        .orderBy("i0")
-    }),
-
-    "q_hdf5_nested" -> ((s, dir) => {
-      // NESTED compound + ARRAY members through the recursive datatype
-      // walk (Hdf5Planted `track`: {id int32, pos {x,y} struct, v
-      // double[3]}): struct members project as dotted columns, the array
-      // member folds/indexes with the array functions. Closed binary
-      // forms (halves/eighths) keep both engines exact.
-      val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_planted_h5_v4.h5")
-      if (!f.isFile) graft.sources.Hdf5Planted.write(f.getPath)
-      graft.sources.Hdf5.readCompound(s, f.getPath, "track")
-        .select(col("i0").as("t"), col("id"),
-          col("pos.x").as("x"), col("pos.y").as("y"),
-          aggregate(col("v"), lit(0.0), (a, e) => a + e).as("v_sum"),
-          element_at(col("v"), 3).as("v_last"))
-        .orderBy("t")
-    }),
-
-    "q_hdf5_nested_vlen" -> ((s, dir) => {
-      // r12: one-level NESTED VLEN bases under the gate — `lists`
-      // VLEN(vlen str) reads ARRAY<STRING> (h5py vlen=str list columns),
-      // `mats` VLEN(VLEN(int32)) reads ARRAY<ARRAY<LONG>>; both planted
-      // byte-by-byte (Hdf5PlantedNestedVlen) with empty outer cells,
-      // empty inner strings and empty inner rows. Arrays are evidenced
-      // as '|'-joined text so the oracle states them literally.
-      val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_planted_nested_vlen_v1.h5")
-      if (!f.isFile) graft.sources.Hdf5PlantedNestedVlen.write(f.getPath)
-      val lists = graft.sources.Hdf5.readVlen(s, f.getPath, "lists")
-        .select(lit("lists").as("src"), col("i0").cast("int").as("idx"),
-          size(col("value")).as("n"),
-          concat_ws("|", col("value")).as("v"))
-      val mats = graft.sources.Hdf5.readVlen(s, f.getPath, "mats")
-        .select(lit("mats").as("src"), col("i0").cast("int").as("idx"),
-          size(col("value")).as("n"),
-          concat_ws("|", transform(col("value"),
-            r => concat_ws(",", transform(r, e => e.cast("string"))))).as("v"))
-      lists.unionByName(mats).orderBy(col("src"), col("idx"))
-    }),
-
-    "q_hdf5_szip" -> ((s, dir) => {
-      // szip (CCSDS 121.0-B) filtered ingest under the DuckDB gate: the
-      // planted single-chunk file (Hdf5PlantedSzip — NN preprocessing,
-      // 13 pixels/scanline deliberately NOT a multiple of the 8-pixel
-      // block, pinning libaec's ceil-divide reference intervals) decodes
-      // through the standard defilter path; the oracle regenerates the
-      // closed form (3t²+7t) mod 97 arithmetically. Integer-valued
-      // doubles — exact in both engines.
-      val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_planted_szip_v1.h5")
-      if (!f.isFile) graft.sources.Hdf5PlantedSzip.write(f.getPath)
-      graft.sources.Hdf5.readVariable(s, f.getPath, "counts")
-        .select(col("i0").cast("long").as("i0"), col("value"))
-        .orderBy("i0")
-    }),
-
-    "q_hdf5_nbit" -> ((s, dir) => {
-      // nbit (filter 5) ingest under the DuckDB gate: the planted
-      // single-chunk file (Hdf5PlantedNbit — int16 with 12-bit precision,
-      // 48·12 bits packed MSB-first so element boundaries land mid-byte
-      // every third sample) decodes through the standard defilter path;
-      // the oracle regenerates the closed form (5t²+11t) mod 83
-      // arithmetically. Integer-valued doubles — exact in both engines.
-      val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_planted_nbit_v1.h5")
-      if (!f.isFile) graft.sources.Hdf5PlantedNbit.write(f.getPath)
-      graft.sources.Hdf5.readVariable(s, f.getPath, "sensor")
-        .select(col("i0").cast("long").as("i0"), col("value"))
-        .orderBy("i0")
-    }),
-
-    "q_hdf5_scaleoffset" -> ((s, dir) => {
-      // scaleoffset (filter 6) ingest under the DuckDB gate — the packing
-      // netCDF-4 least_significant_digit variables carry. The planted file
-      // (Hdf5PlantedScaleoffset) holds BOTH variants: packed_i16 (integer
-      // scale, auto minbits, negative minimum exercising the signed
-      // minval) and packed_f64 (D-scale, 2 digits, fill −999 riding the
-      // reserved all-ones code). Values live on the centi-grid so decode
-      // is bit-exact and the oracle replays both closed forms.
-      val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_planted_scaleoffset_v1.h5")
-      if (!f.isFile) graft.sources.Hdf5PlantedScaleoffset.write(f.getPath)
-      val i16 = graft.sources.Hdf5.readVariable(s, f.getPath, "packed_i16")
-        .select(lit("i16").as("src"), col("i0").cast("long").as("i0"),
-          col("value"))
-      val f64 = graft.sources.Hdf5.readVariable(s, f.getPath, "packed_f64")
-        .select(lit("f64").as("src"), col("i0").cast("long").as("i0"),
-          col("value"))
-      i16.unionByName(f64).orderBy("src", "i0")
-    }),
-
-    "q_image_decode_jpeg" -> ((s, dir) => {
-      // LOSSY decode pinned by a closed-form oracle: uniform-colour JPEGs
-      // (Multimodal.plantedJpeg — channel values are id-derived multiples
-      // of 16) are encoded and DECODED executor-side by ImageIO's JPEG
-      // codec; uniform images decode within a couple of grey levels, so
-      // each channel mean quantised to round(mean/16) provably equals the
-      // planted value regardless of codec rounding. Complements
-      // q_image_decode_stats (exact PNG) with the codec real corpora
-      // actually carry.
-      val mk = udf((id: Long) => graft.pipeline.Multimodal.plantedJpeg(id, 16, 12))
-      val media = t(s, dir, "documents").filter(col("doc_id") % 40 === 0)
-        .select(col("doc_id").as("media_id"), lit("image").as("modality"),
-          mk(col("doc_id")).as("payload"))
-      graft.pipeline.Multimodal.extractFeatures(media)
-        .select(col("media_id"),
-          element_at(col("feature"), 1).cast("int").as("width"),
-          element_at(col("feature"), 2).cast("int").as("height"),
-          element_at(col("feature"), 3).cast("int").as("channels"),
-          round(element_at(col("feature"), 4).cast("double") / 192.0 / 16.0)
-            .cast("int").as("q_r"),
-          round(element_at(col("feature"), 5).cast("double") / 192.0 / 16.0)
-            .cast("int").as("q_g"),
-          round(element_at(col("feature"), 6).cast("double") / 192.0 / 16.0)
-            .cast("int").as("q_b"))
-    }),
-
-    "q_jaccard_postings_dfcut" -> ((s, dir) => {
-      // the inverted-index Jaccard join behind the df-ordered PREFIX
-      // filter (AllPairs/SSJoin): only each doc's |d|−⌈t|d|⌉+1 rarest
-      // trigrams are indexed, the prefix-to-prefix equi-join (plus the
-      // t·max ≤ min size prune) generates candidates, and every candidate
-      // is verified with an EXACT J over the full shingle sets. The
-      // prefix filter is LOSSLESS — the r7 absolute df-cut it replaces
-      // both failed to prune at sf0.1 (df ≤ 20 kept 99.8% of postings)
-      // and lost recall as df grew with the corpus — so the oracle is
-      // simply the exhaustive Jaccard join: the hash check pins that the
-      // pruned plan emits exactly the full answer.
-      Dedup.jaccardPairsByIndex(
-          t(s, dir, "documents").withColumn("blk", lit(1)),
-          "doc_id", "text", Seq("blk"), ngram = 3, threshold = 0.6)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-    }),
-
-    "q_media_metadata" -> ((s, dir) => {
-      // Compressed-container metadata WITHOUT a codec — the formats the
-      // JDK cannot decode still yield the fields corpus filtering keys
-      // on. Planted MPEG1 Layer-III streams (Multimodal.plantedMp3:
-      // 128 kbps / 44.1 kHz, frames = 200 + id%9·25, alternating padding
-      // bit, ID3v2 head + ID3v1 tail) and ISO-BMFF boxes (plantedMp4:
-      // timescale-1000 mvhd, 16.16 tkhd geometry) are parsed executor-
-      // side by frame-header / box-tree walks (Multimodal.mp3Meta /
-      // mp4Meta via extractMediaMeta — a narrow mapPartitions kernel, so
-      // payload bytes never shuffle). Duration, rate, nominal bitrate,
-      // byte size and geometry all match the closed forms the oracle
-      // computes from (id) alone.
-      val mkMp3 = udf((id: Long) =>
-        graft.pipeline.Multimodal.plantedMp3(id, (200 + (id % 9) * 25).toInt))
-      val mkMp4 = udf((id: Long) => graft.pipeline.Multimodal.plantedMp4(
-        id, (320 + (id % 5) * 16).toInt, (240 + (id % 3) * 16).toInt,
-        1000 + (id % 11) * 250))
-      val docs = t(s, dir, "documents")
-      val audio = docs.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("media_id"), lit("audio").as("modality"),
-          mkMp3(col("doc_id")).as("payload"))
-      val video = docs.filter(col("doc_id") % 50 === 25)
-        .select(col("doc_id").as("media_id"), lit("video").as("modality"),
-          mkMp4(col("doc_id")).as("payload"))
-      graft.pipeline.Multimodal.extractMediaMeta(audio.unionByName(video))
-    }),
-
-    "q_video_keyframes" -> ((s, dir) => {
-      // ISO-BMFF sample-table index WITHOUT a codec: stsz size envelope +
-      // stss keyframe cadence from planted containers
-      // (Multimodal.plantedMp4Indexed — sizes 200 + (id·11+k·17) mod 100
-      // over n = 30 + (id mod 7)·10 samples, sync samples every
-      // g = 5 + id mod 4), parsed executor-side by the stbl box walk
-      // (mp4SampleIndex via extractVideoIndex — narrow mapPartitions,
-      // payloads never shuffle). The oracle regenerates every feature
-      // from (id) with a generated series.
-      val mk = udf((id: Long) => graft.pipeline.Multimodal.plantedMp4Indexed(id))
-      val vids = t(s, dir, "documents").filter(col("doc_id") % 50 === 25)
-        .select(col("doc_id").as("media_id"), mk(col("doc_id")).as("payload"))
-      graft.pipeline.Multimodal.extractVideoIndex(vids)
-    }),
-
-    "q_pii_redaction" -> ((s, dir) => {
-      // PII scrub over the corpus: emails / dashed phones / IPv4 quads
-      // planted deterministically from doc_id (the word-salad corpus has
-      // none of its own), counted and redacted with typed placeholders —
-      // pure regexp Column expressions (TextStats.piiEmails/redactPii),
-      // codegen'd, patterns portable between Java regex and RE2 so the
-      // oracle replays the identical replacement. The redacted STRING
-      // itself is hash-compared, not just the counts.
-      import graft.pipeline.TextStats
-      val planted = concat(col("text"),
-        when(col("doc_id") % 4 === 0,
-          concat(lit(" reach user"), col("doc_id").cast("string"), lit("@mail"),
-            (col("doc_id") % 3).cast("string"), lit(".org now"))).otherwise(lit("")),
-        when(col("doc_id") % 5 === 0,
-          concat(lit(" call 555-010-"),
-            lpad((col("doc_id") % 10000).cast("string"), 4, "0"))).otherwise(lit("")),
-        when(col("doc_id") % 3 === 0,
-          concat(lit(" from 10."), (col("doc_id") % 256).cast("string"), lit(".0."),
-            ((col("doc_id") * 7) % 256).cast("string"))).otherwise(lit("")))
-      t(s, dir, "documents").select(col("doc_id"), planted.as("txt"))
-        .select(col("doc_id"),
-          TextStats.piiEmails(col("txt")).as("n_emails"),
-          TextStats.piiPhones(col("txt")).as("n_phones"),
-          TextStats.piiIps(col("txt")).as("n_ips"),
-          TextStats.redactPii(col("txt")).as("redacted"))
-    }),
-
-    "q_paragraph_dedup" -> ((s, dir) => {
-      // C4-style paragraph-level exact dedup: texts rebuilt as 4 planted
-      // '|'-separated paragraphs drawn from a 37-slot pool (slot 4 always
-      // repeats slot 1, so within-doc repeats are exercised alongside
-      // cross-doc collisions); each distinct paragraph survives only at
-      // its smallest (doc, position). Ownership travels as (id, pos,
-      // hash) triples — paragraph text never enters the dedup shuffle
-      // (pipeline/Dedup.paragraphDedup); the oracle replays the rule
-      // with a row_number window over the paragraph text itself.
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("p"), (col("doc_id") % 37).cast("string"),
-          lit("|p"), ((col("doc_id") * 7) % 37).cast("string"),
-          lit("|p"), ((col("doc_id") * 13 + 5) % 37).cast("string"),
-          lit("|p"), (col("doc_id") % 37).cast("string")).as("text"))
-      Dedup.paragraphDedup(d, "doc_id", "text", "|")
-    }),
-
-    "q_substring_dedup" -> ((s, dir) => {
-      // Exact substring dedup (the distributed form of Lee et al. 2022's
-      // suffix-array pass) over the REAL documents table: any 8-token
-      // window whose content occurred earlier in (doc, pos) order marks
-      // its span duplicated; overlapping spans merge per doc. The
-      // synthetic corpus' small vocabulary makes genuine cross-doc
-      // window collisions plentiful, so the merge path is exercised.
-      // The oracle replays the rule over the window STRINGS themselves —
-      // confirming the engine's hash-before-shuffle plan loses nothing.
-      Dedup.substringDedup(t(s, dir, "documents"), "doc_id", "text", k = 8)
-        .orderBy("doc_id")
-    })
-  )
-
-  private def oracle41: Map[String, String] = Map(
-
-    "q_hdf5_ingest" ->
-      """with g as (select t.i t, y.i y,
-        |  case when (t.i = 1 and y.i = 2) or (t.i = 5 and y.i = 0) then null
-        |       else cast((t.i*10 + y.i)*0.5 + 100.0 as double) end v
-        |  from range(0, 6) t(i) cross join range(0, 5) y(i)),
-        |a as (select t, count(v) n_valid, sum(v) sum_temp from g group by 1)
-        |select cast(t as int) i0, n_valid, sum_temp,
-        |  concat('L', t) as "label", cast(2*t + 1 as bigint) id,
-        |  cast(t*0.25 - 0.5 as double) w,
-        |  cast(t as int) n_samp,
-        |  cast(t*t + 0.125*t*(t-1) as double) sum_samp
-        |from a order by 1""".stripMargin,
-
-    "q_hdf5_nested" ->
-      """select cast(t as int) t, cast(3*t + 2 as bigint) id,
-        |  cast(t*1.5 as double) x, cast(10.0 - t as double) y,
-        |  cast(3*t + 0.375 as double) v_sum,
-        |  cast(t + 0.25 as double) v_last
-        |from range(0, 6) r(t) order by 1""".stripMargin,
-
-    // literal replay of the planted nested-VLEN values
-    "q_hdf5_nested_vlen" ->
-      """select * from (values
-        |  ('lists', 0, 2, 'aa|b'),
-        |  ('lists', 1, 0, ''),
-        |  ('lists', 2, 3, 'cde||f'),
-        |  ('mats', 0, 2, '1,2|3'),
-        |  ('mats', 1, 2, '|-7,8,9')
-        |) t(src, idx, n, v) order by src, idx""".stripMargin,
-
-    "q_hdf5_szip" ->
-      """select cast(t as bigint) i0,
-        |  cast((3*t*t + 7*t) % 97 as double) "value"
-        |from range(0, 48) r(t) order by 1""".stripMargin,
-
-    "q_hdf5_nbit" ->
-      """select cast(t as bigint) i0,
-        |  cast((5*t*t + 11*t) % 83 as double) "value"
-        |from range(0, 48) r(t) order by 1""".stripMargin,
-
-    // both planted closed forms replayed arithmetically. The f64 branch
-    // replays the filter's EXACT decode ops — code/100.0 + min with
-    // code = k − kmin and min = kmin/100.0 (kmin = −186 over the
-    // non-fill closed form) — the same IEEE divisions and addition the
-    // Scala decoder performs, so the lossy filter still hashes exactly
-    "q_hdf5_scaleoffset" ->
-      """select * from (
-        |  select 'i16' src, cast(t as bigint) i0,
-        |    cast((7*t*t + 3*t) % 199 - 60 as double) "value"
-        |  from range(0, 48) r(t)
-        |  union all
-        |  select 'f64', cast(t as bigint),
-        |    case when t % 9 = 0 then -999.0
-        |         else ((17*t*t + 5*t) % 731 - 200 - (-186)) / 100.0
-        |              + (-186 / 100.0) end
-        |  from range(0, 40) r(t)
-        |) order by 1, 2""".stripMargin,
-
-    "q_zarr_strings" ->
-      """select * from (
-        |  select 'labels' src, cast(t as bigint) idx,
-        |    'doc_' || t || '_αβ' "value" from range(0, 6) r(t)
-        |  union all
-        |  select 'tags', cast(t as bigint),
-        |    case when t = 14 then null
-        |      else 's' || (t // 3) || '_' || (t % 3) end
-        |  from range(0, 15) r(t)
-        |  union all
-        |  select 'names', cast(t as bigint), 'n' || t || 'é'
-        |  from range(0, 4) r(t)
-        |) order by src, idx""".stripMargin,
-
-    // hex strings and counts rebuilt from the planted closed forms;
-    // g∈[3,6) sits in the absent chunk → NULLs
-    "q_zarr_bytes" ->
-      """with pb as (
-        |  select g, k, printf('%02x', (37*g + 11*k) % 256) h
-        |  from range(0, 7) r(g), range(0, 6) r2(k)
-        |  where k < 2 + g % 5),
-        |ph as (select g, cast(2 + g % 5 as int) nb,
-        |  string_agg(h, '' order by k) hx from pb group by 1, 2)
-        |select * from (
-        |  select 'payloads' src, cast(g as bigint) idx,
-        |    case when g between 3 and 5 then null else nb end n_bytes,
-        |    case when g between 3 and 5 then null else hx end v
-        |  from ph
-        |  union all
-        |  select 'counts', cast(i as bigint), 8,
-        |    cast((7*i*i + 3*i) % 1000 - 137 as varchar)
-        |  from range(0, 24) r(i)
-        |) order by 1, 2""".stripMargin,
-
-    // labels 3..5 sit in the absent chunk, tags 6..7 in the missing
-    // inner shard chunk → NULLs; blob hex from the plantedPayload form
-    "q_zarr_v3_strings" ->
-      """with bl as (
-        |  select i, k, printf('%02x', (37*(i+7) + 11*k) % 256) h
-        |  from range(0, 5) r(i), range(0, 8) r2(k)
-        |  where k < 2 + (i+7) % 5),
-        |bh as (select i, string_agg(h, '' order by k) hx from bl group by 1)
-        |select * from (
-        |  select 'labels' src, cast(t as bigint) idx,
-        |    case when t between 3 and 5 then null
-        |      else 'v3_' || t || '_λ' end v
-        |  from range(0, 7) r(t)
-        |  union all
-        |  select 'tags', cast(t as bigint),
-        |    case when t >= 6 then null else 't' || t || 'é' end
-        |  from range(0, 8) r(t)
-        |  union all
-        |  select 'blobs', cast(i as bigint), hx from bh
-        |) order by src, idx""".stripMargin,
-
-    // mlabels: null at 2 (python None) and 3..5 (absent chunk); mblobs
-    // hex from the plantedPayload closed form at g+11
-    "q_zarr_msgpack" ->
-      """with bl as (
-        |  select g, k, printf('%02x', (37*(g+11) + 11*k) % 256) h
-        |  from range(0, 5) r(g), range(0, 8) r2(k)
-        |  where k < 2 + (g+11) % 5),
-        |bh as (select g, string_agg(h, '' order by k) hx from bl group by 1)
-        |select * from (
-        |  select 'mlabels' src, cast(t as bigint) idx,
-        |    case when t between 2 and 5 then null
-        |      else 'm' || t || '_π' end v
-        |  from range(0, 7) r(t)
-        |  union all
-        |  select 'jlabels', cast(t as bigint),
-        |    case when t = 1 then 'a"b' else 'j' || t || '_é' end
-        |  from range(0, 5) r(t)
-        |  union all
-        |  select 'mblobs', cast(g as bigint), hx from bh
-        |) order by src, idx""".stripMargin,
-
-    // t: base 2001-02-03T04:05:06.123456789 + i days, ns → micros
-    // truncation; NaT at 2 and the absent chunk 3..5 → NULL
-    "q_zarr_datetime" ->
-      """select * from (
-        |  select 't' src, cast(i as bigint) idx,
-        |    case when i = 2 or i between 3 and 5 then null
-        |      else timestamp '2001-02-03 04:05:06.123456'
-        |        + to_days(cast(i as int)) end v
-        |  from range(0, 7) r(i)
-        |  union all
-        |  select 'ts', cast(i as bigint),
-        |    case when i = 0 then timestamp '1970-01-01 00:00:00'
-        |      else timestamp '1969-12-31 23:59:59' end
-        |  from range(0, 2) r(i)
-        |) order by src, idx""".stripMargin,
-
-    // the store's closed form replayed: value ((3t mod 40) − 10)/4 on a
-    // 730-day axis from 2000-01-01; 2000 is a leap year → 366/364 split
-    "q_zarr_cf_pipeline" ->
-      """with g as (select t, ((t*3) % 40 - 10) * cast(0.25 as double) v
-        |  from range(0, 730) r(t))
-        |select year(timestamp '2000-01-01' + to_days(cast(t as int))) yr,
-        |  cast(coalesce(sum(case when v > 2.5 then 1 end), 0) as bigint) n_hot,
-        |  sum(v) sum_tas, cast(count(*) as bigint) n_days
-        |from g group by 1 order by 1""".stripMargin,
-
-    // tstd: 1850 epoch + int days (incl. negative); thour: fractional
-    // hours from an in-epoch 04:00 time of day — the same single
-    // floor-to-micros both engines replay
-    "q_cf_time_standard" ->
-      """select * from (
-        |  select 'tstd' src, cast(i as bigint) idx,
-        |    timestamp '1850-01-01' + to_days(cast(v as int)) v
-        |  from (values (0, 0), (1, 36524), (2, -365), (3, 51000)) t(i, v)
-        |  union all
-        |  select 'thour', cast(i as bigint),
-        |    timestamp '2001-02-03 04:00:00'
-        |      + to_microseconds(cast(floor(v*3600000000.0 + 0.5) as bigint))
-        |  from (values (0, 0.5), (1, 27.25)) t(i, v)
-        |) order by src, idx""".stripMargin,
-
-    // the oracle replays the fixed-calendar split arithmetic: positive
-    // mod for day/us-of-day, exact integer year carry (negatives too);
-    // t360's epoch contributes 34.5 days (doy 35 at noon)
-    "q_cf_time_fixed" ->
-      """select * from (
-        |  select 'tnl' src, cast(i as bigint) idx,
-        |    cast(2000 + (v - ((v % 365) + 365) % 365) / 365 as int) "year",
-        |    cast(((v % 365) + 365) % 365 + 1 as int) doy,
-        |    cast(0 as bigint) us_of_day
-        |  from (values (0, 0), (1, 364), (2, 365), (3, 730), (4, -1)) t(i, v)
-        |  union all
-        |  select 't360', cast(i as bigint),
-        |    cast(2000 + (dayn - ((dayn % 360) + 360) % 360) / 360 as int),
-        |    cast(((dayn % 360) + 360) % 360 + 1 as int),
-        |    cast(us_of_day as bigint)
-        |  from (
-        |    select i,
-        |      (us - ((us % 86400000000) + 86400000000) % 86400000000)
-        |        / 86400000000 dayn,
-        |      ((us % 86400000000) + 86400000000) % 86400000000 us_of_day
-        |    from (select i,
-        |        cast(floor(v*86400000000.0 + 0.5) as bigint)
-        |          + 2980800000000 us
-        |      from (values (0, 0.0), (1, 359.5), (2, 360.0), (3, -35.0))
-        |        t(i, v)) q1) q2
-        |) order by src, idx""".stripMargin,
-
-    // bottom-32 by the same md5-derived 60-bit hash over the whole
-    // corpus in one window — order-free merge makes streamed == whole;
-    // pointer closed-form (3 non-empty batches → v3, lastBatch 2)
-    "q_stream_sample" ->
-      """with hv as (select source,
-        |   cast(concat('0x', substr(md5(cast(doc_id as varchar)), 1, 15))
-        |     as bigint) hv,
-        |   doc_id from documents),
-        |rk as (select source, hv, doc_id,
-        |   row_number() over (partition by source order by hv) rk from hv)
-        |select source, hv, cast(doc_id as bigint) doc_id,
-        |  cast(3 as int) snap_version, cast(2 as bigint) last_batch
-        |from rk where rk <= 32""".stripMargin,
-
-    // both write→decode round trips restated closed-form: six hourly
-    // instants on 2000-01-01, and the four julian companions verbatim
-    "q_zarr_cf_write" ->
-      """select * from (
-        |  select 'std' src, cast(i as bigint) idx, cast(2000 as int) "year",
-        |    cast(1 as int) doy, cast(i*3600000000 as bigint) us_of_day
-        |  from (values (0),(1),(2),(3),(4),(5)) t(i)
-        |  union all
-        |  select 'jul', cast(i as bigint), cast(y as int), cast(d as int),
-        |    cast(u as bigint)
-        |  from (values (0,1900,59,0),(1,1900,60,64800000000),
-        |    (2,1904,366,0),(3,2000,1,3600000000)) t(i,y,d,u)
-        |) order by src, idx""".stripMargin,
-
-    // the encode closed forms replayed: standard = exact day diffs;
-    // julian = 365(y−1) + ⌊(y−1)/4⌋ days before the year (epoch
-    // 1900-01-01 = julian absolute day 693609), hours = days·24 + us/3.6e9
-    // the NetCDF CF-axis round trip reduces to the plain per-day counts:
-    // write → decode-times read is an identity, so the oracle is the
-    // straight aggregate off the table
-    "q_netcdf_cf_write" ->
-      """select cast(l_shipdate as timestamp) ship_ts,
-        |  cast(count(*) as bigint) n_ship
-        |from lineitem group by 1""".stripMargin,
-
-    "q_cf_time_encode" ->
-      """select 'std' src, cast(count(*) as bigint) n_rows,
-        |  cast(min(date_diff('day', date '1992-01-01', l_shipdate))
-        |    as bigint) min_v,
-        |  cast(max(date_diff('day', date '1992-01-01', l_shipdate))
-        |    as bigint) max_v,
-        |  cast(sum(date_diff('day', date '1992-01-01', l_shipdate))
-        |    as bigint) sum_v
-        |from lineitem
-        |union all
-        |select 'jul', cast(count(*) as bigint),
-        |  cast(min(v) as bigint), cast(max(v) as bigint),
-        |  cast(sum(v) as bigint)
-        |from (
-        |  select ((365*(y-1) + (y-1 - (y-1)%4)/4 + d - 1) - 693609) * 24
-        |    + u / 3600000000 v
-        |  from (values (1900, 59, 0), (1900, 60, 64800000000),
-        |    (1904, 366, 0), (2000, 1, 3600000000)) t(y, d, u)) q""".stripMargin,
-
-    // julian cycle split replayed in integers: epoch 1900-02-28 18:00 is
-    // absolute day 693667 (365·1899 + ⌊1899/4⌋ + 58) + 64800000000 µs;
-    // 4-year cycle 1461 days, leap year LAST in the cycle
-    "q_cf_time_julian" ->
-      """with raw as (
-        |  select idx, cast(floor(v*3600000000.0 + 0.5) as bigint)
-        |    + 64800000000 us
-        |  from (values (0, 0.0), (1, 6.0), (2, 30.0), (3, -18.75),
-        |    (4, 17544.0)) t(idx, v)),
-        |d as (
-        |  select idx,
-        |    (us - ((us % 86400000000) + 86400000000) % 86400000000)
-        |      / 86400000000 + 693667 dayn,
-        |    ((us % 86400000000) + 86400000000) % 86400000000 us_of_day
-        |  from raw),
-        |y as (
-        |  select idx, us_of_day, dayn % 1461 r,
-        |    (dayn - dayn % 1461) / 1461 cyc,
-        |    least(3, cast(((dayn % 1461) - (dayn % 1461) % 365) / 365
-        |      as bigint)) yi
-        |  from d)
-        |select cast(idx as bigint) idx,
-        |  cast(1 + 4*cyc + yi as int) "year",
-        |  cast(r - 365*yi + 1 as int) doy,
-        |  cast(us_of_day as bigint) us_of_day
-        |from y order by idx""".stripMargin,
-
-    // ts: 2010-06-01 + t*3661s + t µs; NULL at 3 (NaT), 6..8 (unwritten
-    // chunk), 9 (in-chunk absent → NaT); td: (t-3) * 90061123 ms anchored
-    // to the epoch, NULL at 2
-    "q_zarr_temporal_roundtrip" ->
-      """select * from (
-        |  select 'ts' src, cast(t as bigint) idx,
-        |    case when t = 3 or t between 6 and 9 then null
-        |      else timestamp '2010-06-01 00:00:00'
-        |        + to_seconds(cast(t*3661 as bigint))
-        |        + to_microseconds(cast(t as bigint)) end v
-        |  from range(0, 12) r(t)
-        |  union all
-        |  select 'td', cast(t as bigint),
-        |    case when t = 2 then null
-        |      else timestamp '1970-01-01'
-        |        + to_milliseconds(cast((t-3) * 90061123 as bigint)) end
-        |  from range(0, 6) r(t)
-        |) order by src, idx""".stripMargin,
-
-    // the embedding matrix round-trips through a 2-D <f8 store; the
-    // oracle scores the same integer-grid cosine off the parquet table
-    "q_zarr_vectors_topk" ->
-      s"""with v as (select vec_id,
-         |  list_transform(embedding, x -> cast(x as double)) vv from embeddings),
-         |q as (select vv qv from v where vec_id = 0),
-         |scored as (select v.vec_id, ${cosQSql("v.vv", "q.qv")} cosine from v, q),
-         |ranked as (select vec_id, cosine,
-         |  row_number() over (order by cosine desc, vec_id) rank from scored)
-         |select cast(rank as int) rank, vec_id, cosine
-         |from ranked where rank <= 5""".stripMargin,
-
-    // tf: 2003-05-07T08:09:10Z + g hours via Delta(i8)+zlib, NaT at 7 and
-    // the absent chunk 8..9 → NULL; tsh: 1999-12-31T23:59:58Z + i s + i µs
-    // sharded, NULL at the missing inner chunk (2,3) and the NaT (9)
-    "q_zarr_datetime_filtered" ->
-      """select * from (
-        |  select 'tf' src, cast(g as bigint) idx,
-        |    case when g >= 7 then null
-        |      else timestamp '2003-05-07 08:09:10'
-        |        + to_hours(cast(g as int)) end v
-        |  from range(0, 10) r(g)
-        |  union all
-        |  select 'tsh', cast(i as bigint),
-        |    case when i in (2, 3, 9) then null
-        |      else timestamp '1999-12-31 23:59:58'
-        |        + to_seconds(cast(i as int))
-        |        + to_microseconds(cast(i as int)) end
-        |  from range(0, 12) r(i)
-        |) order by src, idx""".stripMargin,
-
-    // durations anchored to the epoch (intervals don't survive the
-    // parquet channel): td in ms with NaT at 4, tdm in MINUTES with NaT
-    // at 1 — both signs pin the pmod/div day-carry
-    "q_zarr_timedelta" ->
-      """select * from (
-        |  select 'td' src, cast(i as bigint) idx,
-        |    case when i = 4 then null
-        |      else timestamp '1970-01-01' + to_milliseconds(
-        |        case i when 0 then 0 when 1 then 1 when 2 then -1
-        |               when 3 then 90061123 else -90061123 end) end v
-        |  from range(0, 6) r(i)
-        |  union all
-        |  select 'tdm', cast(i as bigint),
-        |    case when i = 1 then null
-        |      else timestamp '1970-01-01'
-        |        + to_minutes(case when i = 0 then 90 else -90 end) end
-        |  from range(0, 3) r(i)
-        |) order by src, idx""".stripMargin,
-
-    // v3 writers: vals 6..8 / labels 0..3 sit in never-written chunks →
-    // NULL; the t=5 null input round-trips as ""; quarters print exactly
-    "q_zarr_write_v3" ->
-      """select * from (
-        |  select 'labels' src, cast(t as bigint) idx,
-        |    case when t < 4 then null when t = 5 then ''
-        |      else 'v3w_' || t || '_σ' end v
-        |  from range(0, 10) r(t)
-        |  union all
-        |  select 'vals', cast(t as bigint),
-        |    case when t between 6 and 8 then null
-        |      else cast((3.0*t - 5.0)/4.0 as varchar) end
-        |  from range(0, 12) r(t)
-        |) order by src, idx""".stripMargin,
-
-    // rows 12..15 sit in the never-written chunk → NULL; null inputs
-    // round-trip as "" (vlen-utf8 has no null)
-    "q_zarr_write_roundtrip" ->
-      """select cast(t as bigint) idx,
-        |  case when t between 12 and 15 then null
-        |       when t % 7 = 3 then ''
-        |       else 'w' || t || '_µ' end v
-        |from range(0, 20) r(t) order by idx""".stripMargin,
-
-    "q_zarr_ingest" ->
-      """with g as (
-        |  select t.i t, y.i y, x.i x,
-        |    case when t.i between 2 and 3 and y.i >= 3 and x.i < 3 then null
-        |         else cast((t.i*100 + y.i*10 + x.i)*0.5 + 10.0 as double) end v,
-        |    cast((t.i + y.i + x.i)*0.25 as double) p
-        |  from range(0, 6) t(i)
-        |  cross join range(0, 5) y(i)
-        |  cross join range(0, 4) x(i))
-        |select cast(t as int) "time", count(v) n_valid, sum(v) sum_tas,
-        |  min(v) min_tas, max(v) max_tas, sum(p) sum_pr
-        |from g group by 1""".stripMargin,
-
-    "q_image_decode_jpeg" ->
-      """select doc_id media_id, 16 width, 12 height, 3 channels,
-        |  cast(round((64 + (doc_id % 4) * 32) / 16.0) as int) q_r,
-        |  cast(round((80 + (doc_id % 3) * 32) / 16.0) as int) q_g,
-        |  cast(round((48 + (doc_id % 5) * 32) / 16.0) as int) q_b
-        |from documents where doc_id % 40 = 0""".stripMargin,
-
-    "q_jaccard_postings_dfcut" ->
-      """with toks as (select doc_id,
-        |    string_split_regex(lower(trim(text)), '\s+') tk from documents),
-        |g as (select distinct doc_id,
-        |    array_to_string(tk[cast(i as int):cast(i as int)+2], ' ') tok
-        |  from (select doc_id, tk, unnest(range(1, len(tk) - 1)) i from toks)),
-        |sz as (select doc_id, count(*) sz from g group by 1),
-        |com as (select a.doc_id id_a, b.doc_id id_b, count(*) common
-        |  from g a join g b on a.tok = b.tok and a.doc_id < b.doc_id
-        |  group by 1, 2)
-        |select id_a, id_b,
-        |  cast(common as double)/(sa.sz + sb.sz - common) jaccard
-        |from com join sz sa on sa.doc_id = id_a join sz sb on sb.doc_id = id_b
-        |where cast(common as double)/(sa.sz + sb.sz - common) >= 0.6""".stripMargin,
-
-    "q_media_metadata" ->
-      """select doc_id media_id, 'audio' modality, 'mpeg-audio' container,
-        |  cast((10 + (doc_id % 7) * 16)
-        |    + (200 + (doc_id % 9) * 25) * 417
-        |    + ((200 + (doc_id % 9) * 25) // 2) + 128 as bigint) n_bytes,
-        |  cast(((200 + (doc_id % 9) * 25) * 1152 * 1000) // 44100 as bigint) duration_ms,
-        |  cast(44100 as int) sample_rate, cast(128 as int) bit_rate_kbps,
-        |  cast(200 + (doc_id % 9) * 25 as bigint) frames,
-        |  cast(null as int) width, cast(null as int) height
-        |from documents where doc_id % 50 = 0
-        |union all
-        |select doc_id, 'video', 'isobmff',
-        |  cast(304 + doc_id % 32 as bigint),
-        |  cast(1000 + (doc_id % 11) * 250 as bigint),
-        |  cast(null as int), cast(null as int), cast(null as bigint),
-        |  cast(320 + (doc_id % 5) * 16 as int),
-        |  cast(240 + (doc_id % 3) * 16 as int)
-        |from documents where doc_id % 50 = 25""".stripMargin,
-
-    "q_video_keyframes" ->
-      """with par as (select doc_id media_id,
-        |    30 + (doc_id % 7) * 10 n, 5 + (doc_id % 4) g
-        |  from documents where doc_id % 50 = 25),
-        |sz as (select media_id,
-        |    cast(sum(200 + ((media_id * 11 + k * 17) % 100)) as bigint) bytes_total,
-        |    cast(min(200 + ((media_id * 11 + k * 17) % 100)) as bigint) bytes_min,
-        |    cast(max(200 + ((media_id * 11 + k * 17) % 100)) as bigint) bytes_max
-        |  from (select media_id, n, unnest(range(0, n)) k from par)
-        |  group by 1)
-        |select p.media_id, cast(p.n as bigint) n_samples,
-        |  cast(1 + (p.n - 1) // p.g as bigint) n_keyframes,
-        |  cast(case when 1 + (p.n - 1) // p.g >= 2 then p.g else 0 end
-        |    as bigint) max_key_gap,
-        |  s.bytes_total, s.bytes_min, s.bytes_max
-        |from par p join sz s using (media_id)""".stripMargin,
-
-    "q_pii_redaction" ->
-      """with d as (select doc_id, concat(text,
-        |  case when doc_id % 4 = 0 then concat(' reach user', doc_id, '@mail',
-        |    doc_id % 3, '.org now') else '' end,
-        |  case when doc_id % 5 = 0 then concat(' call 555-010-',
-        |    lpad(cast(doc_id % 10000 as varchar), 4, '0')) else '' end,
-        |  case when doc_id % 3 = 0 then concat(' from 10.', doc_id % 256, '.0.',
-        |    (doc_id * 7) % 256) else '' end) txt from documents)
-        |select doc_id,
-        |  cast(len(regexp_extract_all(txt,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) as int) n_emails,
-        |  cast(len(regexp_extract_all(txt, '\b\d{3}-\d{3}-\d{4}\b')) as int) n_phones,
-        |  cast(len(regexp_extract_all(txt,
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) as int) n_ips,
-        |  regexp_replace(regexp_replace(regexp_replace(txt,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') redacted
-        |from d""".stripMargin,
-
-    "q_paragraph_dedup" ->
-      """with d as (select doc_id, concat('p', doc_id % 37, '|p', (doc_id*7) % 37,
-        |  '|p', (doc_id*13+5) % 37, '|p', doc_id % 37) txt from documents),
-        |p as (select doc_id, i - 1 pos, string_split(txt, '|')[cast(i as int)] para
-        |  from d cross join range(1, 5) r(i)),
-        |rk as (select doc_id, pos, para,
-        |  row_number() over (partition by para order by doc_id, pos) rn from p),
-        |k as (select doc_id, pos, para from rk where rn = 1),
-        |agg as (select doc_id, count(*) n_kept,
-        |  string_agg(para, '|' order by pos) text_kept from k group by 1)
-        |select d.doc_id, cast(4 as int) n_paras,
-        |  cast(coalesce(a.n_kept, 0) as int) n_kept,
-        |  coalesce(a.text_kept, '') text_kept
-        |from d left join agg a on a.doc_id = d.doc_id""".stripMargin,
-
-    "q_substring_dedup" ->
-      """with t as (select doc_id, string_split(text, ' ') toks from documents),
-        |w as (select doc_id, unnest(range(1, greatest(len(toks) - 6, 1))) pos, toks from t),
-        |wh as (select doc_id, pos, array_to_string(toks[pos : pos + 7], ' ') win from w),
-        |rk as (select doc_id, pos,
-        |  row_number() over (partition by win order by doc_id, pos) rn from wh),
-        |dup as (select doc_id, pos s, pos + 8 e from rk where rn > 1),
-        |m0 as (select doc_id, s, e, max(e) over (partition by doc_id order by s
-        |  rows between unbounded preceding and 1 preceding) maxe from dup),
-        |m1 as (select doc_id, s, e,
-        |  case when maxe is null or s > maxe then 1 else 0 end isnew from m0),
-        |m2 as (select doc_id, s, e,
-        |  sum(isnew) over (partition by doc_id order by s) grp from m1),
-        |mi as (select doc_id, grp, min(s) s, max(e) e from m2 group by 1, 2),
-        |cov as (select doc_id, cast(sum(e - s) as bigint) ndt from mi group by 1),
-        |dw as (select doc_id, cast(count(*) as bigint) ndw from dup group by 1)
-        |select d.doc_id, cast(len(string_split(d.text, ' ')) as bigint) n_tokens,
-        |  coalesce(ndw, 0) n_dup_windows, coalesce(ndt, 0) n_dup_tokens,
-        |  cast(len(string_split(d.text, ' ')) - coalesce(ndt, 0) as bigint) n_tokens_kept
-        |from documents d
-        |left join dw on dw.doc_id = d.doc_id
-        |left join cov on cov.doc_id = d.doc_id
-        |order by d.doc_id""".stripMargin
-  )
-
-  // ---- batch 42: winnowing fingerprints (MOSS local-minima sampling) ------
-
-  /** Winnowed (k=5, w=8) fingerprints of `documents` — a [[view]]
-    * persisted once per session like [[climateDaily]]: the hash+window
-    * pass feeds both winnow queries, so it is paid once per run
-    * (PLANS §39). */
-  private def winnowFps(s: SparkSession, dir: String): DataFrame =
-    view(s, dir, "winnowFps")(
-      graft.pipeline.TextStats.winnowFingerprints(
-        t(s, dir, "documents"), "doc_id", "text", k = 5, w = 8))
-
-
-  private def queries42: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_winnow_fingerprints" -> ((s, dir) => {
-      // Winnowing (Schleimer/Wilkerson/Aiken) document fingerprints,
-      // oracle-EXACT: the char-5-gram polynomial hash (B=257 mod 2^31-1
-      // over normalised [a-z0-9 ] codes) and the window-min selection key
-      // are both engine-portable, so DuckDB replays hashing AND selection
-      // bit-for-bit. k=5/w=8 guarantees a shared fingerprint for any
-      // shared normalised substring of >= 12 chars while sampling ~2/9
-      // of positions. Document-local end to end (one window inside
-      // doc_id partitions) — no cross-document state at any scale.
-      winnowFps(s, dir).select(col("doc_id"), col("pos"), col("fp"))
-    }),
-
-    "q_winnow_overlap" -> ((s, dir) => {
-      // The MOSS overlap front over the winnowed fingerprints: pairs
-      // sharing >= 5 distinct fingerprints, with a RELATIVE df cut
-      // (fp kept iff its doc frequency <= 5% of the corpus) so
-      // boilerplate shingles shared by everything never reach the
-      // postings self-join — the contract that survives corpus growth
-      // (PLANS sec. 40), replayed exactly by the oracle.
-      graft.pipeline.Dedup.winnowOverlapOfFps(
-          // distinct is REQUIRED here: the generator de-dups (pos,fp)
-          // pairs, but one doc can select the same fp at several
-          // positions — (doc,fp) still needs the collapse
-          winnowFps(s, dir).select(col("doc_id").as("doc"), col("fp")).distinct(),
-          t(s, dir, "documents").select(countDistinct(col("doc_id")).as("n_docs")),
-          minShared = 5, maxDfFrac = 0.05)
-        .select(col("id_a"), col("id_b"), col("shared"))
-    }),
-
-    "q_decontaminate_bloom" -> ((s, dir) => {
-      // Bloom-prefiltered decontamination (Dedup.decontaminateBloom): the
-      // benchmark 8-grams ship as a 2^20-bit filter literal (16 KiB)
-      // instead of broadcast strings; corpus grams failing any of the 4
-      // probes drop at scan speed and survivors verify exactly, so the
-      // result EQUALS q_decontaminate row-for-row (same oracle SQL).
-      val docs = t(s, dir, "documents")
-      graft.pipeline.Dedup.decontaminateBloom(
-        docs.filter(col("doc_id") % 97 =!= 0), "doc_id", "text",
-        docs.filter(col("doc_id") % 97 === 0), n = 8)
-    }),
-
-    "q_mixture_lang" -> ((s, dir) => {
-      // Data-mixing sample (Sampling.mixtureSample): rebalance the corpus
-      // to a target language mix (en 50%, de/fr/es/zh 12.5% each). The
-      // feasibility minimum and per-lang keep rates compose in-plan from
-      // broadcast one-row frames; membership is the salted-md5 fraction,
-      // replayed exactly by the oracle.
-      graft.pipeline.Sampling.mixtureSample(
-          t(s, dir, "documents"), "lang", col("doc_id"),
-          Map("en" -> 0.5, "de" -> 0.125, "fr" -> 0.125,
-              "es" -> 0.125, "zh" -> 0.125))
-        .select(col("doc_id"), col("lang"), col("source"))
-    }),
-
-    "q_temperature_mixture" -> ((s, dir) => {
-      // r12: temperature-scaled rebalance (Sampling.temperatureMixture,
-      // the p_i ∝ n_i^alpha multilingual-pretraining rule) at alpha=0.5:
-      // keep rate (n_min/n_i)^0.5 per language, smallest language kept
-      // whole. sqrt/mult/div are IEEE-exact, so the oracle replays the
-      // rates and the salted-md5 membership bit-identically.
-      graft.pipeline.Sampling.temperatureMixture(
-          t(s, dir, "documents"), "lang", col("doc_id"), alpha = 0.5)
-        .select(col("doc_id"), col("lang"), col("source"))
-    }),
-
-    "q_pack_sequences" -> ((s, dir) => {
-      // Context-window packing (Packing.packGreedy): shard-local greedy
-      // layout of whitespace token counts into 512-token bins, 16 shards.
-      // The sequential carry (bin fill) lives in an O(1)-state partition
-      // scan; the oracle replays the same recurrence with a recursive CTE
-      // per shard. Output is one row per document with its bin placement.
-      val docs = t(s, dir, "documents")
-      graft.pipeline.Packing.packGreedy(docs, "doc_id",
-          graft.pipeline.TextStats.tokenCount(col("text")),
-          maxLen = 512, shards = 16)
-        .select(col("doc_id"), col("shard"), col("bin"),
-          col("bin_offset"), col("n_tok"))
-    }),
-
-    "q_semantic_decontaminate" -> ((s, dir) => {
-      // embedding-space decontamination (Similarity.crossNearDuplicates):
-      // the benchmark side is every 5th corpus vector re-labeled, so each
-      // must match exactly its own twin at cosine 1 and nothing else (the
-      // corpus max off-pair cosine is ~0.51). Broadcast nested-loop by
-      // design — the eval set ships whole, the corpus never shuffles.
-      // r13 exactGrid: integer-grid cosine, no round — self-pairs score
-      // ~1.0 vs ≤~0.51 off-pairs, so the 0.9 threshold has huge margin
-      val e = t(s, dir, "embeddings")
-      val bench = e.filter(col("vec_id") % 5 === 0)
-        .select((col("vec_id") + 100000).as("bid"), col("embedding").as("bv"))
-      Similarity.crossNearDuplicates(e, "vec_id", "embedding",
-          bench, "bid", "bv", threshold = 0.9, exactGrid = true)
-        .select(col("corpus_id"), col("bench_id"), col("cosine"))
-    }),
-
-    "q_pmi_bigrams" -> ((s, dir) => {
-      // PMI collocations (TextStats.pmiBigrams): adjacent-pair counts,
-      // slot-convention unigram margins, one-row total broadcast — the
-      // oracle replays the identical double-ratio arithmetic.
-      TextStats.pmiBigrams(t(s, dir, "documents"), "text", minCount = 20L)
-        .select(col("w1"), col("w2"), col("n_ab"), col("pmi"))
-    }),
-
-    "q_c4_quality" -> ((s, dir) => {
-      // C4 page-cleaning heuristics over a deterministically STAGED
-      // multi-line corpus (the synthetic documents are single-line, so
-      // the query first injects sentence breaks and per-residue lorem/
-      // brace contamination — both engines replay the same rewrite).
-      // Flags + keep verdict come from TextStats.c4QualityFlags.
-      val staged = t(s, dir, "documents").select(col("doc_id"),
-        concat(
-          regexp_replace(col("text"), " a ", ".\n"),
-          when(col("doc_id") % 7 === 0,
-            lit("\nlorem ipsum filler for the page test.")).otherwise(lit("")),
-          when(col("doc_id") % 11 === 0,
-            lit("\nvar config = { unfinished")).otherwise(lit(""))).as("text"))
-      TextStats.c4QualityFlags(staged, "doc_id", "text")
-        .select(col("doc_id"), col("n_lines"), col("n_kept_lines"),
-          col("n_sentences"), col("has_brace"), col("has_lorem"), col("keep"))
-    }),
-
-    "q_embedding_quantize" -> ((s, dir) => {
-      // SQ8 embedding quantisation (Similarity.quantizeInt8): per-vector
-      // dequant step max|v|/127, integer codes in [-127,127]. The output
-      // folds the codes to scalars (sum, sum of squares) so the oracle
-      // replays the identical round(v/s) arithmetic list-wise; float
-      // inputs widen to double in BOTH engines before the divide.
-      Similarity.quantizeInt8(
-          t(s, dir, "embeddings").filter(col("vec_id") % 5 === 0),
-          "vec_id", "embedding")
-        .select(col("vec_id"), q6(col("scale")).as("qstep"),
-          aggregate(col("q"), lit(0L), (a, x) => a + x).as("q_sum"),
-          aggregate(col("q"), lit(0L), (a, x) => a + x * x).as("q_l2"))
-    }),
-
-    "q_chunk_sliding" -> ((s, dir) => {
-      // RAG-style sliding-window chunking (Packing.chunkTokens): 8-token
-      // windows every 4 tokens (50% overlap), one output row per chunk
-      // with its text, length and start offset. All Column expressions —
-      // the plan is a shuffle-free narrow projection off the scan.
-      graft.pipeline.Packing.chunkTokens(
-          t(s, dir, "documents").filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", size = 8, stride = 4)
-    })
-  )
-
-  private val winnowSql: String =
-    """norm as (select doc_id, regexp_replace(lower(trim(text)), '[^a-z0-9 ]', '', 'g') t
-      |  from documents),
-      |wp as (select doc_id, t, unnest(range(1, cast(len(t) as bigint) - 3)) p from norm),
-      |wh as (select doc_id, p,
-      |  ((((((((cast(ascii(t[p]) as bigint) % 2147483647)*257 + ascii(t[p+1])) % 2147483647)*257
-      |    + ascii(t[p+2])) % 2147483647)*257 + ascii(t[p+3])) % 2147483647)*257
-      |    + ascii(t[p+4])) % 2147483647 h
-      |  from wp),
-      |wk as (select doc_id, p, h*1048576 + (1048575 - p) kk from wh),
-      |ws as (select doc_id,
-      |  min(kk) over (partition by doc_id order by p
-      |    rows between current row and 7 following) selkey,
-      |  count(*) over (partition by doc_id order by p
-      |    rows between current row and 7 following) nw
-      |  from wk),
-      |wd as (select distinct doc_id, selkey from ws where nw = 8),
-      |wfp as (select doc_id, cast(1048575 - (selkey % 1048576) as int) pos,
-      |  selkey // 1048576 fp from wd)""".stripMargin
-
-  private def oracle42: Map[String, String] = Map(
-
-    "q_winnow_fingerprints" ->
-      s"""with $winnowSql
-         |select doc_id, pos, fp from wfp""".stripMargin,
-
-    "q_winnow_overlap" ->
-      s"""with $winnowSql,
-         |posts as (select distinct doc_id doc, fp from wfp),
-         |tot as (select count(distinct doc_id) n from documents),
-         |kept as (select fp from posts cross join tot
-         |  group by fp, n having count(*) <= n * 0.05),
-         |pk as (select doc, fp from posts where fp in (select fp from kept))
-         |select a.doc id_a, b.doc id_b, cast(count(*) as bigint) shared
-         |from pk a join pk b on a.fp = b.fp and a.doc < b.doc
-         |group by 1, 2 having count(*) >= 5""".stripMargin,
-
-    // identical output contract to the exact join by construction
-    "q_decontaminate_bloom" -> oracle40("q_decontaminate"),
-
-    "q_mixture_lang" ->
-      """with c as (select lang, count(*) cnt from documents group by 1),
-        |t(lang, tgt) as (select * from (values
-        |  ('en', cast(0.5 as double)), ('de', cast(0.125 as double)),
-        |  ('fr', cast(0.125 as double)), ('es', cast(0.125 as double)),
-        |  ('zh', cast(0.125 as double)))),
-        |j as (select c.lang, cnt, tgt from c join t using (lang)),
-        |mt as (select min(cnt/tgt) tt from j),
-        |r as (select lang, least(cast(1.0 as double), tt*tgt/cnt) rate
-        |  from j cross join mt)
-        |select d.doc_id, d.lang, d.source from documents d join r using (lang)
-        |where cast(cast(concat('0x', substr(md5(concat(cast(doc_id as varchar), 'graft-mix')), 1, 13))
-        |  as ubigint) as double)/4503599627370496.0 < rate""".stripMargin,
-
-    "q_temperature_mixture" ->
-      """with c as (select lang, count(*) cnt from documents group by 1),
-        |mt as (select min(cast(cnt as double)/sqrt(cast(cnt as double))) tt from c),
-        |r as (select lang, least(cast(1.0 as double),
-        |  tt*sqrt(cast(cnt as double))/cast(cnt as double)) rate
-        |  from c cross join mt)
-        |select d.doc_id, d.lang, d.source from documents d join r using (lang)
-        |where cast(cast(concat('0x', substr(md5(concat(cast(doc_id as varchar), 'graft-temp')), 1, 13))
-        |  as ubigint) as double)/4503599627370496.0 < rate""".stripMargin,
-
-    "q_pack_sequences" ->
-      """with recursive d as (select doc_id, cast(doc_id % 16 as int) shard,
-        |  cast(case when trim(text) = '' then 0
-        |    else len(string_split_regex(trim(text), '\s+')) end as int) nt
-        |  from documents),
-        |r as (select *, row_number() over (partition by shard order by doc_id) rn from d),
-        |rec as (
-        |  select doc_id, shard, nt, rn, 0 bin, 0 boff, nt used
-        |  from r where rn = 1
-        |  union all
-        |  select r.doc_id, r.shard, r.nt, r.rn,
-        |    case when rec.used > 0 and rec.used + r.nt > 512
-        |         then rec.bin + 1 else rec.bin end,
-        |    case when rec.used > 0 and rec.used + r.nt > 512
-        |         then 0 else rec.used end,
-        |    case when rec.used > 0 and rec.used + r.nt > 512
-        |         then r.nt else rec.used + r.nt end
-        |  from rec join r on r.shard = rec.shard and r.rn = rec.rn + 1)
-        |select doc_id, shard, cast(bin as int) bin,
-        |  cast(boff as int) bin_offset, nt n_tok
-        |from rec""".stripMargin,
-
-    "q_semantic_decontaminate" ->
-      s"""with c as (select vec_id, embedding cv from embeddings),
-         |b as (select vec_id + 100000 bid, embedding bv from embeddings
-         |      where vec_id % 5 = 0),
-         |p as (select c.vec_id corpus_id, b.bid bench_id,
-         |  ${cosQSql("cv", "bv")} cosine
-         | from c, b)
-         |select corpus_id, bench_id, cosine
-         |from p where cosine >= 0.9""".stripMargin,
-
-    "q_pmi_bigrams" ->
-      """with t as (select string_split_regex(trim(text), '\s+') toks
-        |  from documents where trim(text) <> ''),
-        |p as (select unnest(list_transform(range(1, len(toks)),
-        |    i -> struct_pack(w1 := toks[i], w2 := toks[i+1]))) pr
-        |  from t where len(toks) >= 2),
-        |b as (select pr.w1 w1, pr.w2 w2, count(*) n_ab from p group by 1, 2),
-        |l as (select pr.w1 w1, count(*) n_a from p group by 1),
-        |r as (select pr.w2 w2, count(*) n_b from p group by 1),
-        |n as (select sum(n_ab) n_total from b)
-        |select b.w1, b.w2, cast(b.n_ab as bigint) n_ab,
-        |  (floor(ln(cast(b.n_ab as double) * cast(n.n_total as double)
-        |    / (cast(l.n_a as double) * cast(r.n_b as double))) * 1e6 + 0.5)
-        |   / 1e6) pmi
-        |from b join l using (w1) join r using (w2), n
-        |where b.n_ab >= 20""".stripMargin,
-
-    "q_c4_quality" ->
-      """with staged as (select doc_id,
-        |  regexp_replace(text, ' a ', '.' || chr(10), 'g')
-        |  || case when doc_id % 7 = 0
-        |       then chr(10) || 'lorem ipsum filler for the page test.' else '' end
-        |  || case when doc_id % 11 = 0
-        |       then chr(10) || 'var config = { unfinished' else '' end as text
-        | from documents),
-        |l as (select doc_id, text, string_split(text, chr(10)) lines from staged),
-        |k as (select doc_id, text, lines,
-        |  list_filter(lines, x -> regexp_matches(trim(x), '[.!?"]$')
-        |    and len(string_split_regex(trim(x), '\s+')) >= 5) kept from l)
-        |select doc_id, cast(len(lines) as int) n_lines,
-        |  cast(len(kept) as int) n_kept_lines,
-        |  cast(len(regexp_extract_all(coalesce(array_to_string(kept, chr(10)), ''),
-        |    '[.!?]')) as int) n_sentences,
-        |  contains(text, '{') has_brace,
-        |  contains(lower(text), 'lorem ipsum') has_lorem,
-        |  (len(regexp_extract_all(coalesce(array_to_string(kept, chr(10)), ''),
-        |    '[.!?]')) >= 3
-        |   and not contains(text, '{')
-        |   and not contains(lower(text), 'lorem ipsum')) keep
-        |from k""".stripMargin,
-
-    "q_embedding_quantize" ->
-      """with e as (select vec_id, embedding v from embeddings where vec_id % 5 = 0),
-        |m as (select vec_id, v,
-        |  list_max(list_transform(v, x -> abs(cast(x as double)))) mx from e),
-        |q as (select vec_id, mx/127.0 s,
-        |  case when mx = 0 then list_transform(v, x -> cast(0 as bigint))
-        |       else list_transform(v,
-        |         x -> cast(round(cast(x as double) / (mx/127.0)) as bigint)) end qs
-        |  from m)
-        |select vec_id, floor(s * 1e6 + 0.5) / 1e6 qstep,
-        |  cast(list_sum(qs) as bigint) q_sum,
-        |  cast(list_sum(list_transform(qs, x -> x*x)) as bigint) q_l2
-        |from q""".stripMargin,
-
-    "q_chunk_sliding" ->
-      """with d as (select doc_id,
-        |  case when trim(text) = '' then []::varchar[]
-        |       else string_split_regex(trim(text), '\s+') end toks
-        |  from documents where doc_id % 10 = 0),
-        |e as (select doc_id, toks, len(toks) n from d),
-        |s as (select doc_id, toks, n, unnest(range(0, n, 4)) st from e)
-        |select doc_id, cast(st // 4 as bigint) chunk_id,
-        |  array_to_string(toks[st+1:least(st+8, n)], ' ') chunk,
-        |  cast(least(8, n - st) as int) chunk_tokens,
-        |  cast(st as int) token_start
-        |from s""".stripMargin
-  )
-
-  // ---- batch 43: retrieval + quality + clustering (round-8 late) ----------
-
-  private def queries43: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_gopher_quality" -> ((s, dir) => {
-      // Gopher/MassiveText page-quality rules over a deterministically
-      // STAGED corpus (single-line synthetic docs get bullet lists,
-      // trailing-ellipsis lines, symbol spam and numeric junk injected by
-      // doc_id residue — both engines replay the identical rewrite).
-      // Signals + keep verdict from TextStats.gopherQualityFlags.
-      val staged = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 4 === 0,
-            lit("\n- bullet point list item\n- second bullet entry")).otherwise(lit("")),
-          when(col("doc_id") % 6 === 0,
-            lit("\nthis sentence trails off...")).otherwise(lit("")),
-          when(col("doc_id") % 9 === 0,
-            lit(" ## tag ## tag ##")).otherwise(lit("")),
-          when(col("doc_id") % 13 === 0,
-            lit(" 123 456 789 000 111 222 333 444")).otherwise(lit(""))).as("text"))
-      TextStats.gopherQualityFlags(staged, "doc_id", "text",
-          minWords = 30, maxWords = 100000, minMeanLen = 3.0, maxMeanLen = 10.0,
-          maxSymbolRatio = 0.05, maxBulletFrac = 0.5, maxEllipsisFrac = 0.2,
-          minAlphaFrac = 0.9, minStopwords = 1)
-        .select(col("doc_id"), col("n_words"), col("n_chars_tok"),
-          col("n_symbols"), col("n_lines"), col("n_bullet_lines"),
-          col("n_ellipsis_lines"), col("n_alpha_words"), col("n_req_stop"),
-          col("keep"))
-    }),
-
-    "q_bm25_topk" -> ((s, dir) => {
-      // Okapi BM25 top-50 for a 4-term keyword query (TextStats.bm25TopK):
-      // postings restricted to the query terms at the explode, df/corpus
-      // stats broadcast, top-k as TakeOrderedAndProject. Contributions are
-      // micro-quantized so the per-doc sum is order-free; k1=1.5/b=0.75
-      // are binary-exact so both engines fold identical constants.
-      TextStats.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-          terms = Seq("spark", "window", "merge", "vector"), topK = 50)
-        .select(col("doc").as("doc_id"), col("n_terms_hit"), col("bm25"))
-    }),
-
-    "q_ccnet_buckets" -> ((s, dir) => {
-      // CCNet-style quality bucketing: per-language head/middle/tail
-      // terciles of the char-trigram LM mean NLL (TextStats.trigramNll —
-      // the micro-quantized, engine-exact signal). r9: runs the SCALE
-      // path — a tiny exact cutoff table (two boundary order statistics
-      // per language) broadcast into a sort-free assignment join —
-      // which PropertySpec pins row-identical to the ntile(3) window
-      // form the oracle replays.
-      val docs = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
-      val nll = TextStats.trigramNll(docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      TextStats.ccnetBuckets(nll, TextStats.ccnetCutoffs(nll))
-        .select(col("doc_id"), col("lang"), col("mean_nll"), col("bucket"))
-    }),
-
-    "q_kmeans_embeddings" -> ((s, dir) => {
-      // Lloyd k-means, k=4, 2 update rounds (Similarity.kmeansLloyd):
-      // deterministic lowest-id seeds, integer micro-unit arithmetic end
-      // to end, so the DuckDB oracle unrolls the identical trajectory.
-      // Assignment is a per-row argmin over the broadcast centroid
-      // literal (shuffle-free); updates are one (label,pos) hash-agg.
-      Similarity.kmeansLloyd(t(s, dir, "embeddings"), "vec_id", "embedding",
-          k = 4, iters = 2)
-        .select(col("id").as("vec_id"), col("label"), col("d2_u"))
-    }),
-
-    "q_pq_adc" -> ((s, dir) => {
-      // Product quantisation + ADC scoring (Similarity.pqEncodeAdc):
-      // 64-dim vectors -> 8 codes from a 16-codeword sampled codebook;
-      // the ADC distance to vec 7 is a pure lookup-table sum (the table
-      // is one driver-computed literal), all in exact int64 micro-units
-      // so the oracle replays encode and scoring identically.
-      Similarity.pqEncodeAdc(t(s, dir, "embeddings"), "vec_id", "embedding",
-          m = 8, k = 16, queryId = 7L)
-        .select(col("id").as("vec_id"), col("code_str"), col("adc_u"))
-    }),
-
-    "q_split_assign" -> ((s, dir) => {
-      // Deterministic 90/5/5 train/val/test assignment by salted-md5 band
-      // (Sampling.splitAssign): stable under repartitioning and corpus
-      // growth, no shuffle; thresholds accumulate 0.9, 0.9+0.05 with the
-      // same double addition the oracle folds.
-      graft.pipeline.Sampling.splitAssign(
-          t(s, dir, "documents"), col("doc_id"),
-          Seq(("train", 0.9), ("val", 0.05), ("test", 0.05)))
-        .select(col("doc_id"), col("lang"), col("split"))
-    }),
-
-    "q_epoch_shuffle" -> ((s, dir) => {
-      // Deterministic epoch shuffle (Sampling.epochShuffle): the global
-      // per-epoch reorder of a training corpus — rank under a salted
-      // md5 of (epoch, id), ONE balanced range-sort + two-pass
-      // zipWithIndex positions (no single-reducer window). Evidence per
-      // epoch: the position-weighted id sum, which only matches if the
-      // ENTIRE permutation matches; two epochs prove the reorder really
-      // changes with the epoch while staying bit-reproducible.
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      Seq(1, 2).map { ep =>
-        graft.pipeline.Sampling.epochShuffle(docs, col("doc_id"), ep)
-          .agg(lit(ep).as("epoch"), count(lit(1)).as("n"),
-            sum(col("doc_id") * col("shuffle_pos")).as("pos_weighted_sum"),
-            max(col("shuffle_pos")).as("max_pos"))
-      }.reduce(_ unionByName _)
-    }),
-
-    "q_kn_trigram_nll" -> ((s, dir) => {
-      // Interpolated Kneser-Ney word-trigram NLL (TextStats.knTrigramNll):
-      // continuation-count backoff with binary-exact D=0.75, all counts
-      // from the one corpus trigram table, micro-quantized logs -> the
-      // oracle replays the identical probability tree.
-      TextStats.knTrigramNll(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 0), "doc_id", "text")
-    }),
-
-    "q_exif_metadata" -> ((s, dir) => {
-      // EXIF extraction (Multimodal.extractExifMeta): planted APP1 Exif
-      // TIFF segments — byte order alternating II/MM with id, inline
-      // SHORT + offset ASCII + offset RATIONAL + sub-IFD pointer entries
-      // — parsed executor-side by the marker/IFD walk; every recovered
-      // tag has a closed form in doc_id the oracle computes directly.
-      val mk = udf((id: Long) => graft.pipeline.Multimodal.plantedExifJpeg(
-        id, (320 + (id % 5) * 16).toInt, 240))
-      graft.pipeline.Multimodal.extractExifMeta(
-          t(s, dir, "documents").filter(col("doc_id") % 40 === 0)
-            .select(col("doc_id").as("media_id"), mk(col("doc_id")).as("payload")))
-        .select(col("media_id"), col("orientation"), col("make"),
-          col("taken_at"), col("pixel_x"))
-    }),
-
-    "q_clean_text" -> ((s, dir) => {
-      // Canonical cleaning projection (TextStats.cleanText): the staged
-      // corpus injects accented tokens, non-folding letters (ss/l-stroke,
-      // proving NON-fold parity), a control char and ragged whitespace by
-      // residue; both engines rewrite then clean identically. Output
-      // carries the md5 of the cleaned text so the hash compare pins
-      // every byte.
-      val staged = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit("  Café NAÏVE  résumé\tüber")).otherwise(lit("")),
-          when(col("doc_id") % 5 === 0,
-            lit(" straße łódź ŚWIĘTY")).otherwise(lit("")),
-          when(col("doc_id") % 7 === 0,
-            lit(" ctrl\u0001and\u001fchars")).otherwise(lit(""))).as("text"))
-      staged.select(col("doc_id"),
-        md5(TextStats.cleanText(col("text"))).as("clean_md5"),
-        length(TextStats.cleanText(col("text"))).as("clean_len"))
-    }),
-
-    "q_mann_kendall" -> ((s, dir) => {
-      // Mann-Kendall trend test - the significance companion to
-      // q_sen_slope (the reference pairs them in its trend analysis):
-      // S = sum of pairwise signs as an exact integer — r9 swaps the
-      // per-entity O(n²) pair-cloud self-join for the O(n log n)
-      // merge-sort inversion-count kernel (functions.MannKendallS;
-      // PropertySpec pins the two forms equal on tied series). The
-      // tie-corrected variance sums exact integer numerators with ONE
-      // trailing division; sqrt is correctly-rounded IEEE in both
-      // engines, so var_s and z are bit-identical before the q6 grid.
-      val daily = dailyTotals(s, dir)
-        .select(col("user_id"),
-          datediff(col("d"), to_date(lit("1970-01-01"))).as("t"), col("total"))
-      val sTab = daily.groupBy(col("user_id"))
-        .agg(graft.functions.MannKendallS.mannKendallS(
-            transform(array_sort(collect_list(struct(col("t"), col("total")))),
-              x => x.getField("total"))).as("s_stat"),
-          count(lit(1)).as("n"))
-      val ties = daily.groupBy(col("user_id"), col("total"))
-        .agg(count(lit(1)).as("tk"))
-        .groupBy(col("user_id"))
-        .agg(sum(col("tk") * (col("tk") - 1) * (col("tk") * 2 + 5)).as("tsum"))
-      sTab.join(ties, "user_id")
-        .withColumn("var_s",
-          (col("n") * (col("n") - 1) * (col("n") * 2 + 5) - col("tsum")) / 18.0)
-        .withColumn("z", q6(
-          when(col("var_s") <= 0.0, lit(0.0))
-            .when(col("s_stat") > 0, (col("s_stat") - 1) / sqrt(col("var_s")))
-            .when(col("s_stat") < 0, (col("s_stat") + 1) / sqrt(col("var_s")))
-            .otherwise(lit(0.0))))
-        .select(col("user_id"), col("s_stat"), col("n"),
-          q6(col("var_s")).as("var_s"), col("z"))
-    }),
-
-    "q_ivf_pq_topk" -> ((s, dir) => {
-      // The composed ANN scale path (Similarity.ivfPqTopK): an 8-cell
-      // coarse quantizer prunes to the query's 2 nearest cells (at lake
-      // scale the cell is a partition column -> partition pruning), then
-      // PQ codes + the broadcast ADC table score only the survivors.
-      // Exact int64 micro-units end to end; the oracle replays pruning,
-      // encode and scoring identically.
-      Similarity.ivfPqTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-          kCoarse = 8, m = 8, k = 16, nprobe = 2, queryId = 7L, topK = 20)
-        .select(col("id").as("vec_id"), col("cell"), col("code_str"), col("adc_u"))
-    }),
-
-    "q_length_buckets" -> ((s, dir) => {
-      // Dynamic-batching prep (Packing.lengthBuckets): bucket docs by
-      // padded token length (16-token bands capped at 96), deterministic
-      // batch numbers of 8 inside each bucket, per-row padding waste.
-      // One shuffle on the bucket key; batch ids are id-ordered so the
-      // layout is stable under retries and partitioning.
-      val docs = t(s, dir, "documents")
-      graft.pipeline.Packing.lengthBuckets(
-          docs.withColumn("_nt", size(filter(
-            split(lower(trim(col("text"))), "\\s+"), t => length(t) > 0))),
-          "doc_id", col("_nt"), step = 16, maxLen = 96, batchSize = 8)
-        .select(col("doc_id"), col("n_tokens"), col("bucket_hi"),
-          col("batch_id"), col("pad_waste"))
-    }),
-
-    "q_bpe_tokens" -> ((s, dir) => {
-      // Real byte-pair encoding with a fixed merge table
-      // (functions.BpeEncode — a native expression, one JVM loop per
-      // row): the standard lowest-rank-first merge loop per word,
-      // table shipped as a plan-time constant. The oracle replays the
-      // identical trajectory with a recursive CTE over the same literal
-      // merge list; the md5 over the joined token stream pins every
-      // token and its order.
-      val toks = graft.functions.BpeEncode.bpeEncode(col("text"), bpeMerges)
-      t(s, dir, "documents").filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id"), toks.as("_tk"))
-        .select(col("doc_id"),
-          size(col("_tk")).as("n_bpe_tokens"),
-          md5(array_join(col("_tk"), "|")).as("tok_sig"))
-    }),
-
-    "q_pettitt" -> ((s, dir) => {
-      // Pettitt change-point test (the step-change companion to
-      // q_mann_kendall): U_t = sum_{i<=t, j>t} sign(x_i - x_j), K =
-      // max |U_t|, change point the EARLIEST t attaining K, approximate
-      // p = 2 exp(-6K^2/(n^3+n^2)). r9: the O(n²) pair cloud is gone —
-      // with midranks r_t over the whole series, the per-element sign sum
-      // is s_t = sum_j sign(x_t - x_j) = 2 r_t - n - 1 (ties included via
-      // midranks), an exact integer from two window functions, and U_t is
-      // its running sum (within-prefix terms cancel by antisymmetry).
-      // O(n log n) per entity; PropertySpec pins rank-based == pair cloud
-      // on a tied series. p routes exp through the q6 grid (libm exp
-      // differs across builds; round(,6) flipped this query on the
-      // driver's DuckDB in r8).
-      val daily = dailyTotals(s, dir)
-        .select(col("user_id"),
-          datediff(col("d"), to_date(lit("1970-01-01"))).as("t"), col("total"))
-      val wAll = Window.partitionBy(col("user_id"))
-      // 2*midrank = 2*rank + tk - 1, so s_t = 2*rank + tk - n - 2
-      val st = daily
-        .withColumn("rnk", rank().over(
-          Window.partitionBy(col("user_id")).orderBy(col("total"))).cast("long"))
-        .withColumn("tk", count(lit(1)).over(
-          Window.partitionBy(col("user_id"), col("total"))))
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("s_t",
-          lit(2L) * col("rnk") + col("tk") - col("n") - lit(2L))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("t"))
-      st.withColumn("u_t", sum(col("s_t")).over(w))
-        .withColumn("k", max(abs(col("u_t"))).over(wAll))
-        .filter(abs(col("u_t")) === col("k"))
-        .groupBy(col("user_id"), col("n"), col("k"))
-        .agg(min(col("t")).cast("long").as("change_t"))
-        .select(col("user_id"), col("n"), col("k"), col("change_t"),
-          q6(lit(2.0) * exp(lit(-6.0) * col("k") * col("k") /
-            (col("n") * col("n") * col("n") + col("n") * col("n"))))
-            .as("p_approx"))
-    }),
-
-    "q_seasonal_mann_kendall" -> ((s, dir) => {
-      // Seasonal (Hirsch-Slack) Mann-Kendall: the MK statistic computed
-      // WITHIN each calendar month's subseries (pairs never cross
-      // months, so seasonality cannot masquerade as trend), then S and
-      // the tie-corrected variances SUM across months and the combined
-      // z applies the same continuity correction. r9: per-month S comes
-      // from the same O(n log n) inversion-count kernel as
-      // q_mann_kendall instead of a pair-cloud self-join.
-      val daily = dailyTotals(s, dir)
-        .select(col("user_id"), month(col("d")).as("m"),
-          datediff(col("d"), to_date(lit("1970-01-01"))).as("t"), col("total"))
-      val sm = daily.groupBy(col("user_id"), col("m"))
-        .agg(graft.functions.MannKendallS.mannKendallS(
-            transform(array_sort(collect_list(struct(col("t"), col("total")))),
-              x => x.getField("total"))).as("s_m"))
-      val nm = daily.groupBy(col("user_id"), col("m")).agg(count(lit(1)).as("n_m"))
-      val ties = daily.groupBy(col("user_id"), col("m"), col("total"))
-        .agg(count(lit(1)).as("tk"))
-        .groupBy(col("user_id"), col("m"))
-        .agg(sum(col("tk") * (col("tk") - 1) * (col("tk") * 2 + 5)).as("tsum"))
-      smkJoin(sm, nm, ties)
-    }),
-
-    "q_cusum_batch" -> ((s, dir) => {
-      // Batch CUSUM change detection (streaming.StatefulCusum — the SAME
-      // pure step function the live flatMapGroupsWithState form folds):
-      // warm-up mean from the first 10 days, slack 50, threshold 400 on
-      // the ~(mean 124, sd 102) daily totals. Per-step HALF_UP
-      // quantization at 8 decimals makes the fold engine-exact, so the
-      // oracle replays every state transition with a recursive CTE
-      // (KBDI's parity rule).
-      import s.implicits._
-      val samples = dailyTotals(s, dir)
-        .select(col("user_id").as("key"),
-          datediff(col("d"), to_date(lit("1970-01-01"))).as("t"),
-          col("total").as("x"))
-        .as[graft.streaming.StatefulCusum.Sample]
-      graft.streaming.StatefulCusum
-        .detectBatch(samples, warmup = 10, slack = 50.0, h = 400.0)
-        .toDF()
-        .select(col("key").as("user_id"), col("t"), col("direction"),
-          qk(col("stat"), 6).as("stat"))
-    }),
-
-    "q_gpd_pot" -> ((s, dir) => {
-      // Peaks-over-threshold GPD fit (the EVT companion to the GEV/Gumbel
-      // block-maxima fits): excesses over u = 300 per event_type, L-moment
-      // estimators in Hosking's k parameterisation (lambda1/lambda2 = 2+k,
-      // alpha = lambda1 (1+k)) and the F=0.99 return level
-      // u + alpha/k (1 - (1-F)^k). Same rank-weighted PWM sums as
-      // q_lmoments; closed forms replayed by the oracle.
-      val u = 300.0
-      val exc = dailyTotals(s, dir).filter(col("total") > u)
-        .select(col("user_id"), (col("total") - u).as("y"))
-        .groupBy(col("user_id"))
-        .agg(sort_array(collect_list(col("y"))).as("arr"),
-          count(lit(1)).as("n_exceed"))
-        .filter(col("n_exceed") >= 5)
-      // r9 hardening: k/alpha land on the q6 grid (engine-identical given
-      // identical L-moments), pow — a libm call — is itself q6-gridded on
-      // the gridded k, and rl99 is then pure IEEE arithmetic: no round().
-      val (l1, l2, _) = Stats.lMoments(col("arr"))
-      exc.select(col("user_id"), col("n_exceed"), l1.as("_l1"), l2.as("_l2"))
-        .withColumn("k_shape", q6(col("_l1") / col("_l2") - 2.0))
-        .withColumn("alpha", q6(col("_l1") * (col("k_shape") + 1.0)))
-        .select(col("user_id"), col("n_exceed"),
-          col("k_shape"), col("alpha"),
-          (lit(u) + col("alpha") / col("k_shape") *
-            (lit(1.0) - q6(pow(lit(0.01), col("k_shape"))))).as("rl99"))
-    }),
-
-    "q_acf_daily" -> ((s, dir) => {
-      // Lag-1 / lag-7 autocorrelation of each entity's daily series (the
-      // serial-dependence diagnostic behind MK variance corrections).
-      // Totals quantize to EXACT milli-units once; deviations, products
-      // and both sums are then pure int64 arithmetic — order-free on any
-      // engine and partitioning — and only the final ratio is floating.
-      val daily = dailyTotals(s, dir)
-        .select(col("user_id"),
-          datediff(col("d"), to_date(lit("1970-01-01"))).as("t"),
-          uq(col("total"), 1000).as("xu"))
-      val st = daily.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("xu")).cast("double") / count(lit(1))).cast("long").as("mu"))
-      val d = daily.join(st, "user_id")
-        .select(col("user_id"), col("t"), (col("xu") - col("mu")).as("dev"), col("n"))
-        .localCheckpoint(false) // feeds den + both lag joins (x2 sides each)
-      val d0 = d.groupBy(col("user_id"), col("n"))
-        .agg(sum(col("dev") * col("dev")).as("den"))
-      def lagNum(k: Int) = d.alias("a")
-        .join(d.alias("b"), col("a.user_id") === col("b.user_id") &&
-          col("b.t") === col("a.t") + k)
-        .groupBy(col("a.user_id").as("user_id"))
-        .agg(sum(col("a.dev") * col("b.dev")).as(s"num$k"))
-      // raw int64/int64 ratios are bit-identical in both engines; the
-      // r8 round(,6) wrapper was the only version-dependent step
-      d0.join(lagNum(1), "user_id").join(lagNum(7), "user_id")
-        .select(col("user_id"), col("n"),
-          (col("num1").cast("double") / col("den")).as("r1"),
-          (col("num7").cast("double") / col("den")).as("r7"))
-    }),
-
-    "q_zipf_slope" -> ((s, dir) => {
-      // Zipf-law diagnostic per language: least-squares slope of
-      // ln(freq) on ln(rank) over each lang's top-100 tokens. Both logs
-      // micro-quantize to int64 BEFORE the regression sums, so
-      // S_xy/S_xx accumulate exactly (order-free) and only the final
-      // ratio is floating — a healthy natural-language corpus sits
-      // near slope -1.
-      val toks = t(s, dir, "documents")
-        .select(col("lang"), explode(filter(
-          split(lower(trim(col("text"))), "\\s+"), t => length(t) > 0)).as("tok"))
-      val counts = toks.groupBy(col("lang"), col("tok"))
-        .agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(col("c").desc, col("tok"))
-      val ranked = counts.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 100)
-        // floor(ln·1e6 + 0.5), not round(ln·1e6): portable across libm
-        // builds; the regression sums then accumulate exact int64s
-        .select(col("lang"),
-          floor(log(col("rk").cast("double")) * lit(1e6) + lit(0.5)).as("lx"),
-          floor(log(col("c").cast("double")) * lit(1e6) + lit(0.5)).as("ly"))
-      ranked.groupBy(col("lang"))
-        .agg(count(lit(1)).as("r_n"), sum(col("lx")).as("sx"),
-          sum(col("ly")).as("sy"), sum(col("lx") * col("ly")).as("sxy"),
-          sum(col("lx") * col("lx")).as("sxx"))
-        .select(col("lang"), col("r_n"),
-          ((col("r_n") * col("sxy") - col("sx") * col("sy")).cast("double") /
-            (col("r_n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-            .as("zipf_slope"))
-    }),
-
-    "q_winsorize" -> ((s, dir) => {
-      // Winsorized per-type value stats: clip to the DISCRETE p05/p95
-      // order statistics (rank ceil(q·n) — interpolated quantiles
-      // diverge between engines in the last ulp, order statistics are
-      // data values and exact). The window sort spills, so group size
-      // never bounds executor memory; the clipped mean goes through one
-      // micro-quantized integer sum (order-free).
-      val ev = t(s, dir, "events").select(col("event_type"), col("value"))
-      val w = Window.partitionBy(col("event_type")).orderBy(col("value"))
-      val wAll = Window.partitionBy(col("event_type"))
-      val ranked = ev.withColumn("rk", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("lo_i", ceil(col("n") * 0.05).cast("int"))
-        .withColumn("hi_i", ceil(col("n") * 0.95).cast("int"))
-      val bounds = ranked
-        .filter(col("rk") === col("lo_i") || col("rk") === col("hi_i"))
-        .groupBy(col("event_type"))
-        .agg(min(when(col("rk") === col("lo_i"), col("value"))).as("lo"),
-          max(when(col("rk") === col("hi_i"), col("value"))).as("hi"))
-      ev.join(bounds, "event_type")
-        .withColumn("cv", least(greatest(col("value"), col("lo")), col("hi")))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("value") < col("lo"), 1L).otherwise(0L)).as("n_clip_lo"),
-          sum(when(col("value") > col("hi"), 1L).otherwise(0L)).as("n_clip_hi"),
-          min(col("lo")).as("_lo"), min(col("hi")).as("_hi"),
-          sum(uq(col("cv"), 1e6)).as("_su"))
-        .select(col("event_type"), col("n"), col("n_clip_lo"), col("n_clip_hi"),
-          // p05/p95 are DATA values (identical parquet doubles in both
-          // engines) — emit raw; round(,6) was the only portability risk
-          col("_lo").as("p05"), col("_hi").as("p95"),
-          (round(col("_su").cast("double") / col("n")) / 1e6).as("mean_winsor"))
-    }),
-
-    "q_spearman_daily" -> ((s, dir) => {
-      // Spearman rank correlation between each entity's daily total and
-      // its daily event count, on TIE-BROKEN ranks (secondary key = day
-      // number, so ranks are permutations and rho = 1 - 6 sum(d^2) /
-      // (n(n^2-1)) holds exactly) - every input to the ratio is an
-      // exact integer, engine-identical under any partitioning.
-      val daily = dailyTotals(s, dir)
-        .withColumn("t", datediff(col("d"), to_date(lit("1970-01-01"))))
-      val wTot = Window.partitionBy(col("user_id"))
-        .orderBy(col("total"), col("t"))
-      val wEv = Window.partitionBy(col("user_id"))
-        .orderBy(col("n_events"), col("t"))
-      daily
-        .withColumn("r1", row_number().over(wTot).cast("long"))
-        .withColumn("r2", row_number().over(wEv).cast("long"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"),
-          sum((col("r1") - col("r2")) * (col("r1") - col("r2"))).as("_d2"))
-        .filter(col("n") >= 2)
-        // r10 allowlist shrink: rho is a pure-IEEE function of exact ints
-        // (one mult, one div, one sub — all correctly rounded), so the raw
-        // double is bit-identical in both engines; round(,6) was the only
-        // version-dependent step
-        .select(col("user_id"), col("n"),
-          (lit(1.0) - lit(6.0) * col("_d2") /
-            (col("n") * (col("n") * col("n") - 1))).as("rho"))
-    }),
-
-    "q_k_anonymity" -> ((s, dir) => {
-      // Privacy audit for training-data release: group sizes over the
-      // (lang, source) quasi-identifier, rows in groups below k = 10
-      // flagged as re-identifiable. One hash-agg; at corpus scale the
-      // audit is the same single shuffle however many rows.
-      t(s, dir, "documents")
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("group_n"))
-        .withColumn("at_risk", col("group_n") < 10)
-        .orderBy(col("lang"), col("source"))
-    }),
-
-    "q_kendall_tau" -> ((s, dir) => {
-      // Kendall's tau-b between daily total and daily event count per
-      // entity. r10: Knight's O(n log n) algorithm (functions.KendallCmd
-      // — the bivariate extension of the q_mann_kendall merge kernel)
-      // replaces the last per-entity O(n²) pair-cloud self-join: sort by
-      // (x, y), count strict y-inversions, C−D = n0−n1−n2+n3−2·swaps
-      // with tie sums read off the sorted runs. One hash-agg, no join;
-      // every input to the final ratio is an exact int64, bit-identical
-      // to the pair cloud (PropertySpec pins the two forms on ties). At
-      // century-long daily series this is ~600k comparisons per entity
-      // instead of ~650M joined rows.
-      dailyTotals(s, dir)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"),
-          graft.functions.MannKendallS.kendallCmd(collect_list(struct(
-            col("total").as("x"),
-            col("n_events").cast("double").as("y")))).as("kt"))
-        .withColumn("n0", (col("n") * (col("n") - 1) / 2).cast("long"))
-        .filter(col("n0") > col("kt.n1") && col("n0") > col("kt.n2"))
-        .select(col("user_id"), col("n"), col("kt.cmd").as("cmd"),
-          // raw ratio: exact int64s into one correctly-rounded sqrt and
-          // divide — bit-identical in both engines, no round needed
-          (col("kt.cmd") / sqrt(((col("n0") - col("kt.n1")) *
-            (col("n0") - col("kt.n2"))).cast("double"))).as("tau_b"))
-    }),
-
-    "q_js_divergence" -> ((s, dir) => {
-      // Jensen-Shannon divergence between the en and de token
-      // distributions — the corpus-drift diagnostic. Probabilities are
-      // exact count ratios; each token's contribution quantizes to
-      // nano-units BEFORE the sum (order-free), and absent-side tokens
-      // flow through the same expression with q = 0 (the 0*ln term
-      // drops via the conditional).
-      val toks = t(s, dir, "documents")
-        .filter(col("lang").isin("en", "de"))
-        .select(col("lang"), explode(filter(
-          split(lower(trim(col("text"))), "\\s+"), t => length(t) > 0)).as("tok"))
-      val counts = toks.groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c"))
-      val totals = counts.groupBy(col("lang")).agg(sum(col("c")).as("nt"))
-      val cw = counts.join(totals, "lang")
-      val en = cw.filter(col("lang") === "en")
-        .select(col("tok"), col("c").as("ca"), col("nt").as("na"))
-      val de = cw.filter(col("lang") === "de")
-        .select(col("tok"), col("c").as("cb"), col("nt").as("nb"))
-      val j = en.join(de, Seq("tok"), "full_outer")
-      // the absent side of the full-outer join loses its total: re-attach
-      // both corpus totals from a one-row broadcast
-      val filled = j.crossJoin(broadcast(totals.agg(
-          max(when(col("lang") === "en", col("nt"))).as("tna"),
-          max(when(col("lang") === "de", col("nt"))).as("tnb"))))
-        .select(col("tok"),
-          coalesce(col("ca"), lit(0L)).as("ca"), col("tna"),
-          coalesce(col("cb"), lit(0L)).as("cb"), col("tnb"))
-      // r9 hardening (same class as the r8 vocab-entropy fail): ln goes
-      // through the q6 grid so libm spread can't flip nano-units, and the
-      // final is (exact long)/2e9 with no round().
-      val p = col("ca").cast("double") / col("tna")
-      val q = col("cb").cast("double") / col("tnb")
-      val m = (p + q) / 2.0
-      val term = when(col("ca") > 0, p * qln(p / m)).otherwise(lit(0.0)) +
-        when(col("cb") > 0, q * qln(q / m)).otherwise(lit(0.0))
-      filled
-        .select(floor(term * lit(1e9) + lit(0.5)).as("tu"))
-        .agg(count(lit(1)).as("n_union_tokens"), sum(col("tu")).as("_su"))
-        .select(col("n_union_tokens"),
-          (col("_su").cast("double") / lit(2e9)).as("js_divergence"))
-    }),
-
-    "q_cramers_v" -> ((s, dir) => {
-      // Chi-square association between lang and source with Cramér's V:
-      // observed/expected from one contingency hash-agg, per-cell
-      // contributions micro-quantized before the sum (order-free), and
-      // V = sqrt(chi2 / (n * min(r-1, c-1))). Margins ride a broadcast.
-      // r8 lesson: the oracle must build the cell term with the IDENTICAL
-      // expression tree (e computed ONCE, then (o-e)*(o-e)/e*1e6+0.5
-      // floored) — inlining rn*cn/n three times associates differently
-      // and ±1-unit cell differences survive into the sum. Finals are
-      // (exact long)/1e6 and a correctly-rounded sqrt — no round().
-      val docs = t(s, dir, "documents")
-      val cells = docs.groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o"))
-      val rowM = cells.groupBy(col("lang")).agg(sum(col("o")).as("rn"))
-      val colM = cells.groupBy(col("source")).agg(sum(col("o")).as("cn"))
-      val tot = cells.agg(sum(col("o")).as("n"),
-        countDistinct(col("lang")).as("r"), countDistinct(col("source")).as("c"))
-      cells.join(broadcast(rowM), "lang").join(broadcast(colM), "source")
-        .crossJoin(broadcast(tot))
-        .withColumn("e", (col("rn") * col("cn")).cast("double") / col("n"))
-        .withColumn("tu", floor((col("o") - col("e")) * (col("o") - col("e"))
-          / col("e") * lit(1e6) + lit(0.5)))
-        .groupBy(col("n"), col("r"), col("c"))
-        .agg(sum(col("tu")).as("_su"), count(lit(1)).as("n_cells"))
-        .select(col("n"), col("n_cells"),
-          (col("_su").cast("double") / lit(1e6)).as("chi2"),
-          sqrt(col("_su").cast("double") / lit(1e6) /
-            (col("n") * least(col("r") - 1, col("c") - 1)).cast("double"))
-            .as("cramers_v"))
-    }),
-
-    "q_gini_tokens" -> ((s, dir) => {
-      // Gini concentration of the token-frequency distribution per lang
-      // (how head-heavy is the vocabulary): with counts ranked ascending,
-      // G = (2 sum(rank*c) - (N+1) sum(c)) / (N sum(c)) — every term an
-      // exact int64 and the single trailing division is IEEE-exact.
-      // (r8/r9 hash-fails were the oracle's uncast sum(c) → HUGEINT →
-      // pandas float64 on the driver, not the values; see header note.)
-      val counts = t(s, dir, "documents")
-        .select(col("lang"), explode(filter(
-          split(lower(trim(col("text"))), "\\s+"), t => length(t) > 0)).as("tok"))
-        .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy(col("lang")).orderBy(col("c"), col("tok"))
-      counts.withColumn("rk", row_number().over(w).cast("long"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_types"), sum(col("c")).as("n_tokens"),
-          sum(col("rk") * col("c")).as("_src"))
-        .select(col("lang"), col("n_types"), col("n_tokens"),
-          ((lit(2L) * col("_src") - (col("n_types") + 1) * col("n_tokens"))
-            .cast("double") /
-            (col("n_types") * col("n_tokens")).cast("double")).as("gini"))
-    }),
-
-    "q_vocab_entropy" -> ((s, dir) => {
-      // Shannon entropy of each language's token distribution plus
-      // Herdan's C (lexical richness, ln types / ln tokens). Entropy
-      // contributions -p ln p quantize to nano-units per TYPE before the
-      // sum (order-free); p is an exact count ratio against the
-      // broadcast per-lang total. r9: ln routes through the q6 grid
-      // first — libm ln differs across builds, and a ±1-ulp spread
-      // ×1e9 flipped nano-units on the driver in r8. Entropy is
-      // therefore exact-by-construction but accurate to ~6 decimals
-      // (each ln carries ≤5e-7 grid error).
-      val counts = t(s, dir, "documents")
-        .select(col("lang"), explode(filter(
-          split(lower(trim(col("text"))), "\\s+"), t => length(t) > 0)).as("tok"))
-        .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c"))
-      val totals = counts.groupBy(col("lang")).agg(sum(col("c")).as("nt"),
-        count(lit(1)).as("n_types"))
-      val p = col("c").cast("double") / col("nt")
-      counts.join(broadcast(totals), "lang")
-        .withColumn("hu", floor(-p * qln(p) * lit(1e9) + lit(0.5)))
-        .groupBy(col("lang"), col("nt"), col("n_types"))
-        .agg(sum(col("hu")).as("_sh"))
-        .select(col("lang"), col("n_types"), col("nt").as("n_tokens"),
-          (col("_sh").cast("double") / lit(1e9)).as("entropy"),
-          (qln(col("n_types").cast("double")) /
-            qln(col("nt").cast("double"))).as("herdan_c"))
-    })
-  )
-
-  private def smkJoin(sm: DataFrame, nm: DataFrame, ties: DataFrame): DataFrame = {
-      sm.join(nm, Seq("user_id", "m")).join(ties, Seq("user_id", "m"))
-        // exact integer numerator per month; ONE division after the sum
-        // keeps the cross-month total order-free (a sum of per-month
-        // k/18.0 doubles would depend on aggregation order)
-        .withColumn("var_num",
-          col("n_m") * (col("n_m") - 1) * (col("n_m") * 2 + 5) - col("tsum"))
-        .groupBy(col("user_id"))
-        .agg(sum(col("s_m")).as("s_total"),
-          (sum(col("var_num")) / 18.0).as("_v"),
-          count(lit(1)).as("n_seasons"))
-        .select(col("user_id"), col("s_total"), col("n_seasons"),
-          // q6, not round(,6): _v and z are bit-identical in both engines
-          // (exact ints, one division, correctly-rounded sqrt) but the r8
-          // round(,6) finals flipped on the driver's DuckDB build
-          q6(col("_v")).as("var_s"),
-          q6(
-            when(col("_v") <= 0.0, lit(0.0))
-              .when(col("s_total") > 0, (col("s_total") - 1) / sqrt(col("_v")))
-              .when(col("s_total") < 0, (col("s_total") + 1) / sqrt(col("_v")))
-              .otherwise(lit(0.0))).as("z"))
-  }
-
-  /** GPT-2-convention merge table for [[graft.functions.BpeEncode]] —
-    * rank = position; chosen so corpus words exercise cascading merges
-    * ("data" needs rank-0's output before ranks 10/11 can fire). */
-  private val bpeMerges: Seq[(String, String)] = Seq(
-    ("t", "a"), ("ta", "b"), ("l", "e"), ("tab", "le"), ("s", "p"),
-    ("a", "r"), ("sp", "ar"), ("spar", "k"), ("r", "o"), ("ro", "w"),
-    ("d", "a"), ("da", "ta"))
-
-  private def oracle43: Map[String, String] = Map(
-
-    "q_gopher_quality" ->
-      """with staged as (select doc_id, text
-        |  || case when doc_id % 4 = 0 then chr(10) || '- bullet point list item'
-        |       || chr(10) || '- second bullet entry' else '' end
-        |  || case when doc_id % 6 = 0
-        |       then chr(10) || 'this sentence trails off...' else '' end
-        |  || case when doc_id % 9 = 0 then ' ## tag ## tag ##' else '' end
-        |  || case when doc_id % 13 = 0
-        |       then ' 123 456 789 000 111 222 333 444' else '' end as text
-        | from documents),
-        |f as (select doc_id, text,
-        |  list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> len(x) > 0) toks,
-        |  string_split(text, chr(10)) lines from staged),
-        |m as (select doc_id,
-        |  cast(len(toks) as int) n_words,
-        |  cast(coalesce(list_sum(list_transform(toks, x -> len(x))), 0) as bigint)
-        |    n_chars_tok,
-        |  cast(len(regexp_extract_all(text, '#'))
-        |    + len(regexp_extract_all(text, '\.\.\.')) as int) n_symbols,
-        |  cast(len(lines) as int) n_lines,
-        |  cast(len(list_filter(lines,
-        |    x -> regexp_matches(trim(x), '^[-*•‣◦]'))) as int) n_bullet_lines,
-        |  cast(len(list_filter(lines,
-        |    x -> regexp_matches(trim(x), '(\.\.\.|…)$'))) as int) n_ellipsis_lines,
-        |  cast(len(list_filter(toks,
-        |    x -> regexp_matches(x, '[a-zà-öø-ÿα-ωа-я]'))) as int) n_alpha_words,
-        |  cast(len(list_filter(['the','be','to','of','and','that','have','with'],
-        |    w -> list_contains(toks, w))) as int) n_req_stop
-        | from f)
-        |select doc_id, n_words, n_chars_tok, n_symbols, n_lines,
-        |  n_bullet_lines, n_ellipsis_lines, n_alpha_words, n_req_stop,
-        |  (n_words >= 30 and n_words <= 100000
-        |   and n_chars_tok >= 3.0 * n_words and n_chars_tok <= 10.0 * n_words
-        |   and n_symbols <= 0.05 * n_words
-        |   and n_bullet_lines <= 0.5 * n_lines
-        |   and n_ellipsis_lines <= 0.2 * n_lines
-        |   and n_alpha_words >= 0.9 * n_words
-        |   and n_req_stop >= 1) keep
-        |from m""".stripMargin,
-
-    "q_bm25_topk" ->
-      """with d as (select doc_id doc,
-        |  list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> len(x) > 0) toks from documents),
-        |dl as (select doc, toks, cast(len(toks) as int) dl from d),
-        |st as (select count(*) n_docs, sum(dl) sum_dl from dl),
-        |posts as (select doc, dl, term, count(*) tf
-        |  from (select doc, dl, unnest(toks) term from dl)
-        |  where term in ('spark', 'window', 'merge', 'vector')
-        |  group by 1, 2, 3),
-        |dft as (select term, count(*) df_t from posts group by 1),
-        |lp as (select doc,
-        |    cast(floor(ln(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-        |      * tf * 2.5
-        |      / (tf + 1.5 * (0.25 + 0.75 * (dl * n_docs / sum_dl)))
-        |      * 1e6 + 0.5) as bigint) lp
-        |  from posts join dft using (term) cross join st),
-        |sc as (select doc, sum(lp) score_u, count(*) n_terms_hit
-        |  from lp group by 1)
-        |select doc doc_id, cast(n_terms_hit as bigint) n_terms_hit,
-        |  cast(score_u as double) / 1e6 bm25
-        |from sc order by score_u desc, doc limit 50""".stripMargin,
-
-    "q_ccnet_buckets" ->
-      """with base as (select doc_id, lower(text) t from documents
-        |  where doc_id % 5 = 0 and length(text) >= 3),
-        |pos as (select doc_id, t, unnest(range(1, length(t) - 1)) i from base),
-        |tri as (select doc_id, substr(t, cast(i as int), 3) tg from pos),
-        |lm as (select tg, count(*) c from tri group by 1),
-        |tot as (select sum(c) n from lm),
-        |lpq as (select doc_id,
-        |    cast(floor(ln(cast(c as double) / n) * 1e6 + 0.5) as bigint) lp
-        |  from tri join lm using (tg) cross join tot),
-        |nll as (select doc_id, count(*) n_trigrams,
-        |    -round(cast(sum(lp) as double) / count(*)) / 1e6 mean_nll
-        |  from lpq group by 1),
-        |j as (select n.doc_id, d.lang, n.mean_nll,
-        |    ntile(3) over (partition by d.lang
-        |      order by n.mean_nll, n.doc_id) b
-        |  from nll n join documents d using (doc_id))
-        |select doc_id, lang, mean_nll,
-        |  case b when 1 then 'head' when 2 then 'middle' else 'tail' end bucket
-        |from j""".stripMargin,
-
-    "q_kmeans_embeddings" ->
-      """with base as (select vec_id id,
-        |  list_transform(embedding,
-        |    x -> cast(floor(cast(x as double) * 1e6 + 0.5) as bigint)) vq
-        | from embeddings),
-        |c0 as (select cast(row_number() over (order by id) - 1 as int) as label,
-        |    vq cq from (select * from base order by id limit 4)),
-        |d1 as (select b.id, b.vq, c.label,
-        |    cast(list_sum(list_transform(range(len(b.vq)),
-        |      i -> (b.vq[i+1] - c.cq[i+1]) * (b.vq[i+1] - c.cq[i+1])))
-        |      as bigint) d2
-        |  from base b cross join c0 c),
-        |a1 as (select id, vq, label, d2 from
-        |  (select *, row_number() over (partition by id order by d2, label) rn
-        |   from d1) where rn = 1),
-        |u1 as (select label, pos,
-        |    cast(round(cast(sum(v) as double) / count(*)) as bigint) cv
-        |  from (select label, unnest(vq) v, unnest(range(len(vq))) pos from a1)
-        |  group by 1, 2),
-        |c1 as (select label, list(cv order by pos) cq from u1 group by 1),
-        |d2i as (select b.id, b.vq, c.label,
-        |    cast(list_sum(list_transform(range(len(b.vq)),
-        |      i -> (b.vq[i+1] - c.cq[i+1]) * (b.vq[i+1] - c.cq[i+1])))
-        |      as bigint) d2
-        |  from base b cross join c1 c),
-        |a2 as (select id, vq, label, d2 from
-        |  (select *, row_number() over (partition by id order by d2, label) rn
-        |   from d2i) where rn = 1),
-        |u2 as (select label, pos,
-        |    cast(round(cast(sum(v) as double) / count(*)) as bigint) cv
-        |  from (select label, unnest(vq) v, unnest(range(len(vq))) pos from a2)
-        |  group by 1, 2),
-        |c2 as (select label, list(cv order by pos) cq from u2 group by 1),
-        |d3 as (select b.id, b.vq, c.label,
-        |    cast(list_sum(list_transform(range(len(b.vq)),
-        |      i -> (b.vq[i+1] - c.cq[i+1]) * (b.vq[i+1] - c.cq[i+1])))
-        |      as bigint) d2
-        |  from base b cross join c2 c)
-        |select id vec_id, label, d2 d2_u from
-        |  (select *, row_number() over (partition by id order by d2, label) rn
-        |   from d3) where rn = 1""".stripMargin,
-
-    "q_pq_adc" ->
-      """with base as (select vec_id id,
-        |  list_transform(embedding,
-        |    x -> cast(floor(cast(x as double) * 1e6 + 0.5) as bigint)) vq
-        | from embeddings),
-        |cb as (select cast(row_number() over (order by id) - 1 as int) as j,
-        |    vq cq from (select * from base order by id limit 16)),
-        |q as (select vq qv from base where id = 7),
-        |ss as (select unnest(range(8)) s),
-        |d as (select b.id, ss.s, c.j,
-        |    cast(list_sum(list_transform(range(8),
-        |      i -> (b.vq[ss.s*8+i+1] - c.cq[ss.s*8+i+1])
-        |         * (b.vq[ss.s*8+i+1] - c.cq[ss.s*8+i+1]))) as bigint) d2
-        |  from base b cross join ss cross join cb c),
-        |codes as (select id, s, j code from
-        |  (select *, row_number() over (partition by id, s order by d2, j) rn
-        |   from d) where rn = 1),
-        |t as (select ss.s, c.j,
-        |    cast(list_sum(list_transform(range(8),
-        |      i -> (q.qv[ss.s*8+i+1] - c.cq[ss.s*8+i+1])
-        |         * (q.qv[ss.s*8+i+1] - c.cq[ss.s*8+i+1]))) as bigint) td
-        |  from q cross join ss cross join cb c)
-        |select c.id vec_id,
-        |  array_to_string(list(c.code order by c.s), '-') code_str,
-        |  cast(sum(t.td) as bigint) adc_u
-        |from codes c join t on t.s = c.s and t.j = c.code
-        |group by c.id""".stripMargin,
-
-    "q_split_assign" ->
-      """select doc_id, lang,
-        |  case
-        |    when cast(cast(concat('0x', substr(md5(concat(cast(doc_id as varchar),
-        |        'graft-split')), 1, 13)) as ubigint) as double)
-        |      / 4503599627370496.0 < 0.9 then 'train'
-        |    when cast(cast(concat('0x', substr(md5(concat(cast(doc_id as varchar),
-        |        'graft-split')), 1, 13)) as ubigint) as double)
-        |      / 4503599627370496.0 < (0.9 + 0.05) then 'val'
-        |    else 'test'
-        |  end split
-        |from documents""".stripMargin,
-
-    // the md5 rank replayed per epoch; pos_weighted_sum pins the whole
-    // permutation (any transposition changes it)
-    "q_epoch_shuffle" ->
-      """with ranked as (
-        |  select e.epoch, doc_id,
-        |    row_number() over (partition by e.epoch
-        |      order by md5('graft:' || e.epoch || ':' || doc_id), doc_id)
-        |      - 1 pos
-        |  from documents cross join (values (1), (2)) e(epoch))
-        |select cast(epoch as int) epoch, count(*) n,
-        |  cast(sum(doc_id * pos) as bigint) pos_weighted_sum,
-        |  cast(max(pos) as bigint) max_pos
-        |from ranked group by 1""".stripMargin,
-
-    "q_kn_trigram_nll" ->
-      """with tk as (select doc_id,
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> len(x) > 0) tk
-        |  from documents where doc_id % 3 = 0),
-        |tri as (select doc_id,
-        |    tk[cast(i as int)+1] w1, tk[cast(i as int)+2] w2,
-        |    tk[cast(i as int)+3] w3
-        |  from (select doc_id, tk, unnest(range(0, len(tk)-2)) i
-        |        from tk where len(tk) >= 3)),
-        |c3t as (select w1, w2, w3, count(*) c3 from tri group by 1, 2, 3),
-        |c2t as (select w1, w2, sum(c3) c2, count(*) nf3 from c3t group by 1, 2),
-        |nmid as (select w2, w3, count(*) nm from c3t group by 1, 2),
-        |nctx2 as (select w2, count(*) nc2 from c3t group by 1),
-        |bg as (select distinct w2, w3 from c3t),
-        |nfol2 as (select w2, count(*) nf2 from bg group by 1),
-        |npre as (select w3, npre, cast(sum(npre) over () as bigint) nbg from
-        |  (select w3, count(*) npre from bg group by 1)),
-        |lp as (select doc_id, cast(floor(ln(
-        |    (greatest(c3 - 0.75, 0.0) / c2) +
-        |    (((0.75 * nf3) / c2) *
-        |      ((greatest(nm - 0.75, 0.0) / nc2) +
-        |       (((0.75 * nf2) / nc2) * (npre / nbg))))
-        |  ) * 1e6 + 0.5) as bigint) lp
-        |  from tri
-        |  join c3t using (w1, w2, w3)
-        |  join c2t using (w1, w2)
-        |  join nmid using (w2, w3)
-        |  join nctx2 using (w2)
-        |  join nfol2 using (w2)
-        |  join npre using (w3))
-        |select doc_id, count(*) n_trigrams,
-        |  -round(cast(sum(lp) as double) / count(*)) / 1e6 mean_nll
-        |from lp group by 1""".stripMargin,
-
-    "q_exif_metadata" ->
-      """select doc_id media_id,
-        |  cast(1 + doc_id % 8 as int) orientation,
-        |  'cam' || cast(doc_id % 4 as varchar) make,
-        |  '2026:01:' || lpad(cast(1 + doc_id % 27 as varchar), 2, '0')
-        |    || ' ' || lpad(cast(doc_id % 24 as varchar), 2, '0')
-        |    || ':00:00' taken_at,
-        |  cast(320 + (doc_id % 5) * 16 as bigint) pixel_x
-        |from documents where doc_id % 40 = 0""".stripMargin,
-
-    "q_clean_text" ->
-      """with staged as (select doc_id, text
-        |  || case when doc_id % 3 = 0
-        |       then '  Café NAÏVE  résumé' || chr(9) || 'über' else '' end
-        |  || case when doc_id % 5 = 0 then ' straße łódź ŚWIĘTY' else '' end
-        |  || case when doc_id % 7 = 0
-        |       then ' ctrl' || chr(1) || 'and' || chr(31) || 'chars' else '' end
-        |  as text from documents),
-        |c as (select doc_id, trim(regexp_replace(regexp_replace(
-        |    strip_accents(lower(text)), '[\x00-\x1f\x7f]', '', 'g'),
-        |    '\s+', ' ', 'g')) clean
-        |  from staged)
-        |select doc_id, md5(clean) clean_md5,
-        |  cast(length(clean) as int) clean_len from c""".stripMargin,
-
-    "q_mann_kendall" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t,
-         |   total from daily),
-         |st as (select a.user_id,
-         |   cast(sum(sign(b.total - a.total)) as bigint) s_stat
-         | from dd a join dd b on a.user_id = b.user_id and a.t < b.t
-         | group by 1),
-         |nt as (select user_id, count(*) n from dd group by 1),
-         |ties as (select user_id,
-         |   sum(tk * (tk - 1) * (tk * 2 + 5)) tsum from
-         |   (select user_id, total, count(*) tk from dd group by 1, 2)
-         | group by 1),
-         |j as (select s.user_id, s.s_stat, n.n,
-         |   (n.n * (n.n - 1) * (n.n * 2 + 5) - t.tsum) / 18.0 var_s
-         | from st s join nt n using (user_id) join ties t using (user_id))
-         |select user_id, s_stat, n,
-         |  (floor(var_s * 1e6 + 0.5) / 1e6) var_s,
-         |  (floor((case
-         |    when var_s <= 0.0 then 0.0
-         |    when s_stat > 0 then (s_stat - 1) / sqrt(var_s)
-         |    when s_stat < 0 then (s_stat + 1) / sqrt(var_s)
-         |    else 0.0 end) * 1e6 + 0.5) / 1e6) z
-         |from j""".stripMargin,
-
-    "q_ivf_pq_topk" ->
-      """with base as (select vec_id id,
-        |  list_transform(embedding,
-        |    x -> cast(floor(cast(x as double) * 1e6 + 0.5) as bigint)) vq
-        | from embeddings),
-        |cb as (select cast(row_number() over (order by id) - 1 as int) as j,
-        |    vq cq from (select * from base order by id limit 16)),
-        |q as (select vq qv from base where id = 7),
-        |cd as (select b.id, b.vq, c.j,
-        |    cast(list_sum(list_transform(range(len(b.vq)),
-        |      i -> (b.vq[i+1] - c.cq[i+1]) * (b.vq[i+1] - c.cq[i+1])))
-        |      as bigint) d2
-        |  from base b cross join (select * from cb where j < 8) c),
-        |cell as (select id, vq, j cell from
-        |  (select *, row_number() over (partition by id order by d2, j) rn
-        |   from cd) where rn = 1),
-        |pr as (select c.j from q cross join (select * from cb where j < 8) c
-        |  order by cast(list_sum(list_transform(range(len(q.qv)),
-        |    i -> (q.qv[i+1] - c.cq[i+1]) * (q.qv[i+1] - c.cq[i+1])))
-        |    as bigint), c.j limit 2),
-        |pruned as (select cell.id, cell.vq, cell.cell from cell
-        |  join pr on pr.j = cell.cell),
-        |ss as (select unnest(range(8)) s),
-        |d as (select b.id, ss.s, c.j,
-        |    cast(list_sum(list_transform(range(8),
-        |      i -> (b.vq[ss.s*8+i+1] - c.cq[ss.s*8+i+1])
-        |         * (b.vq[ss.s*8+i+1] - c.cq[ss.s*8+i+1]))) as bigint) d2
-        |  from pruned b cross join ss cross join cb c),
-        |codes as (select id, s, j code from
-        |  (select *, row_number() over (partition by id, s order by d2, j) rn
-        |   from d) where rn = 1),
-        |t as (select ss.s, c.j,
-        |    cast(list_sum(list_transform(range(8),
-        |      i -> (q.qv[ss.s*8+i+1] - c.cq[ss.s*8+i+1])
-        |         * (q.qv[ss.s*8+i+1] - c.cq[ss.s*8+i+1]))) as bigint) td
-        |  from q cross join ss cross join cb c),
-        |sc as (select c.id,
-        |    array_to_string(list(c.code order by c.s), '-') code_str,
-        |    cast(sum(t.td) as bigint) adc_u
-        |  from codes c join t on t.s = c.s and t.j = c.code
-        |  group by c.id)
-        |select sc.id vec_id, p.cell, sc.code_str, sc.adc_u
-        |from sc join (select distinct id, cell from pruned) p on p.id = sc.id
-        |order by sc.adc_u, sc.id limit 20""".stripMargin,
-
-    "q_length_buckets" ->
-      """with d as (select doc_id,
-        |  cast(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> len(x) > 0)) as int) n_tokens from documents),
-        |b as (select doc_id, n_tokens,
-        |  greatest(cast(ceil(cast(least(n_tokens, 96) as double) / 16) * 16
-        |    as int), 16) bucket_hi from d)
-        |select doc_id, n_tokens, bucket_hi,
-        |  cast(floor((row_number() over (partition by bucket_hi order by doc_id)
-        |    - 1) / 8) as int) batch_id,
-        |  bucket_hi - least(n_tokens, 96) pad_waste
-        |from b""".stripMargin,
-
-    "q_bpe_tokens" -> {
-      val pl = "['t a','ta b','l e','tab le','s p','a r','sp ar','spar k'," +
-        "'r o','ro w','d a','da ta']"
-      val rk = s"""list_transform(range(len(toks)-1),
-        |      i -> list_position($pl,
-        |        toks[cast(i as int)+1] || ' ' || toks[cast(i as int)+2]))""".stripMargin
-      s"""with recursive
-        |w as (select doc_id, i wi, tk[cast(i as int)+1] word from
-        |  (select doc_id, tk, unnest(range(len(tk))) i from
-        |    (select doc_id, string_split_regex(trim(text), '\\s+') tk
-        |     from documents where doc_id % 20 = 0) q0) q1
-        |  where len(tk[cast(i as int)+1]) > 0),
-        |init as (select doc_id, wi,
-        |  list_transform(range(length(word)), i -> word[cast(i as int)+1]) toks
-        | from w),
-        |rec as (
-        |  select doc_id, wi, toks, 0 it from init
-        |  union all
-        |  select doc_id, wi,
-        |    toks[1:mp-1] || [replace($pl[best], ' ', '')]
-        |      || toks[mp+2:len(toks)] toks,
-        |    it + 1
-        |  from (
-        |    select doc_id, wi, toks, it,
-        |      list_min(list_filter($rk, x -> x > 0)) best,
-        |      list_position($rk, list_min(list_filter($rk, x -> x > 0))) mp
-        |    from rec) q
-        |  where best is not null),
-        |fin as (select doc_id, wi, toks from (
-        |  select doc_id, wi, toks,
-        |    list_min(list_filter($rk, x -> x > 0)) best
-        |  from rec) q2 where best is null),
-        |dt as (select doc_id, flatten(list(toks order by wi)) tk2
-        |  from fin group by 1)
-        |select doc_id, cast(len(tk2) as int) n_bpe_tokens,
-        |  md5(array_to_string(tk2, '|')) tok_sig
-        |from dt""".stripMargin
-    },
-
-    "q_pettitt" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t,
-         |   total from daily),
-         |st as (select user_id, t,
-         |   2 * cast(rank() over (partition by user_id order by total)
-         |     as bigint)
-         |   + count(*) over (partition by user_id, total)
-         |   - count(*) over (partition by user_id) - 2 s_t
-         | from dd),
-         |u as (select user_id, t,
-         |   sum(s_t) over (partition by user_id order by t) u_t from st),
-         |m as (select user_id, t, u_t,
-         |   count(*) over (partition by user_id) n,
-         |   max(abs(u_t)) over (partition by user_id) k from u)
-         |select user_id, n, cast(k as bigint) k, min(t) change_t,
-         |  (floor(2.0 * exp(-6.0 * k * k / (n*n*n + n*n)) * 1e6 + 0.5)
-         |    / 1e6) p_approx
-         |from m where abs(u_t) = k group by user_id, n, k""".stripMargin,
-
-    "q_seasonal_mann_kendall" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, month(d) m,
-         |   date_diff('day', date '1970-01-01', d) t, total from daily),
-         |sm as (select a.user_id, a.m,
-         |   cast(sum(sign(b.total - a.total)) as bigint) s_m
-         | from dd a join dd b on a.user_id = b.user_id and a.m = b.m
-         |   and a.t < b.t
-         | group by 1, 2),
-         |nm as (select user_id, m, count(*) n_m from dd group by 1, 2),
-         |ties as (select user_id, m,
-         |   sum(tk * (tk - 1) * (tk * 2 + 5)) tsum from
-         |   (select user_id, m, total, count(*) tk from dd group by 1, 2, 3)
-         | group by 1, 2),
-         |j as (select s.user_id, s.s_m,
-         |   n.n_m * (n.n_m - 1) * (n.n_m * 2 + 5) - t.tsum var_num
-         | from sm s join nm n using (user_id, m) join ties t using (user_id, m)),
-         |g as (select user_id, sum(s_m) s_total,
-         |   sum(var_num) / 18.0 v, count(*) n_seasons from j group by 1)
-         |select user_id, cast(s_total as bigint) s_total, n_seasons,
-         |  (floor(v * 1e6 + 0.5) / 1e6) var_s,
-         |  (floor((case
-         |    when v <= 0.0 then 0.0
-         |    when s_total > 0 then (s_total - 1) / sqrt(v)
-         |    when s_total < 0 then (s_total + 1) / sqrt(v)
-         |    else 0.0 end) * 1e6 + 0.5) / 1e6) z
-         |from g""".stripMargin,
-
-    "q_cusum_batch" ->
-      s"""with recursive daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t,
-         |   total x, row_number() over (partition by user_id order by d) rn
-         | from daily),
-         |cu as (
-         |  select user_id, 0 rn, cast(0 as bigint) n, cast(0.0 as double) summ,
-         |    cast(0.0 as double) mu0, cast(0.0 as double) shi,
-         |    cast(0.0 as double) slo, cast(null as bigint) t,
-         |    cast(null as varchar) dir, cast(null as double) stat
-         |  from (select distinct user_id from dd)
-         |  union all
-         |  select user_id, rn, n2, summ2, mu02,
-         |    case when warm or shiq > 400.0 or sloq > 400.0 then 0.0
-         |         else shiq end shi,
-         |    case when warm or shiq > 400.0 or sloq > 400.0 then 0.0
-         |         else sloq end slo,
-         |    t,
-         |    case when warm then cast(null as varchar)
-         |         when shiq > 400.0 then 'up'
-         |         when sloq > 400.0 then 'down'
-         |         else cast(null as varchar) end dir,
-         |    case when warm then cast(null as double)
-         |         when shiq > 400.0 then shiq
-         |         when sloq > 400.0 then sloq
-         |         else cast(null as double) end stat
-         |  from (
-         |    select n.user_id, n.rn, n.t,
-         |      p.n < 10 warm,
-         |      case when p.n < 10 then p.n + 1 else p.n end n2,
-         |      case when p.n < 10 then p.summ + n.x else p.summ end summ2,
-         |      case when p.n < 10 then (case when p.n + 1 = 10
-         |        then round((p.summ + n.x) / 10.0, 8)
-         |        else 0.0 end) else p.mu0 end mu02,
-         |      round(greatest(0.0, p.shi + ((n.x - p.mu0) - 50.0))
-         |, 8) shiq,
-         |      round(greatest(0.0, p.slo - ((n.x - p.mu0) + 50.0))
-         |, 8) sloq
-         |    from cu p join dd n on n.user_id = p.user_id and n.rn = p.rn + 1
-         |  ) s1)
-         |select user_id, cast(t as int) t, dir direction, floor((stat)*1e6 + 0.5)/1e6 stat
-         |from cu where dir is not null""".stripMargin,
-
-    "q_gpd_pot" ->
-      s"""with daily as ($dailySql),
-         |e as (select user_id, total - 300.0 y from daily where total > 300.0),
-         |r as (select user_id, y v,
-         |   row_number() over (partition by user_id order by y) rk,
-         |   count(*) over (partition by user_id) n from e),
-         |b as (select user_id, any_value(n) n_exceed, avg(v) b0,
-         |   sum(v * (rk - 1.0) / (n - 1.0)) / any_value(n) b1
-         | from r group by 1 having any_value(n) >= 5),
-         |p as (select user_id, n_exceed, b0 l1, 2*b1 - b0 l2 from b),
-         |q1 as (select user_id, n_exceed, l1, l2,
-         |   (floor((l1 / l2 - 2.0) * 1e6 + 0.5) / 1e6) k_shape from p),
-         |q2 as (select user_id, n_exceed, k_shape,
-         |   (floor((l1 * (k_shape + 1.0)) * 1e6 + 0.5) / 1e6) alpha from q1)
-         |select user_id, n_exceed, k_shape, alpha,
-         |  300.0 + alpha / k_shape
-         |    * (1.0 - (floor(pow(0.01, k_shape) * 1e6 + 0.5) / 1e6)) rl99
-         |from q2""".stripMargin,
-
-    "q_acf_daily" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t,
-         |   cast(round(total * 1000) as bigint) xu from daily),
-         |st as (select user_id, count(*) n,
-         |   cast(round(cast(sum(xu) as double) / count(*)) as bigint) mu
-         | from dd group by 1),
-         |dv as (select dd.user_id, t, xu - mu dev, n
-         | from dd join st using (user_id)),
-         |d0 as (select user_id, any_value(n) n,
-         |   cast(sum(dev * dev) as bigint) den from dv group by 1),
-         |n1 as (select a.user_id, cast(sum(a.dev * b.dev) as bigint) num1
-         | from dv a join dv b on a.user_id = b.user_id and b.t = a.t + 1
-         | group by 1),
-         |n7 as (select a.user_id, cast(sum(a.dev * b.dev) as bigint) num7
-         | from dv a join dv b on a.user_id = b.user_id and b.t = a.t + 7
-         | group by 1)
-         |select user_id, n,
-         |  cast(num1 as double) / den r1,
-         |  cast(num7 as double) / den r7
-         |from d0 join n1 using (user_id) join n7 using (user_id)""".stripMargin,
-
-    "q_zipf_slope" ->
-      """with tk as (select lang,
-        |   unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |     x -> len(x) > 0)) tok from documents),
-        |c as (select lang, tok, count(*) c from tk group by 1, 2),
-        |rr as (select lang, c,
-        |   row_number() over (partition by lang order by c desc, tok) rk
-        | from c),
-        |r as (select lang,
-        |   cast(floor(ln(cast(rk as double)) * 1e6 + 0.5) as bigint) lx,
-        |   cast(floor(ln(cast(c as double)) * 1e6 + 0.5) as bigint) ly
-        | from rr where rk <= 100),
-        |g as (select lang, count(*) r_n, sum(lx) sx, sum(ly) sy,
-        |   sum(lx * ly) sxy, sum(lx * lx) sxx from r group by 1)
-        |select lang, r_n,
-        |  cast(r_n * sxy - sx * sy as double)
-        |    / cast(r_n * sxx - sx * sx as double) zipf_slope
-        |from g""".stripMargin,
-
-    "q_winsorize" ->
-      """with r as (select event_type, value,
-        |   row_number() over (partition by event_type order by value) rk,
-        |   count(*) over (partition by event_type) n from events),
-        |ix as (select event_type, value, rk,
-        |   cast(ceil(n * 0.05) as int) lo_i,
-        |   cast(ceil(n * 0.95) as int) hi_i from r),
-        |b as (select event_type,
-        |   min(case when rk = lo_i then value end) lo,
-        |   max(case when rk = hi_i then value end) hi
-        | from ix where rk = lo_i or rk = hi_i group by 1),
-        |c as (select e.event_type, e.value,
-        |   least(greatest(e.value, b.lo), b.hi) cv, b.lo, b.hi
-        | from events e join b using (event_type))
-        |select event_type, count(*) n,
-        |  cast(sum(case when value < lo then 1 else 0 end) as bigint) n_clip_lo,
-        |  cast(sum(case when value > hi then 1 else 0 end) as bigint) n_clip_hi,
-        |  min(lo) p05, min(hi) p95,
-        |  round(cast(sum(cast(round(cv * 1e6) as bigint)) as double)
-        |    / count(*)) / 1e6 mean_winsor
-        |from c group by 1""".stripMargin,
-
-    "q_spearman_daily" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t,
-         |   total, n_events from daily),
-         |r as (select user_id,
-         |   cast(row_number() over (partition by user_id
-         |     order by total, t) as bigint) r1,
-         |   cast(row_number() over (partition by user_id
-         |     order by n_events, t) as bigint) r2
-         | from dd),
-         |g as (select user_id, count(*) n,
-         |   sum((r1 - r2) * (r1 - r2)) d2 from r group by 1)
-         |select user_id, n,
-         |  (1.0 - 6.0 * d2 / (n * (n * n - 1))) rho
-         |from g where n >= 2""".stripMargin,
-
-    "q_k_anonymity" ->
-      """select lang, source, count(*) group_n,
-        |  count(*) < 10 at_risk
-        |from documents group by 1, 2 order by 1, 2""".stripMargin,
-
-    "q_kendall_tau" ->
-      s"""with daily as ($dailySql),
-         |dd as (select user_id, date_diff('day', date '1970-01-01', d) t,
-         |   total, n_events from daily),
-         |cd as (select a.user_id,
-         |   cast(sum(sign(b.total - a.total) * sign(b.n_events - a.n_events))
-         |     as bigint) cmd
-         | from dd a join dd b on a.user_id = b.user_id and a.t < b.t
-         | group by 1),
-         |nt as (select user_id, count(*) n from dd group by 1),
-         |t1 as (select user_id, cast(sum(tk * (tk - 1)) / 2 as bigint) n1 from
-         |   (select user_id, total, count(*) tk from dd group by 1, 2)
-         | group by 1),
-         |t2 as (select user_id, cast(sum(tk * (tk - 1)) / 2 as bigint) n2 from
-         |   (select user_id, n_events, count(*) tk from dd group by 1, 2)
-         | group by 1),
-         |g as (select c.user_id, n.n, c.cmd, t1.n1, t2.n2,
-         |   cast(n.n * (n.n - 1) / 2 as bigint) n0
-         | from cd c join nt n using (user_id)
-         |   join t1 using (user_id) join t2 using (user_id))
-         |select user_id, n, cmd,
-         |  (cmd / sqrt(cast((n0 - n1) * (n0 - n2) as double))) tau_b
-         |from g where n0 > n1 and n0 > n2""".stripMargin,
-
-    "q_js_divergence" ->
-      """with tk as (select lang,
-        |   unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |     x -> len(x) > 0)) tok
-        | from documents where lang in ('en', 'de')),
-        |c as (select lang, tok, count(*) c from tk group by 1, 2),
-        |tt as (select lang, sum(c) nt from c group by 1),
-        |en as (select tok, c ca from c where lang = 'en'),
-        |de as (select tok, c cb from c where lang = 'de'),
-        |tot as (select
-        |   max(case when lang = 'en' then nt end) tna,
-        |   max(case when lang = 'de' then nt end) tnb from tt),
-        |f as (select coalesce(en.tok, de.tok) tok,
-        |   coalesce(ca, 0) ca, coalesce(cb, 0) cb, tot.tna, tot.tnb
-        | from en full outer join de on en.tok = de.tok cross join tot),
-        |pq as (select ca, cb,
-        |   cast(ca as double) / tna p, cast(cb as double) / tnb q from f),
-        |pm as (select ca, cb, p, q, (p + q) / 2.0 m from pq),
-        |u as (select
-        |   cast(floor((
-        |     (case when ca > 0
-        |        then p * (floor(ln(p / m) * 1e6 + 0.5) / 1e6)
-        |        else 0.0 end)
-        |     + (case when cb > 0
-        |        then q * (floor(ln(q / m) * 1e6 + 0.5) / 1e6)
-        |        else 0.0 end)) * 1e9 + 0.5) as bigint) tu
-        | from pm)
-        |select count(*) n_union_tokens,
-        |  cast(sum(tu) as double) / 2e9 js_divergence
-        |from u""".stripMargin,
-
-    "q_cramers_v" ->
-      """with cells as (select lang, source, count(*) o
-        |  from documents group by 1, 2),
-        |rm as (select lang, sum(o) rn from cells group by 1),
-        |cm as (select source, sum(o) cn from cells group by 1),
-        |tt as (select cast(sum(o) as bigint) n, count(distinct lang) r,
-        |   count(distinct source) c from cells),
-        |ex as (select tt.n, tt.r, tt.c, cells.o,
-        |   cast(rm.rn * cm.cn as double) / tt.n e
-        | from cells join rm using (lang) join cm using (source) cross join tt),
-        |u as (select n, r, c,
-        |   cast(floor((o - e) * (o - e) / e * 1e6 + 0.5) as bigint) tu
-        | from ex)
-        |select n, count(*) n_cells,
-        |  cast(sum(tu) as double) / 1e6 chi2,
-        |  sqrt(cast(sum(tu) as double) / 1e6
-        |    / cast(n * least(r - 1, c - 1) as double)) cramers_v
-        |from u group by n, r, c""".stripMargin,
-
-    "q_gini_tokens" ->
-      """with tk as (select lang,
-        |   unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |     x -> len(x) > 0)) tok from documents),
-        |c as (select lang, tok, count(*) c from tk group by 1, 2),
-        |r as (select lang, c,
-        |   cast(row_number() over (partition by lang order by c, tok)
-        |     as bigint) rk from c),
-        |g as (select lang, count(*) n_types, cast(sum(c) as bigint) n_tokens,
-        |   sum(rk * c) src from r group by 1)
-        |select lang, n_types, n_tokens,
-        |  cast(2 * src - (n_types + 1) * n_tokens as double)
-        |    / cast(n_types * n_tokens as double) gini
-        |from g""".stripMargin,
-
-    "q_vocab_entropy" ->
-      """with tk as (select lang,
-        |   unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |     x -> len(x) > 0)) tok from documents),
-        |c as (select lang, tok, count(*) c from tk group by 1, 2),
-        |tt as (select lang, sum(c) nt, count(*) n_types from c group by 1),
-        |pp as (select c.lang, tt.nt, tt.n_types,
-        |   cast(c.c as double) / tt.nt p from c join tt using (lang)),
-        |u as (select lang, nt, n_types,
-        |   cast(floor(-p * (floor(ln(p) * 1e6 + 0.5) / 1e6) * 1e9 + 0.5)
-        |     as bigint) hu
-        | from pp)
-        |select lang, n_types, cast(nt as bigint) n_tokens,
-        |  cast(sum(hu) as double) / 1e9 entropy,
-        |  (floor(ln(cast(n_types as double)) * 1e6 + 0.5) / 1e6)
-        |    / (floor(ln(cast(nt as double)) * 1e6 + 0.5) / 1e6) herdan_c
-        |from u group by lang, nt, n_types""".stripMargin
-  )
-
-  // ------------------------------------------------------------------
-  // round 10: interchange-format round-trips + partitioned lake layout.
-  //
-  // Training corpora arrive as JSONL/CSV and leave as columnar lakes
-  // (parquet/ORC); each round-trip query writes `documents` with the
-  // stock Spark writer, reads it back, and aggregates a CONTENT-
-  // SENSITIVE checksum (md5-prefix sums over text and source — any
-  // quoting/escaping/encoding corruption moves it). The oracle computes
-  // the same aggregate straight from the parquet table, so a green row
-  // proves value-faithful round-trip, not just row counts. Fixture
-  // writes land under java.io.tmpdir keyed by the sf dir (the planted-
-  // HDF5 convention) and overwrite idempotently; at lake scale the same
-  // writer calls fan out per-partition with no driver involvement.
-  // ------------------------------------------------------------------
-
-  /** Per-language corpus checksum: counts, char mass, md5-prefix content
-    * sums (32-bit prefixes — sums stay far below int64 even at 1e9
-    * docs/lang), id span. Order-free, integer-only: engine-exact. */
-  private def docChecksum(back: DataFrame): DataFrame =
-    back.groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("sum_chars"),
-        sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-          .as("text_sum"),
-        sum(conv(substring(md5(col("source")), 1, 8), 16, 10).cast("long"))
-          .as("source_sum"),
-        min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-
-  private val docChecksumSql: String =
-    """select lang, cast(count(*) as bigint) n_docs,
-      | cast(sum(n_chars) as bigint) sum_chars,
-      | cast(sum(cast(concat('0x', substr(md5(text), 1, 8)) as ubigint))
-      |   as bigint) text_sum,
-      | cast(sum(cast(concat('0x', substr(md5(source), 1, 8)) as ubigint))
-      |   as bigint) source_sum,
-      | min(doc_id) min_id, max(doc_id) max_id
-      |from documents""".stripMargin
-
-  /** Per-(sf dir, format) fixture path under the JVM tmpdir. */
-  private def rtDir(dir: String, tag: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_rt_${tag}_${java.lang.Integer.toHexString(dir.hashCode)}").getPath
-
-  private def queries44: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_jsonl_roundtrip" -> ((s, dir) => {
-      // JSONL is the lingua franca of corpus interchange. Write with the
-      // stock JSON sink, read back under the ORIGINAL schema (inference
-      // would widen types and reorder columns), checksum per language.
-      val docs = t(s, dir, "documents")
-      val path = rtDir(dir, "jsonl")
-      docs.write.mode("overwrite").json(path)
-      docChecksum(s.read.schema(docs.schema).json(path))
-    }),
-
-    "q_csv_roundtrip" -> ((s, dir) => {
-      // CSV with header; read back under the original schema so
-      // doc_id/n_chars land as BIGINT again. The md5 sums catch any
-      // quoting/escaping drift the writer/parser pair could introduce.
-      val docs = t(s, dir, "documents")
-      val path = rtDir(dir, "csv")
-      docs.write.mode("overwrite").option("header", "true").csv(path)
-      docChecksum(
-        s.read.schema(docs.schema).option("header", "true").csv(path))
-    }),
-
-    "q_orc_roundtrip" -> ((s, dir) => {
-      // ORC: the other columnar lake format (native vectorized reader);
-      // schema rides in the file, no re-declaration needed.
-      val docs = t(s, dir, "documents")
-      val path = rtDir(dir, "orc")
-      docs.write.mode("overwrite").orc(path)
-      docChecksum(s.read.orc(path))
-    }),
-
-    "q_lake_partition_prune" -> ((s, dir) => {
-      // Hive-style partitioned lake write + pruned read-back: lang moves
-      // into the directory key, and the lang-filtered scan must list only
-      // the matching partitions (FormatsSpec pins selectedPartitions ==
-      // filter arity — the property that makes a per-language pass over a
-      // 100 TB corpus read 1/25th of it). Checksum proves the partition
-      // column round-trips losslessly back into rows.
-      val docs = t(s, dir, "documents")
-      val path = rtDir(dir, "lakepart")
-      docs.write.mode("overwrite").partitionBy("lang").parquet(path)
-      docChecksum(s.read.parquet(path)
-        .filter(col("lang").isin("en", "zh")))
-    }),
-
-    "q_unicode_normalize" -> ((s, dir) => {
-      // NFC canonicalization in front of content keys (NfcNormalize —
-      // native codegen'd expression): the corpus is decomposed
-      // deterministically (every 'e' gains a combining acute U+0301),
-      // normalized back, and keyed by md5. composed_marks counts the
-      // code points NFC composed away; nfc_sum only matches the oracle's
-      // utf8proc-normalized md5s if JDK and DuckDB agree on TR15 for
-      // every document. Per-row and shuffle-free below the final agg.
-      val docs = t(s, dir, "documents")
-      val deco = regexp_replace(col("text"), lit("e"), lit("e\u0301"))
-      docs.select(col("lang"), deco.as("d"))
-        .withColumn("nn", graft.functions.NfcNormalize.nfcNormalize(col("d")))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(conv(substring(md5(col("nn")), 1, 8), 16, 10).cast("long"))
-            .as("nfc_sum"),
-          sum(length(col("d")) - length(col("nn"))).as("composed_marks"))
-    }),
-
-    "q_warc_roundtrip" -> ((s, dir) => {
-      // WARC (ISO 28500) export + re-ingest — the container web corpora
-      // arrive in (Common Crawl ships ~100 TB/crawl of *.warc.gz). Each
-      // document becomes a response record (URI carries source/lang/
-      // doc_id, body the UTF-8 text), one gzip member per record, one
-      // file per partition; Warc.read streams the members back and the
-      // checksum reconstructs every column from the WARC surface alone,
-      // so a green row proves byte-faithful framing (Content-Length,
-      // member boundaries, HTTP split, UTF-8 round-trip).
-      val docs = t(s, dir, "documents")
-      val path = rtDir(dir, "warc")
-      val d = new java.io.File(path)
-      Option(d.listFiles()).foreach(_.foreach(_.delete())) // idempotent re-run
-      graft.sources.Warc.write(
-        docs.select(
-          concat(lit("https://"), col("source"), lit(".example.org/"),
-            col("lang"), lit("/"), col("doc_id")).as("uri"),
-          col("text").cast("binary").as("body"),
-          lit("text/plain; charset=utf-8").as("http_content_type"))
-          .repartition(8),
-        path)
-      val uriRe = "https://(src\\d+)\\.example\\.org/([a-z]+)/(\\d+)"
-      val back = graft.sources.Warc.read(s, path + "/*.warc.gz")
-        .filter(col("warc_type") === "response" && col("http_status") === 200)
-        .select(
-          regexp_extract(col("target_uri"), uriRe, 1).as("source"),
-          regexp_extract(col("target_uri"), uriRe, 2).as("lang"),
-          regexp_extract(col("target_uri"), uriRe, 3).cast("long").as("doc_id"),
-          col("payload").cast("string").as("text"))
-        .withColumn("n_chars", length(col("text")))
-      docChecksum(back)
-    }),
-
-    "q_html_extract" -> ((s, dir) => {
-      // HTML → text extraction (HtmlTextExtract — native codegen'd state
-      // machine): each document is wrapped into a deterministic page
-      // (title/style/h1/comment/entities/script-with-inner-'<'), then
-      // extracted back. The oracle rebuilds the identical page in SQL and
-      // extracts with an independent regex chain — agreement on every md5
-      // proves the tokenizer's tag/script/comment/entity semantics, not
-      // just row counts. Per-row, shuffle-free below the final agg.
-      val docs = t(s, dir, "documents")
-      val page = concat(
-        lit("<html><head><title>"), col("source"),
-        lit("</title><style type=\"text/css\">p{color:red}</style>" +
-          "</head><body><h1>"),
-        col("source"), lit(" page</h1><!-- id "), col("doc_id"),
-        lit(" --><p>"), col("text"),
-        lit(" &amp; tail &#233;</p><script>if(1<2){alert(\"x&y\")}" +
-          "</script></body></html>"))
-      docs.select(col("lang"),
-          graft.functions.HtmlText.htmlText(page).as("txt"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(conv(substring(md5(col("txt")), 1, 8), 16, 10).cast("long"))
-            .as("text_sum"),
-          sum(length(col("txt"))).as("sum_chars"))
-    }),
-
-    "q_url_canonical" -> ((s, dir) => {
-      // URL canonicalization (UrlNormalizeExpr): each document gets a
-      // deterministically messy URL — uppercase scheme/host, default
-      // port, percent-escape, dot segments, tracking params, unsorted
-      // query, fragment — and the oracle writes the CANONICAL form
-      // directly from the contract. md5 agreement per row proves every
-      // normalization step, not just row counts.
-      val docs = t(s, dir, "documents")
-      val messy = concat(
-        lit("HTTPS://WWW."), upper(col("source")),
-        lit(".EXAMPLE.ORG:443/%7Ea/./b/../"), col("doc_id"),
-        lit("?utm_source=feed&b=2&a=1&gclid=x#sec"))
-      docs.select(col("lang"),
-          graft.functions.UrlNormalize.urlNormalize(messy).as("u"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(conv(substring(md5(col("u")), 1, 8), 16, 10).cast("long"))
-            .as("url_sum"),
-          sum(length(col("u"))).as("sum_len"))
-    }),
-
-    "q_crawl_pipeline" -> ((s, dir) => {
-      // End-to-end crawl front-end: every page is fetched TWICE under
-      // different URL spellings (tracking param + default port + dot
-      // segment vs plain), exported as WARC, re-ingested, extracted
-      // (html_text), canonicalized (url_normalize), and deduplicated by
-      // (canonical URL, text) — the exact-dup key collapses each pair to
-      // one page with copies=2. This is the composed WARC → extract →
-      // canonicalize → dedup path a real corpus build runs; one shuffle
-      // for the dedup, everything upstream per-row on the WARC stream.
-      val docs = t(s, dir, "documents")
-      val body = concat(lit("<html><body><h1>"), col("source"),
-        lit("</h1><p>"), col("text"),
-        lit("</p><script>if(1<2){}</script></body></html>")).cast("binary")
-      val ct = lit("text/html; charset=utf-8").as("http_content_type")
-      val v1 = docs.select(concat(lit("HTTP://"), upper(col("source")),
-          lit(".EXAMPLE.ORG:80/"), col("lang"), lit("/./"), col("doc_id"),
-          lit("?utm_id=1")).as("uri"), body.as("body"), ct)
-      val v2 = docs.select(concat(lit("http://"), col("source"),
-          lit(".example.org/x/../"), col("lang"), lit("/"),
-          col("doc_id")).as("uri"), body.as("body"), ct)
-      val path = rtDir(dir, "crawl")
-      Option(new java.io.File(path).listFiles()).foreach(_.foreach(_.delete()))
-      graft.sources.Warc.write(v1.unionByName(v2).repartition(8), path)
-      val back = graft.sources.Warc.read(s, path + "/*.warc.gz")
-        .select(
-          graft.functions.UrlNormalize.urlNormalize(col("target_uri")).as("u"),
-          graft.functions.HtmlText.htmlText(col("payload").cast("string"))
-            .as("txt"))
-      back.groupBy(col("u"), col("txt")).agg(count(lit(1)).as("copies"))
-        .select(regexp_extract(col("u"), "example\\.org/([a-z]+)/", 1)
-          .as("lang"), col("copies"), col("txt"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_pages"),
-          sum(col("copies")).as("n_fetches"),
-          sum(conv(substring(md5(col("txt")), 1, 8), 16, 10).cast("long"))
-            .as("text_sum"))
-    }),
-
-    "q_domain_quota" -> ((s, dir) => {
-      // Per-domain corpus cap (Sampling.domainQuota): messy URL spellings
-      // canonicalize, the host partitions, and each host keeps its top-5
-      // docs by (n_chars desc, doc_id) — the guard against a few hosts
-      // dominating a crawl corpus. One shuffle on the host key; the
-      // oracle ranks over `source` directly, so a green row proves the
-      // canonicalize→host→rank chain end to end.
-      val docs = t(s, dir, "documents")
-      val url = concat(lit("HTTP://"), upper(col("source")),
-        lit(".Example.ORG:80/doc/./"), col("doc_id"), lit("?utm_k=1"))
-      graft.pipeline.Sampling.domainQuota(
-          docs.withColumn("u", url), col("u"), 5,
-          Seq(col("n_chars").desc, col("doc_id").asc))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"),
-          sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-    }),
-
-    "q_dsir_evidence" -> ((s, dir) => {
-      // DSIR importance weighting (TextStats.dsirScores — Xie et al.
-      // 2023): every 17th doc plays the target sample; hashed-bucket
-      // unigram models (1024 buckets, broadcast) score each document.
-      // The hashed projection is INTEGER evidence only (bucket-count
-      // sums) per the engine-exactness discipline — the float
-      // log_weight exists for real resampling but is not hashed.
-      val docs = t(s, dir, "documents")
-      TextStats.dsirScores(docs, "doc_id", "text",
-          col("doc_id") % 17 === 0, buckets = 1024)
-        .join(docs.select(col("doc_id").as("doc"), col("lang")), Seq("doc"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("tok_sum"),
-          sum(col("target_evidence")).as("t_ev_sum"),
-          sum(col("raw_evidence")).as("r_ev_sum"))
-    }),
-
-    "q_robots_filter" -> ((s, dir) => {
-      // RFC 9309 robots filter (pipeline.Robots + RobotsMatch): every
-      // host publishes the same policy (block /private/ except
-      // /private/pub/, block *.tmp downloads; a separate evilbot group
-      // that must NOT apply to our agent); URLs route docs into the four
-      // path classes by doc_id. The oracle derives the expected keep set
-      // directly from the path-class arithmetic — green proves group
-      // selection, longest-match, allow-tie and $-anchor semantics on a
-      // plan whose URL side never shuffles (per-host rule arrays arrive
-      // via one broadcast hash join — asserted in PlanSpec).
-      val docs = t(s, dir, "documents")
-      val body = "User-agent: evilbot\nDisallow: /\n\n" +
-        "User-agent: *\nDisallow: /private/\nAllow: /private/pub/\n" +
-        "Disallow: /*.tmp$"
-      val robots = docs
-        .select(concat(col("source"), lit(".example.org")).as("host"))
-        .distinct().withColumn("body", lit(body))
-      val rules = graft.pipeline.Robots.rulesFor(robots, "graftbot")
-      val m4 = pmod(col("doc_id"), lit(4))
-      val urls = docs.withColumn("u",
-        concat(lit("HTTP://"), upper(col("source")), lit(".Example.ORG"),
-          when(m4 === 0, concat(lit("/public/"), col("doc_id")))
-            .when(m4 === 1, concat(lit("/private/"), col("doc_id")))
-            .when(m4 === 2, concat(lit("/private/pub/"), col("doc_id")))
-            .otherwise(concat(lit("/files/"), col("doc_id"), lit(".tmp")))))
-      graft.pipeline.Robots.filterAllowed(urls, col("u"), rules)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_allowed"),
-          sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-    }),
-
-    "q_charset_sniff" -> ((s, dir) => {
-      // Charset sniffing (CharsetSniffExpr): payloads planted in five
-      // byte shapes — plain ASCII, valid multibyte UTF-8, latin-1 high
-      // bytes, NUL-bearing binary, UTF-8 BOM — must classify exactly;
-      // the oracle derives each doc's label from the planting
-      // arithmetic. The dispatch step between Warc payloads and
-      // html_text; per-row, shuffle-free below the final agg.
-      val docs = t(s, dir, "documents")
-      val m = pmod(col("doc_id"), lit(5))
-      val payload = when(m === 0, col("text").cast("binary"))
-        .when(m === 1, concat(col("text"), lit(" \u00e9\u4e16")).cast("binary"))
-        .when(m === 2, encode(concat(col("text"), lit(" caf\u00e9")), "ISO-8859-1"))
-        .when(m === 3, concat(col("text").cast("binary"),
-          lit(Array[Byte](0, 1, 2))))
-        .otherwise(concat(
-          lit(Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)),
-          col("text").cast("binary")))
-      docs.select(
-          graft.functions.CharsetSniff.charsetSniff(payload).as("charset"),
-          col("doc_id"))
-        .groupBy(col("charset"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_sum"))
-    }),
-
-    "q_langid_trigram" -> ((s, dir) => {
-      // Cavnar–Trenkle-style n-gram language ID (TextStats
-      // .langIdProfiles/Classify): top-100 char-trigram profiles per
-      // language from the labelled corpus (broadcast scale), then each
-      // doc scores by distinct-trigram overlap and takes the argmax.
-      // Confusion-matrix output, exact integer scores; ties break
-      // lexicographically so both engines agree row-for-row.
-      // profiles train on a deterministic 20% of the labelled corpus
-      // (top-100 trigrams per language are stable under sampling — the
-      // Cavnar–Trenkle training set is tiny by design); classification
-      // still covers every document. Cuts the train-side explode 5×.
-      val docs = t(s, dir, "documents")
-      val prof = TextStats.langIdProfiles(
-        docs.filter(pmod(col("doc_id"), lit(5)) === 0), "lang", "text",
-        k = 100)
-      TextStats.langIdClassify(docs, "doc_id", "text", prof)
-        .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
-        .groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("n"), sum(col("score")).as("score_sum"))
-    }),
-
-    "q_linkgraph_pagerank" -> ((s, dir) => {
-      // Link graph end to end: pages carry two <a href> links each
-      // (deterministic doc-id arithmetic; plus an href-less anchor that
-      // must NOT emit), HtmlLinksExpr extracts the edges, and
-      // Graph.pageRankExact runs three integer-exact iterations — every
-      // step int64 floor arithmetic, so the rank vector hash-matches the
-      // oracle's unrolled replay bit for bit. The quality-signal chain
-      // (extract → graph → rank) of a crawl pipeline in one plan.
-      val docs = t(s, dir, "documents")
-      val nRow = docs.agg(count(lit(1)).as("nn"))
-      val pages = docs.crossJoin(broadcast(nRow)).select(col("doc_id"),
-        concat(lit("<html><body><p>x</p><a href=\"/doc/"),
-          pmod(col("doc_id") * 7 + 1, col("nn")),
-          lit("\">l1</a> <a class='x' href='/doc/"),
-          pmod(col("doc_id") * 13 + 2, col("nn")),
-          lit("'>l2</a><a name=bare>no</a></body></html>")).as("html"))
-      val edges = pages.select(col("doc_id").as("src"),
-          explode(graft.functions.HtmlLinks.htmlLinks(col("html")))
-            .as("href"))
-        .select(col("src"),
-          regexp_extract(col("href"), "/doc/(\\d+)", 1).cast("long")
-            .as("dst"))
-      graft.pipeline.Graph.pageRankExact(edges, "src", "dst", iters = 3)
-        .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("r")).as("rank_sum"),
-          max(col("r")).as("rank_max"))
-    }),
-
-    "q_pagerank_dangling" -> ((s, dir) => {
-      // PageRank with dangling-mass redistribution (the variant real
-      // crawl graphs need — sinks are common): only docs outside the
-      // doc_id%5 class emit a link, so every multiple of 5 reached as a
-      // target is a sink whose rank re-enters as an equal integer share
-      // (ds div n) each round. Still int64 floor arithmetic end to end;
-      // the oracle unrolls the three rounds including the dangling term
-      // and hash-matches bit for bit.
-      val docs = t(s, dir, "documents")
-      val nRow = docs.agg(count(lit(1)).as("nn"))
-      val edges = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-        .crossJoin(broadcast(nRow))
-        .select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 1, col("nn")).as("dst"))
-      graft.pipeline.Graph.pageRankExact(edges, "src", "dst", iters = 3,
-          danglingRedistribute = true)
-        .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_nodes"), sum(col("r")).as("rank_sum"),
-          max(col("r")).as("rank_max"))
-    }),
-
-    "q_anchor_text" -> ((s, dir) => {
-      // Anchor-text extraction (HtmlAnchorsExpr): each page carries one
-      // real link whose anchor text wraps nested markup around target
-      // and source, plus an href-less anchor that must not emit. The
-      // oracle constructs the expected (href, extracted text) pair
-      // directly — green proves inner-markup stripping, entity/collapse
-      // semantics and the href pairing, per row via md5 sums.
-      val docs = t(s, dir, "documents")
-      val nRow = docs.agg(count(lit(1)).as("nn"))
-      val tgt = pmod(col("doc_id") * 7 + 1, col("nn"))
-      val pages = docs.crossJoin(broadcast(nRow)).select(col("lang"),
-        concat(lit("<p>pre</p><a href=\"/doc/"), tgt,
-          lit("\">to <b>"), tgt, lit("</b> from "), col("source"),
-          lit("</a><a name=x>skip</a>")).as("html"))
-      pages.select(col("lang"),
-          explode(graft.functions.HtmlLinks.htmlAnchors(col("html")))
-            .as("a"))
-        .select(col("lang"), col("a.href").as("href"),
-          col("a.text").as("atext"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_anchors"),
-          sum(conv(substring(md5(col("href")), 1, 8), 16, 10).cast("long"))
-            .as("href_sum"),
-          sum(conv(substring(md5(col("atext")), 1, 8), 16, 10).cast("long"))
-            .as("text_sum"))
-    })
-  )
-
-  private def oracle44: Map[String, String] = Map(
-    "q_jsonl_roundtrip" -> s"$docChecksumSql group by lang",
-    "q_csv_roundtrip" -> s"$docChecksumSql group by lang",
-    "q_orc_roundtrip" -> s"$docChecksumSql group by lang",
-    "q_lake_partition_prune" ->
-      s"$docChecksumSql where lang in ('en', 'zh') group by lang",
-
-    // chr(769) = U+0301 combining acute; utf8proc's nfc_normalize must
-    // agree with the JDK normalizer on every document for nfc_sum to hash
-    "q_unicode_normalize" ->
-      """with d as (select lang,
-        |   regexp_replace(text, 'e', 'e' || chr(769), 'g') d from documents),
-        |n as (select lang, d, nfc_normalize(d) nn from d)
-        |select lang, cast(count(*) as bigint) n_docs,
-        |  cast(sum(cast(concat('0x', substr(md5(nn), 1, 8)) as ubigint))
-        |    as bigint) nfc_sum,
-        |  cast(sum(length(d) - length(nn)) as bigint) composed_marks
-        |from n group by lang""".stripMargin,
-
-    // every column reconstructs from the WARC surface, so the oracle is
-    // the plain corpus checksum — any framing corruption moves the sums
-    "q_warc_roundtrip" -> s"$docChecksumSql group by lang",
-
-    // independent extraction path: regex chain (script/style with content
-    // -> comments -> tags -> targeted entity decode -> collapse), valid
-    // for exactly this constrained synthetic markup
-    "q_html_extract" ->
-      """with p as (select lang,
-        |  '<html><head><title>' || source ||
-        |  '</title><style type="text/css">p{color:red}</style></head><body><h1>'
-        |  || source || ' page</h1><!-- id ' || doc_id || ' --><p>' || text ||
-        |  ' &amp; tail &#233;</p><script>if(1<2){alert("x&y")}</script></body></html>' h
-        |  from documents),
-        |t2 as (select lang, trim(regexp_replace(
-        |  replace(replace(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(h, '<(script|style)[^>]*>.*?</(script|style)>', ' ', 'g'),
-        |        '<!--.*?-->', ' ', 'g'),
-        |      '<[^>]*>', ' ', 'g'),
-        |    '&amp;', '&'), '&#233;', chr(233)),
-        |  '\s+', ' ', 'g')) txt from p)
-        |select lang, cast(count(*) as bigint) n_docs,
-        |  cast(sum(cast(concat('0x', substr(md5(txt), 1, 8)) as ubigint))
-        |    as bigint) text_sum,
-        |  cast(sum(length(txt)) as bigint) sum_chars
-        |from t2 group by lang""".stripMargin,
-
-    // the oracle states the canonical form directly (independent
-    // derivation from the normalization contract, no algorithm replay)
-    "q_url_canonical" ->
-      """with u as (select lang,
-        |  'https://www.' || source || '.example.org/~a/' || doc_id
-        |    || '?a=1&b=2' u
-        |  from documents)
-        |select lang, cast(count(*) as bigint) n_docs,
-        |  cast(sum(cast(concat('0x', substr(md5(u), 1, 8)) as ubigint))
-        |    as bigint) url_sum,
-        |  cast(sum(length(u)) as bigint) sum_len
-        |from u group by lang""".stripMargin,
-
-    // the double-fetch collapses to one page per document; extracted text
-    // is "source + collapsed body text" by the html_text contract
-    "q_crawl_pipeline" ->
-      """with e as (select lang,
-        |  source || ' ' || trim(regexp_replace(text, '\s+', ' ', 'g')) txt
-        |  from documents)
-        |select lang, cast(count(*) as bigint) n_pages,
-        |  cast(2 * count(*) as bigint) n_fetches,
-        |  cast(sum(cast(concat('0x', substr(md5(txt), 1, 8)) as ubigint))
-        |    as bigint) text_sum
-        |from e group by lang""".stripMargin,
-
-    // each source IS the host, so the oracle ranks over source directly
-    "q_domain_quota" ->
-      """with r as (select lang, doc_id, n_chars,
-        |  row_number() over (partition by source
-        |    order by n_chars desc, doc_id) rn
-        | from documents)
-        |select lang, cast(count(*) as bigint) n_kept,
-        |  cast(sum(doc_id) as bigint) id_sum,
-        |  cast(sum(n_chars) as bigint) chars_sum
-        |from r where rn <= 5 group by lang""".stripMargin,
-
-    // same md5-prefix feature hash, same Laplace-free integer evidence
-    "q_dsir_evidence" ->
-      """with toks as (select doc_id, lang, (doc_id % 17 = 0) is_t,
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) tok
-        |  from documents),
-        |tk as (select doc_id, lang, is_t,
-        |    cast(cast(concat('0x', substr(md5(tok), 1, 8)) as ubigint)
-        |      % 1024 as bigint) b
-        |  from toks where length(tok) > 0),
-        |model as (select b,
-        |    cast(sum(case when is_t then 1 else 0 end) as bigint) cnt_t,
-        |    count(*) cnt_r
-        |  from tk group by 1),
-        |scored as (select doc_id, lang, count(*) n_tokens,
-        |    sum(cnt_t) t_ev, sum(cnt_r) r_ev
-        |  from tk join model using (b) group by 1, 2)
-        |select lang, cast(count(*) as bigint) n_docs,
-        |  cast(sum(n_tokens) as bigint) tok_sum,
-        |  cast(sum(t_ev) as bigint) t_ev_sum,
-        |  cast(sum(r_ev) as bigint) r_ev_sum
-        |from scored group by lang""".stripMargin,
-
-    // path classes: 0=/public (no rule), 1=/private (blocked),
-    // 2=/private/pub (longer Allow wins), 3=*.tmp$ (blocked)
-    "q_robots_filter" ->
-      """select lang, cast(count(*) as bigint) n_allowed,
-        |  cast(sum(doc_id) as bigint) id_sum,
-        |  cast(sum(n_chars) as bigint) chars_sum
-        |from documents where doc_id % 4 in (0, 2) group by lang""".stripMargin,
-
-    // label follows the planting arithmetic exactly
-    "q_charset_sniff" ->
-      """select case doc_id % 5 when 0 then 'ascii' when 1 then 'utf-8'
-        |  when 2 then 'latin-1' when 3 then 'binary'
-        |  else 'utf-8-bom' end charset,
-        | cast(count(*) as bigint) n, cast(sum(doc_id) as bigint) id_sum
-        |from documents group by 1""".stripMargin,
-
-    // same trigram/profile/argmax pipeline in SQL; range(1, len-1)
-    // yields 1-based positions 1..len-2 like the Spark sequence
-    "q_langid_trigram" ->
-      """with t as (select doc_id, lang, lower(trim(text)) s from documents),
-        |tri as (select doc_id, lang, substr(s, cast(i as int), 3) tri
-        |  from t, unnest(range(1, length(s) - 1)) u(i)),
-        |prof as (select lang, tri, count(*) cnt from tri
-        |  where doc_id % 5 = 0 group by 1, 2),
-        |topk as (select lang, tri from (select lang, tri,
-        |    row_number() over (partition by lang
-        |      order by cnt desc, tri) rk from prof) where rk <= 100),
-        |dtri as (select distinct doc_id, tri from tri),
-        |scores as (select d.doc_id, p.lang plang, count(*) score
-        |  from dtri d join topk p using (tri) group by 1, 2),
-        |best as (select doc_id, plang, score, row_number() over
-        |    (partition by doc_id order by score desc, plang) rk
-        |  from scores),
-        |sel as (select doc_id, plang pred_lang, score from best where rk = 1)
-        |select d2.lang, s.pred_lang, cast(count(*) as bigint) n,
-        |  cast(sum(s.score) as bigint) score_sum
-        |from sel s join documents d2 using (doc_id)
-        |group by 1, 2""".stripMargin,
-
-    // the edge arithmetic replayed directly; three unrolled integer
-    // iterations (// is floor division) — bit-exact by construction
-    "q_linkgraph_pagerank" ->
-      """with nn as (select count(*) n from documents),
-        |e as (select doc_id src, (doc_id*7+1) % n dst from documents, nn
-        |  union all
-        |  select doc_id, (doc_id*13+2) % n from documents, nn),
-        |node as (select doc_id id from documents),
-        |od as (select src, count(*) od from e group by 1),
-        |r0 as (select id, cast(1000000000 as bigint) r from node),
-        |c1 as (select dst, cast(sum(r // od) as bigint) cs
-        |  from e join od using (src) join r0 on r0.id = e.src group by 1),
-        |r1 as (select id, cast(150000000 + (85 * coalesce(cs, 0)) // 100
-        |    as bigint) r from node left join c1 on c1.dst = node.id),
-        |c2 as (select dst, cast(sum(r // od) as bigint) cs
-        |  from e join od using (src) join r1 on r1.id = e.src group by 1),
-        |r2 as (select id, cast(150000000 + (85 * coalesce(cs, 0)) // 100
-        |    as bigint) r from node left join c2 on c2.dst = node.id),
-        |c3 as (select dst, cast(sum(r // od) as bigint) cs
-        |  from e join od using (src) join r2 on r2.id = e.src group by 1),
-        |r3 as (select id, cast(150000000 + (85 * coalesce(cs, 0)) // 100
-        |    as bigint) r from node left join c3 on c3.dst = node.id)
-        |select lang, cast(count(*) as bigint) n_docs,
-        |  cast(sum(r) as bigint) rank_sum, cast(max(r) as bigint) rank_max
-        |from r3 join documents on id = doc_id group by lang""".stripMargin,
-
-    // same replay with the dangling term: ds = rank mass on nodes with
-    // no out-edges, each node gets ds // n_nodes back inside the damp
-    "q_pagerank_dangling" ->
-      """with nn as (select count(*) n from documents),
-        |e as (select doc_id src, (doc_id*7+1) % n dst
-        |  from documents, nn where doc_id % 5 <> 0),
-        |node as (select src id from e union select dst from e),
-        |ncnt as (select cast(count(*) as bigint) nc from node),
-        |od as (select src, count(*) od from e group by 1),
-        |r0 as (select id, cast(1000000000 as bigint) r from node),
-        |d1 as (select cast(coalesce(sum(r), 0) as bigint) ds
-        |  from r0 left join od on od.src = r0.id where od.src is null),
-        |c1 as (select dst, cast(sum(r // od) as bigint) cs
-        |  from e join od using (src) join r0 on r0.id = e.src group by 1),
-        |r1 as (select id, cast(150000000 + (85 * (coalesce(cs, 0) +
-        |    (select ds from d1) // (select nc from ncnt))) // 100
-        |    as bigint) r from node left join c1 on c1.dst = node.id),
-        |d2 as (select cast(coalesce(sum(r), 0) as bigint) ds
-        |  from r1 left join od on od.src = r1.id where od.src is null),
-        |c2 as (select dst, cast(sum(r // od) as bigint) cs
-        |  from e join od using (src) join r1 on r1.id = e.src group by 1),
-        |r2 as (select id, cast(150000000 + (85 * (coalesce(cs, 0) +
-        |    (select ds from d2) // (select nc from ncnt))) // 100
-        |    as bigint) r from node left join c2 on c2.dst = node.id),
-        |d3 as (select cast(coalesce(sum(r), 0) as bigint) ds
-        |  from r2 left join od on od.src = r2.id where od.src is null),
-        |c3 as (select dst, cast(sum(r // od) as bigint) cs
-        |  from e join od using (src) join r2 on r2.id = e.src group by 1),
-        |r3 as (select id, cast(150000000 + (85 * (coalesce(cs, 0) +
-        |    (select ds from d3) // (select nc from ncnt))) // 100
-        |    as bigint) r from node left join c3 on c3.dst = node.id)
-        |select lang, cast(count(*) as bigint) n_nodes,
-        |  cast(sum(r) as bigint) rank_sum, cast(max(r) as bigint) rank_max
-        |from r3 join documents on id = doc_id group by lang""".stripMargin,
-
-    // expected pair stated directly from the page construction
-    "q_anchor_text" ->
-      """with nn as (select count(*) n from documents),
-        |a as (select lang,
-        |    '/doc/' || ((doc_id*7+1) % n) href,
-        |    'to ' || ((doc_id*7+1) % n) || ' from ' || source atext
-        |  from documents, nn)
-        |select lang, cast(count(*) as bigint) n_anchors,
-        |  cast(sum(cast(concat('0x', substr(md5(href), 1, 8)) as ubigint))
-        |    as bigint) href_sum,
-        |  cast(sum(cast(concat('0x', substr(md5(atext), 1, 8)) as ubigint))
-        |    as bigint) text_sum
-        |from a group by lang""".stripMargin
-  )
-
-  // ------------------------------------------------------------------
-  // round 10 (cont.): corpus-hygiene + lake-maintenance operators.
-  // q_blocklist_filter — Aho–Corasick multi-pattern scan (C4's badwords
-  //   gate; ONE pass per doc vs P contains-scans). q_bpe_train — the
-  //   LEARNING half of the BPE tokenizer: K merge rounds over the
-  //   distinct-word table, never the corpus. q_lake_merge — Delta-style
-  //   MERGE INTO over plain parquet as one join + union plan.
-  // All three emit exact-integer evidence only.
-
-  /** Blocklist for q_blocklist_filter — single words, phrases, and
-    * boundary-crossing substrings so the automaton's fail links are
-    * actually exercised; one definition feeds Spark AND the oracle. */
-  private val blocklist: Seq[String] = Seq(
-    "spark", "table table", "agg", "merge batch", "fast order", "scan s",
-    "customer", "big big", "a a", "lorem ipsum", "vector", "slow slow")
-
-  private def queries45: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_dd_quantiles" -> ((s, dir) => {
-      // DDSketch log-bucket quantiles (Sketches.ddHistogram/ddQuantiles,
-      // Masson et al. VLDB'19): per return flag, the price distribution
-      // collapses to ≤ ~600 integer-keyed buckets (map-side partial
-      // sums — the shuffle is sketch-sized at any corpus scale), then
-      // six quantile reads walk the cumulative counts. Bucket index is
-      // integer math over the qln micro-grid, counts exact int64, so
-      // the oracle replays the whole sketch bit-for-bit; the estimate
-      // is ONE micro-grid exp per output row.
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag").as("flag"),
-          col("l_extendedprice").as("px"))
-      val hist = pipeline.Sketches.ddHistogram(li, "flag", "px")
-      pipeline.Sketches
-        .ddQuantiles(hist, Seq(0.01, 0.25, 0.5, 0.75, 0.9, 0.99))
-        .select(col("grp").as("flag"), col("q"), col("n"), col("sign"),
-          col("bucket"), col("cum"), col("est"))
-    }),
-
-    "q_dd_merged" -> ((s, dir) => {
-      // DDSketch merge algebra under the driver gate (the q_hll_merged
-      // pattern): Spark sketches the even-doc and odd-doc halves
-      // SEPARATELY and adds the counter tables (Sketches.ddMerge); the
-      // oracle sketches the whole corpus in one pass — a hash match
-      // proves merge(halves) == whole, the property that lets a lake
-      // sketch document-length distributions per partition at write
-      // time and answer corpus quantiles at query time without
-      // re-touching raw data.
-      def half(parity: Int) = pipeline.Sketches.ddHistogram(
-        t(s, dir, "documents")
-          .filter(pmod(col("doc_id"), lit(2)) === parity)
-          .select(col("source"), length(col("text")).as("len")),
-        "source", "len")
-      pipeline.Sketches
-        .ddQuantiles(pipeline.Sketches.ddMerge(half(0), half(1)),
-          Seq(0.5, 0.9))
-        .select(col("grp").as("source"), col("q"), col("n"), col("sign"),
-          col("bucket"), col("cum"), col("est"))
-    }),
-
-    "q_tfrecord_roundtrip" -> ((s, dir) => {
-      // TFRecord export + re-ingest (sources/TfRecord — the TensorFlow
-      // container's public framing: LE length + masked crc32c of
-      // header AND payload): every document rides one record through
-      // 8 shards (the ecosystem's file-level parallelism — the format
-      // is unsplittable by design) and back; both CRCs verify on read,
-      // and the checksum columns reconstruct source/lang/doc_id/text
-      // from the TFRecord surface alone, so green proves byte-faithful
-      // framing end to end.
-      val docs = t(s, dir, "documents")
-      val path = rtDir(dir, "tfrecord")
-      Option(new java.io.File(path).listFiles())
-        .foreach(_.foreach(_.delete())) // idempotent re-run
-      graft.sources.TfRecord.write(
-        docs.select(concat_ws("\u0002", col("source"), col("lang"),
-          col("doc_id"), col("text")).cast("binary").as("p"))
-          .repartition(8),
-        "p", path)
-      graft.sources.TfRecord.read(s, path + "/*.tfrecord")
-        .select(split(col("payload").cast("string"), "\u0002", 4).as("f"))
-        .select(col("f")(0).as("source"), col("f")(1).as("lang"),
-          col("f")(2).cast("long").as("doc_id"), col("f")(3).as("text"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_recs"),
-          sum(col("doc_id")).as("id_sum"),
-          sum(conv(substring(md5(concat(col("source"), col("text"))), 1, 8),
-            16, 10).cast("long")).as("text_sum"),
-          sum(length(col("text"))).as("sum_chars"))
-    }),
-
-    "q_interval_overlap" -> ((s, dir) => {
-      // Banded interval-overlap join (core.Intervals.overlapJoin — the
-      // range join Spark lacks natively): each event becomes a
-      // [ts, ts + (1 + event_id%600) s) interval; even-id intervals
-      // overlap-join odd-id intervals WITHIN each user through 256 s
-      // bins — the only shuffle is the (user, bin) equi-join, the
-      // canonical-bin filter keeps each pair exactly once with no
-      // distinct, and the oracle states the same pairs via a direct
-      // inequality join (tiny at gate scale, impossible at 100 TB —
-      // which is the point of the banding).
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("s0"))
-        .withColumn("e0",
-          col("s0") + (pmod(col("event_id"), lit(600L)) + 1) * 1000000L)
-      val A = ev.filter(pmod(col("event_id"), lit(2)) === 0)
-        .select(col("user_id"), col("event_id"), col("s0"), col("e0"))
-      val B = ev.filter(pmod(col("event_id"), lit(2)) === 1)
-        .select(col("user_id"), col("event_id"), col("s0"), col("e0"))
-      graft.core.Intervals
-        .overlapJoin(A, B, Seq("user_id"), "s0", "e0", 256L * 1000000L)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("a_event_id")).as("a_id_sum"),
-          sum(col("b_event_id")).as("b_id_sum"),
-          sum(col("overlap_len")).as("overlap_us"))
-    }),
-
-    "q_zorder3_layout" -> ((s, dir) => {
-      // Three-dim z-order (Lake.zOrderFrame3 / Morton3 — the
-      // time×lat×lon climate-lake layout): grid scale all three key
-      // columns off one min/max broadcast, interleave to a 48-bit key,
-      // bucket by the top 5 bits, roll up per-bucket 3-D bounding
-      // boxes — the data-skipping evidence. Oracle replays the scales
-      // and the 48-term interleave bit-for-bit.
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"))
-      graft.sources.Lake
-        .zOrderFrame3(li, "l_partkey", "l_suppkey", "l_orderkey")
-        .select(shiftright(col("zval"), 43).as("zbucket"),
-          col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
-          col("zval"))
-        .groupBy(col("zbucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"),
-          min(col("l_suppkey")).as("min_sk"), max(col("l_suppkey")).as("max_sk"),
-          min(col("l_orderkey")).as("min_ok"), max(col("l_orderkey")).as("max_ok"),
-          // 48-bit keys: a raw sum would overflow int64 at sf0.1 —
-          // modular checksum instead
-          sum(pmod(col("zval"), lit(1000000007L))).as("zmod_sum"))
-    }),
-
-    "q_sentence_stats" -> ((s, dir) => {
-      // Sentence segmentation (TextStats.sentences/sentenceStats — the
-      // C4/Gopher-class heuristic): terminal [.!?] + whitespace ends a
-      // sentence, expressed WITHOUT lookbehind (RE2 has none) via a
-      // marker rewrite + plain split, so the oracle replays the exact
-      // boundaries (its replacement spells RE2's \1 where Java says
-      // $1). All evidence integer: counts, chars, longest.
-      val docs = t(s, dir, "documents")
-      docs.select(col("lang"),
-          TextStats.sentenceStats(col("text")).as("st"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("st.n_sentences")).as("sentences"),
-          sum(col("st.sentence_chars")).as("sentence_chars"),
-          max(col("st.max_sentence")).as("longest"))
-    }),
-
-    "q_triangle_count" -> ((s, dir) => {
-      // Exact triangle count (Graph.triangleCount): the link-farm
-      // cohesion signal over a deterministic 4-rule edge set (chain,
-      // skip and two affine maps over doc ids — dense enough to close
-      // thousands of triangles). Degree-ordered orientation makes the
-      // wedge join's fan-out O(sqrt E) on any graph — the hub-safe
-      // two-join — and the oracle replays orientation, wedges and
-      // closure exactly.
-      val docs = t(s, dir, "documents")
-      val nRow = docs.agg(count(lit(1)).as("nn"))
-      val base = docs.crossJoin(broadcast(nRow))
-        .select(col("doc_id").as("id"), col("nn"))
-      val edges = Seq((1L, 1L), (1L, 2L), (7L, 1L), (13L, 2L)).map {
-        case (m, c) => base.select(col("id").as("src"),
-          pmod(col("id") * m + c, col("nn")).as("dst"))
-      }.reduce(_ unionByName _)
-      graft.pipeline.Graph.triangleCount(edges, "src", "dst")
-    }),
-
-    "q_weighted_sample" -> ((s, dir) => {
-      // Weighted sampling without replacement (Sampling.weightedSample,
-      // Efraimidis-Spirakis): top-20 docs per lang under priority
-      // ln(u)/w with w = char length — longer docs proportionally
-      // likelier, membership a pure function of (doc_id, salt). The
-      // priority is the micro-grid ln over the strictly-positive md5
-      // fraction divided by the weight — one IEEE division, so the
-      // oracle replays every comparator bit-for-bit and the SELECTED
-      // SET must match exactly, not just its size.
-      val docs = t(s, dir, "documents")
-      pipeline.Sampling.weightedSample(docs, Seq("lang"), col("doc_id"),
-          length(col("text")), 20)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("doc_id")).as("id_sum"),
-          sum(length(col("text"))).as("weight_sum"))
-    }),
-
-    "q_stream_bloom" -> ((s, dir) => {
-      // Streaming Bloom maintenance under the gate (Streams
-      // .bloomReplayVersioned + VersionedLake.applyOrBatch): docs ≡3
-      // (mod 4) seed the membership lake, three micro-batches OR their
-      // word tables in through the versioned pointer, and the final
-      // snapshot answers probes. OR is idempotent — replay-safe even
-      // without the batchId gate (StreamingSpec forces a re-apply) —
-      // and the oracle's one-pass whole-corpus bloom must hash-match
-      // init + 3 streamed commits exactly.
-      val m = 65536L
-      val base = t(s, dir, "documents")
-        .select(col("source"), pmod(col("doc_id"), lit(4)).as("g"),
-          explode(filter(split(lower(trim(col("text"))), "\\s+"),
-            x => length(x) > 0)).as("sh"))
-      val initial = base.filter(col("g") === 3).select("source", "sh")
-      val batches = Seq(0, 1, 2).map(i =>
-        base.filter(col("g") === i).select("source", "sh"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_bloomlake_q_").toString
-      val table = s"bloomlake_q_${System.nanoTime()}"
-      val fin = graft.streaming.Streams.bloomReplayVersioned(
-        s, initial, batches, root, table, "source", "sh", m, 4, 4)
-      val p = graft.sources.VersionedLake.readPointer(root).get
-      val out = pipeline.Sketches.bloomContains(fin,
-          Seq("data", "the", "qwxyz"), m)
-        .select(col("grp").as("source"), col("probe"), col("present"),
-          col("n_words"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .localCheckpoint(true) // 60 rows, eager: the snapshots can go
-      graft.sources.VersionedLake.destroy(s, root, table)
-      out
-    }),
-
-    "q_crawl_schedule" -> ((s, dir) => {
-      // Crawl-delay politeness scheduling (Robots.parseCrawlDelays/
-      // crawlDelays/schedule — the de-facto extension Bing/Yandex
-      // honor): per-host delays parse out of robots bodies (evilbot's
-      // 99 s group must NOT govern our agent; hosts whose numeric id
-      // ≡0 (mod 3) state no * delay and fall to the scheduler default),
-      // then every frontier URL gets its FIFO slot within its host and
-      // the earliest fetch time startMs + slot·delay. The oracle
-      // restates the delays in closed form and replays the slot window
-      // — all times exact integer math on the floor grid.
-      val docs = t(s, dir, "documents")
-      val srcNum = substring(col("source"), 4, 6).cast("int")
-      val host = concat(col("source"), lit(".example.org"))
-      val robots = docs.select(col("source"), srcNum.as("sn")).distinct()
-        .select(concat(col("source"), lit(".example.org")).as("host"),
-          concat(lit("User-agent: evilbot\nCrawl-delay: 99\n\n" +
-            "User-agent: *\nDisallow: /private/\n"),
-            when(pmod(col("sn"), lit(3)) === 0, lit(""))
-              .otherwise(concat(lit("Crawl-delay: "),
-                pmod(col("sn"), lit(5)) + 2))).as("body"))
-      val delays = graft.pipeline.Robots.crawlDelays(robots, "graftbot")
-      val sched = graft.pipeline.Robots.schedule(
-        docs.select(col("doc_id"), col("lang"), host.as("h")),
-        col("h"), col("doc_id"), delays,
-        startMs = 1700000000000L, defaultDelayS = 3.0)
-      sched.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_urls"),
-          sum(col("slot")).as("slot_sum"),
-          max(col("slot")).as("max_slot"),
-          sum(col("fetch_at_ms")).as("fetch_ms_sum"))
-    }),
-
-    "q_analyze_columns" -> ((s, dir) => {
-      // ANALYZE in one scan (Lake.analyzeColumns): rows/nulls/min/max/
-      // exact-distinct for four engine-string-stable lineitem columns
-      // out of a single aggregation (multi-distinct expands, still one
-      // table pass). The stats table is what a 100 TB planner consumes
-      // for join reorder and broadcast decisions; the oracle states
-      // each column's row in plain SQL.
-      graft.sources.Lake.analyzeColumns(
-        t(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_partkey", "l_returnflag", "l_shipdate"))
-    }),
-
-    "q_stream_dd_sketch" -> ((s, dir) => {
-      // Streaming DDSketch maintenance under the gate (Streams
-      // .ddSketchReplayVersioned + VersionedLake.applyAdditiveBatch):
-      // docs ≡3 (mod 4) seed the sketch lake, three micro-batches add
-      // their per-batch counter tables through the versioned pointer —
-      // counter ADDITION is non-idempotent, so exactly-once rides the
-      // batchId gate, rehearsed incl. replay in StreamingSpec — and the
-      // final pointer snapshot answers token-count quantiles. The
-      // oracle sketches the whole corpus in one pass: a hash match
-      // proves init + 3 additive commits == whole, plus the closed-form
-      // pointer evidence (3 non-empty batches → v3, lastBatch 2).
-      val base = t(s, dir, "documents")
-        .select(col("source"), pmod(col("doc_id"), lit(4)).as("m"),
-          size(split(lower(trim(col("text"))), "\\s+")).cast("long")
-            .as("ntok"))
-      val initial = base.filter(col("m") === 3).select("source", "ntok")
-      val batches = Seq(0, 1, 2).map(i =>
-        base.filter(col("m") === i).select("source", "ntok"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ddlake_q_").toString
-      val table = s"ddlake_q_${System.nanoTime()}"
-      val fin = graft.streaming.Streams.ddSketchReplayVersioned(
-        s, initial, batches, root, table, "source", "ntok", 4)
-      val p = graft.sources.VersionedLake.readPointer(root).get
-      val out = pipeline.Sketches.ddQuantiles(fin, Seq(0.5, 0.9))
-        .select(col("grp").as("source"), col("q"), col("n"), col("sign"),
-          col("bucket"), col("cum"), col("est"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .localCheckpoint(true) // 40 rows, eager: the snapshots can go
-      graft.sources.VersionedLake.destroy(s, root, table)
-      out
-    }),
-
-    "q_stream_sample" -> ((s, dir) => {
-      // r14: streaming uniform-sample maintenance (Streams
-      // .sampleSinkVersioned + VersionedLake.applyBottomKBatch): docs
-      // ≡3 (mod 4) seed a per-source bottom-32-by-hash60 table, three
-      // micro-batches merge the other quarters through the versioned
-      // pointer. Hash-order is uniform ⇒ the kept set is an exact
-      // uniform 32-sample of everything streamed; bottom-k of a union
-      // is the union's bottom-k ⇒ the oracle takes bottom-32 of the
-      // WHOLE corpus in one window — row-set agreement proves the
-      // streamed maintenance exactly. Third merge-contract class:
-      // idempotent AND order-free (spec contrasts vs the additive
-      // gate with a forced re-apply).
-      val docs = t(s, dir, "documents").select(col("source"), col("doc_id"))
-      val m = pmod(col("doc_id"), lit(4))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_smplake_q_").toString
-      val table = s"smplake_q_${System.nanoTime()}"
-      val fin = graft.streaming.Streams.sampleReplayVersioned(
-        s, docs.filter(m === 3),
-        Seq(0, 1, 2).map(i => docs.filter(m === i)),
-        root, table, "source", "doc_id", k = 32, buckets = 4)
-      val p = graft.sources.VersionedLake.readPointer(root).get
-      val out = fin
-        .select(col("grp").as("source"), col("hv"),
-          col("id").cast("long").as("doc_id"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .localCheckpoint(true) // 32×sources rows, eager: snapshots go
-      graft.sources.VersionedLake.destroy(s, root, table)
-      out
-    }),
-
-    "q_zorder_incremental" -> ((s, dir) => {
-      // r14: INCREMENTAL z-order maintenance (ZOrderLake + the
-      // streaming sink): the lake inits z-ordered from the ≡3 (mod 4)
-      // quarter of lineitem — grid bounds PIN there — and three
-      // streamed batches (the other quarters) each rewrite only the
-      // slabs their z-range touches, through the manifest + pointer
-      // swap. Batch keys outside the pinned box clamp to the border
-      // cell (zval only; stored values stay raw). The oracle computes
-      // the SAME bucket/bbox evidence from scratch over all four
-      // quarters — agreement proves the incremental path lost nothing,
-      // duplicated nothing, and kept every zval on the pinned grid;
-      // StreamingSpec pins the incrementality itself (v0 slabs carried
-      // by reference, disjoint slab ranges, box scan opens few files).
-      // the ≡<4 (mod 16) sixteenth-quarters: the mod-sliced batches
-      // span the full z-range (every batch rewrites every slab — the
-      // worst case for the incremental path, deliberately), so the
-      // fixture subsets to a quarter of the table to keep 4 full
-      // rewrites bench-proportionate; locality (few slabs touched) is
-      // StreamingSpec's pin
-      val li = t(s, dir, "lineitem")
-        .filter(pmod(col("l_orderkey"), lit(16)) < 4)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-      val m = pmod(col("l_orderkey"), lit(16))
-      val init = li.filter(m === 3).drop("l_orderkey")
-      val batches = Seq(0, 1, 2).map(i => li.filter(m === i).drop("l_orderkey"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_zolake_q_").toString + "/zo"
-      val fin = graft.streaming.Streams.zOrderReplayVersioned(
-        s, init, batches, root, "l_partkey", "l_suppkey", targetRows = 16384)
-      val p = graft.sources.ZOrderLake.readPointer(root).get
-      val out = fin
-        .groupBy(shiftright(col("zval"), 27).as("zbucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"),
-          min(col("l_suppkey")).as("min_sk"), max(col("l_suppkey")).as("max_sk"),
-          sum(col("zval")).as("zval_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .localCheckpoint(true) // ≤ 32 rows, eager: the lake can go
-      graft.sources.ZOrderLake.destroy(root)
-      out
-    }),
-
-    "q_zorder_epochs" -> ((s, dir) => {
-      // r15: GRID EPOCHS — the monotone-dimension survival mode. The
-      // lake inits on the lowest l_orderkey quartile (epoch-0 bounds
-      // pin there), then three strictly-ascending quartile batches
-      // march past the pinned hi; each opens (or lands inside) a fresh
-      // grid epoch with geometric headroom instead of piling onto the
-      // border cells, so existing slabs carry by reference and
-      // per-batch cost stays O(batch) (LakeSpec pins the slab counts).
-      // The oracle recomputes contents and a box-read twin from
-      // scratch: agreement proves the epoch rolls lost nothing,
-      // duplicated nothing, and that readBox's per-epoch BIGMIN union
-      // is row-identical to the plain filter.
-      val li = t(s, dir, "lineitem")
-        .filter(pmod(col("l_orderkey"), lit(16)) < 4)
-        .select(col("l_orderkey").cast("long").as("okey"),
-          col("l_partkey").cast("long").as("pk"),
-          col("l_suppkey").cast("long").as("sk"))
-      val bd = li.agg(max("okey"), max("sk")).head()
-      val mx = bd.getLong(0); val q = mx / 4; val skMax = bd.getLong(1)
-      val init = li.filter(col("okey") <= q)
-      val batches = Seq(1, 2, 3).map { i =>
-        val upper = if (i < 3) col("okey") <= (i + 1) * q else lit(true)
-        li.filter(col("okey") > i * q && upper)
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_zoep_q_").toString + "/zo"
-      val fin = graft.streaming.Streams.zOrderReplayVersioned(
-        s, init, batches, root, "okey", "sk", targetRows = 16384)
-      // the mechanism must actually fire: monotone quartiles past the
-      // pinned hi must open at least one new epoch
-      require(graft.sources.ZOrderLake.readEpochs(root).size >= 2,
-        "monotone ingest opened no grid epoch")
-      val p = graft.sources.ZOrderLake.readPointer(root).get
-      // newest-quartile box read through the per-epoch z-decomposition
-      val box = graft.sources.ZOrderLake.readBox(s, root,
-        Seq(3 * q + 1, 1L), Seq(mx, skMax / 2))
-        .agg(count(lit(1)).cast("long").as("box_rows"),
-          coalesce(sum("pk"), lit(0L)).as("box_pk_sum"))
-      val out = fin.groupBy(pmod(col("pk"), lit(16)).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("okey")).as("okey_sum"), sum(col("sk")).as("sk_sum"),
-          min(col("okey")).as("min_okey"), max(col("okey")).as("max_okey"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .crossJoin(box)
-        .localCheckpoint(true) // 16 rows, eager: the lake can go
-      graft.sources.ZOrderLake.destroy(root)
-      out
-    }),
-
-    "q_zorder_rebuild" -> ((s, dir) => {
-      // r16: CROSS-EPOCH REBUILD — the maintenance half epochs need at
-      // lake age. Same monotone-quartile ingest as q_zorder_epochs
-      // (≥2 epochs open), then `rebuild` re-zvals everything onto ONE
-      // fresh epoch covering the full domain: a maintenance version
-      // (lastBatch unchanged, version +1 over the ingest tail), every
-      // live slab in the new epoch, contents and a box-read twin
-      // byte-identical to the from-scratch oracle — proof the O(corpus)
-      // rewrite lost nothing while collapsing the per-epoch read tax.
-      val li = t(s, dir, "lineitem")
-        .filter(pmod(col("l_orderkey"), lit(16)) < 4)
-        .select(col("l_orderkey").cast("long").as("okey"),
-          col("l_partkey").cast("long").as("pk"),
-          col("l_suppkey").cast("long").as("sk"))
-      val bd = li.agg(max("okey"), max("sk")).head()
-      val mx = bd.getLong(0); val q = mx / 4; val skMax = bd.getLong(1)
-      val init = li.filter(col("okey") <= q)
-      val batches = Seq(1, 2, 3).map { i =>
-        val upper = if (i < 3) col("okey") <= (i + 1) * q else lit(true)
-        li.filter(col("okey") > i * q && upper)
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_zoreb_q_").toString + "/zo"
-      graft.streaming.Streams.zOrderReplayVersioned(
-        s, init, batches, root, "okey", "sk", targetRows = 16384)
-      import graft.sources.ZOrderLake
-      require(ZOrderLake.readEpochs(root).size >= 2,
-        "monotone ingest opened no grid epoch")
-      val pBefore = ZOrderLake.readPointer(root).get
-      val newEpoch = ZOrderLake.rebuild(s, root, targetRows = 16384)
-      val p = ZOrderLake.readPointer(root).get
-      require(p.lastBatch == pBefore.lastBatch &&
-        p.version == pBefore.version + 1,
-        "rebuild must be a maintenance version")
-      require(ZOrderLake.readManifest(root, p.version)
-        .forall(_.epoch == newEpoch), "slabs left outside the rebuild epoch")
-      val box = ZOrderLake.readBox(s, root,
-        Seq(3 * q + 1, 1L), Seq(mx, skMax / 2))
-        .agg(count(lit(1)).cast("long").as("box_rows"),
-          coalesce(sum("pk"), lit(0L)).as("box_pk_sum"))
-      val out = ZOrderLake.current(s, root)
-        .groupBy(pmod(col("pk"), lit(16)).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("okey")).as("okey_sum"), sum(col("sk")).as("sk_sum"),
-          min(col("okey")).as("min_okey"), max(col("okey")).as("max_okey"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .crossJoin(box)
-        .localCheckpoint(true) // 16 rows, eager: the lake can go
-      ZOrderLake.destroy(root)
-      out
-    }),
-
-    "q_zorder3_incremental" -> ((s, dir) => {
-      // r14: the 3-D incremental lake — the (time, lat, lon)-shaped
-      // clustering under continuous ingest. Same contract as
-      // q_zorder_incremental (bounds pin on the ≡3 quarter, clamp to
-      // the border cell, touched-slab rewrite through the pointer) but
-      // the key is the 48-bit Morton3 interleave and the touched-cell
-      // grid sits at zval >> 36. Oracle recomputes the bucket/bbox
-      // evidence from scratch; 48-bit sums checksum modularly.
-      // same sixteenth-quarter subsetting as q_zorder_incremental (the
-      // mod batches are full-z-span worst cases; see that query's note)
-      val li = t(s, dir, "lineitem")
-        .filter(pmod(col("l_orderkey"), lit(16)) < 4)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-      val m = pmod(col("l_orderkey"), lit(16))
-      val init = li.filter(m === 3)
-      val batches = Seq(0, 1, 2).map(i => li.filter(m === i))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_zo3lake_q_").toString + "/zo"
-      val fin = graft.streaming.Streams.zOrderReplayVersioned(
-        s, init, batches, root,
-        Seq("l_partkey", "l_suppkey", "l_orderkey"), 16384L, 2)
-      val p = graft.sources.ZOrderLake.readPointer(root).get
-      val out = fin
-        .groupBy(shiftright(col("zval"), 43).as("zbucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"),
-          min(col("l_suppkey")).as("min_sk"), max(col("l_suppkey")).as("max_sk"),
-          min(col("l_orderkey")).as("min_ok"), max(col("l_orderkey")).as("max_ok"),
-          sum(pmod(col("zval"), lit(1000000007L))).as("zmod_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .localCheckpoint(true) // ≤ 32 rows, eager: the lake can go
-      graft.sources.ZOrderLake.destroy(root)
-      out
-    }),
-
-    "q_zorder_box_read" -> ((s, dir) => {
-      // r14: box scan through the z-layout ALONE (Morton2.zRangesForBox
-      // — the Tropf–Herzog BIGMIN decomposition as a quadtree walk →
-      // ZOrderLake.readBox): the value box maps onto the pinned grid,
-      // decomposes into a few z-intervals, and only slabs intersecting
-      // one of them open — no per-file x/y stats. Pruning must be
-      // invisible: the oracle runs the same box aggregate over the
-      // whole table; LakeSpec pins the file-skipping half and the
-      // decomposition's exactness/safe-over-approximation.
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_zobox_q_").toString + "/zo"
-      graft.sources.ZOrderLake.init(li, root, "l_partkey", "l_suppkey",
-        targetRows = 16384)
-      val out = graft.sources.ZOrderLake.readBox(s, root,
-          "l_partkey", "l_suppkey", 100L, 600L, 20L, 60L)
-        .groupBy(col("l_suppkey"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"),
-          sum(col("l_quantity").cast("long")).as("qty_sum"))
-        .localCheckpoint(true) // small, eager: the lake can go
-      graft.sources.ZOrderLake.destroy(root)
-      out
-    }),
-
-    "q_lake_multi_prune" -> ((s, dir) => {
-      // r14: conjunctive multi-column range pruning (Lake
-      // .readPrunedMulti): lineitem z-ordered on (partkey, suppkey)
-      // once per sf, both columns' native-typed per-file boxes prune
-      // independently and the candidate sets intersect — the
-      // multiplicative payoff a single-column sort cannot give. The
-      // oracle is the unpruned AND-filter; LakeSpec pins the file
-      // counts (both < x-only).
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-      val fixDir = new java.io.File("/tmp/graft_multiprune_" +
-        dir.replaceAll("[^0-9a-zA-Z]", "_"))
-      buildStoreOnce(fixDir, "_SUCCESS") { d =>
-        graft.sources.Lake.zOrderWrite(li, "l_partkey", "l_suppkey",
-          d.getPath, files = 32)
-      }
-      val stats = graft.sources.Lake.fileStats(
-        s, fixDir.getPath, Seq("l_partkey", "l_suppkey"))
-      graft.sources.Lake.readPrunedMulti(s, fixDir.getPath, stats,
-          Seq(("l_partkey", 200L, 800L), ("l_suppkey", 10L, 40L)))
-        .groupBy(col("l_suppkey"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"),
-          sum(col("l_quantity").cast("long")).as("qty_sum"))
-    }),
-
-    "q_lake_range_prune" -> ((s, dir) => {
-      // Typed range-pruned read path (Lake.fileStats + Lake.readPruned
-      // — Delta/Iceberg data skipping wired into the scan): lineitem is
-      // range-sorted on l_orderkey into 16 disjoint-slab files once per
-      // sf, the per-file stats keep min/max in the column's NATIVE LONG
-      // type (no "9" > "10" string trap), and the range scan opens only
-      // the files whose [min,max] box intersects [1000, 3000] — at
-      // 100 TB the difference between a metadata lookup and a corpus
-      // scan. Pruning must be INVISIBLE to results: the oracle runs the
-      // same aggregate over the unpruned table (zero false negatives);
-      // LakeSpec pins the skipping half (files opened = O(matching)).
-      val li = t(s, dir, "lineitem")
-      val fixDir = new java.io.File("/tmp/graft_rangeprune_" +
-        dir.replaceAll("[^0-9a-zA-Z]", "_"))
-      buildStoreOnce(fixDir, "_SUCCESS") { d =>
-        li.repartitionByRange(16, col("l_orderkey"))
-          .sortWithinPartitions("l_orderkey")
-          .write.mode("overwrite").parquet(d.getPath)
-      }
-      val stats = graft.sources.Lake.fileStats(
-        s, fixDir.getPath, Seq("l_orderkey"))
-      graft.sources.Lake.readPruned(
-          s, fixDir.getPath, stats, "l_orderkey", 1000L, 3000L)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("l_quantity").cast("long")).as("qty_sum"),
-          min(col("l_orderkey")).as("min_ok"),
-          max(col("l_orderkey")).as("max_ok"))
-    }),
-
-    "q_zorder_layout" -> ((s, dir) => {
-      // Z-order clustering key (Lake.zOrderFrame / functions.Morton2 —
-      // Delta OPTIMIZE ZORDER BY semantics over plain parquet): every
-      // (partkey, suppkey) scales to the 2^16 grid by exact integer
-      // floor division off a one-row min/max broadcast, interleaves to
-      // a 32-bit Morton key, and the top 5 bits bucket the table into
-      // the 32 files a zOrderWrite would cut. Per-bucket bounding boxes
-      // are the DATA-SKIPPING evidence: compact boxes = a 2-D box
-      // predicate prunes to O(perimeter) files (LakeSpec pins ≤ 6/32
-      // touched vs ~all under row order). The oracle replays the scale
-      // and the 32-term interleave bit-for-bit.
-      val li = t(s, dir, "lineitem").select(col("l_partkey"), col("l_suppkey"))
-      graft.sources.Lake.zOrderFrame(li, "l_partkey", "l_suppkey")
-        .select(col("l_partkey"), col("l_suppkey"), col("zval"),
-          shiftright(col("zval"), 27).as("zbucket"))
-        .groupBy(col("zbucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"),
-          min(col("l_suppkey")).as("min_sk"), max(col("l_suppkey")).as("max_sk"),
-          ((max(col("l_partkey")) - min(col("l_partkey")) + 1).cast("long") *
-            (max(col("l_suppkey")) - min(col("l_suppkey")) + 1).cast("long"))
-            .as("bbox_area"),
-          sum(col("zval")).as("zval_sum"))
-    }),
-
-    "q_bloom_membership" -> ((s, dir) => {
-      // Distributed Bloom sketch TABLE (Sketches.bloomBits/bloomMerge/
-      // bloomContains): per-source membership filters over 5-char
-      // shingles, built as the OR-merge of even/odd doc-parity halves
-      // while the oracle sketches the whole corpus in one pass — hash
-      // agreement proves merge == whole (OR idempotence included) AND
-      // the per-probe membership join, bit for bit. The table form is
-      // the 100 TB shape decontaminateBloom's driver-collected literal
-      // cannot reach: bits live in (grp, word) rows, probes meet them
-      // in a hash equi-join.
-      val m = 65536L
-      def half(parity: Int) = pipeline.Sketches.bloomBits(
-        t(s, dir, "documents")
-          .filter(pmod(col("doc_id"), lit(2)) === parity)
-          .select(col("source"),
-            graft.functions.ShingleExplode.shingleExplode(
-              graft.functions.WinnowNormalize.lowerCollapseWs(col("text")), 5)
-              .as("sh")),
-        "source", "sh", m)
-      pipeline.Sketches.bloomContains(
-          pipeline.Sketches.bloomMerge(half(0), half(1)),
-          Seq("data ", "s the", "zzzzz", "qwxyz"), m)
-        .select(col("grp").as("source"), col("probe"), col("present"),
-          col("n_words"))
-    }),
-
-    "q_script_profile" -> ((s, dir) => {
-      // Unicode script routing (TextStats.scriptProfile): docs ≡0/1/2
-      // (mod 5) get deterministic Cyrillic/Han/Arabic bodies planted so
-      // every store exercises (the corpus text is Latin-only); the rest
-      // keep their real text. Counts are pure codegen'd regexp passes
-      // over the scan; dominant-script argmax ties break on the fixed
-      // Scripts order in BOTH engines. Evidence: per (lang, dominant)
-      // doc counts + exact per-script char sums + micro-unit share sum.
-      val docs = t(s, dir, "documents")
-      val m = pmod(col("doc_id"), lit(5))
-      val sample = when(m === 0,
-          concat(lit("Служба новостей сообщает о "), col("source")))
-        .when(m === 1, concat(lit("新闻服务发布了 "), col("source")))
-        .when(m === 2, concat(lit("خدمة الأخبار تنشر "), col("source")))
-        .otherwise(col("text"))
-      docs.select(col("lang"),
-          TextStats.scriptProfile(sample).as("p"))
-        .groupBy(col("lang"), col("p.dominant").as("dominant"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("p.n_latin")).as("latin_chars"),
-          sum(col("p.n_cyrillic")).as("cyrillic_chars"),
-          sum(col("p.n_han")).as("han_chars"),
-          sum(col("p.n_arabic")).as("arabic_chars"),
-          sum(col("p.n_letters")).as("letter_chars"),
-          sum(floor(col("p.dominant_share") * lit(1e6) + lit(0.5))
-            .cast("long")).as("share_u_sum"))
-    }),
-
-    "q_boilerplate" -> ((s, dir) => {
-      // jusText-style main-content extraction (TextStats
-      // .boilerplateBlocks/mainContent): each document is wrapped in a
-      // deterministic page — link-farm nav, h1, the real text, a short
-      // share stub, a link-heavy footer — split at block tags and
-      // classified by INTEGER length/link-density/stopword rules, then
-      // the good blocks reassemble in order. The oracle replays the
-      // same splits, regexes and integer rules; md5 agreement on every
-      // reassembled main text proves the whole chain, not row counts.
-      // (Synthetic corpus is stopword-light: stop rule 1/50, good ≥ 40.)
-      val docs = t(s, dir, "documents")
-      val page = concat(
-        lit("<html><body><div class=\"nav\"><a href=\"/\">Home</a> " +
-          "<a href=\"/n\">News</a> <a href=\"/c\">Contact</a></div><h1>"),
-        col("source"), lit(" page</h1><p>"), col("text"),
-        lit("</p><p>Share this</p><div class=\"footer\">Copyright " +
-          "<a href=\"/t\">terms</a> and <a href=\"/p\">privacy</a>" +
-          "</div></body></html>"))
-      val blocks = TextStats.boilerplateBlocks(
-        docs.select(col("doc_id"), page.as("page")), "doc_id", "page",
-        minChars = 25, goodChars = 40, linkDensityPct = 40,
-        stopNum = 1, stopDen = 50)
-      TextStats.mainContent(blocks)
-        .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_blocks")).as("blocks"),
-          sum(col("n_good")).as("good"),
-          sum(col("n_boiler")).as("boiler"),
-          sum(conv(substring(md5(col("main_text")), 1, 8), 16, 10)
-            .cast("long")).as("text_sum"),
-          sum(length(col("main_text"))).as("sum_chars"))
-    }),
-
-    "q_blocklist_filter" -> ((s, dir) => {
-      // One automaton pass per document (functions/AhoCorasick.scala);
-      // counts are overlapping-occurrence counts, so the oracle can
-      // replicate them with a position scan. Narrow projection off the
-      // scan — no shuffle until the tiny per-lang rollup.
-      t(s, dir, "documents")
-        .select(col("lang"),
-          graft.functions.AhoCorasick
-            .acScan(lower(col("text")), blocklist).as("ac"))
-        .select(col("lang"), col("ac.total_hits").as("hits"),
-          col("ac.distinct_hits").as("dp"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("hits") > 0, 1L).otherwise(0L)).as("n_blocked"),
-          sum(col("hits")).as("total_hits"),
-          max(col("dp")).cast("long").as("max_distinct"))
-    }),
-
-    "q_bpe_train" -> ((s, dir) => {
-      // Distributed BPE merge learning (pipeline/BpeTrain.scala): the
-      // oracle replays all 10 rounds as unrolled SQL over the same
-      // double-separator encoding, so green means pair counting, argmax
-      // tie-breaks AND merge application are engine-exact end-to-end.
-      BpeTrain.learnMerges(t(s, dir, "documents"), "text", 10)
-    }),
-
-    "q_lake_merge" -> ((s, dir) => {
-      // MERGE INTO over the orders snapshot (sources/Lake.merge): keys
-      // ≡0 (mod 7) update (+100.00), ≡1 delete, ≡2 insert under fresh
-      // keys. ONE full-outer join — single scan of each side; evidence
-      // is exact key sums and micro-quantized cents.
-      val orders = t(s, dir, "orders")
-      val target = orders
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      val m = pmod(col("o_orderkey"), lit(7))
-      val changes = orders.filter(m <= 2).select(
-        when(m === 2, col("o_orderkey") + lit(100000000L))
-          .otherwise(col("o_orderkey")).as("o_orderkey"),
-        when(m === 0, lit("update")).when(m === 1, lit("delete"))
-          .otherwise(lit("insert")).as("op"),
-        col("o_orderstatus"),
-        (col("o_totalprice") + lit(100.0)).as("o_totalprice"))
-      graft.sources.Lake.merge(target, changes, "o_orderkey")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_orderkey")).as("key_sum"),
-          sum(uq(col("o_totalprice"), 100)).as("cents_sum"))
-    }),
-
-    "q_stream_merge" -> ((s, dir) => {
-      // Streaming lake upsert (streaming/Streams.mergeReplay): three
-      // change batches replayed one-per-micro-batch through a
-      // foreachBatch MERGE into a bucketed snapshot. The batches
-      // INTERACT across micro-batch boundaries — b1 inserts fresh keys
-      // (+1e8) that b2 UPDATES (+999) and b3 partially DELETES, b2's
-      // matched insert must no-op, b3 adds a second fresh class (+2e8)
-      // — so a single-merge shortcut or out-of-order application
-      // cannot reproduce the final state the oracle states in closed
-      // form. Final snapshot grouped like q_lake_merge.
-      val orders = t(s, dir, "orders")
-      val target = orders
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      val m = pmod(col("o_orderkey"), lit(7))
-      def fresh(off: Long) = (col("o_orderkey") + lit(off)).as("o_orderkey")
-      val b1 = orders.filter(m === 0).select(col("o_orderkey"),
-          lit("update").as("op"), col("o_orderstatus"),
-          (col("o_totalprice") + 100.0).as("o_totalprice"))
-        .unionByName(orders.filter(m === 2).select(fresh(100000000L),
-          lit("insert").as("op"), col("o_orderstatus"),
-          (col("o_totalprice") + 10.0).as("o_totalprice")))
-      val b2 = orders.filter(m === 1).select(col("o_orderkey"),
-          lit("delete").as("op"), col("o_orderstatus"),
-          col("o_totalprice"))
-        .unionByName(orders.filter(m === 2).select(fresh(100000000L),
-          lit("update").as("op"), col("o_orderstatus"),
-          (col("o_totalprice") + 999.0).as("o_totalprice")))
-        .unionByName(orders.filter(m === 0).select(col("o_orderkey"),
-          lit("insert").as("op"), col("o_orderstatus"),
-          lit(-1.0).as("o_totalprice"))) // matched insert: must no-op
-      val b3 = orders
-        .filter(m === 2 && pmod(col("o_orderkey"), lit(3)) === 0)
-        .select(fresh(100000000L), lit("delete").as("op"),
-          col("o_orderstatus"), col("o_totalprice"))
-        .unionByName(orders.filter(m === 3).select(fresh(200000000L),
-          lit("insert").as("op"), col("o_orderstatus"),
-          (col("o_totalprice") + 20.0).as("o_totalprice")))
-      val table = s"stream_merge_${System.nanoTime()}"
-      val out = graft.streaming.Streams
-        .mergeReplay(s, target, Seq(b1, b2, b3), table, "o_orderkey", 8)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_orderkey")).as("key_sum"),
-          sum(uq(col("o_totalprice"), 100)).as("cents_sum"))
-        .localCheckpoint(true) // 3 rows, eager: the snapshot table can go
-      s.sql(s"DROP TABLE IF EXISTS `$table`")
-      out
-    }),
-
-    "q_stream_merge_versioned" -> ((s, dir) => {
-      // r12: the PRODUCTION streaming-lake form under the gate — the
-      // same interacting-batch scenario as q_stream_merge (different
-      // deltas, so it is independent evidence) replayed through the
-      // VERSIONED sink: each batch MERGEs v(n) → writes snapshot v(n+1)
-      // → atomically swaps the pointer file; the final frame is read
-      // THROUGH the pointer, and the pointer's (version, last_batch)
-      // ride along as evidence columns the oracle states in closed form
-      // (3 non-empty batches → v3, lastBatch 2).
-      val orders = t(s, dir, "orders")
-      val target = orders
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      val m = pmod(col("o_orderkey"), lit(7))
-      def fresh(off: Long) = (col("o_orderkey") + lit(off)).as("o_orderkey")
-      val b1 = orders.filter(m === 0).select(col("o_orderkey"),
-          lit("update").as("op"), col("o_orderstatus"),
-          (col("o_totalprice") + 200.0).as("o_totalprice"))
-        .unionByName(orders.filter(m === 2).select(fresh(100000000L),
-          lit("insert").as("op"), col("o_orderstatus"),
-          (col("o_totalprice") + 30.0).as("o_totalprice")))
-      val b2 = orders.filter(m === 1).select(col("o_orderkey"),
-          lit("delete").as("op"), col("o_orderstatus"),
-          col("o_totalprice"))
-        .unionByName(orders.filter(m === 2).select(fresh(100000000L),
-          lit("update").as("op"), col("o_orderstatus"),
-          (col("o_totalprice") + 1111.0).as("o_totalprice")))
-        .unionByName(orders.filter(m === 0).select(col("o_orderkey"),
-          lit("insert").as("op"), col("o_orderstatus"),
-          lit(-1.0).as("o_totalprice"))) // matched insert: must no-op
-      val b3 = orders
-        .filter(m === 2 && pmod(col("o_orderkey"), lit(3)) === 0)
-        .select(fresh(100000000L), lit("delete").as("op"),
-          col("o_orderstatus"), col("o_totalprice"))
-        .unionByName(orders.filter(m === 3).select(fresh(200000000L),
-          lit("insert").as("op"), col("o_orderstatus"),
-          (col("o_totalprice") + 40.0).as("o_totalprice")))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_vlake_q_").toString
-      val table = s"vlake_q_${System.nanoTime()}"
-      val fin = graft.streaming.Streams.mergeReplayVersioned(
-        s, target, Seq(b1, b2, b3), root, table, "o_orderkey", 8)
-      val p = graft.sources.VersionedLake.readPointer(root).get
-      val out = fin.groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_orderkey")).as("key_sum"),
-          sum(uq(col("o_totalprice"), 100)).as("cents_sum"))
-        .withColumn("snap_version", lit(p.version))
-        .withColumn("last_batch", lit(p.lastBatch))
-        .localCheckpoint(true) // 3 rows, eager: the snapshots can go
-      graft.sources.VersionedLake.destroy(s, root, table)
-      out
-    }),
-
-    "q_hll_shingles" -> ((s, dir) => {
-      // Engine-exact HyperLogLog (pipeline/Sketches.scala) over per-
-      // source char-5 shingles: the register table is an order-free max
-      // per (group, bucket), so nz/reg_sum/s_int — the sketch state
-      // itself — hash-match an external replay, and the estimate is one
-      // division of exact ints (or a grid-ln in the small range). The
-      // exact countDistinct rides along as the accuracy yardstick; at
-      // 100 TB only the ≤256-row-per-group sketch path would run.
-      // distinct-first, ONE linear chain: registers only depend on the
-      // distinct shingle set, and the exact yardstick is the rolled-up
-      // per-bucket row count of that same deduped input — so sketch AND
-      // truth come out of a single explode → distinct → bucket-agg →
-      // group-agg pipeline (no join, no second pass; was 2 explodes +
-      // a countDistinct before, 4.3 s → 2.9 s at sf0.1)
-      val sh = t(s, dir, "documents")
-        .select(col("source"), graft.functions.ShingleExplode.shingleExplode(
-          graft.functions.WinnowNormalize.lowerCollapseWs(col("text")), 5).as("sh"))
-        .distinct()
-      pipeline.Sketches.hllEstimate(
-          pipeline.Sketches.hllRegisters(sh, "source", "sh"))
-        .select(col("grp").as("source"), col("nz"), col("reg_sum"),
-          col("s_int"), col("est"), col("small_range"),
-          col("n_input").as("n_exact"))
-    }),
-
-    "q_token_budget" -> ((s, dir) => {
-      // Water-filling token-budget allocation (Sampling.waterFill) at
-      // 60% of the corpus's tokens: small sources keep everything,
-      // large ones cap at the integer level, the remainder goes to the
-      // largest — all integer math over the per-source table, with the
-      // budget and the level riding one-row broadcasts.
-      val counts = t(s, dir, "documents")
-        .select(col("source"), size(filter(
-          split(lower(trim(col("text"))), "\\s+"),
-          x => length(x) > 0)).cast("long").as("ntok"))
-        .groupBy(col("source")).agg(sum(col("ntok")).as("c"))
-      val budget = counts
-        .agg(expr("CAST(sum(c) * 6 DIV 10 AS BIGINT)").as("budget"))
-      pipeline.Sampling.waterFill(counts, "source", "c", budget)
-    }),
-
-    "q_quality_train" -> ((s, dir) => {
-      // In-engine logistic-regression training (QualityModel): 6 full-
-      // batch rounds of integer-quantized GD over (bias, token count,
-      // distinct-token count) centered at the label boundary; label =
-      // "has ≥ 30 tokens". The oracle replays every round unrolled, so
-      // green means the gradient sums, the 1e-6 sigmoid grid AND the
-      // truncating-division updates are engine-exact end to end.
-      val toks = filter(split(lower(trim(col("text"))), "\\s+"),
-        x => length(x) > 0)
-      val feats = t(s, dir, "documents")
-        .select(toks.as("tk"))
-        .select(lit(1L).as("x0"),
-          (size(col("tk")) - 30).cast("long").as("x1"),
-          (size(array_distinct(col("tk"))) - 20).cast("long").as("x2"),
-          when(size(col("tk")) >= 30, 1L).otherwise(0L).as("y"))
-      pipeline.QualityModel.trainLogReg(
-        feats, Seq("x0", "x1", "x2"), "y", iters = 6, lrShift = 5)
-    }),
-
-    "q_cms_tokens" -> ((s, dir) => {
-      // Count-Min frequency sketch (Sketches.cmsCounters/cmsEstimate):
-      // counters are order-free integer sums over the pinned md5 hash
-      // family, so the 4×1024 state and every point estimate replay
-      // bit-for-bit in the oracle. Probes cover hot tokens and an
-      // absent one; the exact counts ride along as the yardstick
-      // (CMS estimates are upper bounds — min over 4 counters).
-      val probes = Seq("spark", "table", "the", "vector", "zzzz")
-      val toks = t(s, dir, "documents").select(col("lang"),
-        explode(filter(split(lower(trim(col("text"))), "\\s+"),
-          x => length(x) > 0)).as("tok"))
-      val est = pipeline.Sketches.cmsEstimate(
-        pipeline.Sketches.cmsCounters(toks, "lang", "tok"), probes)
-      val exact = toks.filter(col("tok").isin(probes: _*))
-        .groupBy(col("lang").as("grp"), col("tok").as("probe"))
-        .agg(count(lit(1)).as("exact"))
-      est.join(exact, Seq("grp", "probe"), "left_outer")
-        .select(col("grp").as("lang"), col("probe"), col("cms_est"),
-          coalesce(col("exact"), lit(0L)).as("exact_count"))
-    }),
-
-    "q_kmv_overlap" -> ((s, dir) => {
-      // Bottom-k overlap planning (Sketches.kmvMins/kmvOverlap): how
-      // much do two sources' shingle sets overlap, answered from two
-      // 128-row sketches instead of a corpus join — the cross-source
-      // dedup planning primitive. Evidence integers (kth mins, common
-      // count) hash-exactly; Jaccard/cardinality are single divisions
-      // of exact ints.
-      val sh = t(s, dir, "documents")
-        .select(col("source"), graft.functions.ShingleExplode.shingleExplode(
-          graft.functions.WinnowNormalize.lowerCollapseWs(col("text")), 5).as("sh"))
-      val mins = pipeline.Sketches.kmvMins(sh, "source", "sh")
-      pipeline.Sketches.kmvOverlap(mins,
-        Seq(("src0", "src1"), ("src0", "src2"), ("src2", "src3")))
-    }),
-
-    "q_lake_diff" -> ((s, dir) => {
-      // Snapshot diff (Lake.diff) auditing exactly the q_lake_merge
-      // change batch: diff(before, merged) must recover the batch —
-      // updates as 'updated', deletes as 'deleted', fresh keys as
-      // 'inserted', everything else untouched. Integer evidence per
-      // change class.
-      val orders = t(s, dir, "orders")
-      val target = orders
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      val m = pmod(col("o_orderkey"), lit(7))
-      val changes = orders.filter(m <= 2).select(
-        when(m === 2, col("o_orderkey") + lit(100000000L))
-          .otherwise(col("o_orderkey")).as("o_orderkey"),
-        when(m === 0, lit("update")).when(m === 1, lit("delete"))
-          .otherwise(lit("insert")).as("op"),
-        col("o_orderstatus"),
-        (col("o_totalprice") + lit(100.0)).as("o_totalprice"))
-      val merged = graft.sources.Lake.merge(target, changes, "o_orderkey")
-      graft.sources.Lake.diff(target, merged, "o_orderkey")
-        .groupBy(col("change"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_orderkey")).as("key_sum"),
-          sum(coalesce(uq(col("after_o_totalprice"), 100), lit(0L)))
-            .as("after_cents_sum"))
-    }),
-
-    "q_hll_merged" -> ((s, dir) => {
-      // Sketch-merge algebra under the driver gate: Spark sketches the
-      // even-doc and odd-doc halves SEPARATELY and merges the register
-      // tables (Sketches.hllMerge), while the oracle sketches the whole
-      // corpus in one pass — a hash match proves merge(halves) == whole,
-      // the property that lets a lake sketch per partition at write time
-      // and merge at query time. (Registers ignore duplicates, so the
-      // halves skip the distinct; estimates here are raw-branch.)
-      def half(parity: Int) = pipeline.Sketches.hllRegisters(
-        t(s, dir, "documents")
-          .filter(pmod(col("doc_id"), lit(2)) === parity)
-          .select(col("source"),
-            graft.functions.ShingleExplode.shingleExplode(
-              graft.functions.WinnowNormalize.lowerCollapseWs(col("text")), 5)
-              .as("sh")),
-        "source", "sh")
-      pipeline.Sketches.hllEstimate(
-          pipeline.Sketches.hllMerge(half(0), half(1)))
-        .select(col("grp").as("source"), col("nz"), col("reg_sum"),
-          col("s_int"), col("est"), col("small_range"))
-    }),
-
-    "q_incremental_dedup" -> ((s, dir) => {
-      // Incremental near-dup against a persisted index (Dedup
-      // .fingerprints/bandTable/incrementalCandidates): docs ≡0 (mod 10)
-      // arrive as the new batch; the other 90% are the already-indexed
-      // corpus, read ONLY through its two narrow index tables. bands=16/
-      // rows=1 pins recall ~1 at J ≥ 0.7 (same argument as
-      // q_minhash_candidates), so the output equals the oracle's
-      // exhaustive batch-vs-corpus truth. NOTE the equality is
-      // probabilistic, not an identity: a pair at exactly J = 0.7 misses
-      // all 16 bands with prob (1−0.7)^16 ≈ 4e-8 — on the FIXED testdata
-      // this has held every round, but regenerated data could in
-      // principle flake here without any code being wrong.
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-      val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      val idx = Dedup.fingerprintIndex(corpus, "doc_id", "text")
-        // (already checkpoint-backed inside — the "persisted" index)
-      Dedup.incrementalCandidates(idx,
-        Dedup.bandTable(idx.select(col("id"), col("grams"))), batch,
-        "doc_id", "text")
-    }),
-
-    // Fresh-name re-declarations of the five queries that hash-failed
-    // the driver in r8/r9. The diagnosed mechanism (uncast HUGEINT
-    // oracle sums -> pandas float64 on the driver) is fixed under the
-    // original names; these aliases hedge the remaining hypothesis that
-    // the driver snapshots each query's oracle SQL at FIRST declaration
-    // (r9 verdict), under which same-name fixes would be invisible.
-    // Same plans, same (now-cast) oracles — only the names are new.
-    "q_pettitt_v2" -> queries43("q_pettitt"),
-    "q_seasonal_mann_kendall_v2" -> queries43("q_seasonal_mann_kendall"),
-    "q_cramers_v_v2" -> queries43("q_cramers_v"),
-    "q_gini_tokens_v2" -> queries43("q_gini_tokens"),
-    "q_vocab_entropy_v2" -> queries43("q_vocab_entropy")
-  )
-
-  /** Unrolled k-round BPE training oracle — the SQL twin of
-    * [[BpeTrain.learnMerges]], generated so both engines share one
-    * definition of the encoding and the merge rule. Every stage CTE is
-    * MATERIALIZED: each s_i is referenced twice (p_{i+1} and s_{i+1}),
-    * so default CTE inlining would expand the chain 2^k times. */
-  private def bpeTrainSql(k: Int): String = {
-    val sb = new StringBuilder
-    sb.append(
-      """with w as materialized (select word, cast(count(*) as bigint) wc
-        | from (
-        |  select unnest(list_filter(
-        |      string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> len(x) > 0 and not contains(x, chr(1)))) word
-        |  from documents) group by 1),
-        |s0 as materialized (select word, wc,
-        |  chr(1) || chr(1) ||
-        |  array_to_string(list_transform(range(1, len(word) + 1),
-        |    i -> substr(word, cast(i as int), 1)), chr(1) || chr(1)) ||
-        |  chr(1) || chr(1) enc from w)""".stripMargin)
-    for (i <- 1 to k) {
-      sb.append(s""",
-        |p$i as materialized (select sy[cast(i as int)] l,
-        |   sy[cast(i as int) + 1] r, cast(sum(wc) as bigint) c
-        | from (select wc, list_filter(string_split(enc, chr(1) || chr(1)),
-        |     x -> x <> '') sy from s${i - 1}) q,
-        |   unnest(range(1, len(sy))) u(i)
-        | group by 1, 2),
-        |b$i as materialized (select $i it, l, r, c,
-        |   (select cast(count(*) as bigint) from p$i) n_pairs
-        | from p$i order by c desc, l, r limit 1),
-        |s$i as materialized (select word, wc, replace(enc,
-        |   chr(1) || l || chr(1) || chr(1) || r || chr(1),
-        |   chr(1) || l || r || chr(1)) enc
-        | from s${i - 1} cross join b$i)""".stripMargin)
-    }
-    sb.append((1 to k)
-      .map(i => s"select it, l lhs, r rhs, c pair_count, n_pairs from b$i")
-      .mkString("\n", "\nunion all\n", ""))
-    sb.toString
-  }
-
-  private def oracle45: Map[String, String] = Map(
-
-    // the full DDSketch replayed in SQL: same qln micro-grid, same
-    // integer floor-division bucket, same cumulative-rank walk, same
-    // single micro-grid exp for the estimate (ln(1) guards the x=0
-    // branch — Spark's log returns NULL there, DuckDB's ln would -inf)
-    "q_dd_quantiles" ->
-      """with v as (select l_returnflag flag, cast(l_extendedprice as double) x
-        |  from lineitem
-        |  where l_extendedprice is not null and isfinite(l_extendedprice)),
-        |lv as (select flag, x,
-        |    cast(floor(ln(case when x = 0 then 1 else abs(x) end)
-        |         * 1e6 + 0.5) as bigint) l from v),
-        |b as (select flag,
-        |    case when x > 0 then 1 when x < 0 then -1 else 0 end sign,
-        |    case when x = 0 then 0
-        |      else cast((l - ((l % 19803 + 19803) % 19803)) / 19803 as bigint)
-        |    end bucket
-        |  from lv),
-        |h as (select flag, sign, bucket, cast(count(*) as bigint) cnt
-        |  from b group by 1, 2, 3),
-        |c as (select flag, sign, bucket, cnt,
-        |    cast(sum(cnt) over (partition by flag
-        |      order by sign, sign * bucket
-        |      rows between unbounded preceding and current row) as bigint) cum,
-        |    cast(sum(cnt) over (partition by flag) as bigint) n from h),
-        |qs as (select cast(q as double) q from (values (0.01), (0.25),
-        |   (0.5), (0.75), (0.9), (0.99)) qv(q))
-        |select flag, q, n, sign, bucket, cum,
-        |  case when sign = 0 then 0.0 else
-        |    sign * (floor(exp((bucket * 19803) / 1e6) * 1e6 + 0.5) / 1e6)
-        |  end est
-        |from c join qs on (cum - cnt) <= floor(q * (n - 1))
-        |  and floor(q * (n - 1)) < cum""".stripMargin,
-
-    // whole-corpus sketch in one pass — hash-equality against Spark's
-    // merged-halves sketch proves merge == whole
-    "q_dd_merged" ->
-      """with v as (select source, cast(length(text) as double) x
-        |  from documents),
-        |lv as (select source, x,
-        |    cast(floor(ln(case when x = 0 then 1 else abs(x) end)
-        |         * 1e6 + 0.5) as bigint) l from v),
-        |b as (select source,
-        |    case when x > 0 then 1 when x < 0 then -1 else 0 end sign,
-        |    case when x = 0 then 0
-        |      else cast((l - ((l % 19803 + 19803) % 19803)) / 19803 as bigint)
-        |    end bucket
-        |  from lv),
-        |h as (select source, sign, bucket, cast(count(*) as bigint) cnt
-        |  from b group by 1, 2, 3),
-        |c as (select source, sign, bucket, cnt,
-        |    cast(sum(cnt) over (partition by source
-        |      order by sign, sign * bucket
-        |      rows between unbounded preceding and current row) as bigint) cum,
-        |    cast(sum(cnt) over (partition by source) as bigint) n from h),
-        |qs as (select cast(q as double) q
-        |  from (values (0.5), (0.9)) qv(q))
-        |select source, q, n, sign, bucket, cum,
-        |  case when sign = 0 then 0.0 else
-        |    sign * (floor(exp((bucket * 19803) / 1e6) * 1e6 + 0.5) / 1e6)
-        |  end est
-        |from c join qs on (cum - cnt) <= floor(q * (n - 1))
-        |  and floor(q * (n - 1)) < cum""".stripMargin,
-
-    // round-trip identity: the TFRecord surface must reconstruct the
-    // table exactly
-    "q_tfrecord_roundtrip" ->
-      """select lang, count(*) n_recs,
-        |  cast(sum(doc_id) as bigint) id_sum,
-        |  cast(sum(cast(concat('0x', substr(md5(concat(source, text)),
-        |    1, 8)) as bigint)) as bigint) text_sum,
-        |  cast(sum(length(text)) as bigint) sum_chars
-        |from documents group by lang""".stripMargin,
-
-    // the truth the banding must reproduce: a direct inequality join
-    "q_interval_overlap" ->
-      """with ev as (select event_id, user_id, epoch_us(ts) s0,
-        |    epoch_us(ts) + ((event_id % 600) + 1) * 1000000 e0
-        |  from events),
-        |a as (select * from ev where event_id % 2 = 0),
-        |b as (select * from ev where event_id % 2 = 1),
-        |p as (select a.user_id, a.event_id a_id, b.event_id b_id,
-        |    least(a.e0, b.e0) - greatest(a.s0, b.s0) ov
-        |  from a join b on a.user_id = b.user_id
-        |    and a.s0 < b.e0 and b.s0 < a.e0)
-        |select user_id, count(*) n_pairs,
-        |  cast(sum(a_id) as bigint) a_id_sum,
-        |  cast(sum(b_id) as bigint) b_id_sum,
-        |  cast(sum(ov) as bigint) overlap_us
-        |from p group by user_id""".stripMargin,
-
-    // three grid scales + the 48-term interleave replayed inline
-    "q_zorder3_layout" ->
-      (s"""with bd as (select
-         |   cast(min(l_partkey) as bigint) minx,
-         |   cast(max(l_partkey) as bigint) maxx,
-         |   cast(min(l_suppkey) as bigint) miny,
-         |   cast(max(l_suppkey) as bigint) maxy,
-         |   cast(min(l_orderkey) as bigint) minz,
-         |   cast(max(l_orderkey) as bigint) maxz from lineitem),
-         |sc as (select l_partkey, l_suppkey, l_orderkey,
-         |   case when maxx = minx then 0 else
-         |     cast((((cast(l_partkey as bigint) - minx) * 65535)
-         |       - (((cast(l_partkey as bigint) - minx) * 65535)
-         |          % (maxx - minx))) / (maxx - minx) as bigint) end x,
-         |   case when maxy = miny then 0 else
-         |     cast((((cast(l_suppkey as bigint) - miny) * 65535)
-         |       - (((cast(l_suppkey as bigint) - miny) * 65535)
-         |          % (maxy - miny))) / (maxy - miny) as bigint) end y,
-         |   case when maxz = minz then 0 else
-         |     cast((((cast(l_orderkey as bigint) - minz) * 65535)
-         |       - (((cast(l_orderkey as bigint) - minz) * 65535)
-         |          % (maxz - minz))) / (maxz - minz) as bigint) end z
-         | from lineitem cross join bd),
-         |zz as (select l_partkey, l_suppkey, l_orderkey,
-         |   cast(${graft.functions.Morton3.sqlReplay("x", "y", "z")}
-         |     as bigint) zval
-         | from sc)
-         |select zval >> 43 zbucket, count(*) n_rows,
-         |  min(l_partkey) min_pk, max(l_partkey) max_pk,
-         |  min(l_suppkey) min_sk, max(l_suppkey) max_sk,
-         |  min(l_orderkey) min_ok, max(l_orderkey) max_ok,
-         |  cast(sum(zval % 1000000007) as bigint) zmod_sum
-         |from zz group by 1""").stripMargin,
-
-    // same marker rewrite (RE2 spells the backreference \1), same split,
-    // same trim/non-empty filter — integer evidence only
-    "q_sentence_stats" ->
-      """with sp as (select lang,
-        |    list_filter(list_transform(
-        |      string_split(regexp_replace(text, '([.!?])\s+',
-        |        '\1' || chr(1), 'g'), chr(1)),
-        |      s -> trim(s)), s -> length(s) > 0) ss
-        |  from documents),
-        |d as (select lang,
-        |    cast(len(ss) as bigint) n_sentences,
-        |    cast(coalesce(list_sum(list_transform(ss, s -> length(s))), 0)
-        |      as bigint) sentence_chars,
-        |    cast(coalesce(list_max(list_transform(ss, s -> length(s))), 0)
-        |      as bigint) max_sentence
-        |  from sp)
-        |select lang, count(*) n_docs,
-        |  cast(sum(n_sentences) as bigint) sentences,
-        |  cast(sum(sentence_chars) as bigint) sentence_chars,
-        |  cast(max(max_sentence) as bigint) longest
-        |from d group by lang""".stripMargin,
-
-    // orientation, wedges and closure replayed in plain SQL
-    "q_triangle_count" ->
-      """with n as (select count(*) nn from documents),
-        |e as (
-        |  select doc_id src, (doc_id + 1) % nn dst
-        |    from documents cross join n
-        |  union all select doc_id, (doc_id + 2) % nn
-        |    from documents cross join n
-        |  union all select doc_id, (doc_id * 7 + 1) % nn
-        |    from documents cross join n
-        |  union all select doc_id, (doc_id * 13 + 2) % nn
-        |    from documents cross join n),
-        |e0 as (select distinct least(src, dst) u, greatest(src, dst) v
-        |  from e where src <> dst),
-        |dg as (select x, cast(count(*) as bigint) d
-        |  from (select u x from e0 union all select v x from e0)
-        |  group by 1),
-        |o as (select
-        |    case when du < dv or (du = dv and u < v) then u else v end a,
-        |    case when du < dv or (du = dv and u < v) then v else u end b
-        |  from (select u, v, d1.d du, d2.d dv from e0
-        |    join dg d1 on e0.u = d1.x join dg d2 on e0.v = d2.x)),
-        |w as (select o1.a, o1.b w1, o2.b w2
-        |  from o o1 join o o2 on o1.a = o2.a where o1.b < o2.b),
-        |c as (select 1 x from w join o e3
-        |  on (w.w1 = e3.a and w.w2 = e3.b)
-        |    or (w.w2 = e3.a and w.w1 = e3.b))
-        |select (select cast(count(*) as bigint) from dg) n_vertices,
-        |  (select cast(count(*) as bigint) from e0) n_edges,
-        |  cast(count(*) as bigint) n_triangles
-        |from c""".stripMargin,
-
-    // the same ES priorities replayed: md5 fraction, micro-grid ln, one
-    // division, same tie-break — selected sets must agree exactly
-    "q_weighted_sample" ->
-      """with p as (select doc_id, lang, length(text) wt,
-        |    floor(ln((cast(concat('0x', substr(md5(concat(
-        |        cast(doc_id as varchar), 'graft')), 1, 13)) as bigint)
-        |        + 0.5) / 4503599627370496.0) * 1e6 + 0.5)
-        |      / cast(length(text) as double) pr
-        |  from documents),
-        |r as (select doc_id, lang, wt,
-        |    row_number() over (partition by lang order by pr desc, doc_id)
-        |      rn from p)
-        |select lang, count(*) n_rows,
-        |  cast(sum(doc_id) as bigint) id_sum,
-        |  cast(sum(wt) as bigint) weight_sum
-        |from r where rn <= 20 group by lang""".stripMargin,
-
-    // whole-corpus bloom in one pass == init + 3 streamed OR-commits;
-    // same membership join; pointer evidence in closed form
-    "q_stream_bloom" ->
-      """with nrm as (select source,
-        |   regexp_replace(lower(trim(text)), '\s+', ' ', 'g') t
-        | from documents),
-        |sh as (select distinct source, tok g
-        | from nrm, unnest(string_split_regex(t, ' ')) u(tok)
-        | where length(tok) > 0),
-        |ds as (select * from (values (0), (1), (2), (3)) dv(d)),
-        |pos as (select source,
-        |   cast(concat('0x', substr(md5(g), 1 + 8 * d, 8)) as bigint)
-        |     % 65536 bp
-        | from sh cross join ds),
-        |blm as (select source, bp >> 5 word,
-        |   bit_or(1::bigint << cast(bp % 32 as int)) bits
-        | from pos group by 1, 2),
-        |pr as (select * from (values ('data'), ('the'),
-        |   ('qwxyz')) pv(probe)),
-        |np as (select s.source, probe,
-        |   cast(concat('0x', substr(md5(probe), 1 + 8 * d, 8)) as bigint)
-        |     % 65536 bp
-        | from (select distinct source from documents) s
-        | cross join pr cross join ds),
-        |nw as (select source, probe, bp >> 5 word,
-        |   bit_or(1::bigint << cast(bp % 32 as int)) need
-        | from np group by 1, 2, 3),
-        |j as (select nw.source, nw.probe,
-        |   (coalesce(blm.bits, 0) & nw.need) = nw.need hit
-        | from nw left join blm
-        |   on nw.source = blm.source and nw.word = blm.word)
-        |select source, probe, bool_and(hit) present,
-        |  cast(count(*) as bigint) n_words,
-        |  3 snap_version, cast(2 as bigint) last_batch
-        |from j group by 1, 2""".stripMargin,
-
-    // delays restated in closed form (the group selection and parse are
-    // what Spark must reproduce), slot window + floor-grid times replayed
-    "q_crawl_schedule" ->
-      """with d as (select doc_id, lang, source,
-        |    cast(substr(source, 4) as int) sn from documents),
-        |dl as (select source,
-        |    case when sn % 3 = 0 then cast(3.0 as double)
-        |      else cast((sn % 5) + 2 as double) end delay
-        |  from (select distinct source, sn from d)),
-        |s as (select d.doc_id, d.lang,
-        |    row_number() over (partition by d.source order by d.doc_id)
-        |      - 1 slot,
-        |    dl.delay
-        |  from d join dl on d.source = dl.source),
-        |f as (select lang, slot,
-        |    1700000000000 + cast(floor(slot * delay * 1000.0 + 0.5)
-        |      as bigint) ts
-        |  from s)
-        |select lang, count(*) n_urls,
-        |  cast(sum(slot) as bigint) slot_sum,
-        |  cast(max(slot) as bigint) max_slot,
-        |  cast(sum(ts) as bigint) fetch_ms_sum
-        |from f group by 1""".stripMargin,
-
-    // per-column stats stated in plain SQL, one UNION arm per column
-    "q_analyze_columns" ->
-      """with b as (select cast(count(*) as bigint) n from lineitem)
-        |select 'l_orderkey' col_name, n n_rows,
-        |  (select cast(sum(case when l_orderkey is null then 1 else 0 end)
-        |     as bigint) from lineitem) n_nulls,
-        |  (select cast(min(l_orderkey) as varchar) from lineitem) min_v,
-        |  (select cast(max(l_orderkey) as varchar) from lineitem) max_v,
-        |  (select cast(count(distinct l_orderkey) as bigint) from lineitem)
-        |    n_distinct
-        |from b
-        |union all
-        |select 'l_partkey', n,
-        |  (select cast(sum(case when l_partkey is null then 1 else 0 end)
-        |     as bigint) from lineitem),
-        |  (select cast(min(l_partkey) as varchar) from lineitem),
-        |  (select cast(max(l_partkey) as varchar) from lineitem),
-        |  (select cast(count(distinct l_partkey) as bigint) from lineitem)
-        |from b
-        |union all
-        |select 'l_returnflag', n,
-        |  (select cast(sum(case when l_returnflag is null then 1 else 0 end)
-        |     as bigint) from lineitem),
-        |  (select min(l_returnflag) from lineitem),
-        |  (select max(l_returnflag) from lineitem),
-        |  (select cast(count(distinct l_returnflag) as bigint) from lineitem)
-        |from b
-        |union all
-        |select 'l_shipdate', n,
-        |  (select cast(sum(case when l_shipdate is null then 1 else 0 end)
-        |     as bigint) from lineitem),
-        |  (select cast(min(l_shipdate) as varchar) from lineitem),
-        |  (select cast(max(l_shipdate) as varchar) from lineitem),
-        |  (select cast(count(distinct l_shipdate) as bigint) from lineitem)
-        |from b""".stripMargin,
-
-    // whole-corpus token-count sketch in one pass — hash equality
-    // against init + 3 streamed additive commits proves the versioned
-    // counter pipeline end to end; pointer evidence in closed form
-    "q_stream_dd_sketch" ->
-      """with v as (select source,
-        |    cast(len(string_split_regex(lower(trim(text)), '\s+'))
-        |      as double) x
-        |  from documents),
-        |lv as (select source, x,
-        |    cast(floor(ln(case when x = 0 then 1 else abs(x) end)
-        |         * 1e6 + 0.5) as bigint) l from v),
-        |b as (select source,
-        |    case when x > 0 then 1 when x < 0 then -1 else 0 end sign,
-        |    case when x = 0 then 0
-        |      else cast((l - ((l % 19803 + 19803) % 19803)) / 19803 as bigint)
-        |    end bucket
-        |  from lv),
-        |h as (select source, sign, bucket, cast(count(*) as bigint) cnt
-        |  from b group by 1, 2, 3),
-        |c as (select source, sign, bucket, cnt,
-        |    cast(sum(cnt) over (partition by source
-        |      order by sign, sign * bucket
-        |      rows between unbounded preceding and current row) as bigint) cum,
-        |    cast(sum(cnt) over (partition by source) as bigint) n from h),
-        |qs as (select cast(q as double) q
-        |  from (values (0.5), (0.9)) qv(q))
-        |select source, q, n, sign, bucket, cum,
-        |  case when sign = 0 then 0.0 else
-        |    sign * (floor(exp((bucket * 19803) / 1e6) * 1e6 + 0.5) / 1e6)
-        |  end est,
-        |  3 snap_version, cast(2 as bigint) last_batch
-        |from c join qs on (cum - cnt) <= floor(q * (n - 1))
-        |  and floor(q * (n - 1)) < cum""".stripMargin,
-
-    // the same bucket/bbox evidence computed from scratch: bounds pin
-    // on the ≡3 (mod 4) init quarter, every row clamps into that box
-    // for the zval (raw values in the bbox stats), Morton2 replayed
-    // bit-for-bit; pointer closed-form (3 non-empty batches → v3,
-    // lastBatch 2)
-    "q_zorder_incremental" ->
-      (s"""with bd as (select cast(min(l_partkey) as bigint) minx,
-         |   cast(max(l_partkey) as bigint) maxx,
-         |   cast(min(l_suppkey) as bigint) miny,
-         |   cast(max(l_suppkey) as bigint) maxy
-         | from lineitem where l_orderkey % 16 = 3),
-         |cl as (select l_partkey, l_suppkey,
-         |   least(greatest(cast(l_partkey as bigint), minx), maxx) cx,
-         |   least(greatest(cast(l_suppkey as bigint), miny), maxy) cy,
-         |   minx, maxx, miny, maxy
-         | from lineitem cross join bd
-         | where l_orderkey % 16 < 4),
-         |sc as (select l_partkey, l_suppkey,
-         |   case when maxx = minx then 0 else
-         |     cast((((cx - minx) * 65535)
-         |       - (((cx - minx) * 65535) % (maxx - minx)))
-         |       / (maxx - minx) as bigint) end x,
-         |   case when maxy = miny then 0 else
-         |     cast((((cy - miny) * 65535)
-         |       - (((cy - miny) * 65535) % (maxy - miny)))
-         |       / (maxy - miny) as bigint) end y
-         | from cl),
-         |z as (select l_partkey, l_suppkey,
-         |   cast(${graft.functions.Morton2.sqlReplay("x", "y")} as bigint) zval
-         | from sc)
-         |select zval >> 27 zbucket, cast(count(*) as bigint) n_rows,
-         |  min(l_partkey) min_pk, max(l_partkey) max_pk,
-         |  min(l_suppkey) min_sk, max(l_suppkey) max_sk,
-         |  cast(sum(zval) as bigint) zval_sum,
-         |  cast(3 as int) snap_version, cast(2 as bigint) last_batch
-         |from z group by 1""").stripMargin,
-
-    // from-scratch twin of the epoch'd lake: contents (bucketed sums)
-    // over all four quartiles + the newest-quartile box as a plain
-    // filter; pointer closed-form (3 non-empty batches → v3, lastBatch
-    // 2). zvals are deliberately NOT replayed — each epoch has its own
-    // grid; the evidence is content fidelity through the rolls and the
-    // box-read == filter identity.
-    "q_zorder_epochs" ->
-      ("""with li as (select cast(l_orderkey as bigint) okey,
-         |   cast(l_partkey as bigint) pk, cast(l_suppkey as bigint) sk
-         | from lineitem where l_orderkey % 16 < 4),
-         |bd as (select max(okey)//4 q, max(okey) mx, max(sk) skmax from li),
-         |bx as (select cast(count(*) as bigint) box_rows,
-         |   cast(coalesce(sum(pk), 0) as bigint) box_pk_sum
-         | from li cross join bd
-         | where okey > 3*q and okey <= mx and sk between 1 and skmax//2)
-         |select pk % 16 bucket, cast(count(*) as bigint) n_rows,
-         |  cast(sum(okey) as bigint) okey_sum, cast(sum(sk) as bigint) sk_sum,
-         |  min(okey) min_okey, max(okey) max_okey,
-         |  cast(3 as int) snap_version, cast(2 as bigint) last_batch,
-         |  box_rows, box_pk_sum
-         |from li cross join bx
-         |group by 1, box_rows, box_pk_sum""").stripMargin,
-
-    // rebuild twin: contents unchanged by the maintenance rewrite, so
-    // the oracle is q_zorder_epochs' from-scratch twin with the pointer
-    // advanced one maintenance version (v4) at the same lastBatch
-    "q_zorder_rebuild" ->
-      ("""with li as (select cast(l_orderkey as bigint) okey,
-         |   cast(l_partkey as bigint) pk, cast(l_suppkey as bigint) sk
-         | from lineitem where l_orderkey % 16 < 4),
-         |bd as (select max(okey)//4 q, max(okey) mx, max(sk) skmax from li),
-         |bx as (select cast(count(*) as bigint) box_rows,
-         |   cast(coalesce(sum(pk), 0) as bigint) box_pk_sum
-         | from li cross join bd
-         | where okey > 3*q and okey <= mx and sk between 1 and skmax//2)
-         |select pk % 16 bucket, cast(count(*) as bigint) n_rows,
-         |  cast(sum(okey) as bigint) okey_sum, cast(sum(sk) as bigint) sk_sum,
-         |  min(okey) min_okey, max(okey) max_okey,
-         |  cast(4 as int) snap_version, cast(2 as bigint) last_batch,
-         |  box_rows, box_pk_sum
-         |from li cross join bx
-         |group by 1, box_rows, box_pk_sum""").stripMargin,
-
-    // 3-D twin of the q_zorder_incremental oracle: bounds off the ≡3
-    // quarter, three clamped grid scales, the 48-term Morton3 replay,
-    // modular zval checksum (48-bit raw sums overflow int64)
-    "q_zorder3_incremental" ->
-      (s"""with bd as (select
-         |   cast(min(l_partkey) as bigint) minx,
-         |   cast(max(l_partkey) as bigint) maxx,
-         |   cast(min(l_suppkey) as bigint) miny,
-         |   cast(max(l_suppkey) as bigint) maxy,
-         |   cast(min(l_orderkey) as bigint) minz,
-         |   cast(max(l_orderkey) as bigint) maxz
-         | from lineitem where l_orderkey % 16 = 3),
-         |cl as (select l_partkey, l_suppkey, l_orderkey,
-         |   least(greatest(cast(l_partkey as bigint), minx), maxx) cx,
-         |   least(greatest(cast(l_suppkey as bigint), miny), maxy) cy,
-         |   least(greatest(cast(l_orderkey as bigint), minz), maxz) cz,
-         |   minx, maxx, miny, maxy, minz, maxz
-         | from lineitem cross join bd
-         | where l_orderkey % 16 < 4),
-         |sc as (select l_partkey, l_suppkey, l_orderkey,
-         |   case when maxx = minx then 0 else
-         |     cast((((cx - minx) * 65535)
-         |       - (((cx - minx) * 65535) % (maxx - minx)))
-         |       / (maxx - minx) as bigint) end x,
-         |   case when maxy = miny then 0 else
-         |     cast((((cy - miny) * 65535)
-         |       - (((cy - miny) * 65535) % (maxy - miny)))
-         |       / (maxy - miny) as bigint) end y,
-         |   case when maxz = minz then 0 else
-         |     cast((((cz - minz) * 65535)
-         |       - (((cz - minz) * 65535) % (maxz - minz)))
-         |       / (maxz - minz) as bigint) end z
-         | from cl),
-         |zz as (select l_partkey, l_suppkey, l_orderkey,
-         |   cast(${graft.functions.Morton3.sqlReplay("x", "y", "z")}
-         |     as bigint) zval
-         | from sc)
-         |select zval >> 43 zbucket, cast(count(*) as bigint) n_rows,
-         |  min(l_partkey) min_pk, max(l_partkey) max_pk,
-         |  min(l_suppkey) min_sk, max(l_suppkey) max_sk,
-         |  min(l_orderkey) min_ok, max(l_orderkey) max_ok,
-         |  cast(sum(zval % 1000000007) as bigint) zmod_sum,
-         |  cast(3 as int) snap_version, cast(2 as bigint) last_batch
-         |from zz group by 1""").stripMargin,
-
-    // pruning by z-intervals must be row-identical to the plain box
-    // filter — the oracle IS the unpruned scan
-    "q_zorder_box_read" ->
-      """select l_suppkey, cast(count(*) as bigint) n_rows,
-        |  min(l_partkey) min_pk, max(l_partkey) max_pk,
-        |  cast(sum(cast(l_quantity as bigint)) as bigint) qty_sum
-        |from lineitem
-        |where l_partkey between 100 and 600 and l_suppkey between 20 and 60
-        |group by 1""".stripMargin,
-
-    // both-range AND filter over the whole table — intersected pruning
-    // must be invisible to results
-    "q_lake_multi_prune" ->
-      """select l_suppkey, cast(count(*) as bigint) n_rows,
-        |  min(l_partkey) min_pk, max(l_partkey) max_pk,
-        |  cast(sum(cast(l_quantity as bigint)) as bigint) qty_sum
-        |from lineitem
-        |where l_partkey between 200 and 800 and l_suppkey between 10 and 40
-        |group by 1""".stripMargin,
-
-    // the pruned read must be row-identical to the full range filter —
-    // the oracle IS the unpruned scan
-    "q_lake_range_prune" ->
-      """select l_returnflag, cast(count(*) as bigint) n_rows,
-        |  cast(sum(cast(l_quantity as bigint)) as bigint) qty_sum,
-        |  min(l_orderkey) min_ok, max(l_orderkey) max_ok
-        |from lineitem
-        |where l_orderkey between 1000 and 3000
-        |group by 1""".stripMargin,
-
-    // exact-integer grid scale + the 32-term Morton interleave replayed
-    // inline (functions.Morton2.sqlReplay), then the same top-5-bit
-    // bucketing and bounding-box rollup
-    "q_zorder_layout" ->
-      (s"""with bd as (select cast(min(l_partkey) as bigint) minx,
-         |   cast(max(l_partkey) as bigint) maxx,
-         |   cast(min(l_suppkey) as bigint) miny,
-         |   cast(max(l_suppkey) as bigint) maxy from lineitem),
-         |sc as (select l_partkey, l_suppkey,
-         |   case when maxx = minx then 0 else
-         |     cast((((cast(l_partkey as bigint) - minx) * 65535)
-         |       - (((cast(l_partkey as bigint) - minx) * 65535)
-         |          % (maxx - minx)))
-         |       / (maxx - minx) as bigint) end x,
-         |   case when maxy = miny then 0 else
-         |     cast((((cast(l_suppkey as bigint) - miny) * 65535)
-         |       - (((cast(l_suppkey as bigint) - miny) * 65535)
-         |          % (maxy - miny)))
-         |       / (maxy - miny) as bigint) end y
-         | from lineitem cross join bd),
-         |z as (select l_partkey, l_suppkey,
-         |   cast(${graft.functions.Morton2.sqlReplay("x", "y")} as bigint) zval
-         | from sc)
-         |select zval >> 27 zbucket, count(*) n_rows,
-         |  min(l_partkey) min_pk, max(l_partkey) max_pk,
-         |  min(l_suppkey) min_sk, max(l_suppkey) max_sk,
-         |  cast((max(l_partkey) - min(l_partkey) + 1) as bigint)
-         |    * cast((max(l_suppkey) - min(l_suppkey) + 1) as bigint) bbox_area,
-         |  cast(sum(zval) as bigint) zval_sum
-         |from z group by 1""").stripMargin,
-
-    // whole-corpus bloom in one pass (merge == whole under OR) and the
-    // same 32-bit-word membership join, bit for bit
-    "q_bloom_membership" ->
-      """with nrm as (select source,
-        |   regexp_replace(lower(trim(text)), '\s+', ' ', 'g') t
-        | from documents),
-        |sh as (select distinct source, substr(t, cast(i as int), 5) g
-        | from nrm, unnest(range(1, length(t) - 3)) u(i)),
-        |ds as (select * from (values (0), (1), (2), (3)) dv(d)),
-        |pos as (select source,
-        |   cast(concat('0x', substr(md5(g), 1 + 8 * d, 8)) as bigint)
-        |     % 65536 bp
-        | from sh cross join ds),
-        |blm as (select source, bp >> 5 word,
-        |   bit_or(1::bigint << cast(bp % 32 as int)) bits
-        | from pos group by 1, 2),
-        |pr as (select * from (values ('data '), ('s the'), ('zzzzz'),
-        |   ('qwxyz')) pv(probe)),
-        |np as (select s.source, probe,
-        |   cast(concat('0x', substr(md5(probe), 1 + 8 * d, 8)) as bigint)
-        |     % 65536 bp
-        | from (select distinct source from documents) s
-        | cross join pr cross join ds),
-        |nw as (select source, probe, bp >> 5 word,
-        |   bit_or(1::bigint << cast(bp % 32 as int)) need
-        | from np group by 1, 2, 3),
-        |j as (select nw.source, nw.probe,
-        |   (coalesce(blm.bits, 0) & nw.need) = nw.need hit
-        | from nw left join blm
-        |   on nw.source = blm.source and nw.word = blm.word)
-        |select source, probe, bool_and(hit) present,
-        |  cast(count(*) as bigint) n_words
-        |from j group by 1, 2""".stripMargin,
-
-    // per-char script counts via RE2 script classes (\p{Latin} — Java
-    // spells them \p{IsLatin}; the COUNTS are the contract); dominant
-    // argmax replays the same first-max-wins order
-    "q_script_profile" ->
-      """with d as (select lang,
-        |    case when doc_id % 5 = 0
-        |        then concat('Служба новостей сообщает о ', source)
-        |      when doc_id % 5 = 1 then concat('新闻服务发布了 ', source)
-        |      when doc_id % 5 = 2 then concat('خدمة الأخبار تنشر ', source)
-        |      else text end t
-        |  from documents),
-        |c as (select lang,
-        |    cast(len(regexp_extract_all(t, '[\p{Latin}]')) as bigint) nl,
-        |    cast(len(regexp_extract_all(t, '[\p{Cyrillic}]')) as bigint) ncy,
-        |    cast(len(regexp_extract_all(t, '[\p{Han}]')) as bigint) nh,
-        |    cast(len(regexp_extract_all(t, '[\p{Arabic}]')) as bigint) na,
-        |    cast(len(regexp_extract_all(t, '[\p{Greek}]')) as bigint) ng,
-        |    cast(len(regexp_extract_all(t, '[\p{Hangul}]')) as bigint) nha,
-        |    cast(len(regexp_extract_all(t, '[\p{Hebrew}]')) as bigint) nhe,
-        |    cast(len(regexp_extract_all(t, '[\p{Devanagari}]')) as bigint) nd,
-        |    cast(len(regexp_extract_all(t, '[\p{L}]')) as bigint) nlet
-        |  from d),
-        |p as (select lang, nl, ncy, nh, na, ng, nha, nhe, nd, nlet,
-        |    greatest(nl, ncy, nh, na, ng, nha, nhe, nd) top
-        |  from c),
-        |e as (select lang, nl, ncy, nh, na, nlet,
-        |    case when nlet = 0 then 'none' when top = 0 then 'other'
-        |      when nl = top then 'latin' when ncy = top then 'cyrillic'
-        |      when nh = top then 'han' when na = top then 'arabic'
-        |      when ng = top then 'greek' when nha = top then 'hangul'
-        |      when nhe = top then 'hebrew' when nd = top then 'devanagari'
-        |      else 'other' end dominant,
-        |    case when nlet = 0 then cast(0 as bigint)
-        |      else cast(floor((floor(cast(top as double) / nlet * 1e6
-        |        + 0.5) / 1e6) * 1e6 + 0.5) as bigint) end share_u
-        |  from p)
-        |select lang, dominant, count(*) n_docs,
-        |  cast(sum(nl) as bigint) latin_chars,
-        |  cast(sum(ncy) as bigint) cyrillic_chars,
-        |  cast(sum(nh) as bigint) han_chars,
-        |  cast(sum(na) as bigint) arabic_chars,
-        |  cast(sum(nlet) as bigint) letter_chars,
-        |  cast(sum(share_u) as bigint) share_u_sum
-        |from e group by 1, 2""".stripMargin,
-
-    // full block-classification replay: same split regex, same
-    // tag-strip chain (with 'g' — DuckDB replaces first-only by
-    // default), same integer rules, same in-order reassembly
-    "q_boilerplate" ->
-      ("""with pg as (select doc_id, lang,
-        |    concat('<html><body><div class="nav"><a href="/">Home</a> ',
-        |      '<a href="/n">News</a> <a href="/c">Contact</a></div><h1>',
-        |      source, ' page</h1><p>', text,
-        |      '</p><p>Share this</p><div class="footer">Copyright ',
-        |      '<a href="/t">terms</a> and <a href="/p">privacy</a>',
-        |      '</div></body></html>') page
-        |  from documents),
-        |sp as (select doc_id, lang,
-        |    regexp_split_to_array(page, '""" + TextStats.BlockTagRe + """') parts
-        |  from pg),
-        |bl as (select doc_id, lang, generate_subscripts(parts, 1) i,
-        |    parts[i] raw
-        |  from sp),
-        |tx as (select doc_id, lang, i - 1 pos,
-        |    trim(regexp_replace(regexp_replace(raw, '<[^>]*>', ' ', 'g'),
-        |      '\s+', ' ', 'g')) txt,
-        |    cast(coalesce(list_sum(list_transform(
-        |      regexp_extract_all(raw, '(?is)<a\b[^>]*>(.*?)</a>', 1),
-        |      a -> length(trim(regexp_replace(
-        |        regexp_replace(a, '<[^>]*>', ' ', 'g'),
-        |        '\s+', ' ', 'g'))))), 0) as bigint) anchor_chars
-        |  from bl),
-        |ct as (select doc_id, lang, pos, txt, anchor_chars,
-        |    cast(length(txt) as bigint) n_chars,
-        |    case when length(txt) = 0 then 0
-        |      else cast(len(string_split_regex(lower(txt), '\s+')) as bigint)
-        |    end n_toks,
-        |    case when length(txt) = 0 then 0
-        |      else cast(len(list_filter(string_split_regex(lower(txt), '\s+'),
-        |        x -> x in ('the', 'a', 'of', 'to', 'and', 'in', 'is', 'that')))
-        |        as bigint) end n_stops
-        |  from tx),
-        |cl as (select doc_id, lang, pos, txt, n_chars,
-        |    case when anchor_chars > 0 and anchor_chars * 100 > n_chars * 40
-        |        then 'boilerplate'
-        |      when n_chars < 25 then 'short'
-        |      when n_chars >= 40 and n_stops * 50 >= n_toks * 1 then 'good'
-        |      else 'boilerplate' end cls
-        |  from ct),
-        |mc as (select doc_id, lang,
-        |    cast(count(*) as bigint) n_blocks,
-        |    cast(sum(case when cls = 'good' then 1 else 0 end) as bigint) n_good,
-        |    cast(sum(case when cls = 'boilerplate' then 1 else 0 end)
-        |      as bigint) n_boiler,
-        |    coalesce(string_agg(case when cls = 'good' then txt end,
-        |      chr(10) order by pos), '') main_text
-        |  from cl group by 1, 2)
-        |select lang, count(*) n_docs,
-        |  cast(sum(n_blocks) as bigint) blocks,
-        |  cast(sum(n_good) as bigint) good,
-        |  cast(sum(n_boiler) as bigint) boiler,
-        |  cast(sum(cast(concat('0x', substr(md5(main_text), 1, 8)) as bigint))
-        |    as bigint) text_sum,
-        |  cast(sum(length(main_text)) as bigint) sum_chars
-        |from mc group by lang""").stripMargin,
-
-    // overlapping-occurrence counts via an explicit position scan —
-    // the semantically honest twin of the automaton
-    "q_blocklist_filter" ->
-      s"""with pats as (select * from (values
-         |   ${blocklist.map(p => s"('$p')").mkString(", ")}) p(pat)),
-         |d as (select doc_id, lang, lower(text) t from documents),
-         |hits as (
-         |  select d.doc_id, d.lang, p.pat,
-         |    len(list_filter(range(1, len(d.t) - len(p.pat) + 2),
-         |        i -> substr(d.t, cast(i as int), len(p.pat)) = p.pat)) c
-         |  from d cross join pats p),
-         |perdoc as (select doc_id, lang, cast(sum(c) as bigint) hits,
-         |    count(distinct case when c > 0 then pat end) dp
-         |  from hits group by 1, 2)
-         |select lang, count(*) n_docs,
-         |  cast(sum(case when hits > 0 then 1 else 0 end) as bigint) n_blocked,
-         |  cast(sum(hits) as bigint) total_hits,
-         |  cast(max(dp) as bigint) max_distinct
-         |from perdoc group by lang""".stripMargin,
-
-    "q_bpe_train" -> bpeTrainSql(10),
-
-    "q_lake_merge" ->
-      """with t0 as (select o_orderkey, o_orderstatus, o_totalprice
-        |  from orders),
-        |ch as (select
-        |   case when o_orderkey % 7 = 2 then o_orderkey + 100000000
-        |        else o_orderkey end o_orderkey,
-        |   case when o_orderkey % 7 = 0 then 'update'
-        |        when o_orderkey % 7 = 1 then 'delete'
-        |        else 'insert' end op,
-        |   o_orderstatus, o_totalprice + 100.0 o_totalprice
-        | from orders where o_orderkey % 7 <= 2),
-        |mg as (
-        |  select t0.o_orderkey,
-        |    case when ch.op = 'update' then ch.o_orderstatus
-        |         else t0.o_orderstatus end o_orderstatus,
-        |    case when ch.op = 'update' then ch.o_totalprice
-        |         else t0.o_totalprice end o_totalprice
-        |  from t0 left join ch using (o_orderkey)
-        |  where ch.op is null or ch.op <> 'delete'
-        |  union all
-        |  select o_orderkey, o_orderstatus, o_totalprice from ch
-        |  where op = 'insert')
-        |select o_orderstatus, count(*) n_rows,
-        |  cast(sum(o_orderkey) as bigint) key_sum,
-        |  cast(sum(floor(o_totalprice * 100 + 0.5)) as bigint) cents_sum
-        |from mg group by 1""".stripMargin,
-
-    // the sequentially-merged final state stated in closed form: m≡0
-    // updated (+100), m≡1 deleted, originals of m≡2 and m≥3 carried,
-    // b1's fresh +1e8 keys end at b2's +999 update except the k%3=0
-    // third b3 deletes, b3's +2e8 inserts land at +20; b2's matched
-    // insert and b3's unmatched update contribute nothing
-    "q_stream_merge" ->
-      """with t as (select o_orderkey k, o_orderstatus st, o_totalprice p
-        |  from orders),
-        |f as (
-        |  select k, st, p + 100 pv from t where k % 7 = 0
-        |  union all select k, st, p from t where k % 7 = 2
-        |  union all select k, st, p from t where k % 7 >= 3
-        |  union all select k + 100000000, st, p + 999 from t
-        |    where k % 7 = 2 and k % 3 <> 0
-        |  union all select k + 200000000, st, p + 20 from t where k % 7 = 3
-        |)
-        |select st o_orderstatus, count(*) n_rows,
-        |  cast(sum(k) as bigint) key_sum,
-        |  cast(sum(floor(pv * 100 + 0.5)) as bigint) cents_sum
-        |from f group by 1""".stripMargin,
-
-    // same replay algebra as q_stream_merge with the r12 deltas; the
-    // versioned sink's pointer lands at (v3, batch 2) — closed form
-    "q_stream_merge_versioned" ->
-      """with t as (select o_orderkey k, o_orderstatus st, o_totalprice p
-        |  from orders),
-        |f as (
-        |  select k, st, p + 200 pv from t where k % 7 = 0
-        |  union all select k, st, p from t where k % 7 = 2
-        |  union all select k, st, p from t where k % 7 >= 3
-        |  union all select k + 100000000, st, p + 1111 from t
-        |    where k % 7 = 2 and k % 3 <> 0
-        |  union all select k + 200000000, st, p + 40 from t where k % 7 = 3
-        |)
-        |select st o_orderstatus, count(*) n_rows,
-        |  cast(sum(k) as bigint) key_sum,
-        |  cast(sum(floor(pv * 100 + 0.5)) as bigint) cents_sum,
-        |  3 snap_version, cast(2 as bigint) last_batch
-        |from f group by 1""".stripMargin,
-
-    // full register-level replay of the pinned-hash HLL: same 60-bit
-    // md5 hash, same bucket/rho split, same exact-int indicator sum;
-    // the alpha·m² constant is interpolated from the ONE Scala
-    // definition (shortest-roundtrip repr → identical double)
-    "q_hll_shingles" -> {
-      val alphaMM = (0.7213 / (1.0 + 1.079 / 256)) * 256 * 256
-      s"""with nrm as (select source,
-         |   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') t
-         | from documents),
-         |sh as (select source, substr(t, cast(i as int), 5) sh
-         | from nrm, unnest(range(1, length(t) - 3)) u(i)),
-         |h as (select source, sh,
-         |   cast(concat('0x', substr(md5(sh), 1, 15)) as bigint) hv from sh),
-         |rb as (select source, hv % 256 bucket,
-         |   case when hv // 256 = 0 then 53
-         |        else 53 - length(bin(hv // 256)) end rho from h),
-         |reg as (select source, bucket, cast(max(rho) as bigint) r
-         | from rb group by 1, 2),
-         |agg as (select source, cast(count(*) as bigint) nz,
-         |   cast(sum(r) as bigint) reg_sum,
-         |   cast(sum(1::bigint << cast(53 - r as int)) as bigint) s_int
-         | from reg group by 1),
-         |ex as (select source, cast(count(distinct sh) as bigint) n_exact
-         | from sh group by 1),
-         |es as (select source, nz, reg_sum, s_int,
-         |   (cast($alphaMM as double) * cast(9007199254740992 as double))
-         |     / cast(s_int + (256 - nz) * 9007199254740992 as double) raw
-         | from agg)
-         |select e.source, e.nz, e.reg_sum, e.s_int,
-         |  case when e.nz < 256 and e.raw <= cast(640 as double)
-         |       then cast(256 as double) * (floor(
-         |         ln(cast(256 as double) / cast(256 - e.nz as double))
-         |           * 1e6 + 0.5) / 1e6)
-         |       else e.raw end est,
-         |  case when e.nz < 256 and e.raw <= cast(640 as double) then 1
-         |       else 0 end small_range,
-         |  x.n_exact
-         |from es e join ex x using (source)""".stripMargin
-    },
-
-    // window-function replay of the water-filling level search; th can
-    // be empty (budget >= total), hence the left join on true
-    "q_token_budget" ->
-      """with cnt as (select source, cast(count(*) as bigint) c from (
-        |   select source, unnest(list_filter(
-        |     string_split_regex(lower(trim(text)), '\s+'),
-        |     x -> len(x) > 0)) tok from documents) group by 1),
-        |bt as (select cast(sum(c) * 6 // 10 as bigint) b from cnt),
-        |base as (select source k, c, b,
-        |   row_number() over (order by c, source) i,
-        |   sum(c) over (order by c, source) cum,
-        |   count(*) over () n
-        | from cnt cross join bt),
-        |trg as (select i, cum - c below, n, b,
-        |    row_number() over (order by i) rk
-        |  from base where cum - c + (n - i + 1) * c > b),
-        |th as (select i i_star, (b - below) // (n - i + 1) t,
-        |    (b - below) % (n - i + 1) rem from trg where rk = 1)
-        |select base.k source, base.c,
-        |  cast(case when th.i_star is null or base.i < th.i_star then base.c
-        |       else th.t + case when base.n - base.i + 1 <= th.rem
-        |                        then 1 else 0 end
-        |  end as bigint) alloc,
-        |  case when th.i_star is not null and base.i >= th.i_star then 1
-        |       else 0 end capped
-        |from base left join th on true""".stripMargin,
-
-    "q_quality_train" -> logRegSql(iters = 6, lrShift = 5),
-
-    // the merge replayed, then a full-outer comparison labels each key;
-    // recovers exactly the change batch
-    "q_lake_diff" ->
-      """with t0 as (select o_orderkey, o_orderstatus, o_totalprice
-        |  from orders),
-        |ch as (select
-        |   case when o_orderkey % 7 = 2 then o_orderkey + 100000000
-        |        else o_orderkey end o_orderkey,
-        |   case when o_orderkey % 7 = 0 then 'update'
-        |        when o_orderkey % 7 = 1 then 'delete'
-        |        else 'insert' end op,
-        |   o_orderstatus, o_totalprice + 100.0 o_totalprice
-        | from orders where o_orderkey % 7 <= 2),
-        |mg as (
-        |  select t0.o_orderkey,
-        |    case when ch.op = 'update' then ch.o_orderstatus
-        |         else t0.o_orderstatus end o_orderstatus,
-        |    case when ch.op = 'update' then ch.o_totalprice
-        |         else t0.o_totalprice end o_totalprice
-        |  from t0 left join ch using (o_orderkey)
-        |  where ch.op is null or ch.op <> 'delete'
-        |  union all
-        |  select o_orderkey, o_orderstatus, o_totalprice from ch
-        |  where op = 'insert'),
-        |d as (select coalesce(t0.o_orderkey, mg.o_orderkey) o_orderkey,
-        |   case when t0.o_orderkey is null then 'inserted'
-        |        when mg.o_orderkey is null then 'deleted'
-        |        when t0.o_orderstatus is distinct from mg.o_orderstatus
-        |          or t0.o_totalprice is distinct from mg.o_totalprice
-        |          then 'updated'
-        |        else 'unchanged' end change,
-        |   mg.o_totalprice after_price
-        | from t0 full outer join mg on t0.o_orderkey = mg.o_orderkey)
-        |select change, count(*) n_rows,
-        |  cast(sum(o_orderkey) as bigint) key_sum,
-        |  cast(sum(coalesce(floor(after_price * 100 + 0.5), 0)) as bigint)
-        |    after_cents_sum
-        |from d group by 1""".stripMargin,
-
-    // whole-corpus one-pass sketch: hash-matching the Spark side's
-    // merge-of-halves proves the merge algebra through the driver gate
-    "q_hll_merged" -> {
-      val alphaMM = (0.7213 / (1.0 + 1.079 / 256)) * 256 * 256
-      s"""with nrm as (select source,
-         |   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') t
-         | from documents),
-         |sh as (select source, substr(t, cast(i as int), 5) sh
-         | from nrm, unnest(range(1, length(t) - 3)) u(i)),
-         |h as (select source,
-         |   cast(concat('0x', substr(md5(sh), 1, 15)) as bigint) hv from sh),
-         |rb as (select source, hv % 256 bucket,
-         |   case when hv // 256 = 0 then 53
-         |        else 53 - length(bin(hv // 256)) end rho from h),
-         |reg as (select source, bucket, cast(max(rho) as bigint) r
-         | from rb group by 1, 2),
-         |agg as (select source, cast(count(*) as bigint) nz,
-         |   cast(sum(r) as bigint) reg_sum,
-         |   cast(sum(1::bigint << cast(53 - r as int)) as bigint) s_int
-         | from reg group by 1),
-         |es as (select source, nz, reg_sum, s_int,
-         |   (cast($alphaMM as double) * cast(9007199254740992 as double))
-         |     / cast(s_int + (256 - nz) * 9007199254740992 as double) raw
-         | from agg)
-         |select source, nz, reg_sum, s_int,
-         |  case when nz < 256 and raw <= cast(640 as double)
-         |       then cast(256 as double) * (floor(
-         |         ln(cast(256 as double) / cast(256 - nz as double))
-         |           * 1e6 + 0.5) / 1e6)
-         |       else raw end est,
-         |  case when nz < 256 and raw <= cast(640 as double) then 1
-         |       else 0 end small_range
-         |from es""".stripMargin
-    },
-
-    // exhaustive batch-vs-corpus truth (the gram CTE is verbatim
-    // q_minhash_candidates', whose parity is long-established)
-    "q_incremental_dedup" ->
-      """with toks as (select doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') t from documents),
-        |g as (select doc_id, list_distinct(list_transform(
-        |    range(1, greatest(len(t) - 1, 1)),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) grams
-        | from toks),
-        |pairs as (
-        | select b.doc_id new_id, a.doc_id old_id,
-        |  cast(len(list_intersect(a.grams, b.grams)) as bigint) n_inter,
-        |  cast(len(list_distinct(list_concat(a.grams, b.grams)))
-        |    as bigint) n_union
-        | from g a join g b on a.doc_id % 10 <> 0 and b.doc_id % 10 = 0
-        | where len(a.grams) > 0 and len(b.grams) > 0)
-        |select new_id, old_id, n_inter, n_union,
-        |  cast(n_inter as double) / n_union jaccard
-        |from pairs
-        |where cast(n_inter as double) / n_union >= 0.7""".stripMargin,
-
-    // bottom-k sketch replay: same hash, same dedup + window top-k,
-    // same merge-and-rerank union sketch
-    "q_kmv_overlap" ->
-      """with nrm as (select source,
-        |   regexp_replace(lower(trim(text)), '\s+', ' ', 'g') t
-        | from documents),
-        |sh as (select source, substr(t, cast(i as int), 5) sh
-        | from nrm, unnest(range(1, length(t) - 3)) u(i)),
-        |hv as (select distinct source,
-        |   cast(concat('0x', substr(md5(sh), 1, 15)) as bigint) hv from sh),
-        |mins as (select source, hv from (select source, hv,
-        |   row_number() over (partition by source order by hv) rk from hv)
-        | where rk <= 128),
-        |pairs as (select * from (values ('src0', 'src1'), ('src0', 'src2'),
-        |   ('src2', 'src3')) p(pa, pb)),
-        |m as (select pa, pb, hv, max(ina) ina, max(inb) inb from (
-        |   select p.pa, p.pb, k.hv, 1 ina, 0 inb
-        |   from mins k join pairs p on k.source = p.pa
-        |   union all
-        |   select p.pa, p.pb, k.hv, 0, 1
-        |   from mins k join pairs p on k.source = p.pb)
-        | group by 1, 2, 3),
-        |r as (select pa, pb, hv, ina, inb,
-        |   row_number() over (partition by pa, pb order by hv) rk from m),
-        |t as (select pa, pb, cast(count(*) as bigint) n_kept,
-        |   cast(max(hv) as bigint) union_kth,
-        |   cast(sum(ina * inb) as bigint) n_common
-        | from r where rk <= 128 group by 1, 2)
-        |select pa, pb, n_kept, union_kth, n_common,
-        |  cast(n_common as double) / n_kept jaccard,
-        |  cast(n_kept - 1 as double)
-        |    * cast(1152921504606846976 as double)
-        |    / cast(union_kth as double) union_est,
-        |  (cast(n_common as double) / n_kept)
-        |    * (cast(n_kept - 1 as double)
-        |      * cast(1152921504606846976 as double)
-        |      / cast(union_kth as double)) inter_est
-        |from t""".stripMargin,
-
-    // full 4x1024 CMS state replay: same salted md5 hash family, same
-    // min-over-depth point estimates
-    "q_cms_tokens" ->
-      """with tk as (select lang,
-        |   unnest(list_filter(string_split_regex(lower(trim(text)),
-        |     '\s+'), x -> len(x) > 0)) tok from documents),
-        |hh as (select lang, d,
-        |   cast(concat('0x', substr(md5(d || ':' || tok), 1, 15))
-        |     as bigint) % 1024 idx
-        | from tk cross join range(4) r(d)),
-        |cnt as (select lang, d, idx, cast(count(*) as bigint) counter
-        | from hh group by 1, 2, 3),
-        |pr as (select * from (values ('spark'), ('table'), ('the'),
-        |   ('vector'), ('zzzz')) p(probe)),
-        |langs as (select distinct lang from documents),
-        |ph as (select l.lang, p.probe, r.d,
-        |   cast(concat('0x', substr(md5(r.d || ':' || p.probe), 1, 15))
-        |     as bigint) % 1024 idx
-        | from langs l cross join pr p cross join range(4) r(d)),
-        |est as (select ph.lang, ph.probe,
-        |   min(coalesce(c.counter, 0)) cms_est
-        | from ph left join cnt c
-        |   on c.lang = ph.lang and c.d = ph.d and c.idx = ph.idx
-        | group by 1, 2),
-        |ex as (select lang, tok probe, cast(count(*) as bigint) exact_count
-        | from tk where tok in ('spark', 'table', 'the', 'vector', 'zzzz')
-        | group by 1, 2)
-        |select e.lang, e.probe, cast(e.cms_est as bigint) cms_est,
-        |  cast(coalesce(x.exact_count, 0) as bigint) exact_count
-        |from est e left join ex x
-        |  on x.lang = e.lang and x.probe = e.probe""".stripMargin,
-
-    // oracle twins of the fresh-name re-declarations above
-    "q_pettitt_v2" -> oracle43("q_pettitt"),
-    "q_seasonal_mann_kendall_v2" -> oracle43("q_seasonal_mann_kendall"),
-    "q_cramers_v_v2" -> oracle43("q_cramers_v"),
-    "q_gini_tokens_v2" -> oracle43("q_gini_tokens"),
-    "q_vocab_entropy_v2" -> oracle43("q_vocab_entropy")
-  )
-
-  /** Unrolled GD-training oracle — the SQL twin of
-    * [[pipeline.QualityModel.trainLogReg]] on the q_quality_train
-    * features. Stage CTEs materialized (each weight row feeds the next
-    * gradient AND the output union). Round i's row carries the POST-
-    * update weights and the PRE-update accuracy, exactly like the Spark
-    * side; the final row iters+1 scores the final weights. */
-  private def logRegSql(iters: Int, lrShift: Int): String = {
-    val lr = 1L << lrShift
-    val sb = new StringBuilder
-    sb.append(
-      """with f as materialized (select cast(1 as bigint) x0,
-        |   cast(len(tk) - 30 as bigint) x1,
-        |   cast(len(list_distinct(tk)) - 20 as bigint) x2,
-        |   cast(case when len(tk) >= 30 then 1 else 0 end as bigint) y
-        | from (select list_filter(string_split_regex(lower(trim(text)),
-        |     '\s+'), x -> len(x) > 0) tk from documents)),
-        |wt0 as materialized (select cast(0 as bigint) w0,
-        |   cast(0 as bigint) w1, cast(0 as bigint) w2)""".stripMargin)
-    for (i <- 1 to iters + 1) {
-      sb.append(s""",
-        |gr$i as materialized (select
-        |   cast(sum(d * x0) as bigint) g0, cast(sum(d * x1) as bigint) g1,
-        |   cast(sum(d * x2) as bigint) g2, cast(count(*) as bigint) n,
-        |   cast(sum(case when (z > 0) = (y = 1) then 1 else 0 end)
-        |     as bigint) nc
-        | from (select x0, x1, x2, y, z,
-        |     cast(floor(cast(1 as double) / (cast(1 as double)
-        |         + exp(-(cast(z as double) / 1e6))) * 1e6 + 0.5) as bigint)
-        |       - y * 1000000 d
-        |   from (select f.*, x0 * w0 + x1 * w1 + x2 * w2 z
-        |     from f cross join wt${i - 1}) q1) q2)""".stripMargin)
-      if (i <= iters) sb.append(s""",
-        |wt$i as materialized (select
-        |   wt${i - 1}.w0 - gr$i.g0 // (gr$i.n * $lr) w0,
-        |   wt${i - 1}.w1 - gr$i.g1 // (gr$i.n * $lr) w1,
-        |   wt${i - 1}.w2 - gr$i.g2 // (gr$i.n * $lr) w2
-        | from wt${i - 1} cross join gr$i)""".stripMargin)
-    }
-    sb.append((1 to iters + 1).map { i =>
-      val wi = math.min(i, iters) // row iters+1 reports the final weights
-      s"""select $i it, wt$wi.w0 w_x0, wt$wi.w1 w_x1, wt$wi.w2 w_x2,
-         |  gr$i.nc n_correct, gr$i.n n from wt$wi cross join gr$i""".stripMargin
-    }.mkString("\n", "\nunion all\n", ""))
-    sb.toString
-  }
-
+  private val registry: Map[String, Query] = Query.registry(
+    Relational.queries ++ Events.queries ++ DailySeries.queries ++
+      TextPipeline.queries ++ Vectors.queries ++ Lakes.queries ++ Formats.queries)
+
+  /** Query registry: one entry per implemented operator (SURVEY.md §2). */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) => name -> q.plan }
+
+  /** DuckDB oracles (column names/types must match the Spark results). */
+  val oracleSql: Map[String, String] =
+    registry.map { case (name, q) => name -> q.oracle }
 }

@@ -676,6 +676,18 @@ object IvfIndex extends Ledger.Manifests {
       s"$s0 $n0".getBytes(StandardCharsets.UTF_8))
     commit(root, Pointer(0, -1L),
       Seq(Seg(segDir(root, 0), 0, tombstone = false, s0, n0)), 0, conf)
+    holdPinned(root, 0, cb, sqB)
+  }
+
+  /** Seed the held codebook and SQ8 bounds of generation `gen` with the
+    * values its writer already has, so the first batch after an init or
+    * a rebuild does not read them back. Called once the commit is
+    * durable: a failed rebuild leaves nothing held for its generation. */
+  private def holdPinned(root: String, gen: Int,
+                         cb: Option[Array[Array[Array[Long]]]],
+                         sqB: Option[(Array[Long], Array[Long])]): Unit = {
+    SessionState(codebookPath(root, gen))(cb)
+    SessionState(sqBoundsPath(root, gen))(sqB)
   }
 
   /** Append one batch as a new segment; existing segments carry by
@@ -1301,6 +1313,7 @@ object IvfIndex extends Ledger.Manifests {
     // be trusted across the rewrite
     Seq(centroidsPath(root, p.gen), codebookPath(root, p.gen),
       sqBoundsPath(root, p.gen), segSchemaKey(root)).foreach(SessionState.evict)
+    holdPinned(root, g, cb, sqB)
     sweep(root, retained, conf)
     gcGenFiles(root, g, conf)
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * exactly this way, on features the engine already computes).
   *
   * Engine-exactness contract (the same discipline as the PageRank
-  * integer scheme, SparkEntry §q_linkgraph_pagerank):
+  * integer scheme, TextPipeline §q_linkgraph_pagerank):
   *   - weights live in int64 MICRO-units; features are small ints;
   *     z = Σ w_j·x_j is exact int64 micro-units.
   *   - p = σ(z) rounds to the 1e-6 grid immediately (one exp per row —

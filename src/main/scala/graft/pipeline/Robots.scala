@@ -139,7 +139,7 @@ object Robots {
       .withColumn("slot", (row_number().over(w) - 1).cast("long"))
       // floor(x+0.5), not a bare long cast: Spark's double→long
       // truncates where DuckDB's rounds — the grid makes fractional
-      // delays engine-exact too (house rule, see SparkEntry.uq)
+      // delays engine-exact too (house rule, see queries.Shared.uq)
       .withColumn("fetch_at_ms", lit(startMs) +
         floor(col("slot") * coalesce(col("delay_s"), lit(defaultDelayS))
           * 1000.0 + 0.5).cast("long"))

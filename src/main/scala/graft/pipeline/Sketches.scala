@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * many input rows — the sketch IS the aggregation state. Contrast the
   * exact `count(distinct)`: a full shuffle of every distinct value.
   *
-  * Numeric discipline (per SparkEntry's q6 rules): the indicator sum
+  * Numeric discipline (per queries.Shared.q6's rules): the indicator sum
   * `Z^-1 = Σ 2^-r` is kept as the exact int64 `S = Σ 2^(53-r)`
   * (≤ 2^61, order-free); the estimate is then ONE float division of
   * exact integers (raw branch) or a micro-grid `ln` (linear-counting
@@ -75,7 +75,7 @@ object Sketches {
     val zeros = lit(m) - col("nz")
     val raw = (lit(alphaMM) * lit(two53)) /
       (col("s_int") + zeros * lit(two53.toLong)).cast("double")
-    // micro-grid ln (see SparkEntry.qln): portable across libm builds
+    // micro-grid ln (see queries.Shared.qln): portable across libm builds
     val lnArg = lit(m).cast("double") / zeros.cast("double")
     val lc = lit(m) * (floor(log(lnArg) * lit(1e6) + lit(0.5)) / lit(1e6))
     val outCols = Seq(col("grp"), col("nz"), col("reg_sum"), col("s_int"),

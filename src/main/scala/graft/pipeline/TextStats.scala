@@ -66,7 +66,7 @@ object TextStats {
     val punctPenalty = lit(1.0) - least(punctRatio(text) * 5.0, lit(1.0))
     val digitPenalty = lit(1.0) - least(digitRatio(text) * 5.0, lit(1.0))
     // engine-portable 1e-6 grid (not round(): positive-scale round is
-    // engine/version-dependent — see SparkEntry.q6 / GateSpec)
+    // engine/version-dependent — see queries.Shared.q6 / GateSpec)
     floor((lenScore * 0.4 + punctPenalty * 0.3 + digitPenalty * 0.3)
       * lit(1e6) + lit(0.5)).cast("double") / lit(1e6)
   }

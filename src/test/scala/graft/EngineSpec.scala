@@ -775,7 +775,16 @@ class EngineSpec extends AnyFunSuite {
       val n = fn(spark, dir).count()
       assert(n >= 0, s"$name failed")
     }
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+  }
+
+  test("query registry rejects a name declared twice") {
+    import graft.queries.Query
+    val q = Query("q_twice", (s, _) => s.range(1).toDF(), "select 1")
+    val e = intercept[IllegalArgumentException](
+      Query.registry(Seq(q, Query("q_once", q.plan, q.oracle), q)))
+    assert(e.getMessage.contains("q_twice") && !e.getMessage.contains("q_once"),
+      e.getMessage)
   }
 
   test("solar helpers: sun distance, time correction, day-length coefficients") {

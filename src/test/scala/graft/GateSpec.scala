@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the exact binary expansion via BigDecimal HALF_UP; DuckDB rounds a
   * scaled double and its algorithm has changed across releases), and libm
   * exp/ln/pow differ across builds by an ulp. The portable discipline is
-  * floor(x·10^k + 0.5) over IEEE-exact inputs (SparkEntry.q6/qln).
+  * floor(x·10^k + 0.5) over IEEE-exact inputs (queries.Shared.q6/qln).
   *
   * This gate freezes the pre-r9 `round(,s>0)`-over-raw-float emitters as
   * a LEGACY set (each passed the driver's oracle for multiple rounds on
@@ -36,7 +36,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * engines.
   *
   * r11 shrink (85 → 39): 46 simple-final emitters moved to the qk floor
-  * grid in BOTH engines (SparkEntry.qk; oracle spells
+  * grid in BOTH engines (queries.Shared.qk; oracle spells
   * floor(x·10^k+0.5)/10^k inline) — the analog metrics pair, hydrology
   * ratios (bfi/rbi/runoff), detrend slopes, sdii/sea-ice/degree-day
   * sums, snowfall approximations, uncertainty partitions, ensemble
@@ -47,7 +47,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the floor grid).
   *
   * r13 shrink (16 → 10): the five float dot products moved to the
-  * INTEGER-GRID cosine (Similarity.cosineQuantized / SparkEntry.cosQSql
+  * INTEGER-GRID cosine (Similarity.cosineQuantized / queries.Shared.cosQSql
   * — per-element products on the 1e-12 floor grid summed as int64, so
   * the fold order cannot move an ulp and the final sqrt/divide are
   * single correctly-rounded IEEE ops: the emitted doubles are
@@ -150,7 +150,7 @@ class GateSpec extends AnyFunSuite {
       case _ => Nil
     }
     assert(offenders.isEmpty,
-      "raw-float round(,s>0) in a non-legacy query — use SparkEntry.q6/" +
+      "raw-float round(,s>0) in a non-legacy query — use queries.Shared.q6/" +
         "qln (floor(x*1e6+0.5) discipline) instead:\n" +
         offenders.mkString("\n"))
   }

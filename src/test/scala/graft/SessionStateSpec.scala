@@ -12,8 +12,9 @@ import graft.sources.{Tables, ZOrderLake}
   * entry bound to the stopped session (relations, the persisted shared
   * views, the IVF quantizer and centroid table) and rebuilds what the
   * new session reads; a rebuild of a PQ+SQ8 index evicts the superseded
-  * generation's metadata and keeps the new generation's warm. The spec
-  * leaves its last session live for the suites after it. */
+  * generation's metadata and holds the new generation's quantizer,
+  * codebook and SQ8 bounds. The spec leaves its last session live for
+  * the suites after it. */
 class SessionStateSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -89,7 +90,7 @@ class SessionStateSpec extends AnyFunSuite {
       IvfIndex.applyBatch(frame(s, ids), "vec_id", "embedding", root, batchId))._2
     IvfIndex.init(frame(s, 0 until 100), "vec_id", "embedding", centroids(s, 0),
       root, pqM = 4, pqK = 16, sq8 = true)
-    // init holds only the quantizer; the first append reads the rest
+    // init holds the quantizer, codebook and SQ8 bounds it wrote
     val cold = append(100 until 140, 0L)
     val warm = append(140 until 180, 1L)
     val gen0 = Seq("_centroids", "_codebook", "_sq_bounds").map(f => s"$root/$f")
@@ -100,10 +101,11 @@ class SessionStateSpec extends AnyFunSuite {
     assert(stale.isEmpty, s"superseded generation still held: $stale")
     assert(SessionState.keys.exists(k =>
       under(k._1, IvfIndex.centroidsPath(root, 1)) && k._2.exists(_ eq sc)))
-    // the rebuild built the new quantizer: the next append starts from
-    // init's state, and the one after is warm again
+    // the rebuild holds the new generation's quantizer, codebook and SQ8
+    // bounds: the next append runs 4 Spark jobs (8 when it read the
+    // codebook and bounds back), and the one after is warm again
     val next = append(180 until 220, 2L)
-    assert(next <= cold, s"first append after the rebuild ran $next Spark jobs, $cold after init")
+    assert(next <= 4, s"first append after the rebuild ran $next Spark jobs, $cold after init, 4 expected")
     val again = append(220 until 260, 3L)
     assert(again <= warm, s"second append after the rebuild ran $again Spark jobs, $warm before it")
     assert(IvfIndex.currentAll(s, root).count() == 260)
