@@ -103,6 +103,10 @@ object IvfIndex extends Ledger.Manifests {
   private def currentGen(root: String, conf: Configuration): Int =
     readPointer(root, conf).map(_.gen).getOrElse(0)
 
+  /** The held-metadata paths of generation `gen`. */
+  private def genPaths(root: String, gen: Int): Seq[String] =
+    Seq(centroidsPath(root, gen), codebookPath(root, gen), sqBoundsPath(root, gen))
+
   /** The pinned centroid table (list INT, cvec ARRAY<DOUBLE>) of the
     * CURRENT generation (the pointer resolves which — a rebuild re-pins
     * it atomically with its re-assigned segments). The DataFrame (with
@@ -113,9 +117,28 @@ object IvfIndex extends Ledger.Manifests {
     * away"); it is bound to its session, so a restarted session never
     * reads through a dead one's relation. */
   def readCentroids(spark: SparkSession, root: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = centroidsPath(root, currentGen(root, conf))
-    SessionState(p, Some(spark))(spark.read.parquet(p))
+    val gen = currentGen(root, spark.sparkContext.hadoopConfiguration)
+    SessionState(centroidsPath(root, gen), Some(spark))(centroidsAt(spark, root, gen))
+  }
+
+  /** Generation `gen`'s centroid table, read with the schema its writer
+    * held ([[writeCentroids]]); a process that holds none infers it
+    * once. */
+  private def centroidsAt(spark: SparkSession, root: String, gen: Int): DataFrame = {
+    val p = centroidsPath(root, gen)
+    spark.read.schema(SessionState(s"$p/#schema")(spark.read.parquet(p).schema))
+      .parquet(p)
+  }
+
+  /** Pin `centroids` as generation `gen`'s (list INT, cvec) table and
+    * hold the schema it was written with. Returns the pinned frame. */
+  private def writeCentroids(centroids: DataFrame, root: String,
+                             gen: Int): DataFrame = {
+    val cent = centroids.select(col("list").cast("int").as("list"), col("cvec"))
+    val p = centroidsPath(root, gen)
+    cent.coalesce(1).write.mode(SaveMode.Overwrite).parquet(p)
+    SessionState(s"$p/#schema")(FsIo.asRead(cent.schema))
+    cent
   }
 
   // ---- product-quantized postings (the FAISS IVFADC layout) ----
@@ -414,9 +437,9 @@ object IvfIndex extends Ledger.Manifests {
     * own; an evicted live one is destroyed. */
   private def quantizerKey(root: String, gen: Int) =
     s"${centroidsPath(root, gen)}/#quantizer"
-  /** Segment schema per root: pinned at [[init]] — appends
-    * schema-check against it, compaction/rebuild preserve the column
-    * set — so the per-append footer read is redundant. */
+  /** Segment schema per root: pinned at [[init]] — appends, compaction
+    * and rebuild schema-check what they write against it — so no read
+    * of the index's own segments infers it. */
   private def segSchemaKey(root: String) = s"$root/#segschema"
 
   /** Collect + broadcast the centroid matrix, guarding the kernel's
@@ -451,7 +474,7 @@ object IvfIndex extends Ledger.Manifests {
   private def pinnedQuantizer(spark: SparkSession, root: String,
                               gen: Int): Quantizer =
     SessionState(quantizerKey(root, gen), Some(spark.sparkContext))(
-      buildQuantizer(spark, spark.read.parquet(centroidsPath(root, gen))),
+      buildQuantizer(spark, centroidsAt(spark, root, gen)),
       (q: Quantizer) => q._2.destroy())
 
   /** The JIT arg-min struct(d2, list) column over a built quantizer —
@@ -639,10 +662,7 @@ object IvfIndex extends Ledger.Manifests {
     // resolve metadata while generation-0 files are being rewritten
     Ledger.dropPointer(root, conf)
     SessionState.evict(root)
-    val cent = centroids
-      .select(col("list").cast("int").as("list"), col("cvec"))
-    cent.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(centroidsPath(root, 0))
+    val cent = writeCentroids(centroids, root, 0)
     val cb: Option[Array[Array[Array[Long]]]] =
       if (pqM == 0) None
       else {
@@ -669,25 +689,46 @@ object IvfIndex extends Ledger.Manifests {
     val assigned = withSqCode(withPqCode(
       assignWithDist(emb, idCol, vecCol, cent,
         quant = Some(pinnedQuantizer(spark, root, 0))), cb), sqB)
-    val (s0, n0) = writeSegment(
-      if (storeRaw && !sq8) assigned else assigned.drop("embedding"),
-      segDir(root, 0))
+    val segment = if (storeRaw && !sq8) assigned else assigned.drop("embedding")
+    val (s0, n0) = writeSegment(segment, segDir(root, 0))
     FsIo.writeBytes(conf, baselinePath(root, 0),
       s"$s0 $n0".getBytes(StandardCharsets.UTF_8))
     commit(root, Pointer(0, -1L),
       Seq(Seg(segDir(root, 0), 0, tombstone = false, s0, n0)), 0, conf)
-    holdPinned(root, 0, cb, sqB)
+    holdPinned(root, 0, cb, sqB, segment)
   }
 
-  /** Seed the held codebook and SQ8 bounds of generation `gen` with the
-    * values its writer already has, so the first batch after an init or
-    * a rebuild does not read them back. Called once the commit is
-    * durable: a failed rebuild leaves nothing held for its generation. */
+  /** Seed the held codebook and SQ8 bounds of generation `gen`, and the
+    * segment schema, with what the writer of `segment` already has, so
+    * the first batch after an init or a rebuild reads none of them back.
+    * Called once the commit is durable: a failed rebuild leaves nothing
+    * held for its generation. */
   private def holdPinned(root: String, gen: Int,
                          cb: Option[Array[Array[Array[Long]]]],
-                         sqB: Option[(Array[Long], Array[Long])]): Unit = {
+                         sqB: Option[(Array[Long], Array[Long])],
+                         segment: DataFrame): Unit = {
     SessionState(codebookPath(root, gen))(cb)
     SessionState(sqBoundsPath(root, gen))(sqB)
+    SessionState(segSchemaKey(root))(segmentSchema(segment))
+  }
+
+  /** The read schema of a segment written from `segment`: its file
+    * columns as a read reports them, then the `list` partition column. */
+  private def segmentSchema(segment: DataFrame): StructType =
+    StructType(FsIo.asRead(segment.drop("_d2u").schema).filterNot(_.name == "list"))
+      .add("list", IntegerType)
+
+  /** Reject a segment frame whose columns differ from the index's
+    * (names AND types): unionByName in reads/probes silently coerces
+    * (float ∪ double → double), so a drifted segment would poison every
+    * later reader with mixed precisions across segments. */
+  private def requireSegmentSchema(spark: SparkSession, root: String,
+                                   segs: => Seq[Seg], segment: DataFrame,
+                                   what: String): Unit = {
+    def cols(t: StructType) = t.map(f => (f.name, f.dataType.simpleString)).sortBy(_._1)
+    val index = cols(segSchemas(spark, root, segs)._1)
+    val got = cols(segmentSchema(segment))
+    require(got == index, s"$what schema $got does not match index schema $index")
   }
 
   /** Append one batch as a new segment; existing segments carry by
@@ -731,12 +772,7 @@ object IvfIndex extends Ledger.Manifests {
     val assigned =
       if (segFields.fieldNames.contains("embedding")) assigned0
       else assigned0.drop("embedding")
-    val segSchema = segFields
-      .map(f => (f.name, f.dataType.simpleString)).sortBy(_._1)
-    val batchSchema = assigned.drop("_d2u").schema
-      .map(f => (f.name, f.dataType.simpleString)).sortBy(_._1)
-    require(segSchema == batchSchema,
-      s"batch schema $batchSchema does not match index schema $segSchema")
+    requireSegmentSchema(spark, root, manifest, assigned, "batch")
     val next = p.version + 1
     val dir = segDir(root, next)
     val (s, n) = writeSegment(assigned, dir)
@@ -1208,17 +1244,14 @@ object IvfIndex extends Ledger.Manifests {
     // currentAll already applies the tombstones; the rewrite makes the
     // deletions physical, so the tombstone segments drop from the
     // manifest (and GC collects them once out of retention)
-    val (_, n) = writeSegment(currentAll(spark, root), dir)
+    val merged = currentAll(spark, root)
+    requireSegmentSchema(spark, root, segs, merged, "compacted segment")
+    val (_, n) = writeSegment(merged, dir)
     val (hs, hn) =
       if (stats.isEmpty) (-1L, n)
       else (stats.map(_.sumD2u).sum, stats.map(_.n).sum)
-    val retained = commit(root, Pointer(next, p.lastBatch, p.gen),
-      Seq(Seg(dir, next, tombstone = false, hs, hn)), retain, conf)
-    // compaction preserves the column set, but the drift guard should
-    // re-infer from the segment it will actually read, not trust a
-    // comment-level invariant across the rewrite (advisor find, r18)
-    SessionState.evict(segSchemaKey(root))
-    sweep(root, retained, conf)
+    sweep(root, commit(root, Pointer(next, p.lastBatch, p.gen),
+      Seq(Seg(dir, next, tombstone = false, hs, hn)), retain, conf), conf)
     1
   }
 
@@ -1262,18 +1295,18 @@ object IvfIndex extends Ledger.Manifests {
               pqTrainIters: Int = 0, retain: Int = 2): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = pointer(root, conf)
-    requireRerankable(spark, root, readManifest(root, p.version, conf),
-      "rebuild (re-assignment)")
+    val segs = readManifest(root, p.version, conf)
+    requireRerankable(spark, root, segs, "rebuild (re-assignment)")
     val liveAll = currentAll(spark, root)
     val sq8 = liveAll.columns.contains("sq_code")
     require(!sq8 || pqTrainIters == 0,
       "codebook retraining needs raw embeddings — an SQ8 index carries " +
         "its codebook through rebuild (pqTrainIters must be 0)")
     val g = p.gen + 1
-    val cent = centroids
-      .select(col("list").cast("int").as("list"), col("cvec"))
-    cent.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(centroidsPath(root, g))
+    // a failed earlier rebuild may have held metadata of generation g
+    // (its centroid schema and quantizer are held before the commit)
+    genPaths(root, g).foreach(SessionState.evict)
+    val cent = writeCentroids(centroids, root, g)
     // SQ bounds are data-scale, centroid-independent: carry to gen g
     val sqB = readSqBounds(spark, root, conf)
     sqB.foreach { case (lo, hi) => writeSqBounds(spark, root, g, lo, hi) }
@@ -1299,6 +1332,7 @@ object IvfIndex extends Ledger.Manifests {
             lit(0.5)).cast("long"))
           .drop("_emb", "_best")
       }
+    requireSegmentSchema(spark, root, segs, assigned, "rebuilt segment")
     val next = p.version + 1
     val dir = segDir(root, next)
     val (s0, n0) = writeSegment(assigned, dir)
@@ -1306,14 +1340,12 @@ object IvfIndex extends Ledger.Manifests {
       s"$s0 $n0".getBytes(StandardCharsets.UTF_8))
     val retained = commit(root, Pointer(next, p.lastBatch, g),
       Seq(Seg(dir, next, tombstone = false, s0, n0)), retain, conf)
-    // the old generation's held metadata is dead weight now (r18,
-    // advisor find: a service rebuilding periodically leaked one entry
-    // set per generation, for files [[gcGenFiles]] deletes); the segment
-    // schema entry must re-infer from the rewritten segment rather than
-    // be trusted across the rewrite
-    Seq(centroidsPath(root, p.gen), codebookPath(root, p.gen),
-      sqBoundsPath(root, p.gen), segSchemaKey(root)).foreach(SessionState.evict)
-    holdPinned(root, g, cb, sqB)
+    // the old generation's held metadata is dead weight now: a service
+    // rebuilding periodically would hold one entry set per generation,
+    // for files [[gcGenFiles]] deletes. The segment schema stays: the
+    // rebuilt segment was checked against it
+    genPaths(root, p.gen).foreach(SessionState.evict)
+    holdPinned(root, g, cb, sqB, assigned)
     sweep(root, retained, conf)
     gcGenFiles(root, g, conf)
   }
@@ -1335,7 +1367,7 @@ object IvfIndex extends Ledger.Manifests {
     // reconstruction (the tier's vectors).
     val live = embedded(spark, root, conf)(currentAll(spark, root))
       .dropDuplicates("vec_id")
-    val k = spark.read.parquet(centroidsPath(root, p.gen)).count().toInt
+    val k = readCentroids(spark, root).count().toInt
     val asg = Similarity.kmeansLloyd(live, "vec_id", "embedding",
       k, kmeansIters)
     val cent = live

@@ -648,15 +648,13 @@ private[graft] object Lakes {
       // counts (both < x-only).
       val li = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-      val fixDir = new java.io.File("/tmp/graft_multiprune_" +
-        dir.replaceAll("[^0-9a-zA-Z]", "_"))
-      buildStoreOnce(fixDir, "_SUCCESS") { d =>
-        graft.sources.Lake.zOrderWrite(li, "l_partkey", "l_suppkey",
-          d.getPath, files = 32)
+      val store = fixtureStore("graft_multiprune_" +
+          dir.replaceAll("[^0-9a-zA-Z]", "_"), "_SUCCESS") { d =>
+        graft.sources.Lake.zOrderWrite(li, "l_partkey", "l_suppkey", d, files = 32)
       }
       val stats = graft.sources.Lake.fileStats(
-        s, fixDir.getPath, Seq("l_partkey", "l_suppkey"))
-      graft.sources.Lake.readPrunedMulti(s, fixDir.getPath, stats,
+        s, store, Seq("l_partkey", "l_suppkey"))
+      graft.sources.Lake.readPrunedMulti(s, store, stats,
           Seq(("l_partkey", 200L, 800L), ("l_suppkey", 10L, 40L)))
         .groupBy(col("l_suppkey"))
         .agg(count(lit(1)).as("n_rows"),
@@ -684,17 +682,14 @@ private[graft] object Lakes {
       // same aggregate over the unpruned table (zero false negatives);
       // LakeSpec pins the skipping half (files opened = O(matching)).
       val li = t(s, dir, "lineitem")
-      val fixDir = new java.io.File("/tmp/graft_rangeprune_" +
-        dir.replaceAll("[^0-9a-zA-Z]", "_"))
-      buildStoreOnce(fixDir, "_SUCCESS") { d =>
+      val store = fixtureStore("graft_rangeprune_" +
+          dir.replaceAll("[^0-9a-zA-Z]", "_"), "_SUCCESS") { d =>
         li.repartitionByRange(16, col("l_orderkey"))
           .sortWithinPartitions("l_orderkey")
-          .write.mode("overwrite").parquet(d.getPath)
+          .write.mode("overwrite").parquet(d)
       }
-      val stats = graft.sources.Lake.fileStats(
-        s, fixDir.getPath, Seq("l_orderkey"))
-      graft.sources.Lake.readPruned(
-          s, fixDir.getPath, stats, "l_orderkey", 1000L, 3000L)
+      val stats = graft.sources.Lake.fileStats(s, store, Seq("l_orderkey"))
+      graft.sources.Lake.readPruned(s, store, stats, "l_orderkey", 1000L, 3000L)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_rows"),
           sum(col("l_quantity").cast("long")).as("qty_sum"),

@@ -93,7 +93,7 @@ private[queries] object Shared {
     * (same-directory rename = atomic on POSIX); a concurrent loser just
     * deletes its staging copy. `probe` is the file whose presence marks
     * a finished store; "" when the store is that single file. */
-  def buildStoreOnce(dir: java.io.File, probe: String)
+  private def buildStoreOnce(dir: java.io.File, probe: String)
                     (build: java.io.File => Unit): Unit = {
     if (new java.io.File(dir, probe).isFile) return
     val staging = new java.io.File(dir.getParentFile,

@@ -3,8 +3,9 @@ package graft.sources
 import java.io.OutputStream
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Hadoop-FileSystem write plumbing shared by the export sinks
   * (TFRecord / WARC / Zarr / NetCDF reverse). An executor-side
@@ -29,6 +30,17 @@ import org.apache.spark.sql.SparkSession
   *     TFRecord shards) and `.{name}.crc` sidecars are pure noise there;
   *     remote filesystems (HDFS/S3A) checksum internally and pass
   *     through untouched.
+  *
+  * Local metadata (small-file writes, directory creation, recursive
+  * listings) goes through `java.nio` and `listStatus`, not Hadoop's
+  * `create`, `mkdirs` and `listFiles`. Without the native libhadoop,
+  * `RawLocalFileSystem` forks `chmod` for every file or directory it
+  * creates and `ls -ld` for every `LocatedFileStatus` it builds, each a
+  * process start of milliseconds, and the table formats' commit path
+  * creates and lists dozens of files per batch. A plain `FileStatus` from `listStatus`
+  * loads its permissions only when asked, so a walk that reads paths
+  * forks nothing. Remote filesystems keep Hadoop's calls: on an object
+  * store `listFiles(p, true)` is one flat listing.
   */
 object FsIo {
 
@@ -60,12 +72,23 @@ object FsIo {
       case other                 => other
     }
 
+  /** `path` as a `java.nio` path when it lives on the local
+    * filesystem, where the metadata calls below bypass Hadoop. */
+  private def localPath(conf: Configuration, path: String): Option[java.nio.file.Path] =
+    fs(conf, path) match {
+      case local: RawLocalFileSystem => Some(local.pathToFile(new Path(path)).toPath)
+      case _                         => None
+    }
+
   /** Create (overwrite) `path`; parent directories are created
     * automatically (the Hadoop `create` contract). */
-  def create(conf: Configuration, path: String): OutputStream = {
-    val p = new Path(path)
-    fs(conf, path).create(p, true)
-  }
+  def create(conf: Configuration, path: String): OutputStream =
+    localPath(conf, path) match {
+      case Some(p) =>
+        Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+        java.nio.file.Files.newOutputStream(p)
+      case None => fs(conf, path).create(new Path(path), true)
+    }
 
   /** One-shot small-file write (metadata documents, planted keys). */
   def writeBytes(conf: Configuration, path: String, bytes: Array[Byte]): Unit = {
@@ -190,9 +213,11 @@ object FsIo {
     new SeekableData(f.open(p), len)
   }
 
-  def mkdirs(conf: Configuration, path: String): Unit = {
-    fs(conf, path).mkdirs(new Path(path))
-  }
+  def mkdirs(conf: Configuration, path: String): Unit =
+    localPath(conf, path) match {
+      case Some(p) => java.nio.file.Files.createDirectories(p)
+      case None    => fs(conf, path).mkdirs(new Path(path))
+    }
 
   def exists(conf: Configuration, path: String): Boolean =
     fs(conf, path).exists(new Path(path))
@@ -203,17 +228,46 @@ object FsIo {
     fs(conf, path).listStatus(new Path(path))
       .filter(_.isDirectory).map(_.getPath.getName).sorted.toSeq
 
-  /** Recursive file listing (paths as strings); empty for absent dirs. */
-  def listFilesRecursive(conf: Configuration, path: String): Seq[String] = {
+  /** Recursive file listing, lazily: the paths (as strings) Hadoop's
+    * `listFiles(p, true)` yields, in its order and form. A file path
+    * lists itself, an absent path lists nothing. A local walk is
+    * depth-first over `listStatus`, as `listFiles` walks, without the
+    * `LocatedFileStatus` that forks `ls -ld` per file. */
+  def listFilesRecursive(conf: Configuration, path: String): Iterator[String] = {
     val f = fs(conf, path)
     val p = new Path(path)
-    if (!f.exists(p)) Nil
-    else {
-      val out = Seq.newBuilder[String]
-      val it = f.listFiles(p, true)
-      while (it.hasNext) out += it.next().getPath.toString
-      out.result()
+    f match {
+      case _: RawLocalFileSystem =>
+        def walk(level: Array[FileStatus]): Iterator[String] =
+          level.iterator.flatMap { s =>
+            if (s.isDirectory) walk(f.listStatus(s.getPath))
+            else Iterator.single(s.getPath.toString)
+          }
+        try walk(f.listStatus(p))
+        catch { case _: java.io.FileNotFoundException => Iterator.empty }
+      case _ if !f.exists(p) => Iterator.empty
+      case _ =>
+        val it = f.listFiles(p, true)
+        new Iterator[String] {
+          def hasNext: Boolean = it.hasNext
+          def next(): String = it.next().getPath.toString
+        }
     }
+  }
+
+  /** The schema a file-source read reports for data written with
+    * `schema`: Spark resolves every file relation as nullable (fields,
+    * array elements and map values, at every depth), so a reader that
+    * passes a schema its writer held sees what inference would give. */
+  def asRead(schema: StructType): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => asRead(s)
+      case a: ArrayType  => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType    => MapType(nullable(m.keyType), nullable(m.valueType),
+                                    valueContainsNull = true)
+      case other         => other
+    }
+    StructType(schema.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
   }
 
   def delete(conf: Configuration, path: String): Unit = {
@@ -228,12 +282,11 @@ object FsIo {
     * could find no file and a concurrent swap could fail. Elsewhere
     * `FileContext.rename(OVERWRITE)`, atomic on HDFS. */
   def atomicReplace(conf: Configuration, src: String, dst: String): Unit =
-    fs(conf, dst) match {
-      case local: org.apache.hadoop.fs.RawLocalFileSystem =>
-        java.nio.file.Files.move(local.pathToFile(new Path(src)).toPath,
-          local.pathToFile(new Path(dst)).toPath,
+    localPath(conf, dst) match {
+      case Some(d) =>
+        java.nio.file.Files.move(localPath(conf, src).get, d,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      case _ =>
+      case None =>
         org.apache.hadoop.fs.FileContext.getFileContext(new Path(dst).toUri, conf)
           .rename(new Path(src), new Path(dst),
             org.apache.hadoop.fs.Options.Rename.OVERWRITE)

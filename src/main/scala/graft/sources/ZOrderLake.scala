@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.SessionState
 
@@ -73,13 +74,25 @@ object ZOrderLake extends Ledger.Manifests {
     * epoch instead of clamping to the border cells. */
   val DefaultEpochThreshold: Double = 0.25
 
-  /** r17 optimization: the slab schema per lake root is PINNED at
-    * [[init]] (every append schema-checks against it; rewrites carry
-    * the same columns), so the per-batch footer-inference read of
-    * `manifest.head.path` is redundant driver latency — it is held in
-    * [[graft.core.SessionState]] under this path, and [[init]] and
+  /** The slab schema per lake root is PINNED at [[init]] (every append
+    * schema-checks against it; rewrites carry the same columns). The
+    * writer holds it in [[graft.core.SessionState]] under this path, so
+    * no read of the lake's own slabs runs a footer-inference job; a
+    * process that holds nothing infers it once. [[init]] and
     * [[destroy]] evict the root. */
   private def slabSchemaKey(root: String) = s"$root/#slabschema"
+
+  /** The pinned slab schema, inferred from `paths.head` when this
+    * process holds none. */
+  private def slabSchema(spark: SparkSession, root: String,
+                         paths: Seq[String]): StructType =
+    SessionState(slabSchemaKey(root))(spark.read.parquet(paths.head).schema)
+
+  /** The one reader of the lake's slab files: `paths` read with the
+    * pinned slab schema. */
+  private def readSlabs(spark: SparkSession, root: String,
+                        paths: Seq[String]): DataFrame =
+    spark.read.schema(slabSchema(spark, root, paths)).parquet(paths: _*)
 
   /** Morton key width: 2×16 or 3×16 interleaved bits. */
   private def keyBits(nDims: Int): Int = nDims * 16
@@ -216,7 +229,7 @@ object ZOrderLake extends Ledger.Manifests {
       .filter { f =>
         val n = new org.apache.hadoop.fs.Path(f).getName
         n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
+      }.toSeq
     // footer reads are tiny but latency-bound (~10 ms of open cost
     // each) — a driver loop would serialize them; one small Spark job
     // fans the opens across executors. The conf snapshot broadcasts
@@ -312,9 +325,10 @@ object ZOrderLake extends Ledger.Manifests {
     }
     val totalRows = r.getLong(2 * dimCols.size)
     writeEpochs(root, Seq(dims), conf)
-    val entries = writeSlabs(df.withColumn("zval", zvalCol(dims)),
-      s"$root/data/v00000", targetRows, totalRows)
+    val slabs = df.withColumn("zval", zvalCol(dims))
+    val entries = writeSlabs(slabs, s"$root/data/v00000", targetRows, totalRows)
     commit(root, Pointer(0, -1L), entries, 0, conf)
+    SessionState(slabSchemaKey(root))(FsIo.asRead(slabs.schema))
   }
 
   /** 2-D convenience form. */
@@ -327,8 +341,7 @@ object ZOrderLake extends Ledger.Manifests {
   def current(spark: SparkSession, root: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = pointer(root, conf)
-    val entries = readManifest(root, p.version, conf)
-    spark.read.parquet(entries.map(_.path): _*)
+    readSlabs(spark, root, readManifest(root, p.version, conf).map(_.path))
   }
 
   /** Box scan through the z-layout alone: the value-space box maps onto
@@ -381,7 +394,7 @@ object ZOrderLake extends Ledger.Manifests {
     val pred = dims.indices.map(i =>
       col(dims(i).name).between(los(i), his(i))).reduce(_ && _)
     if (files.isEmpty) current(spark, root).filter(lit(false))
-    else spark.read.parquet(files: _*).filter(pred)
+    else readSlabs(spark, root, files).filter(pred)
   }
 
   /** 2-D convenience form. */
@@ -402,7 +415,7 @@ object ZOrderLake extends Ledger.Manifests {
     val conf = spark.sparkContext.hadoopConfiguration
     pointerAsOf(root, version, conf, "manifest")(
       hasManifest(root, version, conf))
-    spark.read.parquet(readManifest(root, version, conf).map(_.path): _*)
+    readSlabs(spark, root, readManifest(root, version, conf).map(_.path))
   }
 
   /** Manifest diff — which slabs a version range touched: one row per
@@ -505,8 +518,7 @@ object ZOrderLake extends Ledger.Manifests {
     // types): unionByName silently widens (long ∪ double → double), so a
     // drifted batch would poison every later reader of the mixed layout
     // with a type-mismatch — fail HERE, at the commit, with both schemas
-    val lakeSchema = SessionState(slabSchemaKey(root))(
-        spark.read.parquet(manifest.head.path).schema)
+    val lakeSchema = slabSchema(spark, root, manifest.map(_.path))
       .map(f => (f.name, f.dataType.simpleString)).sortBy(_._1)
     val batchSchema = batchZ.schema
       .map(f => (f.name, f.dataType.simpleString)).sortBy(_._1)
@@ -515,7 +527,7 @@ object ZOrderLake extends Ledger.Manifests {
     val (rewrite, keep) = manifest.partition(touched)
     val rewriteRows =
       if (rewrite.isEmpty) batchZ
-      else spark.read.parquet(rewrite.map(_.path): _*).unionByName(batchZ)
+      else readSlabs(spark, root, rewrite.map(_.path)).unionByName(batchZ)
     commitRewrite(spark, root, keep, rewriteRows,
       rewrite.map(_.rows).sum + batchRows,
       Pointer(p.version + 1, batchId), targetRows, retain, shift, epoch)
@@ -638,7 +650,7 @@ object ZOrderLake extends Ledger.Manifests {
     }
     val next = Pointer(p.version + 1, p.lastBatch)
     commitRewrite(spark, root, keep.map(_._1) ++ other,
-      spark.read.parquet(rewrite.map(_._1.path): _*),
+      readSlabs(spark, root, rewrite.map(_._1.path)),
       rewrite.map(_._1.rows).sum, next, targetRows, retain, shift, e)
     readManifest(root, next.version, conf).size
   }
@@ -665,7 +677,7 @@ object ZOrderLake extends Ledger.Manifests {
     val epochs = readEpochs(root, conf)
     val curDims = epochs.last
     val manifest = readManifest(root, p.version, conf)
-    val df = spark.read.parquet(manifest.map(_.path): _*).drop("zval")
+    val df = readSlabs(spark, root, manifest.map(_.path)).drop("zval")
     val aggs = curDims.flatMap(d =>
       Seq(min(col(d.name)).cast("long"), max(col(d.name)).cast("long"))) :+
       count(lit(1))
@@ -713,7 +725,7 @@ object ZOrderLake extends Ledger.Manifests {
     FsIo.listDirNames(conf, s"$root/data").foreach { d =>
       val dir = s"$root/data/$d"
       // recursive listing: grouped writes nest slabs under _grp=K/ dirs
-      val files = FsIo.listFilesRecursive(conf, dir)
+      val files = FsIo.listFilesRecursive(conf, dir).toList
       if (!files.exists(f => live.contains(canonPath(f))))
         FsIo.delete(conf, dir)
       else files.foreach { f =>

@@ -24,28 +24,35 @@ object Streams {
     graft.sources.Tables.enableNanosAsLong(s)
     // session-cached relation (Tables.table): no fresh footer read here
     val schema = graft.sources.Tables.table(s, dir, "events").schema
-    // the file stream source wants a DIRECTORY; stage a symlink to the table
+    // the file stream source wants a DIRECTORY; stage a symlink to the
+    // table, removed once the query has stopped (the memory sink holds
+    // the result)
     val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_")
-    java.nio.file.Files.createSymbolicLink(
-      streamDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val raw = s.readStream.schema(schema).parquet(streamDir.toString)
-    // same writer-tolerant ts normalisation as the batch reader — a pure
-    // projection, so it composes with the streaming source unchanged
-    val stream = graft.sources.Tables.normalizeTs(raw)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("total"))
-      .select(col("w.start").as("w_start"), col("event_type"), col("n"), col("total"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    s.table(queryName)
+    val link = streamDir.resolve("events.parquet")
+    try {
+      java.nio.file.Files.createSymbolicLink(link,
+        java.nio.file.Paths.get(s"$dir/events.parquet"))
+      val raw = s.readStream.schema(schema).parquet(streamDir.toString)
+      // same writer-tolerant ts normalisation as the batch reader — a pure
+      // projection, so it composes with the streaming source unchanged
+      val stream = graft.sources.Tables.normalizeTs(raw)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("total"))
+        .select(col("w.start").as("w_start"), col("event_type"), col("n"), col("total"))
+      val q = stream.writeStream
+        .outputMode("complete")
+        .format("memory")
+        .queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      s.table(queryName)
+    } finally {
+      // the link itself (deleteIfExists never follows it), then its dir
+      java.nio.file.Files.deleteIfExists(link)
+      java.nio.file.Files.deleteIfExists(streamDir)
+    }
   }
 
   /** Sliding-window aggregation (window length + slide): the streaming twin

@@ -27,6 +27,36 @@ class FsIoSpec extends AnyFunSuite {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_fsio_$tag").toString
 
+  test("local metadata I/O: listFilesRecursive lists what Hadoop's listFiles lists; writeBytes makes parents and overwrites") {
+    import graft.sources.FsIo
+    val conf = spark.sparkContext.hadoopConfiguration
+    val base = tmp("walk")
+    Seq(("plain", base), ("uri", s"file://$base")).foreach { case (tag, root) =>
+      val tree = s"$root/$tag"
+      // every parent is missing: writeBytes creates them
+      FsIo.writeBytes(conf, s"$tree/seg/list=0/part-0.parquet", Array[Byte](1, 2))
+      FsIo.writeBytes(conf, s"$tree/seg/list=0/.part-0.parquet.crc", Array[Byte](3))
+      FsIo.writeBytes(conf, s"$tree/seg/list=1/part-1.parquet", Array[Byte](4))
+      FsIo.writeBytes(conf, s"$tree/seg/_SUCCESS", Array.emptyByteArray)
+      FsIo.writeBytes(conf, s"$tree/top.bin", "first, longer".getBytes("UTF-8"))
+      FsIo.mkdirs(conf, s"$tree/empty/nested")
+      def hadoop(p: String): Seq[String] = {
+        val it = FsIo.fs(conf, p).listFiles(new org.apache.hadoop.fs.Path(p), true)
+        val out = Seq.newBuilder[String]
+        while (it.hasNext) out += it.next().getPath.toString
+        out.result()
+      }
+      Seq(tree, s"$tree/seg", s"$tree/seg/list=1/part-1.parquet").foreach { p =>
+        assert(FsIo.listFilesRecursive(conf, p).toSeq == hadoop(p), s"$tag: $p")
+      }
+      assert(hadoop(tree).size == 5, s"$tag: ${hadoop(tree)}")
+      assert(FsIo.listFilesRecursive(conf, s"$tree/absent").isEmpty, tag)
+      FsIo.writeBytes(conf, s"$tree/top.bin", "second".getBytes("UTF-8"))
+      assert(new String(FsIo.readBytes(conf, s"$tree/top.bin"), "UTF-8") == "second", tag)
+    }
+    FsIo.delete(conf, base)
+  }
+
   test("TFRecord shards write through an explicit file:/// URI") {
     import spark.implicits._
     val local = tmp("tfr")

@@ -90,9 +90,11 @@ class SessionStateSpec extends AnyFunSuite {
       IvfIndex.applyBatch(frame(s, ids), "vec_id", "embedding", root, batchId))._2
     IvfIndex.init(frame(s, 0 until 100), "vec_id", "embedding", centroids(s, 0),
       root, pqM = 4, pqK = 16, sq8 = true)
-    // init holds the quantizer, codebook and SQ8 bounds it wrote
+    // init holds the quantizer, codebook, SQ8 bounds, centroid schema
+    // and segment schema it wrote, so its first append is already warm
     val cold = append(100 until 140, 0L)
     val warm = append(140 until 180, 1L)
+    assert(cold == warm, s"first append after init ran $cold Spark jobs, $warm warm")
     val gen0 = Seq("_centroids", "_codebook", "_sq_bounds").map(f => s"$root/$f")
     def under(k: String, p: String) = k == p || k.startsWith(s"$p/")
     assert(gen0.forall(p => SessionState.keys.exists(k => under(k._1, p))))
@@ -101,11 +103,14 @@ class SessionStateSpec extends AnyFunSuite {
     assert(stale.isEmpty, s"superseded generation still held: $stale")
     assert(SessionState.keys.exists(k =>
       under(k._1, IvfIndex.centroidsPath(root, 1)) && k._2.exists(_ eq sc)))
-    // the rebuild holds the new generation's quantizer, codebook and SQ8
-    // bounds: the next append runs 4 Spark jobs (8 when it read the
-    // codebook and bounds back), and the one after is warm again
+    // the rebuild holds the new generation's quantizer, codebook, SQ8
+    // bounds and centroid schema, and keeps the segment schema: the next
+    // append is warm
     val next = append(180 until 220, 2L)
-    assert(next <= 4, s"first append after the rebuild ran $next Spark jobs, $cold after init, 4 expected")
+    assert(next == warm, s"first append after the rebuild ran $next Spark jobs, $warm warm")
+    // the held schemas are the ones a read infers
+    assert(IvfIndex.readCentroids(s, root).schema ==
+      s.read.parquet(IvfIndex.centroidsPath(root, 1)).schema)
     val again = append(220 until 260, 3L)
     assert(again <= warm, s"second append after the rebuild ran $again Spark jobs, $warm before it")
     assert(IvfIndex.currentAll(s, root).count() == 260)

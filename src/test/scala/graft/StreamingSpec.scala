@@ -1733,4 +1733,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(IvfIndex.currentAll(spark, root).count() == 120)
     IvfIndex.destroy(root); IvfIndex.destroy(twin)
   }
+
+  test("tumblingAgg removes its staging directory and leaves the table intact") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tumbling_")
+    // events.parquet as one file, the layout the stream stages a link to
+    val written = dir.resolve("written").toString
+    Seq(("2024-01-01 00:10:00", "a", 1.0), ("2024-01-01 01:00:00", "a", 2.0),
+        ("2024-01-01 07:00:00", "b", 4.0))
+      .toDF("ts", "event_type", "value")
+      .withColumn("ts", to_timestamp(col("ts")))
+      .coalesce(1).write.parquet(written)
+    val table = dir.resolve("events.parquet")
+    java.nio.file.Files.move(new java.io.File(written).listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath, table)
+    val bytes = java.nio.file.Files.readAllBytes(table)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged = tmp.list().filter(_.startsWith("graft_stream_")).toSet
+    val before = staged
+    val out = graft.streaming.Streams.tumblingAgg(spark, dir.toString, "6 hours",
+      "tumbling_cleanup").orderBy("w_start", "event_type").collect()
+    assert(out.map(r => (r.getString(1), r.getLong(2))).toSeq ==
+      Seq(("a", 2L), ("b", 1L)))
+    assert((staged -- before).isEmpty, s"left behind: ${staged -- before}")
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(table), bytes))
+    graft.sources.FsIo.delete(spark.sparkContext.hadoopConfiguration, dir.toString)
+  }
 }
