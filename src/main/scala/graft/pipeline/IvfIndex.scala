@@ -6,6 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
 
 import graft.core.SessionState
@@ -130,15 +131,23 @@ object IvfIndex extends Ledger.Manifests {
       .parquet(p)
   }
 
-  /** Pin `centroids` as generation `gen`'s (list INT, cvec) table and
-    * hold the schema it was written with. Returns the pinned frame. */
+  /** Pin `centroids` as generation `gen`'s (list INT, cvec) table: its
+    * rows are collected once, checked and built into the generation's
+    * quantizer, then written, so the table and the quantizer hold the
+    * same rows and nothing is read back. Holds the quantizer and the
+    * schema the table was written with; returns the pinned frame. */
   private def writeCentroids(centroids: DataFrame, root: String,
                              gen: Int): DataFrame = {
+    val spark = centroids.sparkSession
     val cent = centroids.select(col("list").cast("int").as("list"), col("cvec"))
+    val rows = DatasetBridge.collectRows(cent)
+    val quant = buildQuantizer(spark, rows)
+    val pinned = localQueryDf(spark, rows.toSeq, cent.schema)
     val p = centroidsPath(root, gen)
-    cent.coalesce(1).write.mode(SaveMode.Overwrite).parquet(p)
+    pinned.coalesce(1).write.mode(SaveMode.Overwrite).parquet(p)
     SessionState(s"$p/#schema")(FsIo.asRead(cent.schema))
-    cent
+    holdQuantizer(spark, root, gen)(quant)
+    pinned
   }
 
   // ---- product-quantized postings (the FAISS IVFADC layout) ----
@@ -442,17 +451,20 @@ object IvfIndex extends Ledger.Manifests {
     * of the index's own segments infers it. */
   private def segSchemaKey(root: String) = s"$root/#segschema"
 
-  /** Collect + broadcast the centroid matrix, guarding the kernel's
+  /** The (list INT, cvec) rows of a centroid table, collected. */
+  private def centroidRows(centroids: DataFrame): Array[Row] =
+    DatasetBridge.collectRows(
+      centroids.select(col("list").cast("int").as("list"), col("cvec")))
+
+  /** Broadcast the collected centroid matrix, guarding the kernel's
     * memory contract LOUDLY at build time: the matrix lives whole on
     * the driver and every executor, so a table past the configured
     * bound must fail here — not OOM executors mid-ingest. Past the
     * bound the chunked HOF path (`useKernel = false`) or an IMI-style
     * two-level quantizer is the right regime. */
   private def buildQuantizer(spark: SparkSession,
-                             centroids: DataFrame): Quantizer = {
-    val rows = centroids
-      .select(col("list").cast("int").as("list"), col("cvec"))
-      .collect().sortBy(_.getInt(0))
+                             centroidRows: Array[Row]): Quantizer = {
+    val rows = centroidRows.sortBy(_.getInt(0))
     require(rows.nonEmpty, "empty centroid table")
     val lists = rows.map(_.getInt(0))
     val mat = rows.map(_.getSeq[Any](1).map {
@@ -473,9 +485,13 @@ object IvfIndex extends Ledger.Manifests {
 
   private def pinnedQuantizer(spark: SparkSession, root: String,
                               gen: Int): Quantizer =
+    holdQuantizer(spark, root, gen)(
+      buildQuantizer(spark, centroidRows(centroidsAt(spark, root, gen))))
+
+  private def holdQuantizer(spark: SparkSession, root: String, gen: Int)(
+      build: => Quantizer): Quantizer =
     SessionState(quantizerKey(root, gen), Some(spark.sparkContext))(
-      buildQuantizer(spark, centroidsAt(spark, root, gen)),
-      (q: Quantizer) => q._2.destroy())
+      build, (q: Quantizer) => q._2.destroy())
 
   /** The JIT arg-min struct(d2, list) column over a built quantizer —
     * the kernel projection both [[assignWithDist]] and the SQ8 rebuild
@@ -521,7 +537,7 @@ object IvfIndex extends Ledger.Manifests {
     val base = df.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
     val withBest =
       if (useKernel) {
-        val q = quant.getOrElse(buildQuantizer(base.sparkSession, centroids))
+        val q = quant.getOrElse(buildQuantizer(base.sparkSession, centroidRows(centroids)))
         base.withColumn("_best", argminCol(q, col("embedding")))
       } else {
         val (packed, nchunks) = packedChunks(centroids, chunkLists)
@@ -561,14 +577,15 @@ object IvfIndex extends Ledger.Manifests {
     * (Σ `_d2u`, row count) collected as OBSERVED metrics riding the
     * write job itself — zero extra jobs, and the integer sum is
     * order-free so the recorded value is deterministic. A frame without
-    * `_d2u` (compaction merges) records (-1, n). */
+    * `_d2u` (compaction merges) records (-1, n); it observes a NULL
+    * `_d2u`, so every segment write runs the same metrics aggregate. */
   private def writeSegment(assigned: DataFrame, dir: String): (Long, Long) = {
     val hasD2 = assigned.columns.contains("_d2u")
     val obs = org.apache.spark.sql.Observation()
-    val frame =
-      if (hasD2) assigned.observe(obs, sum(col("_d2u")).as("s"),
-        count(lit(1)).as("n")).drop("_d2u")
-      else assigned.observe(obs, count(lit(1)).as("n"))
+    val frame = (if (hasD2) assigned
+                 else assigned.withColumn("_d2u", lit(null).cast("long")))
+      .observe(obs, sum(col("_d2u")).as("s"), count(lit(1)).as("n"))
+      .drop("_d2u")
     frame.repartition(col("list"))
       .write.mode(SaveMode.Overwrite).partitionBy("list").parquet(dir)
     val spark = assigned.sparkSession
@@ -1005,7 +1022,7 @@ object IvfIndex extends Ledger.Manifests {
       : (DataFrame, Seq[Int], Boolean) = {
     val local = SessionState.get[Quantizer](quantizerKey(root, gen),
         spark.sparkContext).flatMap { quant =>
-      val rows = queries.collect()
+      val rows = DatasetBridge.collectRows(queries)
       val dim = quant._2.value.headOption.map(_.length).getOrElse(-1)
       if (rows.exists(r => r.isNullAt(1) || r.getSeq[Any](1).length != dim)) None
       else {
@@ -1013,7 +1030,10 @@ object IvfIndex extends Ledger.Manifests {
           r.getSeq[Any](1).map { case n: Number => n.doubleValue() }.toArray, nprobe))
         Some((localQueryDf(spark,
             rows.zip(lists).map { case (r, l) => Row.fromSeq(r.toSeq :+ l) }.toSeq,
-            queries.schema.add("probe_lists", ArrayType(IntegerType))),
+            // non-nullable: no inferred NULL filter for the optimizer to
+            // evaluate (and compile) over the local relation
+            queries.schema.add("probe_lists",
+              ArrayType(IntegerType, containsNull = false), nullable = false)),
           lists.flatten.distinct.sorted.toSeq, rows.length == 1))
       }
     }

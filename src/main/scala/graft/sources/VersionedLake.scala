@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.DatasetBridge
 
 /** Versioned-snapshot lake — the PRODUCTION form of the streaming MERGE
   * sink (the r11 in-place rewrite is demoted to a test convenience, see
@@ -80,7 +81,7 @@ object VersionedLake extends Ledger {
                  keyCol: String, buckets: Int, batchId: Long,
                  retain: Int = 2): Unit =
     applyWith(changes, root, table, Seq(keyCol), buckets, batchId, retain)(
-      Lake.merge(_, changes, keyCol))
+      Lake.merge(_, _, keyCol))
 
   /** [[applyBatch]] for ADDITIVE counter tables (sketches: DDSketch /
     * CMS buckets, word counts): the batch's counters ADD into the
@@ -136,7 +137,7 @@ object VersionedLake extends Ledger {
     // distinct is map-side-combinable and the union is only k·groups +
     // batch rows). WindowGroupLimit then bounds per-group state at k.
     applyWith(batch, root, table, grpCols :+ rankCol, buckets, batchId,
-      retain)(_.unionByName(batch)
+      retain)(_.unionByName(_)
         .distinct()
         .withColumn("_rk", row_number().over(w))
         .filter(col("_rk") <= k).drop("_rk"))
@@ -152,25 +153,31 @@ object VersionedLake extends Ledger {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "combine batch needs key columns")
     applyWith(batch, root, table, keyCols, buckets, batchId, retain)(
-      _.unionByName(batch)
+      _.unionByName(_)
         .groupBy(keyCols.map(col): _*)
         .agg(combine(col(valCol)).as(valCol)))
   }
 
   /** The apply template of every merge contract: behind the replay gate,
-    * write `merge(v(n))` as bucketed v(n+1) (bucketed on `sortCols.head`,
-    * sorted by `sortCols`), swap the pointer, drop the snapshot that
-    * fell out of retention. An empty batch moves only the pointer. */
+    * write `merge(v(n), batch)` as bucketed v(n+1) (bucketed on
+    * `sortCols.head`, sorted by `sortCols`), swap the pointer, drop the
+    * snapshot that fell out of retention. An empty batch moves only the
+    * pointer. The merge reads the batch as a scan of its RDD, the form a
+    * streaming micro-batch arrives in, so a direct commit and a
+    * [[graft.streaming.Streams]] trigger run one plan and share its
+    * generated classes. */
   private def applyWith(batch: DataFrame, root: String, table: String,
                         sortCols: Seq[String], buckets: Int, batchId: Long,
-                        retain: Int)(merge: DataFrame => DataFrame): Unit = {
+                        retain: Int)(
+      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     applyOnce(root, batchId, conf) { p =>
-      if (batch.isEmpty) false
+      if (DatasetBridge.isEmpty(batch)) false
       else {
         val next = p.version + 1
-        Lake.writeBucketed(merge(spark.table(tableName(table, p.version))),
+        Lake.writeBucketed(merge(spark.table(tableName(table, p.version)),
+            DatasetBridge.rddScan(batch)),
           tableName(table, next), sortCols.head, buckets, sortCols)
         Ledger.writePointer(root, Pointer(next, batchId), conf)
         dropSnapshot(spark, table, next - 1 - retain)

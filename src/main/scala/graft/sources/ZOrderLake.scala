@@ -4,10 +4,13 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.StructType
 
 import graft.core.SessionState
+import graft.functions.PlanConstant
 
 /** Incrementally-maintained z-ordered parquet lake — OPTIMIZE ZORDER
   * that survives continuous ingest, in two or three dimensions (the
@@ -46,9 +49,9 @@ import graft.core.SessionState
   * (and thus any pruning) remain exact. [[readBox]] decomposes the box
   * per epoch and unions the matching file sets.
   *
-  * Scale shape per batch: a single one-row aggregate over the batch that
-  * also collects its cells (zval is a few integer ops; at most 4096
-  * cell ids), a driver-side pick of the touched files from the
+  * Scale shape per batch: a single pass over the batch, folded per
+  * partition into its row counts, dim ranges and a 4096-bit set of its
+  * cells (zval is a few integer ops), a driver-side pick of the touched files from the
   * manifest's zval ranges (never a nested loop; a z-sorted file covers
   * ~1 of the 4096 cells), one read of the touched files, one range
   * shuffle of (touched rows ∪ batch) and a write of O(touched + batch)
@@ -193,17 +196,78 @@ object ZOrderLake extends Ledger.Manifests {
   }
 
   /** zval on the PINNED grid; out-of-box values clamp to the border
-    * cell (zval only — stored columns stay raw). */
+    * cell (zval only — stored columns stay raw). The bounds are
+    * [[PlanConstant]]s, so every grid compiles the same classes. */
   private def zvalCol(dims: Seq[DimBound]): Column = {
-    def g(d: DimBound) = Lake.scaleToGrid(
-      least(greatest(col(d.name).cast("long"), lit(d.lo)), lit(d.hi)),
-      lit(d.lo), lit(d.hi))
+    def g(d: DimBound) = {
+      val (lo, hi) = (PlanConstant.column(d.lo), PlanConstant.column(d.hi))
+      Lake.scaleToGrid(least(greatest(col(d.name).cast("long"), lo), hi), lo, hi)
+    }
     dims match {
       case Seq(a, b)    => graft.functions.Morton2.morton2(g(a), g(b))
       case Seq(a, b, c) => graft.functions.Morton3.morton3(g(a), g(b), g(c))
       case other => throw new IllegalArgumentException(
         s"z-order lake supports 2 or 3 dims, got ${other.map(_.name)}")
     }
+  }
+
+  /** What [[applyBatch]] and [[rebuild]] learn from one pass over their
+    * rows: the row count, how many fall outside the grid box, the
+    * occupied cells, and each dim's min/max. One partition's fold;
+    * `merge` combines them on the driver. */
+  private final class CellStats(nDims: Int) extends Serializable {
+    var rows = 0L
+    var oob = 0L
+    val cells = new java.util.BitSet(1 << 12)
+    private val lo = Array.fill(nDims)(Long.MaxValue)
+    private val hi = Array.fill(nDims)(Long.MinValue)
+
+    /** One row of [[cellStats]]' projection: (cell, out-of-box, dims…). */
+    def add(r: InternalRow): Unit = {
+      rows += 1
+      if (!r.isNullAt(0)) cells.set(r.getLong(0).toInt)
+      if (!r.isNullAt(1) && r.getBoolean(1)) oob += 1
+      var i = 0
+      while (i < nDims) {
+        if (!r.isNullAt(2 + i)) {
+          val v = r.getLong(2 + i)
+          lo(i) = math.min(lo(i), v); hi(i) = math.max(hi(i), v)
+        }
+        i += 1
+      }
+    }
+
+    def merge(o: CellStats): CellStats = {
+      rows += o.rows; oob += o.oob; cells.or(o.cells)
+      (0 until nDims).foreach { i =>
+        lo(i) = math.min(lo(i), o.lo(i)); hi(i) = math.max(hi(i), o.hi(i))
+      }
+      this
+    }
+
+    /** Dim `i`'s (min, max), None when it held only NULLs. */
+    def range(i: Int): Option[(Long, Long)] =
+      if (lo(i) > hi(i)) None else Some((lo(i), hi(i)))
+  }
+
+  /** [[CellStats]] of `df` under `dims`' grid: one projection (cell,
+    * out-of-box flag, dims as long) folded per partition and merged on
+    * the driver — one Spark job without a shuffle, and only the
+    * projection's classes to compile (an aggregate would add a shuffle
+    * stage and its per-task projection classes). */
+  private def cellStats(df: DataFrame, dims: Seq[DimBound]): CellStats = {
+    val oob = dims.map { d =>
+      val v = col(d.name).cast("long")
+      v < PlanConstant.column(d.lo) || v > PlanConstant.column(d.hi)
+    }.reduce(_ || _)
+    val proj = df.select((shiftright(zvalCol(dims), cellShift(dims.size)) +: oob +:
+      dims.map(d => col(d.name).cast("long"))): _*)
+    val n = dims.size
+    DatasetBridge.foldPartitions(proj) { rows =>
+      val s = new CellStats(n)
+      rows.foreach(s.add)
+      s
+    }.foldLeft(new CellStats(n))(_ merge _)
   }
 
   /** Canonical path form for manifest entries and gc comparisons:
@@ -270,8 +334,41 @@ object ZOrderLake extends Ledger.Manifests {
     } finally reader.close()
   }
 
-  private def writeSlabs(df: DataFrame, dir: String, targetRows: Long,
-                         totalRows: Long): Seq[Entry] = {
+  /** The one slab writer — init, rebuild, apply and compact all write
+    * through it, so their shuffles and writes run one plan and share its
+    * generated classes. `rows` carries `zval`; one range shuffle on
+    * (`_grp`, zval) cuts it into ~`targetRows` slabs.
+    *
+    * `kept` is, for a rewrite, the sorted max cells of the same-epoch
+    * slabs it keeps. Slab cuts must not SPAN a kept file's z-interval: a
+    * rewrite slab sliced purely by row rank could cover the gap a kept
+    * file sits in and overlap its box, eroding disjointness (and with it
+    * skipping quality) version over version. Rows are therefore grouped
+    * by how many kept intervals lie below them — rewrite rows can never
+    * fall INSIDE a kept interval (its cells would have marked the file
+    * touched), so same-group rows never straddle one — and the write
+    * splits files per group (partitionBy), keeping the manifest a true
+    * partition of z-space. Cell-granular: one 4096-entry literal lookup
+    * per row, no per-file probing. Reading manifests by leaf-file path
+    * never re-infers the directory key, so `_grp` vanishes. A whole
+    * epoch (init, rebuild; `kept` None) is one group and writes its
+    * files straight under `dir`. */
+  private def writeSlabs(rows: DataFrame, dir: String, targetRows: Long,
+                         totalRows: Long, shift: Int,
+                         kept: Option[Seq[Long]]): Seq[Entry] = {
+    val groupOfCell = { // one cumulative walk: O(cells + kept files)
+      val maxCells = kept.getOrElse(Nil)
+      val arr = new Array[Int](1 << 12)
+      var n = 0
+      var c = 0
+      while (c < arr.length) {
+        while (n < maxCells.length && maxCells(n) < c) n += 1
+        arr(c) = n; c += 1
+      }
+      arr
+    }
+    val df = rows.withColumn("_grp", element_at(typedLit(groupOfCell.toSeq),
+      (shiftright(col("zval"), shift) + 1).cast("int")))
     // totalRows comes from metadata the caller already holds (manifest
     // row counts + batch count) — never a re-count of the rewrite set
     val n = math.max(1L, (totalRows + targetRows - 1) / targetRows).toInt
@@ -284,24 +381,12 @@ object ZOrderLake extends Ledger.Manifests {
     // passes read the same blocks; the sampled bounds now also derive
     // from exactly the rows being written. Blocks are freed by the
     // context cleaner when the checkpoint RDD goes out of scope.
-    val mat = df.localCheckpoint(false)
-    mat.repartitionByRange(n, col("zval")).sortWithinPartitions("zval")
-      .write.mode(SaveMode.Overwrite).parquet(dir)
-    statFiles(df.sparkSession, dir)
-  }
-
-  /** [[writeSlabs]] for a frame carrying a `_grp` column: one range
-    * shuffle on (_grp, zval), but files SPLIT per group (partitionBy)
-    * so no slab spans a kept interval. Reading manifests by leaf-file
-    * path never re-infers the directory key, so `_grp` vanishes. */
-  private def writeSlabGroups(df: DataFrame, dir: String, targetRows: Long,
-                              totalRows: Long): Seq[Entry] = {
-    val n = math.max(1L, (totalRows + targetRows - 1) / targetRows).toInt
-    // same double-scan argument as writeSlabs (r18)
-    val mat = df.localCheckpoint(false)
-    mat.repartitionByRange(n, col("_grp"), col("zval"))
+    val sorted = df.localCheckpoint(false)
+      .repartitionByRange(n, col("_grp"), col("zval"))
       .sortWithinPartitions("_grp", "zval")
-      .write.mode(SaveMode.Overwrite).partitionBy("_grp").parquet(dir)
+    (if (kept.isEmpty) sorted.drop("_grp").write
+     else sorted.write.partitionBy("_grp"))
+      .mode(SaveMode.Overwrite).parquet(dir)
     statFiles(df.sparkSession, dir)
   }
 
@@ -326,7 +411,8 @@ object ZOrderLake extends Ledger.Manifests {
     val totalRows = r.getLong(2 * dimCols.size)
     writeEpochs(root, Seq(dims), conf)
     val slabs = df.withColumn("zval", zvalCol(dims))
-    val entries = writeSlabs(slabs, s"$root/data/v00000", targetRows, totalRows)
+    val entries = writeSlabs(slabs, s"$root/data/v00000", targetRows,
+      totalRows, cellShift(dims.size), None)
     commit(root, Pointer(0, -1L), entries, 0, conf)
     SessionState(slabSchemaKey(root))(FsIo.asRead(slabs.schema))
   }
@@ -391,8 +477,10 @@ object ZOrderLake extends Ledger.Manifests {
         ranges.exists(r => r._1 <= en.maxZ && en.minZ <= r._2)).map(_.path)
     }
     val dims = epochs.last
-    val pred = dims.indices.map(i =>
-      col(dims(i).name).between(los(i), his(i))).reduce(_ && _)
+    // the box bounds are plan constants: every box compiles the same
+    // classes (the manifest, not a pushed-down filter, picks the files)
+    val pred = dims.indices.map(i => col(dims(i).name).between(
+      PlanConstant.column(los(i)), PlanConstant.column(his(i)))).reduce(_ && _)
     if (files.isEmpty) current(spark, root).filter(lit(false))
     else readSlabs(spark, root, files).filter(pred)
   }
@@ -463,53 +551,39 @@ object ZOrderLake extends Ledger.Manifests {
     val curDims = epochs.last
     val manifest = readManifest(root, p.version, conf)
     val shift = cellShift(curDims.size)
-    // one 1-row aggregate over the batch: per-dim min/max, row count,
-    // out-of-box count and the batch's cells under the current grid (at
-    // most 4096 ids) — it also subsumes the isEmpty probe, so the
-    // per-batch jobs are this aggregate and the rewrite
-    val oobPred = curDims.map(d =>
-      col(d.name).cast("long") < d.lo || col(d.name).cast("long") > d.hi)
-      .reduce(_ || _)
-    val aggs = curDims.flatMap(d =>
-      Seq(min(col(d.name)).cast("long"), max(col(d.name)).cast("long"))) ++
-      Seq(count(lit(1)), sum(when(oobPred, 1L).otherwise(0L)),
-        collect_set(shiftright(zvalCol(curDims), shift)))
-    val r = batch.agg(aggs.head, aggs.tail: _*).head()
-    val batchRows = r.getLong(2 * curDims.size)
-    if (batchRows == 0L) return false
-    val oobRows = r.getLong(2 * curDims.size + 1)
-    val (epoch, dims, cells) =
-      if (oobRows.toDouble / batchRows > epochThreshold) {
+    // one pass over the batch — it also subsumes the isEmpty probe, so
+    // the per-batch jobs are this pass and the rewrite
+    val stats = cellStats(batch, curDims)
+    if (stats.rows == 0L) return false
+    val (epoch, dims, hit) =
+      if (stats.oob.toDouble / stats.rows > epochThreshold) {
         val fresh = curDims.zipWithIndex.map { case (d, i) =>
           // an all-NULL dim column has no min/max — NULL values are
           // in-box by convention (they z-encode to NULL), so the dim
           // keeps its grid
-          if (r.isNullAt(2 * i)) d
-          else {
-          val blo = r.getLong(2 * i); val bhi = r.getLong(2 * i + 1)
-          if (blo >= d.lo && bhi <= d.hi) d // in-box dim keeps its grid
-          else {
-            // headroom = one full span past each violated side: the next
-            // overflow needs the dim to advance by ≥ the whole history,
-            // so epochs per monotone dim are O(log ingest-span)
-            val g = math.max(d.hi - d.lo, bhi - blo).max(1L)
-            DimBound(d.name,
-              if (blo < d.lo) math.min(blo, d.lo - g) else d.lo,
-              if (bhi > d.hi) math.max(bhi, d.hi + g) else d.hi)
-          }
+          stats.range(i) match {
+            case None => d
+            case Some((blo, bhi)) if blo >= d.lo && bhi <= d.hi => d // in-box dim keeps its grid
+            case Some((blo, bhi)) =>
+              // headroom = one full span past each violated side: the next
+              // overflow needs the dim to advance by ≥ the whole history,
+              // so epochs per monotone dim are O(log ingest-span)
+              val g = math.max(d.hi - d.lo, bhi - blo).max(1L)
+              DimBound(d.name,
+                if (blo < d.lo) math.min(blo, d.lo - g) else d.lo,
+                if (bhi > d.hi) math.max(bhi, d.hi + g) else d.hi)
           }
         }
         // a new epoch's slabs share no z-space with any existing slab,
         // so the batch touches nothing
-        (openEpoch(root, manifest, epochs, fresh, conf), fresh, Seq.empty[Long])
-      } else (epochs.size - 1, curDims, r.getSeq[Long](2 * curDims.size + 2))
+        (openEpoch(root, manifest, epochs, fresh, conf), fresh,
+          new java.util.BitSet(1 << 12))
+      } else (epochs.size - 1, curDims, stats.cells)
     val batchZ = batch.withColumn("zval", zvalCol(dims))
     // touched files on the driver: a same-epoch slab is touched when a
     // batch cell lies in its [minZ, maxZ] cell span (cell-granular, so a
     // batch row in a slab's boundary cell touches it). Only SAME-epoch
     // slabs are comparable; the bitmap lookup is O(files).
-    val hit = new java.util.BitSet(1 << 12)
-    cells.foreach(c => hit.set(c.toInt))
     def touched(e: Entry): Boolean = e.epoch == epoch && {
       val next = hit.nextSetBit((e.minZ >> shift).toInt)
       next >= 0 && next <= (e.maxZ >> shift)
@@ -529,7 +603,7 @@ object ZOrderLake extends Ledger.Manifests {
       if (rewrite.isEmpty) batchZ
       else readSlabs(spark, root, rewrite.map(_.path)).unionByName(batchZ)
     commitRewrite(spark, root, keep, rewriteRows,
-      rewrite.map(_.rows).sum + batchRows,
+      rewrite.map(_.rows).sum + stats.rows,
       Pointer(p.version + 1, batchId), targetRows, retain, shift, epoch)
     true
   }
@@ -547,21 +621,10 @@ object ZOrderLake extends Ledger.Manifests {
                  targetRows: Long, batchId: Long): Unit =
     applyBatch(batch, root, xCol, yCol, targetRows, batchId, 2)
 
-  /** Rewrite `rows` into fresh slabs respecting `keep`'s intervals,
-    * commit them as `next`, sweep.
-    *
-    * Slab cuts must not SPAN a kept file's z-interval: a rewrite slab
-    * sliced purely by row rank could cover the gap a kept file sits in
-    * and overlap its box, eroding disjointness (and with it skipping
-    * quality) version over version. Rows are therefore grouped by how
-    * many kept intervals lie below them — rewrite rows can never fall
-    * INSIDE a kept interval (its cells would have marked the file
-    * touched), so same-group rows never straddle one — and the write
-    * splits files per group (partitionBy), keeping the manifest a true
-    * partition of z-space. Cell-granular: one 4096-entry literal
-    * lookup per row, no per-file probing. All rewrite rows live in ONE
-    * epoch (`epoch`); kept slabs of OTHER epochs are in incomparable
-    * z-spaces and place no constraint on the cuts. */
+  /** Rewrite `rows` into fresh slabs respecting `keep`'s intervals
+    * (see [[writeSlabs]]), commit them as `next`, sweep. All rewrite
+    * rows live in ONE epoch (`epoch`); kept slabs of OTHER epochs are in
+    * incomparable z-spaces and place no constraint on the cuts. */
   private def commitRewrite(spark: SparkSession, root: String,
                             keep: Seq[Entry], rows: DataFrame,
                             totalRows: Long, next: Pointer,
@@ -569,22 +632,9 @@ object ZOrderLake extends Ledger.Manifests {
                             retain: Int, shift: Int, epoch: Int): Unit = {
     val keptMaxCells = keep.filter(_.epoch == epoch)
       .map(_.maxZ >> shift).sorted
-    val cells = 1 << 12
-    val groupOfCell = { // one cumulative walk: O(cells + kept files)
-      val arr = new Array[Int](cells)
-      var n = 0
-      var c = 0
-      while (c < cells) {
-        while (n < keptMaxCells.length && keptMaxCells(n) < c) n += 1
-        arr(c) = n; c += 1
-      }
-      arr
-    }
-    val grouped = rows.withColumn("_grp", element_at(
-      typedLit(groupOfCell.toSeq),
-      (shiftright(col("zval"), shift) + 1).cast("int")))
-    val fresh = writeSlabGroups(grouped, f"$root/data/v${next.version}%05d",
-      targetRows, totalRows).map(_.copy(epoch = epoch))
+    val fresh = writeSlabs(rows, f"$root/data/v${next.version}%05d",
+      targetRows, totalRows, shift, Some(keptMaxCells))
+      .map(_.copy(epoch = epoch))
     val conf = spark.sparkContext.hadoopConfiguration
     sweep(root, commit(root, next, keep ++ fresh, retain, conf), conf)
   }
@@ -678,20 +728,18 @@ object ZOrderLake extends Ledger.Manifests {
     val curDims = epochs.last
     val manifest = readManifest(root, p.version, conf)
     val df = readSlabs(spark, root, manifest.map(_.path)).drop("zval")
-    val aggs = curDims.flatMap(d =>
-      Seq(min(col(d.name)).cast("long"), max(col(d.name)).cast("long"))) :+
-      count(lit(1))
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    val totalRows = r.getLong(2 * curDims.size)
+    // the batch pass of applyBatch, over the whole lake
+    val stats = cellStats(df, curDims)
+    val totalRows = stats.rows
     require(totalRows > 0, "cannot rebuild an empty lake")
     val dims = curDims.zipWithIndex.map { case (d, i) =>
-      if (r.isNullAt(2 * i)) d
-      else DimBound(d.name, r.getLong(2 * i), r.getLong(2 * i + 1))
+      stats.range(i).fold(d) { case (lo, hi) => DimBound(d.name, lo, hi) }
     }
     val epoch = openEpoch(root, manifest, epochs, dims, conf)
     val next = p.version + 1
     val entries = writeSlabs(df.withColumn("zval", zvalCol(dims)),
-        f"$root/data/v$next%05d", targetRows, totalRows)
+        f"$root/data/v$next%05d", targetRows, totalRows,
+        cellShift(dims.size), None)
       .map(_.copy(epoch = epoch))
     sweep(root, commit(root, Pointer(next, p.lastBatch), entries, retain, conf),
       conf)

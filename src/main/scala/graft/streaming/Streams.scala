@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.graft.DatasetBridge
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Structured Streaming surface. The reference is batch-only (SURVEY §2.7);
   * this is the engine's forward-looking stream path for the `events`-shaped
@@ -11,8 +12,24 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * At scale: the aggregation state is keyed on (window, type-keys); the
   * watermark bounds state size; sink partitioning follows the agg keys.
+  *
+  * The lake sinks re-home each micro-batch into the stream's own session
+  * ([[eachBatch]]), because the clone a query runs its batches in has an
+  * executor class loader of its own, and sink jobs under it compiled
+  * again every class the direct commits had compiled.
   */
 object Streams {
+
+  /** The one `foreachBatch` of the lake sinks. The batch keeps its plan
+    * (a `LogicalRDD` over the micro-batch execution, state handling
+    * included); only the session that submits its jobs changes. */
+  private def eachBatch(rows: DataFrame)(
+      commit: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    val home = rows.sparkSession
+    rows.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      commit(DatasetBridge.rehome(home, b), id)
+    }
+  }
 
   /** Tumbling-window counts/sums over a parquet directory replayed as a
     * stream (one file = one micro-batch class). Synchronous: runs the whole
@@ -95,8 +112,8 @@ object Streams {
     * snapshot (`localCheckpoint`) before the overwrite since the plan
     * reads the table it replaces — the cost the versioned form avoids. */
   def mergeSink(changes: DataFrame, table: String, keyCol: String,
-                buckets: Int): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+                buckets: Int): DataStreamWriter[Row] =
+    eachBatch(changes) { (b, _) =>
       if (!b.isEmpty) {
         val sp = b.sparkSession
         val merged = graft.sources.Lake
@@ -117,8 +134,8 @@ object Streams {
     * [[graft.sources.VersionedLake.init]]'d first. */
   def mergeSinkVersioned(changes: DataFrame, root: String, table: String,
                          keyCol: String, buckets: Int, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      : DataStreamWriter[Row] =
+    eachBatch(changes) { (b, id) =>
       graft.sources.VersionedLake.applyBatch(b, root, table, keyCol, buckets,
         id, retain)
     }
@@ -168,8 +185,8 @@ object Streams {
   def ddSketchSinkVersioned(rows: DataFrame, root: String, table: String,
                             grpCol: String, valCol: String, buckets: Int,
                             retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      : DataStreamWriter[Row] =
+    eachBatch(rows) { (b, id) =>
       graft.sources.VersionedLake.applyAdditiveBatch(
         graft.pipeline.Sketches.ddHistogram(b, grpCol, valCol),
         root, table, Seq("grp", "sign", "bucket"), "cnt", buckets, id, retain)
@@ -186,8 +203,8 @@ object Streams {
   def bloomSinkVersioned(rows: DataFrame, root: String, table: String,
                          grpCol: String, valCol: String, mBits: Long,
                          k: Int, buckets: Int, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      : DataStreamWriter[Row] =
+    eachBatch(rows) { (b, id) =>
       graft.sources.VersionedLake.applyOrBatch(
         graft.pipeline.Sketches.bloomBits(b, grpCol, valCol, mBits, k),
         root, table, Seq("grp", "word"), "bits", buckets, id, retain)
@@ -224,8 +241,8 @@ object Streams {
   def sampleSinkVersioned(rows: DataFrame, root: String, table: String,
                           grpCol: String, idCol: String, k: Int,
                           buckets: Int, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      : DataStreamWriter[Row] =
+    eachBatch(rows) { (b, id) =>
       graft.sources.VersionedLake.applyBottomKBatch(
         sampleRows(b, grpCol, idCol), root, table,
         Seq("grp"), "hv", k, buckets, id, retain)
@@ -271,8 +288,8 @@ object Streams {
     * exactly as for the additive sketch sink. */
   def zOrderSinkVersioned(rows: DataFrame, root: String, xCol: String,
                           yCol: String, targetRows: Long, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      : DataStreamWriter[Row] =
+    eachBatch(rows) { (b, id) =>
       graft.sources.ZOrderLake.applyBatch(b, root, xCol, yCol,
         targetRows, id, retain)
     }
@@ -281,8 +298,8 @@ object Streams {
     * lake's own pinned `_bounds`. */
   def zOrderSinkVersioned(rows: DataFrame, root: String, targetRows: Long,
                           retain: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      : DataStreamWriter[Row] =
+    eachBatch(rows) { (b, id) =>
       graft.sources.ZOrderLake.applyBatch(b, root, targetRows, id, retain)
     }
 
@@ -301,8 +318,8 @@ object Streams {
   def ivfSinkVersioned(rows: DataFrame, root: String, idCol: String,
                        vecCol: String, retain: Int = 2,
                        autoCompactSegments: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      : DataStreamWriter[Row] =
+    eachBatch(rows) { (b, id) =>
       import graft.pipeline.IvfIndex
       IvfIndex.applyBatch(b, idCol, vecCol, root, id, retain)
       if (autoCompactSegments > 0) {
@@ -389,7 +406,7 @@ object Streams {
     * trigger), run them through `sink`, and clean up the staging +
     * checkpoint directories. */
   private def replayThrough(s: SparkSession, batches: Seq[DataFrame])(
-      sink: DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
+      sink: DataFrame => DataStreamWriter[Row]): Unit = {
     if (batches.isEmpty) return // no-op, like the pre-pool serial loop
     val root = java.nio.file.Files.createTempDirectory("graft_stream_merge_")
     try {

@@ -901,7 +901,7 @@ class LakeSpec extends AnyFunSuite {
     val batch = spark.read.parquet(batchDir)
     val (_, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext)(
       ZOrderLake.applyBatch(batch, root, 50L, 1L, 10))
-    assert(jobs <= 5, s"z-order applyBatch ran $jobs Spark jobs")
+    assert(jobs <= 4, s"z-order applyBatch ran $jobs Spark jobs")
     val removed = ZOrderLake.changedSlabs(root, 1, 2).filter(_._1 == "removed").map(_._2)
     assert(removed.map(_.path) == Seq(e.path), s"rewrote $removed, expected ${e.path}")
     assert(ZOrderLake.current(spark, root).count() == 402)

@@ -1760,4 +1760,67 @@ class StreamingSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(table), bytes))
     graft.sources.FsIo.delete(spark.sparkContext.hadoopConfiguration, dir.toString)
   }
+
+  test("lake sinks run each micro-batch's jobs under the stream's own session") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.pipeline.IvfIndex
+    import graft.sources.VersionedLake
+    import graft.streaming.Streams
+    // a pass-through filter that records its task's context class loader:
+    // each session's tasks run under an executor class loader of its own
+    val seen = udf { (_: Long) =>
+      SinkLoaders.seen.add(Thread.currentThread.getContextClassLoader); true
+    }.asNondeterministic()
+    def loaders(f: => Unit): Set[ClassLoader] = {
+      SinkLoaders.seen.clear()
+      f
+      SinkLoaders.seen.toArray(Array.empty[ClassLoader]).toSet
+    }
+    val home = loaders(spark.range(8).filter(seen(col("id"))).count())
+    assert(home.size == 1)
+    val base = java.nio.file.Files.createTempDirectory("graft_rehome_").toString
+    def run(in: String, sink: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
+        idCol: String): Set[ClassLoader] = loaders {
+      val rows = spark.readStream.schema(spark.read.parquet(in).schema).parquet(in)
+      val q = sink(rows.filter(seen(col(idCol))))
+        .option("checkpointLocation", s"$in-ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    // versioned MERGE sink
+    val root = s"$base/versioned"
+    val table = s"rehome_snap_${System.nanoTime()}"
+    VersionedLake.init((1L to 20L).map(k => (k, k * 1.0)).toDF("k", "v"),
+      root, table, "k", 4)
+    (15L to 30L).map(k => (k, "insert", k * 2.0)).toDF("k", "op", "v")
+      .write.parquet(s"$base/changes")
+    val merge = run(s"$base/changes",
+      Streams.mergeSinkVersioned(_, root, table, "k", 4), "k")
+    assert(merge == home, "the MERGE sink's jobs ran outside the stream's session")
+    assert(VersionedLake.current(spark, root, table).count() == 30)
+    // IVF sink
+    val ivf = s"$base/ivf"
+    def vec(id: Long) = Array.tabulate(4)(j => if (j == id % 4) 1f else 0f)
+    IvfIndex.init((0L until 20L).map(i => (i, vec(i))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding",
+      (0 until 4).map(c => (c, Array.tabulate(4)(j => if (j == c) 1.0 else 0.0)))
+        .toDF("list", "cvec"), ivf)
+    (20L until 40L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+      .write.parquet(s"$base/vectors")
+    val index = run(s"$base/vectors",
+      Streams.ivfSinkVersioned(_, ivf, "vec_id", "embedding"), "vec_id")
+    assert(index == home, "the IVF sink's jobs ran outside the stream's session")
+    assert(IvfIndex.currentAll(spark, ivf).count() == 40)
+    VersionedLake.destroy(spark, root, table)
+    IvfIndex.destroy(ivf)
+    graft.sources.FsIo.delete(spark.sparkContext.hadoopConfiguration, base)
+  }
+}
+
+/** The class loaders a filter saw in its tasks (one JVM in `local[N]`). */
+object SinkLoaders {
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[ClassLoader]
 }
