@@ -1,13 +1,10 @@
 package graft.sources
 
-import java.io.FileOutputStream
-import java.nio.{ByteBuffer, ByteOrder}
-
 /** Deterministic closed-form HDF5 file for the oracle-checked ingest
-  * query (the [[Zarr.plantedStore]] pattern): written byte-by-byte from
-  * the public format spec (superblock v3, OHDR v2 headers) so the read
-  * path exercised by `q_hdf5_ingest` is the same one a real
-  * `libver=latest` producer hits. Contents:
+  * query (the [[Zarr.plantedStore]] pattern), written byte-by-byte from
+  * the public format spec through [[Hdf5Bytes]] (superblock v3, OHDR v2
+  * headers) so the read path exercised by `q_hdf5_ingest` is the same
+  * one a real `libver=latest` producer hits. Contents:
   *
   *  - `temp`   double[6,5], chunked [4,5] with an IMPLICIT chunk index
   *    (pure offset math; the second chunk carries 2 rows of edge padding
@@ -30,131 +27,24 @@ import java.nio.{ByteBuffer, ByteOrder}
 object Hdf5Planted {
 
   def write(path: String): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ck(img: Array[Byte]): Array[Byte] = { // trailing lookup3 checksum
-      val c = Hdf5.lookup3(img, 0, img.length - 4, 0)
-      img(img.length - 4) = (c & 0xFF).toByte
-      img(img.length - 3) = ((c >> 8) & 0xFF).toByte
-      img(img.length - 2) = ((c >> 16) & 0xFF).toByte
-      img(img.length - 1) = ((c >> 24) & 0xFF).toByte
-      img
-    }
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dspace2(dims: Long*): Array[Byte] = {
-      val b = buf(4 + 8 * dims.length)
-      b.put(2.toByte).put(dims.length.toByte).put(0.toByte)
-        .put((if (dims.isEmpty) 0 else 1).toByte)
-      dims.foreach(b.putLong); b.array()
-    }
-    def dtypeDouble: Array[Byte] =
-      buf(20).put(0x11.toByte).put(0.toByte).put(0x20.toByte).put(0.toByte)
-        .putInt(8).putShort(0).putShort(64)
-        .put(52.toByte).put(11.toByte).put(0.toByte).put(52.toByte)
-        .putInt(1023).array()
-    def dtypeFixedStr(size: Int): Array[Byte] =
-      buf(8).put(0x13.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
-        .putInt(size).array()
-    def member(name: String, off: Int, dt: Array[Byte]): Array[Byte] = {
-      val nm = name.getBytes("ASCII") :+ 0.toByte
-      val padded = nm ++ Array.fill[Byte]((8 - nm.length % 8) % 8)(0)
-      cat(padded, buf(4).putInt(off).array(), new Array[Byte](28), dt)
-    }
-    val int32 = buf(12).put(0x10.toByte).put(0x08.toByte).put(0.toByte)
-      .put(0.toByte).putInt(4).putShort(0).putShort(32).array()
-    def dtypeCompound: Array[Byte] =
-      cat(buf(8).put(0x16.toByte).put(2.toByte).put(0.toByte).put(0.toByte)
-        .putInt(16).array(),
-        member("id", 0, int32), member("w", 8, dtypeDouble))
+    import Hdf5Bytes._
+    val int32 = signed(4, 32)
+    val station = compound(16, ("id", 0, int32), ("w", 8, float64))
     // nested/array member shapes (v1 compound encoding, array v3):
     // track = {id int32 @0, pos {x double @0, y double @8} @8,
     //          v double[3] @24} — 48 bytes per element
-    def dtypeArray3: Array[Byte] =
-      cat(buf(8).put(0x3A.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
-        .putInt(24).array(),
-        buf(5).put(1.toByte).putInt(3).array(), dtypeDouble)
-    def dtypePos: Array[Byte] =
-      cat(buf(8).put(0x16.toByte).put(2.toByte).put(0.toByte).put(0.toByte)
-        .putInt(16).array(),
-        member("x", 0, dtypeDouble), member("y", 8, dtypeDouble))
-    def dtypeTrack: Array[Byte] =
-      cat(buf(8).put(0x16.toByte).put(3.toByte).put(0.toByte).put(0.toByte)
-        .putInt(48).array(),
-        member("id", 0, int32), member("pos", 8, dtypePos),
-        member("v", 24, dtypeArray3))
-    def attr3(name: String, value: Double): Array[Byte] = {
-      val nm = name.getBytes("ASCII") :+ 0.toByte
-      val dt = dtypeDouble; val ds = dspace2()
-      val b = buf(9 + nm.length + dt.length + ds.length + 8)
-      b.put(3.toByte).put(0.toByte).putShort(nm.length.toShort)
-        .putShort(dt.length.toShort).putShort(ds.length.toShort)
-        .put(0.toByte).put(nm).put(dt).put(ds).putDouble(value)
-      msg2(0x0C, b.array())
-    }
-    def attrStr3(name: String, value: String): Array[Byte] = { // fixed-width
-      val nm = name.getBytes("ASCII") :+ 0.toByte
-      val vb = value.getBytes("UTF-8")
-      val dt = dtypeFixedStr(vb.length); val ds = dspace2()
-      val b = buf(9 + nm.length + dt.length + ds.length + vb.length)
-      b.put(3.toByte).put(0.toByte).putShort(nm.length.toShort)
-        .putShort(dt.length.toShort).putShort(ds.length.toShort)
-        .put(0.toByte).put(nm).put(dt).put(ds).put(vb)
-      msg2(0x0C, b.array())
-    }
-    def dtypeVlenStr: Array[Byte] = // class 9 v1, low nibble 1 = string
-      cat(buf(8).put(0x19.toByte).put(0x01.toByte).put(0.toByte).put(0.toByte)
-        .putInt(16).array(), dtypeFixedStr(1))
-    // vlen STRING attr (the netCDF-4/h5py text default): the value is a
-    // 16-byte (len, gheap addr, index) descriptor into the global heap
-    def attrVlenStr(name: String, strLen: Int, gcolAddr: Long,
-                    idx: Int): Array[Byte] = {
-      val nm = name.getBytes("ASCII") :+ 0.toByte
-      val dt = dtypeVlenStr; val ds = dspace2()
-      val b = buf(9 + nm.length + dt.length + ds.length + 16)
-      b.put(3.toByte).put(0.toByte).putShort(nm.length.toShort)
-        .putShort(dt.length.toShort).putShort(ds.length.toShort)
-        .put(0.toByte).put(nm).put(dt).put(ds)
-        .putInt(strLen).putLong(gcolAddr).putInt(idx)
-      msg2(0x0C, b.array())
-    }
-    def link(name: String, addr: Long): Array[Byte] = {
-      val nm = name.getBytes("ASCII")
-      msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-        .put(nm.length.toByte).put(nm).putLong(addr).array())
-    }
-    def layoutV4Contig(addr: Long, size: Long): Array[Byte] =
-      msg2(0x08, buf(18).put(4.toByte).put(1.toByte).putLong(addr).putLong(size).array())
-    def layoutV4Implicit(chunkDims: Seq[Int], addr: Long): Array[Byte] = {
-      val b = buf(5 + chunkDims.length + 1 + 8)
-      b.put(4.toByte).put(2.toByte).put(0.toByte)
-        .put(chunkDims.length.toByte).put(1.toByte)
-      chunkDims.foreach(d => b.put(d.toByte))
-      b.put(2.toByte).putLong(addr)
-      msg2(0x08, b.array())
-    }
+    val array3 = cat(buf(8).put(0x3A.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
+      .putInt(24).array(), buf(5).put(1.toByte).putInt(3).array(), float64)
+    val track = compound(48, ("id", 0, int32),
+      ("pos", 8, compound(16, ("x", 0, float64), ("y", 8, float64))), ("v", 24, array3))
 
     // --- data blocks (closed forms mirrored by the DuckDB oracle) ---
     def raw(t: Int, y: Int): Double =
       if ((t == 1 && y == 2) || (t == 5 && y == 0)) -999.0 else t * 10.0 + y
-    val tempData = { // two full [4,5] chunks, rows 6-7 are edge padding
-      val b = buf(2 * 4 * 5 * 8)
-      for (c <- 0 until 2; tr <- 0 until 4; y <- 0 until 5) {
-        val t = c * 4 + tr
-        b.putDouble(if (t < 6) raw(t, y) else 0.0)
-      }
-      b.array()
-    }
-    val labelData = cat((0 until 6).map { i =>
-      val b = new Array[Byte](4)
-      s"L$i".getBytes("ASCII").copyToArray(b); b
-    }: _*)
+    // two full [4,5] chunks, rows 6-7 are edge padding
+    val tempData = f64s((for (t <- 0 until 8; y <- 0 until 5)
+      yield if (t < 6) raw(t, y) else 0.0): _*)
+    val labelData = fixedStrings(4, (0 until 6).map(i => s"L$i"): _*)
     val stationData = {
       val b = buf(6 * 16)
       for (t <- 0 until 6) { b.putInt(2 * t + 1).putInt(0); b.putDouble(t * 0.25 - 0.5) }
@@ -169,80 +59,36 @@ object Hdf5Planted {
       }
       b.array()
     }
-    def dtypeVlenSeq(base: Array[Byte]): Array[Byte] = // class 9 v1, type=sequence
-      cat(buf(8).put(0x19.toByte).put(0x00.toByte).put(0.toByte).put(0.toByte)
-        .putInt(16).array(), base)
-    val unitsStr = "days since 2001-09-09"
-    val gcolData = { // heap objects t=1..5: t doubles; object 6: CF units text
-      val objs = cat((1 to 5).map { t =>
-        val data = buf(8 * t)
-        (0 until t).foreach(k => data.putDouble(t + 0.25 * k))
-        buf(16 + 8 * t).putShort(t.toShort).putShort(1).putInt(0)
-          .putLong(8L * t).put(data.array()).array() // 8t is 8-aligned: no pad
-      } :+ {
-        val sb = unitsStr.getBytes("UTF-8")
-        val padded = sb.length + ((8 - sb.length % 8) % 8)
-        buf(16 + padded).putShort(6).putShort(1).putInt(0)
-          .putLong(sb.length.toLong).put(sb).array()
-      }: _*)
-      cat(buf(16).put("GCOL".getBytes("ASCII")).put(1.toByte)
-        .put(new Array[Byte](3)).putLong(16L + objs.length + 16).array(), objs,
-        buf(16).putShort(0).putShort(0).putInt(0).putLong(16L).array())
-    }
-    def samplesData(gcolAddr: Long): Array[Byte] =
-      cat((0 until 6).map { t =>
-        if (t == 0) new Array[Byte](16) // null descriptor: empty sequence
-        else buf(16).putInt(t).putLong(gcolAddr).putInt(t).array()
-      }: _*)
-
+    // heap objects t=1..5: t doubles; object 6: CF units text
+    val units = "days since 2001-09-09".getBytes("UTF-8")
+    val gcolData = globalHeap((1 to 5).map(t => t -> f64s((0 until t).map(t + 0.25 * _): _*)) :+
+      (6 -> units))
     // time axis: CF-encoded day offsets (a half day pins the micros
     // rounding); units arrives as a VLEN string attr (gcol object 6),
     // calendar as a FIXED-width string attr — both netCDF-4 shapes
-    val timeData = {
-      val b = buf(6 * 8)
-      Seq(0.0, 1.0, 2.5, 3.0, 4.0, 5.0).foreach(b.putDouble)
-      b.array()
+    val timeData = f64s(0.0, 1.0, 2.5, 3.0, 4.0, 5.0)
+
+    assemble(path) { at =>
+      Seq("temp" -> tempData, "label" -> labelData, "station" -> stationData,
+        "gcol" -> gcolData,
+        // cell t holds t elements; cell 0 is the null descriptor (empty)
+        "samples" -> vlenRefs(at("gcol"), (0 until 6).map(t => (t, t)): _*),
+        "track" -> trackData, "time" -> timeData,
+        "temp.oh" -> dataset(dataspace(6L, 5L), float64, implicitChunks(Seq(4, 5), at("temp")),
+          attribute("_FillValue", float64, f64s(-999.0)),
+          attribute("scale_factor", float64, f64s(0.5)),
+          attribute("add_offset", float64, f64s(100.0))),
+        "label.oh" -> dataset(dataspace(6L), fixedString(4), contiguous(at("label"), 24L)),
+        "station.oh" -> dataset(dataspace(6L), station, contiguous(at("station"), 96L)),
+        "samples.oh" -> dataset(dataspace(6L), vlenSequence(float64),
+          contiguous(at("samples"), 96L)),
+        "track.oh" -> dataset(dataspace(6L), track, contiguous(at("track"), 288L)),
+        "time.oh" -> dataset(dataspace(6L), float64, contiguous(at("time"), 48L),
+          attribute("units", vlenString, vlenRefs(at("gcol"), (units.length, 6))),
+          attribute("calendar", fixedString(8), ascii("standard"))),
+        "root" -> group("label" -> at("label.oh"), "samples" -> at("samples.oh"),
+          "station" -> at("station.oh"), "temp" -> at("temp.oh"), "time" -> at("time.oh"),
+          "track" -> at("track.oh")))
     }
-    def build(tempAddr: Long, labelAddr: Long, stnAddr: Long,
-              gcolAddr: Long, sampAddr: Long, trackAddr: Long,
-              timeAddr: Long,
-              tempOH: Long, labelOH: Long, stnOH: Long, sampOH: Long,
-              trackOH: Long, timeOH: Long, rootOH: Long): Seq[Array[Byte]] = {
-      val tempBytes = ohdr2(msg2(0x01, dspace2(6L, 5L)), msg2(0x03, dtypeDouble),
-        layoutV4Implicit(Seq(4, 5), tempAddr),
-        attr3("_FillValue", -999.0), attr3("scale_factor", 0.5),
-        attr3("add_offset", 100.0))
-      val labelBytes = ohdr2(msg2(0x01, dspace2(6L)),
-        msg2(0x03, dtypeFixedStr(4)), layoutV4Contig(labelAddr, 24L))
-      val stnBytes = ohdr2(msg2(0x01, dspace2(6L)),
-        msg2(0x03, dtypeCompound), layoutV4Contig(stnAddr, 96L))
-      val sampBytes = ohdr2(msg2(0x01, dspace2(6L)),
-        msg2(0x03, dtypeVlenSeq(dtypeDouble)), layoutV4Contig(sampAddr, 96L))
-      val trackBytes = ohdr2(msg2(0x01, dspace2(6L)),
-        msg2(0x03, dtypeTrack), layoutV4Contig(trackAddr, 288L))
-      val timeBytes = ohdr2(msg2(0x01, dspace2(6L)),
-        msg2(0x03, dtypeDouble), layoutV4Contig(timeAddr, 48L),
-        attrVlenStr("units", unitsStr.getBytes("UTF-8").length, gcolAddr, 6),
-        attrStr3("calendar", "standard"))
-      val rootBytes = ohdr2(link("label", labelOH), link("samples", sampOH),
-        link("station", stnOH), link("temp", tempOH), link("time", timeOH),
-        link("track", trackOH))
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      sb.putLong(0L).putLong(-1L)
-      sb.putLong(rootOH + rootBytes.length).putLong(rootOH).putInt(0)
-      Seq(ck(sb.array()), tempData, labelData, stationData, gcolData,
-        samplesData(gcolAddr), trackData, timeData, tempBytes, labelBytes,
-        stnBytes, sampBytes, trackBytes, timeBytes, rootBytes)
-    }
-    val sizes = build(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).map(_.length)
-    val starts = sizes.scanLeft(0L)(_ + _)
-    val parts = build(starts(1), starts(2), starts(3),
-      starts(4), starts(5), starts(6), starts(7), starts(8), starts(9),
-      starts(10), starts(11), starts(12), starts(13), starts(14))
-    val f = new FileOutputStream(path)
-    try parts.foreach(f.write) finally f.close()
   }
 }

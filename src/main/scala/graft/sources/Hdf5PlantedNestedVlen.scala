@@ -1,14 +1,11 @@
 package graft.sources
 
-import java.io.FileOutputStream
-import java.nio.{ByteBuffer, ByteOrder}
-
 /** Deterministic planted HDF5 file with NESTED-VLEN datasets — the
   * integration fixture for `Hdf5.readVlen`'s one-level class-9 base
-  * support (r12), behind `q_hdf5_nested_vlen` and Hdf5Spec (the
-  * [[Hdf5Planted]] pattern: written byte-by-byte from the public
-  * format spec — superblock v3, OHDR v2, contiguous layout v4, one
-  * GCOL shared by inner and outer heap objects).
+  * support (r12), behind `q_hdf5_nested_vlen` and Hdf5Spec (written
+  * byte-by-byte from the public format spec through [[Hdf5Bytes]] —
+  * superblock v3, OHDR v2, contiguous layout v4, one GCOL shared by
+  * inner and outer heap objects).
   *
   * Contents:
   *   `lists` — VLEN(vlen string)[3]: `[["aa","b"], [], ["cde","","f"]]`
@@ -21,100 +18,26 @@ import java.nio.{ByteBuffer, ByteOrder}
 object Hdf5PlantedNestedVlen {
 
   def write(path: String): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ck(img: Array[Byte]): Array[Byte] = {
-      val c = Hdf5.lookup3(img, 0, img.length - 4, 0)
-      img(img.length - 4) = (c & 0xFF).toByte
-      img(img.length - 3) = ((c >> 8) & 0xFF).toByte
-      img(img.length - 2) = ((c >> 16) & 0xFF).toByte
-      img(img.length - 1) = ((c >> 24) & 0xFF).toByte
-      img
-    }
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dspace2(dims: Long*): Array[Byte] = {
-      val b = buf(4 + 8 * dims.length)
-      b.put(2.toByte).put(dims.length.toByte).put(0.toByte).put(1.toByte)
-      dims.foreach(b.putLong); b.array()
-    }
-    def link(name: String, addr: Long): Array[Byte] = {
-      val nm = name.getBytes("ASCII")
-      msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-        .put(nm.length.toByte).put(nm).putLong(addr).array())
-    }
-    def layoutV4Contig(addr: Long, size: Long): Array[Byte] =
-      msg2(0x08, buf(18).put(4.toByte).put(1.toByte).putLong(addr).putLong(size).array())
-    def dtypeFixedStr(size: Int): Array[Byte] =
-      buf(8).put(0x13.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
-        .putInt(size).array()
-    def dtypeVlenStr: Array[Byte] = // class 9 v1 string over string(1)
-      cat(buf(8).put(0x19.toByte).put(0x01.toByte).put(0.toByte).put(0.toByte)
-        .putInt(16).array(), dtypeFixedStr(1))
-    val dtypeInt32 = buf(12).put(0x10.toByte).put(0x08.toByte).put(0.toByte)
-      .put(0.toByte).putInt(4).putShort(0).putShort(32).array()
-    def dtypeVlenSeq(base: Array[Byte]): Array[Byte] = // class 9 v1 sequence
-      cat(buf(8).put(0x19.toByte).put(0x00.toByte).put(0.toByte).put(0.toByte)
-        .putInt(16).array(), base)
-    def i32s(vs: Int*): Array[Byte] = {
-      val b = buf(4 * vs.length); vs.foreach(b.putInt); b.array()
-    }
-    def descs(gcolAddr: Long, cells: (Int, Int)*): Array[Byte] =
-      cat(cells.map { case (len, idx) => // len 0 = null descriptor
-        if (len == 0) new Array[Byte](16)
-        else buf(16).putInt(len).putLong(gcolAddr).putInt(idx).array()
-      }: _*)
+    import Hdf5Bytes._
     // GCOL: inner strings (1-4), inner int rows (7-9), then OUTER objects
     // (5,6,10,11) holding inner descriptors that point back into this GCOL
     def heapObjs(g: Long): Seq[(Int, Array[Byte])] = Seq(
-      1 -> "aa".getBytes("ASCII"), 2 -> "b".getBytes("ASCII"),
-      3 -> "cde".getBytes("ASCII"), 4 -> "f".getBytes("ASCII"),
+      1 -> ascii("aa"), 2 -> ascii("b"), 3 -> ascii("cde"), 4 -> ascii("f"),
       7 -> i32s(1, 2), 8 -> i32s(3), 9 -> i32s(-7, 8, 9),
-      5 -> descs(g, (2, 1), (1, 2)),             // ["aa","b"]
-      6 -> descs(g, (3, 3), (0, 0), (1, 4)),     // ["cde","","f"]
-      10 -> descs(g, (2, 7), (1, 8)),            // [[1,2],[3]]
-      11 -> descs(g, (0, 0), (3, 9)))            // [[],[-7,8,9]]
-    def gcol(g: Long): Array[Byte] = {
-      val objs = cat(heapObjs(g).map { case (idx, data) =>
-        val pad = (8 - data.length % 8) % 8
-        cat(buf(16).putShort(idx.toShort).putShort(1).putInt(0)
-          .putLong(data.length.toLong).array(), data, new Array[Byte](pad))
-      }: _*)
-      val size = 16L + objs.length + 16
-      cat(buf(16).put("GCOL".getBytes("ASCII")).put(1.toByte)
-        .put(new Array[Byte](3)).putLong(size).array(), objs,
-        buf(16).putShort(0).putShort(0).putInt(0).putLong(16L).array())
+      5 -> vlenRefs(g, (2, 1), (1, 2)),             // ["aa","b"]
+      6 -> vlenRefs(g, (3, 3), (0, 0), (1, 4)),     // ["cde","","f"]
+      10 -> vlenRefs(g, (2, 7), (1, 8)),            // [[1,2],[3]]
+      11 -> vlenRefs(g, (0, 0), (3, 9)))            // [[],[-7,8,9]]
+    assemble(path) { at =>
+      val g = at("gcol")
+      Seq("gcol" -> globalHeap(heapObjs(g)),
+        "lists" -> vlenRefs(g, (2, 5), (0, 0), (3, 6)),
+        "mats" -> vlenRefs(g, (2, 10), (2, 11)),
+        "lists.oh" -> dataset(dataspace(3L), vlenSequence(vlenString),
+          contiguous(at("lists"), 48L)),
+        "mats.oh" -> dataset(dataspace(2L), vlenSequence(vlenSequence(signed(4, 32))),
+          contiguous(at("mats"), 32L)),
+        "root" -> group("lists" -> at("lists.oh"), "mats" -> at("mats.oh")))
     }
-    def build(gAddr: Long, listsAddr: Long, matsAddr: Long,
-              listsOH: Long, matsOH: Long, rootOH: Long): Seq[Array[Byte]] = {
-      val listsData = descs(gAddr, (2, 5), (0, 0), (3, 6))
-      val matsData = descs(gAddr, (2, 10), (2, 11))
-      val listsBytes = ohdr2(msg2(0x01, dspace2(3L)),
-        msg2(0x03, dtypeVlenSeq(dtypeVlenStr)), layoutV4Contig(listsAddr, 48L))
-      val matsBytes = ohdr2(msg2(0x01, dspace2(2L)),
-        msg2(0x03, dtypeVlenSeq(dtypeVlenSeq(dtypeInt32))),
-        layoutV4Contig(matsAddr, 32L))
-      val rootBytes = ohdr2(link("lists", listsOH), link("mats", matsOH))
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      sb.putLong(0L).putLong(-1L)
-      sb.putLong(rootOH + rootBytes.length).putLong(rootOH).putInt(0)
-      Seq(ck(sb.array()), gcol(gAddr), listsData, matsData,
-        listsBytes, matsBytes, rootBytes)
-    }
-    val sizes = build(0, 0, 0, 0, 0, 0).map(_.length)
-    val starts = sizes.scanLeft(0L)(_ + _)
-    val parts = build(starts(1), starts(2), starts(3), starts(4),
-      starts(5), starts(6))
-    val f = new FileOutputStream(path)
-    parts.foreach(f.write); f.close()
   }
 }

@@ -1,15 +1,12 @@
 package graft.sources
 
-import java.io.FileOutputStream
-import java.nio.{ByteBuffer, ByteOrder}
-
 /** Deterministic planted HDF5 file with two SCALEOFFSET-FILTERED
   * datasets — the integration fixture for [[Scaleoffset]] behind
-  * `q_hdf5_scaleoffset` and Hdf5Spec (the [[Hdf5PlantedNbit]] pattern:
-  * written byte-by-byte from the public format spec — superblock v3,
-  * OHDR v2, layout v4 SINGLE-CHUNK index with the filtered-size field,
-  * v2 filter-pipeline message carrying the filter's full 20-word
-  * client data).
+  * `q_hdf5_scaleoffset` and Hdf5Spec (written byte-by-byte from the
+  * public format spec through [[Hdf5Bytes]] — superblock v3, OHDR v2,
+  * layout v4 SINGLE-CHUNK index with the filtered-size field, v2
+  * filter-pipeline message carrying the filter's full 20-word client
+  * data).
   *
   *  - `packed_i16` int16[48], integer scale type, auto minbits, no fill:
   *    closed form ((7t²+3t) mod 199) − 60, spanning negatives so the
@@ -53,95 +50,20 @@ object Hdf5PlantedScaleoffset {
     else (kOf(t) - kMin).toDouble / 100.0 + kMin / 100.0
 
   def write(path: String): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ck(img: Array[Byte]): Array[Byte] = {
-      val c = Hdf5.lookup3(img, 0, img.length - 4, 0)
-      img(img.length - 4) = (c & 0xFF).toByte
-      img(img.length - 3) = ((c >> 8) & 0xFF).toByte
-      img(img.length - 2) = ((c >> 16) & 0xFF).toByte
-      img(img.length - 1) = ((c >> 24) & 0xFF).toByte
-      img
+    import Hdf5Bytes._
+    val rawI16 = buf(48 * 2)
+    (0 until 48).foreach(t => rawI16.putShort(valueI16(t).toShort))
+    val chunkI16 = Scaleoffset.encode(rawI16.array(), ClientDataI16)
+    val chunkF64 = Scaleoffset.encode(f64s((0 until 40).map(valueF64): _*), ClientDataF64)
+    assemble(path) { at =>
+      Seq("i16" -> chunkI16, "f64" -> chunkF64,
+        "i16.oh" -> dataset(dataspace(48L), signed(2, 16),
+          singleChunk(48, chunkI16.length.toLong, at("i16")),
+          message(0x0B, filters(Hdf5.FilterScaleoffset -> ClientDataI16))),
+        "f64.oh" -> dataset(dataspace(40L), float64,
+          singleChunk(40, chunkF64.length.toLong, at("f64")),
+          message(0x0B, filters(Hdf5.FilterScaleoffset -> ClientDataF64))),
+        "root" -> group("packed_i16" -> at("i16.oh"), "packed_f64" -> at("f64.oh")))
     }
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dspace1(n: Long): Array[Byte] =
-      buf(4 + 8).put(2.toByte).put(1.toByte).put(0.toByte).put(1.toByte)
-        .putLong(n).array()
-    // fixed-point, signed, little-endian, 2 bytes, full 16-bit precision
-    val dtypeInt16 = buf(12).put(0x10.toByte).put(0x08.toByte).put(0.toByte)
-      .put(0.toByte).putInt(2).putShort(0).putShort(16).array()
-    // IEEE float64 LE (same message as Hdf5Planted.dtypeDouble)
-    val dtypeDouble = buf(20).put(0x11.toByte).put(0.toByte).put(0x20.toByte)
-      .put(0.toByte).putInt(8).putShort(0).putShort(64)
-      .put(52.toByte).put(11.toByte).put(0.toByte).put(52.toByte)
-      .putInt(1023).array()
-    def link(name: String, addr: Long): Array[Byte] = {
-      val nm = name.getBytes("ASCII")
-      msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-        .put(nm.length.toByte).put(nm).putLong(addr).array())
-    }
-    def layoutV4SingleFiltered(chunkLen: Int, elemSize: Int, storedSize: Long,
-                               addr: Long): Array[Byte] = {
-      val b = buf(5 + 2 + 1 + 8 + 4 + 8)
-      b.put(4.toByte).put(2.toByte) // version 4, class chunked
-        .put(0x02.toByte) // flags: single-chunk-with-filter
-        .put(1.toByte).put(2.toByte) // rank 1, 2-byte dim encoding
-        .putShort(chunkLen.toShort)
-        .put(1.toByte) // index type: single chunk
-        .putLong(storedSize).putInt(0) // filtered size + filter mask
-        .putLong(addr)
-      msg2(0x08, b.array())
-    }
-    def filterMsg(cd: Seq[Int]): Array[Byte] = {
-      val b = buf(2 + 2 + 2 + 2 + 4 * cd.length)
-      b.put(2.toByte).put(1.toByte) // version 2, one filter
-        .putShort(Hdf5.FilterScaleoffset.toShort).putShort(0.toShort)
-        .putShort(cd.length.toShort)
-      cd.foreach(b.putInt)
-      msg2(0x0B, b.array())
-    }
-
-    val rawI16 = {
-      val b = buf(48 * 2)
-      (0 until 48).foreach(t => b.putShort(valueI16(t).toShort))
-      b.array()
-    }
-    val chunkI16 = Scaleoffset.encode(rawI16, ClientDataI16)
-    val rawF64 = {
-      val b = buf(40 * 8)
-      (0 until 40).foreach(t => b.putDouble(valueF64(t)))
-      b.array()
-    }
-    val chunkF64 = Scaleoffset.encode(rawF64, ClientDataF64)
-
-    def build(c1: Long, c2: Long, ds1: Long, ds2: Long,
-              rootOH: Long): Seq[Array[Byte]] = {
-      val ds1Bytes = ohdr2(msg2(0x01, dspace1(48)), msg2(0x03, dtypeInt16),
-        layoutV4SingleFiltered(48, 2, chunkI16.length.toLong, c1),
-        filterMsg(ClientDataI16))
-      val ds2Bytes = ohdr2(msg2(0x01, dspace1(40)), msg2(0x03, dtypeDouble),
-        layoutV4SingleFiltered(40, 8, chunkF64.length.toLong, c2),
-        filterMsg(ClientDataF64))
-      val rootBytes = ohdr2(link("packed_i16", ds1), link("packed_f64", ds2))
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      sb.putLong(0L).putLong(-1L)
-      sb.putLong(rootOH + rootBytes.length).putLong(rootOH).putInt(0)
-      Seq(ck(sb.array()), chunkI16, chunkF64, ds1Bytes, ds2Bytes, rootBytes)
-    }
-    val sizes = build(0, 0, 0, 0, 0).map(_.length)
-    val starts = sizes.scanLeft(0L)(_ + _)
-    val parts = build(starts(1), starts(2), starts(3), starts(4), starts(5))
-    val f = new FileOutputStream(path)
-    try parts.foreach(f.write) finally f.close()
   }
 }

@@ -1,12 +1,9 @@
 package graft.sources
 
-import java.io.FileOutputStream
-import java.nio.{ByteBuffer, ByteOrder}
-
 /** Deterministic planted HDF5 file with a SZIP-FILTERED dataset — the
   * integration fixture for [[Szip]] behind `q_hdf5_szip` and Hdf5Spec
-  * (the [[Hdf5Planted]] pattern: written byte-by-byte from the public
-  * format spec — superblock v3, OHDR v2, layout v4 SINGLE-CHUNK index
+  * (written byte-by-byte from the public format spec through
+  * [[Hdf5Bytes]] — superblock v3, OHDR v2, layout v4 SINGLE-CHUNK index
   * with the filtered-size field, v2 filter-pipeline message).
   *
   * Contents: `counts` int32[48], one szip-filtered chunk with client
@@ -23,84 +20,15 @@ object Hdf5PlantedSzip {
   def value(t: Int): Int = (3 * t * t + 7 * t) % 97
 
   def write(path: String): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ck(img: Array[Byte]): Array[Byte] = {
-      val c = Hdf5.lookup3(img, 0, img.length - 4, 0)
-      img(img.length - 4) = (c & 0xFF).toByte
-      img(img.length - 3) = ((c >> 8) & 0xFF).toByte
-      img(img.length - 2) = ((c >> 16) & 0xFF).toByte
-      img(img.length - 1) = ((c >> 24) & 0xFF).toByte
-      img
-    }
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    val dspace1x48 = {
-      val b = buf(4 + 8)
-      b.put(2.toByte).put(1.toByte).put(0.toByte).put(1.toByte).putLong(48L)
-      b.array()
-    }
-    val dtypeInt32 = buf(12).put(0x10.toByte).put(0x08.toByte).put(0.toByte)
-      .put(0.toByte).putInt(4).putShort(0).putShort(32).array()
-    def link(name: String, addr: Long): Array[Byte] = {
-      val nm = name.getBytes("ASCII")
-      msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-        .put(nm.length.toByte).put(nm).putLong(addr).array())
-    }
-    // layout v4, chunked, SINGLE CHUNK index with filtered size + mask
-    def layoutV4SingleFiltered(chunkLen: Int, storedSize: Long,
-                               addr: Long): Array[Byte] = {
-      val b = buf(5 + 2 + 1 + 8 + 4 + 8)
-      b.put(4.toByte).put(2.toByte) // version 4, class chunked
-        .put(0x02.toByte) // flags: single-chunk-with-filter
-        .put(1.toByte).put(2.toByte) // rank 1, 2-byte dim encoding
-        .putShort(chunkLen.toShort)
-        .put(1.toByte) // index type: single chunk
-        .putLong(storedSize).putInt(0) // filtered size + filter mask
-        .putLong(addr)
-      msg2(0x08, b.array())
-    }
-    // v2 filter pipeline: szip (id 4) + its 4 client-data words
-    val filterMsg = {
-      val b = buf(2 + 2 + 2 + 2 + 16)
-      b.put(2.toByte).put(1.toByte) // version 2, one filter
-        .putShort(Hdf5.FilterSzip.toShort).putShort(0.toShort) // id, flags
-        .putShort(4.toShort) // client-data count
-      ClientData.foreach(b.putInt)
-      msg2(0x0B, b.array())
-    }
-
+    import Hdf5Bytes._
     // raw little-endian int32 samples -> szip-filtered chunk payload
-    val rawBytes = {
-      val b = buf(48 * 4)
-      (0 until 48).foreach(t => b.putInt(value(t)))
-      b.array()
+    val chunk = Szip.encodeHdf5Chunk(i32s((0 until 48).map(value): _*), ClientData)
+    assemble(path) { at =>
+      Seq("chunk" -> chunk,
+        "counts" -> dataset(dataspace(48L), signed(4, 32),
+          singleChunk(48, chunk.length.toLong, at("chunk")),
+          message(0x0B, filters(Hdf5.FilterSzip -> ClientData))),
+        "root" -> group("counts" -> at("counts")))
     }
-    val chunkData = Szip.encodeHdf5Chunk(rawBytes, ClientData)
-
-    def build(chunkAddr: Long, dsOH: Long, rootOH: Long): Seq[Array[Byte]] = {
-      val dsBytes = ohdr2(msg2(0x01, dspace1x48), msg2(0x03, dtypeInt32),
-        layoutV4SingleFiltered(48, chunkData.length.toLong, chunkAddr),
-        filterMsg)
-      val rootBytes = ohdr2(link("counts", dsOH))
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      sb.putLong(0L).putLong(-1L)
-      sb.putLong(rootOH + rootBytes.length).putLong(rootOH).putInt(0)
-      Seq(ck(sb.array()), chunkData, dsBytes, rootBytes)
-    }
-    val sizes = build(0, 0, 0).map(_.length)
-    val starts = sizes.scanLeft(0L)(_ + _)
-    val parts = build(starts(1), starts(2), starts(3))
-    val f = new FileOutputStream(path)
-    try parts.foreach(f.write) finally f.close()
   }
 }

@@ -192,16 +192,6 @@ object Lake {
       .drop("_minx", "_maxx", "_miny", "_maxy", "_minz", "_maxz")
   }
 
-  /** [[zOrderWrite]] over three dims. */
-  def zOrderWrite3(df: DataFrame, xCol: String, yCol: String, zCol: String,
-                   path: String, files: Int): Unit = {
-    import org.apache.spark.sql.functions.col
-    zOrderFrame3(df, xCol, yCol, zCol)
-      .repartitionByRange(files, col("zval"))
-      .sortWithinPartitions("zval")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
   /** ANALYZE-style per-column statistics — the stats table a planner
     * (join reorder, broadcast choice) and a data-skipping layer
     * consume: rows, nulls, min/max and exact distinct count per

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Hdf5
+import graft.sources.Hdf5Bytes._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,20 +57,6 @@ class Hdf5Spec extends AnyFunSuite {
     val c = Hdf5.fletcher32(b, b.length)
     b ++ Array[Byte]((c & 0xFF).toByte, ((c >> 8) & 0xFF).toByte,
       ((c >> 16) & 0xFF).toByte, ((c >> 24) & 0xFF).toByte)
-  }
-
-  /** Patch a structure's trailing 4-byte lookup3 metadata checksum
-    * (computed over every byte before the field, initval 0, little-
-    * endian) — the reader verifies it on every "latest" structure. */
-  private def ck(img: Array[Byte]): Array[Byte] = ckAt(img, img.length - 4, img.length - 4)
-  /** Mid-image checksum at `off`, computed over `img[0, covered)`. */
-  private def ckAt(img: Array[Byte], off: Int, covered: Int): Array[Byte] = {
-    val c = Hdf5.lookup3(img, 0, covered, 0)
-    img(off) = (c & 0xFF).toByte
-    img(off + 1) = ((c >> 8) & 0xFF).toByte
-    img(off + 2) = ((c >> 16) & 0xFF).toByte
-    img(off + 3) = ((c >> 24) & 0xFF).toByte
-    img
   }
 
   private def shuffleDeflate(values: Array[Double]): Array[Byte] =
@@ -229,7 +216,8 @@ class Hdf5Spec extends AnyFunSuite {
     bos.write(xb.array())
     assert(bos.size() == eof)
 
-    val f = new FileOutputStream(path); f.write(bos.toByteArray); f.close()
+    val f = new FileOutputStream(path)
+    try f.write(bos.toByteArray) finally f.close()
   }
 
   test("unshuffle inverts the shuffle byte-transposition, remainder intact") {
@@ -393,121 +381,35 @@ class Hdf5Spec extends AnyFunSuite {
     * format spec, with every metadata checksum computed for real (the
     * reader verifies them all). */
   private def writeLatest(path: String): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      // flags 0x01: 2-byte size-of-chunk-0
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dtypeDouble: Array[Byte] =
-      buf(20).put(0x11.toByte).put(0.toByte).put(0x20.toByte).put(0.toByte)
-        .putInt(8).putShort(0).putShort(64)
-        .put(52.toByte).put(11.toByte).put(0.toByte).put(52.toByte)
-        .putInt(1023).array()
-    def dspace2(dims: Long*): Array[Byte] = {
-      val b = buf(4 + 8 * dims.length)
-      b.put(2.toByte).put(dims.length.toByte).put(0.toByte)
-        .put((if (dims.isEmpty) 0 else 1).toByte) // scalar vs simple
-      dims.foreach(b.putLong); b.array()
-    }
-    def attr3(name: String, value: Double): Array[Byte] = {
-      val nm = name.getBytes("ASCII") :+ 0.toByte
-      val dt = dtypeDouble; val ds = dspace2()
-      val b = buf(9 + nm.length + dt.length + ds.length + 8)
-      b.put(3.toByte).put(0.toByte).putShort(nm.length.toShort)
-        .putShort(dt.length.toShort).putShort(ds.length.toShort)
-        .put(0.toByte) // name charset: ASCII
-        .put(nm).put(dt).put(ds).putDouble(value)
-      msg2(0x0C, b.array())
-    }
-    def link(name: String, addr: Long): Array[Byte] = {
-      val nm = name.getBytes("ASCII")
-      msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-        .put(nm.length.toByte).put(nm).putLong(addr).array())
-    }
-    def layoutV4FixedArray(chunkDims: Seq[Int], fahd: Long): Array[Byte] = {
-      val b = buf(5 + chunkDims.length + 2 + 8)
-      b.put(4.toByte).put(2.toByte).put(0.toByte) // v4, chunked, flags
-        .put(chunkDims.length.toByte).put(1.toByte) // 1-byte dim sizes
-      chunkDims.foreach(d => b.put(d.toByte))
-      b.put(3.toByte).put(10.toByte).putLong(fahd) // fixed array, 2^10 page
-      msg2(0x08, b.array())
-    }
-    def layoutV4Implicit(chunkDims: Seq[Int], addr: Long): Array[Byte] = {
-      val b = buf(5 + chunkDims.length + 1 + 8)
-      b.put(4.toByte).put(2.toByte).put(0.toByte)
-        .put(chunkDims.length.toByte).put(1.toByte)
-      chunkDims.foreach(d => b.put(d.toByte))
-      b.put(2.toByte).putLong(addr) // implicit index
-      msg2(0x08, b.array())
-    }
-    def layoutV4Contig(addr: Long, size: Long): Array[Byte] =
-      msg2(0x08, buf(18).put(4.toByte).put(1.toByte).putLong(addr).putLong(size).array())
-    // shuffle (elem size 8) THEN deflate — the netCDF4-python default
-    // pairing; the reader must invert both, in reverse order
-    def filter2ShuffleDeflate: Array[Byte] =
-      msg2(0x0B, buf(22).put(2.toByte).put(2.toByte)
-        .putShort(2).putShort(0).putShort(1).putInt(8)   // shuffle, elem 8
-        .putShort(1).putShort(0).putShort(1).putInt(6).array()) // deflate, 6
-
-    val chunks = Seq( // row-major fixed-array order, incl. edge padding
-      (0L, 0L, Array(1.0, 2.0)), (0L, 2L, Array(3.0, 0.0)),
-      (1L, 0L, Array(4.0, 5.0)), (1L, 2L, Array(-999.0, 0.0)))
-    val packed = chunks.map { case (_, _, v) => shuffleDeflate(v) }
-
-    def build(cAddrs: Seq[Long], fadb: Long, fahd: Long, xData: Long, yData: Long,
-              tempOH: Long, xOH: Long, yOH: Long, rootOH: Long): Seq[Array[Byte]] = {
+    val packed = Seq( // row-major fixed-array order, incl. edge padding
+      Array(1.0, 2.0), Array(3.0, 0.0), Array(4.0, 5.0), Array(-999.0, 0.0)).map(shuffleDeflate)
+    assemble(path) { at =>
       val fadbBytes = {
         val b = buf(14 + packed.length * 16 + 4)
-        b.put("FADB".getBytes("ASCII")).put(0.toByte).put(1.toByte).putLong(fahd)
-        packed.zip(cAddrs).foreach { case (p, a) =>
-          b.putLong(a).putInt(p.length).putInt(0) // addr, stored size, mask
+        b.put(ascii("FADB")).put(0.toByte).put(1.toByte).putLong(at("fahd"))
+        packed.indices.foreach { i => // addr, stored size, mask
+          b.putLong(at(s"chunk$i")).putInt(packed(i).length).putInt(0)
         }
         ck(b.putInt(0).array()) // checksum
       }
-      val fahdBytes = ck(buf(28).put("FAHD".getBytes("ASCII")).put(0.toByte)
+      val fahdBytes = ck(buf(28).put(ascii("FAHD")).put(0.toByte)
         .put(1.toByte).put(16.toByte).put(10.toByte) // filtered client, 16B entries
-        .putLong(packed.length).putLong(fadb).putInt(0).array())
-      val xBytes = { val b = buf(24); Seq(10.0, 20.0, 30.0).foreach(b.putDouble); b.array() }
-      val yBytes = { // 3 implicit chunks of 2 doubles; last padded
-        val b = buf(48); Seq(1.0, 2.0, 3.0, 4.0, 5.0, 0.0).foreach(b.putDouble); b.array()
-      }
-      val tempBytes = ohdr2(
-        msg2(0x01, dspace2(2L, 3L)), msg2(0x03, dtypeDouble),
-        layoutV4FixedArray(Seq(1, 2), fahd), filter2ShuffleDeflate,
-        attr3("_FillValue", -999.0), attr3("scale_factor", 0.5))
-      val xBytesOH = ohdr2(
-        msg2(0x01, dspace2(3L)), msg2(0x03, dtypeDouble),
-        layoutV4Contig(xData, 24L))
-      val yBytesOH = ohdr2(
-        msg2(0x01, dspace2(5L)), msg2(0x03, dtypeDouble),
-        layoutV4Implicit(Seq(2), yData))
-      val rootBytes = ohdr2(link("temp", tempOH), link("x", xOH), link("y", yOH))
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte) // v3, 8/8, flags
-      sb.putLong(0L).putLong(-1L) // base, superblock extension
-      val eof = rootOH + rootBytes.length
-      sb.putLong(eof).putLong(rootOH).putInt(0) // EOF, root OH, checksum
-      Seq(ck(sb.array()), cat(packed: _*), fadbBytes, fahdBytes, xBytes, yBytes,
-        tempBytes, xBytesOH, yBytesOH, rootBytes)
+        .putLong(packed.length).putLong(at("fadb")).putInt(0).array())
+      numbered("chunk", packed) ++ Seq("fadb" -> fadbBytes, "fahd" -> fahdBytes,
+        "x" -> f64s(10.0, 20.0, 30.0),
+        "y" -> f64s(1.0, 2.0, 3.0, 4.0, 5.0, 0.0), // 3 implicit chunks of 2; last padded
+        // fixed-array index (2^10 page); shuffle (elem size 8) THEN
+        // deflate — the netCDF4-python default pairing; the reader must
+        // invert both, in reverse order
+        "temp.oh" -> dataset(dataspace(2L, 3L), float64,
+          chunked(Seq(1, 2), 3, Array[Byte](10), at("fahd")),
+          message(0x0B, filters(2 -> Seq(8), 1 -> Seq(6))),
+          attribute("_FillValue", float64, f64s(-999.0)),
+          attribute("scale_factor", float64, f64s(0.5))),
+        "x.oh" -> dataset(dataspace(3L), float64, contiguous(at("x"), 24L)),
+        "y.oh" -> dataset(dataspace(5L), float64, implicitChunks(Seq(2), at("y"))),
+        "root" -> group("temp" -> at("temp.oh"), "x" -> at("x.oh"), "y" -> at("y.oh")))
     }
-
-    // pass 1 with zero addresses fixes every block's size; pass 2 is real
-    val sizes = build(packed.map(_ => 0L), 0, 0, 0, 0, 0, 0, 0, 0).map(_.length)
-    val starts = sizes.scanLeft(0L)(_ + _)
-    val cAddrs = packed.scanLeft(starts(1)) { case (a, p) => a + p.length }
-    val parts = build(cAddrs, starts(2), starts(3), starts(4), starts(5),
-      starts(6), starts(7), starts(8), starts(9))
-    val f = new FileOutputStream(path)
-    parts.foreach(f.write); f.close()
   }
 
   // ------- unlimited-dimension ("latest") chunk indexes: EA + v2 B-tree -------
@@ -524,60 +426,6 @@ class Hdf5Spec extends AnyFunSuite {
     *    DEPTH 1 (BTIN root, two BTLF leaves).
     * Byte-by-byte from the public spec; checksums zeroed (unverified). */
   private def writeUnlimited(path: String): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dtypeDouble: Array[Byte] =
-      buf(20).put(0x11.toByte).put(0.toByte).put(0x20.toByte).put(0.toByte)
-        .putInt(8).putShort(0).putShort(64)
-        .put(52.toByte).put(11.toByte).put(0.toByte).put(52.toByte)
-        .putInt(1023).array()
-    def dspaceUnlimited(dims: Seq[Long]): Array[Byte] = {
-      // flags bit 0: max dims stored; every max dim = unlimited (0xFF..)
-      val b = buf(4 + 16 * dims.length)
-      b.put(2.toByte).put(dims.length.toByte).put(1.toByte).put(1.toByte)
-      dims.foreach(b.putLong)
-      dims.foreach(_ => b.putLong(-1L))
-      b.array()
-    }
-    def link(name: String, addr: Long): Array[Byte] = {
-      val nm = name.getBytes("ASCII")
-      msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-        .put(nm.length.toByte).put(nm).putLong(addr).array())
-    }
-    def filter2Deflate: Array[Byte] =
-      msg2(0x0B, buf(12).put(2.toByte).put(1.toByte)
-        .putShort(1).putShort(0).putShort(1).putInt(6).array())
-    def layoutV4EArray(chunkDims: Seq[Int], eahd: Long): Array[Byte] = {
-      val b = buf(5 + chunkDims.length + 1 + 5 + 8)
-      b.put(4.toByte).put(2.toByte).put(0.toByte)
-        .put(chunkDims.length.toByte).put(1.toByte)
-      chunkDims.foreach(d => b.put(d.toByte))
-      b.put(4.toByte) // index type: extensible array
-      // creation params (repeated in EAHD): max bits, idx elmts, min ptrs,
-      // min elmts, page bits
-      b.put(16.toByte).put(2.toByte).put(4.toByte).put(2.toByte).put(10.toByte)
-      b.putLong(eahd)
-      msg2(0x08, b.array())
-    }
-    def layoutV4Bt2(chunkDims: Seq[Int], bthd: Long): Array[Byte] = {
-      val b = buf(5 + chunkDims.length + 1 + 6 + 8)
-      b.put(4.toByte).put(2.toByte).put(0.toByte)
-        .put(chunkDims.length.toByte).put(1.toByte)
-      chunkDims.foreach(d => b.put(d.toByte))
-      b.put(5.toByte) // index type: version-2 B-tree
-      b.putInt(512).put(100.toByte).put(40.toByte) // node size, split, merge
-      b.putLong(bthd)
-      msg2(0x08, b.array())
-    }
-
     // --- ts: values i*1.5, chunks of 2, chunk 5 unallocated
     val tsChunks = (0 until 5).map(c => deflate(Array(c * 3.0, c * 3.0 + 1.5)))
     val elemSize = 14 // addr(8) + stored size(2) + filter mask(4)
@@ -602,15 +450,16 @@ class Hdf5Spec extends AnyFunSuite {
     val deepCoords = for (r <- 0 until 2; c <- 0 until 6) yield (r, c * 2)
     val deepChunks = deepCoords.map { case (r, c) => deepChunk(r, c) }
 
-    def build(tsAddrs: Seq[Long], eadbA: Long, eadbB: Long, eaib: Long, eahd: Long,
-              gAddrs: Seq[Long], gLeaf: Long, gHd: Long,
-              dAddrs: Seq[Long], dLeafA: Long, dLeafB: Long, dIn: Long, dHd: Long,
-              tsOH: Long, gOH: Long, dOH: Long, rootOH: Long): Seq[Array[Byte]] = {
+    assemble(path) { at =>
+      val tsAddrs = tsChunks.indices.map(i => at(s"ts$i"))
+      val gAddrs = gridChunks.indices.map(i => at(s"grid$i"))
+      val dAddrs = deepChunks.indices.map(i => at(s"deep$i"))
+      val (eadbA, eadbB, eahd) = (at("eadbA"), at("eadbB"), at("eahd"))
       // EA data blocks: A = chunks 2,3 (superblock 0); B = chunks 4,5
       // (superblock 1; chunk 5 unallocated)
       def eadb(selfHdr: Long, elems: Seq[(Long, Int)]): Array[Byte] = {
         val b = buf(4 + 1 + 1 + 8 + arrOffSize + elems.length * elemSize + 4)
-        b.put("EADB".getBytes("ASCII")).put(0.toByte).put(1.toByte).putLong(selfHdr)
+        b.put(ascii("EADB")).put(0.toByte).put(1.toByte).putLong(selfHdr)
         b.putShort(0) // block offset (2-byte arr-off)
         elems.foreach { case (a, s) => eaElem(b, a, s) }
         ck(b.putInt(0).array())
@@ -625,7 +474,7 @@ class Hdf5Spec extends AnyFunSuite {
         // geometry for (minPtrs=4, maxBits=16, minElmts=2): 6 data-block
         // slots + 4 secondary-block slots in the index block
         val b = buf(4 + 1 + 1 + 8 + 2 * elemSize + 6 * 8 + 4 * 8 + 4)
-        b.put("EAIB".getBytes("ASCII")).put(0.toByte).put(1.toByte).putLong(eahd)
+        b.put(ascii("EAIB")).put(0.toByte).put(1.toByte).putLong(eahd)
         eaElem(b, tsAddrs(0), tsChunks(0).length)
         eaElem(b, tsAddrs(1), tsChunks(1).length)
         b.putLong(eadbA).putLong(eadbB)
@@ -635,16 +484,16 @@ class Hdf5Spec extends AnyFunSuite {
       }
       val eahdBytes = {
         val b = buf(4 + 2 + 6 + 6 * 8 + 8 + 4)
-        b.put("EAHD".getBytes("ASCII")).put(0.toByte).put(1.toByte)
+        b.put(ascii("EAHD")).put(0.toByte).put(1.toByte)
         b.put(elemSize.toByte).put(16.toByte).put(2.toByte) // elem size, max bits, idx elmts
         b.put(2.toByte).put(4.toByte).put(10.toByte) // min elmts, min ptrs, page bits
         (0 until 6).foreach(_ => b.putLong(0L)) // stats
-        ck(b.putLong(eaib).putInt(0).array())
+        ck(b.putLong(at("eaib")).putInt(0).array())
       }
       // grid: depth-0 v2 B-tree, record type 10 (addr + 2 scaled offsets)
       val gLeafBytes = {
         val b = buf(6 + 4 * 24 + 4)
-        b.put("BTLF".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+        b.put(ascii("BTLF")).put(0.toByte).put(10.toByte)
         Seq((0, 0), (0, 1), (1, 0), (1, 1)).zip(gAddrs).foreach { case ((sr, sc), a) =>
           b.putLong(a).putLong(sr.toLong).putLong(sc.toLong)
         }
@@ -652,15 +501,15 @@ class Hdf5Spec extends AnyFunSuite {
       }
       val gHdBytes = {
         val b = buf(4 + 2 + 4 + 2 + 2 + 2 + 8 + 2 + 8 + 4)
-        b.put("BTHD".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+        b.put(ascii("BTHD")).put(0.toByte).put(10.toByte)
         b.putInt(512).putShort(24).putShort(0).put(100.toByte).put(40.toByte)
-        b.putLong(gLeaf).putShort(4).putLong(4L).putInt(0)
+        b.putLong(at("gLeaf")).putShort(4).putLong(4L).putInt(0)
         ck(b.array())
       }
       // deep: depth-1 tree — leaf A (5 records), root record, leaf B (6)
       def dLeaf(recs: Seq[((Int, Int), Long)]): Array[Byte] = {
         val b = buf(6 + recs.length * 24 + 4)
-        b.put("BTLF".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+        b.put(ascii("BTLF")).put(0.toByte).put(10.toByte)
         recs.foreach { case ((sr, sc), a) =>
           b.putLong(a).putLong(sr.toLong).putLong(sc.toLong)
         }
@@ -673,56 +522,34 @@ class Hdf5Spec extends AnyFunSuite {
       val dInBytes = {
         // leaf capacity (512-10)/24 = 20 -> 1-byte record counts
         val b = buf(6 + 24 + 2 * (8 + 1) + 4)
-        b.put("BTIN".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+        b.put(ascii("BTIN")).put(0.toByte).put(10.toByte)
         b.putLong(dRootRec._2).putLong(dRootRec._1._1.toLong).putLong(dRootRec._1._2.toLong)
-        b.putLong(dLeafA).put(5.toByte)
-        b.putLong(dLeafB).put(6.toByte)
+        b.putLong(at("dLeafA")).put(5.toByte)
+        b.putLong(at("dLeafB")).put(6.toByte)
         ck(b.putInt(0).array())
       }
       val dHdBytes = {
         val b = buf(4 + 2 + 4 + 2 + 2 + 2 + 8 + 2 + 8 + 4)
-        b.put("BTHD".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+        b.put(ascii("BTHD")).put(0.toByte).put(10.toByte)
         b.putInt(512).putShort(24).putShort(1).put(100.toByte).put(40.toByte)
-        b.putLong(dIn).putShort(1).putLong(12L).putInt(0)
+        b.putLong(at("dIn")).putShort(1).putLong(12L).putInt(0)
         ck(b.array())
       }
-      val tsOHBytes = ohdr2(
-        msg2(0x01, dspaceUnlimited(Seq(11L))), msg2(0x03, dtypeDouble),
-        layoutV4EArray(Seq(2), eahd), filter2Deflate)
-      val gOHBytes = ohdr2(
-        msg2(0x01, dspaceUnlimited(Seq(3L, 4L))), msg2(0x03, dtypeDouble),
-        layoutV4Bt2(Seq(2, 2), gHd))
-      val dOHBytes = ohdr2(
-        msg2(0x01, dspaceUnlimited(Seq(2L, 12L))), msg2(0x03, dtypeDouble),
-        layoutV4Bt2(Seq(1, 2), dHd))
-      val rootBytes = ohdr2(link("deep", dOH), link("grid", gOH), link("ts", tsOH))
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      sb.putLong(0L).putLong(-1L)
-      val eof = rootOH + rootBytes.length
-      sb.putLong(eof).putLong(rootOH).putInt(0)
-      Seq(ck(sb.array()), cat(tsChunks: _*), eadbABytes, eadbBBytes, eaibBytes,
-        eahdBytes, cat(gridChunks: _*), gLeafBytes, gHdBytes,
-        cat(deepChunks: _*), dLeafABytes, dLeafBBytes, dInBytes, dHdBytes,
-        tsOHBytes, gOHBytes, dOHBytes, rootBytes)
+      numbered("ts", tsChunks) ++ Seq("eadbA" -> eadbABytes, "eadbB" -> eadbBBytes,
+        "eaib" -> eaibBytes, "eahd" -> eahdBytes) ++
+        numbered("grid", gridChunks) ++ Seq("gLeaf" -> gLeafBytes, "gHd" -> gHdBytes) ++
+        numbered("deep", deepChunks) ++ Seq("dLeafA" -> dLeafABytes, "dLeafB" -> dLeafBBytes,
+          "dIn" -> dInBytes, "dHd" -> dHdBytes,
+          // creation params (repeated in EAHD): max bits, idx elmts, min
+          // ptrs, min elmts, page bits
+          "ts.oh" -> dataset(dataspaceUnlimited(11L), float64,
+            earrayChunks(Seq(2), Seq(16, 2, 4, 2, 10), eahd), message(0x0B, filters(1 -> Seq(6)))),
+          "grid.oh" -> dataset(dataspaceUnlimited(3L, 4L), float64,
+            btreeChunks(Seq(2, 2), 512, at("gHd"))),
+          "deep.oh" -> dataset(dataspaceUnlimited(2L, 12L), float64,
+            btreeChunks(Seq(1, 2), 512, at("dHd"))),
+          "root" -> group("deep" -> at("deep.oh"), "grid" -> at("grid.oh"), "ts" -> at("ts.oh")))
     }
-
-    val zeroTs = tsChunks.map(_ => 0L)
-    val zeroG = gridChunks.map(_ => 0L)
-    val zeroD = deepChunks.map(_ => 0L)
-    val sizes = build(zeroTs, 0, 0, 0, 0, zeroG, 0, 0, zeroD, 0, 0, 0, 0,
-      0, 0, 0, 0).map(_.length)
-    val starts = sizes.scanLeft(0L)(_ + _)
-    val tsAddrs = tsChunks.scanLeft(starts(1)) { case (a, p) => a + p.length }
-    val gAddrs = gridChunks.indices.map(i => starts(6) + i * 32L)
-    val dAddrs = deepChunks.indices.map(i => starts(9) + i * 16L)
-    val parts = build(tsAddrs, starts(2), starts(3), starts(4), starts(5),
-      gAddrs, starts(7), starts(8), dAddrs, starts(10), starts(11),
-      starts(12), starts(13), starts(14), starts(15), starts(16), starts(17))
-    val f = new FileOutputStream(path)
-    parts.foreach(f.write); f.close()
   }
 
   /** Parameterised 1-D extensible-array file: double[2*nChunks] chunked
@@ -738,21 +565,6 @@ class Hdf5Spec extends AnyFunSuite {
     * elements + 4-byte page checksums, and page-init bitmaps ahead of
     * the addresses in owning secondary blocks. */
   private def writeEaN(path: String, nChunks: Int, pageBits: Int = 10): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dtypeDouble: Array[Byte] =
-      buf(20).put(0x11.toByte).put(0.toByte).put(0x20.toByte).put(0.toByte)
-        .putInt(8).putShort(0).putShort(64)
-        .put(52.toByte).put(11.toByte).put(0.toByte).put(52.toByte)
-        .putInt(1023).array()
     // EA geometry for (maxBits=16, idxElmts=2, minPtrs=4, minElmts=2)
     val (idxE, minE, minP, maxBits) = (2, 2, 4, 16)
     val iblkNsblks = 4          // 2 * log2(minPtrs)
@@ -777,20 +589,17 @@ class Hdf5Spec extends AnyFunSuite {
       }
       s += 1
     }
-    val chunkBytes = 16 // [2] doubles
-    def build(chunkAddrs: Seq[Long], dblkAddrs: Seq[Long], sblkAddrs: Seq[Long],
-              eaib: Long, eahd: Long, dsOH: Long, rootOH: Long): Seq[Array[Byte]] = {
-      val chunkData = (0 until nChunks).map { c =>
-        val b = buf(16); b.putDouble(2 * c + 0.25).putDouble(2 * c + 1.25); b.array()
-      }
+    val chunkData = (0 until nChunks).map(c => f64s(2 * c + 0.25, 2 * c + 1.25)) // [2] doubles
+    assemble(path) { at =>
+      val eahd = at("eahd")
       val pageN = 1 << pageBits
-      val dblkBytes = blocks.zipWithIndex.map { case (blk, bi) =>
+      val dblkBytes = blocks.map { blk =>
         val n = dblkNelmts(blk.sblk)
         def addrAt(i: Int): Long =
-          if (i < blk.elems.length) chunkAddrs(blk.elems(i)) else -1L
+          if (i < blk.elems.length) at(s"chunk${blk.elems(i)}") else -1L
         if (n <= pageN) {
           val b = buf(4 + 2 + 8 + arrOff + n * 8 + 4)
-          b.put("EADB".getBytes("ASCII")).put(0.toByte).put(0.toByte).putLong(eahd)
+          b.put(ascii("EADB")).put(0.toByte).put(0.toByte).putLong(eahd)
           b.putShort(0) // block offset
           (0 until n).foreach(i => b.putLong(addrAt(i)))
           ck(b.putInt(0).array())
@@ -800,7 +609,7 @@ class Hdf5Spec extends AnyFunSuite {
           val npages = n / pageN
           val hdrSize = 4 + 2 + 8 + arrOff + 4
           val b = buf(hdrSize + npages * (pageN * 8 + 4))
-          b.put("EADB".getBytes("ASCII")).put(0.toByte).put(0.toByte).putLong(eahd)
+          b.put(ascii("EADB")).put(0.toByte).put(0.toByte).putLong(eahd)
           b.putShort(0).putInt(0) // block offset, header checksum
           for (j <- 0 until npages) {
             (0 until pageN).foreach(i => b.putLong(addrAt(j * pageN + i)))
@@ -810,11 +619,7 @@ class Hdf5Spec extends AnyFunSuite {
           ckAt(img, hdrSize - 4, hdrSize - 4) // header checksum
           for (j <- 0 until npages) { // page checksum: that page's elements
             val ps = hdrSize + j * (pageN * 8 + 4)
-            val c = Hdf5.lookup3(img, ps, pageN * 8, 0)
-            img(ps + pageN * 8) = (c & 0xFF).toByte
-            img(ps + pageN * 8 + 1) = ((c >> 8) & 0xFF).toByte
-            img(ps + pageN * 8 + 2) = ((c >> 16) & 0xFF).toByte
-            img(ps + pageN * 8 + 3) = ((c >> 24) & 0xFF).toByte
+            ckAt(img, ps + pageN * 8, pageN * 8, from = ps)
           }
           img
         }
@@ -828,81 +633,42 @@ class Hdf5Spec extends AnyFunSuite {
         val dnel = dblkNelmts(sb)
         val bitmapBytes = if (dnel > pageN) nd * ((dnel / pageN + 7) / 8) else 0
         val b = buf(4 + 2 + 8 + arrOff + bitmapBytes + nd * 8 + 4)
-        b.put("EASB".getBytes("ASCII")).put(0.toByte).put(0.toByte).putLong(eahd)
+        b.put(ascii("EASB")).put(0.toByte).put(0.toByte).putLong(eahd)
         b.putShort(0)
         (0 until bitmapBytes).foreach(_ => b.put(0xFF.toByte)) // all pages init
         val mine = blocks.zipWithIndex.filter(_._1.sblk == sb)
         (0 until nd).foreach { i =>
-          b.putLong(if (i < mine.length) dblkAddrs(mine(i)._2) else -1L)
+          b.putLong(if (i < mine.length) at(s"dblk${mine(i)._2}") else -1L)
         }
         ck(b.putInt(0).array())
       }
       val eaibBytes = {
         val b = buf(4 + 2 + 8 + idxE * 8 + ndblkAddrsIblk * 8 + nsblkAddrs * 8 + 4)
-        b.put("EAIB".getBytes("ASCII")).put(0.toByte).put(0.toByte).putLong(eahd)
-        (0 until idxE).foreach(i => b.putLong(if (i < direct) chunkAddrs(i) else -1L))
+        b.put(ascii("EAIB")).put(0.toByte).put(0.toByte).putLong(eahd)
+        (0 until idxE).foreach(i => b.putLong(if (i < direct) at(s"chunk$i") else -1L))
         val directBlks = blocks.zipWithIndex.filter(_._1.sblk < iblkNsblks)
         (0 until ndblkAddrsIblk).foreach { i =>
-          b.putLong(if (i < directBlks.length) dblkAddrs(directBlks(i)._2) else -1L)
+          b.putLong(if (i < directBlks.length) at(s"dblk${directBlks(i)._2}") else -1L)
         }
         (0 until nsblkAddrs).foreach { i =>
-          b.putLong(if (i < secSblks.length) sblkAddrs(i) else -1L)
+          b.putLong(if (i < secSblks.length) at(s"sblk$i") else -1L)
         }
         ck(b.putInt(0).array())
       }
       val eahdBytes = {
         val b = buf(4 + 2 + 6 + 6 * 8 + 8 + 4)
-        b.put("EAHD".getBytes("ASCII")).put(0.toByte).put(0.toByte)
+        b.put(ascii("EAHD")).put(0.toByte).put(0.toByte)
         b.put(8.toByte).put(maxBits.toByte).put(idxE.toByte)
         b.put(minE.toByte).put(minP.toByte).put(pageBits.toByte)
         (0 until 6).foreach(_ => b.putLong(0L))
-        ck(b.putLong(eaib).putInt(0).array())
+        ck(b.putLong(at("eaib")).putInt(0).array())
       }
-      val layout = {
-        val b = buf(5 + 1 + 1 + 5 + 8)
-        b.put(4.toByte).put(2.toByte).put(0.toByte).put(1.toByte).put(1.toByte)
-        b.put(2.toByte) // chunk dim [2]
-        b.put(4.toByte) // index type: extensible array
-        b.put(maxBits.toByte).put(idxE.toByte).put(minP.toByte)
-          .put(minE.toByte).put(pageBits.toByte)
-        b.putLong(eahd)
-        msg2(0x08, b.array())
-      }
-      val dspace = {
-        val b = buf(4 + 16)
-        b.put(2.toByte).put(1.toByte).put(1.toByte).put(1.toByte)
-        b.putLong(2L * nChunks); b.putLong(-1L)
-        b.array()
-      }
-      val dsOHBytes = ohdr2(msg2(0x01, dspace), msg2(0x03, dtypeDouble), layout)
-      val link = {
-        val nm = "ea".getBytes("ASCII")
-        msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-          .put(nm.length.toByte).put(nm).putLong(dsOH).array())
-      }
-      val rootBytes = ohdr2(link)
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      sb.putLong(0L).putLong(-1L)
-      sb.putLong(rootOH + rootBytes.length).putLong(rootOH).putInt(0)
-      Seq(ck(sb.array())) ++ chunkData ++ dblkBytes ++ sblkBytes ++
-        Seq(eaibBytes, eahdBytes, dsOHBytes, rootBytes)
+      numbered("chunk", chunkData) ++ numbered("dblk", dblkBytes.toSeq) ++
+        numbered("sblk", sblkBytes.toSeq) ++ Seq("eaib" -> eaibBytes, "eahd" -> eahdBytes,
+          "ds" -> dataset(dataspaceUnlimited(2L * nChunks), float64,
+            earrayChunks(Seq(2), Seq(maxBits, idxE, minP, minE, pageBits), eahd)),
+          "root" -> group("ea" -> at("ds")))
     }
-    val nBlk = blocks.length
-    val nSec = blocks.map(_.sblk).filter(_ >= iblkNsblks).distinct.length
-    val zeros = build(Seq.fill(nChunks)(0L), Seq.fill(nBlk)(0L), Seq.fill(nSec)(0L),
-      0, 0, 0, 0)
-    val starts = zeros.map(_.length).scanLeft(0L)(_ + _)
-    val chunkAddrs = (0 until nChunks).map(i => starts(1 + i))
-    val dblkAddrs = (0 until nBlk).map(i => starts(1 + nChunks + i))
-    val sblkAddrs = (0 until nSec).map(i => starts(1 + nChunks + nBlk + i))
-    val parts = build(chunkAddrs, dblkAddrs, sblkAddrs,
-      starts(1 + nChunks + nBlk + nSec), starts(2 + nChunks + nBlk + nSec),
-      starts(3 + nChunks + nBlk + nSec), starts(4 + nChunks + nBlk + nSec))
-    val f = new FileOutputStream(path)
-    parts.foreach(f.write); f.close()
   }
 
   test("extensible array: geometry sweep across index block, data blocks, secondary blocks") {
@@ -940,21 +706,6 @@ class Hdf5Spec extends AnyFunSuite {
     * tree with evenly split leaves — exercising the child-pointer
     * record-count width math across leaf counts. */
   private def writeBt2N(path: String, nChunks: Int): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dtypeDouble: Array[Byte] =
-      buf(20).put(0x11.toByte).put(0.toByte).put(0x20.toByte).put(0.toByte)
-        .putInt(8).putShort(0).putShort(64)
-        .put(52.toByte).put(11.toByte).put(0.toByte).put(52.toByte)
-        .putInt(1023).array()
     val nodeSize = 512
     val recSize = 8 + 16 // address + 2 scaled offsets
     val leafCap = (nodeSize - 10) / recSize // 20
@@ -974,89 +725,44 @@ class Hdf5Spec extends AnyFunSuite {
     val rootRecs: Seq[Int] =
       if (leaves.length == 1) Nil
       else leaves.dropRight(1).map(l => l.last + 1)
-    def build(chunkAddrs: Seq[Long], leafAddrs: Seq[Long], rootAddr: Long,
-              hd: Long, dsOH: Long, rootOH: Long): Seq[Array[Byte]] = {
-      val chunkData = (0 until nChunks).map { c =>
-        val b = buf(16); b.putDouble(c.toDouble).putDouble(100.0 + c); b.array()
-      }
+    val chunkData = (0 until nChunks).map(c => f64s(c.toDouble, 100.0 + c))
+    assemble(path) { at =>
       def rec(b: ByteBuffer, c: Int): Unit = {
-        b.putLong(chunkAddrs(c)); b.putLong(0L); b.putLong(c.toLong)
+        b.putLong(at(s"chunk$c")); b.putLong(0L); b.putLong(c.toLong)
       }
       val leafBytes = leaves.map { rs =>
         val b = buf(6 + rs.length * recSize + 4)
-        b.put("BTLF".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+        b.put(ascii("BTLF")).put(0.toByte).put(10.toByte)
         rs.foreach(rec(b, _))
         ck(b.putInt(0).array())
       }
-      val rootBytes0 =
-        if (leaves.length == 1) leafBytes.head
-        else {
-          // internal: records, then child pointers with 1-byte counts
-          val b = buf(6 + rootRecs.length * recSize +
-            leaves.length * (8 + 1) + 4)
-          b.put("BTIN".getBytes("ASCII")).put(0.toByte).put(10.toByte)
-          rootRecs.foreach(rec(b, _))
-          leaves.zipWithIndex.foreach { case (l, i) =>
-            b.putLong(leafAddrs(i)); b.put(l.length.toByte)
-          }
-          ck(b.putInt(0).array())
+      // internal root: records, then child pointers with 1-byte counts
+      val internal = if (leaves.length == 1) Nil else Seq("internal" -> {
+        val b = buf(6 + rootRecs.length * recSize + leaves.length * (8 + 1) + 4)
+        b.put(ascii("BTIN")).put(0.toByte).put(10.toByte)
+        rootRecs.foreach(rec(b, _))
+        leaves.zipWithIndex.foreach { case (l, i) =>
+          b.putLong(at(s"leaf$i")); b.put(l.length.toByte)
         }
+        ck(b.putInt(0).array())
+      })
       val hdBytes = {
         val b = buf(4 + 2 + 4 + 2 + 2 + 2 + 8 + 2 + 8 + 4)
-        b.put("BTHD".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+        b.put(ascii("BTHD")).put(0.toByte).put(10.toByte)
         b.putInt(nodeSize).putShort(recSize.toShort)
           .putShort(if (leaves.length == 1) 0 else 1)
           .put(100.toByte).put(40.toByte)
-        b.putLong(rootAddr)
+        b.putLong(at(if (leaves.length == 1) "leaf0" else "internal"))
           .putShort((if (leaves.length == 1) nChunks else rootRecs.length).toShort)
         b.putLong(nChunks.toLong).putInt(0)
         ck(b.array())
       }
-      val layout = {
-        val b = buf(5 + 2 + 1 + 6 + 8)
-        b.put(4.toByte).put(2.toByte).put(0.toByte).put(2.toByte).put(1.toByte)
-        b.put(2.toByte).put(1.toByte) // chunk dims [2,1]
-        b.put(5.toByte) // index type: v2 B-tree
-        b.putInt(nodeSize).put(100.toByte).put(40.toByte)
-        b.putLong(hd)
-        msg2(0x08, b.array())
-      }
-      val dspace = {
-        val b = buf(4 + 32)
-        b.put(2.toByte).put(2.toByte).put(1.toByte).put(1.toByte)
-        b.putLong(2L).putLong(nChunks.toLong)
-        b.putLong(-1L).putLong(-1L)
-        b.array()
-      }
-      val dsOHBytes = ohdr2(msg2(0x01, dspace), msg2(0x03, dtypeDouble), layout)
-      val link = {
-        val nm = "bt".getBytes("ASCII")
-        msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-          .put(nm.length.toByte).put(nm).putLong(dsOH).array())
-      }
-      val rootOHBytes = ohdr2(link)
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      sb.putLong(0L).putLong(-1L)
-      sb.putLong(rootOH + rootOHBytes.length).putLong(rootOH).putInt(0)
-      val internal = if (leaves.length == 1) Nil else Seq(rootBytes0)
-      Seq(ck(sb.array())) ++ chunkData ++ leafBytes ++ internal ++
-        Seq(hdBytes, dsOHBytes, rootOHBytes)
+      numbered("chunk", chunkData) ++ numbered("leaf", leafBytes) ++ internal ++
+        Seq("hd" -> hdBytes,
+          "ds" -> dataset(dataspaceUnlimited(2L, nChunks.toLong), float64,
+            btreeChunks(Seq(2, 1), nodeSize, at("hd"))),
+          "root" -> group("bt" -> at("ds")))
     }
-    val nL = leaves.length
-    val zeros = build(Seq.fill(nChunks)(0L), Seq.fill(nL)(0L), 0, 0, 0, 0)
-    val starts = zeros.map(_.length).scanLeft(0L)(_ + _)
-    val chunkAddrs = (0 until nChunks).map(i => starts(1 + i))
-    val leafAddrs = (0 until nL).map(i => starts(1 + nChunks + i))
-    val hasInternal = nL > 1
-    val rootAddr = if (hasInternal) starts(1 + nChunks + nL) else leafAddrs.head
-    val off = 1 + nChunks + nL + (if (hasInternal) 1 else 0)
-    val parts = build(chunkAddrs, leafAddrs, rootAddr,
-      starts(off), starts(off + 1), starts(off + 2))
-    val f = new FileOutputStream(path)
-    parts.foreach(f.write); f.close()
   }
 
   test("v2 B-tree: record-count sweep across depth-0 and depth-1 trees") {
@@ -1081,21 +787,6 @@ class Hdf5Spec extends AnyFunSuite {
     * Child pointers carry 1-byte record counts (encBytes(3)) and, at
     * depth > 1, 1-byte total-records-below fields (encBytes(cumCap)). */
   private def writeBt2Deep(path: String, nChunks: Int): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dtypeDouble: Array[Byte] =
-      buf(20).put(0x11.toByte).put(0.toByte).put(0x20.toByte).put(0.toByte)
-        .putInt(8).putShort(0).putShort(64)
-        .put(52.toByte).put(11.toByte).put(0.toByte).put(52.toByte)
-        .putInt(1023).array()
     val nodeSize = 96
     val recSize = 8 + 16
     // H5B2 capacity recurrence at this geometry (all widths 1 byte)
@@ -1136,6 +827,7 @@ class Hdf5Spec extends AnyFunSuite {
       case i: Internal => i.children.flatMap(c => flatten(c, d - 1)) :+ ((i, d))
     }
     val nodes = flatten(tree, depth)
+    val nodeIndex = nodes.map(_._1).zipWithIndex.toMap
     def totalRecs(n: Node): Long = n match {
       case Leaf(rs) => rs.length
       case Internal(rs, ch) => rs.length + ch.map(totalRecs).sum
@@ -1145,22 +837,20 @@ class Hdf5Spec extends AnyFunSuite {
       case Internal(rs, ch) =>
         6 + rs.length * recSize + ch.length * (8 + 1 + (if (d > 1) 1 else 0)) + 4
     }
-    def build(chunkAddrs: Seq[Long], nodeAddr: Map[Node, Long],
-              hd: Long, dsOH: Long, rootOH: Long): Seq[Array[Byte]] = {
-      val chunkData = (0 until nChunks).map { c =>
-        val b = buf(16); b.putDouble(c.toDouble).putDouble(100.0 + c); b.array()
-      }
+    val chunkData = (0 until nChunks).map(c => f64s(c.toDouble, 100.0 + c))
+    assemble(path) { at =>
+      def nodeAddr(n: Node): Long = at(s"node${nodeIndex(n)}")
       def rec(b: ByteBuffer, c: Int): Unit = {
-        b.putLong(chunkAddrs(c)); b.putLong(0L); b.putLong(c.toLong)
+        b.putLong(at(s"chunk$c")); b.putLong(0L); b.putLong(c.toLong)
       }
       val nodeBufs = nodes.map {
         case (l @ Leaf(rs), _) =>
           val b = buf(nodeBytes(l, 0))
-          b.put("BTLF".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+          b.put(ascii("BTLF")).put(0.toByte).put(10.toByte)
           rs.foreach(rec(b, _)); ck(b.putInt(0).array())
         case (n @ Internal(rs, ch), d) =>
           val b = buf(nodeBytes(n, d))
-          b.put("BTIN".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+          b.put(ascii("BTIN")).put(0.toByte).put(10.toByte)
           rs.foreach(rec(b, _))
           ch.foreach { c =>
             b.putLong(nodeAddr(c)).put(c.recs.length.toByte)
@@ -1170,55 +860,19 @@ class Hdf5Spec extends AnyFunSuite {
       }
       val hdBytes = {
         val b = buf(4 + 2 + 4 + 2 + 2 + 2 + 8 + 2 + 8 + 4)
-        b.put("BTHD".getBytes("ASCII")).put(0.toByte).put(10.toByte)
+        b.put(ascii("BTHD")).put(0.toByte).put(10.toByte)
         b.putInt(nodeSize).putShort(recSize.toShort).putShort(depth.toShort)
           .put(100.toByte).put(40.toByte)
         b.putLong(nodeAddr(tree)).putShort(tree.recs.length.toShort)
         b.putLong(nChunks.toLong).putInt(0)
         ck(b.array())
       }
-      val layout = {
-        val b = buf(5 + 2 + 1 + 6 + 8)
-        b.put(4.toByte).put(2.toByte).put(0.toByte).put(2.toByte).put(1.toByte)
-        b.put(2.toByte).put(1.toByte) // chunk dims [2,1]
-        b.put(5.toByte) // index type: v2 B-tree
-        b.putInt(nodeSize).put(100.toByte).put(40.toByte)
-        b.putLong(hd)
-        msg2(0x08, b.array())
-      }
-      val dspace = {
-        val b = buf(4 + 32)
-        b.put(2.toByte).put(2.toByte).put(1.toByte).put(1.toByte)
-        b.putLong(2L).putLong(nChunks.toLong)
-        b.putLong(-1L).putLong(-1L)
-        b.array()
-      }
-      val dsOHBytes = ohdr2(msg2(0x01, dspace), msg2(0x03, dtypeDouble), layout)
-      val link = {
-        val nm = "bt".getBytes("ASCII")
-        msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-          .put(nm.length.toByte).put(nm).putLong(dsOH).array())
-      }
-      val rootOHBytes = ohdr2(link)
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      sb.putLong(0L).putLong(-1L)
-      sb.putLong(rootOH + rootOHBytes.length).putLong(rootOH).putInt(0)
-      Seq(ck(sb.array())) ++ chunkData ++ nodeBufs ++ Seq(hdBytes, dsOHBytes, rootOHBytes)
+      numbered("chunk", chunkData) ++ numbered("node", nodeBufs) ++
+        Seq("hd" -> hdBytes,
+          "ds" -> dataset(dataspaceUnlimited(2L, nChunks.toLong), float64,
+            btreeChunks(Seq(2, 1), nodeSize, at("hd"))),
+          "root" -> group("bt" -> at("ds")))
     }
-    // two-pass address resolution: sizes are address-independent
-    val zeroAddr = nodes.map(_._1).map(_ -> 0L).toMap
-    val zeros = build(Seq.fill(nChunks)(0L), zeroAddr, 0, 0, 0)
-    val starts = zeros.map(_.length).scanLeft(0L)(_ + _)
-    val chunkAddrs = (0 until nChunks).map(i => starts(1 + i))
-    val nodeAddr = nodes.map(_._1).zipWithIndex
-      .map { case (n, i) => n -> starts(1 + nChunks + i) }.toMap
-    val off = 1 + nChunks + nodes.length
-    val parts = build(chunkAddrs, nodeAddr, starts(off), starts(off + 1), starts(off + 2))
-    val f = new FileOutputStream(path)
-    parts.foreach(f.write); f.close()
   }
 
   test("v2 B-tree: depth sweep 0/1/2/3 via small node size") {
@@ -1312,28 +966,6 @@ class Hdf5Spec extends AnyFunSuite {
   private def writeDenseTree(path: String, n: Int, maxDirect: Int,
                              nameLen: Int, filtered: Boolean,
                              checksummed: Boolean = true): Unit = {
-    def buf(m: Int) = ByteBuffer.allocate(m).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dtypeDouble: Array[Byte] =
-      buf(20).put(0x11.toByte).put(0.toByte).put(0x20.toByte).put(0.toByte)
-        .putInt(8).putShort(0).putShort(64)
-        .put(52.toByte).put(11.toByte).put(0.toByte).put(52.toByte)
-        .putInt(1023).array()
-    def dspace2(dims: Long*): Array[Byte] = {
-      val b = buf(4 + 8 * dims.length)
-      b.put(2.toByte).put(dims.length.toByte).put(0.toByte).put(1.toByte)
-      dims.foreach(b.putLong); b.array()
-    }
-    def layoutV4Contig(addr: Long, size: Long): Array[Byte] =
-      msg2(0x08, buf(18).put(4.toByte).put(1.toByte).putLong(addr).putLong(size).array())
     def deflateFull(raw: Array[Byte]): Array[Byte] = {
       val d = new Deflater()
       d.setInput(raw); d.finish()
@@ -1352,11 +984,6 @@ class Hdf5Spec extends AnyFunSuite {
     def rowSize(row: Int): Int = if (row < 2) startSize else startSize << (row - 1)
 
     val names = (0 until n).map(i => ("v%03d".format(i) + "x" * nameLen).take(nameLen))
-    def linkBody(name: String, addr: Long): Array[Byte] = {
-      val nm = name.getBytes("ASCII")
-      buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-        .put(nm.length.toByte).put(nm).putLong(addr).array()
-    }
     val bodySize = 3 + nameLen + 8
 
     // ---- pack bodies into direct blocks along the pre-order heap walk
@@ -1420,17 +1047,14 @@ class Hdf5Spec extends AnyFunSuite {
     // ---- addresses: every part before the FHDBs has a content-free size,
     // so deflated block sizes (which need frhpA/ohA in their plaintext)
     // resolve in one forward pass — no fix-point
-    val sbSize = 48; val dataSize = 16
-    val ohPartSize = ohdr2(msg2(0x01, dspace2(2L)), msg2(0x03, dtypeDouble),
-      layoutV4Contig(0L, 16L)).length
+    val sbSize = SuperblockSize; val dataSize = 16
+    def ohPart(dataAddr: Long) = dataset(dataspace(2L), float64, contiguous(dataAddr, 16L))
+    val ohPartSize = ohPart(0L).length
     val dataA = (0 until n).map(i => sbSize + i.toLong * dataSize)
     val ohA = (0 until n).map(i => sbSize + n.toLong * dataSize + i.toLong * ohPartSize)
     val frhpA = sbSize + n.toLong * (dataSize + ohPartSize)
-    val filterMsg: Array[Byte] =
-      if (!filtered) Array.empty[Byte]
-      else buf(12).put(2.toByte).put(1.toByte) // pipeline v2, 1 filter
-        .putShort(1.toShort).putShort(0.toShort).putShort(1.toShort) // deflate, flags, 1 value
-        .putInt(6).array() // aggression level
+    val filterMsg: Array[Byte] = // deflate, aggression level 6
+      if (!filtered) Array.empty[Byte] else filters(1 -> Seq(6))
     val frhpSize = 146 + (if (filtered) (if (nBlocks == 1) 12 else 0) + filterMsg.length else 0)
     def fhibSize(nd: IN): Int =
       17 + (0 until nd.nrows).map(r =>
@@ -1441,10 +1065,10 @@ class Hdf5Spec extends AnyFunSuite {
 
     val fhdbPlain = (0 until nBlocks).map { b =>
       val bb = buf(blkSizes(b))
-      bb.put("FHDB".getBytes("ASCII")).put(0.toByte).putLong(frhpA)
+      bb.put(ascii("FHDB")).put(0.toByte).putLong(frhpA)
         .putInt(blockHeapOff(b).toInt)
       placed.zipWithIndex.foreach { case ((pb, po), i) =>
-        if (pb == b) { bb.position(po); bb.put(linkBody(names(i), ohA(i))) }
+        if (pb == b) { bb.position(po); bb.put(link(names(i), ohA(i))) }
       }
       val img = bb.array()
       if (checksummed) ckAt(img, 17, img.length) // field is zero while hashing
@@ -1483,13 +1107,11 @@ class Hdf5Spec extends AnyFunSuite {
     val rootA = bthdA + 38
 
     // ---- assemble
-    val dataParts = (0 until n).map(i => buf(16).putDouble(i * 1.0).putDouble(i + 0.5).array())
-    val ohParts = (0 until n).map { i =>
-      ohdr2(msg2(0x01, dspace2(2L)), msg2(0x03, dtypeDouble), layoutV4Contig(dataA(i), 16L))
-    }
+    val dataParts = (0 until n).map(i => f64s(i * 1.0, i + 0.5))
+    val ohParts = (0 until n).map(i => ohPart(dataA(i)))
     val frhpPart = {
       val bb = buf(frhpSize)
-      bb.put("FRHP".getBytes("ASCII")).put(0.toByte)
+      bb.put(ascii("FRHP")).put(0.toByte)
         .putShort(7).putShort(filterMsg.length.toShort)
         .put((if (checksummed) 2 else 0).toByte).putInt(4096) // idLen, filters, flags, maxManSize
         .putLong(0L).putLong(-1L)   // next huge id, huge B-tree
@@ -1506,7 +1128,7 @@ class Hdf5Spec extends AnyFunSuite {
     }
     val fhibParts = fhibs.map { case (nd, base) =>
       val bb = buf(fhibSize(nd))
-      bb.put("FHIB".getBytes("ASCII")).put(0.toByte).putLong(frhpA).putInt(base.toInt)
+      bb.put(ascii("FHIB")).put(0.toByte).putLong(frhpA).putInt(base.toInt)
       var i = 0
       (0 until nd.nrows).foreach { row =>
         (0 until width).foreach { _ =>
@@ -1530,14 +1152,14 @@ class Hdf5Spec extends AnyFunSuite {
     }
     val leafParts = leafIdx.map { idxs =>
       val bb = buf(6 + 11 * idxs.length + 4)
-      bb.put("BTLF".getBytes("ASCII")).put(0.toByte).put(5.toByte)
+      bb.put(ascii("BTLF")).put(0.toByte).put(5.toByte)
       idxs.foreach(rec(bb, _)); ck(bb.putInt(0).array())
     }
     val btinPart =
       if (depth == 0) Array.empty[Byte]
       else {
         val bb = buf(btinSize)
-        bb.put("BTIN".getBytes("ASCII")).put(0.toByte).put(5.toByte)
+        bb.put(ascii("BTIN")).put(0.toByte).put(5.toByte)
         sepIdx.foreach(rec(bb, _))
         leafIdx.zipWithIndex.foreach { case (idxs, li) =>
           bb.putLong(leafAddrs(li)).put(idxs.length.toByte) // nrec width 1 (cap 45)
@@ -1546,7 +1168,7 @@ class Hdf5Spec extends AnyFunSuite {
       }
     val bthdPart = {
       val bb = buf(38)
-      bb.put("BTHD".getBytes("ASCII")).put(0.toByte).put(5.toByte)
+      bb.put(ascii("BTHD")).put(0.toByte).put(5.toByte)
         .putInt(512).putShort(11)
         .putShort(depth.toShort).put(100.toByte).put(40.toByte)
         .putLong(if (depth == 0) leafAddrs(0) else btinA)
@@ -1554,20 +1176,13 @@ class Hdf5Spec extends AnyFunSuite {
         .putLong(n.toLong).putInt(0)
       ck(bb.array())
     }
-    val rootPart = ohdr2(
-      msg2(0x02, buf(18).put(0.toByte).put(0.toByte).putLong(frhpA).putLong(bthdA).array()))
-    val sb = buf(48)
-    Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-      .foreach(v => sb.put(v.toByte))
-    sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-    sb.putLong(0L).putLong(-1L)
-    sb.putLong(rootA + rootPart.length).putLong(rootA).putInt(0)
+    val rootPart = objectHeader( // link info: fractal heap + name index
+      message(0x02, buf(18).put(0.toByte).put(0.toByte).putLong(frhpA).putLong(bthdA).array()))
 
-    val parts = Seq(ck(sb.array())) ++ dataParts ++ ohParts ++ Seq(frhpPart) ++
+    val parts = Seq(superblock(rootA, rootA + rootPart.length)) ++ dataParts ++ ohParts ++ Seq(frhpPart) ++
       fhibParts ++ fhdbStored ++ leafParts ++ Seq(btinPart, bthdPart, rootPart)
     assert(parts.map(_.length.toLong).sum == rootA + rootPart.length, "layout drift")
-    val f = new FileOutputStream(path)
-    parts.foreach(f.write); f.close()
+    writeAll(path, parts)
   }
 
   // ------- typed datasets: fixed strings, VLEN strings, compounds -------
@@ -1580,101 +1195,13 @@ class Hdf5Spec extends AnyFunSuite {
     *  - `station`: compound[2] (id int32 @0, lat float64 @8,
     *    tag string8 @16, total 24 — v1 member encoding) */
   private def writeTyped(path: String): Unit = {
-    def buf(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
-    def msg2(t: Int, body: Array[Byte]): Array[Byte] =
-      buf(4 + body.length).put(t.toByte).putShort(body.length.toShort)
-        .put(0.toByte).put(body).array()
-    def ohdr2(msgs: Array[Byte]*): Array[Byte] = {
-      val content = cat(msgs: _*)
-      ck(buf(8 + content.length + 4).put("OHDR".getBytes("ASCII")).put(2.toByte)
-        .put(1.toByte).putShort(content.length.toShort).put(content).putInt(0).array())
-    }
-    def dspace2(dims: Long*): Array[Byte] = {
-      val b = buf(4 + 8 * dims.length)
-      b.put(2.toByte).put(dims.length.toByte).put(0.toByte).put(1.toByte)
-      dims.foreach(b.putLong); b.array()
-    }
-    def link(name: String, addr: Long): Array[Byte] = {
-      val nm = name.getBytes("ASCII")
-      msg2(0x06, buf(3 + nm.length + 8).put(1.toByte).put(0.toByte)
-        .put(nm.length.toByte).put(nm).putLong(addr).array())
-    }
-    def layoutV4Contig(addr: Long, size: Long): Array[Byte] =
-      msg2(0x08, buf(18).put(4.toByte).put(1.toByte).putLong(addr).putLong(size).array())
-    def dtypeFixedStr(size: Int): Array[Byte] = // class 3 v1, null-padded
-      buf(8).put(0x13.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
-        .putInt(size).array()
-    def dtypeVlenStr: Array[Byte] = // class 9 v1, type=string, base string(1)
-      cat(buf(8).put(0x19.toByte).put(0x01.toByte).put(0.toByte).put(0.toByte)
-        .putInt(16).array(), dtypeFixedStr(1))
-    val dtypeInt32 = buf(12).put(0x10.toByte).put(0x08.toByte).put(0.toByte)
-      .put(0.toByte).putInt(4).putShort(0).putShort(32).array()
-    val dtypeF64 = buf(20).put(0x11.toByte).put(0.toByte).put(0x20.toByte)
-      .put(0.toByte).putInt(8).putShort(0).putShort(64)
-      .put(52.toByte).put(11.toByte).put(0.toByte).put(52.toByte)
-      .putInt(1023).array()
-    def dtypeVlenSeq(base: Array[Byte]): Array[Byte] = // class 9 v1, type=sequence
-      cat(buf(8).put(0x19.toByte).put(0x00.toByte).put(0.toByte).put(0.toByte)
-        .putInt(16).array(), base)
-    def dtypeCompound: Array[Byte] = {
-      def member(name: String, off: Int, dt: Array[Byte]): Array[Byte] = {
-        val nm = name.getBytes("ASCII") :+ 0.toByte
-        val padded = nm ++ Array.fill[Byte]((8 - nm.length % 8) % 8)(0)
-        // v1: offset u32, dimensionality + reserved + perm + reserved +
-        // 4 dim sizes = 28 bytes of array-member fields (zeroed)
-        cat(padded, buf(4).putInt(off).array(), new Array[Byte](28), dt)
-      }
-      cat(buf(8).put(0x16.toByte).put(3.toByte).put(0.toByte).put(0.toByte)
-        .putInt(24).array(),
-        member("id", 0, dtypeInt32), member("lat", 8, dtypeF64),
-        member("tag", 16, dtypeFixedStr(8)))
-    }
-
-    // --- data blocks ---
-    val codeData = cat(Seq("AB", "CDEF", "", "XY").map { s =>
-      val b = new Array[Byte](4); s.getBytes("ASCII").copyToArray(b); b
-    }: _*)
-    def i32s(vs: Int*): Array[Byte] = {
-      val b = buf(4 * vs.length); vs.foreach(b.putInt); b.array()
-    }
-    def f64s(vs: Double*): Array[Byte] = {
-      val b = buf(8 * vs.length); vs.foreach(b.putDouble); b.array()
-    }
-    def fixedStrs(w: Int, ss: String*): Array[Byte] = cat(ss.map { s =>
-      val b = new Array[Byte](w); s.getBytes("ASCII").copyToArray(b); b
-    }: _*)
+    val int32 = signed(4, 32)
     // one GCOL holding VLEN strings AND numeric/string sequence payloads
     val heapObjs: Seq[(Int, Array[Byte])] = Seq(
-      1 -> "b".getBytes("ASCII"), 2 -> "alpha".getBytes("ASCII"),
-      3 -> "gamma!".getBytes("ASCII"),
+      1 -> ascii("b"), 2 -> ascii("alpha"), 3 -> ascii("gamma!"),
       4 -> i32s(1, 2, 3), 5 -> i32s(40, 50),
       6 -> f64s(0.5), 7 -> f64s(2.5, -1.25, 8.0),
-      8 -> fixedStrs(6, "red", "blue!2"), 9 -> fixedStrs(6, "x"))
-    def gcol: Array[Byte] = {
-      val objs = cat(heapObjs.map { case (idx, data) =>
-        val pad = (8 - data.length % 8) % 8
-        cat(buf(16).putShort(idx.toShort).putShort(1).putInt(0)
-          .putLong(data.length.toLong).array(), data, new Array[Byte](pad))
-      }: _*)
-      val size = 16L + objs.length + 16 // header + objects + free-space obj
-      cat(buf(16).put("GCOL".getBytes("ASCII")).put(1.toByte)
-        .put(new Array[Byte](3)).putLong(size).array(), objs,
-        buf(16).putShort(0).putShort(0).putInt(0).putLong(16L).array())
-    }
-    def vlenDesc(gcolAddr: Long, cells: (Int, Int)*): Array[Byte] =
-      cat(cells.map { case (len, idx) => // len 0 = null descriptor
-        if (len == 0) new Array[Byte](16)
-        else buf(16).putInt(len).putLong(gcolAddr).putInt(idx).array()
-      }: _*)
-    def namesData(gcolAddr: Long): Array[Byte] =
-      vlenDesc(gcolAddr, (5, 2), (1, 1), (6, 3))
-    def runsData(gcolAddr: Long): Array[Byte] =    // [1,2,3], [], [40,50]
-      vlenDesc(gcolAddr, (3, 4), (0, 0), (2, 5))
-    def weightsData(gcolAddr: Long): Array[Byte] = // [0.5], [2.5,-1.25,8.0]
-      vlenDesc(gcolAddr, (1, 6), (3, 7))
-    def tagsData(gcolAddr: Long): Array[Byte] =    // [red,blue!2], [], [x]
-      vlenDesc(gcolAddr, (2, 8), (0, 0), (1, 9))
+      8 -> fixedStrings(6, "red", "blue!2"), 9 -> fixedStrings(6, "x"))
     val stationData = {
       val b = buf(48)
       def row(id: Int, lat: Double, tag: String): Unit = {
@@ -1685,45 +1212,29 @@ class Hdf5Spec extends AnyFunSuite {
       row(7, 1.5, "AB"); row(-3, -2.25, "ZQX")
       b.array()
     }
-
-    def build(codeAddr: Long, gcolAddr: Long, namesAddr: Long, stnAddr: Long,
-              runsAddr: Long, wtsAddr: Long, tagsAddr: Long,
-              codeOH: Long, namesOH: Long, stnOH: Long,
-              runsOH: Long, wtsOH: Long, tagsOH: Long,
-              rootOH: Long): Seq[Array[Byte]] = {
-      val codeBytes = ohdr2(msg2(0x01, dspace2(4L)),
-        msg2(0x03, dtypeFixedStr(4)), layoutV4Contig(codeAddr, 16L))
-      val namesBytes = ohdr2(msg2(0x01, dspace2(3L)),
-        msg2(0x03, dtypeVlenStr), layoutV4Contig(namesAddr, 48L))
-      val stnBytes = ohdr2(msg2(0x01, dspace2(2L)),
-        msg2(0x03, dtypeCompound), layoutV4Contig(stnAddr, 48L))
-      val runsBytes = ohdr2(msg2(0x01, dspace2(3L)),
-        msg2(0x03, dtypeVlenSeq(dtypeInt32)), layoutV4Contig(runsAddr, 48L))
-      val wtsBytes = ohdr2(msg2(0x01, dspace2(2L)),
-        msg2(0x03, dtypeVlenSeq(dtypeF64)), layoutV4Contig(wtsAddr, 32L))
-      val tagsBytes = ohdr2(msg2(0x01, dspace2(3L)),
-        msg2(0x03, dtypeVlenSeq(dtypeFixedStr(6))), layoutV4Contig(tagsAddr, 48L))
-      val rootBytes = ohdr2(link("code", codeOH), link("names", namesOH),
-        link("station", stnOH), link("runs", runsOH), link("weights", wtsOH),
-        link("tags", tagsOH))
-      val sb = buf(48)
-      Seq(0x89, 'H'.toInt, 'D'.toInt, 'F'.toInt, 0x0D, 0x0A, 0x1A, 0x0A)
-        .foreach(v => sb.put(v.toByte))
-      sb.put(3.toByte).put(8.toByte).put(8.toByte).put(0.toByte)
-      sb.putLong(0L).putLong(-1L)
-      sb.putLong(rootOH + rootBytes.length).putLong(rootOH).putInt(0)
-      Seq(ck(sb.array()), codeData, gcol, namesData(gcolAddr), stationData,
-        runsData(gcolAddr), weightsData(gcolAddr), tagsData(gcolAddr),
-        codeBytes, namesBytes, stnBytes, runsBytes, wtsBytes, tagsBytes,
-        rootBytes)
+    assemble(path) { at =>
+      val g = at("gcol")
+      Seq("code" -> fixedStrings(4, "AB", "CDEF", "", "XY"),
+        "gcol" -> globalHeap(heapObjs),
+        "names" -> vlenRefs(g, (5, 2), (1, 1), (6, 3)),
+        "station" -> stationData,
+        "runs" -> vlenRefs(g, (3, 4), (0, 0), (2, 5)),  // [1,2,3], [], [40,50]
+        "weights" -> vlenRefs(g, (1, 6), (3, 7)),        // [0.5], [2.5,-1.25,8.0]
+        "tags" -> vlenRefs(g, (2, 8), (0, 0), (1, 9)),   // [red,blue!2], [], [x]
+        "code.oh" -> dataset(dataspace(4L), fixedString(4), contiguous(at("code"), 16L)),
+        "names.oh" -> dataset(dataspace(3L), vlenString, contiguous(at("names"), 48L)),
+        "station.oh" -> dataset(dataspace(2L),
+          compound(24, ("id", 0, int32), ("lat", 8, float64), ("tag", 16, fixedString(8))),
+          contiguous(at("station"), 48L)),
+        "runs.oh" -> dataset(dataspace(3L), vlenSequence(int32), contiguous(at("runs"), 48L)),
+        "weights.oh" -> dataset(dataspace(2L), vlenSequence(float64),
+          contiguous(at("weights"), 32L)),
+        "tags.oh" -> dataset(dataspace(3L), vlenSequence(fixedString(6)),
+          contiguous(at("tags"), 48L)),
+        "root" -> group("code" -> at("code.oh"), "names" -> at("names.oh"),
+          "station" -> at("station.oh"), "runs" -> at("runs.oh"),
+          "weights" -> at("weights.oh"), "tags" -> at("tags.oh")))
     }
-    val sizes = build(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).map(_.length)
-    val starts = sizes.scanLeft(0L)(_ + _)
-    val parts = build(starts(1), starts(2), starts(3), starts(4),
-      starts(5), starts(6), starts(7), starts(8), starts(9),
-      starts(10), starts(11), starts(12), starts(13), starts(14))
-    val f = new FileOutputStream(path)
-    parts.foreach(f.write); f.close()
   }
 
   test("typed datasets: fixed strings, VLEN strings via GCOL, compounds") {
@@ -1911,6 +1422,33 @@ class Hdf5Spec extends AnyFunSuite {
     val e = intercept[java.io.IOException](Hdf5.readMeta(f.getPath))
     assert(e.getMessage.contains("superblock metadata checksum"), e.getMessage)
     f.delete()
+  }
+
+  test("planted files keep their bytes: SHA-256 per writer") {
+    // `Shared.fixtureStore` reuses an existing store by name across JVMs,
+    // so a writer change that alters these bytes must also rename the
+    // store its query reads, or a stale file keeps being served.
+    val pinned = Seq[(String => Unit, String)](
+      (graft.sources.Hdf5Planted.write,
+        "94d45e48969669e00f8f09446ecbce34913e65a961c86e2d020d05e5ca4279aa"),
+      (graft.sources.Hdf5PlantedNbit.write,
+        "035ebb9f165175215193ac2324f3e3326fad57afb7e831c9c705cabfbfeb007a"),
+      (graft.sources.Hdf5PlantedSzip.write,
+        "f01695ef520a9794976a259e8d5aa143cf96ba3f0ae0488d9e841b7c4f9f93a4"),
+      (graft.sources.Hdf5PlantedScaleoffset.write,
+        "6614873548698290af468f5c8c998dabf89fc6b2612fbd9336295169021e64ad"),
+      (graft.sources.Hdf5PlantedNestedVlen.write,
+        "25b0e05f0c64855196f15be850150d43b34bf39526d9cb6332a74c80fdd8edf6"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_planted_sha")
+    for (((write, sha), i) <- pinned.zipWithIndex) {
+      val f = dir.resolve(s"planted$i.h5")
+      write(f.toString)
+      val digest = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(java.nio.file.Files.readAllBytes(f))
+      assert(digest.map("%02x".format(_)).mkString == sha, s"planted writer $i")
+      java.nio.file.Files.delete(f)
+    }
+    java.nio.file.Files.delete(dir)
   }
 
   test("nested VLEN bases: vlen-of-vlen-strings and vlen-of-vlen-int32") {
