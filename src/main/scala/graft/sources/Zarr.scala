@@ -860,119 +860,11 @@ object Zarr {
       s"${za.name}: dtype kind '${za.dtKind}' is not numeric — " +
         "use readStrings/readBinary/readDatetimes/readTimedeltas")
     import spark.implicits._
-    val rank = za.shape.length
-    val dims = za.shape.toArray
-    val cdims = za.chunks.toArray
-    val nChunksPerDim = Array.tabulate(rank)(d => ((dims(d) + cdims(d) - 1) / cdims(d)).toInt)
-    val dir = childPath(store, name)
-    val fsSnap = FsIo.snapshot(spark) // chunk fetches go through Hadoop FS
-    val (kind, size, little) = (za.dtKind, za.dtSize, za.littleEndian)
-    val (comp, sep, cOrder) = (za.compressor, za.dimSeparator, za.cOrder)
-    val (keyPrefix, crc) = (za.keyPrefix, za.crc32c)
-    val fillForAbsent = za.fillValue
-    val filters = za.filters
-    val allowDelta = allowUnverifiedDelta(spark)
-    val chunkElems = cdims.product.toInt
-    // with a filters chain the stored element width is the LAST filter's
-    // astype, not the array dtype
-    // stored element width = last VALUE filter's astype (a trailing
-    // numcodecs shuffle transposes bytes without changing the width)
-    val storedSize = filters.filterNot(_.id == "shuffle").lastOption
-      .map(_.asSize).getOrElse(size)
-
-    val sharding = za.sharding
+    // absent chunks emit fill_value, or nothing when there is none
     val raw: org.apache.spark.sql.Dataset[(Array[Long], Double)] =
-      chunkCoordRdd(spark, nChunksPerDim)
-        .flatMap { cc =>
-          // Emit the elements of one stored block (a whole chunk, or one
-          // inner chunk of a shard) whose global origin is
-          // cc*cdims + blockOrigin, clipping past the array bounds
-          // (edge blocks store a full grid).
-          def emit(data: Option[Int => Double], edims: Array[Long],
-                   blockOrigin: Array[Long], localCOrder: Boolean):
-              Iterator[(Array[Long], Double)] = {
-            val nElems = edims.product.toInt
-            if (data.isEmpty && fillForAbsent.isEmpty) Iterator.empty
-            else (0 until nElems).iterator.flatMap { flat =>
-              // block-local unravel (C: last dim fastest; F: first fastest)
-              var rem = flat.toLong
-              val idx = new Array[Long](rank)
-              if (localCOrder) {
-                var i = rank - 1
-                while (i >= 0) { idx(i) = rem % edims(i); rem /= edims(i); i -= 1 }
-              } else {
-                var i = 0
-                while (i < rank) { idx(i) = rem % edims(i); rem /= edims(i); i += 1 }
-              }
-              var inBounds = true
-              var j = 0
-              while (j < rank) {
-                idx(j) += cc(j).toLong * cdims(j) + blockOrigin(j)
-                if (idx(j) >= dims(j)) inBounds = false
-                j += 1
-              }
-              if (!inBounds) None
-              else Some((idx, data.fold(fillForAbsent.get)(_(flat))))
-            }
-          }
-          val key = keyPrefix + cc.mkString(sep)
-          val fPath = dir + "/" + key
-          val zero = new Array[Long](rank)
-          sharding match {
-            case None =>
-              // absent chunk (None) = entirely fill_value
-              val data: Option[Int => Double] =
-                FsIo.readAllIfExists(fsSnap.value, fPath).map { all =>
-                  val stored = if (crc) stripCrc32c(all, key) else all
-                  val plain = decompress(comp, stored, chunkElems * storedSize, allowDelta)
-                  if (filters.nonEmpty) {
-                    val arr = unfilter(plain, filters, chunkElems, kind, size, little)
-                    arr(_)
-                  } else {
-                    val bb = order(plain, little)
-                    decodeAt(bb, kind, size, _)
-                  }
-                }
-              emit(data, cdims.map(_.toLong), zero, cOrder)
-            case Some(sh) =>
-              // one shard file = inner chunks + (offset, nbytes) index;
-              // range-read the index, then only the present inner chunks —
-              // the executor-side analogue of object-store ranged GETs
-              val ich = sh.innerChunks.toArray
-              val innerPerDim = Array.tabulate(rank)(d => (cdims(d) / ich(d)).toInt)
-              val nInner = innerPerDim.product
-              val innerElems = ich.product.toInt
-              def innerOrigin(si: Int): Array[Long] = { // C order over the inner grid
-                val icc = new Array[Long](rank)
-                var rem = si; var i = rank - 1
-                while (i >= 0) { icc(i) = (rem % innerPerDim(i)).toLong * ich(i)
-                  rem /= innerPerDim(i); i -= 1 }
-                icc
-              }
-              if (!FsIo.isFile(fsSnap.value, fPath)) // absent shard = every inner chunk fill_value
-                (0 until nInner).iterator.flatMap(si =>
-                  emit(None, ich, innerOrigin(si), sh.innerCOrder))
-              else {
-                // I/O is EAGER (the file handle closes before the lazy
-                // element iterator is consumed); decode stays lazy, so
-                // peak memory is the compressed shard, not the elements
-                val bodies = readShardBodies(fsSnap.value, fPath, nInner, sh)
-                (0 until nInner).iterator.flatMap { si =>
-                  emit(bodies(si).map { b =>
-                      val bb = order(decompress(sh.innerComp, b,
-                        innerElems * size, allowDelta), sh.innerLittle)
-                      (i: Int) => decodeAt(bb, kind, size, i)
-                    },
-                    ich, innerOrigin(si), sh.innerCOrder)
-                }
-              }
-          }
-        }.toDS()
-
-    val colName = (i: Int) => if (za.dimNames.length == rank) za.dimNames(i) else s"i$i"
-    val cols = (0 until rank).map(i => col("_1")(i).cast("int").as(colName(i))) :+
-      col("_2").as("value")
-    val df = raw.toDF().select(cols: _*)
+      chunkWalk(spark, za, store, name, za.fillValue)(
+        numericBlock(za.dtKind, za.dtSize, allowUnverifiedDelta(spark))).toDS()
+    val df = dimFrame(za, raw.toDF(), col("_2"))
     val fill = za.attrs.get("_FillValue").orElse(za.attrs.get("missing_value"))
       .orElse(za.fillValue.filterNot(_.isNaN))
     val scale = za.attrs.getOrElse("scale_factor", 1.0)
@@ -990,6 +882,29 @@ object Zarr {
     else masked
   }
 
+  /** Numeric block decoder shared by [[readVariable]] and
+    * [[readVectors]]: decompress to the stored width, then undo the
+    * numcodecs filter chain ([[unfilter]]) or view the bytes as the
+    * dtype ([[decodeAt]]). The decoder captures only its three arguments. */
+  private def numericBlock(kind: Char, size: Int,
+                           allowDelta: Boolean): ZBlock => Int => Double = { b =>
+    val plain = decompress(b.comp, b.bytes, b.nElems * storedWidth(b.filters, size),
+      allowDelta)
+    if (b.filters.nonEmpty) {
+      val arr = unfilter(plain, b.filters, b.nElems, kind, size, b.little)
+      arr(_)
+    } else {
+      val bb = order(plain, b.little)
+      decodeAt(bb, kind, size, _)
+    }
+  }
+
+  /** Stored element width: the last VALUE filter's astype, else the
+    * array dtype's (a trailing numcodecs shuffle transposes bytes
+    * without changing the width). */
+  private def storedWidth(filters: Seq[ZFilter], size: Int): Int =
+    filters.filterNot(_.id == "shuffle").lastOption.map(_.asSize).getOrElse(size)
+
   /** String arrays (Zarr v2 + v3 `string`) as (dim…, value STRING):
     * fixed-width `|Sn` (bytes, trailing NULs trimmed, UTF-8) and
     * `<Un`/`>Un` (UCS-4 code points, trailing zeros trimmed), plus `|O`
@@ -1000,9 +915,9 @@ object Zarr {
     * dtype string + chunk shape, structure-validated — see
     * [[Msgpack]]). v3 sharded string arrays decode through the shard
     * index with inner vlen-utf8 chunks. Absent chunks yield NULL values;
-    * a python `None` element decodes to NULL. Same chunk-parallel plan
-    * as [[readVariable]]: the driver touches only metadata, executors
-    * read only their chunk files (C and F element orders both decode).
+    * a python `None` element decodes to NULL. Read through
+    * [[chunkWalk]]: the driver touches only metadata, executors read only
+    * their chunk files (C and F element orders both decode).
     * Out of scope, rejected loudly: the `pickle` object codec. */
   def readStrings(spark: SparkSession, store: String, name: String): DataFrame = {
     val za = readArrayMeta(store, name)
@@ -1015,8 +930,6 @@ object Zarr {
         s"${za.name}: object string arrays need exactly one of the " +
           "vlen-utf8/msgpack2/json2 object codecs, " +
           s"got [${za.filters.map(_.id).mkString(",")}]")
-      // C and F element orders both decode: the chunk walk's emit()
-      // unravels flat item positions in the chunk's own order
       za.filters.head.id
     } else ""
     if (!isObj) {
@@ -1027,125 +940,46 @@ object Zarr {
           s"got [${za.filters.map(_.id).mkString(",")}]")
     }
     import spark.implicits._
-    val rank = za.shape.length
-    val dims = za.shape.toArray
-    val cdims = za.chunks.toArray
-    val nChunksPerDim = Array.tabulate(rank)(d => ((dims(d) + cdims(d) - 1) / cdims(d)).toInt)
-    val dir = childPath(store, name)
-    val fsSnap = FsIo.snapshot(spark)
-    val (kind, width, little) = (za.dtKind, za.dtSize, za.littleEndian)
-    val (comp, sep, cOrder) = (za.compressor, za.dimSeparator, za.cOrder)
-    val keyPrefix = za.keyPrefix
-    val (crc, sharding) = (za.crc32c, za.sharding)
-    val chunkElems = cdims.product.toInt
+    val (kind, width) = (za.dtKind, za.dtSize)
     val allowDelta = allowUnverifiedDelta(spark)
     val raw: org.apache.spark.sql.Dataset[(Array[Long], String)] =
-      chunkCoordRdd(spark, nChunksPerDim).flatMap { cc =>
-        val key = keyPrefix + cc.mkString(sep)
-        val fPath = dir + "/" + key
-        // one sub-block of elements: `sub` dims, `origin` offset within
-        // the outer chunk, the block's own element order
-        def emit(data: Option[Int => String], sub: Array[Long],
-                 origin: Array[Long], blockCOrder: Boolean): Iterator[(Array[Long], String)] =
-          (0 until sub.product.toInt).iterator.flatMap { flat =>
-            var rem = flat.toLong
-            val idx = new Array[Long](rank)
-            if (blockCOrder) {
-              var i = rank - 1
-              while (i >= 0) { idx(i) = rem % sub(i); rem /= sub(i); i -= 1 }
-            } else {
-              var i = 0
-              while (i < rank) { idx(i) = rem % sub(i); rem /= sub(i); i += 1 }
+      chunkWalk(spark, za, store, name, Some(null: String)) { b =>
+        if (isObj) {
+          val strs = decodeObjectStrings(objCodec,
+            inflateObject(b.comp, b.bytes, b.key), b.nElems, b.key)
+          strs(_)
+        } else {
+          val plain = decompress(b.comp, b.bytes, b.nElems * width, allowDelta)
+          val bb = order(plain, b.little)
+          val get: Int => String = { i =>
+            val off = i * width
+            if (kind == 'S') {
+              var end = off + width
+              while (end > off && plain(end - 1) == 0) end -= 1
+              new String(plain, off, end - off,
+                java.nio.charset.StandardCharsets.UTF_8)
+            } else { // 'U': UCS-4 code points, zero-padded
+              var n = width / 4
+              while (n > 0 && bb.getInt(off + (n - 1) * 4) == 0) n -= 1
+              val sb = new java.lang.StringBuilder(n)
+              var j = 0
+              while (j < n) { sb.appendCodePoint(bb.getInt(off + j * 4)); j += 1 }
+              sb.toString
             }
-            var inBounds = true
-            var j = 0
-            while (j < rank) {
-              idx(j) += origin(j) + cc(j).toLong * cdims(j)
-              if (idx(j) >= dims(j)) inBounds = false
-              j += 1
-            }
-            if (!inBounds) None
-            else Some((idx, data.map(_(flat)).orNull))
           }
-        val zero = new Array[Long](rank)
-        sharding match {
-          case None =>
-            // absent chunk (None) → NULL values
-            val data: Option[Int => String] =
-              FsIo.readAllIfExists(fsSnap.value, fPath).map { all =>
-                if (isObj) {
-                  val stored = if (crc) stripCrc32c(all, key) else all
-                  val plain = inflateObject(comp, stored, key)
-                  val strs = decodeObjectStrings(objCodec, plain, chunkElems, key)
-                  strs(_)
-                } else {
-                  val plain = decompress(comp, all, chunkElems * width, allowDelta)
-                  val bb = java.nio.ByteBuffer.wrap(plain).order(
-                    if (little) java.nio.ByteOrder.LITTLE_ENDIAN
-                    else java.nio.ByteOrder.BIG_ENDIAN)
-                  val get: Int => String = { i =>
-                    val off = i * width
-                    if (kind == 'S') {
-                      var end = off + width
-                      while (end > off && plain(end - 1) == 0) end -= 1
-                      new String(plain, off, end - off,
-                        java.nio.charset.StandardCharsets.UTF_8)
-                    } else { // 'U': UCS-4 code points, zero-padded
-                      var n = width / 4
-                      while (n > 0 && bb.getInt(off + (n - 1) * 4) == 0) n -= 1
-                      val sb = new java.lang.StringBuilder(n)
-                      var j = 0
-                      while (j < n) { sb.appendCodePoint(bb.getInt(off + j * 4)); j += 1 }
-                      sb.toString
-                    }
-                  }
-                  get
-                }
-              }
-            emit(data, cdims.map(_.toLong), zero, cOrder)
-          case Some(sh) =>
-            // v3 sharded string array: shard index → per-inner-chunk vlen
-            // payloads, same ranged-read access pattern as readVariable
-            val ich = sh.innerChunks.toArray
-            val innerPerDim = Array.tabulate(rank)(d => (cdims(d) / ich(d)).toInt)
-            val nInner = innerPerDim.product
-            val innerElems = ich.product.toInt
-            def innerOrigin(si: Int): Array[Long] = { // C order over the inner grid
-              val icc = new Array[Long](rank)
-              var rem = si; var i = rank - 1
-              while (i >= 0) { icc(i) = (rem % innerPerDim(i)).toLong * ich(i)
-                rem /= innerPerDim(i); i -= 1 }
-              icc
-            }
-            if (!FsIo.isFile(fsSnap.value, fPath)) // absent shard = every inner chunk NULL
-              (0 until nInner).iterator.flatMap(si =>
-                emit(None, ich, innerOrigin(si), sh.innerCOrder))
-            else {
-              val bodies = readShardBodies(fsSnap.value, fPath, nInner, sh)
-              (0 until nInner).iterator.flatMap { si =>
-                emit(bodies(si).map { b =>
-                    val plain = inflateObject(sh.innerComp, b, s"$key#$si")
-                    val strs = decodeObjectStrings(objCodec, plain, innerElems,
-                      s"$key#$si")
-                    strs(_)
-                  }, ich, innerOrigin(si), sh.innerCOrder)
-              }
-            }
+          get
         }
       }.toDS()
-    val colName = (i: Int) => if (za.dimNames.length == rank) za.dimNames(i) else s"i$i"
-    val cols = (0 until rank).map(i => col("_1")(i).cast("int").as(colName(i))) :+
-      col("_2").as("value")
-    raw.toDF().select(cols: _*)
+    dimFrame(za, raw.toDF(), col("_2"))
   }
 
   /** `|O` + numcodecs `vlen-bytes` or `msgpack2` object arrays → one
     * BINARY row per element — the binary-payload-in-zarr shape
     * (audio/image tiles, tokenized blobs) corpus stores carry next to
     * their text columns (`json2` is rejected: JSON has no binary type,
-    * so numcodecs' JSON codec cannot encode bytes). Same chunk walk and
-    * NULL-for-absent-chunk semantics as [[readStrings]]; each executor
-    * touches only its chunk files. */
+    * so numcodecs' JSON codec cannot encode bytes). Read through
+    * [[chunkWalk]] with NULL for absent chunks; each executor touches
+    * only its chunk files. */
   def readBinary(spark: SparkSession, store: String, name: String): DataFrame = {
     val za = readArrayMeta(store, name)
     require(za.dtKind == 'O',
@@ -1159,41 +993,13 @@ object Zarr {
     require(za.sharding.isEmpty,
       s"${za.name}: binary object arrays supported for plain (unsharded) chunks only")
     import spark.implicits._
-    val rank = za.shape.length
-    val dims = za.shape.toArray
-    val cdims = za.chunks.toArray
-    val nChunksPerDim = Array.tabulate(rank)(d => ((dims(d) + cdims(d) - 1) / cdims(d)).toInt)
-    val dir = childPath(store, name)
-    val fsSnap = FsIo.snapshot(spark)
-    val (comp, sep, zCrc) = (za.compressor, za.dimSeparator, za.crc32c)
-    val cOrder = za.cOrder
-    val keyPrefix = za.keyPrefix
-    val chunkElems = cdims.product.toInt
     val raw: org.apache.spark.sql.Dataset[(Array[Long], Array[Byte])] =
-      chunkCoordRdd(spark, nChunksPerDim).flatMap { cc =>
-        val key = keyPrefix + cc.mkString(sep)
-        // absent chunk (None) → NULL values
-        val items: Option[Array[Array[Byte]]] =
-          FsIo.readAllIfExists(fsSnap.value, dir + "/" + key).map { all =>
-            val stored = if (zCrc) stripCrc32c(all, key) else all
-            val plain = comp match {
-              case "raw"                    => stored
-              case "zlib" | "gzip" | "zstd" => inflateUnknown(comp, stored)
-              case other => throw new IllegalArgumentException(
-                s"object chunks support raw/zlib/gzip/zstd, got '$other' " +
-                  "(vlen payload length is unknown before decode)")
-            }
-            decodeObjectBytes(objCodec, plain, chunkElems, key)
-          }
-        (0 until chunkElems).iterator.flatMap { flat =>
-          flatChunkIdx(flat, rank, cdims, cc, dims, cOrder)
-            .map(idx => (idx, items.map(_(flat)).orNull))
-        }
+      chunkWalk(spark, za, store, name, Some(null: Array[Byte])) { b =>
+        val items = decodeObjectBytes(objCodec,
+          inflateObject(b.comp, b.bytes, b.key), b.nElems, b.key)
+        items(_)
       }.toDS()
-    val colName = (i: Int) => if (za.dimNames.length == rank) za.dimNames(i) else s"i$i"
-    val cols = (0 until rank).map(i => col("_1")(i).cast("int").as(colName(i))) :+
-      col("_2").as("value")
-    raw.toDF().select(cols: _*)
+    dimFrame(za, raw.toDF(), col("_2"))
   }
 
   /** `datetime64` arrays (`<M8[ns]` … `<M8[D]`, v2 or v3
@@ -1212,13 +1018,8 @@ object Zarr {
     require(za.dtKind == 'M',
       s"${za.name}: dtype kind '${za.dtKind}' is not datetime64 — " +
         "use readVariable/readStrings/readTimedeltas")
-    val (mul, div) = epochUnitToMicros(za.name, za.dtUnit, "datetime64")
-    val raw = readEpochLongs(spark, za, store, name, mul, div)
-    val rank = za.shape.length
-    val colName = (i: Int) => if (za.dimNames.length == rank) za.dimNames(i) else s"i$i"
-    val cols = (0 until rank).map(i => col("_1")(i).cast("int").as(colName(i))) :+
-      timestamp_micros(col("_2")).as("value")
-    raw.toDF().select(cols: _*)
+    dimFrame(za, readEpochMicros(spark, za, store, name, "datetime64"),
+      timestamp_micros(col("_2")))
   }
 
   /** `timedelta64` arrays (`<m8[ns]` … `<m8[D]`, v2 or v3
@@ -1234,21 +1035,15 @@ object Zarr {
     require(za.dtKind == 'm',
       s"${za.name}: dtype kind '${za.dtKind}' is not timedelta64 — " +
         "use readVariable/readStrings/readDatetimes")
-    val (mul, div) = epochUnitToMicros(za.name, za.dtUnit, "timedelta64")
-    val raw = readEpochLongs(spark, za, store, name, mul, div)
-    val rank = za.shape.length
-    val colName = (i: Int) => if (za.dimNames.length == rank) za.dimNames(i) else s"i$i"
     // micros → interval without a float step: pmod keeps the seconds
     // part in [0, 86400) so negative totals carry in the day component;
     // `div` (not `/`) keeps the day division in exact Long arithmetic —
     // a Long / Long goes through Double and rounds past 2^53
-    val df0 = raw.toDF()
+    val df0 = readEpochMicros(spark, za, store, name, "timedelta64")
       .withColumn("__rem", pmod(col("_2"), lit(86400000000L)))
       .withColumn("__days", expr("(_2 - __rem) div 86400000000").cast("int"))
     val secs = col("__rem").cast("decimal(18,0)") / lit(1000000).cast("decimal(9,0)")
-    val cols = (0 until rank).map(i => col("_1")(i).cast("int").as(colName(i))) :+
-      make_dt_interval(col("__days"), lit(0), lit(0), secs).as("value")
-    df0.select(cols: _*)
+    dimFrame(za, df0, make_dt_interval(col("__days"), lit(0), lit(0), secs))
   }
 
   /** dtype unit → exact micros conversion: (multiplier, divisor); one of
@@ -1267,112 +1062,35 @@ object Zarr {
       s"$name: $what unit '$u' unsupported (ns/us/ms/s/m/h/D)")
   }
 
-  /** Shared exact-Long chunk walk for epoch/duration arrays: the same
-    * chunk-parallel plan, numcodecs filter chain and v3 shard-index walk
-    * as [[readVariable]], but the element channel is Long end-to-end
-    * (values land already converted to micros via `mul`/`div`). Absent
-    * chunks/shards and the numpy NaT sentinel yield None. */
-  private def readEpochLongs(spark: SparkSession, za: ZArray, store: String,
-                             name: String, mul: Long, div: Long)
-      : org.apache.spark.sql.Dataset[(Array[Long], Option[Long])] = {
+  /** Epoch/duration arrays as (`_1` indices, `_2` micros): [[chunkWalk]]
+    * with an element channel that is Long end-to-end (the numcodecs chain
+    * through [[unfilterInt64]]), values converted to micros via the
+    * unit's `mul`/`div`. Absent chunks/shards and the numpy NaT sentinel
+    * yield None. */
+  private def readEpochMicros(spark: SparkSession, za: ZArray, store: String,
+                              name: String, what: String): DataFrame = {
     import spark.implicits._
-    val rank = za.shape.length
-    val dims = za.shape.toArray
-    val cdims = za.chunks.toArray
-    val nChunksPerDim = Array.tabulate(rank)(d => ((dims(d) + cdims(d) - 1) / cdims(d)).toInt)
-    val dir = childPath(store, name)
-    val fsSnap = FsIo.snapshot(spark)
-    val (comp, sep, zCrc, little) =
-      (za.compressor, za.dimSeparator, za.crc32c, za.littleEndian)
-    val cOrder = za.cOrder
-    val keyPrefix = za.keyPrefix
-    val filters = za.filters
+    val (mul, div) = epochUnitToMicros(za.name, za.dtUnit, what)
     val allowDelta = allowUnverifiedDelta(spark)
-    val chunkElems = cdims.product.toInt
-    // with a filter chain the stored element width is the last VALUE
-    // filter's astype (same contract as readVariable)
-    val storedSize = filters.filterNot(_.id == "shuffle").lastOption
-      .map(_.asSize).getOrElse(8)
-    val sharding = za.sharding
-    chunkCoordRdd(spark, nChunksPerDim).flatMap { cc =>
-      // one stored block's elements, clipped past the array edge — the
-      // Long twin of readVariable's emit
-      def emit(vals: Option[Int => Option[Long]], edims: Array[Long],
-               blockOrigin: Array[Long], localCOrder: Boolean)
-          : Iterator[(Array[Long], Option[Long])] = {
-        val nElems = edims.product.toInt
-        (0 until nElems).iterator.flatMap { flat =>
-          var rem = flat.toLong
-          val idx = new Array[Long](rank)
-          if (localCOrder) {
-            var i = rank - 1
-            while (i >= 0) { idx(i) = rem % edims(i); rem /= edims(i); i -= 1 }
+    val raw: org.apache.spark.sql.Dataset[(Array[Long], Option[Long])] =
+      chunkWalk(spark, za, store, name, Some(None: Option[Long])) { b =>
+        val plain = decompress(b.comp, b.bytes, b.nElems * storedWidth(b.filters, 8),
+          allowDelta)
+        val get: Int => Long =
+          if (b.filters.nonEmpty) {
+            val arr = unfilterInt64(plain, b.filters, b.nElems, b.little)
+            arr(_)
           } else {
-            var i = 0
-            while (i < rank) { idx(i) = rem % edims(i); rem /= edims(i); i += 1 }
+            val bb = order(plain, b.little)
+            i => bb.getLong(i * 8)
           }
-          var inBounds = true
-          var j = 0
-          while (j < rank) {
-            idx(j) += cc(j).toLong * cdims(j) + blockOrigin(j)
-            if (idx(j) >= dims(j)) inBounds = false
-            j += 1
-          }
-          if (!inBounds) None else Some((idx, vals.flatMap(_(flat))))
+        i => {
+          val v = get(i)
+          if (v == Long.MinValue) None // numpy NaT
+          else Some(Math.floorDiv(Math.multiplyExact(v, mul), div))
         }
-      }
-      def toMicros(v: Long): Option[Long] =
-        if (v == Long.MinValue) None // numpy NaT
-        else Some(Math.floorDiv(Math.multiplyExact(v, mul), div))
-      val key = keyPrefix + cc.mkString(sep)
-      val fPath = dir + "/" + key
-      val zero = new Array[Long](rank)
-      sharding match {
-        case None =>
-          // absent chunk (None) → NULL values
-          val vals: Option[Int => Option[Long]] =
-            FsIo.readAllIfExists(fsSnap.value, fPath).map { all =>
-              val stored = if (zCrc) stripCrc32c(all, key) else all
-              val plain = decompress(comp, stored, chunkElems * storedSize, allowDelta)
-              val get: Int => Long =
-                if (filters.nonEmpty) {
-                  val arr = unfilterInt64(plain, filters, chunkElems, little)
-                  arr(_)
-                } else {
-                  val bb = order(plain, little)
-                  i => bb.getLong(i * 8)
-                }
-              i => toMicros(get(i))
-            }
-          emit(vals, cdims.map(_.toLong), zero, cOrder)
-        case Some(sh) =>
-          val ich = sh.innerChunks.toArray
-          val innerPerDim = Array.tabulate(rank)(d => (cdims(d) / ich(d)).toInt)
-          val nInner = innerPerDim.product
-          val innerElems = ich.product.toInt
-          def innerOrigin(si: Int): Array[Long] = { // C order over the inner grid
-            val icc = new Array[Long](rank)
-            var rem = si; var i = rank - 1
-            while (i >= 0) { icc(i) = (rem % innerPerDim(i)).toLong * ich(i)
-              rem /= innerPerDim(i); i -= 1 }
-            icc
-          }
-          if (!FsIo.isFile(fsSnap.value, fPath)) // absent shard = every inner chunk NULL
-            (0 until nInner).iterator.flatMap(si =>
-              emit(None, ich, innerOrigin(si), sh.innerCOrder))
-          else {
-            val bodies = readShardBodies(fsSnap.value, fPath, nInner, sh)
-            (0 until nInner).iterator.flatMap { si =>
-              emit(bodies(si).map { b =>
-                  val bb = order(decompress(sh.innerComp, b,
-                    innerElems * 8, allowDelta), sh.innerLittle)
-                  (i: Int) => toMicros(bb.getLong(i * 8))
-                },
-                ich, innerOrigin(si), sh.innerCOrder)
-            }
-          }
-      }
-    }.toDS()
+      }.toDS()
+    raw.toDF()
   }
 
   /** A CF-ENCODED time coordinate — a numeric array carrying
@@ -1397,8 +1115,10 @@ object Zarr {
     * trailing dimension UNCHUNKED (the layout embedding dumps use —
     * each chunk is a batch of whole rows) and C order, so every stored
     * chunk holds whole vectors; executors emit their own chunks' rows
-    * and the driver touches only metadata (the same range-based walk as
-    * [[readVariable]]). Absent chunks → NULL vectors. CF unpacking is
+    * and the driver touches only metadata (the same range-based
+    * [[chunkCoordRdd]] as [[chunkWalk]], emitting whole rows, and the
+    * same [[numericBlock]] decoder as [[readVariable]]). Absent chunks →
+    * NULL vectors. CF unpacking is
     * NOT applied — embedding matrices don't carry fill/scale masks, and
     * silently masking vector components would corrupt similarity math —
     * so declared scale/offset attrs reject loudly. numcodecs filter
@@ -1426,14 +1146,10 @@ object Zarr {
     val nLeadChunks = ((n + lead - 1) / lead).toInt
     val dir = childPath(store, name)
     val fsSnap = FsIo.snapshot(spark)
-    val (kind, size, little) = (za.dtKind, za.dtSize, za.littleEndian)
     val (comp, sep, crc) = (za.compressor, za.dimSeparator, za.crc32c)
-    val keyPrefix = za.keyPrefix
-    val filters = za.filters
-    val allowDelta = allowUnverifiedDelta(spark)
+    val (little, keyPrefix, filters) = (za.littleEndian, za.keyPrefix, za.filters)
+    val decode = numericBlock(za.dtKind, za.dtSize, allowUnverifiedDelta(spark))
     val chunkElems = (lead * dim).toInt
-    val storedSize = filters.filterNot(_.id == "shuffle").lastOption
-      .map(_.asSize).getOrElse(size)
     val raw: org.apache.spark.sql.Dataset[(Long, Array[Double])] =
       chunkCoordRdd(spark, Array(nLeadChunks, 1)).flatMap { cc =>
         val key = keyPrefix + cc.mkString(sep)
@@ -1443,25 +1159,125 @@ object Zarr {
             (0 until rowsHere).iterator.map(r =>
               (cc(0).toLong * lead + r, null.asInstanceOf[Array[Double]]))
           case Some(all) =>
-            val stored = if (crc) stripCrc32c(all, key) else all
-            val plain = decompress(comp, stored, chunkElems * storedSize, allowDelta)
-            val get: Int => Double =
-              if (filters.nonEmpty) {
-                val arr = unfilter(plain, filters, chunkElems, kind, size, little)
-                arr(_)
-              } else {
-                val bb = order(plain, little)
-                decodeAt(bb, kind, size, _)
-              }
+            val get = decode(ZBlock(if (crc) stripCrc32c(all, key) else all,
+              comp, little, filters, chunkElems, key))
             (0 until rowsHere).iterator.map { r =>
               (cc(0).toLong * lead + r, Array.tabulate(dim)(c => get(r * dim + c)))
             }
         }
       }.toDS()
-    val iName = if (za.dimNames.length == 2) za.dimNames.head else "i0"
-    raw.toDF(iName, "vec")
+    raw.toDF(dimNames(za).head, "vec")
   }
 
+  /** One stored block handed to a reader's decoder: the bytes of a whole
+    * chunk (crc32c stripped; the array's compressor, byte order and
+    * filters) or of one inner chunk of a shard (the shard's inner codec,
+    * no filters), with its element count and the key errors name. */
+  private final case class ZBlock(bytes: Array[Byte], comp: String, little: Boolean,
+                                  filters: Seq[ZFilter], nElems: Int, key: String)
+
+  /** The executor-side chunk walk every element reader shares: one
+    * [[chunkCoordRdd]] over the chunk grid; per chunk the key and path,
+    * the crc32c strip, and either the plain chunk or the shard's inner
+    * chunks ([[readShardBodies]]: I/O eager, so the handle closes before
+    * the lazy element iterator runs; decode lazy, so peak memory is the
+    * compressed shard). Each present block goes through `decode`; its
+    * elements are unraveled in the block's own order (C: last dim
+    * fastest; F: first dim fastest), offset to global indices and
+    * clipped past the array edge (edge blocks store a full grid). An
+    * absent chunk, shard or inner chunk — legal in Zarr — emits `absent`
+    * per element, or nothing when `absent` is None. */
+  private def chunkWalk[T](spark: SparkSession, za: ZArray, store: String, name: String,
+                           absent: Option[T])(decode: ZBlock => Int => T)
+      : org.apache.spark.rdd.RDD[(Array[Long], T)] = {
+    val rank = za.shape.length
+    val dims = za.shape.toArray
+    val cdims = za.chunks.toArray
+    val nChunksPerDim = Array.tabulate(rank)(d => ((dims(d) + cdims(d) - 1) / cdims(d)).toInt)
+    val dir = childPath(store, name)
+    val fsSnap = FsIo.snapshot(spark) // chunk fetches go through Hadoop FS
+    val (comp, little, filters, crc) = (za.compressor, za.littleEndian, za.filters, za.crc32c)
+    val (keyPrefix, sep, cOrder) = (za.keyPrefix, za.dimSeparator, za.cOrder)
+    val sharding = za.sharding
+    val chunkElems = cdims.product.toInt
+    chunkCoordRdd(spark, nChunksPerDim).flatMap { cc =>
+      // the elements of one block of shape `bdims` at `origin` within chunk cc
+      def emit(data: Option[Int => T], bdims: Array[Long], origin: Array[Long],
+               blockCOrder: Boolean): Iterator[(Array[Long], T)] =
+        if (data.isEmpty && absent.isEmpty) Iterator.empty
+        else {
+          val value: Int => T = data.getOrElse { val a = absent.get; (_: Int) => a }
+          (0 until bdims.product.toInt).iterator.flatMap { flat =>
+            var rem = flat.toLong
+            val idx = new Array[Long](rank)
+            if (blockCOrder) {
+              var i = rank - 1
+              while (i >= 0) { idx(i) = rem % bdims(i); rem /= bdims(i); i -= 1 }
+            } else {
+              var i = 0
+              while (i < rank) { idx(i) = rem % bdims(i); rem /= bdims(i); i += 1 }
+            }
+            var inBounds = true
+            var j = 0
+            while (j < rank) {
+              idx(j) += cc(j).toLong * cdims(j) + origin(j)
+              if (idx(j) >= dims(j)) inBounds = false
+              j += 1
+            }
+            if (!inBounds) None else Some((idx, value(flat)))
+          }
+        }
+      val key = keyPrefix + cc.mkString(sep)
+      val fPath = dir + "/" + key
+      sharding match {
+        case None =>
+          val data = FsIo.readAllIfExists(fsSnap.value, fPath).map { all =>
+            decode(ZBlock(if (crc) stripCrc32c(all, key) else all,
+              comp, little, filters, chunkElems, key))
+          }
+          emit(data, cdims, new Array[Long](rank), cOrder)
+        case Some(sh) =>
+          // one shard file = inner chunks + (offset, nbytes) index;
+          // range-read the index, then only the present inner chunks —
+          // the executor-side analogue of object-store ranged GETs
+          val ich = sh.innerChunks.toArray
+          val innerPerDim = Array.tabulate(rank)(d => (cdims(d) / ich(d)).toInt)
+          val nInner = innerPerDim.product
+          val innerElems = ich.product.toInt
+          def innerOrigin(si: Int): Array[Long] = { // C order over the inner grid
+            val icc = new Array[Long](rank)
+            var rem = si; var i = rank - 1
+            while (i >= 0) { icc(i) = (rem % innerPerDim(i)).toLong * ich(i)
+              rem /= innerPerDim(i); i -= 1 }
+            icc
+          }
+          val bodies =
+            if (FsIo.isFile(fsSnap.value, fPath)) readShardBodies(fsSnap.value, fPath, nInner, sh)
+            else IndexedSeq.fill(nInner)(None) // absent shard = every inner chunk absent
+          (0 until nInner).iterator.flatMap { si =>
+            emit(bodies(si).map(b => decode(ZBlock(b, sh.innerComp, sh.innerLittle,
+                Nil, innerElems, s"$key#$si"))),
+              ich, innerOrigin(si), sh.innerCOrder)
+          }
+      }
+    }
+  }
+
+  /** Dimension column names: the `_ARRAY_DIMENSIONS` / v3
+    * `dimension_names` when present for every axis, else `i0`, `i1`, … */
+  private def dimNames(za: ZArray): Seq[String] = {
+    val rank = za.shape.length
+    if (za.dimNames.length == rank) za.dimNames else (0 until rank).map(i => s"i$i")
+  }
+
+  /** A walked reader's (dim…, value) projection: `_1`'s indices as INT
+    * dimension columns ([[dimNames]]) plus `value`. */
+  private def dimFrame(za: ZArray, raw: DataFrame,
+                       value: org.apache.spark.sql.Column): DataFrame = {
+    val names = dimNames(za)
+    raw.select(names.indices.map(i => col("_1")(i).cast("int").as(names(i))) :+
+      value.as("value"): _*)
+  }
   /** Chunk-coordinate RDD with NO driver-side materialization: a
     * `sparkContext.range` over the flat chunk count, unraveled to grid
     * coordinates on executors (C order over the chunk grid, matching
@@ -1487,33 +1303,6 @@ object Zarr {
       }
       cc
     }
-  }
-
-  /** Flat in-chunk element position → global indices (None = past the
-    * array edge): C order unravels last-dim-fastest, F order
-    * first-dim-fastest — used by [[readBinary]]'s hand-rolled chunk walk
-    * (readVariable/readStrings and the temporal readers' readEpochLongs
-    * carry their own emit closures). */
-  private def flatChunkIdx(flat: Int, rank: Int, cdims: Array[Long],
-                           cc: Array[Int], dims: Array[Long],
-                           cOrder: Boolean): Option[Array[Long]] = {
-    var rem = flat.toLong
-    val idx = new Array[Long](rank)
-    if (cOrder) {
-      var i = rank - 1
-      while (i >= 0) { idx(i) = rem % cdims(i); rem /= cdims(i); i -= 1 }
-    } else {
-      var i = 0
-      while (i < rank) { idx(i) = rem % cdims(i); rem /= cdims(i); i += 1 }
-    }
-    var inBounds = true
-    var j = 0
-    while (j < rank) {
-      idx(j) += cc(j).toLong * cdims(j)
-      if (idx(j) >= dims(j)) inBounds = false
-      j += 1
-    }
-    if (inBounds) Some(idx) else None
   }
 
   private def order(bb: Array[Byte], le: Boolean): java.nio.ByteBuffer = {
@@ -1797,12 +1586,7 @@ object Zarr {
       """{"_ARRAY_DIMENSIONS": ["doc"]}""".getBytes(utf8))
     for (c <- 0 until 2) {
       val items = (0 until 3).map(j => s"doc_${c * 3 + j}_αβ".getBytes(utf8))
-      val total = 4 + items.map(4 + _.length).sum
-      val bb = java.nio.ByteBuffer.allocate(total)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.putInt(items.length)
-      items.foreach { b => bb.putInt(b.length); bb.put(b) }
-      fxWrite(new File(lDir, s"$c"), fxDeflate(bb.array()))
+      fxWrite(new File(lDir, s"$c"), fxDeflate(vlenBytes(items)))
     }
     // tags: |S8 fixed bytes, zlib, edge chunks + one absent chunk
     val tDir = new File(store, "tags"); tDir.mkdirs()
@@ -1853,16 +1637,8 @@ object Zarr {
     fxWrite(new File(pDir, ".zattrs"),
       """{"_ARRAY_DIMENSIONS": ["doc"]}""".getBytes(utf8))
     for (c <- 0 until 3 if c != 1) { // chunk 1 absent -> NULL payloads
-      val items = (0 until 3).map { j =>
-        val g = c * 3 + j
-        plantedPayload(g)
-      }
-      val total = 4 + items.map(4 + _.length).sum
-      val bb = java.nio.ByteBuffer.allocate(total)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.putInt(items.length)
-      items.foreach { b => bb.putInt(b.length); bb.put(b) }
-      fxWrite(new File(pDir, s"$c"), fxDeflate(bb.array()))
+      val items = (0 until 3).map(j => plantedPayload(c * 3 + j))
+      fxWrite(new File(pDir, s"$c"), fxDeflate(vlenBytes(items)))
     }
     val cDir = new File(store, "counts"); cDir.mkdirs()
     fxWrite(new File(cDir, ".zarray"),
@@ -1924,11 +1700,7 @@ object Zarr {
       """{"_ARRAY_DIMENSIONS": ["i"]}""".getBytes(utf8))
     val sb = java.nio.ByteBuffer.allocate(16).order(java.nio.ByteOrder.BIG_ENDIAN)
     sb.putLong(0L); sb.putLong(-1L)
-    val d = new java.util.zip.Deflater(1)
-    d.setInput(sb.array()); d.finish()
-    val out = new Array[Byte](64)
-    val n = d.deflate(out); d.end()
-    fxWrite(new File(sDir, "0"), out.take(n))
+    fxWrite(new File(sDir, "0"), fxDeflate(sb.array()))
   }
 
   /** Fixture store for the r12 numcodecs object codecs, closed-form:
@@ -1946,11 +1718,6 @@ object Zarr {
     *   (not valid UTF-8, so a text-path misread cannot round-trip). */
   def plantedMsgpackStore(store: String): Unit = {
     import Msgpack._
-    def gzip(b: Array[Byte]): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(b); gz.close(); bos.toByteArray
-    }
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     // mlabels: msgpack2 + zlib
     val mDir = new File(store, "mlabels"); mDir.mkdirs()
@@ -1987,7 +1754,7 @@ object Zarr {
         else "\"j" + g + "_\\u00e9\"" // é as a \u escape (ensure_ascii)
       }
       val json = vals.mkString("[", ", ", ", \"|O\", [2]]")
-      fxWrite(new File(jDir, s"$c"), gzip(json.getBytes(utf8)))
+      fxWrite(new File(jDir, s"$c"), gzipBytes(json.getBytes(utf8)))
     }
     // mblobs: msgpack2, uncompressed, bin payloads
     val bDir = new File(store, "mblobs"); bDir.mkdirs()
@@ -2020,29 +1787,8 @@ object Zarr {
     *   valid UTF-8, so a text-path misread cannot round-trip).
     */
   def plantedStringStoreV3(store: String): Unit = {
-    def gzip(b: Array[Byte]): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(b); gz.close()
-      bos.toByteArray
-    }
     def zstd(b: Array[Byte]): Array[Byte] =
       com.github.luben.zstd.Zstd.compress(b, 3)
-    def crc32c(b: Array[Byte]): Array[Byte] = {
-      val c = new java.util.zip.CRC32C()
-      c.update(b, 0, b.length)
-      val bb = java.nio.ByteBuffer.allocate(b.length + 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put(b).putInt(c.getValue.toInt)
-      bb.array()
-    }
-    def vlen(items: Seq[Array[Byte]]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(4 + items.map(4 + _.length).sum)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.putInt(items.length)
-      items.foreach { b => bb.putInt(b.length); bb.put(b) }
-      bb.array()
-    }
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     new File(store).mkdirs()
     fxWrite(new File(store, "zarr.json"),
@@ -2063,7 +1809,7 @@ object Zarr {
          | "dimension_names": ["doc"]}""").stripMargin.getBytes(utf8))
     for (c <- Seq(0, 2)) { // chunk 1 absent → NULLs at 3..5
       val items = (0 until 3).map(j => s"v3_${c * 3 + j}_λ".getBytes(utf8))
-      fxWrite(new File(lDir, s"c/$c"), gzip(vlen(items)))
+      fxWrite(new File(lDir, s"c/$c"), gzipBytes(vlenBytes(items)))
     }
 
     // tags: sharded string array, inner [vlen-utf8, zstd], index crc32c
@@ -2084,25 +1830,10 @@ object Zarr {
          |     "configuration": {"endian": "little"}}, {"name": "crc32c"}],
          |   "index_location": "end"}}],
          | "dimension_names": ["doc"]}""").stripMargin.getBytes(utf8))
-    def shard(bodies: Seq[Option[Array[Byte]]]): Array[Byte] = {
-      val offs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val data = new java.io.ByteArrayOutputStream()
-      bodies.foreach {
-        case Some(b) => offs += ((data.size.toLong, b.length.toLong)); data.write(b)
-        case None    => offs += ((-1L, -1L))
-      }
-      val idx = java.nio.ByteBuffer.allocate(bodies.length * 16)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      offs.foreach { case (o, n) => idx.putLong(o).putLong(n) }
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(data.toByteArray)
-      out.write(crc32c(idx.array()))
-      out.toByteArray
-    }
     def tagBody(lo: Int): Array[Byte] =
-      zstd(vlen((lo until lo + 2).map(i => s"t${i}é".getBytes(utf8))))
-    fxWrite(new File(tDir, "c/0"), shard(Seq(Some(tagBody(0)), Some(tagBody(2)))))
-    fxWrite(new File(tDir, "c/1"), shard(Seq(Some(tagBody(4)), None)))
+      zstd(vlenBytes((lo until lo + 2).map(i => s"t${i}é".getBytes(utf8))))
+    fxWrite(new File(tDir, "c/0"), fxShard(Seq(Some(tagBody(0)), Some(tagBody(2)))))
+    fxWrite(new File(tDir, "c/1"), fxShard(Seq(Some(tagBody(4)), None)))
 
     // blobs: v3 bytes data_type, vlen-bytes + zstd + crc32c
     val bDir = new File(store, "blobs"); new File(bDir, "c").mkdirs()
@@ -2118,7 +1849,7 @@ object Zarr {
          |   "configuration": {"level": 3}}, {"name": "crc32c"}],
          | "dimension_names": ["doc"]}""").stripMargin.getBytes(utf8))
     fxWrite(new File(bDir, "c/0"),
-      crc32c(zstd(vlen((0 until 5).map(i => plantedPayload(i + 7))))))
+      fxCrc32c(zstd(vlenBytes((0 until 5).map(i => plantedPayload(i + 7))))))
   }
 
   /** Fixture store for the r13 temporal tier, closed-form:
@@ -2143,26 +1874,7 @@ object Zarr {
     *   `tdm` — v2 `<m8[m]` raw, shape [3] chunks [2]: 90 min / NaT /
     *   −90 min (pins the minutes unit, reachable only for timedeltas). */
   def plantedTemporalStore(store: String): Unit = {
-    def gzip(b: Array[Byte]): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(b); gz.close()
-      bos.toByteArray
-    }
-    def crc32c(b: Array[Byte]): Array[Byte] = {
-      val c = new java.util.zip.CRC32C()
-      c.update(b, 0, b.length)
-      val bb = java.nio.ByteBuffer.allocate(b.length + 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put(b).putInt(c.getValue.toInt)
-      bb.array()
-    }
-    def longsLE(vs: Seq[Long]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(vs.length * 8)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      vs.foreach(bb.putLong)
-      bb.array()
-    }
+    def longsLE(vs: Seq[Long]): Array[Byte] = longsLEBuf(vs.toArray)
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
 
     // tf: Delta-filtered zlib'd <M8[s]
@@ -2204,29 +1916,14 @@ object Zarr {
          |     "configuration": {"endian": "little"}}, {"name": "crc32c"}],
          |   "index_location": "end"}}],
          | "dimension_names": ["i"]}""").stripMargin.getBytes(utf8))
-    def shard(bodies: Seq[Option[Array[Byte]]]): Array[Byte] = {
-      val offs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val data = new java.io.ByteArrayOutputStream()
-      bodies.foreach {
-        case Some(b) => offs += ((data.size.toLong, b.length.toLong)); data.write(b)
-        case None    => offs += ((-1L, -1L))
-      }
-      val idx = java.nio.ByteBuffer.allocate(bodies.length * 16)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      offs.foreach { case (o, n) => idx.putLong(o).putLong(n) }
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(data.toByteArray)
-      out.write(crc32c(idx.array()))
-      out.toByteArray
-    }
     val sBaseUs = 946684798L * 1000000L // 1999-12-31T23:59:58Z
     def tshVal(i: Int): Long =
       if (i == 9) Long.MinValue else sBaseUs + i * 1000000L + i
-    def inner(lo: Int): Array[Byte] = gzip(longsLE(Seq(tshVal(lo), tshVal(lo + 1))))
+    def inner(lo: Int): Array[Byte] = gzipBytes(longsLE(Seq(tshVal(lo), tshVal(lo + 1))))
     fxWrite(new File(sDir, "c/0"), // inner (2,3) missing → NULL
-      shard(Seq(Some(inner(0)), None, Some(inner(4)), Some(inner(6)))))
+      fxShard(Seq(Some(inner(0)), None, Some(inner(4)), Some(inner(6)))))
     fxWrite(new File(sDir, "c/1"), // inner chunks past the edge absent
-      shard(Seq(Some(inner(8)), Some(inner(10)), None, None)))
+      fxShard(Seq(Some(inner(8)), Some(inner(10)), None, None)))
 
     // td: zlib'd <m8[ms]
     val dDir = new File(store, "td"); dDir.mkdirs()
@@ -2280,21 +1977,13 @@ object Zarr {
       fxWrite(new File(dir, ".zattrs"), attrsJson.getBytes(utf8))
       fxWrite(new File(dir, "0"), payload)
     }
-    def longsLE(vs: Seq[Long]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(vs.length * 8)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      vs.foreach(bb.putLong); bb.array()
-    }
+    def longsLE(vs: Seq[Long]): Array[Byte] = longsLEBuf(vs.toArray)
     def intsLE(vs: Seq[Int]): Array[Byte] = {
       val bb = java.nio.ByteBuffer.allocate(vs.length * 4)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       vs.foreach(bb.putInt); bb.array()
     }
-    def dblsLE(vs: Seq[Double]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(vs.length * 8)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      vs.foreach(bb.putDouble); bb.array()
-    }
+    def dblsLE(vs: Seq[Double]): Array[Byte] = doublesLE(vs.toArray)
     arr("tstd", "<i8", "null", 4,
       """{"_ARRAY_DIMENSIONS": ["i"], "units": "days since 1850-01-01"}""",
       longsLE(Seq(0L, 36524L, -365L, 51000L)))
@@ -2389,22 +2078,56 @@ object Zarr {
 
   // ---------------- writer (lake → Zarr v2 store) ----------------
 
-  /** Shared chunk-export scaffold for [[writeArray]]/[[writeStrings]]:
-    * derive dims from the dim columns' maxima, split only the LEADING
-    * dimension so chunks land near `targetChunkElems`, shuffle once on
-    * the leading-dim chunk id (`repartitionByRange` + in-partition sort)
-    * so each task owns whole chunk files, fill a per-chunk buffer, and
-    * write the zlib-deflated encoding. The driver writes only the two
-    * JSON metadata files. */
-  private def writeChunked[T](df: org.apache.spark.sql.DataFrame, store: String,
-      name: String, targetChunkElems: Long, maxInnerElems: Long,
+  /** A store layout: the metadata documents for (shape, chunk shape, dim
+    * columns), the chunk key for its grid coordinates, and the chunk
+    * compressor. Built by [[v2Layout]] and [[v3Layout]]. */
+  private final case class Layout(
       metaFiles: (Seq[Long], Seq[Long], Seq[String]) => Seq[(String, String)],
       chunkKey: Seq[String] => String,
-      castValue: org.apache.spark.sql.Column,
-      fillBuf: Int => Array[T],
-      setCell: (Array[T], Int, org.apache.spark.sql.Row) => Unit,
-      encodePlain: (Array[T], Long) => Array[Byte],
-      compress: Array[Byte] => Array[Byte]): Unit = {
+      compress: Array[Byte] => Array[Byte])
+
+  /** The v2 writers' layout: `.zarray` with `dtype`, zlib level 6, C
+    * order and the given `fill_value`/`filters` JSON; `.zattrs` with
+    * `_ARRAY_DIMENSIONS` plus `extraAttrs` (JSON members, each led by
+    * ", "); `.`-joined chunk keys. */
+  private def v2Layout(dtype: String, fillValue: String, filters: String = "null",
+                       extraAttrs: String = ""): Layout =
+    Layout((dims, chunkDims, dimCols) => Seq(
+        ".zarray" ->
+          (s"""{"zarr_format": 2, "shape": [${dims.mkString(", ")}], """ +
+            s""""chunks": [${chunkDims.mkString(", ")}], "dtype": "$dtype", """ +
+            s""""compressor": {"id": "zlib", "level": 6}, "fill_value": $fillValue, """ +
+            s""""filters": $filters, "order": "C"}"""),
+        ".zattrs" ->
+          s"""{"_ARRAY_DIMENSIONS": [${dimCols.map(jsonStr).mkString(", ")}]$extraAttrs}"""),
+      _.mkString("."), deflateZlib)
+
+  /** How a writer buffers one chunk: the per-leading-index-slice element
+    * budget, a buffer of absent cells, one cell set from a row's `_v`,
+    * and the chunk's plain encoding. */
+  private final case class Cells[T](maxInnerElems: Long, fillBuf: Int => Array[T],
+                                    setCell: (Array[T], Int, org.apache.spark.sql.Row) => Unit,
+                                    encodePlain: (Array[T], Long) => Array[Byte])
+
+  private val doubleCells = Cells[Double](1L << 28, // 2 GiB of doubles per slice
+    Array.fill(_)(Double.NaN), (buf, off, r) => buf(off) = r.getDouble(2),
+    (buf, _) => doublesLE(buf))
+  private val stringCells = Cells[String](1L << 24, Array.fill(_)(""),
+    (buf, off, r) => buf(off) = r.getString(2), vlenEncodePlain)
+  private def longCells(absent: Long) = Cells[Long](1L << 28, Array.fill(_)(absent),
+    (buf, off, r) => buf(off) = r.getLong(2), (buf, _) => longsLEBuf(buf))
+
+  /** Shared chunk-export scaffold for every writer: derive dims from the
+    * dim columns' maxima, split only the LEADING dimension so chunks land
+    * near `targetChunkElems`, shuffle once on the leading-dim chunk id
+    * (`repartitionByRange` + in-partition sort) so each task owns whole
+    * chunk files, fill a per-chunk buffer, and write its compressed
+    * encoding. The driver writes only the JSON metadata files. */
+  private def writeChunked[T](df: org.apache.spark.sql.DataFrame, store: String,
+      name: String, targetChunkElems: Long, layout: Layout,
+      castValue: org.apache.spark.sql.Column, cells: Cells[T]): Unit = {
+    val Cells(maxInnerElems, fillBuf, setCell, encodePlain) = cells
+    val (chunkKey, compress) = (layout.chunkKey, layout.compress)
     val dimCols = df.columns.filter(_ != "value").toSeq
     require(dimCols.nonEmpty, "need at least one dimension column")
     val dims: Seq[Long] = {
@@ -2413,9 +2136,9 @@ object Zarr {
     }
     val innerElems = dims.tail.product
     // The splitting scheme only divides the LEADING dim, so one chunk is
-    // at least innerElems elements — which must fit the caller's buffer
-    // budget (2 GiB of doubles for writeArray; the vlen payload limit is
-    // re-checked per chunk for strings).
+    // at least innerElems elements — which must fit the cells' buffer
+    // budget (2 GiB of doubles; the vlen payload limit is re-checked per
+    // chunk for strings).
     require(innerElems > 0 && innerElems <= maxInnerElems,
       s"trailing dims ${dims.tail.mkString("x")} = $innerElems elems per " +
         "leading-index slice exceed the single-chunk buffer limit; " +
@@ -2429,7 +2152,7 @@ object Zarr {
     // snapshot ships into the chunk-writing task closures below
     val confSnap = FsIo.snapshot(df.sparkSession)
     FsIo.mkdirs(confSnap.value, s"$store/$name")
-    metaFiles(dims, chunkDims, dimCols).foreach { case (fname, content) =>
+    layout.metaFiles(dims, chunkDims, dimCols).foreach { case (fname, content) =>
       FsIo.writeBytes(confSnap.value, s"$store/$name/$fname",
         content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
@@ -2479,22 +2202,8 @@ object Zarr {
     * driver writes only the two JSON metadata files ([[writeChunked]]). */
   def writeArray(df: org.apache.spark.sql.DataFrame, store: String, name: String,
                  targetChunkElems: Long = 1 << 20): Unit =
-    writeChunked[Double](df, store, name, targetChunkElems,
-      maxInnerElems = 1L << 28, // 2 GiB of doubles per leading-index slice
-      metaFiles = (dims, chunkDims, dimCols) => Seq(
-        ".zarray" ->
-          (s"""{"zarr_format": 2, "shape": [${dims.mkString(", ")}], """ +
-            s""""chunks": [${chunkDims.mkString(", ")}], "dtype": "<f8", """ +
-            """"compressor": {"id": "zlib", "level": 6}, "fill_value": "NaN", """ +
-            """"filters": null, "order": "C"}"""),
-        ".zattrs" ->
-          s"""{"_ARRAY_DIMENSIONS": [${dimCols.map("\"" + _ + "\"").mkString(", ")}]}"""),
-      chunkKey = _.mkString("."),
-      castValue = col("value").cast("double"),
-      fillBuf = n => Array.fill(n)(Double.NaN),
-      setCell = (buf, off, r) => buf(off) = r.getDouble(2),
-      encodePlain = (buf, _) => doublesLE(buf),
-      compress = deflateZlib)
+    writeChunked(df, store, name, targetChunkElems, v2Layout("<f8", "\"NaN\""),
+      col("value").cast("double"), doubleCells)
 
   /** Write one long-format frame (dim columns + `value` STRING) as a
     * Zarr v2 `|O` + vlen-utf8 + zlib array — the export shape
@@ -2508,22 +2217,9 @@ object Zarr {
     * per element (the absent-chunk contract). */
   def writeStrings(df: org.apache.spark.sql.DataFrame, store: String, name: String,
                    targetChunkElems: Long = 1 << 18): Unit =
-    writeChunked[String](df, store, name, targetChunkElems,
-      maxInnerElems = 1L << 24,
-      metaFiles = (dims, chunkDims, dimCols) => Seq(
-        ".zarray" ->
-          (s"""{"zarr_format": 2, "shape": [${dims.mkString(", ")}], """ +
-            s""""chunks": [${chunkDims.mkString(", ")}], "dtype": "|O", """ +
-            """"compressor": {"id": "zlib", "level": 6}, "fill_value": null, """ +
-            """"filters": [{"id": "vlen-utf8"}], "order": "C"}"""),
-        ".zattrs" ->
-          s"""{"_ARRAY_DIMENSIONS": [${dimCols.map("\"" + _ + "\"").mkString(", ")}]}"""),
-      chunkKey = _.mkString("."),
-      castValue = col("value").cast("string"),
-      fillBuf = n => Array.fill(n)(""),
-      setCell = (buf, off, r) => buf(off) = r.getString(2),
-      encodePlain = vlenEncodePlain,
-      compress = deflateZlib)
+    writeChunked(df, store, name, targetChunkElems,
+      v2Layout("|O", "null", filters = """[{"id": "vlen-utf8"}]"""),
+      col("value").cast("string"), stringCells)
 
   /** Write one long-format frame (dim columns + `value` TIMESTAMP) as a
     * Zarr v2 `<M8[us]` array — the export twin of [[readDatetimes]],
@@ -2535,23 +2231,9 @@ object Zarr {
     * [[writeChunked]]'s. */
   def writeDatetimes(df: org.apache.spark.sql.DataFrame, store: String, name: String,
                      targetChunkElems: Long = 1 << 20): Unit =
-    writeChunked[Long](df, store, name, targetChunkElems,
-      maxInnerElems = 1L << 28,
-      metaFiles = (dims, chunkDims, dimCols) => Seq(
-        ".zarray" ->
-          (s"""{"zarr_format": 2, "shape": [${dims.mkString(", ")}], """ +
-            s""""chunks": [${chunkDims.mkString(", ")}], "dtype": "<M8[us]", """ +
-            """"compressor": {"id": "zlib", "level": 6}, "fill_value": null, """ +
-            """"filters": null, "order": "C"}"""),
-        ".zattrs" ->
-          s"""{"_ARRAY_DIMENSIONS": [${dimCols.map("\"" + _ + "\"").mkString(", ")}]}"""),
-      chunkKey = _.mkString("."),
+    writeChunked(df, store, name, targetChunkElems, v2Layout("<M8[us]", "null"),
       // timestamp → exact micros; unix_micros is TZ-free (epoch-anchored)
-      castValue = unix_micros(col("value").cast("timestamp")),
-      fillBuf = n => Array.fill(n)(Long.MinValue), // NaT
-      setCell = (buf, off, r) => buf(off) = r.getLong(2),
-      encodePlain = (buf, _) => longsLEBuf(buf),
-      compress = deflateZlib)
+      unix_micros(col("value").cast("timestamp")), longCells(Long.MinValue)) // NaT
 
   /** Write a CF-ENCODED time axis — the form `xr.decode_cf` consumes
     * (and [[readTimeCoordinate]] re-decodes): an `<i8` array whose
@@ -2588,23 +2270,10 @@ object Zarr {
         s"$name: value must be TIMESTAMP (encode here) or LONG " +
           s"(pre-encoded offsets), got $other")
     }
-    writeChunked[Long](df, store, name, targetChunkElems,
-      maxInnerElems = 1L << 28,
-      metaFiles = (dims, chunkDims, dimCols) => Seq(
-        ".zarray" ->
-          (s"""{"zarr_format": 2, "shape": [${dims.mkString(", ")}], """ +
-            s""""chunks": [${chunkDims.mkString(", ")}], "dtype": "<i8", """ +
-            """"compressor": {"id": "zlib", "level": 6}, "fill_value": null, """ +
-            """"filters": null, "order": "C"}"""),
-        ".zattrs" ->
-          (s"""{"_ARRAY_DIMENSIONS": [${dimCols.map("\"" + _ + "\"").mkString(", ")}], """ +
-            s""""units": ${jsonStr(units)}, "calendar": ${jsonStr(calendar)}}""")),
-      chunkKey = _.mkString("."),
-      castValue = encoded,
-      fillBuf = n => Array.fill(n)(0L),
-      setCell = (buf, off, r) => buf(off) = r.getLong(2),
-      encodePlain = (buf, _) => longsLEBuf(buf),
-      compress = deflateZlib)
+    writeChunked(df, store, name, targetChunkElems,
+      v2Layout("<i8", "null",
+        extraAttrs = s""", "units": ${jsonStr(units)}, "calendar": ${jsonStr(calendar)}"""),
+      encoded, longCells(0L))
   }
 
   /** Write one long-format frame (dim columns + `value` INTERVAL DAY TO
@@ -2615,22 +2284,8 @@ object Zarr {
     * → NaT, empty chunks unwritten. */
   def writeTimedeltas(df: org.apache.spark.sql.DataFrame, store: String, name: String,
                       targetChunkElems: Long = 1 << 20): Unit =
-    writeChunked[Long](df, store, name, targetChunkElems,
-      maxInnerElems = 1L << 28,
-      metaFiles = (dims, chunkDims, dimCols) => Seq(
-        ".zarray" ->
-          (s"""{"zarr_format": 2, "shape": [${dims.mkString(", ")}], """ +
-            s""""chunks": [${chunkDims.mkString(", ")}], "dtype": "<m8[us]", """ +
-            """"compressor": {"id": "zlib", "level": 6}, "fill_value": null, """ +
-            """"filters": null, "order": "C"}"""),
-        ".zattrs" ->
-          s"""{"_ARRAY_DIMENSIONS": [${dimCols.map("\"" + _ + "\"").mkString(", ")}]}"""),
-      chunkKey = _.mkString("."),
-      castValue = unix_micros(timestamp_micros(lit(0L)) + col("value")),
-      fillBuf = n => Array.fill(n)(Long.MinValue), // NaT
-      setCell = (buf, off, r) => buf(off) = r.getLong(2),
-      encodePlain = (buf, _) => longsLEBuf(buf),
-      compress = deflateZlib)
+    writeChunked(df, store, name, targetChunkElems, v2Layout("<m8[us]", "null"),
+      unix_micros(timestamp_micros(lit(0L)) + col("value")), longCells(Long.MinValue)) // NaT
 
   // ---------------- fixture plumbing (planted stores) ----------------
 
@@ -2650,8 +2305,42 @@ object Zarr {
     out.take(n)
   }
 
+  /** The published VLen layout `[n u32 LE][len u32 LE + bytes]*` of
+    * `items` (under 2 GiB) — the string writers' and the planted
+    * fixtures' object payload. */
+  private def vlenBytes(items: scala.collection.Seq[Array[Byte]]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4 + items.map(4 + _.length).sum)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(items.length)
+    items.foreach { b => bb.putInt(b.length); bb.put(b) }
+    bb.array()
+  }
+
+  /** `b` followed by its little-endian crc32c (the v3 `crc32c` codec). */
+  private def fxCrc32c(b: Array[Byte]): Array[Byte] = {
+    val c = new java.util.zip.CRC32C()
+    c.update(b, 0, b.length)
+    java.nio.ByteBuffer.allocate(b.length + 4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put(b).putInt(c.getValue.toInt).array()
+  }
+
+  /** A `sharding_indexed` shard: the present inner-chunk bodies back to
+    * back, then the (offset, nbytes) u64 LE index — (-1, -1) for a
+    * missing inner chunk — crc32c'd at the shard end. */
+  private def fxShard(bodies: Seq[Option[Array[Byte]]]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val idx = java.nio.ByteBuffer.allocate(bodies.length * 16)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bodies.foreach {
+      case Some(b) => idx.putLong(out.size.toLong).putLong(b.length.toLong); out.write(b)
+      case None    => idx.putLong(-1L).putLong(-1L)
+    }
+    out.write(fxCrc32c(idx.array()))
+    out.toByteArray
+  }
+
   /** Chunk buffer of int64s → little-endian bytes (the `<M8`/`<m8`
-    * payload) — shared by the temporal writers. */
+    * payload) — shared by the temporal writers and the fixtures. */
   private def longsLEBuf(buf: Array[Long]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -2660,7 +2349,7 @@ object Zarr {
   }
 
   /** Chunk buffer of doubles → little-endian bytes (the `<f8`/v3
-    * `bytes le` payload) — shared by the v2 and v3 array writers. */
+    * `bytes le` payload) — shared by the array writers and the fixtures. */
   private def doublesLE(buf: Array[Double]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -2677,11 +2366,7 @@ object Zarr {
     require(total <= Int.MaxValue,
       s"chunk $chunkId vlen payload $total bytes exceeds the 2 GiB " +
         "buffer limit; lower targetChunkElems")
-    val bb = java.nio.ByteBuffer.allocate(total.toInt)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(items.length)
-    items.foreach { b => bb.putInt(b.length); bb.put(b) }
-    bb.array()
+    vlenBytes(items)
   }
 
   private def deflateZlib(plain: Array[Byte]): Array[Byte] = {
@@ -2703,6 +2388,24 @@ object Zarr {
 
   // ---------------- writer (lake → Zarr V3 store) ----------------
 
+  /** The v3 writers' layout: one `zarr.json` with `data_type`, a regular
+    * chunk grid, the `default` chunk-key encoding (`c/<i>/0…` keys), the
+    * given `fill_value` JSON, codecs `[arrayCodec, gzip 6]` and inline
+    * `dimension_names`. */
+  private def v3Layout(dataType: String, fillValue: String, arrayCodec: String): Layout =
+    Layout((dims, chunkDims, dimCols) => Seq(
+        "zarr.json" ->
+          (s"""{"zarr_format": 3, "node_type": "array", """ +
+            s""""shape": [${dims.mkString(", ")}], "data_type": "$dataType", """ +
+            s""""chunk_grid": {"name": "regular", "configuration": """ +
+            s"""{"chunk_shape": [${chunkDims.mkString(", ")}]}}, """ +
+            """"chunk_key_encoding": {"name": "default", "configuration": """ +
+            s"""{"separator": "/"}}, "fill_value": $fillValue, """ +
+            s""""codecs": [$arrayCodec, """ +
+            """{"name": "gzip", "configuration": {"level": 6}}], """ +
+            s""""dimension_names": [${dimCols.map(jsonStr).mkString(", ")}]}""")),
+      coords => "c/" + coords.mkString("/"), gzipBytes)
+
   /** [[writeArray]]'s Zarr v3 twin — the format zarr-python 3 writes by
     * default: `zarr.json` array metadata (regular chunk grid, `default`
     * chunk-key encoding → `c/<i>/0…` keys, `dimension_names` inline),
@@ -2710,25 +2413,10 @@ object Zarr {
     * chunk writes as the v2 form ([[writeChunked]]). */
   def writeArrayV3(df: org.apache.spark.sql.DataFrame, store: String, name: String,
                    targetChunkElems: Long = 1 << 20): Unit =
-    writeChunked[Double](df, store, name, targetChunkElems,
-      maxInnerElems = 1L << 28,
-      metaFiles = (dims, chunkDims, dimCols) => Seq(
-        "zarr.json" ->
-          (s"""{"zarr_format": 3, "node_type": "array", """ +
-            s""""shape": [${dims.mkString(", ")}], "data_type": "float64", """ +
-            s""""chunk_grid": {"name": "regular", "configuration": """ +
-            s"""{"chunk_shape": [${chunkDims.mkString(", ")}]}}, """ +
-            """"chunk_key_encoding": {"name": "default", "configuration": """ +
-            """{"separator": "/"}}, "fill_value": "NaN", """ +
-            """"codecs": [{"name": "bytes", "configuration": {"endian": "little"}}, """ +
-            """{"name": "gzip", "configuration": {"level": 6}}], """ +
-            s""""dimension_names": [${dimCols.map("\"" + _ + "\"").mkString(", ")}]}""")),
-      chunkKey = coords => "c/" + coords.mkString("/"),
-      castValue = col("value").cast("double"),
-      fillBuf = n => Array.fill(n)(Double.NaN),
-      setCell = (buf, off, r) => buf(off) = r.getDouble(2),
-      encodePlain = (buf, _) => doublesLE(buf),
-      compress = gzipBytes)
+    writeChunked(df, store, name, targetChunkElems,
+      v3Layout("float64", "\"NaN\"",
+        """{"name": "bytes", "configuration": {"endian": "little"}}"""),
+      col("value").cast("double"), doubleCells)
 
   /** [[writeStrings]]'s Zarr v3 twin: `data_type: string` with the
     * `[vlen-utf8, gzip]` codec chain — the layout zarr-python 3 writes
@@ -2736,25 +2424,9 @@ object Zarr {
     * chunk with no rows reads back NULL (absent-chunk contract). */
   def writeStringsV3(df: org.apache.spark.sql.DataFrame, store: String, name: String,
                      targetChunkElems: Long = 1 << 18): Unit =
-    writeChunked[String](df, store, name, targetChunkElems,
-      maxInnerElems = 1L << 24,
-      metaFiles = (dims, chunkDims, dimCols) => Seq(
-        "zarr.json" ->
-          (s"""{"zarr_format": 3, "node_type": "array", """ +
-            s""""shape": [${dims.mkString(", ")}], "data_type": "string", """ +
-            s""""chunk_grid": {"name": "regular", "configuration": """ +
-            s"""{"chunk_shape": [${chunkDims.mkString(", ")}]}}, """ +
-            """"chunk_key_encoding": {"name": "default", "configuration": """ +
-            """{"separator": "/"}}, "fill_value": "", """ +
-            """"codecs": [{"name": "vlen-utf8"}, """ +
-            """{"name": "gzip", "configuration": {"level": 6}}], """ +
-            s""""dimension_names": [${dimCols.map("\"" + _ + "\"").mkString(", ")}]}""")),
-      chunkKey = coords => "c/" + coords.mkString("/"),
-      castValue = col("value").cast("string"),
-      fillBuf = n => Array.fill(n)(""),
-      setCell = (buf, off, r) => buf(off) = r.getString(2),
-      encodePlain = vlenEncodePlain,
-      compress = gzipBytes)
+    writeChunked(df, store, name, targetChunkElems,
+      v3Layout("string", "\"\"", """{"name": "vlen-utf8"}"""),
+      col("value").cast("string"), stringCells)
 
   /** Lake → Zarr store (the write twin of [[toParquetLake]], and the
     * Zarr counterpart of `NetCDF.fromParquetLake`): one array per

@@ -9,7 +9,7 @@ import graft.sources.{CfTime, NetCDF, Zarr}
   * TIMESTAMP path, fixed-length calendars → (year, doy, us_of_day),
   * NULL propagation, loud rejects, and the NetCDF twin. The Zarr side is
   * additionally oracle-gated (q_cf_time_standard / q_cf_time_fixed). */
-class CfTimeSpec extends AnyFunSuite {
+class CfTimeSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -168,9 +168,9 @@ class CfTimeSpec extends AnyFunSuite {
   test("--decode-times lake conversion: CF axes land decoded (Zarr + NetCDF)") {
     import spark.implicits._
     // Zarr: the pipeline store's time axis becomes TIMESTAMP in the lake
-    val root = java.nio.file.Files.createTempDirectory("zarr_dt_lake_").toFile
+    val root = tmpDir("zarr_dt_lake_")
     Zarr.plantedCfPipeStore(root.getPath)
-    val lake = java.nio.file.Files.createTempDirectory("zarr_dt_lake_out_").toFile
+    val lake = tmpDir("zarr_dt_lake_out_")
     Zarr.toParquetLake(spark, root.getPath, lake.getPath, decodeTimes = true)
     val t = spark.read.parquet(new java.io.File(lake, "time").getPath)
     assert(t.schema("time").dataType ==
@@ -178,7 +178,7 @@ class CfTimeSpec extends AnyFunSuite {
     assert(t.count() == 730)
     // without the flag the raw offsets stay raw (xarray parity: decoding
     // is opt-in here, default-on there — the CLI flag is the opt-in)
-    val lake2 = java.nio.file.Files.createTempDirectory("zarr_dt_lake_raw_").toFile
+    val lake2 = tmpDir("zarr_dt_lake_raw_")
     Zarr.toParquetLake(spark, root.getPath, lake2.getPath)
     assert(spark.read.parquet(new java.io.File(lake2, "time").getPath)
       .schema("value").dataType == org.apache.spark.sql.types.DoubleType)
@@ -190,7 +190,7 @@ class CfTimeSpec extends AnyFunSuite {
       Seq(NetCDF.WriteVar("time", Seq("time"), times,
         Seq(NetCDF.NcAttr("units", "hours since 2020-05-06"))),
         NetCDF.WriteVar("temp", Seq("time"), temp)))
-    val ncLake = java.nio.file.Files.createTempDirectory("nc_dt_lake_").toFile
+    val ncLake = tmpDir("nc_dt_lake_")
     NetCDF.toParquetLake(spark, f.getPath, ncLake.getPath, decodeTimes = true)
     val back = spark.read.parquet(new java.io.File(ncLake, "temp").getPath)
     val r1 = back.filter(org.apache.spark.sql.functions.col("time") === 1).head()
@@ -213,7 +213,7 @@ class CfTimeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       graft.sources.Hdf5.readTimeCoordinate(spark, f.getPath, "temp"))
     // the lake conversion decodes the axis when asked
-    val lake = java.nio.file.Files.createTempDirectory("h5_dt_lake_").toFile
+    val lake = tmpDir("h5_dt_lake_")
     graft.sources.Hdf5.toParquetLake(spark, f.getPath, lake.getPath,
       decodeTimes = true)
     assert(spark.read.parquet(new java.io.File(lake, "time").getPath)
@@ -221,7 +221,7 @@ class CfTimeSpec extends AnyFunSuite {
   }
 
   test("Zarr readTimeCoordinate: planted store spot checks (oracle covers the rest)") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_cft_").toFile
+    val root = tmpDir("zarr_cft_")
     Zarr.plantedCfTimeStore(root.getPath)
     val std = Zarr.readTimeCoordinate(spark, root.getPath, "tstd")
       .collect().map(r => (r.getInt(0), r.getTimestamp(1).toInstant)).toMap

@@ -13,7 +13,7 @@ import java.util.zip.Deflater
   * chunk grid with partial edge chunks, zlib/gzip/raw/blosc-memcpy
   * codecs, an absent chunk (= fill_value), CF attrs, F-order, big-endian
   * and integer dtypes. */
-class ZarrSpec extends AnyFunSuite {
+class ZarrSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -88,7 +88,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("zlib C-order store with absent chunk, CF unpack, named dims") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_").toFile
+    val root = tmpDir("zarr_")
     writeTas(root)
     val df = Zarr.readVariable(spark, root.getPath, "tas")
     assert(df.columns.toSeq == Seq("y", "x", "value"))
@@ -103,7 +103,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("gzip, raw and blosc-memcpy codecs round-trip; F-order; big-endian; ints") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_").toFile
+    val root = tmpDir("zarr_")
     // gz: double[4] chunked [4] gzip, one chunk
     val gzDir = new File(root, "gz")
     writeText(new File(gzDir, ".zarray"),
@@ -143,7 +143,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("NaN fill_value masks to NULL; blosc-lz4 compressed store reads; bit-shuffle rejected") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_").toFile
+    val root = tmpDir("zarr_")
     val nanDir = new File(root, "nv")
     writeText(new File(nanDir, ".zarray"),
       """{"zarr_format": 2, "shape": [3], "chunks": [3], "dtype": "<f8",
@@ -188,7 +188,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("consolidated .zmetadata lists arrays; corrupt chunks fail cleanly") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_").toFile
+    val root = tmpDir("zarr_")
     writeTas(root)
     val pDir = new File(root, "aux")
     writeText(new File(pDir, ".zarray"),
@@ -205,7 +205,7 @@ class ZarrSpec extends AnyFunSuite {
     // files GONE (only .zmetadata + chunks left), readMeta still
     // resolves every array — on an object store this is 1 GET total
     // instead of 3 round trips per array
-    val spare = java.nio.file.Files.createTempDirectory("zarr_cm_").toFile
+    val spare = tmpDir("zarr_cm_")
     org.apache.commons.io.FileUtils.copyDirectory(root, spare)
     val before = Zarr.readMeta(spare.getPath)
     new File(new File(spare, "tas"), ".zarray").delete()
@@ -242,7 +242,7 @@ class ZarrSpec extends AnyFunSuite {
                     if !(t == 5 && y == 1)) yield
       (t, y, if (t == 2 && y == 0) null else java.lang.Double.valueOf(t * 10.0 + y))
     val df = rows.toDF("time", "y", "value")
-    val store = java.nio.file.Files.createTempDirectory("zarr_w_").toString
+    val store = tmpDir("zarr_w_").toString
     // tiny chunk target forces several leading-dim chunks (3 elems/chunk row)
     Zarr.writeArray(df, store, "tas", targetChunkElems = 6)
     val meta = Zarr.readArrayMeta(store, "tas")
@@ -261,7 +261,7 @@ class ZarrSpec extends AnyFunSuite {
     // the reference's user journey — xr.open_dataset(store) then an
     // indicator — as: Zarr read -> long frame -> registry indicator
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("zarr_").toFile
+    val root = tmpDir("zarr_")
     graft.sources.Zarr.plantedStore(root.getPath) // tas double[6,5,4], CF-unpacked
     graft.indicator.Registry.registerBuiltins()
     val daily = graft.sources.Zarr.readVariable(spark, root.getPath, "tas")
@@ -276,7 +276,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("store-level readMeta + parquet-lake conversion") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_").toFile
+    val root = tmpDir("zarr_")
     writeTas(root)
     val pDir = new File(root, "pr")
     writeText(new File(pDir, ".zarray"),
@@ -290,7 +290,7 @@ class ZarrSpec extends AnyFunSuite {
     f32b.putFloat(2.5f).putFloat(9999f) // second slot clipped (edge chunk)
     write(new File(pDir, "1"), f32b.array())
     assert(Zarr.readMeta(root.getPath).map(_.name) == Seq("pr", "tas"))
-    val out = java.nio.file.Files.createTempDirectory("zarr_lake_").toString
+    val out = tmpDir("zarr_lake_").toString
     assert(Zarr.toParquetLake(spark, root.getPath, out).toSet == Set("pr", "tas"))
     assert(spark.read.parquet(s"$out/pr").collect()
       .map(r => (r.getInt(0), r.getDouble(1))).toSet ==
@@ -327,7 +327,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("v3 store: default chunk keys, gzip codec, absent chunk, CF unpack, group discovery") {
-    val root = java.nio.file.Files.createTempDirectory("zarr3_").toFile
+    val root = tmpDir("zarr3_")
     writeTasV3(root)
     val df = Zarr.readVariable(spark, root.getPath, "tas")
     assert(df.columns.toSeq == Seq("y", "x", "value"))
@@ -340,13 +340,13 @@ class ZarrSpec extends AnyFunSuite {
     assert(got == expected)
     // group-level discovery + lake conversion runs through the same path
     assert(Zarr.readMeta(root.getPath).map(_.name) == Seq("tas"))
-    val out = java.nio.file.Files.createTempDirectory("zarr3_lake_").toString
+    val out = tmpDir("zarr3_lake_").toString
     assert(Zarr.toParquetLake(spark, root.getPath, out) == Seq("tas"))
     assert(spark.read.parquet(s"$out/tas").count() == 20)
   }
 
   test("v3 codecs: zstd + crc32c, v2-style keys, big-endian int32, transpose reverse") {
-    val root = java.nio.file.Files.createTempDirectory("zarr3c_").toFile
+    val root = tmpDir("zarr3c_")
     writeText(new File(root, "zarr.json"),
       """{"zarr_format": 3, "node_type": "group"}""")
     // zs: float64[4] chunked [2], zstd frames with trailing crc32c,
@@ -394,7 +394,7 @@ class ZarrSpec extends AnyFunSuite {
 
   test("v3 sharding_indexed: footer index, out-of-order bodies, missing inner " +
     "chunks, edge shard clipping") {
-    val root = java.nio.file.Files.createTempDirectory("zarr3s_").toFile
+    val root = tmpDir("zarr3s_")
     writeText(new File(root, "zarr.json"),
       """{"zarr_format": 3, "node_type": "group"}""")
     // sv: float64[6,4], shard (chunk-grid) [4,4], inner chunks [2,2] →
@@ -450,7 +450,7 @@ class ZarrSpec extends AnyFunSuite {
 
   test("v3 sharding: index at start, default index_codecs, raw inner codec, " +
     "corrupt index crc rejected") {
-    val root = java.nio.file.Files.createTempDirectory("zarr3t_").toFile
+    val root = tmpDir("zarr3t_")
     val ss = new File(root, "ss")
     writeText(new File(ss, "zarr.json"),
       """{"zarr_format": 3, "node_type": "array", "shape": [4],
@@ -481,7 +481,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("v3 nested sharding and unknown codecs rejected loudly") {
-    val root = java.nio.file.Files.createTempDirectory("zarr3r_").toFile
+    val root = tmpDir("zarr3r_")
     val sh = new File(root, "sh")
     writeText(new File(sh, "zarr.json"),
       """{"zarr_format": 3, "node_type": "array", "shape": [4],
@@ -526,7 +526,7 @@ class ZarrSpec extends AnyFunSuite {
     // xarray encoding={"v": {"filters": [Delta(dtype="<i8")]}} — ns-epoch
     // timestamps: base 1.7e18 exceeds 2^53, so a double cumsum would be
     // off; the Long path must reproduce every value exactly
-    val root = java.nio.file.Files.createTempDirectory("zarrf_").toFile
+    val root = tmpDir("zarrf_")
     val dir = new File(root, "t")
     writeText(new File(dir, ".zarray"),
       """{"zarr_format": 2, "shape": [6], "chunks": [4], "dtype": "<i8",
@@ -548,7 +548,7 @@ class ZarrSpec extends AnyFunSuite {
   test("v2 numcodecs FixedScaleOffset filter: f8 stored as scaled i2") {
     // xarray encoding FixedScaleOffset(offset=1000, scale=100, dtype="<f8",
     // astype="<i2"): enc = round((v-offset)*scale) i2; dec = enc/scale+offset
-    val root = java.nio.file.Files.createTempDirectory("zarrf_").toFile
+    val root = tmpDir("zarrf_")
     val dir = new File(root, "p")
     writeText(new File(dir, ".zarray"),
       """{"zarr_format": 2, "shape": [2, 3], "chunks": [2, 3], "dtype": "<f8",
@@ -568,7 +568,7 @@ class ZarrSpec extends AnyFunSuite {
     // encode order: FSO (f8 -> i8 ints), then Delta (i8 -> i4 diffs), then
     // zlib; decode must reverse: inflate -> un-delta (cumsum in i8) ->
     // un-FSO (enc/scale + offset)
-    val root = java.nio.file.Files.createTempDirectory("zarrf_").toFile
+    val root = tmpDir("zarrf_")
     val dir = new File(root, "c")
     writeText(new File(dir, ".zarray"),
       """{"zarr_format": 2, "shape": [5], "chunks": [5], "dtype": "<f8",
@@ -619,7 +619,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("v2 zstd compressor: numcodecs Zstd bare frames, plain and with Delta") {
-    val root = java.nio.file.Files.createTempDirectory("zarrz_").toFile
+    val root = tmpDir("zarrz_")
     val dir = new File(root, "z")
     writeText(new File(dir, ".zarray"),
       """{"zarr_format": 2, "shape": [5], "chunks": [5], "dtype": "<f8",
@@ -651,7 +651,7 @@ class ZarrSpec extends AnyFunSuite {
     // holds np.around(v*100)/100; decode must hand those values back
     // EXACTLY (no further transform) — the reader treats the filter as a
     // dtype view
-    val root = java.nio.file.Files.createTempDirectory("zarrq_").toFile
+    val root = tmpDir("zarrq_")
     val dir = new File(root, "q")
     writeText(new File(dir, ".zarray"),
       """{"zarr_format": 2, "shape": [5], "chunks": [5], "dtype": "<f8",
@@ -671,7 +671,7 @@ class ZarrSpec extends AnyFunSuite {
     // Quantize(digits=1, dtype="<f8", astype="<f4") then Shuffle(4):
     // stored stream is byte-transposed float32; decode un-shuffles, views
     // f4, widens to f8 — values are the f4-rounded quantized grid
-    val root = java.nio.file.Files.createTempDirectory("zarrq_").toFile
+    val root = tmpDir("zarrq_")
     val dir = new File(root, "qf")
     writeText(new File(dir, ".zarray"),
       """{"zarr_format": 2, "shape": [4], "chunks": [4], "dtype": "<f8",
@@ -691,7 +691,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("v2 numcodecs BitRound filter: mantissa-rounded doubles read back exactly") {
-    val root = java.nio.file.Files.createTempDirectory("zarrb_").toFile
+    val root = tmpDir("zarrb_")
     val dir = new File(root, "b")
     writeText(new File(dir, ".zarray"),
       """{"zarr_format": 2, "shape": [6], "chunks": [6], "dtype": "<f8",
@@ -740,7 +740,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("v2 numcodecs Shuffle filter: trailing byte transpose, alone and after Delta") {
-    val root = java.nio.file.Files.createTempDirectory("zarrf_").toFile
+    val root = tmpDir("zarrf_")
     // shuffle-only chain over f8 + zlib
     val dir = new File(root, "s")
     writeText(new File(dir, ".zarray"),
@@ -785,7 +785,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("readStrings: |O vlen-utf8, |S8 fixed bytes with absent chunk, >U5 UCS-4") {
-    val root = new File(java.nio.file.Files.createTempDirectory("zstr").toFile, "store")
+    val root = new File(tmpDir("zstr"), "store")
     root.mkdirs()
     Zarr.plantedStringStore(root.getPath)
     // |O + vlen-utf8 + zlib, multi-byte UTF-8, named dim
@@ -808,7 +808,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("readStrings rejects wrong dtypes, codecs and malformed vlen payloads") {
-    val root = java.nio.file.Files.createTempDirectory("zstrbad").toFile
+    val root = tmpDir("zstrbad")
     // numeric array through readStrings / string array through readVariable
     val num = new File(root, "num")
     writeText(new File(num, ".zarray"),
@@ -852,7 +852,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("vlen-bytes object array reads BINARY; blosc-delta ints decode (planted store)") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_bytes_").toFile
+    val root = tmpDir("zarr_bytes_")
     Zarr.plantedBytesStore(root.getPath)
     val pay = Zarr.readBinary(spark, root.getPath, "payloads").collect()
       .map(r => (r.getInt(0), Option(r.get(1)).map(_.asInstanceOf[Array[Byte]]
@@ -883,7 +883,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("v3 string/bytes data types: plain, sharded, vlen+zstd+crc32c (planted store)") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_v3str_").toFile
+    val root = tmpDir("zarr_v3str_")
     Zarr.plantedStringStoreV3(root.getPath)
     // labels: vlen-utf8 + gzip, chunk 1 absent → NULLs at 3..5
     val labels = Zarr.readStrings(spark, root.getPath, "labels").collect()
@@ -933,7 +933,7 @@ class ZarrSpec extends AnyFunSuite {
       (0, "s0_β"), (1, "s1_β"), (2, null), (3, "s3_β"),
       (8, "s8_β"), (9, "s9_β")
     ).toDF("doc", "value")
-    val store = java.nio.file.Files.createTempDirectory("zarr_wstr_").toString
+    val store = tmpDir("zarr_wstr_").toString
     Zarr.writeStrings(df, store, "labels", targetChunkElems = 4)
     val back = Zarr.readStrings(spark, store, "labels").collect()
       .map(r => (r.getInt(0), Option(r.getString(1)))).toMap
@@ -947,10 +947,10 @@ class ZarrSpec extends AnyFunSuite {
     assert(meta.contains("\"|O\"") && meta.contains("vlen-utf8"))
     // fromParquetLake dispatches on the value dtype: string → vlen-utf8,
     // numeric → <f8
-    val lake = java.nio.file.Files.createTempDirectory("zarr_wlake_").toString
+    val lake = tmpDir("zarr_wlake_").toString
     df.write.parquet(s"$lake/tags")
     Seq((0, 1.5), (1, 2.5)).toDF("doc", "value").write.parquet(s"$lake/vals")
-    val store2 = java.nio.file.Files.createTempDirectory("zarr_wstore2_").toString
+    val store2 = tmpDir("zarr_wstore2_").toString
     assert(Zarr.fromParquetLake(spark, lake, store2) == Seq("tags", "vals"))
     assert(Zarr.readStrings(spark, store2, "tags").count() == 10)
     val vals = Zarr.readVariable(spark, store2, "vals").collect()
@@ -964,7 +964,7 @@ class ZarrSpec extends AnyFunSuite {
       zm.contains("tags/.zarray") && zm.contains("vals/.zarray"))
     assert(Zarr.readMeta(store2).map(_.name).sorted == Seq("tags", "vals"))
     // v3 lake export: root group zarr.json + v3 arrays, group discovery
-    val store3 = java.nio.file.Files.createTempDirectory("zarr_wstore3_").toString
+    val store3 = tmpDir("zarr_wstore3_").toString
     assert(Zarr.fromParquetLake(spark, lake, store3, zarrFormat = 3)
       == Seq("tags", "vals"))
     assert(Zarr.readMeta(store3).map(_.name).sorted == Seq("tags", "vals"))
@@ -972,7 +972,7 @@ class ZarrSpec extends AnyFunSuite {
     assert(Zarr.readVariable(spark, store3, "vals").collect()
       .map(_.getDouble(1)).sorted.toSeq == Seq(1.5, 2.5))
     // toParquetLake dispatches back: string arrays land as STRING columns
-    val lake2 = java.nio.file.Files.createTempDirectory("zarr_wlake2_").toString
+    val lake2 = tmpDir("zarr_wlake2_").toString
     assert(Zarr.toParquetLake(spark, store2, lake2).sorted == Seq("tags", "vals"))
     val tagsBack = spark.read.parquet(s"$lake2/tags")
     assert(tagsBack.schema("value").dataType ==
@@ -989,7 +989,7 @@ class ZarrSpec extends AnyFunSuite {
     // chunk (lead=2) absent → NULL on read
     val nums = Seq((0, 0.25), (1, 0.5), (2, 2.75), (3, -1.25), (6, 7.0), (7, 8.5))
       .toDF("t", "value")
-    val store = java.nio.file.Files.createTempDirectory("zarr_v3w_").toString
+    val store = tmpDir("zarr_v3w_").toString
     Zarr.writeArrayV3(nums, store, "vals", targetChunkElems = 2)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(store, "vals", "zarr.json")), "UTF-8")
@@ -1011,8 +1011,18 @@ class ZarrSpec extends AnyFunSuite {
     assert(sback(2).contains("") && (4 to 7).forall(sback(_).isEmpty))
   }
 
+  test("writers escape dim names in their metadata JSON") {
+    import spark.implicits._
+    val store = tmpDir("zarr_dimq_").toString
+    val df = Seq((0, 1.5), (1, 2.5)).toDF("la\"t", "value")
+    Zarr.writeArray(df, store, "v2")
+    Zarr.writeArrayV3(df, store, "v3")
+    for (a <- Seq("v2", "v3"))
+      assert(Zarr.readVariable(spark, store, a).columns.toSeq == Seq("la\"t", "value"), a)
+  }
+
   test("msgpack2/json2 object codecs: strings, None, bin payloads (planted store)") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_msgpack_").toFile
+    val root = tmpDir("zarr_msgpack_")
     Zarr.plantedMsgpackStore(root.getPath)
     // mlabels: msgpack2 + zlib; absent chunk → 3..5 NULL, elem 2 = None
     val m = Zarr.readStrings(spark, root.getPath, "mlabels").collect()
@@ -1043,7 +1053,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("datetime64 arrays read as TIMESTAMP: ns with NaT + absent chunk, >M8[s]") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_dt_").toFile
+    val root = tmpDir("zarr_dt_")
     // t: <M8[ns], shape [7] chunks [3], chunk 1 absent → NULL at 3..5;
     // element 2 = NaT; values 2001-02-03T04:05:06.123456789 + i days
     val base = java.time.Instant.parse("2001-02-03T04:05:06.123456789Z")
@@ -1093,7 +1103,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("r13 temporal tier: Delta-filtered + sharded datetime64, timedelta64 → INTERVAL") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_temporal_").toFile
+    val root = tmpDir("zarr_temporal_")
     Zarr.plantedTemporalStore(root.getPath)
     // tf: <M8[s] + Delta(i8) + zlib; NaT at 7 (delta wraps through the
     // sentinel); chunk 2 absent → NULL at 8..9
@@ -1159,16 +1169,16 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("r13 store-level temporal round trip: lake <-> Zarr for M8/m8 arrays") {
-    val store1 = java.nio.file.Files.createTempDirectory("zarr_tmp1_").toFile
+    val store1 = tmpDir("zarr_tmp1_")
     Zarr.plantedTemporalStore(store1.getPath)
-    val lake = java.nio.file.Files.createTempDirectory("zarr_tmp_lake_").toFile
+    val lake = tmpDir("zarr_tmp_lake_")
     // toParquetLake must dispatch M -> readDatetimes, m -> readTimedeltas
     // (intervals DO survive parquet: Spark round-trips DayTimeIntervalType,
     // DuckDB reads the physical int64 micros) and discover the v3 tsh
     // child in this mixed v2/v3 store
     val vars = Zarr.toParquetLake(spark, store1.getPath, lake.getPath)
     assert(vars.toSet == Set("tf", "tsh", "td", "tdm"), vars.mkString(","))
-    val store2 = java.nio.file.Files.createTempDirectory("zarr_tmp2_").toFile
+    val store2 = tmpDir("zarr_tmp2_")
     // fromParquetLake must route temporal value dtypes to the exact-Long
     // writers, never the double writer (2^53 silent rounding)
     Zarr.fromParquetLake(spark, lake.getPath, store2.getPath)
@@ -1187,13 +1197,13 @@ class ZarrSpec extends AnyFunSuite {
       assert(back === orig, arr)
     }
     // v3 temporal export has no pinned writer vector — loud reject
-    val store3 = java.nio.file.Files.createTempDirectory("zarr_tmp3_").toFile
+    val store3 = tmpDir("zarr_tmp3_")
     intercept[IllegalArgumentException](
       Zarr.fromParquetLake(spark, lake.getPath, store3.getPath, zarrFormat = 3))
   }
 
   test("r13 readVectors: whole-vector rows, absent chunk -> NULL, guards") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_vec_").toFile
+    val root = tmpDir("zarr_vec_")
     // 2-D <f8 store, shape [5,3], chunks [2,3]; chunk 1 (rows 2..3) ABSENT
     val mDir = new File(root, "m"); mDir.mkdirs()
     writeText(new File(mDir, ".zarray"),
@@ -1245,7 +1255,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("F-order object chunks: string and binary arrays unravel column-major") {
-    val root = java.nio.file.Files.createTempDirectory("zarr_forder_").toFile
+    val root = tmpDir("zarr_forder_")
     // 2x3 |O vlen-utf8 array, order F: payload items run (0,0),(1,0),
     // (0,1),(1,1),(0,2),(1,2)
     val sDir = new File(root, "s"); sDir.mkdirs()
@@ -1289,7 +1299,7 @@ class ZarrSpec extends AnyFunSuite {
     val handVector = Array[Int](
       0x94, 0xA3, 0x68, 0xC3, 0xA9, 0xC0, 0xA2, 0x7C, 0x4F, 0x91, 0x02
     ).map(_.toByte)
-    val root = java.nio.file.Files.createTempDirectory("zarr_msgpack_hand_").toFile
+    val root = tmpDir("zarr_msgpack_hand_")
     val dir = new File(root, "hand"); dir.mkdirs()
     writeText(new File(dir, ".zarray"),
       """{"zarr_format": 2, "shape": [2], "chunks": [2], "dtype": "|O",
@@ -1343,5 +1353,54 @@ class ZarrSpec extends AnyFunSuite {
       Zarr.readStrings(spark, root.getPath, "hand").collect())
     assert(e2.getMessage.contains("chunk grid") ||
       Option(e2.getCause).exists(_.getMessage.contains("chunk grid")))
+  }
+
+  /** SHA-256 over every file below `root`: (relative path, NUL, length,
+    * bytes) in path order. */
+  private def treeDigest(root: java.nio.file.Path): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]) finally walk.close()
+    files.map(p => root.relativize(p).toString.replace('\\', '/') -> p).sortBy(_._1)
+      .foreach { case (rel, p) =>
+        val b = java.nio.file.Files.readAllBytes(p)
+        md.update(rel.getBytes("UTF-8")); md.update(0.toByte)
+        md.update(ByteBuffer.allocate(8).putLong(b.length.toLong).array())
+        md.update(b)
+      }
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  test("planted stores keep their pinned bytes") {
+    // Shared.fixtureStore builds a store only when none of that name is
+    // under java.io.tmpdir, so a store written by an earlier JVM is reused:
+    // a writer change that alters the bytes must also rename its store, or
+    // the oracle gate keeps reading the old bytes. These digests make such
+    // a change fail here.
+    val pinned = Seq[(String, String => Unit, String)](
+      ("plantedStore", Zarr.plantedStore,
+        "23540290030fd5f3637b53faf855971d34aa02399c148123ab948a2eae4cf239"),
+      ("plantedStringStore", Zarr.plantedStringStore,
+        "fe1cddb2c6edc28d3100be761fb958435dce31e78d37cf8fbb936be47fdaf30d"),
+      ("plantedBytesStore", Zarr.plantedBytesStore,
+        "67577c84d4dd081be3f39e408ed6aaaf9e8d5e9386a95f69958a864cc69ca728"),
+      ("plantedDatetimeStore", Zarr.plantedDatetimeStore,
+        "f13d0dd89e74d8e0bf7ef1e9407f7248c256adea34ab0a0f05f180a63edcb5c6"),
+      ("plantedMsgpackStore", Zarr.plantedMsgpackStore,
+        "6c67f77e60ca92907abdee0983790934063850c7c1746a4cfa7c683dc85bfbeb"),
+      ("plantedStringStoreV3", Zarr.plantedStringStoreV3,
+        "dccf76ee92066b605e3d0d653a4939a5a7a072b0275dc46480cb4c5733a2a25c"),
+      ("plantedTemporalStore", Zarr.plantedTemporalStore,
+        "cc234fddbd21120486014bf58a009b7a65b50e80bd55a857a1c712f7d4d0d5b6"),
+      ("plantedCfTimeStore", Zarr.plantedCfTimeStore,
+        "e64ec09c7f62baebd3bae1e31c65eb64a5a557ff08efd3d502d02d06ccde7438"),
+      ("plantedCfPipeStore", Zarr.plantedCfPipeStore,
+        "5a63015fd582939f7b0013ec0e673872e478924d4bc21f2d0ed332e30b99a713"))
+    for ((name, plant, want) <- pinned) {
+      val root = tmpDir("zarr_pin_")
+      plant(root.getPath)
+      assert(treeDigest(root.toPath) == want, name)
+    }
   }
 }
