@@ -10,7 +10,7 @@ import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
 
 import graft.core.SessionState
-import graft.sources.{FsIo, Ledger}
+import graft.sources.{FsIo, Ledger, LocalFs}
 
 /** INCREMENTALLY-maintained IVF (inverted-file) ANN index — the
   * similarity-search twin of [[graft.sources.ZOrderLake]]: a one-shot
@@ -586,7 +586,10 @@ object IvfIndex extends Ledger.Manifests {
                  else assigned.withColumn("_d2u", lit(null).cast("long")))
       .observe(obs, sum(col("_d2u")).as("s"), count(lit(1)).as("n"))
       .drop("_d2u")
-    frame.repartition(col("list"))
+    // the writer sorts by `list` anyway; `vec_id` after it fixes the row
+    // order inside each list's file, so a segment's bytes do not depend
+    // on the shuffle's fetch order
+    frame.repartition(col("list")).sortWithinPartitions(col("list"), col("vec_id"))
       .write.mode(SaveMode.Overwrite).partitionBy("list").parquet(dir)
     val spark = assigned.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
@@ -674,6 +677,7 @@ object IvfIndex extends Ledger.Manifests {
       "sq8 REPLACES the raw column — it cannot combine with storeRaw = false")
     val spark = emb.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
+    LocalFs.setup(spark)
     FsIo.mkdirs(conf, root)
     // re-init semantics: a stale pointer (possibly at gen > 0) must not
     // resolve metadata while generation-0 files are being rewritten
@@ -756,9 +760,11 @@ object IvfIndex extends Ledger.Manifests {
     * double), so a drifted batch would poison every later reader with
     * mixed precisions across segments — fail HERE, at the commit. */
   def applyBatch(batch: DataFrame, idCol: String, vecCol: String,
-                 root: String, batchId: Long, retain: Int = 2): Unit =
+                 root: String, batchId: Long, retain: Int = 2): Unit = {
+    LocalFs.setup(batch.sparkSession)
     applyOnce(root, batchId, batch.sparkSession.sparkContext.hadoopConfiguration)(
       appendBatch(batch, idCol, vecCol, root, _, batchId, retain))
+  }
 
   /** [[applyBatch]] behind the replay gate; false for an empty batch. */
   private def appendBatch(batch: DataFrame, idCol: String, vecCol: String,
@@ -850,6 +856,7 @@ object IvfIndex extends Ledger.Manifests {
   def applyDeleteBatch(ids: DataFrame, idCol: String, root: String,
                        batchId: Long, retain: Int = 2): Unit = {
     val conf = ids.sparkSession.sparkContext.hadoopConfiguration
+    LocalFs.setup(ids.sparkSession)
     applyOnce(root, batchId, conf) { p =>
       if (ids.isEmpty) false
       else {
@@ -1255,6 +1262,7 @@ object IvfIndex extends Ledger.Manifests {
     * row count. */
   def compact(spark: SparkSession, root: String, retain: Int = 2): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
+    LocalFs.setup(spark)
     val p = pointer(root, conf)
     val segs = readManifest(root, p.version, conf)
     if (segs.size <= 1) return segs.size
@@ -1314,6 +1322,7 @@ object IvfIndex extends Ledger.Manifests {
   def rebuild(spark: SparkSession, root: String, centroids: DataFrame,
               pqTrainIters: Int = 0, retain: Int = 2): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
+    LocalFs.setup(spark)
     val p = pointer(root, conf)
     val segs = readManifest(root, p.version, conf)
     requireRerankable(spark, root, segs, "rebuild (re-assignment)")

@@ -37,10 +37,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * `RawLocalFileSystem` forks `chmod` for every file or directory it
   * creates and `ls -ld` for every `LocatedFileStatus` it builds, each a
   * process start of milliseconds, and the table formats' commit path
-  * creates and lists dozens of files per batch. A plain `FileStatus` from `listStatus`
-  * loads its permissions only when asked, so a walk that reads paths
-  * forks nothing. Remote filesystems keep Hadoop's calls: on an object
-  * store `listFiles(p, true)` is one flat listing.
+  * creates and lists dozens of files per batch. [[LocalFs]] removes the
+  * `chmod` from the Spark writes, through the session conf; the calls
+  * here take `SparkContext.hadoopConfiguration`, which still serves
+  * Hadoop's cached stock filesystem, and a `LocatedFileStatus` runs
+  * `ls -ld` under either, so these branches stay. A plain `FileStatus`
+  * from `listStatus` loads its permissions only when asked, so a walk
+  * that reads paths forks nothing. Remote filesystems keep Hadoop's
+  * calls: on an object store `listFiles(p, true)` is one flat listing.
   */
 object FsIo {
 

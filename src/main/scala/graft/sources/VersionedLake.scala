@@ -48,6 +48,7 @@ object VersionedLake extends Ledger {
   def init(initial: DataFrame, root: String, table: String, keyCol: String,
            buckets: Int): Unit = {
     val conf = initial.sparkSession.sparkContext.hadoopConfiguration
+    LocalFs.setup(initial.sparkSession)
     FsIo.mkdirs(conf, root)
     Lake.writeBucketed(initial, tableName(table, 0), keyCol, buckets, Seq(keyCol))
     Ledger.writePointer(root, Pointer(0, -1L), conf)
@@ -172,6 +173,7 @@ object VersionedLake extends Ledger {
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
+    LocalFs.setup(spark)
     applyOnce(root, batchId, conf) { p =>
       if (DatasetBridge.isEmpty(batch)) false
       else {

@@ -356,6 +356,7 @@ object ZOrderLake extends Ledger.Manifests {
   private def writeSlabs(rows: DataFrame, dir: String, targetRows: Long,
                          totalRows: Long, shift: Int,
                          kept: Option[Seq[Long]]): Seq[Entry] = {
+    LocalFs.setup(rows.sparkSession)
     val groupOfCell = { // one cumulative walk: O(cells + kept files)
       val maxCells = kept.getOrElse(Nil)
       val arr = new Array[Int](1 << 12)

@@ -26,6 +26,9 @@ object Streams {
   private def eachBatch(rows: DataFrame)(
       commit: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val home = rows.sparkSession
+    // here, not in the batch function: `start()` takes the checkpoint's
+    // Hadoop conf from the session's
+    graft.sources.LocalFs.setup(home)
     rows.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
       commit(DatasetBridge.rehome(home, b), id)
     }

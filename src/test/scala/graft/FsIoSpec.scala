@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sidecars inside self-describing store layouts, and the one
   * seek-WRITE format (NetCDF classic) must loud-reject a non-POSIX
   * target instead of silently scattering partial files. */
-class FsIoSpec extends AnyFunSuite {
+class FsIoSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -25,7 +25,7 @@ class FsIoSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_fsio_$tag").toString
+    tmpDir(s"graft_fsio_$tag").toString
 
   test("local metadata I/O: listFilesRecursive lists what Hadoop's listFiles lists; writeBytes makes parents and overwrites") {
     import graft.sources.FsIo
@@ -176,7 +176,7 @@ class FsIoSpec extends AnyFunSuite {
   }
 
   test("HDF5 READS through an explicit file:/// URI; unknown schemes loud-reject") {
-    val f = java.io.File.createTempFile("graft_fsio_h5_", ".h5"); f.deleteOnExit()
+    val f = new java.io.File(tmpDir("graft_fsio_h5_"), "planted.h5")
     graft.sources.Hdf5PlantedNbit.write(f.getPath)
     val uri = s"file://${f.getPath}"
     assert(graft.sources.Hdf5.readMeta(uri).map(_.name) ==

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
@@ -14,8 +16,8 @@ import graft.pipeline.{IvfIndex, Similarity}
   * result columns and types when no probed list holds a posting; the
   * driver-side list selection returns the distributed path's rows; the
   * candidates are one file scan; a batch probe's Spark jobs are
-  * pinned. */
-class IvfProbeSpec extends AnyFunSuite {
+  * pinned; one batch written twice gives the same segment bytes. */
+class IvfProbeSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -37,7 +39,7 @@ class IvfProbeSpec extends AnyFunSuite {
   /** A PQ index of two posting segments, each holding both lists. */
   private def twoSegments(prefix: String): String = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory(prefix).toString + "/ivf"
+    val root = tmpDir(prefix).toString + "/ivf"
     IvfIndex.init((0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", centroids, root, pqM = 2, pqK = 4)
     IvfIndex.applyBatch((40 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
@@ -58,8 +60,7 @@ class IvfProbeSpec extends AnyFunSuite {
   test("IVF probes over empty lists keep the non-empty schema for every shape and scorer") {
     import spark.implicits._
     val frame = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivfempty_").toString + "/ivf"
+    val root = tmpDir("graft_ivfempty_").toString + "/ivf"
     IvfIndex.init(frame, "vec_id", "embedding", centroids, root, pqM = 2, pqK = 4)
     val q = Seq(Tuple1(vec(0))).toDF("qvec")
     val qs = Seq((0L, vec(0)), (1L, vec(1))).toDF("qid", "qvec")
@@ -131,6 +132,28 @@ class IvfProbeSpec extends AnyFunSuite {
       .select("vec_id").as[Long].collect().toSeq
     assert(top == brute)
     IvfIndex.destroy(root)
+  }
+
+  test("a segment written twice from one parquet-backed batch is byte-identical") {
+    import spark.implicits._
+    val base = tmpDir("graft_ivfbytes_").toString
+    (0 until 2000).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+      .repartition(8).write.parquet(s"$base/batch")
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    def segment(root: String): Map[String, Seq[Byte]] = {
+      IvfIndex.init(spark.read.parquet(s"$base/batch"), "vec_id", "embedding", centroids, root)
+      val seg = java.nio.file.Path.of(s"$root/seg/s00000")
+      val files = java.nio.file.Files.walk(seg).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).toSeq
+      files.map(f => seg.relativize(f).toString.replaceAll(uuid, "UUID") ->
+        java.nio.file.Files.readAllBytes(f).toSeq).toMap
+    }
+    val a = segment(s"$base/a")
+    val b = segment(s"$base/b")
+    assert(a.size == 2)
+    assert(a.keySet == b.keySet)
+    a.foreach { case (name, bytes) => assert(bytes == b(name), name) }
+    Seq("a", "b").foreach(r => IvfIndex.destroy(s"$base/$r"))
   }
 
   test("a 4-query probe with the pinned quantizer runs at most 4 Spark jobs") {

@@ -8,14 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Layout-level scale mechanics: bucketed joins without shuffles, salted
   * aggregation equivalence. */
-class LakeSpec extends AnyFunSuite {
+class LakeSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+      TempDirs.forJvm("graft_wh_").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
@@ -157,7 +157,7 @@ class LakeSpec extends AnyFunSuite {
   test("compact bin-packs small files; sorted variant keeps disjoint ranges") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_").toString
+    val dir = tmpDir("graft_compact_").toString
     val tiny = s"$dir/tiny"; val packed = s"$dir/packed"; val sorted = s"$dir/sorted"
     (1 to 50000).map(i => (i.toLong, s"row$i")).toDF("k", "s")
       .repartition(64).write.parquet(tiny)
@@ -184,7 +184,7 @@ class LakeSpec extends AnyFunSuite {
   test("file-skipping index: bloom prune opens few files, pruned read == full filter") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fidx_")
+    val dir = tmpDir("graft_fidx_").toPath
       .toString + "/t"
     // 16 files, ids range-partitioned so each file holds a contiguous slab
     (1 to 160000).map(i => (i.toLong, s"u${i % 40000}", i * 1.5))
@@ -213,7 +213,7 @@ class LakeSpec extends AnyFunSuite {
   test("versioned lake time travel: asOf reads immutable history, aged-out rejects") {
     import spark.implicits._
     import graft.sources.{VersionedLake => VL}
-    val root = java.nio.file.Files.createTempDirectory("graft_vlake_tt_").toString
+    val root = tmpDir("graft_vlake_tt_").toString
     val table = s"vlake_tt_${System.nanoTime()}"
     VL.init((1L to 10L).map(k => (k, k * 1.0)).toDF("k", "v"),
       root, table, "k", 2)
@@ -226,7 +226,7 @@ class LakeSpec extends AnyFunSuite {
     assert(VL.asOf(spark, root, table, 3).count() == 13)
     intercept[IllegalArgumentException](VL.asOf(spark, root, table, 9))
     // tight retention ages v0 out -> loud reject, not a silent miss
-    val root2 = java.nio.file.Files.createTempDirectory("graft_vlake_tt2_").toString
+    val root2 = tmpDir("graft_vlake_tt2_").toString
     val table2 = s"vlake_tt2_${System.nanoTime()}"
     VL.init((1L to 5L).map(k => (k, k * 1.0)).toDF("k", "v"),
       root2, table2, "k", 2)
@@ -241,7 +241,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("typed range prune: readPruned opens O(matching) files, rows == full filter") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rp_")
+    val dir = tmpDir("graft_rp_").toPath
       .toString + "/t"
     // 16 disjoint slabs on k after the range sort — the layout sorted
     // compaction / zOrderWrite produce
@@ -268,7 +268,7 @@ class LakeSpec extends AnyFunSuite {
     val none = Lake.readPruned(spark, dir, stats, "k", 900000L, 950000L)
     assert(none.count() == 0)
     // bloom intersection: needle u123 in a k-range that spans 4 slabs
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_rp2_")
+    val dir2 = tmpDir("graft_rp2_").toPath
       .toString + "/t"
     (1 to 160000).map(i => (i.toLong, s"u${i % 40000}")).toDF("k", "uid")
       .repartitionByRange(16, col("k")).sortWithinPartitions("k")
@@ -287,7 +287,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("readPrunedMulti: per-column candidate sets intersect multiplicatively") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rpm_")
+    val dir = tmpDir("graft_rpm_").toPath
       .toString + "/t"
     // z-ordered layout: both dims get tight per-file boxes
     val df = (0 until 160000).map { i =>
@@ -313,7 +313,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("pruneFiles reads m_bits/k from the table and rejects a bare bloom") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pf_")
+    val dir = tmpDir("graft_pf_").toPath
       .toString + "/t"
     (1 to 1000).map(i => (i.toLong, s"u$i")).toDF("k", "uid")
       .repartitionByRange(4, col("k")).write.parquet(dir)
@@ -354,9 +354,9 @@ class LakeSpec extends AnyFunSuite {
 
   test("compact sizes partitioned (nested) inputs and rejects empty dirs") {
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft_cp_")
+    val in = tmpDir("graft_cp_").toPath
       .toString + "/t"
-    val out = java.nio.file.Files.createTempDirectory("graft_cp_")
+    val out = tmpDir("graft_cp_").toPath
       .toString + "/o"
     (1 to 40000).map(i => (i % 4, i.toLong, ("x" * 64) + i)).toDF("p", "k", "s")
       .repartition(24).write.partitionBy("p").parquet(in)
@@ -375,7 +375,7 @@ class LakeSpec extends AnyFunSuite {
     val n = Lake.compact(spark, in, out, (bytes / 4).max(1L << 16))
     assert(n >= 2 && n <= 8, s"non-recursive sizing would give n=1; got $n")
     assert(spark.read.parquet(out).count() == 40000)
-    val empty = java.nio.file.Files.createTempDirectory("graft_cpe_").toString
+    val empty = tmpDir("graft_cpe_").toString
     intercept[IllegalArgumentException](
       Lake.compact(spark, empty, out + "2", 1L << 16))
   }
@@ -446,8 +446,7 @@ class LakeSpec extends AnyFunSuite {
   test("ZOrderLake.compact merges adjacent under-filled slabs, layout invariants hold") {
     import spark.implicits._
     import graft.sources.ZOrderLake
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_zocp_").toString + "/zo"
+    val root = tmpDir("graft_zocp_").toString + "/zo"
     val init = (0 until 20000).map { i =>
       ((i % 200).toLong, (i / 200 % 100).toLong, i.toLong)
     }.toDF("x", "y", "pay")
@@ -488,8 +487,7 @@ class LakeSpec extends AnyFunSuite {
   test("ZOrderLake.readBox: z-ranges alone prune to O(matching) files") {
     import spark.implicits._
     import graft.sources.ZOrderLake
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_zobox_").toString + "/zo"
+    val root = tmpDir("graft_zobox_").toString + "/zo"
     // 200×200 grid, every cell once → 40k rows in ~16 slabs
     val df = (0 until 40000).map { i =>
       ((i % 200).toLong, (i / 200).toLong, i.toLong)
@@ -522,8 +520,7 @@ class LakeSpec extends AnyFunSuite {
   test("grid epochs: monotone-dim ingest stays O(batch) per batch; readBox unions epochs") {
     import spark.implicits._
     import graft.sources.ZOrderLake
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_zoep_").toString + "/zo"
+    val root = tmpDir("graft_zoep_").toString + "/zo"
     // epoch 0 pins t ∈ [0, 999] — then ingest marches strictly past it,
     // the monotone-time failure mode grid epochs exist for
     val init = (0 until 10000).map(i =>
@@ -610,8 +607,7 @@ class LakeSpec extends AnyFunSuite {
     // epoch and zero frozen border-slab matches)
     val span2 = ZOrderLake.readBox(spark, root, Seq(900L, 0L), Seq(1600L, 49L))
     assert(span2.count() == cur.filter(col("t").between(900, 1600)).count())
-    val twin = java.nio.file.Files
-      .createTempDirectory("graft_zoreb_twin_").toString + "/zo"
+    val twin = tmpDir("graft_zoreb_twin_").toString + "/zo"
     ZOrderLake.init(curAfter.drop("zval"), twin, Seq("t", "y"),
       targetRows = 1000)
     val twinSpan = ZOrderLake.readBox(spark, twin,
@@ -635,8 +631,7 @@ class LakeSpec extends AnyFunSuite {
     import graft.sources.ZOrderLake
     import graft.sources.FsIo
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_zores_").toString + "/zo"
+    val root = tmpDir("graft_zores_").toString + "/zo"
     val init = (0 until 4000).map(i =>
       ((i % 1000).toLong, (i % 50).toLong, i.toLong)).toDF("t", "y", "pay")
     ZOrderLake.init(init, root, Seq("t", "y"), targetRows = 1000)
@@ -695,8 +690,7 @@ class LakeSpec extends AnyFunSuite {
   test("z-order lake time travel, manifest diff, crash-before-swap heal") {
     import spark.implicits._
     import graft.sources.ZOrderLake
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_zott_").toString + "/zo"
+    val root = tmpDir("graft_zott_").toString + "/zo"
     val init = (0 until 10000).map(i =>
       ((i % 100).toLong, (i / 100).toLong, i.toLong)).toDF("x", "y", "pay")
     ZOrderLake.init(init, root, Seq("x", "y"), targetRows = 1500)
@@ -742,8 +736,7 @@ class LakeSpec extends AnyFunSuite {
   test("3-D z-order lake: incremental batches, octree box read, invariants") {
     import spark.implicits._
     import graft.sources.ZOrderLake
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_zo3_").toString + "/zo"
+    val root = tmpDir("graft_zo3_").toString + "/zo"
     // 40×40×25 grid — a (time, lat, lon)-shaped cube
     val init = (0 until 40000).map { i =>
       ((i % 40).toLong, (i / 40 % 40).toLong, (i / 1600).toLong, i.toLong)
@@ -822,8 +815,7 @@ class LakeSpec extends AnyFunSuite {
     // per session. Reference equality proves the reuse; the relation
     // must still read live bytes from disk (no data persisted).
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tblcache_").toString
+    val dir = tmpDir("graft_tblcache_").toString
     (0 until 10).map(i => (i.toLong, s"r$i")).toDF("id", "s")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/mini.parquet")
     val a = graft.sources.Tables.table(spark, dir, "mini")
@@ -845,8 +837,7 @@ class LakeSpec extends AnyFunSuite {
     // own batches and still reject actually-drifted ones.
     import graft.sources.ZOrderLake
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_zocache_").toString + "/zo"
+    val root = tmpDir("graft_zocache_").toString + "/zo"
     def rows(n: Int) = (0 until n).map(i => (i.toLong, (i * 7 % 50).toLong))
       .toDF("x", "y")
     ZOrderLake.init(rows(100), root, "x", "y", targetRows = 1000)
@@ -872,7 +863,7 @@ class LakeSpec extends AnyFunSuite {
   test("z-order touch: a batch in a kept slab's boundary cell rewrites it; a new epoch rewrites none") {
     import graft.sources.ZOrderLake
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_zotouch_").toString
+    val base = tmpDir("graft_zotouch_").toString
     val root = s"$base/zo"
     // bounds pinned at [0, 65535] on both dims, so the grid is the value
     // and zval = Morton2(x, y); 2 dims → cell = zval >> 20

@@ -9,7 +9,7 @@ import graft.sources.{FsIo, Ledger}
 /** The commit protocol the three table formats share: concurrent
   * pointer swaps stay whole, and a commit that dies between its data
   * write and its pointer swap heals on replay. */
-class LedgerSpec extends AnyFunSuite {
+class LedgerSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -19,7 +19,7 @@ class LedgerSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ledger_$tag").toString
+    tmpDir(s"graft_ledger_$tag").toString
 
   test("two threads swapping one root's pointer never throw or tear it") {
     val root = tmp("swap")

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming behavior: stateful sessionization across
   * micro-batches, and SQL registration of the native expressions. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -621,7 +621,7 @@ class StreamingSpec extends AnyFunSuite {
     val b3 = Seq((901L, "delete", "x", 0.0), (902L, "insert", "N902", 2.0),
       (400L, "update", "nohit", 0.0),
       (5L, "update", "U5c", 55.0)).toDF("k", "op", "s", "v")
-    val root = java.nio.file.Files.createTempDirectory("graft_vlake_").toString
+    val root = tmpDir("graft_vlake_").toString
     val table = s"vlake_snap_${System.nanoTime()}"
     val streamed = Streams
       .mergeReplayVersioned(spark, initial, Seq(b1, b2, b3), root, table, "k", 8)
@@ -665,7 +665,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.sources.{VersionedLake => VL}
     val initial = (1L to 50L).map(k => (k, s"s$k", k * 1.0)).toDF("k", "s", "v")
-    val root = java.nio.file.Files.createTempDirectory("graft_vlake_ret_").toString
+    val root = tmpDir("graft_vlake_ret_").toString
     val table = s"vlake_ret_${System.nanoTime()}"
     VL.init(initial, root, table, "k", 4)
     for (b <- 0 until 6) {
@@ -708,7 +708,7 @@ class StreamingSpec extends AnyFunSuite {
     val all = (1 to 400).map(i => ("g" + (i % 2), i * 1.3)).toDF("grp", "x")
     def slice(lo: Int, hi: Int) =
       (lo until hi).map(i => ("g" + (i % 2), i * 1.3)).toDF("grp", "x")
-    val root = java.nio.file.Files.createTempDirectory("graft_ddlake_").toString
+    val root = tmpDir("graft_ddlake_").toString
     val table = s"ddlake_${System.nanoTime()}"
     // streamed: init on [1,100), three batches add the rest
     val fin = graft.streaming.Streams.ddSketchReplayVersioned(spark,
@@ -744,7 +744,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.pipeline.Sketches
     def slice(lo: Int, hi: Int) =
       (lo until hi).map(i => ("g", s"tok${i % 37}")).toDF("grp", "v")
-    val root = java.nio.file.Files.createTempDirectory("graft_cmslake_").toString
+    val root = tmpDir("graft_cmslake_").toString
     val table = s"cmslake_${System.nanoTime()}"
     VL.init(Sketches.cmsCounters(slice(0, 300), "grp", "v", 4, 64),
       root, table, "grp", 2)
@@ -764,7 +764,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.pipeline.Sketches
     def slice(lo: Int, hi: Int) =
       (lo until hi).map(i => ("g" + (i % 2), s"v$i")).toDF("grp", "v")
-    val root = java.nio.file.Files.createTempDirectory("graft_bloomlake_").toString
+    val root = tmpDir("graft_bloomlake_").toString
     val table = s"bloomlake_${System.nanoTime()}"
     val fin = graft.streaming.Streams.bloomReplayVersioned(spark,
       slice(0, 500), Seq(slice(500, 1000), slice(1000, 1500)),
@@ -793,8 +793,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.sources.{VersionedLake => VL}
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_vlake_smp_").toString
+    val root = tmpDir("graft_vlake_smp_").toString
     val table = s"vlake_smp_${System.nanoTime()}"
     val all = (0 until 4000).map(i => (s"g${i % 3}", i.toLong)).toDF("g", "id")
     val m = pmod(col("id"), lit(4))
@@ -838,8 +837,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.pipeline.IvfIndex
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivf_").toString + "/ivf"
+    val root = tmpDir("graft_ivf_").toString + "/ivf"
     val dim = 8
     // deterministic corpus: 4 well-separated clusters (base vector per
     // cluster + small per-id jitter), 400 vectors
@@ -952,8 +950,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.sources.ZOrderLake
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_zolake_").toString + "/zo"
+    val root = tmpDir("graft_zolake_").toString + "/zo"
     // init: a full 400×400 grid sample (diagonal-ish coverage) — the
     // bounds pin here
     val init = (0 until 40000).map { i =>
@@ -1021,8 +1018,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.pipeline.IvfIndex
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivfh_").toString + "/ivf"
+    val root = tmpDir("graft_ivfh_").toString + "/ivf"
     val dim = 4
     // centroids at unit vectors scaled 10; init data ON the centroids
     // (baseline d2 = per-id jitter only), drifted batch far off them
@@ -1063,8 +1059,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.pipeline.IvfIndex
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivfg_").toString + "/ivf"
+    val root = tmpDir("graft_ivfg_").toString + "/ivf"
     val centroids = Seq((0, Array(10.0, 0.0)), (1, Array(0.0, 10.0)))
       .toDF("list", "cvec")
     IvfIndex.init(
@@ -1104,8 +1099,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.pipeline.IvfIndex
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_").toString + "/ivf"
+    val root = tmpDir("graft_ivfpq_").toString + "/ivf"
     val dim = 16
     def vec(id: Int): Array[Float] = {
       val c = id % 2
@@ -1255,8 +1249,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import graft.pipeline.IvfIndex
     import graft.streaming.Streams
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivfac_").toString + "/ivf"
+    val root = tmpDir("graft_ivfac_").toString + "/ivf"
     val centroids = Seq((0, Array(10.0, 0.0)), (1, Array(0.0, 10.0)))
       .toDF("list", "cvec")
     def frame(ids: Seq[Int]) = ids.map(i =>
@@ -1313,8 +1306,7 @@ class StreamingSpec extends AnyFunSuite {
     val centroids = (0 until 4).map(c =>
       (c, Array.tabulate(dim)(j => if (j == c * 2) 10.0 else 0.0)))
       .toDF("list", "cvec")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivfrb_").toString + "/ivf"
+    val root = tmpDir("graft_ivfrb_").toString + "/ivf"
     IvfIndex.init(frame(0 until 100), "vec_id", "embedding", centroids, root,
       pqM = 4, pqK = 16)
     IvfIndex.applyBatch(frame(100 until 200), "vec_id", "embedding", root, 0L,
@@ -1348,8 +1340,7 @@ class StreamingSpec extends AnyFunSuite {
     // rebuild == init-from-scratch twin on the same contents: same
     // assignments AND same PQ codes (the codebook carries; the twin's
     // sampled seeds are the same 16 lowest ids)
-    val twin = java.nio.file.Files
-      .createTempDirectory("graft_ivfrb_twin_").toString + "/ivf"
+    val twin = tmpDir("graft_ivfrb_twin_").toString + "/ivf"
     IvfIndex.init(frame(0 until 400), "vec_id", "embedding", cent2, twin,
       pqM = 4, pqK = 16)
     def snap(r: String) = IvfIndex.currentAll(spark, r)
@@ -1381,8 +1372,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.pipeline.IvfIndex
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivfhc_").toString + "/ivf"
+    val root = tmpDir("graft_ivfhc_").toString + "/ivf"
     // integer-grid fixture: exact d2 sums (same trick as q_ivf_health)
     val centroids = Seq((0, Array(10.0, 0.0)), (1, Array(0.0, 10.0)))
       .toDF("list", "cvec")
@@ -1430,10 +1420,8 @@ class StreamingSpec extends AnyFunSuite {
     val centroids = (0 until 4).map(c =>
       (c, Array.tabulate(dim)(j => if (j == c * 2) 10.0 else 0.0)))
       .toDF("list", "cvec")
-    val co = java.nio.file.Files
-      .createTempDirectory("graft_ivfco_").toString + "/ivf"
-    val raw = java.nio.file.Files
-      .createTempDirectory("graft_ivfco_raw_").toString + "/ivf"
+    val co = tmpDir("graft_ivfco_").toString + "/ivf"
+    val raw = tmpDir("graft_ivfco_raw_").toString + "/ivf"
     // storeRaw=false without a codebook is meaningless -> loud
     intercept[IllegalArgumentException] {
       IvfIndex.init(frame(0 until 100), "vec_id", "embedding", centroids,
@@ -1486,8 +1474,7 @@ class StreamingSpec extends AnyFunSuite {
   test("IVF kernel memory guard: an over-bound centroid matrix fails at build, loudly") {
     import spark.implicits._
     import graft.pipeline.IvfIndex
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivfmg_").toString + "/ivf"
+    val root = tmpDir("graft_ivfmg_").toString + "/ivf"
     val centroids = Seq((0, Array(10.0, 0.0)), (1, Array(0.0, 10.0)))
       .toDF("list", "cvec")
     val emb = Seq((0L, Array(10f, 0f)), (1L, Array(0f, 10f)))
@@ -1551,10 +1538,8 @@ class StreamingSpec extends AnyFunSuite {
     val centroids = (0 until 4).map(c =>
       (c, Array.tabulate(dim)(j => if (j == c * 2) 10.0 else 0.0)))
       .toDF("list", "cvec")
-    val sq = java.nio.file.Files
-      .createTempDirectory("graft_ivfsq_").toString + "/ivf"
-    val raw = java.nio.file.Files
-      .createTempDirectory("graft_ivfsq_raw_").toString + "/ivf"
+    val sq = tmpDir("graft_ivfsq_").toString + "/ivf"
+    val raw = tmpDir("graft_ivfsq_raw_").toString + "/ivf"
     intercept[IllegalArgumentException] { // sq8 excludes code-only
       IvfIndex.init(frame(0 until 100), "vec_id", "embedding", centroids,
         sq, pqM = 4, storeRaw = false, sq8 = true)
@@ -1674,8 +1659,7 @@ class StreamingSpec extends AnyFunSuite {
     val centroids = (0 until 3).map(c =>
       (c, Array.tabulate(dim)(j => if (j == c * 2) 10.0 else 0.0)))
       .toDF("list", "cvec")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivfcache_").toString + "/ivf"
+    val root = tmpDir("graft_ivfcache_").toString + "/ivf"
     IvfIndex.init(frame(0 until 60), "vec_id", "embedding", centroids, root,
       pqM = 4, pqK = 8)
     IvfIndex.applyBatch(frame(60 until 120), "vec_id", "embedding", root, 0L,
@@ -1710,8 +1694,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(lists.length == 120 && lists.forall { case (id, l) =>
       l == (((id % 3) + 2) % 3).toInt },
       "stale cached centroids leaked through a re-init")
-    val twin = java.nio.file.Files
-      .createTempDirectory("graft_ivfcache_tw_").toString + "/ivf"
+    val twin = tmpDir("graft_ivfcache_tw_").toString + "/ivf"
     IvfIndex.init(frame(0 until 60), "vec_id", "embedding", shifted, twin,
       pqM = 4, pqK = 8)
     IvfIndex.applyBatch(frame(60 until 120), "vec_id", "embedding", twin, 0L,
@@ -1737,7 +1720,7 @@ class StreamingSpec extends AnyFunSuite {
   test("tumblingAgg removes its staging directory and leaves the table intact") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tumbling_")
+    val dir = tmpDir("graft_tumbling_").toPath
     // events.parquet as one file, the layout the stream stages a link to
     val written = dir.resolve("written").toString
     Seq(("2024-01-01 00:10:00", "a", 1.0), ("2024-01-01 01:00:00", "a", 2.0),
@@ -1780,7 +1763,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val home = loaders(spark.range(8).filter(seen(col("id"))).count())
     assert(home.size == 1)
-    val base = java.nio.file.Files.createTempDirectory("graft_rehome_").toString
+    val base = tmpDir("graft_rehome_").toString
     def run(in: String, sink: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
         idCol: String): Set[ClassLoader] = loaders {

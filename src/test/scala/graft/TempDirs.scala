@@ -18,7 +18,19 @@ trait TempDirs extends TestSuite {
 
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test)
-    finally { tmpDirs.foreach(deleteTree); tmpDirs.clear() }
+    finally { tmpDirs.foreach(TempDirs.deleteTree); tmpDirs.clear() }
+}
+
+object TempDirs {
+
+  /** A temp directory that outlives the test cases, such as the
+    * warehouse of a session that suites share: deleted when the JVM
+    * exits. */
+  def forJvm(prefix: String): File = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(deleteTree(d))
+    d
+  }
 
   /** Deletes `f` and, unless it is a symlink, everything below it. */
   private def deleteTree(f: File): Unit = {

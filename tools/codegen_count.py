@@ -73,17 +73,69 @@ def is_executor(thread):
     return thread.startswith("Executor task launch worker")
 
 
+def timed_op(raw, ts):
+    """The timed operation whose `t0`..`t1` holds epoch-ms `ts`: None
+    outside the timed region, "" between two operations."""
+    if not raw["timed_start_ms"] <= ts <= raw["timed_end_ms"]:
+        return None
+    return next((o for o in raw["ops"] if o["phase"] == "timed" and o["t0"] <= ts <= o["t1"]), "")
+
+
+def run_bench(workload, seed, seconds, java_opts):
+    """Run `perfbench/run.py` in-process with `java_opts` added to
+    `JAVA_TOOL_OPTIONS` and the deletion of its run directory deferred;
+    returns the harness's `raw.json`, or None when the run failed. The
+    engine is compiled and the tables generated first, under the caller's
+    own options, so the harness is the only JVM that runs with
+    `java_opts`."""
+    root = os.getcwd()
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_run", os.path.join(root, "perfbench", "run.py"))
+    run = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run)
+    _, sf, replicas = run.WORKLOADS[workload]
+    run.build.compile_classes(root)
+    run.build.data(root, sf, replicas)
+    before = os.environ.get("JAVA_TOOL_OPTIONS")
+    os.environ["JAVA_TOOL_OPTIONS"] = ((before or "") + " " + java_opts).strip()
+    kept = []
+
+    class DeferRmtree:
+        """run.py's `shutil`, with `rmtree` deferred to the end."""
+        rmtree = staticmethod(lambda p, *args, **kw: kept.append(p))
+
+        def __getattr__(self, name):
+            return getattr(shutil, name)
+
+    run.shutil = DeferRmtree()
+    try:
+        rc = run.main(["--workload", workload, "--seed", str(seed),
+                       "--seconds", str(seconds), "--trace", "0"])
+        runs = [p for p in kept if os.path.isfile(os.path.join(p, "raw.json"))]
+        if rc or not runs:
+            print("error: the benchmark run failed", file=sys.stderr)
+            return None
+        with open(os.path.join(runs[0], "raw.json")) as f:
+            return json.load(f)
+    finally:
+        for p in kept:
+            shutil.rmtree(p, ignore_errors=True)
+        # JVMs the caller starts afterwards (`jfr print`) run without them
+        if before is None:
+            del os.environ["JAVA_TOOL_OPTIONS"]
+        else:
+            os.environ["JAVA_TOOL_OPTIONS"] = before
+
+
 def summarize(raw, lines):
-    t0, t1 = raw["timed_start_ms"], raw["timed_end_ms"]
-    timed = [o for o in raw["ops"] if o["phase"] == "timed"]
     pairs = collections.defaultdict(lambda: [0, 0, 0.0])
     per_op = collections.defaultdict(lambda: [0, 0])
     unattributed = 0
     for ts, thread, ms in lines:
-        if not t0 <= ts <= t1:
-            continue
-        op = next((o for o in timed if o["t0"] <= ts <= o["t1"]), None)
+        op = timed_op(raw, ts)
         if op is None:
+            continue
+        if not op:
             unattributed += 1
             continue
         side = 1 if is_executor(thread) else 0
@@ -100,42 +152,18 @@ def main(argv=None):
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, default=8)
     a = ap.parse_args(argv)
-    root = os.getcwd()
     work = tempfile.mkdtemp(prefix="codegen_count_")
     log = os.path.join(work, "codegen.log")
     conf = os.path.join(work, "log4j2.properties")
     with open(conf, "w") as f:
         f.write(LOG4J.format(log=log, logger=LOGGER))
-    os.environ["JAVA_TOOL_OPTIONS"] = (
-        os.environ.get("JAVA_TOOL_OPTIONS", "") + f" -Dlog4j2.configurationFile={conf}").strip()
-
-    spec = importlib.util.spec_from_file_location(
-        "perfbench_run", os.path.join(root, "perfbench", "run.py"))
-    run = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(run)
-    kept = []
-
-    class DeferRmtree:
-        """run.py's `shutil`, with `rmtree` deferred to the end."""
-        rmtree = staticmethod(lambda p, *args, **kw: kept.append(p))
-
-        def __getattr__(self, name):
-            return getattr(shutil, name)
-
-    run.shutil = DeferRmtree()
     try:
-        rc = run.main(["--workload", a.workload, "--seed", str(a.seed),
-                       "--seconds", str(a.seconds), "--trace", "0"])
-        runs = [p for p in kept if os.path.isfile(os.path.join(p, "raw.json"))]
-        if rc or not runs:
-            print("error: the benchmark run failed", file=sys.stderr)
+        raw = run_bench(a.workload, a.seed, a.seconds,
+                        f"-Dlog4j2.configurationFile={conf}")
+        if raw is None:
             return 1
-        with open(os.path.join(runs[0], "raw.json")) as f:
-            raw = json.load(f)
         pairs, per_op, unattributed = summarize(raw, compiles(log))
     finally:
-        for p in kept:
-            shutil.rmtree(p, ignore_errors=True)
         shutil.rmtree(work, ignore_errors=True)
     for k in sorted(pairs):
         d, e, ms = pairs[k]
