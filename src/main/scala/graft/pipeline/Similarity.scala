@@ -227,8 +227,7 @@ object Similarity {
   /** The staggered-grid ε-join core over a deduplicated (id, v, nrm)
     * frame — see [[gridNearDuplicates]] for the recall-1 argument. */
   private def gridPairs(normed: DataFrame, threshold: Double, dim: Int,
-                        nProj: Int, seed: Int,
-                        exactGrid: Boolean = false): DataFrame = {
+                        nProj: Int, seed: Int, exactGrid: Boolean): DataFrame = {
     import graft.functions.FloatDotProduct.floatDot
     val eps = math.sqrt(2.0 - 2.0 * threshold)
     val rnd = new scala.util.Random(seed)

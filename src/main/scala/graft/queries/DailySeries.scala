@@ -767,7 +767,6 @@ private[graft] object DailySeries {
     Query("q_base_flow_index", (s, dir) => {
       // base_flow_index (_hydrology.py:50): min 7-day rolling mean / mean
       val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      val wu = Window.partitionBy(col("user_id"))
       dailyTotals(s, dir)
         .withColumn("rn", row_number().over(w))
         .withColumn("r7", avg(col("total")).over(w.rowsBetween(-6, 0)))

@@ -27,12 +27,16 @@ import java.util.zip.Inflater
   * in either checksum position: netcdf-c checksums raw data, h5py's
   * pipeline order checksums the compressed bytes).
   *
-  * Scale design mirrors `NetCDF`: the driver parses only the metadata
-  * (superblock → group links → object headers → chunk index, a few KB),
-  * producing a chunk table of (address, size, offsets). Executors then
-  * seek-read-inflate their chunks in parallel (`spark.range` over the
-  * chunk table → mapPartitions), so ingestion parallelism is bounded by
-  * chunk count, not by a driver scan.
+  * Scale design mirrors `NetCDF` and `Zarr`: the driver parses only the
+  * metadata (superblock → group links → object headers, a few KB), and
+  * every element reader runs one executor-side cell walk (`cellWalk`),
+  * passing only a block decoder. Contiguous and compact data stream
+  * through range partitions of the flat cell index; chunked data reads
+  * the records of one chunk-record source (`chunkRdd`: computed on
+  * executors for implicit and fixed-array indexes, driver-parsed for the
+  * irregular B-tree and extensible-array ones), de-filters each chunk and
+  * unravels it, so ingestion parallelism is bounded by chunk count, not
+  * by a driver scan.
   *
   * "Latest" groups are read in BOTH storage phases: compact (link
   * messages in the group header) and dense (link bodies in a fractal
@@ -85,13 +89,14 @@ object Hdf5 {
     * files), 1 = single chunk, 2 = implicit (contiguous grid), 3 = fixed
     * array (fixed-size "latest" datasets), 4 = extensible array (one
     * unlimited dim), 5 = v2 B-tree (several unlimited dims).
-    * `chunkBtree` holds the index structure's address for every kind. */
+    * `chunkBtree` holds the index structure's address for every kind.
+    * `filters` is the filter pipeline in WRITE order. */
   final case class Dataset(name: String, dims: Seq[Long], dtClass: Int,
                            dtSize: Int, littleEndian: Boolean,
                            layoutClass: Int, dataAddress: Long, dataSize: Long,
                            chunkDims: Seq[Long], chunkBtree: Long,
-                           gzip: Boolean, attrs: Map[String, Double] = Map.empty,
-                           chunkIndex: Int = 0, shuffled: Boolean = false,
+                           attrs: Map[String, Double] = Map.empty,
+                           chunkIndex: Int = 0,
                            members: Seq[Member] = Nil, vlenStr: Boolean = false,
                            filters: Seq[Int] = Nil,
                            vlenBase: Option[Member] = None,
@@ -99,13 +104,8 @@ object Hdf5 {
                            nbitCd: Option[Seq[Int]] = None,
                            soCd: Option[Seq[Int]] = None,
                            strAttrs: Map[String, String] = Map.empty) {
-    /** Pipeline in WRITE order when parsed; empty for legacy callers that
-      * built the case class directly — fall back to the boolean flags in
-      * the canonical netCDF4 order (shuffle before deflate). */
-    def pipeline: Seq[Int] =
-      if (filters.nonEmpty) filters
-      else (if (shuffled) Seq(FilterShuffle) else Nil) ++
-           (if (gzip) Seq(FilterDeflate) else Nil)
+    def gzip: Boolean = filters.contains(FilterDeflate)
+    def shuffled: Boolean = filters.contains(FilterShuffle)
   }
   /** One compound-datatype member. Atomic classes (0 fixed-point, 1 IEEE
     * float, 3 fixed string) stand alone; class 6 (NESTED compound)
@@ -120,11 +120,11 @@ object Hdf5 {
 
   // ---------------- driver-side metadata parse ----------------
 
-  private class Reader(conf: Configuration, path: String) {
+  private class Reader(val raf: FsIo.SeekableData) extends AutoCloseable {
     // Hadoop-FS random-access cursor (FsIo.SeekableData): file://, hdfs://
     // and s3a:// HDF5 files parse identically, and byte-cursor reads serve
     // from SeekableData's window instead of a syscall/GET per byte
-    val raf = FsIo.openSeekable(conf, path)
+    def this(conf: Configuration, path: String) = this(FsIo.openSeekable(conf, path))
     def close(): Unit = raf.close()
     def seek(p: Long): Unit = raf.seek(p)
     def u8(): Int = raf.readUnsignedByte()
@@ -540,7 +540,6 @@ object Hdf5 {
     var dtClass = -1; var dtSize = 0; var little = true
     var layoutClass = -1; var dataAddr = Undef; var dataSize = 0L
     var chunkDims: Seq[Long] = Nil; var chunkBtree = Undef
-    var gzip = false; var shuffled = false
     var szipCd: Option[Seq[Int]] = None
     var nbitCd: Option[Seq[Int]] = None
     var soCd: Option[Seq[Int]] = None
@@ -556,8 +555,8 @@ object Hdf5 {
       t match {
         case 0x0001 => // dataspace
           r.seek(body)
-          val v = r.u8(); val rank = r.u8(); val flags = r.u8()
-          r.skip(if (v == 1) 5 else 1)
+          val v = r.u8(); val rank = r.u8()
+          r.skip(1 + (if (v == 1) 5 else 1)) // flags, then v1 reserved / v2 type
           dims = (0 until rank).map(_ => r.u64())
         case 0x0003 => // datatype
           r.seek(body)
@@ -664,8 +663,6 @@ object Hdf5 {
           szipCd = pl.szipCd
           nbitCd = pl.nbitCd
           soCd = pl.soCd
-          gzip = pl.ids.contains(FilterDeflate)
-          shuffled = pl.ids.contains(FilterShuffle)
         case 0x000C => // attribute v1/v2/v3: CF scalars (_FillValue, scale, offset)
           r.seek(body)
           val v = r.u8()
@@ -675,12 +672,8 @@ object Hdf5 {
           if (v <= 3 && (aflags & 0x03) == 0) {
             val nameSize = r.u16(); val adtSize = r.u16(); val adsSize = r.u16()
             if (v == 3) r.skip(1) // name character-set encoding
-            val aName = {
-              val b = r.bytes(nameSize)
-              if (v == 1) r.skip(pad8(nameSize) - nameSize)
-              val z = b.indexOf(0.toByte)
-              new String(b, 0, if (z < 0) b.length else z, "UTF-8")
-            }
+            val aName = fixedStr(r.bytes(nameSize), 0, nameSize)
+            if (v == 1) r.skip(pad8(nameSize) - nameSize)
             val dtStart = r.pos
             val cv = r.u8(); val aCls = cv & 0x0F
             val aBits0 = r.u8(); val aLittle = (aBits0 & 1) == 0; r.skip(2)
@@ -700,20 +693,14 @@ object Hdf5 {
             if ((aCls == 0 || aCls == 1) && aCount == 1 &&
                 (aSize == 1 || aSize == 2 || aSize == 4 || aSize == 8))
               attrs(aName) = decode(r.bytes(aSize), aCls, aSize, aLittle, 1)(0)
-            else if (aCls == 3 && aCount == 1) {
-              val b = r.bytes(aSize)
-              val z = b.indexOf(0.toByte)
-              strAttrs(aName) =
-                new String(b, 0, if (z < 0) b.length else z, "UTF-8")
-            } else if (aCls == 9 && (aBits0 & 0x0F) == 1 && aCount == 1) {
-              val len = r.u32().toInt
-              val heapAddr = r.u64()
-              val idx = r.u32().toInt
-              if (heapAddr != -1L && len > 0) {
+            else if (aCls == 3 && aCount == 1)
+              strAttrs(aName) = fixedStr(r.bytes(aSize), 0, aSize)
+            else if (aCls == 9 && (aBits0 & 0x0F) == 1 && aCount == 1) {
+              val ref = vlenRef(java.nio.ByteBuffer.wrap(r.bytes(16))
+                .order(java.nio.ByteOrder.LITTLE_ENDIAN), 0)
+              if (ref.addr != Undef && ref.len > 0) {
                 val save = r.pos
-                val obj = readGcol(r.raf, heapAddr)(idx)
-                strAttrs(aName) =
-                  new String(obj, 0, math.min(len, obj.length), "UTF-8")
+                strAttrs(aName) = vlenString(readGcol(r, ref.addr)(ref.idx), ref.len)
                 r.seek(save)
               }
             }
@@ -726,30 +713,25 @@ object Hdf5 {
       // normalise v4 chunk dims to the v3 convention (trailing element size)
       val cd = if (chunkDimsNeedElem) chunkDims :+ dtSize.toLong else chunkDims
       Some(Dataset(name, dims, dtClass, dtSize, little, layoutClass,
-        dataAddr, dataSize, cd, chunkBtree, gzip, attrs.toMap, chunkIndexKind,
-        shuffled, members, vlenStr, filterIds.toSeq, vlenBase, szipCd,
+        dataAddr, dataSize, cd, chunkBtree, attrs.toMap, chunkIndexKind,
+        members, vlenStr, filterIds.toSeq, vlenBase, szipCd,
         nbitCd, soCd, strAttrs.toMap))
     }
   }
 
   /** Chunk table (driver-side; a few bytes per chunk) from whichever index
-    * the layout message declared: v1 B-tree (classic), single chunk,
-    * implicit grid, or fixed array ("latest"). */
+    * the layout message declared: v1 B-tree (classic), single chunk, fixed
+    * array, extensible array or v2 B-tree ("latest"). An implicit index
+    * (kind 2) has no records to parse; [[chunkRdd]] computes them. */
   def chunkTable(path: String, ds: Dataset): Seq[Chunk] = {
     val r = new Reader(FsIo.driverConf(), path)
     try ds.chunkIndex match {
       case 0 => collectChunks(r, ds.chunkBtree, ds.chunkDims.length)
       case 1 => // single chunk: whole dataspace in one chunk at the address
         val stored =
-          if (ds.pipeline.nonEmpty) ds.dataSize // filtered size recorded in the layout msg
+          if (ds.filters.nonEmpty) ds.dataSize // filtered size recorded in the layout msg
           else ds.chunkDims.product // dims × element size (element incl.)
         Seq(Chunk(ds.chunkBtree, stored, ds.chunkDims.dropRight(1).map(_ => 0L)))
-      case 2 => // implicit: unfiltered chunks laid out in grid row-major order
-        val grid = chunkGrid(ds)
-        val chunkBytes = ds.chunkDims.product // includes element size
-        grid.zipWithIndex.map { case (offs, i) =>
-          Chunk(ds.chunkBtree + i.toLong * chunkBytes, chunkBytes, offs)
-        }
       case 3 => fixedArrayChunks(r, ds)
       case 4 => extensibleArrayChunks(r, ds)
       case 5 => v2BtreeChunks(r, ds)
@@ -757,107 +739,87 @@ object Hdf5 {
     } finally r.close()
   }
 
-  /** Chunk-record RDD with executor-side record computation where the
-    * index is a REGULAR GRID — the 100 TB ingest path (r13, mirroring
-    * Zarr's range-based chunk walk):
+  /** The one source of chunk records under [[cellWalk]], computed on
+    * executors where the index is a REGULAR GRID — the 100 TB ingest path
+    * (r13, mirroring Zarr's range-based chunk walk):
     *
     *   - implicit index (kind 2): address = base + flat·chunkBytes is
-    *     pure math — `spark.range` + unravel, zero driver state;
+    *     pure math — `spark.range` + [[chunkGrid]], zero driver state;
     *   - fixed array (kind 3): the driver parses ONLY the ~30-byte FAHD
-    *     header; each range partition bulk-reads its own contiguous
-    *     entry span from the FADB data block (one seek per task). The
-    *     whole-block checksum is NOT verified on this path (a 10^8-entry
-    *     block can't be driver-verified anyway); per-chunk decode errors
-    *     still fail loudly downstream.
+    *     header; each range partition reads its own contiguous entry span
+    *     ([[fixedArrayEntries]], one seek per task). The whole-block
+    *     checksum is NOT verified on this path (a 10^8-entry block can't
+    *     be driver-verified anyway; [[chunkTable]] verifies it); per-chunk
+    *     decode errors still fail loudly downstream.
     *   - everything else (v1/v2 B-trees, extensible arrays, single
-    *     chunk): genuinely irregular driver-parsed records, shipped via
-    *     `parallelize` as before.
+    *     chunk): genuinely irregular records from [[chunkTable]], shipped
+    *     via `parallelize`.
     */
   private def chunkRdd(spark: SparkSession, path: String, ds: Dataset)
       : org.apache.spark.rdd.RDD[Chunk] = {
-    val cdims = ds.chunkDims.dropRight(1).toArray
-    val counts = ds.dims.toArray.zip(cdims).map { case (d, c) => ((d + c - 1) / c).toInt }
-    val nChunks = counts.foldLeft(1L)((a, n) => a * n)
-    val slices = math.max(1L, math.min(nChunks,
+    val (nChunks, origin) = chunkGrid(ds)
+    val chunkBytes = ds.chunkDims.product
+    def slices(n: Long): Int = math.max(1L, math.min(n,
       math.max(64, spark.sparkContext.defaultParallelism * 2).toLong)).toInt
-    def gridOffsets(flat: Long): Seq[Long] = {
-      val idx = new Array[Long](counts.length)
-      var rem = flat; var i = counts.length - 1
-      while (i >= 0) { idx(i) = (rem % counts(i)) * cdims(i); rem /= counts(i); i -= 1 }
-      idx.toSeq
-    }
+    def flats = spark.sparkContext.range(0L, nChunks, numSlices = slices(nChunks))
     ds.chunkIndex match {
       case 2 => // implicit: unfiltered grid row-major from the base address
         val base = ds.chunkBtree
-        val chunkBytes = ds.chunkDims.product
-        spark.sparkContext.range(0L, nChunks, numSlices = slices).map { flat =>
-          Chunk(base + flat * chunkBytes, chunkBytes, gridOffsets(flat))
-        }
+        flats.map(flat => Chunk(base + flat * chunkBytes, chunkBytes, origin(flat)))
       case 3 => // fixed array: executors range-read their FADB entry spans
         val r = new Reader(FsIo.driverConf(), path)
-        val fa = try fixedArrayMeta(r, ds) finally r.close()
-        require(fa.maxEntries == nChunks,
-          s"fixed-array entries ${fa.maxEntries} != grid $nChunks")
-        val chunkBytes = ds.chunkDims.product
-        val (clientId, entrySize, dataBlock) = (fa.clientId, fa.entrySize, fa.dataBlock)
-        // FADB prefix: signature(4) + version(1) + client id(1) + header addr(8)
-        val entriesAt = dataBlock + 14L
+        val fa = try fixedArrayMeta(r, ds, nChunks) finally r.close()
         val snap = FsIo.snapshot(spark) // executor reads go through Hadoop FS
-        spark.sparkContext.range(0L, nChunks, numSlices = slices)
-          .mapPartitions { it =>
-            val idxs = it.toArray // one range partition = contiguous span
-            if (idxs.isEmpty) Iterator.empty
-            else {
-              val raf = FsIo.openSeekable(snap.value, path)
-              try {
-                // structural prefix check per task (6 bytes): the driver
-                // no longer reads the block, so a dangling data-block
-                // address must still fail loudly HERE, not as a confusing
-                // EOF deep in chunk decode (whole-block checksum remains
-                // skipped by design — see the chunkRdd contract above)
-                raf.seek(dataBlock)
-                val pre = new Array[Byte](6)
-                raf.readFully(pre)
-                require(new String(pre, 0, 4, "ASCII") == "FADB" &&
-                    pre(4) == 0 && (pre(5) & 0xFF) == clientId,
-                  s"bad fixed-array data block at $dataBlock")
-                raf.seek(entriesAt + idxs.head * entrySize)
-                val buf = new Array[Byte](idxs.length * entrySize)
-                raf.readFully(buf)
-                val bb = java.nio.ByteBuffer.wrap(buf)
-                  .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-                idxs.iterator.map { flat =>
-                  val p = ((flat - idxs.head) * entrySize).toInt
-                  val addr = bb.getLong(p)
-                  if (clientId == 1) {
-                    val stored = (entrySize - 8 - 4) match {
-                      case 1 => (bb.get(p + 8) & 0xFF).toLong
-                      case 2 => (bb.getShort(p + 8) & 0xFFFF).toLong
-                      case 4 => bb.getInt(p + 8).toLong & 0xFFFFFFFFL
-                      case 8 => bb.getLong(p + 8)
-                      case o => throw new IllegalArgumentException(s"stored-size width $o")
-                    }
-                    Chunk(addr, stored, gridOffsets(flat))
-                  } else Chunk(addr, chunkBytes, gridOffsets(flat))
-                }.toArray.iterator // materialize before the handle closes
-              } finally raf.close()
-            }
+        flats.mapPartitions { it =>
+          if (!it.hasNext) Iterator.empty
+          else {
+            val first = it.next() // one range partition = contiguous span
+            val n = 1 + it.length
+            val raf = FsIo.openSeekable(snap.value, path)
+            try {
+              // structural prefix check per task (6 bytes): the driver
+              // does not read the block, so a dangling data-block address
+              // must still fail loudly HERE, not as a confusing EOF deep
+              // in chunk decode
+              raf.seek(fa.dataBlock)
+              val pre = new Array[Byte](6)
+              raf.readFully(pre)
+              require(new String(pre, 0, 4, "ASCII") == "FADB" &&
+                  pre(4) == 0 && (pre(5) & 0xFF) == fa.clientId,
+                s"bad fixed-array data block at ${fa.dataBlock}")
+              fixedArrayEntries(raf, fa, first, n, chunkBytes, origin).iterator
+            } finally raf.close()
           }
+        }
       case _ => // irregular records: driver-parsed, shipped to executors
         val chunks = chunkTable(path, ds)
-        val s2 = math.max(1, math.min(chunks.size,
-          math.max(64, spark.sparkContext.defaultParallelism * 2)))
-        spark.sparkContext.parallelize(chunks, s2)
+        spark.sparkContext.parallelize(chunks, slices(chunks.size.toLong))
     }
   }
 
-  private final case class FixedArrayMeta(clientId: Int, entrySize: Int,
-                                          maxEntries: Long, dataBlock: Long)
+  /** Row-major indices of cell `flat` in a grid of shape `shape`. */
+  private def unravel(flat: Long, shape: Array[Long]): Array[Long] = {
+    val idx = new Array[Long](shape.length)
+    var rem = flat; var i = shape.length - 1
+    while (i >= 0) { idx(i) = rem % shape(i); rem /= shape(i); i -= 1 }
+    idx
+  }
+
+  /** A chunked dataset's chunk grid: its chunk count, and chunk `flat`'s
+    * element offsets (row-major over the grid). */
+  private def chunkGrid(ds: Dataset): (Long, Long => Seq[Long]) = {
+    val cdims = ds.chunkDims.dropRight(1).toArray // last entry = element size
+    val counts = ds.dims.toArray.zip(cdims).map { case (d, c) => (d + c - 1) / c }
+    (counts.product,
+      flat => unravel(flat, counts).zip(cdims).map { case (i, c) => i * c }.toSeq)
+  }
+
+  private final case class FixedArrayMeta(clientId: Int, entrySize: Int, dataBlock: Long)
 
   /** Parse ONLY the FAHD header (checksummed, ~30 bytes) — the entry
     * data block is left for executors ([[chunkRdd]]) or the driver
     * ([[fixedArrayChunks]]) to read. */
-  private def fixedArrayMeta(r: Reader, ds: Dataset): FixedArrayMeta = {
+  private def fixedArrayMeta(r: Reader, ds: Dataset, nChunks: Long): FixedArrayMeta = {
     r.seek(ds.chunkBtree)
     require(new String(r.bytes(4), "ASCII") == "FAHD", "bad fixed-array header")
     val ver = r.u8(); require(ver == 0, s"fixed array v$ver")
@@ -872,50 +834,50 @@ object Hdf5 {
       s"paged fixed-array data blocks not supported ($maxEntries entries)")
     require(if (clientId == 1) Set(13, 14, 16, 20)(entrySize) else entrySize == 8,
       s"fixed-array entry size $entrySize for client $clientId")
-    FixedArrayMeta(clientId, entrySize, maxEntries, dataBlock)
-  }
-
-  /** Row-major chunk-grid offsets covering the dataspace. */
-  private def chunkGrid(ds: Dataset): Seq[Seq[Long]] = {
-    val cdims = ds.chunkDims.dropRight(1)
-    val counts = ds.dims.zip(cdims).map { case (d, c) => ((d + c - 1) / c).toInt }
-    counts.foldLeft(Seq(Seq.empty[Long])) { (acc, n) =>
-      acc.flatMap(pre => (0 until n).map(i => pre :+ i.toLong))
-    }.map(_.zip(cdims).map { case (i, c) => i * c })
+    require(maxEntries == nChunks, s"fixed-array entries $maxEntries != grid $nChunks")
+    FixedArrayMeta(clientId, entrySize, dataBlock)
   }
 
   /** Fixed Array chunk index ("FAHD" header → "FADB" data block): the
-    * "latest"-format index for datasets with fixed maximum dims. Elements
-    * are per-chunk addresses in row-major grid order; filtered elements
-    * (client id 1) add the stored size + filter mask. Single-page data
-    * blocks only (pages appear above 2^pageBits entries). */
+    * "latest"-format index for datasets with fixed maximum dims, read
+    * whole on the driver with the block checksum verified. Single-page
+    * data blocks only (pages appear above 2^pageBits entries). */
   private def fixedArrayChunks(r: Reader, ds: Dataset): Seq[Chunk] = {
-    val fa = fixedArrayMeta(r, ds)
+    val (nChunks, origin) = chunkGrid(ds)
+    val fa = fixedArrayMeta(r, ds, nChunks)
     r.seek(fa.dataBlock)
     require(new String(r.bytes(4), "ASCII") == "FADB", "bad fixed-array data block")
     val dver = r.u8(); require(dver == 0, s"fixed array data block v$dver")
-    r.skip(1 + 8) // client id + header address
-    val grid = chunkGrid(ds)
-    require(grid.size == fa.maxEntries,
-      s"fixed-array entries ${fa.maxEntries} != grid ${grid.size}")
-    val chunkBytes = ds.chunkDims.product
-    val out = grid.toIndexedSeq.map { offs =>
-      val addr = r.u64()
-      if (fa.clientId == 1) {
-        val szWidth = fa.entrySize - 8 - 4 // entry = address + stored size + mask
-        val stored = szWidth match {
-          case 1 => r.u8().toLong
-          case 2 => r.u16().toLong
-          case 4 => r.u32()
-          case 8 => r.u64()
+    val out = fixedArrayEntries(r.raf, fa, 0L, nChunks.toInt, ds.chunkDims.product, origin)
+    checkMeta(r, fa.dataBlock, "fixed-array data block")
+    out.toSeq
+  }
+
+  /** Fixed-array entries `from until from + n`, read as one span of the
+    * FADB entry list (after its 14-byte prefix: signature, version,
+    * client id, header address). Entries are per-chunk addresses in
+    * row-major grid order; filtered entries (client 1) add the stored
+    * size, in the entry's remaining width, and a 4-byte filter mask. */
+  private def fixedArrayEntries(raf: FsIo.SeekableData, fa: FixedArrayMeta, from: Long,
+                                n: Int, chunkBytes: Long,
+                                origin: Long => Seq[Long]): Array[Chunk] = {
+    raf.seek(fa.dataBlock + 14 + from * fa.entrySize)
+    val buf = new Array[Byte](n * fa.entrySize)
+    raf.readFully(buf)
+    val bb = java.nio.ByteBuffer.wrap(buf).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    Array.tabulate(n) { i =>
+      val p = i * fa.entrySize
+      val stored =
+        if (fa.clientId == 0) chunkBytes
+        else (fa.entrySize - 8 - 4) match {
+          case 1 => (bb.get(p + 8) & 0xFF).toLong
+          case 2 => (bb.getShort(p + 8) & 0xFFFF).toLong
+          case 4 => bb.getInt(p + 8).toLong & 0xFFFFFFFFL
+          case 8 => bb.getLong(p + 8)
           case o => throw new IllegalArgumentException(s"stored-size width $o")
         }
-        r.skip(4) // filter mask
-        Chunk(addr, stored, offs)
-      } else Chunk(addr, chunkBytes, offs)
+      Chunk(bb.getLong(p), stored, origin(from + i))
     }
-    checkMeta(r, fa.dataBlock, "fixed-array data block")
-    out
   }
 
   private def log2Floor(x: Long): Int = 63 - java.lang.Long.numberOfLeadingZeros(x)
@@ -1013,8 +975,8 @@ object Hdf5 {
     def ndblks(s: Int): Int = 1 << (s / 2)
     def dblkNelmts(s: Int): Long = minElmts.toLong << ((s + 1) / 2)
 
-    val grid = chunkGrid(ds)
-    val nChunks = grid.size
+    val (gridChunks, origin) = chunkGrid(ds)
+    val nChunks = gridChunks.toInt
     val chunkBytes = ds.chunkDims.product
 
     // index block: direct elements + data block addrs + secondary blk addrs
@@ -1115,7 +1077,7 @@ object Hdf5 {
           readDataBlock(dblkAddr, dnel)(withinD)
         }
       // address 0xFFFF.. (-1) = chunk not yet allocated -> all fill; skip
-      if (c.address == Undef) None else Some(Chunk(c.address, c.storedSize, grid(idx)))
+      if (c.address == Undef) None else Some(Chunk(c.address, c.storedSize, origin(idx.toLong)))
     }
   }
 
@@ -1257,8 +1219,7 @@ object Hdf5 {
 
   private def decode(bytes: Array[Byte], dtClass: Int, dtSize: Int,
                      little: Boolean, n: Int): Array[Double] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    bb.order(if (little) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(byteOrder(little))
     Array.tabulate(n) { i =>
       (dtClass, dtSize) match {
         case (1, 8) => bb.getDouble(i * 8)
@@ -1334,164 +1295,188 @@ object Hdf5 {
     }
   }
 
-  // ---------------- typed reads: strings, VLEN, compound ----------------
+  // ---------------- executor-side cell walk and the element readers ----------------
 
-  private def unravelIdx(flat: Long, dims: Array[Long]): Array[Long] = {
-    val idx = new Array[Long](dims.length)
-    var rem = flat; var i = dims.length - 1
-    while (i >= 0) { idx(i) = rem % dims(i); rem /= dims(i); i -= 1 }
-    idx
+  /** The dataset `name` in `path`; a missing name lists the ones present. */
+  private def dataset(path: String, name: String): Dataset = {
+    val all = readMeta(path)
+    all.find(_.name == name).getOrElse(throw new NoSuchElementException(
+      s"no dataset '$name' in $path; have: ${all.map(_.name).mkString(", ")}"))
   }
 
-  /** Raw element bytes for every in-bounds cell, as (indices, bytes) —
-    * shared plumbing for the string/compound readers. Contiguous data is
-    * range-partitioned with one bulk read per partition; chunked data
-    * reuses the chunk table and the shuffle/deflate pipeline. */
-  private def cellBytes(spark: SparkSession, path: String, ds: Dataset):
-      org.apache.spark.rdd.RDD[(Array[Long], Array[Byte])] = {
+  /** The executor-side cell walk every element reader shares: each
+    * in-bounds cell as (indices, value), where `block` turns the raw bytes
+    * of consecutive cells into a cell-index → value function. Contiguous
+    * and compact data (layouts 1 and 0) are range-partitioned over the
+    * flat cell index; a partition seeks once and reads its cells one after
+    * another through `SeekableData`'s window, one cell per block, so it
+    * streams in bounded memory. Chunked data (layout 2) takes each record
+    * of [[chunkRdd]]: stored bytes, [[defilter]], one block per chunk,
+    * unraveled row-major, offset to global indices and clipped past the
+    * dataspace edge (edge chunks store a full grid). */
+  private def cellWalk[T](spark: SparkSession, path: String, ds: Dataset)
+                         (block: Array[Byte] => Int => T)
+      : org.apache.spark.rdd.RDD[(Array[Long], T)] = {
     val snap = FsIo.snapshot(spark) // executor reads go through Hadoop FS
     val dims = ds.dims.toArray
     val esz = ds.dtSize
-    val total = dims.product
     ds.layoutClass match {
-      case 1 =>
+      case 0 | 1 =>
         val addr = ds.dataAddress
+        val total = dims.product
         val slices = math.max(1L, math.min(total,
           spark.sparkContext.defaultParallelism.toLong * 2)).toInt
-        spark.sparkContext.range(0L, total, numSlices = slices)
-          .mapPartitions { it =>
-            val idxs = it.toArray // one range partition = contiguous span
-            if (idxs.isEmpty) Iterator.empty
-            else {
-              val raf = FsIo.openSeekable(snap.value, path)
-              try {
-                val lo = idxs.head
-                raf.seek(addr + lo * esz)
-                val buf = new Array[Byte](((idxs.last - lo + 1) * esz).toInt)
-                raf.readFully(buf)
-                idxs.iterator.map { flat =>
-                  val s = ((flat - lo) * esz).toInt
-                  (unravelIdx(flat, dims),
-                    java.util.Arrays.copyOfRange(buf, s, s + esz))
-                }
-              } finally raf.close()
-            }
+        spark.sparkContext.range(0L, total, numSlices = slices).mapPartitions { it =>
+          if (!it.hasNext) Iterator.empty
+          else {
+            val cells = it.buffered
+            val raf = FsIo.openSeekable(snap.value, path)
+            raf.seek(addr + cells.head * esz)
+            closing(raf)(cells.map { flat =>
+              val b = new Array[Byte](esz)
+              raf.readFully(b)
+              (unravel(flat, dims), block(b)(0))
+            })
           }
+        }
       case 2 =>
-        val cdims = ds.chunkDims.dropRight(1).toArray
+        val cdims = ds.chunkDims.dropRight(1).toArray // last entry = element size
         val chunkElems = cdims.product.toInt
-        val filters = ds.pipeline
+        val (filters, szipCd, nbitCd, soCd) = (ds.filters, ds.szipCd, ds.nbitCd, ds.soCd)
         chunkRdd(spark, path, ds).flatMap { c =>
           val raf = FsIo.openSeekable(snap.value, path)
-          try {
+          val stored = try {
             raf.seek(c.address)
-            val stored = new Array[Byte](c.storedSize.toInt)
-            raf.readFully(stored)
-            val bytes = defilter(stored, filters, chunkElems * esz, esz,
-              ds.szipCd, ds.nbitCd, ds.soCd)
-            (0 until chunkElems).flatMap { flat =>
-              val idx = unravelIdx(flat.toLong, cdims)
-              var inBounds = true; var j = 0
-              while (j < idx.length) {
-                idx(j) += c.offsets(j)
-                if (idx(j) >= dims(j)) inBounds = false
-                j += 1
-              }
-              if (!inBounds) None
-              else Some((idx, java.util.Arrays.copyOfRange(bytes,
-                flat * esz, flat * esz + esz)))
-            }.iterator
+            val b = new Array[Byte](c.storedSize.toInt)
+            raf.readFully(b)
+            b
           } finally raf.close()
+          val value = block(defilter(stored, filters, chunkElems * esz, esz,
+            szipCd, nbitCd, soCd))
+          (0 until chunkElems).iterator.flatMap { flat =>
+            val idx = unravel(flat.toLong, cdims)
+            var inBounds = true
+            var j = 0
+            while (j < idx.length) {
+              idx(j) += c.offsets(j)
+              if (idx(j) >= dims(j)) inBounds = false
+              j += 1
+            }
+            if (inBounds) Some((idx, value(flat))) else None
+          }
         }
-      case other => throw new IllegalArgumentException(
-        s"layout class $other for typed read")
+      case other => throw new IllegalArgumentException(s"layout class $other")
+    }
+  }
+
+  /** `it`, closing `c` once it is exhausted. */
+  private def closing[A](c: AutoCloseable)(it: Iterator[A]): Iterator[A] = new Iterator[A] {
+    def hasNext: Boolean = { val h = it.hasNext; if (!h) c.close(); h }
+    def next(): A = it.next()
+  }
+
+  /** A walked reader's (i0…, value) projection of `_1`'s indices and `_2`. */
+  private def cellFrame(raw: DataFrame, rank: Int): DataFrame =
+    raw.select((0 until rank).map(i => col("_1")(i).cast("int").as(s"i$i")) :+
+      col("_2").as("value"): _*)
+
+  private def byteOrder(little: Boolean): java.nio.ByteOrder =
+    if (little) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN
+
+  /** A 16-byte variable-length descriptor (hvl_t): element count, global
+    * heap collection address, object index. A 0-length cell has a null
+    * descriptor and no heap object. */
+  private final case class VlenRef(len: Int, addr: Long, idx: Int)
+
+  private def vlenRef(bb: java.nio.ByteBuffer, at: Int): VlenRef =
+    VlenRef(bb.getInt(at), bb.getLong(at + 4), bb.getInt(at + 12))
+
+  /** Block decoder of back-to-back descriptors in byte order `little`. */
+  private def vlenRefs(little: Boolean): Array[Byte] => Int => VlenRef = { b =>
+    val bb = java.nio.ByteBuffer.wrap(b).order(byteOrder(little))
+    i => vlenRef(bb, i * 16)
+  }
+
+  private def vlenString(obj: Array[Byte], len: Int): String =
+    new String(obj, 0, math.min(len, obj.length), java.nio.charset.StandardCharsets.UTF_8)
+
+  /** One partition's global-heap resolver: each collection (GCOL) is read
+    * once, through one handle opened on first use. */
+  private final class Heap(conf: Configuration, path: String) extends AutoCloseable {
+    private var r: Reader = null
+    private val cols = scala.collection.mutable.Map.empty[Long, Map[Int, Array[Byte]]]
+    def apply(ref: VlenRef): Array[Byte] = {
+      if (r == null) r = new Reader(conf, path)
+      cols.getOrElseUpdate(ref.addr, readGcol(r, ref.addr)).getOrElse(ref.idx,
+        throw new IllegalArgumentException(
+          s"global heap object ${ref.idx} missing in collection at ${ref.addr}"))
+    }
+    /** A VLEN string's text ("" for the null descriptor). */
+    def string(ref: VlenRef): String = if (ref.len == 0) "" else vlenString(apply(ref), ref.len)
+    def close(): Unit = if (r != null) r.close()
+  }
+
+  /** `cells` mapped through `f` with one [[Heap]] per partition, closed
+    * when the partition is exhausted. */
+  private def withHeap[A, B: scala.reflect.ClassTag](spark: SparkSession, path: String,
+                                                     cells: org.apache.spark.rdd.RDD[A])
+                                                    (f: (Heap, A) => B)
+      : org.apache.spark.rdd.RDD[B] = {
+    val snap = FsIo.snapshot(spark) // executor heap reads go through Hadoop FS
+    cells.mapPartitions { it =>
+      val heap = new Heap(snap.value, path)
+      closing(heap)(it.map(f(heap, _)))
     }
   }
 
   /** One global-heap collection (GCOL) as index → object bytes. */
-  private def readGcol(raf: FsIo.SeekableData, addr: Long): Map[Int, Array[Byte]] = {
-    raf.seek(addr)
-    val sig = new Array[Byte](4); raf.readFully(sig)
-    require(new String(sig, "ASCII") == "GCOL", s"no GCOL at $addr")
-    require(raf.readUnsignedByte() == 1, "global heap version")
-    raf.skipBytes(3)
-    def u64(): Long = {
-      var v = 0L
-      (0 until 8).foreach(i => v |= raf.readUnsignedByte().toLong << (8 * i))
-      v
-    }
-    val size = u64()
+  private def readGcol(r: Reader, addr: Long): Map[Int, Array[Byte]] = {
+    r.seek(addr)
+    require(new String(r.bytes(4), "ASCII") == "GCOL", s"no GCOL at $addr")
+    require(r.u8() == 1, "global heap version")
+    r.skip(3)
+    val size = r.u64()
     var off = 16L
     val out = scala.collection.mutable.Map.empty[Int, Array[Byte]]
     var done = false
     while (!done && off + 16 <= size) {
-      val idx = raf.readUnsignedByte() | (raf.readUnsignedByte() << 8)
-      raf.skipBytes(6) // ref count + reserved
-      val osz = u64()
+      val idx = r.u16()
+      r.skip(6) // ref count + reserved
+      val osz = r.u64()
       if (idx == 0) done = true // free-space object: rest of collection
       else {
-        val data = new Array[Byte](osz.toInt)
-        raf.readFully(data)
+        out(idx) = r.bytes(osz.toInt)
         val pad = ((8 - osz % 8) % 8).toInt
-        raf.skipBytes(pad)
-        out(idx) = data
+        r.skip(pad)
         off += 16 + osz + pad
       }
     }
     out.toMap
   }
 
-  private def fixedStr(b: Array[Byte]): String =
-    new String(b.takeWhile(_ != 0), java.nio.charset.StandardCharsets.UTF_8)
+  /** A fixed-length string: `n` bytes at `off`, cut at the first NUL. */
+  private def fixedStr(b: Array[Byte], off: Int, n: Int): String = {
+    var e = off
+    while (e < off + n && b(e) != 0) e += 1
+    new String(b, off, e - off, java.nio.charset.StandardCharsets.UTF_8)
+  }
 
   /** Fixed-length (class 3) and variable-length string (class 9 over
     * strings) datasets as (i0…, value STRING). VLEN elements are
-    * (length u32, global-heap address, object index) descriptors; the
-    * heap collections are read executor-side and cached per partition,
-    * so the driver still touches only metadata. */
+    * descriptors resolved through the partition's [[Heap]], so the driver
+    * still touches only metadata. */
   def readStrings(spark: SparkSession, path: String, name: String): DataFrame = {
-    val ds = readMeta(path).find(_.name == name)
-      .getOrElse(throw new IllegalArgumentException(s"no dataset $name in $path"))
+    val ds = dataset(path, name)
     require(ds.dtClass == 3 || (ds.dtClass == 9 && ds.vlenStr),
       s"$name is class ${ds.dtClass}, not a string dataset")
-    val isVlen = ds.dtClass == 9
-    val little = ds.littleEndian
-    val rank = ds.dims.length
-    val snap = FsIo.snapshot(spark) // executor heap reads go through Hadoop FS
-    val rdd = cellBytes(spark, path, ds).mapPartitions { it =>
-      if (!isVlen) it.map { case (idx, b) => (idx, fixedStr(b)) }
-      else {
-        val raf = FsIo.openSeekable(snap.value, path)
-        val cache = scala.collection.mutable.Map.empty[Long, Map[Int, Array[Byte]]]
-        val mapped = it.map { case (idx, b) =>
-          val bb = java.nio.ByteBuffer.wrap(b).order(
-            if (little) java.nio.ByteOrder.LITTLE_ENDIAN
-            else java.nio.ByteOrder.BIG_ENDIAN)
-          val len = bb.getInt(0)
-          val addr = bb.getLong(4)
-          val gidx = bb.getInt(12)
-          // a 0-length VLEN has no heap object (null descriptor)
-          if (len == 0) (idx, "")
-          else {
-            val col = cache.getOrElseUpdate(addr, readGcol(raf, addr))
-            val data = col.getOrElse(gidx, throw new IllegalArgumentException(
-              s"global heap object $gidx missing in collection at $addr"))
-            (idx, new String(data, 0, math.min(len, data.length),
-              java.nio.charset.StandardCharsets.UTF_8))
-          }
-        }
-        new Iterator[(Array[Long], String)] {
-          def hasNext: Boolean = {
-            val h = mapped.hasNext; if (!h) raf.close(); h
-          }
-          def next(): (Array[Long], String) = mapped.next()
-        }
+    val esz = ds.dtSize
+    val rdd =
+      if (ds.dtClass == 3) cellWalk(spark, path, ds)(b => i => fixedStr(b, i * esz, esz))
+      else withHeap(spark, path, cellWalk(spark, path, ds)(vlenRefs(ds.littleEndian))) {
+        case (heap, (idx, ref)) => (idx, heap.string(ref))
       }
-    }
     import spark.implicits._
-    val cols = (0 until rank).map(i => col("_1")(i).cast("int").as(s"i$i")) :+
-      col("_2").as("value")
-    rdd.toDS().toDF().select(cols: _*)
+    cellFrame(rdd.toDS().toDF(), ds.dims.length)
   }
 
   /** Variable-length SEQUENCE (class 9 over a numeric or fixed-string
@@ -1499,11 +1484,11 @@ object Hdf5 {
     * ARRAY<LONG>, float bases ARRAY<DOUBLE>, fixed-string bases
     * ARRAY<STRING> (null-padding stripped — the `vlen_dtype(S n)` shape
     * a list-of-tags column serialises to). Each cell is the same
-    * 16-byte (length, global-heap collection address, object index)
-    * descriptor VLEN strings use; the heap object holds `length` base
-    * elements back to back, and a 0-length cell has a null descriptor
-    * (no heap object). Collections are read executor-side with
-    * per-partition caching, so the driver still touches only metadata.
+    * 16-byte descriptor VLEN strings use; the heap object holds `length`
+    * base elements back to back, and a 0-length cell has a null
+    * descriptor (no heap object). Collections are read executor-side
+    * through the partition's [[Heap]], so the driver still touches only
+    * metadata.
     *
     * NESTED VLEN bases (r12, one level): a base of class 9 makes each
     * cell a ragged list whose heap object holds `length` 16-byte INNER
@@ -1515,8 +1500,7 @@ object Hdf5 {
   def readVlen(spark: SparkSession, path: String, name: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val ds = readMeta(path).find(_.name == name)
-      .getOrElse(throw new IllegalArgumentException(s"no dataset $name in $path"))
+    val ds = dataset(path, name)
     require(ds.dtClass == 9 && !ds.vlenStr,
       s"$name is not a VLEN sequence dataset (class ${ds.dtClass})")
     val base = ds.vlenBase.getOrElse(
@@ -1537,94 +1521,42 @@ object Hdf5 {
       s"VLEN base size ${elemT.size} unsupported for class ${elemT.cls}")
     require(!nested || base.size == 16,
       s"$name: nested VLEN descriptor size ${base.size}, expected 16")
-    val little = ds.littleEndian // descriptor order (file metadata: little)
-    val rank = ds.dims.length
-    val isFloat = elemT.cls == 1; val isStr = elemT.cls == 3
-    val bSize = elemT.size; val bLittle = elemT.little
-    val snap = FsIo.snapshot(spark) // executor heap reads go through Hadoop FS
-    val rows = cellBytes(spark, path, ds).mapPartitions { it =>
-      val raf = FsIo.openSeekable(snap.value, path)
-      val cache = scala.collection.mutable.Map.empty[Long, Map[Int, Array[Byte]]]
-      def heapObj(addr: Long, gidx: Int): Array[Byte] = {
-        val col = cache.getOrElseUpdate(addr, readGcol(raf, addr))
-        col.getOrElse(gidx, throw new IllegalArgumentException(
-          s"global heap object $gidx missing in collection at $addr"))
-      }
-      // one FLAT sequence of `len` atomic/fixed-string elements
-      def decodeFlat(data: Array[Byte], len: Int): Seq[Any] = {
-        require(data.length >= len * bSize,
-          s"heap object holds ${data.length} bytes for $len x $bSize-byte elements")
-        val eb = java.nio.ByteBuffer.wrap(data).order(
-          if (bLittle) java.nio.ByteOrder.LITTLE_ENDIAN
-          else java.nio.ByteOrder.BIG_ENDIAN)
-        if (isStr)
-          (0 until len).map { i =>
-            val s = i * bSize
-            var e = s
-            while (e < s + bSize && data(e) != 0) e += 1
-            new String(data, s, e - s, java.nio.charset.StandardCharsets.UTF_8)
-          }
-        else if (isFloat)
-          (0 until len).map(i =>
-            if (bSize == 8) eb.getDouble(i * 8) else eb.getFloat(i * 4).toDouble)
-        else
-          (0 until len).map(i => bSize match {
-            case 8 => eb.getLong(i * 8)
-            case 4 => eb.getInt(i * 4).toLong
-            case 2 => eb.getShort(i * 2).toLong
-            case _ => eb.get(i).toLong
-          })
-      }
-      val mapped = it.map { case (idx, b) =>
-        val bb = java.nio.ByteBuffer.wrap(b).order(
-          if (little) java.nio.ByteOrder.LITTLE_ENDIAN
-          else java.nio.ByteOrder.BIG_ENDIAN)
-        val len = bb.getInt(0)
-        val addr = bb.getLong(4)
-        val gidx = bb.getInt(12)
+    val descriptors = vlenRefs(ds.littleEndian) // file metadata order: little
+    // one FLAT sequence of `len` atomic/fixed-string elements
+    def decodeSeq(data: Array[Byte], len: Int): Seq[Any] = {
+      require(data.length >= len * elemT.size,
+        s"heap object holds ${data.length} bytes for $len x ${elemT.size}-byte elements")
+      val bb = java.nio.ByteBuffer.wrap(data)
+      (0 until len).map(i => decodeMember(data, bb, elemT, i * elemT.size))
+    }
+    val rows = withHeap(spark, path, cellWalk(spark, path, ds)(descriptors)) {
+      case (heap, (idx, ref)) =>
         val elems: Seq[Any] =
-          if (len == 0) Nil
-          else if (!nested) decodeFlat(heapObj(addr, gidx), len)
+          if (ref.len == 0) Nil
+          else if (!nested) decodeSeq(heap(ref), ref.len)
           else {
-            // outer object = len inner hvl_t descriptors, file-endian
-            val outer = heapObj(addr, gidx)
-            require(outer.length >= len * 16,
-              s"nested VLEN object holds ${outer.length} bytes for $len descriptors")
-            val ob = java.nio.ByteBuffer.wrap(outer).order(
-              if (little) java.nio.ByteOrder.LITTLE_ENDIAN
-              else java.nio.ByteOrder.BIG_ENDIAN)
-            (0 until len).map { i =>
-              val iLen = ob.getInt(i * 16)
-              val iAddr = ob.getLong(i * 16 + 4)
-              val iIdx = ob.getInt(i * 16 + 12)
-              if (innerVlenStr) {
-                if (iLen == 0) "" // empty string: null descriptor, no object
-                else {
-                  val data = heapObj(iAddr, iIdx)
-                  new String(data, 0, math.min(iLen, data.length),
-                    java.nio.charset.StandardCharsets.UTF_8)
-                }
-              } else if (iLen == 0) Nil
-              else decodeFlat(heapObj(iAddr, iIdx), iLen)
+            // outer object = len inner descriptors
+            val outer = heap(ref)
+            require(outer.length >= ref.len * 16,
+              s"nested VLEN object holds ${outer.length} bytes for ${ref.len} descriptors")
+            val inner = descriptors(outer)
+            (0 until ref.len).map { i =>
+              val in = inner(i)
+              if (innerVlenStr) heap.string(in)
+              else if (in.len == 0) Nil
+              else decodeSeq(heap(in), in.len)
             }
           }
         Row.fromSeq(idx.map(_.toInt).toSeq :+ elems)
-      }
-      new Iterator[Row] {
-        def hasNext: Boolean = {
-          val h = mapped.hasNext; if (!h) raf.close(); h
-        }
-        def next(): Row = mapped.next()
-      }
     }
     val elemType: DataType =
-      if (isStr) StringType else if (isFloat) DoubleType else LongType
+      if (elemT.cls == 3) StringType else if (elemT.cls == 1) DoubleType else LongType
     val valueType: DataType =
       if (!nested) ArrayType(elemType)
       else if (innerVlenStr) ArrayType(StringType)
       else ArrayType(ArrayType(elemType))
     val schema = StructType(
-      (0 until rank).map(i => StructField(s"i$i", IntegerType, nullable = false)) :+
+      (0 until ds.dims.length).map(i => StructField(s"i$i", IntegerType, nullable = false)) :+
         StructField("value", valueType))
     spark.createDataFrame(rows, schema)
   }
@@ -1636,19 +1568,17 @@ object Hdf5 {
   def readCompound(spark: SparkSession, path: String, name: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val ds = readMeta(path).find(_.name == name)
-      .getOrElse(throw new IllegalArgumentException(s"no dataset $name in $path"))
+    val ds = dataset(path, name)
     require(ds.dtClass == 6 && ds.members.nonEmpty,
       s"$name is class ${ds.dtClass}, not a compound dataset")
     val members = ds.members
-    val rank = ds.dims.length
-    val rows = cellBytes(spark, path, ds).map { case (idx, b) =>
+    val esz = ds.dtSize
+    val rows = cellWalk(spark, path, ds) { b =>
       val bb = java.nio.ByteBuffer.wrap(b)
-      Row.fromSeq(idx.map(_.toInt).toSeq ++
-        members.map(m => decodeMember(b, bb, m, m.offset)))
-    }
+      i => members.map(m => decodeMember(b, bb, m, i * esz + m.offset))
+    }.map { case (idx, vs) => Row.fromSeq(idx.map(_.toInt).toSeq ++ vs) }
     val schema = StructType(
-      (0 until rank).map(i => StructField(s"i$i", IntegerType, nullable = false)) ++
+      (0 until ds.dims.length).map(i => StructField(s"i$i", IntegerType, nullable = false)) ++
       members.map(m => StructField(m.name, memberDataType(m), nullable = false)))
     spark.createDataFrame(rows, schema)
   }
@@ -1660,8 +1590,7 @@ object Hdf5 {
   private def decodeMember(b: Array[Byte], bb: java.nio.ByteBuffer,
                            m: Member, at: Int): Any = {
     import org.apache.spark.sql.Row
-    bb.order(if (m.little) java.nio.ByteOrder.LITTLE_ENDIAN
-      else java.nio.ByteOrder.BIG_ENDIAN)
+    bb.order(byteOrder(m.little))
     (m.cls, m.size) match {
       case (1, 8) => bb.getDouble(at)
       case (1, 4) => bb.getFloat(at).toDouble
@@ -1669,7 +1598,7 @@ object Hdf5 {
       case (0, 4) => bb.getInt(at).toLong
       case (0, 2) => bb.getShort(at).toLong
       case (0, 1) => bb.get(at).toLong
-      case (3, n) => fixedStr(java.util.Arrays.copyOfRange(b, at, at + n))
+      case (3, n) => fixedStr(b, at, n)
       case (6, _) =>
         Row.fromSeq(m.children.map(k => decodeMember(b, bb, k, at + k.offset)))
       case (10, _) =>
@@ -1870,24 +1799,17 @@ object Hdf5 {
 
   /** Undo the HDF5 shuffle filter (id 2): stored layout is
     * [all 1st bytes][all 2nd bytes]… of each `size`-byte element, a
-    * transposition that helps deflate find runs. netCDF4-python's
+    * transposition that helps deflate find runs (the same transposition
+    * as Blosc's byte shuffle, whose kernel this runs). netCDF4-python's
     * `zlib=True, shuffle=True` default pairing makes this the single
     * most common filter pipeline in the wild. */
-  private[graft] def unshuffle(in: Array[Byte], size: Int): Array[Byte] = {
-    if (size <= 1) return in
-    val n = in.length / size
-    val out = new Array[Byte](in.length)
-    var j = 0
-    while (j < size) {
-      var i = 0
-      while (i < n) { out(i * size + j) = in(j * n + i); i += 1 }
-      j += 1
+  private[graft] def unshuffle(in: Array[Byte], size: Int): Array[Byte] =
+    if (size <= 1) in
+    else {
+      val out = new Array[Byte](in.length)
+      Blosc.unshuffle(size, in, out, 0, in.length)
+      out
     }
-    // any trailing bytes (length not a multiple of size) pass through
-    var t = n * size
-    while (t < in.length) { out(t) = in(t); t += 1 }
-    out
-  }
 
   private[graft] def inflate(in: Array[Byte], outLen: Int): Array[Byte] = {
     val inf = new Inflater()
@@ -1912,94 +1834,21 @@ object Hdf5 {
   }
 
   /** One dataset as a long-format DataFrame: one INT column per dimension
-    * (`i0`, `i1`, …) + `value` DOUBLE. Chunked datasets read
-    * chunk-parallel; contiguous datasets split on the leading dim. */
+    * (`i0`, `i1`, …) + `value` DOUBLE, read through [[cellWalk]] and
+    * CF-unpacked (fill → NULL, then scale/offset) with the same contract
+    * as [[NetCDF.readVariable]]. */
   def readVariable(spark: SparkSession, path: String, name: String): DataFrame = {
-    val ds = readMeta(path).find(_.name == name)
-      .getOrElse(throw new NoSuchElementException(s"no dataset '$name' in $path"))
+    val ds = dataset(path, name)
     import spark.implicits._
-    val dims = ds.dims
-    val rank = dims.length
     val (dtClass, dtSize, little) = (ds.dtClass, ds.dtSize, ds.littleEndian)
-    val snap = FsIo.snapshot(spark) // executor reads go through Hadoop FS
-
-    val raw: org.apache.spark.sql.Dataset[(Array[Long], Double)] = ds.layoutClass match {
-      case 1 | 0 => // contiguous / compact: pure offset math, like classic NetCDF
-        val addr = ds.dataAddress
-        val total = dims.product
-        val innerSizes = dims.toArray
-        spark.range(0, total).mapPartitions { it =>
-          val raf = FsIo.openSeekable(snap.value, path)
-          val iter = it.map { flatBoxed =>
-            val flat: Long = flatBoxed
-            raf.seek(addr + flat * dtSize)
-            val b = new Array[Byte](dtSize); raf.readFully(b)
-            var rem = flat; val idx = new Array[Long](innerSizes.length)
-            var i = innerSizes.length - 1
-            while (i >= 0) { idx(i) = rem % innerSizes(i); rem /= innerSizes(i); i -= 1 }
-            (idx, decode(b, dtClass, dtSize, little, 1)(0))
-          }
-          new Iterator[(Array[Long], Double)] {
-            def hasNext: Boolean = { val h = iter.hasNext; if (!h) raf.close(); h }
-            def next(): (Array[Long], Double) = iter.next()
-          }
-        }
-      case 2 => // chunked: executors compute/read their own chunk records
-        // for regular-grid indexes and inflate (cf. Zarr.readVariable);
-        // irregular B-tree records stay driver-parsed inside chunkRdd
-        val cdims = ds.chunkDims.dropRight(1).toArray // last entry = element size
-        val dimArr = dims.toArray
-        val filters = ds.pipeline
-        val szipCd = ds.szipCd
-        val nbitCd = ds.nbitCd
-        val soCd = ds.soCd
-        val chunkElems = cdims.product.toInt
-        chunkRdd(spark, path, ds)
-          .flatMap { c =>
-            val raf = FsIo.openSeekable(snap.value, path)
-            try {
-              raf.seek(c.address)
-              val stored = new Array[Byte](c.storedSize.toInt)
-              raf.readFully(stored)
-              // read order is the write pipeline reversed (inflate, then
-              // unshuffle, then checksum verify+strip — or checksum first
-              // when fletcher32 was the last write-side filter)
-              val bytes = defilter(stored, filters, chunkElems * dtSize,
-                dtSize, szipCd, nbitCd, soCd)
-              val vals = decode(bytes, dtClass, dtSize, little, chunkElems)
-              // chunk-local row-major unravel + global offset; rows past the
-              // dataspace edge (partial edge chunks) are dropped
-              (0 until chunkElems).iterator.flatMap { flat =>
-                var rem = flat.toLong; val idx = new Array[Long](cdims.length)
-                var i = cdims.length - 1
-                while (i >= 0) { idx(i) = rem % cdims(i); rem /= cdims(i); i -= 1 }
-                var inBounds = true
-                var j = 0
-                while (j < idx.length) {
-                  idx(j) += c.offsets(j)
-                  if (idx(j) >= dimArr(j)) inBounds = false
-                  j += 1
-                }
-                if (inBounds) Some((idx, vals(flat))) else None
-              }.toSeq
-            } finally raf.close()
-          }.toDS()
-      case other => throw new IllegalArgumentException(s"layout class $other")
-    }
-    val cols = (0 until rank).map(i => col("_1")(i).cast("int").as(s"i$i")) :+ col("_2").as("value")
-    val df = raw.toDF().select(cols: _*)
-    // CF unpacking (same contract as NetCDF.readVariable): fill -> NULL,
-    // then scale/offset as a codegen'd projection on the scan output
-    val fill = ds.attrs.get("_FillValue").orElse(ds.attrs.get("missing_value"))
-    val scale = ds.attrs.getOrElse("scale_factor", 1.0)
-    val offset = ds.attrs.getOrElse("add_offset", 0.0)
-    fill match {
-      case Some(f) => df.withColumn("value",
-        when(col("value") === f, lit(null)).otherwise(col("value") * scale + offset))
-      case None if scale != 1.0 || offset != 0.0 =>
-        df.withColumn("value", col("value") * scale + offset)
-      case None => df
-    }
+    val raw: org.apache.spark.sql.Dataset[(Array[Long], Double)] =
+      cellWalk(spark, path, ds) { b =>
+        val vals = decode(b, dtClass, dtSize, little, b.length / dtSize)
+        vals(_)
+      }.toDS()
+    NetCDF.cfUnpack(cellFrame(raw.toDF(), ds.dims.length),
+      ds.attrs.get("_FillValue").orElse(ds.attrs.get("missing_value")),
+      ds.attrs.getOrElse("scale_factor", 1.0), ds.attrs.getOrElse("add_offset", 0.0))
   }
 
   /** Convert every dataset to a long-format parquet lake (the NetCDF-4
@@ -2029,8 +1878,7 @@ object Hdf5 {
     * width; decode per [[CfTime.decode]]. Twin of
     * [[NetCDF.readTimeCoordinate]] / [[Zarr.readTimeCoordinate]]. */
   def readTimeCoordinate(spark: SparkSession, path: String, name: String): DataFrame = {
-    val ds = readMeta(path).find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(s"no dataset '$name' in $path"))
+    val ds = dataset(path, name)
     val units = ds.strAttrs.getOrElse("units", throw new IllegalArgumentException(
       s"$name: no 'units' string attribute — not a CF time coordinate"))
     CfTime.decode(readVariable(spark, path, name), "value", units,

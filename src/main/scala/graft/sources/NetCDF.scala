@@ -207,15 +207,19 @@ object NetCDF {
       else col("_1").cast("int").as(dimNames.head) +:
         dimNames.tail.zipWithIndex.map { case (n, i) => col("_2")(i).cast("int").as(n) } :+
         col("_3").as("value")
-    val df = raw.toDF().select(cols: _*)
-    val unpacked = fill match {
-      case Some(f) => df.withColumn("value",
-        when(col("value") === f, lit(null)).otherwise(col("value") * scale + offset))
-      case None if scale != 1.0 || offset != 0.0 =>
-        df.withColumn("value", col("value") * scale + offset)
-      case None => df
-    }
-    unpacked
+    cfUnpack(raw.toDF().select(cols: _*), fill, scale, offset)
+  }
+
+  /** CF unpacking of a reader's `value` column, shared by the NetCDF,
+    * HDF5 and Zarr readers: `fill` → NULL, then `scale`/`offset` as one
+    * codegen'd projection on the scan output. */
+  private[sources] def cfUnpack(df: DataFrame, fill: Option[Double], scale: Double,
+                                offset: Double): DataFrame = fill match {
+    case Some(f) => df.withColumn("value",
+      when(col("value") === f, lit(null)).otherwise(col("value") * scale + offset))
+    case None if scale != 1.0 || offset != 0.0 =>
+      df.withColumn("value", col("value") * scale + offset)
+    case None => df
   }
 
   /** Convert every non-coordinate data variable to a long-format Parquet

@@ -867,15 +867,8 @@ object Zarr {
     val df = dimFrame(za, raw.toDF(), col("_2"))
     val fill = za.attrs.get("_FillValue").orElse(za.attrs.get("missing_value"))
       .orElse(za.fillValue.filterNot(_.isNaN))
-    val scale = za.attrs.getOrElse("scale_factor", 1.0)
-    val offset = za.attrs.getOrElse("add_offset", 0.0)
-    val masked = fill match {
-      case Some(f) => df.withColumn("value",
-        when(col("value") === f, lit(null)).otherwise(col("value") * scale + offset))
-      case None if scale != 1.0 || offset != 0.0 =>
-        df.withColumn("value", col("value") * scale + offset)
-      case None => df
-    }
+    val masked = NetCDF.cfUnpack(df, fill, za.attrs.getOrElse("scale_factor", 1.0),
+      za.attrs.getOrElse("add_offset", 0.0))
     // NaN fill (xarray default for floats) can't be caught by equality above
     if (za.fillValue.exists(_.isNaN))
       masked.withColumn("value", when(isnan(col("value")), lit(null)).otherwise(col("value")))

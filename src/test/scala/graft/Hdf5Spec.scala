@@ -14,7 +14,7 @@ import java.util.zip.Deflater
   * byte-by-byte from the public HDF5 File Format Specification, then
   * parsed and read back through the executor-parallel path. Chunk dims
   * (1×2) over a 2×3 dataspace exercise partial edge chunks. */
-class Hdf5Spec extends AnyFunSuite {
+class Hdf5Spec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,6 +23,9 @@ class Hdf5Spec extends AnyFunSuite {
     .getOrCreate()
 
   private val Undef = -1L
+
+  /** A fresh `.h5` path inside a temp directory of this case. */
+  private def h5File(prefix: String): java.io.File = new java.io.File(tmpDir(prefix), "f.h5")
 
   private def deflateBytes(raw: Array[Byte]): Array[Byte] = {
     val d = new Deflater()
@@ -244,7 +247,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("metadata parse: superblock, symbol table, layouts, deflate flag") {
-    val f = java.io.File.createTempFile("graft", ".h5"); f.deleteOnExit()
+    val f = h5File("graft")
     writeSample(f.getPath)
     val meta = Hdf5.readMeta(f.getPath).sortBy(_.name)
     assert(meta.map(_.name) == Seq("temp", "x"))
@@ -259,7 +262,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("chunked dataset reads chunk-parallel, inflates, unpacks CF attrs") {
-    val f = java.io.File.createTempFile("graft", ".h5"); f.deleteOnExit()
+    val f = h5File("graft")
     writeSample(f.getPath)
     val rows = Hdf5.readVariable(spark, f.getPath, "temp")
       .orderBy("i0", "i1").collect()
@@ -288,7 +291,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("fletcher32 -> shuffle -> deflate pipeline (netCDF4 order) reads verified") {
-    val f = java.io.File.createTempFile("graft", ".h5"); f.deleteOnExit()
+    val f = h5File("graft")
     writeSample(f.getPath, filterMode = 1)
     val temp = Hdf5.readMeta(f.getPath).find(_.name == "temp").get
     assert(temp.filters == Seq(3, 2, 1) && temp.gzip)
@@ -299,7 +302,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("shuffle -> deflate -> fletcher32 pipeline (h5py order) reads verified") {
-    val f = java.io.File.createTempFile("graft", ".h5"); f.deleteOnExit()
+    val f = h5File("graft")
     writeSample(f.getPath, filterMode = 2)
     val temp = Hdf5.readMeta(f.getPath).find(_.name == "temp").get
     assert(temp.filters == Seq(2, 1, 3))
@@ -310,7 +313,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("corrupted fletcher32 chunk fails the read, never a silent misread") {
-    val f = java.io.File.createTempFile("graft", ".h5"); f.deleteOnExit()
+    val f = h5File("graft")
     writeSample(f.getPath, filterMode = 2)
     // flip one bit in the FIRST chunk's stored bytes (checksum covers the
     // compressed payload in mode 2, so corruption must trip the verify)
@@ -330,16 +333,16 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("contiguous dataset reads via pure offset math") {
-    val f = java.io.File.createTempFile("graft", ".h5"); f.deleteOnExit()
+    val f = h5File("graft")
     writeSample(f.getPath)
     val rows = Hdf5.readVariable(spark, f.getPath, "x").orderBy("i0").collect()
     assert(rows.map(_.getDouble(1)).toSeq == Seq(10.0, 20.0, 30.0))
   }
 
   test("parquet-lake conversion emits every dataset") {
-    val f = java.io.File.createTempFile("graft", ".h5"); f.deleteOnExit()
+    val f = h5File("graft")
     writeSample(f.getPath)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_h5lake").toString
+    val outDir = tmpDir("graft_h5lake").toString
     val vars = Hdf5.toParquetLake(spark, f.getPath, outDir)
     assert(vars.toSet == Set("temp", "x"))
     val lake = spark.read.parquet(s"$outDir/temp")
@@ -348,7 +351,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("szip-filtered chunk decodes through the planted single-chunk file") {
-    val f = java.io.File.createTempFile("graft_szip", ".h5"); f.deleteOnExit()
+    val f = h5File("graft_szip")
     graft.sources.Hdf5PlantedSzip.write(f.getPath)
     val ds = Hdf5.readMeta(f.getPath).find(_.name == "counts").get
     assert(ds.filters == Seq(Hdf5.FilterSzip))
@@ -360,7 +363,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("nbit-filtered chunk decodes through the planted single-chunk file") {
-    val f = java.io.File.createTempFile("graft_nbit", ".h5"); f.deleteOnExit()
+    val f = h5File("graft_nbit")
     graft.sources.Hdf5PlantedNbit.write(f.getPath)
     val ds = Hdf5.readMeta(f.getPath).find(_.name == "sensor").get
     assert(ds.filters == Seq(Hdf5.FilterNbit) && ds.dtSize == 2)
@@ -673,7 +676,7 @@ class Hdf5Spec extends AnyFunSuite {
 
   test("extensible array: geometry sweep across index block, data blocks, secondary blocks") {
     for (nChunks <- Seq(1, 2, 3, 9, 16, 33, 60, 120)) {
-      val f = java.io.File.createTempFile(s"graft_ea${nChunks}_", ".h5")
+      val f = h5File(s"graft_ea${nChunks}_")
       writeEaN(f.getPath, nChunks)
       val got = Hdf5.readVariable(spark, f.getPath, "ea").collect()
         .map(r => (r.getInt(0), r.getDouble(1))).toMap
@@ -689,7 +692,7 @@ class Hdf5Spec extends AnyFunSuite {
     // of superblocks 4-6 (secondary-block-referenced, bitmap-prefixed) —
     // the on-disk shapes a >=10^5-chunk dataset produces, at sweep size
     for (nChunks <- Seq(9, 16, 33, 60, 120)) {
-      val f = java.io.File.createTempFile(s"graft_eapg${nChunks}_", ".h5")
+      val f = h5File(s"graft_eapg${nChunks}_")
       writeEaN(f.getPath, nChunks, pageBits = 2)
       val got = Hdf5.readVariable(spark, f.getPath, "ea").collect()
         .map(r => (r.getInt(0), r.getDouble(1))).toMap
@@ -767,7 +770,7 @@ class Hdf5Spec extends AnyFunSuite {
 
   test("v2 B-tree: record-count sweep across depth-0 and depth-1 trees") {
     for (nChunks <- Seq(1, 5, 20, 21, 45, 100)) {
-      val f = java.io.File.createTempFile(s"graft_bt${nChunks}_", ".h5")
+      val f = h5File(s"graft_bt${nChunks}_")
       writeBt2N(f.getPath, nChunks)
       val got = Hdf5.readVariable(spark, f.getPath, "bt").collect()
         .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
@@ -879,7 +882,7 @@ class Hdf5Spec extends AnyFunSuite {
     // cumulative capacities at nodeSize 96: 3 / 11 / 35 / 107
     for ((nChunks, wantDepth) <- Seq(3 -> 0, 4 -> 1, 11 -> 1, 12 -> 2,
                                      35 -> 2, 36 -> 3, 80 -> 3, 107 -> 3)) {
-      val f = java.io.File.createTempFile(s"graft_btd${nChunks}_", ".h5")
+      val f = h5File(s"graft_btd${nChunks}_")
       writeBt2Deep(f.getPath, nChunks)
       val got = Hdf5.readVariable(spark, f.getPath, "bt").collect()
         .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
@@ -891,7 +894,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("unlimited dims: extensible-array index (filtered, unallocated tail chunk)") {
-    val f = java.io.File.createTempFile("graft_ul_", ".h5")
+    val f = h5File("graft_ul_")
     writeUnlimited(f.getPath)
     val meta = Hdf5.readMeta(f.getPath)
     assert(meta.map(_.name).sorted == Seq("deep", "grid", "ts"))
@@ -904,7 +907,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("unlimited dims: v2 B-tree index, depths 0 and 1, scaled offsets") {
-    val f = java.io.File.createTempFile("graft_ul_", ".h5")
+    val f = h5File("graft_ul_")
     writeUnlimited(f.getPath)
     val grid = Hdf5.readVariable(spark, f.getPath, "grid").collect()
       .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
@@ -917,7 +920,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("latest format: superblock v3, OHDR links, fixed-array + implicit chunks") {
-    val f = java.io.File.createTempFile("graft_latest", ".h5"); f.deleteOnExit()
+    val f = h5File("graft_latest")
     writeLatest(f.getPath)
     val meta = Hdf5.readMeta(f.getPath).sortBy(_.name)
     assert(meta.map(_.name) == Seq("temp", "x", "y"))
@@ -1238,7 +1241,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("typed datasets: fixed strings, VLEN strings via GCOL, compounds") {
-    val f = java.io.File.createTempFile("graft_typed_", ".h5")
+    val f = h5File("graft_typed_")
     writeTyped(f.getPath)
     val meta = Hdf5.readMeta(f.getPath).sortBy(_.name)
     assert(meta.map(_.name) ==
@@ -1283,7 +1286,7 @@ class Hdf5Spec extends AnyFunSuite {
     // 46: depth-1 index; 300: doubling-table indirect block (3 rows, one
     // 1024-byte block, 3 unallocated tail entries) + multi-leaf index
     for (n <- Seq(1, 9, 45, 46, 300)) {
-      val f = java.io.File.createTempFile(s"graft_dense${n}_", ".h5")
+      val f = h5File(s"graft_dense${n}_")
       writeDenseN(f.getPath, n)
       val meta = Hdf5.readMeta(f.getPath)
       assert(meta.map(_.name).sorted == (0 until n).map(i => f"v$i%03d"), s"n=$n")
@@ -1300,7 +1303,7 @@ class Hdf5Spec extends AnyFunSuite {
     // links past root rows 0-5 (256 bodies) into row 6, whose child has
     // 4 rows > maxDirectRows — its own row 3 holds GRANDchild indirect
     // blocks: root FHIB -> child FHIB -> grandchild FHIB -> FHDB.
-    val f = java.io.File.createTempFile("graft_dense_nested_", ".h5")
+    val f = h5File("graft_dense_nested_")
     writeDenseTree(f.getPath, 300, maxDirect = 1024, nameLen = 200, filtered = false)
     val meta = Hdf5.readMeta(f.getPath)
     assert(meta.length == 300)
@@ -1317,7 +1320,7 @@ class Hdf5Spec extends AnyFunSuite {
   test("dense groups: filtered fractal heap, root direct block") {
     // one deflated direct block: its stored size + filter mask live in
     // the FRHP header (no indirect entry to carry them)
-    val f = java.io.File.createTempFile("graft_dense_filt1_", ".h5")
+    val f = h5File("graft_dense_filt1_")
     writeDenseTree(f.getPath, 5, maxDirect = 65536, nameLen = 4, filtered = true)
     val meta = Hdf5.readMeta(f.getPath)
     assert(meta.map(_.name).sorted == (0 until 5).map(i => f"v$i%03d"))
@@ -1331,7 +1334,7 @@ class Hdf5Spec extends AnyFunSuite {
   test("dense groups: filtered fractal heap across indirect-block entries") {
     // several deflated direct blocks: per-block stored sizes + masks ride
     // the root indirect block's direct entries
-    val f = java.io.File.createTempFile("graft_dense_filtN_", ".h5")
+    val f = h5File("graft_dense_filtN_")
     writeDenseTree(f.getPath, 300, maxDirect = 65536, nameLen = 4, filtered = true)
     val meta = Hdf5.readMeta(f.getPath)
     assert(meta.map(_.name).sorted == (0 until 300).map(i => f"v$i%03d"))
@@ -1343,7 +1346,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("dense groups: filtered AND nested fractal heap") {
-    val f = java.io.File.createTempFile("graft_dense_filtnest_", ".h5")
+    val f = h5File("graft_dense_filtnest_")
     writeDenseTree(f.getPath, 300, maxDirect = 1024, nameLen = 200, filtered = true)
     val meta = Hdf5.readMeta(f.getPath)
     assert(meta.length == 300)
@@ -1367,7 +1370,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("dense groups: unchecksummed direct blocks (heap flags 0) still read") {
-    val f = java.io.File.createTempFile("graft_dense_nock_", ".h5")
+    val f = h5File("graft_dense_nock_")
     writeDenseTree(f.getPath, 20, maxDirect = 65536, nameLen = 4,
       filtered = false, checksummed = false)
     val meta = Hdf5.readMeta(f.getPath)
@@ -1380,7 +1383,7 @@ class Hdf5Spec extends AnyFunSuite {
   test("metadata corruption is a loud checksum error, not a misread") {
     // flip one byte inside the root OHDR's message region — the chunk-0
     // checksum must catch it before any link is followed
-    val f = java.io.File.createTempFile("graft_meta_corrupt_", ".h5")
+    val f = h5File("graft_meta_corrupt_")
     writeLatest(f.getPath)
     val clean = java.nio.file.Files.readAllBytes(f.toPath)
     // locate the LAST "OHDR" signature (the root group header)
@@ -1396,7 +1399,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("compound datasets: nested compound and array members decode recursively") {
-    val f = java.io.File.createTempFile("graft_nested_cmp_", ".h5")
+    val f = h5File("graft_nested_cmp_")
     graft.sources.Hdf5Planted.write(f.getPath)
     val df = Hdf5.readCompound(spark, f.getPath, "track")
     assert(df.schema("pos").dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
@@ -1414,7 +1417,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("corrupted superblock checksum is rejected") {
-    val f = java.io.File.createTempFile("graft_sb_corrupt_", ".h5")
+    val f = h5File("graft_sb_corrupt_")
     writeLatest(f.getPath)
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     bytes(20) = (bytes(20) ^ 0x40).toByte // inside the v3 superblock body
@@ -1439,7 +1442,7 @@ class Hdf5Spec extends AnyFunSuite {
         "6614873548698290af468f5c8c998dabf89fc6b2612fbd9336295169021e64ad"),
       (graft.sources.Hdf5PlantedNestedVlen.write,
         "25b0e05f0c64855196f15be850150d43b34bf39526d9cb6332a74c80fdd8edf6"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_planted_sha")
+    val dir = tmpDir("graft_planted_sha").toPath
     for (((write, sha), i) <- pinned.zipWithIndex) {
       val f = dir.resolve(s"planted$i.h5")
       write(f.toString)
@@ -1452,7 +1455,7 @@ class Hdf5Spec extends AnyFunSuite {
   }
 
   test("nested VLEN bases: vlen-of-vlen-strings and vlen-of-vlen-int32") {
-    val f = java.io.File.createTempFile("graft_nested_vlen_", ".h5")
+    val f = h5File("graft_nested_vlen_")
     graft.sources.Hdf5PlantedNestedVlen.write(f.getPath)
     val meta = Hdf5.readMeta(f.getPath)
     val lm = meta.find(_.name == "lists").get
@@ -1468,5 +1471,77 @@ class Hdf5Spec extends AnyFunSuite {
     assert(mats(0).getSeq[Seq[Long]](1) == Seq(Seq(1L, 2L), Seq(3L)))
     assert(mats(1).getSeq[Seq[Long]](1) == Seq(Nil, Seq(-7L, 8L, 9L)))
     f.delete()
+  }
+
+  // ------- the cell walk: compact and contiguous layouts, dataset lookup -------
+
+  /** Compact layout (class 0), version 4: the raw data sits in the
+    * layout message itself. */
+  private def compact(data: Array[Byte]): Array[Byte] =
+    message(0x08, cat(buf(4).put(4.toByte).put(0.toByte)
+      .putShort(data.length.toShort).array(), data))
+
+  test("compact layout (class 0): float64 and fixed strings read in place") {
+    val f = h5File("graft_compact_")
+    assemble(f.getPath) { at =>
+      Seq("v.oh" -> dataset(dataspace(2L, 3L), float64,
+          compact(f64s(0.5, 1.5, 2.5, 3.5, 4.5, 5.5))),
+        "s.oh" -> dataset(dataspace(3L), fixedString(5),
+          compact(fixedStrings(5, "ab", "cdefg", ""))),
+        "root" -> group("v" -> at("v.oh"), "s" -> at("s.oh")))
+    }
+    assert(Hdf5.readMeta(f.getPath).map(_.layoutClass) == Seq(0, 0))
+    val v = Hdf5.readVariable(spark, f.getPath, "v").orderBy("i0", "i1").collect()
+    assert(v.map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq ==
+      (for (i <- 0 until 2; j <- 0 until 3) yield (i, j, 3 * i + j + 0.5)))
+    val s = Hdf5.readStrings(spark, f.getPath, "s").orderBy("i0").collect()
+    assert(s.map(r => (r.getInt(0), r.getString(1))).toSeq ==
+      Seq((0, "ab"), (1, "cdefg"), (2, "")))
+  }
+
+  test("contiguous float64 and compound data stream across partitions and 8 KiB windows") {
+    // 200x200 float64 (320 KB) and 10,000 24-byte compounds (240 KB): each
+    // of the 8 range partitions at local[4] spans more than three windows
+    val (nr, nc, n) = (200, 200, 10000)
+    def v(r: Int, c: Int): Double = r * 1000.0 + c * 0.5
+    def tag(i: Int): String = s"t${i % 97}"
+    val recs = buf(24 * n)
+    for (i <- 0 until n) {
+      recs.putInt(3 * i - 7).putInt(0).putDouble(i * 0.125)
+      val t = new Array[Byte](8); ascii(tag(i)).copyToArray(t); recs.put(t)
+    }
+    val f = h5File("graft_contig_")
+    assemble(f.getPath) { at =>
+      Seq("grid" -> f64s((for (r <- 0 until nr; c <- 0 until nc) yield v(r, c)): _*),
+        "recs" -> recs.array(),
+        "grid.oh" -> dataset(dataspace(nr.toLong, nc.toLong), float64,
+          contiguous(at("grid"), 8L * nr * nc)),
+        "recs.oh" -> dataset(dataspace(n.toLong),
+          compound(24, ("id", 0, signed(4, 32)), ("x", 8, float64), ("tag", 16, fixedString(8))),
+          contiguous(at("recs"), 24L * n)),
+        "root" -> group("grid" -> at("grid.oh"), "recs" -> at("recs.oh")))
+    }
+    val grid = Hdf5.readVariable(spark, f.getPath, "grid")
+    assert(grid.rdd.getNumPartitions > 1)
+    val cells = grid.collect().map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2)))
+    assert(cells.length == nr * nc && cells.toMap ==
+      (for (r <- 0 until nr; c <- 0 until nc) yield (r, c) -> v(r, c)).toMap)
+    val cmp = Hdf5.readCompound(spark, f.getPath, "recs")
+    assert(cmp.rdd.getNumPartitions > 1)
+    assert(cmp.orderBy("i0").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getString(3))).toSeq ==
+      (0 until n).map(i => (i, 3L * i - 7, i * 0.125, tag(i))))
+  }
+
+  test("every reader rejects a missing name alike, listing the datasets present") {
+    val f = h5File("graft_missing_")
+    writeSample(f.getPath)
+    val readers = Seq[(SparkSession, String, String) => Any](Hdf5.readVariable,
+      Hdf5.readStrings, Hdf5.readVlen, Hdf5.readCompound, Hdf5.readTimeCoordinate)
+    for (read <- readers) {
+      val e = intercept[NoSuchElementException](read(spark, f.getPath, "nope"))
+      assert(e.getMessage.contains("'nope'") && e.getMessage.contains("have: temp, x"),
+        e.getMessage)
+    }
   }
 }
